@@ -1,45 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core (the driver contract is local[32]); the env var
-    // still pins an explicit width for controlled comparisons
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", graft.GraftSession.localDir)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.adaptive.enabled", "true")
-      // subset co-partitioning: lets a join whose equi-keys extend an
-      // existing HashPartitioning (e.g. the block-pair verify joins) reuse
-      // it instead of reshuffling the array-carrying intermediate
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.CoBucketedWrite.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    // Every run (warm-up and timed) releases cached blocks afterwards so a
-    // query's persist() calls never leak into the next measurement. The
-    // unpersist must BLOCK: catalog.clearCache() tears blocks down
-    // asynchronously, and the next run's materialization racing that
-    // teardown shows up as blockDoesNotExistError task retries — measured
-    // 2-4x swings on an unchanged query until the drain was made
-    // synchronous.
-    def dropCaches(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-    }
-    // Timing covers ONLY q.fn(...).count(); the cache drain runs after the
-    // clock stops, so teardown is never billed into a measurement.
+    val spark = GraftSession.get("graft-bench")
+    // Every run (warm-up and timed) drains cached blocks afterwards so a
+    // query's persist() calls never leak into the next measurement; the
+    // drain blocks (GraftSession.dropCaches says why). Timing covers ONLY
+    // q.fn(...).count(); the drain runs after the clock stops, so teardown
+    // is never billed into a measurement.
     def runOnce(q: Q): Double =
       try {
         val t0 = System.nanoTime()
@@ -49,7 +17,7 @@ object Bench {
         case e: Throwable =>
           System.err.println(s"[bench] ${q.name} FAILED: $e")
           -1.0
-      } finally dropCaches()
+      } finally GraftSession.dropCaches(spark)
     // Per query: one warm-up run, then MIN of 3 timed runs, all back to
     // back. Keeping a query's four runs adjacent preserves its JIT state and
     // parquet footer caches between warm-up and measurement (a global

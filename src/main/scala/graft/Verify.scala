@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,23 +11,7 @@ object Verify {
       case Array(a, b) => (a, b, Option.empty[Set[String]])
       case Array(a, b, c) => (a, b, Some(c.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.local.dir", graft.GraftSession.localDir)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.CoBucketedWrite.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter { case (name, _) => only.forall(_(name)) }
       .foreach { case (name, fn) =>
@@ -36,7 +19,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally spark.catalog.clearCache() // release per-query persist()s
+      } finally GraftSession.dropCaches(spark) // release per-query persist()s
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

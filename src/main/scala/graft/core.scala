@@ -104,8 +104,10 @@ object Util {
   def ymdHms(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 }
 
-/** Session factory used by mains and tests: local mode sized for the
-  * container, AQE on, UTC, 32 shuffle partitions (not the 200 default). */
+/** The one session factory: every main, spec and harness builds its
+  * session here, so they all run under the same configuration. Local mode
+  * at `cpus` worker threads with one shuffle partition per thread (not
+  * the 200 default), AQE on, UTC. */
 object GraftSession {
   /** Spark scratch (shuffle files, spills, broadcast staging) stays on the
     * JVM-default disk tmpdir unless SPARK_GRAFT_SCRATCH_DIR opts into
@@ -120,14 +122,19 @@ object GraftSession {
     sys.env.getOrElse("SPARK_GRAFT_SCRATCH_DIR",
       System.getProperty("java.io.tmpdir", "/tmp"))
 
-  def builder(appName: String = "graft"): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
+  /** Worker threads when the caller names none: SPARK_GRAFT_CPUS pins an
+    * explicit width for controlled comparisons, else every core (at
+    * least 4). */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(math.max(4, Runtime.getRuntime.availableProcessors()))
+
+  def builder(appName: String = "graft",
+      cpus: Int = defaultCpus): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.local.dir", graft.GraftSession.localDir)
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .config("spark.sql.adaptive.enabled", "true")
@@ -145,11 +152,26 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
-  }
-  def get(appName: String = "graft"): SparkSession = {
-    val s = builder(appName).getOrCreate()
+
+  /** The builder's session plus the co-bucketed write rule (installed at
+    * most once per session) and WARN logging. */
+  def get(appName: String = "graft", cpus: Int = defaultCpus): SparkSession = {
+    val s = builder(appName, cpus).getOrCreate()
     graft.plans.CoBucketedWrite.install(s)
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Release every cached block, BLOCKING until it is gone.
+    * catalog.clearCache() alone tears blocks down asynchronously: the
+    * persisted and localCheckpoint'ed RDDs a query leaves behind stay in
+    * memory, and a next query materializing while that teardown runs
+    * shows up as blockDoesNotExistError task retries (measured 2-4x
+    * swings on an unchanged benched query until the drain was made
+    * synchronous). */
+  def dropCaches(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
   }
 }

@@ -461,7 +461,7 @@ object LlmPipeline {
     * and candidate-only exact verification. A doc with <5 words yields an
     * empty band array and drops out in posexplode, mirroring the shingle
     * filter. */
-  private[graft] def minhashPairs(d: DataFrame, merge: Boolean = true): DataFrame = {
+  private[graft] def minhashPairs(d: DataFrame): DataFrame = {
     val bands = d.select(col("doc_id"),
       posexplode(expr("minhash_bands(shingle_hashes(text))")).as(Seq("band", "bh")))
     // MERGE hint: the self-join's two sides are the identical banding
@@ -471,12 +471,10 @@ object LlmPipeline {
     // the kernel runs once (r16 interleaved A/B: candidate stage 0.97 →
     // 0.74 s at sf0.1, SMJ faster in all four trial pairs; re-adjudicated
     // r17 on disk scratch at 32 cores after the driver contradiction —
-    // see OPTIMIZATION_r17.md). At 100 TB SMJ is also the only strategy
-    // that survives: the band table is corpus-sized, never broadcastable.
-    // The `merge` knob exists for that interleaved A/B (AdhocProbe); the
-    // judged query always takes the default.
-    val lhs = if (merge) bands.hint("MERGE") else bands
-    val cand = lhs.as("x").join(bands.as("y"), Seq("band", "bh"))
+    // OPTIMIZATION_r16.md §3 and OPTIMIZATION_r17.md §5). At 100 TB SMJ is
+    // also the only strategy that survives: the band table is corpus-sized,
+    // never broadcastable.
+    val cand = bands.hint("MERGE").as("x").join(bands.as("y"), Seq("band", "bh"))
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()

@@ -140,9 +140,9 @@ object Options {
     * scan's streaming decode. The planner abandons the index when
     * candidates × this factor exceeds the store's total cells: past that
     * crossover the shrunk job's point reads cost MORE than the scan they
-    * avoid (measured on the sf1 probe store — see IndexedAggProbe's sweep
-    * arm). 0 disables the gate (memory budget still applies). Read-time
-    * only, NOT a layout property. */
+    * avoid (measured on an sf1 orders store — SURVEY §7.4 "Cost-based
+    * index-shrink cap"). 0 disables the gate (memory budget still
+    * applies). Read-time only, NOT a layout property. */
   val IndexPointCostCells = "index.point.cost.cells"
 
   /** Wall-clock bound on one planning-time index WALK (the all-bucket
@@ -201,11 +201,11 @@ object Options {
 
   val DefaultBuckets = 32
   val DefaultIndexMaxCandidates = 64 * 1024
-  /** Measured on the IndexedAggProbe sf1 sweep (see SURVEY §7.4): the
-    * shrunk job already loses 1.26× at 288 cells/candidate and degrades
-    * monotonically past it (147 → 1.74×, 73 → 2.28×), so the crossover
-    * sits at ≈300 — past candidates > cells/300 the index-shrunk scan
-    * costs more than the scan it avoids. */
+  /** Measured by the sf1 shrunk-vs-full sweep (SURVEY §7.4 "Cost-based
+    * index-shrink cap"): the shrunk job already loses 1.26× at 288
+    * cells/candidate and degrades monotonically past it (147 → 1.74×,
+    * 73 → 2.28×), so the crossover sits at ≈300 — past candidates >
+    * cells/300 the index-shrunk scan costs more than the scan it avoids. */
   val DefaultIndexPointCostCells = 300L
   /** Generous by design: a healthy walk finishes in milliseconds, so this
     * only ever bites on a genuinely stalled read, where declining to the

@@ -450,14 +450,6 @@ object CellStore {
     * per-column arrays. */
   val MaxColValCols = 48
 
-  /** Probe knob (tools/bench only): `-Dgraft.write.tails=false` makes the
-    * writer skip every OPTIONAL index tail (COLS onward), so the write-path
-    * cost of the tails can be measured in isolation (VERDICT r10 #2).
-    * Readers treat such runs as legacy — results stay exact, the metadata
-    * fast paths just decline. Never set on a production path. */
-  private def writeOptionalTails: Boolean =
-    !sys.props.get("graft.write.tails").contains("false")
-
   /** CHUNKED distinct-column bloom accumulator for a run's column BLOOM
     * tail. The min/max window kills DISJOINT slices; the blooms kill the
     * false-window case — a point slice whose wanted column falls INSIDE
@@ -687,7 +679,6 @@ object CellStore {
       out.writeInt(bloom.words.length)
       bloom.words.foreach(out.writeLong)
     }
-    if (!writeOptionalTails) return bos.toByteArray
     out.writeInt(ColsMagic)
     entries.foreach(e => writeBytes(out, e.col))
     // run-wide min/max column — Cassandra's sstable min/max clustering:
@@ -1099,10 +1090,10 @@ object CellStore {
   private def cacheKey(file: Path): (String, Long, Long) =
     (file.toString, Files.size(file), Files.getLastModifiedTime(file).toMillis)
 
-  /** Probe/test hook: drop every driver-side planning memo (run stats,
-    * quick stats, bucket-stat sidecars) so a measurement can replay the
-    * COLD-driver planning cost inside one JVM. Never called on a
-    * production path — the caches are correct forever (immutable files). */
+  /** Test hook: drop every driver-side planning memo (run stats, quick
+    * stats, bucket-stat sidecars) so a spec can replay the COLD-driver
+    * planning cost inside one JVM. Never called on a production path —
+    * the caches are correct forever (immutable files). */
   private[graft] def clearPlannerCaches(): Unit = {
     runStatsCache.clear()
     quickStatsCache.clear()
@@ -3132,8 +3123,10 @@ object CellStore {
     * functions (countCellsAtPoints / colAggAtPoints /
     * nettedCountCellsAtPoints / sumCellsAtPoints). The batched grouped
     * indexed-aggregate path pins "G groups cost the parses of one" by
-    * watching this stay flat as the IN widens (IndexedAggProbe wide-IN
-    * arm). */
+    * watching this stay flat as the IN widens (the per-group re-parse it
+    * replaced is SURVEY §5's round-14 "Known residual"; the batched pass
+    * is §7.4 "PROBE-SLICED GROUPING"). CtxPassProbeSpec bounds it per
+    * judged query. */
   val pointProbeIndexReads = new java.util.concurrent.atomic.AtomicLong()
 
   def runStats(file: Path): Array[RunStats] =
@@ -3430,13 +3423,7 @@ object CellStore {
     val target = bucketStatFile(tableDir, bucket)
     val files = segmentFiles(tableDir, bucket)
     if (files.isEmpty) { Files.deleteIfExists(target); return }
-    // probe knob (tools only): -Dgraft.sidecar.incremental=false replays
-    // the pre-r13 full re-read so SidecarRefreshProbe can measure the
-    // incremental refresh in isolation; never set on a production path
-    val prev: Map[(String, Long), Array[RunStats]] =
-      if (sys.props.get("graft.sidecar.incremental").contains("false"))
-        Map.empty
-      else readSidecarRunStats(target)
+    val prev = readSidecarRunStats(target)
     val perFile: Seq[(Path, Array[RunStats])] = files.map { f =>
       val sig = (f.getFileName.toString, Files.size(f))
       f -> prev.getOrElse(sig, runStats(f))

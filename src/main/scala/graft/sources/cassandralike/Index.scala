@@ -406,9 +406,10 @@ object Index {
     // with a run-index seek + bloom probes + a span walk per overlapping
     // run, while the full scan streams every cell once — past the
     // totalCells/pointCost crossover the shrunk job LOSES to the scan it
-    // avoids (IndexedAggProbe sweep arm). Abandon the index there: same
-    // rows either way — the pushed predicates are re-applied row-level by
-    // the readers (absorbed) or by Spark (residual).
+    // avoids (sf1 sweep, SURVEY §7.4 "Cost-based index-shrink cap").
+    // Abandon the index there: same rows either way — the pushed
+    // predicates are re-applied row-level by the readers (absorbed) or by
+    // Spark (residual).
     if (pointCost > 0 && cands.size.toLong > totalCells / pointCost)
       return Array.empty
     val keyType = table.mapping.keyField.dataType

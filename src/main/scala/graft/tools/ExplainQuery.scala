@@ -1,27 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print the formatted physical plan of judged queries:
   * `runMain graft.tools.ExplainQuery <name> [<name>...]`. */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.local.dir", graft.GraftSession.localDir)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.CoBucketedWrite.install(spark)
+    val spark = graft.GraftSession.get("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       println(s"\n===== $name =====")

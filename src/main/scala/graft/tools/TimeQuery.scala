@@ -1,46 +1,23 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Time individual judged queries outside the full Bench sweep:
   * `runMain graft.tools.TimeQuery <sfDir> <name> [name ...]`.
-  * Same session shape as Bench (AQE on, one shuffle partition per core,
-  * warm-up + min-of-3) so numbers are comparable to BENCH_r{N}. */
+  * Same session as Bench (GraftSession, SPARK_GRAFT_CPUS honoured) and the
+  * same warm-up + min-of-3, so numbers are comparable to BENCH_r{N}. */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = math.max(4, Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", graft.GraftSession.localDir)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.adaptive.enabled", "true")
-      // subset co-partitioning: lets a join whose equi-keys extend an
-      // existing HashPartitioning (e.g. the block-pair verify joins) reuse
-      // it instead of reshuffling the array-carrying intermediate
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.CoBucketedWrite.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("graft-time")
     names.foreach { name =>
       val q = graft.SparkEntry.queries(name)
       def once(): Double = {
         val t0 = System.nanoTime()
         q(spark, sfDir).count()
         val t = (System.nanoTime() - t0) / 1e9
-        // blocking drain — async clearCache teardown racing the next run's
-        // materialization causes blockDoesNotExistError retries (see Bench)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache(); System.gc(); t
+        GraftSession.dropCaches(spark); System.gc(); t
       }
       once() // warm-up
       // SPARK_GRAFT_TIME_RUNS overrides the default min-of-3 (e.g. an

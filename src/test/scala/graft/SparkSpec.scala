@@ -7,11 +7,9 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local session for all specs (one JVM-wide session; Spark startup
   * dominates test wall-clock otherwise). */
 object SparkSpec {
+  val cpus = 4
   lazy val spark: SparkSession = {
-    val s = GraftSession.builder("graft-test").master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
-    graft.plans.CoBucketedWrite.install(s)
+    val s = GraftSession.get("graft-test", cpus)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
