@@ -511,17 +511,17 @@ class CassandraLikeTable(
     val buckets = tableProps.get(Options.Buckets).map(_.toInt)
       .getOrElse(Options.DefaultBuckets)
     keys.groupBy(TokenRing.bucket(_, buckets, rangeBounds)).foreach { case (bucket, ks) =>
-      val keySet = ks.map(_.toSeq).toSet
       // counter tables read the collapsed view: one tombstone per merged
       // cell (at max ts + 1) then shadows every underlying increment.
-      // The doomed-key set doubles as the bloom lookup set: runs that
-      // provably hold none of the keys never enter the merge.
+      // The doomed-key set doubles as the lookup set: runs whose blooms
+      // reject every doomed key never enter the merge, and the rest are
+      // read only inside each doomed key's own index window.
       val counterTable = tableProps.get(Options.CounterMerge).exists(_.toBoolean)
       val merge = new CellStore.BucketMergeIterator(dir, bucket,
         counterMerge = counterTable,
         lookupKeys = ks)
       val doomed = try {
-        merge.filter(c => keySet.contains(c.key.toSeq)).map { c =>
+        merge.map { c =>
           // a CERTIFIED tombstone carries its victim's value bytes: the
           // doomed cell was just read from the visible view, so recording
           // its value lets positional SUMs net deletions too (visible sum
@@ -545,8 +545,8 @@ class CassandraLikeTable(
         // CERTIFIED delete epoch (CellStore.writeRun's DCRT contract):
         // every tombstone here shadows a cell read from the then-visible
         // view at a strictly newer timestamp, and a doomed key's visible
-        // cells are ALL doomed together (keySet matches every cell of the
-        // key) — what lets positional counts NET these deletions out
+        // cells are ALL doomed together (the lookup merge admits every cell
+        // of the key) — what lets positional counts NET these deletions out
         // before compaction. Counter stores read the COLLAPSED view (one
         // tombstone per merged cell, many underlying increments), which
         // breaks the one-tombstone-one-cell accounting: not certified.
@@ -5289,16 +5289,20 @@ class CellPartitionReader(
   // the projection or a pushed predicate touches are decoded at all
   private val needed: Set[String] =
     required.fieldNames.toSet ++ filters.flatMap(_.references)
-  // Point-lookup segment pruning: pushed key-equality predicates tighten the
-  // merge range to [min(keys), succ(max(keys))) in encoded-byte order,
-  // intersected with the partition's own sub-split range. The run indexes
-  // then seek instead of streaming the bucket, so a key lookup reads
-  // O(segments × IndexEvery) cells NO MATTER how big the bucket is — without
-  // this, `WHERE key = ?` scanned every cell of the routed bucket and only
-  // dropped rows post-decode. Purely an optimization: FilterEval still
-  // applies the exact predicate to every emitted row, and LWW/tombstone
-  // reconciliation is per-address so a key-restricted merge over all
-  // segments reconciles identically to the full-bucket merge.
+  // Point-lookup pruning: a pushed finite key set (EqualTo/In, or an index
+  // candidate set) is cut to the keys that route to THIS partition's
+  // bucket, by the same TokenRing.bucket call, with the store's bucket
+  // count and range bounds, that the writer and deleteWhere use. The merge
+  // range shrinks to [min, succ(max)) over those keys alone, intersected
+  // with any pushed key range and the partition's own sub-split range;
+  // each run's bloom is tested against them only, and each key that passes
+  // seeks its own index window (CellStore.rangeRun), so an IN list costs
+  // O(keys × segments × IndexEvery) cell reads no matter how far apart its
+  // keys sort or how big the bucket is. A partition left with no key reads
+  // nothing. Purely an optimization: FilterEval still applies the exact
+  // predicate to every emitted row, and LWW/tombstone reconciliation is
+  // per-address, so a key-restricted merge over all segments reconciles
+  // identically to the full-bucket merge.
   private val keyCodec: KeyCodec = KeyCodec.of(mapping.keyField.dataType, opt)
   private val colCodec: KeyCodec =
     if (!mapping.transposed) null
@@ -5306,14 +5310,29 @@ class CellPartitionReader(
   private val subCodec: KeyCodec =
     if (!mapping.hasSubColumn) null
     else KeyCodec.ofSub(mapping.field(FieldRole.TransSubColumn).dataType, opt)
-  private val keyBounds: (Array[Byte], Array[Byte]) =
-    KeyLookupBounds(filters, mapping.keyField.name, keyCodec,
-      part.lower, part.upper)
-  // the finite key set (EqualTo/In pushdown) additionally lets the store
-  // consult per-run blooms and skip whole runs — null for range scans
-  private val lookupKeys: Seq[Array[Byte]] =
-    KeyLookupBounds.keySet(filters, mapping.keyField.name,
+  // null for range scans
+  private val lookupKeys: Seq[Array[Byte]] = {
+    val ks = KeyLookupBounds.keySet(filters, mapping.keyField.name,
       keyCodec, part.lower, part.upper)
+    if (ks == null) null
+    else {
+      val buckets = opt(Options.Buckets).map(_.toInt).getOrElse(Options.DefaultBuckets)
+      val bounds = opt(Options.RangeBounds)
+        .map(RangeLayout.parse(_, mapping.keyField.dataType, keyCodec)).orNull
+      ks.filter(TokenRing.bucket(_, buckets, bounds) == part.bucket)
+    }
+  }
+  // the routed keys already lie inside the partition's own range, so their
+  // envelope stands in for it
+  private val keyBounds: (Array[Byte], Array[Byte]) =
+    if (lookupKeys == null || lookupKeys.isEmpty)
+      KeyLookupBounds(filters, mapping.keyField.name, keyCodec,
+        part.lower, part.upper)
+    else {
+      val sorted = CellStore.sortedDistinct(lookupKeys)
+      KeyLookupBounds(filters, mapping.keyField.name, keyCodec,
+        sorted.head, KeyLookupBounds.succ(sorted.last))
+    }
 
   // multi-point slice SEEK: pushed EqualTo/In on the transposed clustering
   // column becomes a cell-level byte filter INSIDE the merge — the listed

@@ -140,29 +140,25 @@ private[graft] object CellCommit {
     // size-tiered auto-compaction: any touched bucket now holding more than
     // `compact.segments.max` committed segments is full-compacted before the
     // commit returns — read amplification stays bounded under arbitrarily
-    // many append jobs with zero manual maintenance. Distributed over
-    // buckets (one task per over-threshold bucket); the committing job is
-    // the single writer, so compaction here is quiesced by construction.
+    // many append jobs with zero manual maintenance. Index sub-stores bound
+    // their read amplification under the same policy (duplicate
+    // (value, key) entries from re-writes collapse by LWW; stale postings
+    // stay — they are the superset contract). One distributed job compacts
+    // every over-threshold (store dir, bucket) of the base and its index
+    // sub-stores, one task each; the committing job is the single writer,
+    // so compaction here is quiesced by construction.
     Options.effective(options, table.tableProps, Options.CompactSegmentsMax)
       .map(_.toInt).foreach { k =>
-        val dir = table.dir
-        val over = files.map(_._1).distinct
-          .filter(b => CellStore.segmentFiles(dir, b).size > k)
+        val touched = files.map { case (b, _) => (table.dir, b) }.distinct ++
+          idxFiles.map { case (c, b, _) => (Index.dir(table.dir, c), b) }.distinct
+        val over = touched.filter { case (d, b) => CellStore.segmentFiles(d, b).size > k }
         if (over.nonEmpty)
           org.apache.spark.sql.SparkSession.getActiveSession match {
             case Some(s) =>
-              s.sparkContext.parallelize(over.toSeq, over.size)
-                .foreach(b => CellStore.compactBucket(dir, b))
-            case None => over.foreach(CellStore.compactBucket(dir, _))
+              s.sparkContext.parallelize(over.toSeq, over.length)
+                .foreach { case (d, b) => CellStore.compactBucket(d, b) }
+            case None => over.foreach { case (d, b) => CellStore.compactBucket(d, b) }
           }
-        // index sub-stores bound their read amplification under the same
-        // policy (duplicate (value, key) entries from re-writes collapse
-        // by LWW; stale postings stay — they are the superset contract)
-        idxFiles.map { case (c, b, _) => (c, b) }.distinct
-          .filter { case (c, b) =>
-            CellStore.segmentFiles(Index.dir(dir, c), b).size > k }
-          .foreach { case (c, b) =>
-            CellStore.compactBucket(Index.dir(dir, c), b) }
       }
     // per-bucket STAT sidecars for every touched bucket, from the final
     // post-compaction listing: a cold driver then plans complete metadata

@@ -1293,12 +1293,16 @@ object CellStore {
   }
 
   /** Largest entry index with keys(i) < x; caller guarantees keys(0) < x. */
-  private def lastEntryBelow(keys: Array[Array[Byte]], x: Array[Byte]): Int = {
+  private def lastEntryBelow(keys: Array[Array[Byte]], x: Array[Byte]): Int =
+    entriesBelow(keys, x) - 1
+
+  /** Number of (non-decreasing) entry keys strictly below x. */
+  private def entriesBelow(keys: Array[Array[Byte]], x: Array[Byte]): Int = {
     var a = 0
-    var b = keys.length - 1
+    var b = keys.length
     while (a < b) {
-      val mid = (a + b + 1) >>> 1
-      if (Codecs.compareBytes(keys(mid), x) < 0) a = mid else b = mid - 1
+      val mid = (a + b) >>> 1
+      if (Codecs.compareBytes(keys(mid), x) < 0) a = mid + 1 else b = mid
     }
     a
   }
@@ -3819,6 +3823,19 @@ object CellStore {
       finally r.close()
     })
 
+  /** Byte strings sorted ascending, duplicates dropped. */
+  def sortedDistinct(xs: Seq[Array[Byte]]): Array[Array[Byte]] = {
+    val sorted = xs.toArray.sortWith((a, b) => Codecs.compareBytes(a, b) < 0)
+    sorted.iterator.zipWithIndex.collect {
+      case (x, i) if i == 0 || !java.util.Arrays.equals(sorted(i - 1), x) => x
+    }.toArray
+  }
+
+  /** Is b (null = never) a member of the SORTED set? */
+  def sortedContains(set: Array[Array[Byte]], b: Array[Byte]): Boolean =
+    b != null && java.util.Arrays.binarySearch(set, b,
+      (x: Array[Byte], y: Array[Byte]) => Codecs.compareBytes(x, y)) >= 0
+
   /** Any member of the SORTED col set inside the inclusive window [a, b]? */
   def anyColIn(colSet: Array[Array[Byte]], a: Array[Byte], b: Array[Byte]): Boolean = {
     if (a == null || b == null) return true // unknown window -> must read
@@ -3875,6 +3892,15 @@ object CellStore {
       * cursor to the last indexed key <= lo, so a range partition reads
       * O(range + IndexEvery) cells of the run, not the whole run.
       *
+      * `keys` (sorted, distinct, inside [lo, hi); null = a range read) is
+      * the MULTI-POINT key seek: each key reads only its own index window,
+      * from the last entry strictly below it through the last entry bearing
+      * it, so a pushed IN list or an index candidate set costs
+      * O(keys × IndexEvery) cell reads per run instead of every cell of
+      * the [min, max] key envelope. Cells of other keys inside a window
+      * never leave the run, and the spans between windows are never read
+      * (cellsSeekSkipped counts them).
+      *
       * `colSet` (sorted, non-null together with a col-tailed index) is the
       * point-slice SEEK: every index entry is a (key, col) address prefix,
       * so a span that provably lies inside ONE key and whose [col, nextCol]
@@ -3885,33 +3911,41 @@ object CellStore {
       * address, and reconciliation is per-address; spans containing a key
       * boundary are always read (their cols are not monotone across keys).
       * The exact byte filter downstream (BucketMergeIterator colLookup)
-      * still applies to every cell that IS read. */
+      * still applies to every cell that IS read. The column seek applies
+      * inside the key windows too. */
     def rangeRun(ri: RunInfo, lo: Array[Byte], hi: Array[Byte],
         colSet: Array[Array[Byte]] = null,
         counters: ScanCounters = null,
         colWindow: (Array[Byte], Array[Byte]) = null,
         subSet: Array[Array[Byte]] = null,
-        subWindow: (Array[Byte], Array[Byte]) = null): Iterator[Cell] = {
+        subWindow: (Array[Byte], Array[Byte]) = null,
+        keys: Array[Array[Byte]] = null): Iterator[Cell] = {
       if (ri.cellCount == 0) return Iterator.empty
       val idx = readIndex(ri)
       if (lo != null && Codecs.compareBytes(idx.lastKey, lo) < 0) return Iterator.empty
       if (hi != null && Codecs.compareBytes(idx.keys(0), hi) >= 0) return Iterator.empty
-      var e = 0
-      if (lo != null) {
-        // seek to the last index entry STRICTLY below lo: entries equal to
-        // lo must not be skipped — cells with key == lo can start before
-        // them (a hot key spans many index entries, all bearing that key;
-        // advancing on <= here seeked past the whole run and dropped every
-        // cell but the tail — the sf0.1 widerow regression)
-        while (e + 1 < idx.keys.length && Codecs.compareBytes(idx.keys(e + 1), lo) < 0) e += 1
-      }
       val seekable = idx.cols != null &&
         (colSet != null || colWindow != null ||
           ((subSet != null || subWindow != null) && idx.subs != null))
+      val mustRead: Int => Boolean =
+        if (!seekable) _ => true
+        else colSpanFilter(ri, idx, colSet, colWindow, subSet, subWindow)
+      if (keys != null) return keySeek(ri, idx, keys, mustRead, counters)
+      // seek to the last index entry STRICTLY below lo: entries equal to
+      // lo must not be skipped — cells with key == lo can start before
+      // them (a hot key spans many index entries, all bearing that key;
+      // advancing on <= here seeked past the whole run and dropped every
+      // cell but the tail — the sf0.1 widerow regression)
+      val e = if (lo == null) 0 else math.max(0, entriesBelow(idx.keys, lo) - 1)
       val base =
         if (!seekable)
           runIterator(ri.payloadOffset + idx.offsets(e), ri.cellCount - idx.cellPos(e))
-        else seekSpans(ri, idx, e, hi, colSet, colWindow, subSet, subWindow, counters)
+        else {
+          // spans from e up to the first entry at or above hi
+          val end = if (hi == null) idx.keys.length else entriesBelow(idx.keys, hi)
+          spanGroups(ri, idx, Iterator.single((e, end)), mustRead, counters)
+            .iterator.flatMap(g => spanCursor(ri, idx, g))
+        }
       val from =
         if (lo == null) base
         else base.dropWhile(c => Codecs.compareBytes(c.key, lo) < 0)
@@ -3919,17 +3953,73 @@ object CellStore {
       else from.takeWhile(c => Codecs.compareBytes(c.key, hi) < 0)
     }
 
-    /** The colSet/subSet span walk of [[rangeRun]]: group must-read index
-      * spans into contiguous cursors, count the skipped spans' cells. */
-    private def seekSpans(ri: RunInfo, idx: RunIndex, e0: Int,
-        hi: Array[Byte], colSet: Array[Array[Byte]],
+    /** The key seek of [[rangeRun]]. Key k's cells lie in the index spans
+      * from the last entry strictly below k (a hot key spans many entries,
+      * and its cells can start inside the span before the first entry
+      * bearing it) through the last entry <= k. Overlapping and adjacent
+      * windows merge into one cursor, which stops after the largest key
+      * whose window starts inside it and drops the cells of keys outside
+      * the set. */
+    private def keySeek(ri: RunInfo, idx: RunIndex, keys: Array[Array[Byte]],
+        mustRead: Int => Boolean, counters: ScanCounters): Iterator[Cell] = {
+      val inRun = keys.filter(k => Codecs.compareBytes(k, idx.keys(0)) >= 0 &&
+        Codecs.compareBytes(k, idx.lastKey) <= 0)
+      if (inRun.isEmpty) return Iterator.empty
+      val starts = inRun.map(k => math.max(0, entriesBelow(idx.keys, k) - 1))
+      val windows = inRun.indices.iterator.map(j =>
+        (starts(j), entriesBelow(idx.keys, byteSucc(inRun(j)))))
+      val groups = spanGroups(ri, idx, windows, mustRead, counters)
+      var j = 0
+      groups.iterator.flatMap { g =>
+        // every key with cells in this cursor has its window start below
+        // the cursor's end, so the cursor can stop past the last such key
+        while (j + 1 < inRun.length && starts(j + 1) < g(1)) j += 1
+        val last = inRun(j)
+        spanCursor(ri, idx, g)
+          .takeWhile(c => Codecs.compareBytes(c.key, last) <= 0)
+          .filter(c => sortedContains(inRun, c.key))
+      }
+    }
+
+    /** Walk ascending entry windows [from, until) of one run: the spans
+      * `mustRead` keeps form contiguous [startEntry, endEntry) cursors, and
+      * a span shared by overlapping windows is read once. Rejected spans
+      * and the gaps between windows count as cellsSeekSkipped. */
+    private def spanGroups(ri: RunInfo, idx: RunIndex,
+        windows: Iterator[(Int, Int)], mustRead: Int => Boolean,
+        counters: ScanCounters): mutable.ArrayBuffer[Array[Int]] = {
+      val groups = mutable.ArrayBuffer.empty[Array[Int]]
+      var next = -1 // first entry no window has walked yet
+      windows.foreach { case (a, b) =>
+        if (next >= 0 && a > next && counters != null)
+          counters.cellsSeekSkipped += idx.cellPos(a) - idx.cellPos(next)
+        var i = math.max(a, next)
+        while (i < b) {
+          if (mustRead(i)) {
+            if (groups.nonEmpty && groups.last(1) == i) groups.last(1) = i + 1
+            else groups += Array(i, i + 1)
+          } else if (counters != null) counters.cellsSeekSkipped += spanLength(ri, idx, i)
+          i += 1
+        }
+        next = math.max(next, b)
+      }
+      groups
+    }
+
+    /** The cells of index spans [g(0), g(1)) of one run. */
+    private def spanCursor(ri: RunInfo, idx: RunIndex, g: Array[Int]): Iterator[Cell] = {
+      val endPos = if (g(1) >= idx.cellPos.length) ri.cellCount else idx.cellPos(g(1))
+      runIterator(ri.payloadOffset + idx.offsets(g(0)), endPos - idx.cellPos(g(0)))
+    }
+
+    /** The colSet/subSet span test of [[rangeRun]]: may index span i hold a
+      * cell of a wanted (key, col[, sub]) address? */
+    private def colSpanFilter(ri: RunInfo, idx: RunIndex,
+        colSet: Array[Array[Byte]],
         colWindow: (Array[Byte], Array[Byte]),
         subSet: Array[Array[Byte]],
-        subWindow: (Array[Byte], Array[Byte]),
-        counters: ScanCounters): Iterator[Cell] = {
+        subWindow: (Array[Byte], Array[Byte])): Int => Boolean = {
       val n = idx.cellPos.length
-      def spanCells(i: Int): Int =
-        (if (i == n - 1) ri.cellCount else idx.cellPos(i + 1)) - idx.cellPos(i)
       // any wanted col in the inclusive span window [a, b]? Wanted = a
       // member of the pushed point set AND/OR the pushed range window
       // (both over-approximations re-checked exactly downstream;
@@ -3995,42 +4085,30 @@ object CellStore {
           subWantedIn(idx.subs(i), idx.subs(i + 1))
         else true
       }
-      val groups = mutable.ArrayBuffer.empty[Array[Int]] // [startEntry, endEntry)
-      var i = e0
-      var stop = false
-      while (i < n && !stop) {
-        if (hi != null && Codecs.compareBytes(idx.keys(i), hi) >= 0) stop = true
-        else {
-          if (mustRead(i)) {
-            if (groups.nonEmpty && groups.last(1) == i) groups.last(1) = i + 1
-            else groups += Array(i, i + 1)
-          } else if (counters != null) counters.cellsSeekSkipped += spanCells(i)
-          i += 1
-        }
-      }
-      groups.iterator.flatMap { g =>
-        val endPos = if (g(1) >= n) ri.cellCount else idx.cellPos(g(1))
-        runIterator(ri.payloadOffset + idx.offsets(g(0)), endPos - idx.cellPos(g(0)))
-      }
+      mustRead
     }
 
-    /** Range cursors over every run, bloom-pruned when the scan is a point
-      * lookup: `lookupKeys` non-null asserts the caller needs ONLY cells
-      * whose key is in the set (pushed EqualTo/In, re-checked row-exact
-      * downstream), so a run whose bloom rejects every key is skipped
-      * without reading its index or payload. Blooms have no false
-      * negatives, and LWW/tombstone reconciliation is per-address, so
-      * dropping runs that provably hold none of the keys reconciles
-      * identically for the keys that remain. */
+    /** Range cursors over every run, bloom-pruned and key-seeked when the
+      * scan is a point lookup: `keys` non-null (sorted, distinct, inside
+      * [lo, hi)) asserts the caller needs ONLY cells whose key is in the
+      * set (a pushed EqualTo/In or an index candidate set, already cut to
+      * the keys that route to this bucket, re-checked row-exact
+      * downstream). A run whose bloom rejects every key is skipped without
+      * reading its index or payload; otherwise its index is read once and
+      * only the keys its bloom passes seek their own windows through it
+      * (see [[rangeRun]]). Blooms have no false negatives, and
+      * LWW/tombstone reconciliation is per-address, so dropping runs and
+      * spans that provably hold none of the keys reconciles identically for
+      * the keys that remain; every run stays one address-sorted cursor. */
     def rangeRuns(lo: Array[Byte], hi: Array[Byte],
-        lookupKeys: Seq[Array[Byte]] = null,
+        keys: Array[Array[Byte]] = null,
         counters: ScanCounters = null,
         colSet: Array[Array[Byte]] = null,
         colWindow: (Array[Byte], Array[Byte]) = null,
         subSet: Array[Array[Byte]] = null,
         subWindow: (Array[Byte], Array[Byte]) = null): Seq[Iterator[Cell]] = {
       val infos = runInfos(file)
-      val blooms = if (lookupKeys == null) null else runBlooms(file)
+      val blooms = if (keys == null) null else runBlooms(file)
       val colRanges =
         if (colSet == null && colWindow == null) null else runColRanges(file)
       val colBlooms = if (colSet == null) null else runColBlooms(file)
@@ -4048,8 +4126,10 @@ object CellStore {
             ((subWindow._1 != null && Codecs.compareBytes(subWindow._1, r._2) > 0) ||
              (subWindow._2 != null && Codecs.compareBytes(subWindow._2, r._1) < 0)))
       infos.zipWithIndex.map { case (ri, i) =>
-        if (blooms != null && blooms(i) != null &&
-            !lookupKeys.exists(blooms(i).mightContain)) {
+        val runKeys =
+          if (blooms == null || blooms(i) == null) keys
+          else keys.filter(blooms(i).mightContain)
+        if (runKeys != null && runKeys.isEmpty) {
           if (counters != null) counters.runsBloomSkipped += 1
           Iterator.empty
         } else if (colRanges != null && colRanges(i) != null &&
@@ -4083,7 +4163,8 @@ object CellStore {
           Iterator.empty
         } else {
           if (counters != null) counters.runsRead += 1
-          rangeRun(ri, lo, hi, colSet, counters, colWindow, subSet, subWindow)
+          rangeRun(ri, lo, hi, colSet, counters, colWindow, subSet, subWindow,
+            runKeys)
         }
       }
     }
@@ -4216,25 +4297,33 @@ object CellStore {
     // segments (one micro-batch's delta) instead of the whole bucket; LWW
     // and tombstone reconciliation then apply within the restricted set,
     // which is exactly the batch-local view a change feed emits.
+    // lookupKeys: the finite key set, sorted and cut to [lower, upper);
+    // only cells of these keys are merged, and when no key is left no
+    // segment is opened at all
+    private val keySorted: Array[Array[Byte]] =
+      if (lookupKeys == null) null
+      else sortedDistinct(lookupKeys).filter(k =>
+        (lower == null || Codecs.compareBytes(k, lower) >= 0) &&
+          (upper == null || Codecs.compareBytes(k, upper) < 0))
     private val segs =
-      (if (onlyFiles != null) onlyFiles else segmentFiles(tableDir, bucket))
+      (if (keySorted != null && keySorted.isEmpty) Nil
+       else if (onlyFiles != null) onlyFiles
+       else segmentFiles(tableDir, bucket))
         .map(new SegmentReader(_))
     if (counters != null) counters.segmentsRead += segs.size
     private val colSorted: Array[Array[Byte]] =
-      if (colLookup == null) null
-      else colLookup.toArray.sortWith((a, b) => Codecs.compareBytes(a, b) < 0)
+      if (colLookup == null) null else sortedDistinct(colLookup)
     private val subSorted: Array[Array[Byte]] =
-      if (subLookup == null) null
-      else subLookup.toArray.sortWith((a, b) => Codecs.compareBytes(a, b) < 0)
+      if (subLookup == null) null else sortedDistinct(subLookup)
     private val raw =
-      if (lower == null && upper == null && lookupKeys == null &&
+      if (lower == null && upper == null && keySorted == null &&
           colSorted == null && colWindow == null &&
           subSorted == null && subWindow == null) {
         val rs = segs.flatMap(_.runs())
         if (counters != null) counters.runsRead += rs.size
         rs
       } else segs.flatMap(
-        _.rangeRuns(lower, upper, lookupKeys, counters, colSorted, colWindow,
+        _.rangeRuns(lower, upper, keySorted, counters, colSorted, colWindow,
           subSorted, subWindow))
     // snapshot read: cells written after the as-of bound never enter LWW
     // reconciliation, so the winner per address is the latest cell <= asOf.
@@ -4253,19 +4342,6 @@ object CellStore {
     // non-matching one dropped — the kept addresses reconcile exactly as
     // in the full merge, and a tombstone for a matching column shares its
     // column bytes, so it is kept and keeps shadowing.
-    private def setMatch(set: Array[Array[Byte]], b: Array[Byte]): Boolean = {
-      if (b == null) return false
-      var lo = 0
-      var hi = set.length - 1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        val c = Codecs.compareBytes(set(mid), b)
-        if (c == 0) return true
-        else if (c < 0) lo = mid + 1
-        else hi = mid - 1
-      }
-      false
-    }
     private def inWindow(w: (Array[Byte], Array[Byte]), b: Array[Byte]): Boolean =
       b != null &&
         (w._1 == null || Codecs.compareBytes(w._1, b) <= 0) &&
@@ -4278,9 +4354,9 @@ object CellStore {
     // is kept and keeps shadowing.
     private def prune(it: Iterator[Cell]): Iterator[Cell] = {
       val w0 = if (colWindow == null) it else it.filter(c => inWindow(colWindow, c.col))
-      val a0 = if (colSorted == null) w0 else w0.filter(c => setMatch(colSorted, c.col))
+      val a0 = if (colSorted == null) w0 else w0.filter(c => sortedContains(colSorted, c.col))
       val s0 = if (subWindow == null) a0 else a0.filter(c => inWindow(subWindow, c.sub))
-      val s1 = if (subSorted == null) s0 else s0.filter(c => setMatch(subSorted, c.sub))
+      val s1 = if (subSorted == null) s0 else s0.filter(c => sortedContains(subSorted, c.sub))
       val a = if (asOf == Long.MaxValue) s1 else s1.filter(_.ts <= asOf)
       if (ttl <= 0L || now <= 0L) a
       else a.filter(c => c.tombstone || now < c.ts + ttl)

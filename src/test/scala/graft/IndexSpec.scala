@@ -1980,4 +1980,42 @@ class IndexSpec extends SparkSpec {
     assert(fast.values.map(_._1).sum == rows.size.toLong)
     assert(fast.values.map(_._2).sum == rows.map(_._3).sum)
   }
+
+  test("auto-compaction compacts base and index buckets in one distributed job") {
+    // with compact.segments.max=1 the second epoch leaves every base and
+    // index bucket over the threshold; one job compacts all 2 x 4
+    // (store, bucket) pairs, one task each, and leaves each at one segment
+    val sp = spark; import sp.implicits._
+    val rows = (1L to 400L).map(i => (i, s"n$i", i.toDouble))
+    val dir = Seed.table(spark, sfDir, "spec_idx_compact_job",
+      rows.toDF("id", "name", "bal").repartition(1),
+      props = Map(Options.IndexColumns -> "bal", Options.Buckets -> "4",
+        Options.CompactSegmentsMax -> "1"))
+    val compactions = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.name.startsWith("foreach at CassandraLikeWrite"))
+          compactions.add(e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Seed.append(rows.map { case (i, n, b) => (i, n + "x", b + 1000.0) }
+        .toDF("id", "name", "bal").repartition(1), dir,
+        Map(Options.WriteTimestamp -> "2"))
+      val deadline = System.currentTimeMillis() + 30000L
+      while (compactions.isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(compactions.size == 1 && compactions.peek() == 8,
+      s"compaction stages (tasks each): $compactions")
+    (0 until 4).foreach { b =>
+      assert(CellStore.segmentFiles(dir, b).size == 1, s"base bucket $b")
+      assert(CellStore.segmentFiles(Index.dir(dir, "bal"), b).size == 1,
+        s"index bucket $b")
+    }
+    // the compacted index still resolves candidates exactly
+    assert(Seed.read(spark, dir).filter(col("bal") === 1007.0)
+      .collect().map(_.getString(1)).toSeq == Seq("n7x"))
+  }
 }

@@ -449,4 +449,145 @@ class ScanMetricsSpec extends SparkSpec {
     assert(totals("cellsMerged") <= 35,
       s"sub prefix must merge ~25 matching cells, not 2000: $totals")
   }
+
+  private def tableOf(store: String): CassandraLikeTable = {
+    val meta = CellStore.readMeta(store).get
+    new CassandraLikeTable(store, store,
+      org.apache.spark.sql.types.StructType.fromDDL(meta.schemaDdl),
+      Some(meta.mapping), meta.properties)
+  }
+
+  private def scanParts(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.getOrElse(fail("no BatchScanExec")).toBatch.planInputPartitions().length
+
+  test("multi-point key seek merges ~matches, not the IN envelope") {
+    // the key twin of the slice seek: each key of a pushed IN list reads
+    // its own index window, so the merge holds the matching cells only,
+    // however far apart the keys sort in the bucket
+    val sp = spark; import sp.implicits._
+    val buckets = 4
+    val store = Seed.table(spark, sfDir, "spec_metrics_keyseek",
+      (0L until 8000L).map(k => (k, s"a$k", k)).toDF("k", "s", "x").repartition(1),
+      props = Map(Options.Buckets -> buckets.toString))
+    // an overwrite epoch, an epoch of keys outside every list below, and
+    // a certified delete of one listed key
+    Seed.append((0L until 8000L by 7L).map(k => (k, s"b$k", -k)).toDF("k", "s", "x")
+      .repartition(1), store, Map(Options.WriteTimestamp -> "2"))
+    Seed.append((20000L until 21000L).map(k => (k, s"c$k", k)).toDF("k", "s", "x")
+      .repartition(1), store, Map(Options.WriteTimestamp -> "3"))
+    def bucketOf(k: Long): Int =
+      TokenRing.bucket(Codecs.encode(org.apache.spark.sql.types.LongType, k), buckets)
+    val inB0 = (0L until 8000L).filter(bucketOf(_) == 0)
+    val overwritten = inB0.find(_ % 7 == 0).get
+    val deleted = inB0.find(k => k % 7 != 0 && k > inB0(inB0.size / 2)).get
+    val absent = (30000L until 40000L).find(bucketOf(_) == 0).get
+    val listed = ((0 until 8).map(i => inB0(i * (inB0.size - 1) / 7)) ++
+      Seq(overwritten, deleted, absent)).distinct
+    tableOf(store).deleteWhere(Array[org.apache.spark.sql.sources.Filter](
+      org.apache.spark.sql.sources.EqualTo("k", deleted)))
+    def model(ks: Seq[Long]): Set[(Long, String, Long)] =
+      ks.filter(k => k < 8000L && k != deleted).map { k =>
+        if (k % 7 == 0) (k, s"b$k", -k) else (k, s"a$k", k)
+      }.toSet
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+
+    val one = Seed.read(spark, store).filter(col("k").isin(listed: _*))
+    assert(rows(one) == model(listed))
+    assert(scanParts(one) == 1, "every listed key routes to bucket 0")
+    val t = driveTotals(one)
+    val live = model(listed).size
+    assert(t("cellsMerged") == 2L * live,
+      s"merge must hold the $live listed rows' cells only: $t")
+    assert(t("tombstonesDropped") == 2L, s"the deleted key's two cells: $t")
+    // the epoch-3 run holds no listed key: its bloom skips it unread
+    assert(t("runsBloomSkipped") >= 1L, s"$t")
+    // the base run's spans between the keys' windows are never read
+    assert(t("cellsSeekSkipped") >= inB0.size.toLong, s"$t")
+    // a partition of a bucket no listed key routes to opens no segment
+    val factory = one.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.get.toBatch.createReaderFactory()
+    val other = factory.createReader(CellInputPartition(store, 1, Array.empty))
+    try {
+      assert(!other.next())
+      assert(other.currentMetricsValues()
+        .find(_.name() == "segmentsRead").forall(_.value() == 0L))
+    } finally other.close()
+
+    // the same shape over every bucket: each partition keeps only the keys
+    // that route to its bucket, so no partition merges another's envelope
+    val spread = (0L until 8000L by 397L) ++ Seq(deleted, absent, 20500L)
+    val all = Seed.read(spark, store).filter(col("k").isin(spread: _*))
+    val want = model(spread) + ((20500L, "c20500", 20500L))
+    assert(rows(all) == want)
+    assert(scanParts(all) == buckets)
+    val ta = driveTotals(all)
+    assert(ta("cellsMerged") == 2L * want.size, s"$ta")
+  }
+
+  test("key seek: a hot key spanning many index entries reads whole") {
+    // the hot key starts mid-span and covers ~8 index entries: its window
+    // must open at the last entry strictly BELOW it, or the cells before
+    // its first entry are lost
+    val dir = java.nio.file.Files.createTempDirectory("scanmetricshotkey").toString
+    try {
+      val before = (0 until 300).map(i => cell(f"a$i%03d", "c", s"va$i", 1L))
+      val hot = (0 until 1000).map(i => cell("hot", f"c$i%04d", s"vh$i", 1L))
+      val after = (0 until 300).map(i => cell(f"z$i%03d", "c", s"vz$i", 1L))
+      seg(dir, "b0-a.bin", before ++ hot ++ after)
+      seg(dir, "b0-b.bin", Seq(cell("a150", "c", "new", 2L),
+        tomb("hot", "c0500", 2L), cell("z299", "c", "new", 2L)))
+      val keys = Seq("z299", "a150", "hot", "m-absent", "hot")
+        .map(_.getBytes.asInstanceOf[Array[Byte]])
+      val c = new ScanCounters
+      val it = new CellStore.BucketMergeIterator(dir, 0,
+        lookupKeys = keys, counters = c)
+      val got = try it.toVector.map(x =>
+        (new String(x.key), new String(x.col), new String(x.value)))
+      finally it.close()
+      val want = Vector(("a150", "c", "new")) ++
+        (0 until 1000).filter(_ != 500).map(i => ("hot", f"c$i%04d", s"vh$i")) ++
+        Vector(("z299", "c", "new"))
+      assert(got == want, s"got ${got.size} cells, first ${got.take(3)}")
+      assert(c.cellsMerged == want.size && c.tombstonesDropped == 1,
+        s"cellsMerged=${c.cellsMerged} tombstonesDropped=${c.tombstonesDropped}")
+      // the span between the hot key's window and z299's is never read
+      assert(c.cellsSeekSkipped >= CellStore.IndexEvery,
+        s"cellsSeekSkipped=${c.cellsSeekSkipped}")
+      // the column seek still applies inside a key window
+      val c2 = new ScanCounters
+      val it2 = new CellStore.BucketMergeIterator(dir, 0,
+        lookupKeys = Seq("hot".getBytes), counters = c2,
+        colLookup = Seq("c0007", "c0500", "c0999").map(_.getBytes.asInstanceOf[Array[Byte]]))
+      try assert(it2.toVector.map(x => new String(x.col)) == Vector("c0007", "c0999"))
+      finally it2.close()
+      assert(c2.cellsMerged == 2 && c2.cellsSeekSkipped >= 600,
+        s"cellsMerged=${c2.cellsMerged} cellsSeekSkipped=${c2.cellsSeekSkipped}")
+    } finally CellStore.dropTable(dir)
+  }
+
+  test("key seek on an ordered-key store with range.bounds") {
+    // range routing: every bucket holds a contiguous key interval, so an
+    // IN list's per-bucket envelope used to span most of each bucket
+    val sp = spark; import sp.implicits._
+    val store = Seed.table(spark, sfDir, "spec_metrics_keyseek_range",
+      (-2000L until 2000L).map(k => (k, k * 3L)).toDF("k", "v").repartition(1),
+      props = Map(Options.KeyEncoding -> "ordered",
+        Options.RangeBounds -> "-1000,0,1000", Options.Buckets -> "4"))
+    Seed.append((-2000L until 2000L by 5L).map(k => (k, -k)).toDF("k", "v")
+      .repartition(1), store, Map(Options.WriteTimestamp -> "2"))
+    val listed = Seq(-1999L, -1500L, -1001L, -1000L, -999L, -1L, 0L, 1L, 555L,
+      999L, 1000L, 1995L, 1999L, 5000L, -5000L)
+    val df = Seed.read(spark, store).filter(col("k").isin(listed: _*))
+    val want = listed.filter(k => k >= -2000L && k < 2000L)
+      .map(k => (k, if (k % 5 == 0) -k else k * 3L)).toSet
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == want)
+    assert(scanParts(df) == 4)
+    val t = driveTotals(df)
+    assert(t("cellsMerged") == want.size.toLong, s"$t")
+    assert(t("cellsSeekSkipped") >= 2000L, s"$t")
+  }
 }

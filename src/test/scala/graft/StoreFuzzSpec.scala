@@ -160,6 +160,29 @@ class StoreFuzzSpec extends SparkSpec {
           }
       }
 
+      // a random IN read: live, deleted and never-written keys (the model
+      // holds 0..59 at most). Its own stream, so the op sequence above is
+      // the same with or without it.
+      val inRnd = new Random(20260900L + trial)
+      def inRead(): Unit = {
+        val want = expected(model, Long.MaxValue)
+        val live = want.map(_._1).toVector.sorted
+        val dead = model.keys.filterNot(live.contains).toVector.sorted
+        def pick(ks: Vector[Long], n: Int): Seq[Long] =
+          if (ks.isEmpty) Nil else Seq.fill(n)(ks(inRnd.nextInt(ks.size)))
+        val keys = (pick(live, 1 + inRnd.nextInt(6)) ++ pick(dead, inRnd.nextInt(3)) ++
+          Seq.fill(1 + inRnd.nextInt(2))(60L + inRnd.nextInt(40))).distinct
+        val got = Seed.read(spark, dir)
+          .filter(org.apache.spark.sql.functions.col("k").isin(keys: _*))
+          .collect().map { r =>
+            (r.getLong(0),
+              if (r.isNullAt(1)) None else Some(r.getDouble(1)),
+              if (r.isNullAt(2)) None else Some(r.getString(2)))
+          }.toSet
+        assert(got == want.filter(r => keys.contains(r._1)),
+          s"trial $trial: IN ${keys.mkString(",")} diverged from model after ts=$ts")
+      }
+
       (1 to 18).foreach { _ =>
         rnd.nextInt(10) match {
           case n if n <= 4 => appendRows(tombstoneNulls = false)
@@ -171,6 +194,7 @@ class StoreFuzzSpec extends SparkSpec {
         }
         assert(readBack(dir) == expected(model, Long.MaxValue),
           s"trial $trial: live read diverged from model after ts=$ts")
+        inRead()
         // metadata-vs-fold COUNT under every interleaving: buckets whose
         // runs are stats-bearing, tombstone-free and key-disjoint answer
         // from the STAT tails, the rest fold cells — the mix is random
@@ -309,6 +333,31 @@ class StoreFuzzSpec extends SparkSpec {
           }
       }
 
+      // a random IN read over row keys (live, deleted, never written: the
+      // model holds k0..k13 at most), half the time with a column IN too,
+      // so the column seek runs inside the key windows. Own stream, as in
+      // the regular fuzz.
+      val inRnd = new Random(20260910L + trial)
+      def inReadT(): Unit = {
+        val want = expectedT(Long.MaxValue)
+        val live = want.map(_._1).toVector.sorted
+        val dead = model.keys.map(_._1).filterNot(live.contains).toVector.sorted
+        def pick(ks: Vector[String], n: Int): Seq[String] =
+          if (ks.isEmpty) Nil else Seq.fill(n)(ks(inRnd.nextInt(ks.size)))
+        val keys = (pick(live, 1 + inRnd.nextInt(4)) ++ pick(dead, inRnd.nextInt(2)) ++
+          Seq(s"k${20 + inRnd.nextInt(10)}")).distinct
+        val cols =
+          if (inRnd.nextBoolean()) None
+          else Some(Seq.fill(1 + inRnd.nextInt(4))(f"c${inRnd.nextInt(20)}%03d").distinct)
+        val byKey = Seed.read(spark, dir)
+          .filter(org.apache.spark.sql.functions.col("row_key").isin(keys: _*))
+        val df = cols.fold(byKey)(cs =>
+          byKey.filter(org.apache.spark.sql.functions.col("column_name").isin(cs: _*)))
+        val got = df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+        assert(got == want.filter(r => keys.contains(r._1) && cols.forall(_.contains(r._2))),
+          s"trial $trial: IN ${keys.mkString(",")} cols=$cols diverged from model after ts=$ts")
+      }
+
       (1 to 16).foreach { _ =>
         rnd.nextInt(10) match {
           case n if n <= 4 => appendCells(tombstoneNulls = false)
@@ -318,6 +367,7 @@ class StoreFuzzSpec extends SparkSpec {
         }
         assert(readBackT() == expectedT(Long.MaxValue),
           s"trial $trial: transposed live read diverged from model after ts=$ts")
+        inReadT()
         // random server-side slice over the same state
         val start = if (rnd.nextBoolean()) Some(f"c${rnd.nextInt(20)}%03d") else None
         val finish0 = if (rnd.nextBoolean()) Some(f"c${rnd.nextInt(20)}%03d") else None
