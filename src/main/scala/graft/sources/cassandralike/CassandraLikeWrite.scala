@@ -1,6 +1,5 @@
 package graft.sources.cassandralike
 
-import java.io.{BufferedOutputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.UUID
@@ -295,22 +294,31 @@ class CellDataWriter(
     .getOrElse(System.currentTimeMillis())
 
   private val buffer = mutable.ArrayBuffer.empty[Cell]
-  private val streams = mutable.HashMap.empty[Int, (String, DataOutputStream)]
+  private val streams = mutable.HashMap.empty[Int, (String, CellStore.SegmentWriter)]
   // Memtable discipline between batch and disk: flushed batches accumulate
-  // in per-bucket pending buffers and spill to disk as ONE sorted run per
+  // in per-bucket pending buffers and spill to disk as one sorted batch per
   // bucket only under memory pressure (largest bucket first) or at commit.
   // A 500-cell batch fanned over 32 buckets would otherwise write ~15-cell
-  // runs — header-dominated IO that commit-time compaction then rereads and
-  // rewrites; with pending buffers, a task whose output fits the write
-  // buffer writes every byte exactly once and compaction has nothing to do.
-  // Memory is bounded by TOTAL pending cells (not per bucket), so a high
-  // bucket count cannot multiply the footprint.
+  // runs — header-dominated IO. Each bucket's segment keeps ONE open run: a
+  // spill that sorts wholly after it extends it (the write's
+  // requiredOrdering makes that the rule), so a key-ordered task writes
+  // every cell exactly once however often it spills, and only a segment
+  // whose spills overlapped is left with several runs for commit to
+  // compact. Memory is bounded by TOTAL pending cells (not per bucket), so
+  // a high bucket count cannot multiply the footprint; an open run holds
+  // only its index state, O(cells / IndexEvery + distinct keys).
   private val writeBufferCells = opt(Options.WriteBufferCells).map(_.toInt)
     .getOrElse(Options.DefaultWriteBufferCells)
   private val pending = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Cell]]
   private var totalPending = 0
   /** Number of threshold flushes performed (observable for W3 tests). */
   var flushes = 0
+  /** Runs staged per bucket so far; a bucket above 1 is compacted at
+    * commit (observable for tests). */
+  def stagedRuns: Map[Int, Int] = streams.map { case (b, (_, w)) => b -> w.runs }.toMap
+  /** [[stagedRuns]] of each indexed column's index sub-store. */
+  def indexStagedRuns: Map[String, Map[Int, Int]] =
+    idxWriters.map { case (c, w) => c -> w.stagedRuns }
 
   private val keyIdx = mapping.fields.indexWhere(_.role == FieldRole.Key)
   private val keyType = mapping.keyField.dataType
@@ -340,30 +348,31 @@ class CellDataWriter(
     private val idxSst = Paths.get(Index.dir(dir, colName), CellStore.SstDir)
     private val pending = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Cell]]
     private var total = 0
-    private val streams = mutable.HashMap.empty[Int, (String, DataOutputStream)]
+    private val streams = mutable.HashMap.empty[Int, (String, CellStore.SegmentWriter)]
+    def stagedRuns: Map[Int, Int] = streams.map { case (b, (_, w)) => b -> w.runs }.toMap
     def add(c: Cell): Unit = {
       pending.getOrElseUpdate(TokenRing.bucket(c.key, buckets),
         mutable.ArrayBuffer.empty[Cell]) += c
       total += 1
       while (total > writeBufferCells) {
         val (b, cells) = pending.maxBy(_._2.length)
-        spill(b, cells.toSeq); total -= cells.length; pending.remove(b)
+        spill(b, cells); total -= cells.length; pending.remove(b)
       }
     }
-    private def spill(b: Int, cells: Seq[Cell]): Unit = {
-      val (_, out) = streams.getOrElseUpdate(b, {
+    private def spill(b: Int, cells: mutable.ArrayBuffer[Cell]): Unit = {
+      val (_, w) = streams.getOrElseUpdate(b, {
         val tmp = s"tmp-${UUID.randomUUID()}-b$b.bin"
         Files.createDirectories(idxSst)
-        (tmp, CellStore.newSegmentStream(idxSst.resolve(tmp)))
+        (tmp, new CellStore.SegmentWriter(idxSst.resolve(tmp)))
       })
-      CellStore.writeRun(out, cells)
+      w.append(cells.sorted(CellStore.addressOrdering))
     }
     def commitFiles(): Seq[(String, Int, String)] = {
-      pending.foreach { case (b, cells) => spill(b, cells.toSeq) }
+      pending.foreach { case (b, cells) => spill(b, cells) }
       pending.clear(); total = 0
       streams.values.foreach(_._2.close())
-      streams.values.foreach { case (tmp, _) =>
-        CellStore.compactSegment(idxSst.resolve(tmp))
+      streams.values.foreach { case (tmp, w) =>
+        if (w.runs > 1) CellStore.compactSegment(idxSst.resolve(tmp))
       }
       streams.map { case (b, (tmp, _)) => (colName, b, tmp) }.toSeq
     }
@@ -490,34 +499,35 @@ class CellDataWriter(
     buffer.clear()
     while (totalPending > writeBufferCells) {
       val (b, cells) = pending.maxBy(_._2.length)
-      spillRun(b, cells.toSeq)
+      spillRun(b, cells)
       totalPending -= cells.length
       pending.remove(b)
     }
   }
 
-  private def spillRun(b: Int, cells: Seq[Cell]): Unit = {
-    val (_, out) = streams.getOrElseUpdate(b, {
+  private def spillRun(b: Int, cells: mutable.ArrayBuffer[Cell]): Unit = {
+    val (_, w) = streams.getOrElseUpdate(b, {
       val tmp = s"tmp-${UUID.randomUUID()}-b$b.bin"
       Files.createDirectories(Paths.get(dir, CellStore.SstDir))
-      (tmp, CellStore.newSegmentStream(Paths.get(dir, CellStore.SstDir, tmp)))
+      (tmp, new CellStore.SegmentWriter(Paths.get(dir, CellStore.SstDir, tmp)))
     })
-    CellStore.writeRun(out, cells)
+    w.append(cells.sorted(CellStore.addressOrdering))
   }
 
   override def commit(): WriterCommitMessage = {
     flush()
-    pending.foreach { case (b, cells) => spillRun(b, cells.toSeq) }
+    pending.foreach { case (b, cells) => spillRun(b, cells) }
     pending.clear()
     totalPending = 0
     streams.values.foreach(_._2.close())
     // task-local compaction: every committed segment is ONE sorted run, so a
     // bucket read costs one cursor per segment (per writing task), never one
     // per spill — the bound that keeps reader fd/memory use flat as tasks
-    // stream arbitrarily many batches. No-op for the common task whose
-    // output fit the write buffer (segment already a single run).
-    streams.values.foreach { case (tmp, _) =>
-      CellStore.compactSegment(Paths.get(dir, CellStore.SstDir, tmp))
+    // stream arbitrarily many batches. Only segments whose spills did not
+    // extend one open run need it: a key-ordered task (the write's
+    // requiredOrdering) has already written each cell once, as one run.
+    streams.values.foreach { case (tmp, w) =>
+      if (w.runs > 1) CellStore.compactSegment(Paths.get(dir, CellStore.SstDir, tmp))
     }
     CellWriterCommit(streams.map { case (b, (tmp, _)) => (b, tmp) }.toSeq,
       idxWriters.values.flatMap(_.commitFiles()).toSeq)

@@ -186,13 +186,156 @@ object CellStore {
 
   // ---- segment file format: [int cellCount][long byteLen][cells…]* runs ----
 
+  /** Cell encoding: key, col, sub and value as `[int len][bytes]` (len -1 =
+    * null), then `[long ts][byte tombstone]`. */
   def writeCell(out: DataOutputStream, c: Cell): Unit = {
-    writeBytes(out, c.key)
-    writeBytes(out, c.col)
-    writeBytes(out, c.sub)
-    writeBytes(out, c.value)
-    out.writeLong(c.ts)
-    out.writeBoolean(c.tombstone)
+    val b = new Array[Byte](cellSize(c))
+    putCell(c, b, 0)
+    out.write(b)
+  }
+
+  private def fieldSize(b: Array[Byte]): Int = if (b == null) 4 else 4 + b.length
+
+  private def cellSize(c: Cell): Int =
+    fieldSize(c.key) + fieldSize(c.col) + fieldSize(c.sub) + fieldSize(c.value) + 9
+
+  private def putInt(b: Array[Byte], at: Int, v: Int): Unit = {
+    b(at) = (v >>> 24).toByte; b(at + 1) = (v >>> 16).toByte
+    b(at + 2) = (v >>> 8).toByte; b(at + 3) = v.toByte
+  }
+
+  private def getInt(b: Array[Byte], at: Int): Int =
+    ((b(at) & 0xff) << 24) | ((b(at + 1) & 0xff) << 16) |
+      ((b(at + 2) & 0xff) << 8) | (b(at + 3) & 0xff)
+
+  private def putField(b: Array[Byte], at: Int, f: Array[Byte]): Int =
+    if (f == null) { putInt(b, at, -1); at + 4 }
+    else {
+      putInt(b, at, f.length)
+      System.arraycopy(f, 0, b, at + 4, f.length)
+      at + 4 + f.length
+    }
+
+  /** Encode `c` into `b` from `at`, which must have [[cellSize]] bytes free;
+    * returns the end offset. */
+  private def putCell(c: Cell, b: Array[Byte], at: Int): Int = {
+    var p = putField(b, at, c.key)
+    p = putField(b, p, c.col)
+    p = putField(b, p, c.sub)
+    p = putField(b, p, c.value)
+    putInt(b, p, (c.ts >>> 32).toInt)
+    putInt(b, p + 4, c.ts.toInt)
+    b(p + 8) = if (c.tombstone) 1 else 0
+    p + 9
+  }
+
+  /** Streaming encoder of ONE sorted run: cells arrive in address order
+    * (checked per cell), are encoded into a block buffer that drains to
+    * `sink` in bulk, and feed every index tail on the same pass — the
+    * sparse (key, col, sub) entries every [[IndexEvery]] cells, the key
+    * bloom, the column and sub windows and chunked blooms, KPFX/VSUM
+    * prefixes, VMMX and CVAL value tails, TSRG and STAT. `drainTo(buf, n)`
+    * receives the encoded payload in blocks. [[finish]] drains the rest
+    * and returns the index block; the caller writes the run
+    * header `[count][payloadLen][indexLen]` in front of the payload. Memory
+    * is the block buffer plus O(cells / IndexEvery + distinct keys) of
+    * index state, however many cells stream through — the one run builder
+    * behind [[writeRun]] and [[SegmentWriter]]. */
+  private final class RunEncoder(drainTo: (Array[Byte], Int) => Unit) {
+    private var buf = new Array[Byte](1 << 16)
+    private var len = 0
+    var count = 0
+    var payloadLen = 0L
+    /** The last cell added (null before the first). */
+    var last: Cell = null
+    private val entries = mutable.ArrayBuffer.empty[IndexEntry]
+    private val bloom = new KeyBloom.Builder
+    private val colBloom = new ColBloomBuilder
+    private val subBloom = new ColBloomBuilder
+    private var colMin: Array[Byte] = null
+    private var colMax: Array[Byte] = null
+    private var subMin: Array[Byte] = null
+    private var subMax: Array[Byte] = null
+    // exact content stats for the STAT tail: distinct = adjacency changes
+    private var tombs = 0
+    private var dKeys = 0
+    private var dAddrs = 0
+    // KPFX/VSUM positional tails: per entry, the distinct-key count and
+    // value-sum of every cell BEFORE it (prefix forms — what lets a
+    // boundary search answer "how many keys / how much value below x"
+    // positionally), plus whether the entry's own cell starts a new key (a
+    // hot key can straddle the entry boundary, and the reader must know
+    // whether to count it again). The value sum tracks 8-byte big-endian
+    // longs only and is dropped whole on any other value shape or on Long
+    // overflow — a partial sum would be a wrong answer, an absent tail only
+    // costs the fold.
+    private val kPrefix = mutable.ArrayBuffer.empty[Int]
+    private val kStart = mutable.ArrayBuffer.empty[Boolean]
+    private val vPrefix = mutable.ArrayBuffer.empty[Long]
+    private val vals = new ValueTailBuilder
+    private val colVals = new ColValTailBuilder
+    private var tsMin = Long.MaxValue
+    private var tsMax = Long.MinValue
+
+    def add(c: Cell): Unit = {
+      val k = if (last == null) 1 else Codecs.compareBytes(c.key, last.key)
+      if (k < 0 || (k == 0 && addressOrdering.compare(last, c) > 0))
+        throw new IllegalArgumentException(
+          s"run cells out of address order at cell $count")
+      val newKey = k != 0
+      if (count % IndexEvery == 0) {
+        entries += IndexEntry(count, payloadLen, c.key, c.col, c.sub)
+        kPrefix += dKeys
+        kStart += newKey
+        vPrefix += vals.sum
+        vals.startSpan()
+        colVals.startSpan()
+      }
+      if (newKey) { bloom.add(c.key); dKeys += 1 }
+      if (newKey || !eqNullable(last.col, c.col) || !eqNullable(last.sub, c.sub))
+        dAddrs += 1
+      if (c.tombstone) tombs += 1
+      if (c.ts < tsMin) tsMin = c.ts
+      if (c.ts > tsMax) tsMax = c.ts
+      vals.add(c)
+      colVals.add(c)
+      colBloom.add(count, c.col)
+      subBloom.add(count, c.sub)
+      if (c.col != null) {
+        if (colMin == null || Codecs.compareBytes(c.col, colMin) < 0) colMin = c.col
+        if (colMax == null || Codecs.compareBytes(c.col, colMax) > 0) colMax = c.col
+      }
+      if (c.sub != null) {
+        if (subMin == null || Codecs.compareBytes(c.sub, subMin) < 0) subMin = c.sub
+        if (subMax == null || Codecs.compareBytes(c.sub, subMax) > 0) subMax = c.sub
+      }
+      val n = cellSize(c)
+      if (len + n > buf.length) {
+        drain()
+        if (n > buf.length) buf = new Array[Byte](n)
+      }
+      len = putCell(c, buf, len)
+      payloadLen += n
+      count += 1
+      last = c
+    }
+
+    private def drain(): Unit = { drainTo(buf, len); len = 0 }
+
+    /** Drain the payload; the run's index block. `certifiedDeletes` (see
+      * [[writeRun]]) is written only when every cell is a tombstone. */
+    def finish(certifiedDeletes: Boolean): Array[Byte] = {
+      drain()
+      serializeIndex(entries.toSeq, if (last == null) null else last.key,
+        bloom.build(),
+        colMin, colMax, colBloom.build(), subMin, subMax, subBloom.build(),
+        tombs, dKeys, dAddrs,
+        kPrefix.toArray, kStart.toArray,
+        if (vals.sumOk) vPrefix.toArray else null, if (vals.sumOk) vals.sum else 0L,
+        vals, colVals.result(),
+        certifiedDeletes = certifiedDeletes && tombs == count,
+        tsMin = tsMin, tsMax = tsMax)
+    }
   }
 
   /** Append one sorted run (the order invariant is enforced here), with its
@@ -213,89 +356,12 @@ object CellStore {
   def writeRun(out: DataOutputStream, cells: Seq[Cell],
       certifiedDeletes: Boolean = false): Unit = {
     if (cells.isEmpty) return
-    val sorted = cells.sorted(addressOrdering)
     val payload = new ByteArrayOutputStream(64 * cells.length)
-    val pout = new DataOutputStream(payload)
-    val entries = mutable.ArrayBuffer.empty[IndexEntry]
-    val bloom = new KeyBloom.Builder
-    val colBloom = new ColBloomBuilder
-    val subBloom = new ColBloomBuilder
-    var prevKey: Array[Byte] = null
-    var colMin: Array[Byte] = null
-    var colMax: Array[Byte] = null
-    var subMin: Array[Byte] = null
-    var subMax: Array[Byte] = null
-    // exact content stats for the STAT tail: counted on the same sorted
-    // pass (distinct = adjacency changes), zero extra comparisons beyond
-    // the (col, sub) adjacency check
-    var prevCol: Array[Byte] = null
-    var prevSub: Array[Byte] = null
-    var sawAddr = false
-    var tombs = 0
-    var dKeys = 0
-    var dAddrs = 0
-    // KPFX/VSUM positional tails, accumulated on the same pass: per entry,
-    // the distinct-key count and value-sum of every cell BEFORE it (prefix
-    // forms — what lets a boundary search answer "how many keys / how much
-    // value below x" positionally), plus whether the entry's own cell
-    // starts a new key (a hot key can straddle the entry boundary, and the
-    // reader must know whether to count it again). The value sum tracks
-    // 8-byte big-endian longs only and is dropped whole on any other value
-    // shape or on Long overflow — a partial sum would be a wrong answer,
-    // an absent tail only costs the fold.
-    val kPrefix = mutable.ArrayBuffer.empty[Int]
-    val kStart = mutable.ArrayBuffer.empty[Boolean]
-    val vPrefix = mutable.ArrayBuffer.empty[Long]
-    val vals = new ValueTailBuilder
-    val colVals = new ColValTailBuilder
-    var tsMin = Long.MaxValue
-    var tsMax = Long.MinValue
-    var i = 0
-    sorted.foreach { c =>
-      // sorted input: distinct keys are exactly the key changes
-      val newKey = prevKey == null || !java.util.Arrays.equals(prevKey, c.key)
-      if (i % IndexEvery == 0) {
-        entries += IndexEntry(i, payload.size().toLong, c.key, c.col, c.sub)
-        kPrefix += dKeys
-        kStart += newKey
-        vPrefix += vals.sum
-        vals.startSpan()
-        colVals.startSpan()
-      }
-      if (newKey) {
-        bloom.add(c.key); prevKey = c.key; dKeys += 1
-      }
-      if (newKey || !sawAddr || !eqNullable(prevCol, c.col) ||
-          !eqNullable(prevSub, c.sub)) dAddrs += 1
-      prevCol = c.col; prevSub = c.sub; sawAddr = true
-      if (c.tombstone) tombs += 1
-      if (c.ts < tsMin) tsMin = c.ts
-      if (c.ts > tsMax) tsMax = c.ts
-      vals.add(c)
-      colVals.add(c)
-      colBloom.add(i, c.col)
-      subBloom.add(i, c.sub)
-      if (c.col != null) {
-        if (colMin == null || Codecs.compareBytes(c.col, colMin) < 0) colMin = c.col
-        if (colMax == null || Codecs.compareBytes(c.col, colMax) > 0) colMax = c.col
-      }
-      if (c.sub != null) {
-        if (subMin == null || Codecs.compareBytes(c.sub, subMin) < 0) subMin = c.sub
-        if (subMax == null || Codecs.compareBytes(c.sub, subMax) > 0) subMax = c.sub
-      }
-      writeCell(pout, c)
-      i += 1
-    }
-    val index = serializeIndex(entries.toSeq, sorted.last.key, bloom.build(),
-      colMin, colMax, colBloom.build(), subMin, subMax, subBloom.build(),
-      tombs, dKeys, dAddrs,
-      kPrefix.toArray, kStart.toArray,
-      if (vals.sumOk) vPrefix.toArray else null, if (vals.sumOk) vals.sum else 0L,
-      vals, colVals.result(),
-      certifiedDeletes = certifiedDeletes && tombs == sorted.length,
-      tsMin = tsMin, tsMax = tsMax)
-    out.writeInt(sorted.length)
-    out.writeLong(payload.size().toLong)
+    val enc = new RunEncoder(payload.write(_, 0, _))
+    cells.sorted(addressOrdering).foreach(enc.add)
+    val index = enc.finish(certifiedDeletes)
+    out.writeInt(enc.count)
+    out.writeLong(enc.payloadLen)
     out.writeInt(index.length)
     payload.writeTo(out)
     out.write(index)
@@ -309,15 +375,14 @@ object CellStore {
     if (b == null) out.writeInt(-1)
     else { out.writeInt(b.length); out.write(b) }
 
+  /** A `[int len][bytes]` field; only -1 (null) is a valid negative
+    * length, so any other one is corruption, never a silent null. */
   private def readBytes(in: DataInputStream): Array[Byte] = {
     val n = in.readInt()
-    if (n < 0) null
+    if (n == -1) null
+    else if (n < 0) throw new IOException(s"corrupt field length $n")
     else { val b = new Array[Byte](n); in.readFully(b); b }
   }
-
-  private def readCell(in: DataInputStream): Cell =
-    Cell(readBytes(in), readBytes(in), readBytes(in), readBytes(in),
-      in.readLong(), in.readBoolean())
 
   /** One sorted run of a segment: `[int cellCount][long payloadLen]
     * [int indexByteLen]` header, the cell payload, then a sparse key index —
@@ -503,10 +568,10 @@ object CellStore {
     * AND no running prefix overflows Long) and the VMMX per-span + run-wide
     * value min/max (valid whenever every value is an 8-byte long — extremes
     * can't overflow, so a VSUM-overflowing run keeps its VMMX). Spans align
-    * with index entries ([[writeRun]]/[[writeSingleRun]] call
-    * [[startSpan]] at every entry), so span i covers exactly the cells of
-    * index span i — what lets a positional interval take interior spans'
-    * extremes from the tail and scan only the two boundary spans. */
+    * with index entries ([[RunEncoder]] calls [[startSpan]] at every
+    * entry), so span i covers exactly the cells of index span i — what
+    * lets a positional interval take interior spans' extremes from the
+    * tail and scan only the two boundary spans. */
   final class ValueTailBuilder {
     var sum = 0L
     private var val8 = true
@@ -3848,42 +3913,94 @@ object CellStore {
     lo < colSet.length && Codecs.compareBytes(colSet(lo), b) <= 0
   }
 
-  /** InputStream over positional FileChannel reads: any number of run
-    * cursors share ONE os file handle per segment, so reader fd usage is
-    * O(segments), never O(runs). */
-  private final class ChannelRangeInputStream(ch: java.nio.channels.FileChannel, start: Long)
-    extends InputStream {
-    private var pos = start
-    override def read(): Int = {
-      val b = new Array[Byte](1)
-      if (read(b, 0, 1) < 0) -1 else b(0) & 0xff
-    }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      val n = ch.read(java.nio.ByteBuffer.wrap(b, off, len), pos)
-      if (n > 0) pos += n
-      n
-    }
-  }
+  /** Bytes a run cursor reads per block ([[SegmentReader.runIterator]]). */
+  private val CursorBlock = 1 << 15
 
-  /** Read handle for one segment file: one FileChannel, N run cursors doing
-    * buffered positional reads against it. */
+  /** Read handle for one segment file: one FileChannel that any number of
+    * run cursors read positionally, so reader fd usage is O(segments),
+    * never O(runs). */
   final class SegmentReader(file: Path) extends AutoCloseable {
     private val ch = java.nio.channels.FileChannel.open(
       file, java.nio.file.StandardOpenOption.READ)
+    private val fileLen = ch.size()
+
+    /** Read exactly `len` bytes at file offset `pos` into `buf[off, off +
+      * len)`; the file ending first throws an EOFException naming it.
+      * Positional reads leave the channel's position alone, so any number
+      * of cursors share the one channel. */
+    private def readFully(pos: Long, buf: Array[Byte], off: Int, len: Int): Unit = {
+      val bb = ByteBuffer.wrap(buf, off, len)
+      while (bb.hasRemaining) {
+        if (ch.read(bb, pos + bb.position() - off) < 0)
+          throw new EOFException(
+            s"truncated segment (${bb.remaining} bytes missing at offset ${
+              pos + bb.position() - off}): $file")
+      }
+    }
+
     def runs(): Seq[Iterator[Cell]] =
       runOffsets(file).map { case (off, n) => runIterator(off, n) }
+
+    /** `cellCount` cells decoded from file offset `offset`: a block cursor
+      * that reads [[CursorBlock]]-byte blocks and assembles lengths, ints
+      * and longs from its own array (it grows to fit a larger field). A
+      * field length other than -1 (null) that is negative or runs past the
+      * end of the file is corruption and throws an IOException naming the
+      * file and offset. */
     def runIterator(offset: Long, cellCount: Int): Iterator[Cell] = new Iterator[Cell] {
-      private val in = new DataInputStream(new BufferedInputStream(
-        new ChannelRangeInputStream(ch, offset), 1 << 15))
+      private var buf: Array[Byte] = null
+      private var bufStart = offset // file offset of buf(0)
+      private var pos = 0 // next unread byte in buf
+      private var lim = 0 // bytes of buf holding file data
       private var remaining = cellCount
       def hasNext: Boolean = remaining > 0
-      def next(): Cell = { val c = readCell(in); remaining -= 1; c }
+      def next(): Cell = {
+        if (remaining <= 0) throw new NoSuchElementException
+        val key = field(); val col = field(); val sub = field(); val value = field()
+        need(9)
+        val ts = (getInt(buf, pos).toLong << 32) | (getInt(buf, pos + 4) & 0xffffffffL)
+        val tombstone = buf(pos + 8) != 0
+        pos += 9
+        remaining -= 1
+        Cell(key, col, sub, value, ts, tombstone)
+      }
+      private def field(): Array[Byte] = {
+        need(4)
+        val at = bufStart + pos
+        val n = getInt(buf, pos)
+        pos += 4
+        if (n == -1) null
+        else if (n < 0 || n > fileLen - at - 4)
+          throw new IOException(s"corrupt cell field length $n at offset $at: $file")
+        else {
+          need(n)
+          val b = java.util.Arrays.copyOfRange(buf, pos, pos + n)
+          pos += n
+          b
+        }
+      }
+      /** Make `n` bytes available from `pos`: keep the unread tail, grow
+        * the block when `n` exceeds it, refill up to the block's end. */
+      private def need(n: Int): Unit = if (lim - pos < n) {
+        val keep = lim - pos
+        if (buf == null) buf = new Array[Byte](math.max(CursorBlock, n))
+        else {
+          val nb = if (n > buf.length) new Array[Byte](math.max(n, 2 * buf.length)) else buf
+          System.arraycopy(buf, pos, nb, 0, keep)
+          buf = nb
+        }
+        bufStart += pos
+        pos = 0
+        val want = math.max(n - keep,
+          math.min(buf.length - keep, fileLen - bufStart - keep).toInt)
+        readFully(bufStart + keep, buf, keep, want)
+        lim = keep + want
+      }
     }
 
     def readIndex(ri: RunInfo): RunIndex = {
       val buf = new Array[Byte](ri.indexByteLen)
-      val in = new DataInputStream(new ChannelRangeInputStream(ch, ri.indexOffset))
-      in.readFully(buf)
+      readFully(ri.indexOffset, buf, 0, buf.length)
       parseIndex(buf)
     }
 
@@ -4370,8 +4487,10 @@ object CellStore {
 
   /** Task-local compaction: rewrite a multi-run segment as a single sorted
     * run (streaming merge — memory stays O(runs), not O(cells)). Runs at
-    * DataWriter.commit, so every COMMITTED segment holds exactly one run and
-    * a bucket read needs one cursor per segment. Tombstones survive (they
+    * DataWriter.commit on the segments whose writer had to open more than
+    * one run (a spill that did not sort after the open run — see
+    * [[SegmentWriter]]), so every COMMITTED segment holds exactly one run
+    * and a bucket read needs one cursor per segment. Tombstones survive (they
     * shadow cells in other segments); duplicate addresses within the segment
     * reconcile here — LWW is associative, so merging a subset first yields
     * the same winner the full merge would. */
@@ -4385,7 +4504,7 @@ object CellStore {
     val tmp = file.resolveSibling(file.getFileName.toString + ".compact")
     val reader = new SegmentReader(file)
     try {
-      writeSingleRun(tmp, new MergeIterator(reader.runs(), dropTombstones = false))
+      writeSegment(tmp, new MergeIterator(reader.runs(), dropTombstones = false))
     } finally reader.close()
     Files.move(tmp, file, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
@@ -4547,7 +4666,7 @@ object CellStore {
       // caught in deleteWhere's old `.tmp` staging
       val tmp = target.resolveSibling(
         s"tmp-compact-${UUID.randomUUID()}-b$bucket.bin")
-      writeSingleRun(tmp, merged)
+      writeSegment(tmp, merged)
       // provenance sidecar BEFORE the segment becomes visible: a compacted
       // segment carries no information beyond its inputs (merge only
       // shadows and drops), so a change feed that has consumed every input
@@ -4587,109 +4706,82 @@ object CellStore {
       .split("\n").map(_.trim).filter(_.nonEmpty).toSet)
   }
 
-  /** Long-counting wrapper: DataOutputStream.size() is an Int, which
-    * overflows on multi-GB compacted runs. */
-  private final class CountingOutputStream(os: OutputStream) extends OutputStream {
-    var count = 0L
-    override def write(b: Int): Unit = { os.write(b); count += 1 }
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-      os.write(b, off, len); count += len
-    }
-    override def flush(): Unit = os.flush()
-    override def close(): Unit = os.close()
+  /** Write address-ordered cells to `target` as a one-run segment. */
+  private def writeSegment(target: Path, cells: Iterator[Cell]): Unit = {
+    val w = new SegmentWriter(target)
+    try cells.foreach(w.add) finally w.close()
   }
 
-  /** Stream an already-sorted cell sequence into `target` as ONE run in the
-    * same `[count][payloadLen][idxLen] payload index` layout [[writeRun]]
-    * emits (the r4 regression was this writer lagging a format revision —
-    * now both paths share the header/index shape and [[runInfos]] verifies
-    * magic/version, so a future drift fails fast instead of corrupting).
-    * The sparse index is accumulated while streaming — memory O(cells /
-    * IndexEvery), never O(cells). */
-  private def writeSingleRun(target: Path, cells: Iterator[Cell]): Unit = {
-    val raf = new java.io.RandomAccessFile(target.toFile, "rw")
-    try {
-      raf.setLength(0L)
-      raf.seek(SegmentHeaderLen + RunHeaderLen) // placeholder headers, patched below
-      val counting = new CountingOutputStream(new BufferedOutputStream(
-        java.nio.channels.Channels.newOutputStream(raf.getChannel), 1 << 16))
-      val out = new DataOutputStream(counting)
-      val entries = mutable.ArrayBuffer.empty[IndexEntry]
-      val bloom = new KeyBloom.Builder
-      val colBloom = new ColBloomBuilder
-      val subBloom = new ColBloomBuilder
-      var count = 0
-      var lastKey: Array[Byte] = null
-      var colMin: Array[Byte] = null
-      var colMax: Array[Byte] = null
-      var subMin: Array[Byte] = null
-      var subMax: Array[Byte] = null
-      var prevCol: Array[Byte] = null
-      var prevSub: Array[Byte] = null
-      var sawAddr = false
-      var tombs = 0
-      var dKeys = 0
-      var dAddrs = 0
-      // KPFX/VSUM prefix tails, accumulated streaming exactly as in
-      // [[writeRun]] — compaction's merged runs must keep the positional
-      // machinery or every compacted store would decline to the fold
-      val kPrefix = mutable.ArrayBuffer.empty[Int]
-      val kStart = mutable.ArrayBuffer.empty[Boolean]
-      val vPrefix = mutable.ArrayBuffer.empty[Long]
-      val vals = new ValueTailBuilder
-      val colVals = new ColValTailBuilder
-      var tsMin = Long.MaxValue
-      var tsMax = Long.MinValue
-      cells.foreach { c =>
-        val newKey = lastKey == null || !java.util.Arrays.equals(lastKey, c.key)
-        if (count % IndexEvery == 0) {
-          entries += IndexEntry(count, counting.count, c.key, c.col, c.sub)
-          kPrefix += dKeys
-          kStart += newKey
-          vPrefix += vals.sum
-          vals.startSpan()
-          colVals.startSpan()
-        }
-        if (newKey) { bloom.add(c.key); dKeys += 1 }
-        if (newKey || !sawAddr || !eqNullable(prevCol, c.col) ||
-            !eqNullable(prevSub, c.sub)) dAddrs += 1
-        prevCol = c.col; prevSub = c.sub; sawAddr = true
-        if (c.tombstone) tombs += 1
-        if (c.ts < tsMin) tsMin = c.ts
-        if (c.ts > tsMax) tsMax = c.ts
-        vals.add(c)
-        colVals.add(c)
-        colBloom.add(count, c.col)
-        subBloom.add(count, c.sub)
-        if (c.col != null) {
-          if (colMin == null || Codecs.compareBytes(c.col, colMin) < 0) colMin = c.col
-          if (colMax == null || Codecs.compareBytes(c.col, colMax) > 0) colMax = c.col
-        }
-        if (c.sub != null) {
-          if (subMin == null || Codecs.compareBytes(c.sub, subMin) < 0) subMin = c.sub
-          if (subMax == null || Codecs.compareBytes(c.sub, subMax) > 0) subMax = c.sub
-        }
-        writeCell(out, c)
-        count += 1
-        lastKey = c.key
-      }
-      val payloadLen = counting.count
-      out.write(serializeIndex(entries.toSeq, lastKey, bloom.build(),
-        colMin, colMax, colBloom.build(), subMin, subMax, subBloom.build(),
-        tombs, dKeys, dAddrs,
-        kPrefix.toArray, kStart.toArray,
-        if (vals.sumOk) vPrefix.toArray else null,
-        if (vals.sumOk) vals.sum else 0L,
-        vals, colVals.result(), tsMin = tsMin, tsMax = tsMax))
-      out.flush()
-      val indexLen = (counting.count - payloadLen).toInt
-      raf.seek(0L)
-      raf.writeInt(SegmentMagic)
-      raf.writeInt(FormatVersion)
-      raf.writeInt(count)
-      raf.writeLong(payloadLen)
-      raf.writeInt(indexLen)
-    } finally raf.close()
+  /** One segment file written run by run, each run streamed through a
+    * [[RunEncoder]] straight to the file: a run's header is a placeholder
+    * until [[closeRun]] patches it in place, so nothing but the encoder's
+    * block buffer and index state is held in memory however long a run
+    * grows. Cells [[add]]ed in address order extend the open run;
+    * [[append]] hands over one sorted spill and extends the open run when
+    * the spill sorts wholly after it, else closes that run and opens a new
+    * one — so a writer fed key-ordered spills writes ONE run and commit
+    * has nothing to compact. A segment holds at least one run: closing a
+    * writer that saw no cell writes an empty one (what full compaction
+    * leaves when every cell was deleted). */
+  final class SegmentWriter(file: Path) extends AutoCloseable {
+    private val ch = java.nio.channels.FileChannel.open(file,
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.TRUNCATE_EXISTING,
+      java.nio.file.StandardOpenOption.WRITE)
+    private var end = 0L // file length written so far
+    private def writeAt(bb: ByteBuffer, at: Long): Unit = {
+      var p = at
+      while (bb.hasRemaining) p += ch.write(bb, p)
+    }
+    /** Append `b[0, n)` at the end of the file. */
+    private def put(b: Array[Byte], n: Int): Unit = {
+      writeAt(ByteBuffer.wrap(b, 0, n), end)
+      end += n
+    }
+    put(ByteBuffer.allocate(SegmentHeaderLen.toInt)
+      .putInt(SegmentMagic).putInt(FormatVersion).array(), SegmentHeaderLen.toInt)
+    private var enc: RunEncoder = null
+    private var runStart = 0L
+    private var closedRuns = 0
+
+    /** Runs written so far, the open one included. */
+    def runs: Int = closedRuns + (if (enc == null) 0 else 1)
+
+    def add(c: Cell): Unit = {
+      if (enc == null) openRun()
+      enc.add(c)
+    }
+
+    def append(sorted: scala.collection.Seq[Cell]): Unit = {
+      if (sorted.isEmpty) return
+      if (enc != null && addressOrdering.compare(enc.last, sorted.head) >= 0)
+        closeRun()
+      sorted.foreach(add)
+    }
+
+    private def openRun(): Unit = {
+      runStart = end
+      end += RunHeaderLen
+      enc = new RunEncoder(put)
+    }
+
+    private def closeRun(): Unit = if (enc != null) {
+      val index = enc.finish(certifiedDeletes = false)
+      put(index, index.length)
+      val header = ByteBuffer.allocate(RunHeaderLen.toInt).putInt(enc.count)
+        .putLong(enc.payloadLen).putInt(index.length)
+      header.flip()
+      writeAt(header, runStart)
+      enc = null
+      closedRuns += 1
+    }
+
+    def close(): Unit = {
+      try {
+        if (runs == 0) openRun()
+        closeRun()
+      } finally ch.close()
+    }
   }
 
   def dropTable(tableDir: String): Unit = {

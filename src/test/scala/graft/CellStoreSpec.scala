@@ -336,8 +336,8 @@ class CellStoreSpec extends AnyFunSuite {
       def c(i: Int) = Cell(f"k$i%04d".getBytes, "c".getBytes, null,
         s"v$i".getBytes, 1L, tombstone = false)
       // 1000 keys across 3 runs -> compacted single run must carry a sparse
-      // index in the SAME format writeRun emits (the r4 regression was
-      // writeSingleRun lagging a format revision)
+      // index in the SAME format writeRun emits (the r4 regression was a
+      // second run writer lagging a format revision)
       seg(dir, "b0-a.bin",
         (0 until 400).map(c), (400 until 800).map(c), (800 until 1000).map(c))
       val file = CellStore.segmentFiles(dir, 0).head
@@ -529,7 +529,7 @@ class CellStoreSpec extends AnyFunSuite {
         assert(!blooms.head.mightContain("k0450".getBytes))
       }
       checkBlooms()
-      // compaction (writeSingleRun, the streaming writer) re-emits a bloom
+      // compaction (the streaming SegmentWriter) re-emits a bloom
       CellStore.compactSegment(file)
       val blooms = CellStore.runBlooms(file)
       assert(blooms.length == 1 && blooms.head != null)

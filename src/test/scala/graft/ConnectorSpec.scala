@@ -580,28 +580,86 @@ class ConnectorSpec extends SparkSpec {
       (f"c$i%02d", if (i % 2 == 0) s"w$i" else s"v$i")).toSet)
   }
 
-  test("commit-time compaction: multi-flush DSv2 write reads back intact") {
-    // The test whose absence let round 4 ship corrupt: a tiny write buffer
-    // forces every flush to spill multi-run segments, so DataWriter.commit
-    // compacts every segment — the full write -> spill -> compact -> read
-    // cycle must round-trip.
-    val sp = spark; import sp.implicits._
-    val src = (1L to 2000L).map(i => (i, s"v$i")).toDF("k", "v")
-      .repartition(1) // one task -> 2000 cells -> 4 batch-size flushes
-    val store = Seed.table(spark, sfDir, "spec_compact_e2e", src,
-      writeOptions = Map(Options.WriteBufferCells -> "100"))
-    // every committed segment is exactly one indexed run
+  /** Feed `keys`, in the given order, through one [[CellDataWriter]] the
+    * way a write task receives its sorted input (rows `(k, s"v$k")`), and
+    * commit it; the runs it staged per bucket, base store first, then per
+    * index sub-store. */
+  private def stagedRuns(keys: Seq[Long], opts: Map[String, String])
+      : (Map[Int, Int], Map[String, Map[Int, Int]]) = {
+    val dir = java.nio.file.Files.createTempDirectory("staged").toString
+    try {
+      val mapping = ColumnMapping.parse(":key,v",
+        org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, v STRING"))
+      val w = new CellDataWriter(dir, mapping, opts.get, "ONE")
+      val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
+      keys.foreach { k =>
+        row.update(0, k)
+        row.update(1, org.apache.spark.unsafe.types.UTF8String.fromString(s"v$k"))
+        w.write(row)
+      }
+      w.commit()
+      (w.stagedRuns, w.indexStagedRuns)
+    } finally CellStore.dropTable(dir)
+  }
+
+  /** Every committed segment of `store` is exactly one indexed run. */
+  private def assertOneRunPerSegment(store: String): Unit = {
     val segs = (0 until Options.DefaultBuckets)
       .flatMap(b => CellStore.segmentFiles(store, b))
     assert(segs.nonEmpty)
     segs.foreach { f =>
       val infos = CellStore.runInfos(f)
-      assert(infos.size == 1, s"expected 1 compacted run in $f, got ${infos.size}")
-      assert(infos.head.indexByteLen > 0, s"compacted run in $f lacks its index")
+      assert(infos.size == 1, s"expected 1 run in $f, got ${infos.size}")
+      assert(infos.head.indexByteLen > 0, s"run in $f lacks its index")
     }
+  }
+
+  test("commit-time compaction: multi-flush DSv2 write reads back intact") {
+    // The test whose absence let round 4 ship corrupt: a tiny write buffer
+    // makes every flush spill. The write's input arrives key-ordered, so
+    // each bucket's spills extend one open run and commit has nothing to
+    // compact — the full write -> spill -> read cycle must round-trip with
+    // every segment already one run (the sibling test below keeps the
+    // spill -> compact fallback under test).
+    val sp = spark; import sp.implicits._
+    val opts = Map(Options.WriteBufferCells -> "100")
+    val (base, _) = stagedRuns(1L to 2000L, opts)
+    assert(base.nonEmpty && base.values.forall(_ == 1),
+      s"an ordered write must stage one run per bucket, got $base")
+    val src = (1L to 2000L).map(i => (i, s"v$i")).toDF("k", "v")
+      .repartition(1) // one task -> 2000 cells -> 4 batch-size flushes
+    val store = Seed.table(spark, sfDir, "spec_compact_e2e", src,
+      writeOptions = opts)
+    assertOneRunPerSegment(store)
     val back = Seed.read(spark, store)
     assert(back.count() == 2000)
     assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
+  }
+
+  test("commit-time compaction: spills that overlap the open run are compacted to one run") {
+    // Under the default `bytes` key encoding negative longs sort AFTER
+    // positive ones, so the key-ordered input (-1000..1000) reaches each
+    // bucket as negatives then positives: the first positive spill sorts
+    // before the open run and opens a second one. Index cells (value ->
+    // key) arrive in no useful order at all. Both fall back to commit-time
+    // compaction.
+    val sp = spark; import sp.implicits._
+    val opts = Map(Options.WriteBufferCells -> "100", Options.IndexColumns -> "v")
+    val keys = -1000L to 1000L
+    val (base, idx) = stagedRuns(keys, opts)
+    assert(base.values.exists(_ > 1), s"expected multi-run base buckets, got $base")
+    assert(idx("v").values.exists(_ > 1), s"expected multi-run index buckets, got $idx")
+    val src = keys.map(i => (i, s"v$i")).toDF("k", "v").repartition(1)
+    val store = Seed.table(spark, sfDir, "spec_compact_fallback", src,
+      props = Map(Options.IndexColumns -> "v"),
+      writeOptions = Map(Options.WriteBufferCells -> "100"))
+    assertOneRunPerSegment(store)
+    assertOneRunPerSegment(Index.dir(store, "v"))
+    val back = Seed.read(spark, store)
+    assert(back.count() == keys.size)
+    assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
+    assert(back.filter($"v" === "v-500").as[(Long, String)].collect().toSeq ==
+      Seq((-500L, "v-500")))
   }
 
   test("distributed bucket compaction collapses segments and drops tombstones physically") {
