@@ -518,8 +518,7 @@ class CassandraLikeTable(
       // read only inside each doomed key's own index window.
       val counterTable = tableProps.get(Options.CounterMerge).exists(_.toBoolean)
       val merge = new CellStore.BucketMergeIterator(dir, bucket,
-        counterMerge = counterTable,
-        lookupKeys = ks)
+        KeyWindows.points(ks), counterMerge = counterTable)
       val doomed = try {
         merge.map { c =>
           // a CERTIFIED tombstone carries its victim's value bytes: the
@@ -595,6 +594,22 @@ class CassandraLikeTable(
 
   def opt(options: Map[String, String], key: String): Option[String] =
     Options.effective(options, tableProps, key)
+
+  /** The buckets key windows can touch: a finite key set routes to its
+    * own buckets, and on the RANGE layout windows cover CONTIGUOUS buckets
+    * — bucket b spans [bounds(b-1), bounds(b)), so a key range at 100 TB
+    * touches O(covered buckets) of the ring, not all of it; a hash-layout
+    * range keeps every bucket (its keys scatter across all of them). */
+  private[cassandralike] def bucketsMeeting(keys: KeyWindows,
+      options: Map[String, String]): Int => Boolean = {
+    val buckets = opt(options, Options.Buckets)
+      .map(_.toInt).getOrElse(Options.DefaultBuckets)
+    if (keys.points != null)
+      keys.points.map(TokenRing.bucket(_, buckets, rangeBounds)).toSet
+    else if (rangeBounds == null) _ => !keys.isEmpty
+    else b => keys.meets(if (b == 0) null else rangeBounds(b - 1),
+      if (b == rangeBounds.length) null else rangeBounds(b), bInclusive = false)
+  }
 }
 
 /** Scan construction with projection pushdown (P1,
@@ -652,11 +667,6 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       n: Int): Boolean = {
     import org.apache.spark.sql.connector.expressions.SortDirection
     if (aggs.nonEmpty) return false
-    def byteOrdered(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case org.apache.spark.sql.types.StringType |
-        org.apache.spark.sql.types.BinaryType => true
-      case _ => false
-    }
     def dirOn(o: org.apache.spark.sql.connector.expressions.SortOrder,
         name: String, dir: SortDirection): Boolean = o.expression match {
       case nr: NamedReference =>
@@ -665,7 +675,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       case _ => false
     }
     val keyF = table.mapping.keyField
-    if (!byteOrdered(keyF.dataType) && !table.keyCodec.ordered) return false
+    if (!table.keyCodec.rangeOrdered) return false
     val reversed = Options.effective(options, table.tableProps,
       Options.SliceReversed).exists(_.toBoolean)
     // natural(dir): every order key follows `dir` on the mapping's
@@ -673,8 +683,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     def natural(dir: SortDirection): Boolean = {
       def colNatural(c: org.apache.spark.sql.connector.expressions.SortOrder): Boolean = {
         val colF = table.mapping.field(FieldRole.TransColumn)
-        (byteOrdered(colF.dataType) || table.colCodec.ordered) &&
-          dirOn(c, colF.name, dir)
+        table.colCodec.rangeOrdered && dirOn(c, colF.name, dir)
       }
       orders.toSeq match {
         case Seq(k) => dirOn(k, keyF.name, dir)
@@ -685,8 +694,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
           // three-key prefix is natural when every level is byte-ordered
           val subF = table.mapping.field(FieldRole.TransSubColumn)
           dirOn(k, keyF.name, dir) && colNatural(c) &&
-            (byteOrdered(subF.dataType) || table.subCodec.ordered) &&
-            dirOn(s, subF.name, dir)
+            table.subCodec.rangeOrdered && dirOn(s, subF.name, dir)
         case _ => false
       }
     }
@@ -2139,7 +2147,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
         if (table.mapping.transposed)
           MetadataAggReader.rangeVals(want, table.keyCodec,
             table.colCodec, table.mapping.field(FieldRole.TransColumn).name,
-            ctx.files, ctx.lo, ctx.hi, ctx.ks, ctx.colWin, ctx.colPts, ctx.subWin,
+            ctx.files, ctx.keys, ctx.cols, ctx.subs,
             valName = table.mapping.field(FieldRole.TransValue).name,
             netted = ctx.netted,
             subCodec = table.subCodec,
@@ -2149,7 +2157,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
               else null)
         else
           MetadataAggReader.regularRangeVals(want, table.keyCodec, ctx.files,
-            ctx.lo, ctx.hi, ctx.ks,
+            ctx.keys,
             colBytesOf =
               if (MetadataAggReader.regularColAggs(table.mapping, want))
                 MetadataAggReader.regularCellBytes(table.mapping, _)
@@ -2202,33 +2210,18 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     if (translated.exists(_.isEmpty)) return None
     val want = translated.flatten
     validatedRangeContext(want).flatMap { ctx =>
-      if (ctx.ks == null) return None // enumerable groups need pinned keys
-      val sortedKs = ctx.ks
-        .sortWith((a, b) => Codecs.compareBytes(a, b) < 0).toArray
-      val cLo = if (ctx.colWin == null) null else ctx.colWin._1
-      val cHi = if (ctx.colWin == null) null else ctx.colWin._2
-      val sLo = if (ctx.subWin == null) null else ctx.subWin._1
-      val sHi = if (ctx.subWin == null) null else ctx.subWin._2
+      val sortedKs = ctx.keys.points
+      if (sortedKs == null) return None // enumerable groups need pinned keys
+      import MetadataAggReader.{atPoints, extremalAtPoints, longExtreme}
       // netted stores serve grouped COUNTs and SUMs too (the per-bucket
       // netted shape gate in validatedRangeContext already rejected
       // extremals): a fully-deleted key nets to zero and emits no group,
-      // exactly like the fold
-      val totals = new Array[Long](sortedKs.length)
-      ctx.files.foreach { f =>
-        val perOpt =
-          if (ctx.netted) CellStore.nettedCountCellsAtPoints(f, sortedKs.toSeq,
-            colLo = cLo, colHi = cHi, colPoints = ctx.colPts,
-            subLo = sLo, subHi = sHi)
-          else Some(CellStore.countCellsAtPoints(f, sortedKs.toSeq,
-            colLo = cLo, colHi = cHi, colPoints = ctx.colPts,
-            subLo = sLo, subHi = sHi))
-        perOpt match {
-          case Some(per) =>
-            var i = 0
-            while (i < per.length) { totals(i) += per(i); i += 1 }
-          case None => return None // unclassifiable run under netting
-        }
-      }
+      // exactly like the fold; an unclassifiable run under netting declines
+      val totals = atPoints[Long](ctx.files, sortedKs, ctx.cols, ctx.subs)(
+        if (ctx.netted) CellStore.nettedCountCellsAtPoints _
+        else (f, p, a, b, c, d, e) =>
+          Some(CellStore.countCellsAtPoints(f, p, a, b, c, d, e)))(_ + _)
+        .getOrElse(return None)
       val wantSum = want.exists {
         case PushedAgg.Sum(_) => true
         case _ => false
@@ -2237,85 +2230,25 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       // demotes the WHOLE grouped answer to the fold
       val sums: Array[Long] =
         if (!wantSum) null
-        else {
-          val acc = new Array[Long](sortedKs.length)
-          try {
-            ctx.files.foreach { f =>
-              (if (ctx.netted) CellStore.nettedSumCellsAtPoints(f, sortedKs.toSeq,
-                colLo = cLo, colHi = cHi, colPoints = ctx.colPts,
-                subLo = sLo, subHi = sHi)
-              else CellStore.sumCellsAtPoints(f, sortedKs.toSeq,
-                colLo = cLo, colHi = cHi, colPoints = ctx.colPts,
-                subLo = sLo, subHi = sHi)) match {
-                case Some(per) =>
-                  var i = 0
-                  while (i < per.length) {
-                    acc(i) = Math.addExact(acc(i), per(i)); i += 1
-                  }
-                case None => return None
-              }
-            }
-          } catch { case _: ArithmeticException => return None }
-          acc
-        }
-      def colExtremals(wantMin: Boolean): Array[Array[Byte]] = {
-        val best = new Array[Array[Byte]](sortedKs.length)
-        ctx.files.foreach { f =>
-          val per = CellStore.extremalColsAtPoints(f, sortedKs.toSeq,
-            cLo, cHi, wantMin)
-          var i = 0
-          while (i < per.length) {
-            if (per(i) != null && (best(i) == null ||
-                (Codecs.compareBytes(per(i), best(i)) < 0) == wantMin))
-              best(i) = per(i)
-            i += 1
-          }
-        }
-        best
-      }
-      lazy val colMins = colExtremals(wantMin = true)
-      lazy val colMaxs = colExtremals(wantMin = false)
-      // per-key extremal SUB of the pinned (key, col) groups ("first/last
-      // sub-entry of each row's pinned column") — composite boundary seeks
-      def subExtremals(wantMin: Boolean): Array[Array[Byte]] = {
-        val best = new Array[Array[Byte]](sortedKs.length)
-        ctx.files.foreach { f =>
-          val per = CellStore.extremalSubsAtPoints(f, sortedKs.toSeq,
-            ctx.colPts, sLo, sHi, wantMin)
-          var i = 0
-          while (i < per.length) {
-            if (per(i) != null && (best(i) == null ||
-                (Codecs.compareBytes(per(i), best(i)) < 0) == wantMin))
-              best(i) = per(i)
-            i += 1
-          }
-        }
-        best
-      }
-      lazy val subMins = subExtremals(wantMin = true)
-      lazy val subMaxs = subExtremals(wantMin = false)
+        else atPoints[Long](ctx.files, sortedKs, ctx.cols, ctx.subs)(
+          if (ctx.netted) CellStore.nettedSumCellsAtPoints _
+          else CellStore.sumCellsAtPoints _)(Math.addExact).getOrElse(return None)
+      // per-key extremal col within the col windows, and extremal SUB of
+      // the pinned (key, col) groups ("first/last sub-entry of each row's
+      // pinned column") — composite seeks
+      def extremals(sub: Boolean, wantMin: Boolean): Array[Array[Byte]] =
+        extremalAtPoints(ctx.files, sortedKs, ctx.cols, ctx.subs, sub, wantMin)
+      lazy val colMins = extremals(sub = false, wantMin = true)
+      lazy val colMaxs = extremals(sub = false, wantMin = false)
+      lazy val subMins = extremals(sub = true, wantMin = true)
+      lazy val subMaxs = extremals(sub = true, wantMin = false)
       // per-key VALUE extremals ("per-user peak in the window"), from the
       // same composite interval positions; a missing-tail decline demotes
       // the whole grouped answer to the fold
-      def valExtremals(wantMin: Boolean): Array[java.lang.Long] = {
-        val best = new Array[java.lang.Long](sortedKs.length)
-        ctx.files.foreach { f =>
-          CellStore.extremalValuesAtPoints(f, sortedKs.toSeq,
-            colLo = cLo, colHi = cHi, colPoints = ctx.colPts,
-            subLo = sLo, subHi = sHi, wantMin = wantMin) match {
-            case Some(per) =>
-              var i = 0
-              while (i < per.length) {
-                if (per(i) != null && (best(i) == null ||
-                    (if (wantMin) per(i) < best(i) else per(i) > best(i))))
-                  best(i) = per(i)
-                i += 1
-              }
-            case None => return null // decline marker, checked below
-          }
-        }
-        best
-      }
+      def valExtremals(wantMin: Boolean): Array[java.lang.Long] =
+        atPoints[java.lang.Long](ctx.files, sortedKs, ctx.cols, ctx.subs)((f, p, a, b, c, d, e) =>
+          CellStore.extremalValuesAtPoints(f, p, a, b, c, d, e, wantMin))(
+          longExtreme(wantMin)).orNull // decline marker, checked below
       val wantValMin = want.exists {
         case PushedAgg.Min(c) => c == valN
         case _ => false
@@ -2364,9 +2297,8 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     * `netted` = at least one relevant bucket carries certified delete
     * epochs: the count arithmetic must subtract them per run. */
   private case class RangeCtx(files: Seq[java.nio.file.Path],
-      lo: Array[Byte], hi: Array[Byte], ks: Seq[Array[Byte]],
-      colWin: (Array[Byte], Array[Byte]), colPts: Seq[Array[Byte]],
-      subWin: (Array[Byte], Array[Byte]), netted: Boolean = false)
+      keys: KeyWindows, cols: KeyWindows, subs: KeyWindows,
+      netted: Boolean = false)
 
   /** Shared validation of the COMPLETE range paths: exact filter shapes,
     * then per-bucket run-level proofs over ONE directory listing,
@@ -2388,37 +2320,15 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
           table.keyCodec, pushed,
           k => Options.effective(options, table.tableProps, k))) return None
     }
-    val colWin =
-      if (!transposed) null
-      else MetadataAggReader.colWindowOf(table.mapping, table.colCodec, pushed)
-    val colPts =
-      if (!transposed) null
-      else MetadataAggReader.colPointsOf(table.mapping, table.colCodec, pushed)
-    val subWin =
-      if (!transposed || table.subCodec == null) null
-      else MetadataAggReader.subWindowOf(table.mapping, table.subCodec, pushed)
-    val keyN = table.mapping.keyField.name
-    val (lo, hi) = KeyLookupBounds(pushed, keyN, table.keyCodec, null, null)
-    val ks = KeyLookupBounds.keySet(pushed, keyN, table.keyCodec, lo, hi)
+    val (keys, cols, subs) = MetadataAggReader.windowsOf(table.mapping,
+      table.keyCodec, table.colCodec, table.subCodec, pushed)
     // a HUGE pushed IN must not stall planning on driver-side point
     // probes: decline complete and let the DISTRIBUTED partial readers
     // own it (each bucket probes the same points in parallel, bloom- and
     // window-pruned per run)
-    if (ks != null && ks.size > CellScanBuilder.MaxCompletePoints) return None
-    val buckets = Options.effective(options, table.tableProps, Options.Buckets)
-      .map(_.toInt).getOrElse(Options.DefaultBuckets)
-    val rb = table.rangeBounds
-    val relevant: Int => Boolean =
-      if (ks != null) {
-        val wanted = ks.map(k => TokenRing.bucket(k, buckets, rb)).toSet
-        wanted.contains _
-      } else if (rb != null) {
-        val envEmpty = lo != null && hi != null &&
-          Codecs.compareBytes(lo, hi) >= 0
-        b => !envEmpty &&
-          (lo == null || b == rb.length || Codecs.compareBytes(lo, rb(b)) < 0) &&
-          (hi == null || b == 0 || Codecs.compareBytes(rb(b - 1), hi) < 0)
-      } else _ => true
+    if (keys.points != null && keys.points.length > CellScanBuilder.MaxCompletePoints)
+      return None
+    val relevant = table.bucketsMeeting(keys, options)
     val byBucket = CellStore.allSegmentFiles(table.dir)
     val allFiles = Seq.newBuilder[java.nio.file.Path]
     var anyNetted = false
@@ -2448,8 +2358,8 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
               MetadataAggReader.nettedShapesOk(table.mapping, want,
                 k => Options.effective(options, table.tableProps, k)) &&
               (!transposed ||
-                (((colWin == null && colPts == null) || rec.colEntriesAll) &&
-                  (subWin == null || rec.subEntriesAll) &&
+                ((cols == null || rec.colEntriesAll) &&
+                  (subs == null || rec.subEntriesAll) &&
                   // Count(value) needs the VMMX non-null proof
                   (!want.exists {
                     case PushedAgg.Count(c) =>
@@ -2461,21 +2371,20 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
                 rec.colValsAll)
           } else if (transposed)
             MetadataAggReader.rangeConditionsOkB(rec, want,
-              needColEntries = colWin != null || colPts != null ||
+              needColEntries = cols != null ||
                 MetadataAggReader.wantsColExtremal(table.mapping, want) ||
                 MetadataAggReader.wantsSubExtremal(table.mapping, want),
-              needSubEntries = subWin != null ||
+              needSubEntries = subs != null ||
                 MetadataAggReader.wantsSubExtremal(table.mapping, want),
               valName = table.mapping.field(FieldRole.TransValue).name)
           else MetadataAggReader.regularRangeConditionsOkB(rec, want,
-            pointsOnly = ks != null,
+            pointsOnly = keys.points != null,
             colAggs = MetadataAggReader.regularColAggs(table.mapping, want))
         if (!ok) return None
         allFiles ++= files
       }
     }
-    Some(RangeCtx(allFiles.result(), lo, hi, ks, colWin, colPts, subWin,
-      netted = anyNetted))
+    Some(RangeCtx(allFiles.result(), keys, cols, subs, netted = anyNetted))
   }
 
   override def pushAggregation(
@@ -2581,16 +2490,6 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     // byte form is order-preserving/injective (gated in the reader).
     val subName =
       if (m.hasSubColumn) Some(m.field(FieldRole.TransSubColumn).name) else None
-    // Key RANGE pushdown needs encoded-byte order == SQL value order
-    // (KeyCodec.rangeOrdered: the 'ordered' integral encoding, or
-    // string/binary keys whose SQL order is byte order) — then a pushed
-    // </>= on the ROW KEY tightens the merge range and the run indexes
-    // SEEK past the excluded prefix/suffix instead of scanning the whole
-    // bucket and re-filtering post-decode (the same machinery key
-    // equality already drives, KeyLookupBounds).
-    val rangeKey = table.keyCodec.rangeOrdered
-    def keyRange(c: String, v: Any): Boolean =
-      c == keyName && rangeKey && v != null
     def sliceable(c: String): Boolean =
       sliceName.contains(c) || subName.contains(c)
     def pushable(f: Filter): Boolean = f match {
@@ -2600,17 +2499,21 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       // non-matching cells of a wide row are dropped before they become
       // rows and Spark plants no re-filter above the scan
       case In(c, _) => c == keyName || sliceable(c)
-      case GreaterThan(c, v) => keyRange(c, v) || sliceable(c)
-      case GreaterThanOrEqual(c, v) => keyRange(c, v) || sliceable(c)
-      case LessThan(c, v) => keyRange(c, v) || sliceable(c)
-      case LessThanOrEqual(c, v) => keyRange(c, v) || sliceable(c)
+      // Key RANGE pushdown: a pushed </>= on the ROW KEY becomes byte
+      // windows (KeyWindows: one interval under an order-preserving form,
+      // at most two for a `bytes` int/long/timestamp key) that tighten the
+      // merge and let the run indexes SEEK past everything outside them,
+      // instead of scanning the whole bucket and re-filtering post-decode
+      case _: GreaterThan | _: GreaterThanOrEqual | _: LessThan | _: LessThanOrEqual =>
+        val c = f.references.head
+        (c == keyName && KeyWindows.ranges(table.keyCodec, f)) || sliceable(c)
       // LIKE-prefix on a STRING row key (round 15): `key LIKE 'p%'` IS the
       // key range [p, prefixSucc(p)) — string keys marshal to their UTF-8
       // bytes (identity), whose unsigned byte order is SQL string order
       // and under which value-prefix containment is byte-prefix
       // containment — so the merge bounds tighten and the run indexes
       // seek past everything outside the prefix window
-      // (KeyLookupBounds), exactly like pushed </>= on the key.
+      // (KeyWindows), exactly like pushed </>= on the key.
       // FilterEval re-applies the predicate per row (exact).
       // Round 16 extends the same fold to STRING CLUSTERING and SUB
       // columns (the reference's own P2 slice operator over the
@@ -3068,17 +2971,11 @@ class CellScan(
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     import org.apache.spark.sql.connector.expressions.{Expressions => E,
       NullOrdering, SortDirection}
-    def byteOrdered(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case org.apache.spark.sql.types.StringType |
-        org.apache.spark.sql.types.BinaryType => true
-      case _ => false
-    }
     if (aggs.nonEmpty) return Array.empty
     val keyF = table.mapping.keyField
     // ordered key encoding makes integral byte order == numeric order, so
     // numeric-keyed stores claim the same ordering string/binary keys do
-    val keyOrdered = byteOrdered(keyF.dataType) || table.keyCodec.ordered
-    if (!keyOrdered || !required.fieldNames.contains(keyF.name))
+    if (!table.keyCodec.rangeOrdered || !required.fieldNames.contains(keyF.name))
       return Array.empty
     val keyOrder = E.sort(E.column(keyF.name), SortDirection.ASCENDING,
       NullOrdering.NULLS_FIRST)
@@ -3088,7 +2985,7 @@ class CellScan(
         val colF = table.mapping.field(FieldRole.TransColumn)
         val reversed = table.opt(options, Options.SliceReversed)
           .exists(_.toBoolean)
-        if ((byteOrdered(colF.dataType) || table.colCodec.ordered) && !reversed &&
+        if (table.colCodec.rangeOrdered && !reversed &&
             required.fieldNames.contains(colF.name))
           Some(E.sort(E.column(colF.name), SortDirection.ASCENDING,
             NullOrdering.NULLS_FIRST))
@@ -3100,8 +2997,7 @@ class CellScan(
       if (colOrder.isEmpty || !table.mapping.hasSubColumn) None
       else {
         val subF = table.mapping.field(FieldRole.TransSubColumn)
-        if ((byteOrdered(subF.dataType) || table.subCodec.ordered) &&
-            required.fieldNames.contains(subF.name))
+        if (table.subCodec.rangeOrdered && required.fieldNames.contains(subF.name))
           Some(E.sort(E.column(subF.name), SortDirection.ASCENDING,
             NullOrdering.NULLS_FIRST))
         else None
@@ -3274,25 +3170,15 @@ class CellScan(
         Seq(PushedAgg.CountStar), table.keyCodec, table.colCodec,
         table.subCodec, filters)) None
       else {
-        val keyN = table.mapping.keyField.name
-        val (lo, hi) = KeyLookupBounds(filters, keyN, table.keyCodec, null, null)
-        val ks = KeyLookupBounds.keySet(filters, keyN, table.keyCodec, lo, hi)
-        if (ks == null || ks.size > MaxStatPoints) None
+        val (keys, cols, subs) = MetadataAggReader.windowsOf(table.mapping,
+          table.keyCodec, table.colCodec, table.subCodec, filters)
+        if (keys.points == null || keys.points.length > MaxStatPoints) None
         else {
-          val colWin = MetadataAggReader.colWindowOf(table.mapping,
-            table.colCodec, filters)
-          val colPts = MetadataAggReader.colPointsOf(table.mapping,
-            table.colCodec, filters)
-          val subWin =
-            if (table.subCodec == null) null
-            else MetadataAggReader.subWindowOf(table.mapping, table.subCodec,
-              filters)
           val provable = plannedBuckets.forall { b =>
             val rec = CellStore.bucketStats(table.dir, b,
               segmentsByBucket.getOrElse(b, Nil))
             MetadataAggReader.rangeConditionsOkB(rec, Seq(PushedAgg.CountStar),
-              needColEntries = colWin != null || colPts != null,
-              needSubEntries = subWin != null)
+              needColEntries = cols != null, needSubEntries = subs != null)
           }
           if (!provable) None
           else {
@@ -3300,7 +3186,7 @@ class CellScan(
             MetadataAggReader.rangeVals(Seq(PushedAgg.CountStar),
               table.keyCodec, table.colCodec,
               table.mapping.field(FieldRole.TransColumn).name,
-              files, lo, hi, ks, colWin, colPts, subWin)
+              files, keys, cols, subs)
               .map(_.head.asInstanceOf[Long])
           }
         }
@@ -3323,10 +3209,8 @@ class CellScan(
       else if (!CassandraLikeTable.plainView(
         k => table.opt(options, k), table.tableProps)) None
       else {
-        val keyN = table.mapping.keyField.name
-        val (lo, hi) = KeyLookupBounds(filters, keyN, table.keyCodec, null, null)
-        val ks = KeyLookupBounds.keySet(filters, keyN, table.keyCodec, lo, hi)
-        if (ks == null || ks.size <= MaxStatPoints) None
+        val ks = KeyWindows.of(table.mapping.keyField.name, table.keyCodec, filters).points
+        if (ks == null || ks.length <= MaxStatPoints) None
         else plannedBuckets.foldLeft(Option((0L, 0L))) { (acc, b) =>
           acc.flatMap { case (dk, cls) =>
             CellStore.readBucketStats(table.dir, b,
@@ -3357,42 +3241,14 @@ class CellScan(
     }
   }
 
+  /** The pushed key windows of the scan (planning-time + runtime). */
+  private def keyWindows: KeyWindows =
+    KeyWindows.of(table.mapping.keyField.name, table.keyCodec, effectiveFilters)
+
   private def plannedBuckets: Seq[Int] = {
     val buckets = table.opt(options, Options.Buckets)
       .map(_.toInt).getOrElse(Options.DefaultBuckets)
-    val keyName = table.mapping.keyField.name
-    // bucket pruning from key-equality predicates (planning-time + runtime)
-    val keyValues: Option[Seq[Any]] = {
-      val vs = effectiveFilters.collect {
-        case EqualTo(c, v) if c == keyName => Seq(v)
-        case In(c, vs0) if c == keyName => vs0.toSeq
-      }
-      if (vs.isEmpty) None
-      else Some(vs.reduce(_ intersect _)) // AND of pushed key predicates
-    }
-    val wanted: Option[Set[Int]] = keyValues.map(_.map { v =>
-      val cat = CatalystTypeConverters.convertToCatalyst(v)
-      TokenRing.bucket(table.keyCodec.encode(cat), buckets, table.rangeBounds)
-    }.toSet)
-    // RANGE layout: the pushed key envelope (equality/IN always; ranges on
-    // an order-preserving encoding) prunes to the covered CONTIGUOUS
-    // buckets — bucket b spans [bounds(b-1), bounds(b)), so a key range at
-    // 100 TB touches O(covered buckets) of the ring, not all of it
-    val rb = table.rangeBounds
-    val (envLo, envHi) =
-      if (rb == null) (null: Array[Byte], null: Array[Byte])
-      else KeyLookupBounds(effectiveFilters, keyName, table.keyCodec, null, null)
-    val envEmpty = envLo != null && envHi != null &&
-      Codecs.compareBytes(envLo, envHi) >= 0
-    def rangeKeeps(b: Int): Boolean =
-      rb == null || (!envEmpty &&
-        (envLo == null || b == rb.length ||
-          Codecs.compareBytes(envLo, rb(b)) < 0) &&
-        (envHi == null || b == 0 ||
-          Codecs.compareBytes(rb(b - 1), envHi) < 0))
-    (0 until buckets)
-      .filter(b => wanted.forall(_.contains(b)))
-      .filter(rangeKeeps)
+    (0 until buckets).filter(table.bucketsMeeting(keyWindows, options))
       .filter(b => segmentsByBucket.get(b).exists(_.nonEmpty))
   }
 
@@ -3436,24 +3292,14 @@ class CellScan(
         ps.map(_.copy(aggStats = true))
       else ps
     }
-    // Planning-time SUB-SPLIT pruning from the pushed key envelope: a key
-    // equality/IN (or a range, on an order-preserving encoding) that misses
-    // a sub-split's [lower, upper) entirely drops that partition here —
+    // Planning-time SUB-SPLIT pruning from the pushed key windows: a
+    // partition whose [lower, upper) misses every window is dropped here —
     // bucket pruning catches whole buckets, but a big bucket planned as N
     // key-range sub-splits would otherwise still schedule N-1 empty tasks
-    // for a point lookup. Purely an optimization: the readers' own bound
+    // for a point lookup. Purely an optimization: the readers' own window
     // intersection already makes the dropped scans empty.
-    val (envLo, envHi) = KeyLookupBounds(effectiveFilters,
-      table.mapping.keyField.name, table.keyCodec, null, null)
-    val parts =
-      if (envLo != null && envHi != null &&
-          Codecs.compareBytes(envLo, envHi) >= 0) Nil // provably-empty scan
-      else planned.filter { p =>
-        (envLo == null || p.upper == null ||
-          Codecs.compareBytes(envLo, p.upper) < 0) &&
-        (envHi == null || p.lower == null ||
-          Codecs.compareBytes(p.lower, envHi) < 0)
-      }
+    val keys = keyWindows
+    val parts = planned.filter(p => keys.meets(p.lower, p.upper, bInclusive = false))
     // With aggregates pushed ungrouped, Spark's final combine is
     // SUM/MIN/MAX over the partial rows — over an EMPTY table that must
     // still see one partial (count = 0), or sum() of nothing would turn
@@ -4045,11 +3891,12 @@ object MetadataAggReader {
     *  - transposed/super mappings only (a visible row IS one cell
     *    address); a regular mapping's rows-per-key varies with missing
     *    cells, which positions can't see;
-    *  - every pushed filter is a key equality/IN (point envelopes are
-    *    exact under any injective encoding) or a key comparison under an
-    *    order-preserving encoding ([[KeyCodec.rangeOrdered]] — exactly
-    *    when [[KeyLookupBounds]] tightens the envelope; a non-ranged
-    *    comparison would leave the envelope wider than the predicate);
+    *  - every pushed filter is a key equality/IN (point windows are
+    *    exact under any injective encoding) or a key comparison that
+    *    [[KeyWindows]] turns into exact byte windows (an order-preserving
+    *    form, or a `bytes` int/long/timestamp key — counted window by
+    *    window; any other comparison would leave the windows wider than
+    *    the predicate);
     *  - zero tombstones, pairwise-disjoint runs AND per-run
     *    distinctAddrs == cells ([[CellStore.RunStats]]) — every cell in
     *    the envelope is then exactly one LWW-visible row. Counter
@@ -4090,9 +3937,10 @@ object MetadataAggReader {
     if (!rangeShapesOk(mapping, aggs, keyCodec, colCodec, subCodec, filters,
         sumOk = sumEligible(mapping, opt)))
       return None
-    val colWin = colWindowOf(mapping, colCodec, filters)
-    val colPts = colPointsOf(mapping, colCodec, filters)
-    val subWin = if (subCodec == null) null else subWindowOf(mapping, subCodec, filters)
+    // the key windows ∩ the partition's own key slice (sub-splits
+    // partition the bucket's keys)
+    val (keys0, cols, subs) = windowsOf(mapping, keyCodec, colCodec, subCodec, filters)
+    val keys = keys0.within(part.lower, part.upper)
     val valN = mapping.field(FieldRole.TransValue).name
     val netted = !rec.tombstoneFree
     if (netted) {
@@ -4100,27 +3948,22 @@ object MetadataAggReader {
       // narrowing additionally needs per-entry bytes on EVERY run (a
       // certified epoch carries its victims' col/sub bytes), and
       // Count(value) needs the VMMX non-null proof
-      if ((colWin != null || colPts != null) && !rec.colEntriesAll) return None
-      if (subWin != null && !rec.subEntriesAll) return None
+      if (cols != null && !rec.colEntriesAll) return None
+      if (subs != null && !rec.subEntriesAll) return None
       val wantsValCount = aggs.exists {
         case PushedAgg.Count(c) => c == valN
         case _ => false
       }
       if (wantsValCount && !rec.valRangeAll) return None
     } else if (!rangeConditionsOkB(rec, aggs,
-        needColEntries = colWin != null || colPts != null ||
+        needColEntries = cols != null ||
           wantsColExtremal(mapping, aggs) || wantsSubExtremal(mapping, aggs),
-        needSubEntries = subWin != null || wantsSubExtremal(mapping, aggs),
+        needSubEntries = subs != null || wantsSubExtremal(mapping, aggs),
         valName = valN))
       return None
-    // envelope ∩ the partition's own key slice (sub-splits partition the
-    // bucket's keys; KeyLookupBounds clamps a crossed range to empty)
-    val keyN = mapping.keyField.name
-    val (lo, hi) = KeyLookupBounds(filters, keyN, keyCodec, part.lower, part.upper)
-    val ks = KeyLookupBounds.keySet(filters, keyN, keyCodec, lo, hi)
     rangeVals(aggs, keyCodec, colCodec,
       mapping.field(FieldRole.TransColumn).name,
-      files, lo, hi, ks, colWin, colPts, subWin, valName = valN,
+      files, keys, cols, subs, valName = valN,
       netted = netted,
       subCodec = subCodec,
       subName =
@@ -4144,54 +3987,21 @@ object MetadataAggReader {
       rec: CellStore.BucketStat): Option[PartitionReader[InternalRow]] = {
     val keyCodec = KeyCodec.of(mapping.keyField.dataType, opt)
     if (!regularRangeShapesOk(mapping, aggs, keyCodec, filters, opt)) return None
-    val keyN = mapping.keyField.name
-    val (lo, hi) = KeyLookupBounds(filters, keyN, keyCodec, part.lower, part.upper)
-    val ks = KeyLookupBounds.keySet(filters, keyN, keyCodec, lo, hi)
+    val keys = KeyWindows.of(mapping.keyField.name, keyCodec, filters)
+      .within(part.lower, part.upper)
     val colAggs = regularColAggs(mapping, aggs)
     val netted = !rec.tombstoneFree
     if (netted) {
       // [[create]] pre-proved nettedOk + counts-only shapes; per-column
       // netted counts additionally need the CVAL tails on every run
       if (colAggs && !rec.colValsAll) return None
-    } else if (!regularRangeConditionsOkB(rec, aggs, pointsOnly = ks != null,
-        colAggs = colAggs))
+    } else if (!regularRangeConditionsOkB(rec, aggs,
+        pointsOnly = keys.points != null, colAggs = colAggs))
       return None
-    regularRangeVals(aggs, keyCodec, files, lo, hi, ks,
+    regularRangeVals(aggs, keyCodec, files, keys,
       colBytesOf = if (colAggs) regularCellBytes(mapping, _) else _ => null,
       netted = netted)
       .map(vals => answerReader(InternalRow.fromSeq(vals)))
-  }
-
-  /** The EXACT half-open clustering-column byte window [lo, hi) of the
-    * pushed col comparisons, or null when none are pushed. Unlike the
-    * scan's pruning window (an inclusive over-approximation re-filtered
-    * downstream) this must BE the predicate: succ() turns each inclusive
-    * byte form into its matching half-open bound, sound only under an
-    * order-preserving col encoding ([[rangeShapesOk]] gates on it). */
-  private[cassandralike] def colWindowOf(mapping: ColumnMapping,
-      colCodec: KeyCodec,
-      filters: Array[Filter]): (Array[Byte], Array[Byte]) = {
-    val colN = mapping.field(FieldRole.TransColumn).name
-    def enc(v: Any): Array[Byte] = colCodec.encode(
-      org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(v))
-    var lo: Array[Byte] = null
-    var hi: Array[Byte] = null
-    def tightenLo(b: Array[Byte]): Unit =
-      if (lo == null || Codecs.compareBytes(b, lo) > 0) lo = b
-    def tightenHi(b: Array[Byte]): Unit =
-      if (hi == null || Codecs.compareBytes(b, hi) < 0) hi = b
-    filters.foreach {
-      case GreaterThan(c, v) if c == colN && v != null =>
-        tightenLo(KeyLookupBounds.succ(enc(v)))
-      case GreaterThanOrEqual(c, v) if c == colN && v != null => tightenLo(enc(v))
-      case LessThan(c, v) if c == colN && v != null => tightenHi(enc(v))
-      case LessThanOrEqual(c, v) if c == colN && v != null =>
-        tightenHi(KeyLookupBounds.succ(enc(v)))
-      case _ => ()
-    }
-    if (lo != null && hi != null && Codecs.compareBytes(lo, hi) > 0) (hi, hi)
-    else if (lo == null && hi == null) null
-    else (lo, hi)
   }
 
   /** Static shape half of the range-aggregate gate, shared by the
@@ -4220,6 +4030,7 @@ object MetadataAggReader {
     val colN = colF.name
     val subN = if (subF == null) null else subF.name
     val valN = mapping.field(FieldRole.TransValue).name
+    // MIN/MAX from byte extremes need byte order == value order
     val ranged = keyCodec.rangeOrdered
     val colRanged = colCodec.rangeOrdered
     val subRanged = subCodec != null && subCodec.rangeOrdered
@@ -4274,22 +4085,8 @@ object MetadataAggReader {
       case PushedAgg.Sum(c) => sumOk && c == valN
       case _ => false
     }
-    // a col POINT set needs an injective byte form (same set colLookup
-    // admits: the ordered encoding normalizes; these plain forms are
-    // byte-injective already)
-    val colInjective = colCodec.ordered || (colF.dataType match {
-      case org.apache.spark.sql.types.StringType |
-        org.apache.spark.sql.types.BinaryType |
-        org.apache.spark.sql.types.BooleanType |
-        org.apache.spark.sql.types.DateType |
-        org.apache.spark.sql.types.TimestampType |
-        org.apache.spark.sql.types.LongType |
-        org.apache.spark.sql.types.IntegerType |
-        org.apache.spark.sql.types.ShortType |
-        org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    })
-    val colPinned = keyPinned && colInjective && filters.exists {
+    // a col POINT set needs an injective byte form
+    val colPinned = keyPinned && colCodec.injective && filters.exists {
       case EqualTo(c, v) => c == colN && v != null
       case In(c, vs) => c == colN && vs != null && vs.nonEmpty
       case _ => false
@@ -4313,68 +4110,116 @@ object MetadataAggReader {
       case In(c, vs) =>
         (c == keyN || (c == colN && colPinned)) &&
           vs != null && vs.nonEmpty && vs.forall(_ != null)
-      case GreaterThan(c, v) =>
-        (c == keyN && ranged || c == colN && colRanged && keyPinned ||
-          c == subN && subRanged && colPinned) && v != null
-      case GreaterThanOrEqual(c, v) =>
-        (c == keyN && ranged || c == colN && colRanged && keyPinned ||
-          c == subN && subRanged && colPinned) && v != null
-      case LessThan(c, v) =>
-        (c == keyN && ranged || c == colN && colRanged && keyPinned ||
-          c == subN && subRanged && colPinned) && v != null
-      case LessThanOrEqual(c, v) =>
-        (c == keyN && ranged || c == colN && colRanged && keyPinned ||
-          c == subN && subRanged && colPinned) && v != null
-      case _ => false
+      // comparisons: exact byte windows ([[KeyWindows]]) on the key, on
+      // the col under pinned keys, on the sub under pinned (key, col)s
+      case f =>
+        val c = f.references.headOption.orNull
+        (c == keyN && KeyWindows.ranges(keyCodec, f)) ||
+          (c == colN && keyPinned && KeyWindows.ranges(colCodec, f)) ||
+          (c == subN && colPinned && KeyWindows.ranges(subCodec, f))
     }
   }
 
-  /** The EXACT clustering-column point set pinned by the filters (the
-    * intersection of col equality/IN conjuncts, encoded), or null when
-    * none are pushed — [[KeyLookupBounds.keySet]]'s col twin. */
-  private[cassandralike] def colPointsOf(mapping: ColumnMapping,
-      colCodec: KeyCodec, filters: Array[Filter]): Seq[Array[Byte]] = {
-    val colN = mapping.field(FieldRole.TransColumn).name
-    val sets = filters.flatMap {
-      case EqualTo(c, v) if c == colN && v != null => Some(Seq(v))
-      case In(c, vs) if c == colN && vs != null && vs.nonEmpty =>
-        Some(vs.toSeq.filter(_ != null))
-      case _ => None
-    }.map(_.map(v => colCodec.encode(
-      org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .convertToCatalyst(v)).toSeq).toSet)
-    if (sets.isEmpty) null
-    else sets.reduce(_ intersect _).toSeq.map(_.toArray)
-      .sortWith((a, b) => Codecs.compareBytes(a, b) < 0)
+  /** The EXACT key, clustering-column and sub-column windows of filters
+    * the shape gates admitted ([[KeyWindows]]); the col/sub windows are
+    * null when no filter restricts that field. */
+  private[cassandralike] def windowsOf(mapping: ColumnMapping,
+      keyCodec: KeyCodec, colCodec: KeyCodec, subCodec: KeyCodec,
+      filters: Array[Filter]): (KeyWindows, KeyWindows, KeyWindows) = {
+    def restricting(role: FieldRole, codec: KeyCodec): KeyWindows =
+      if (codec == null) null
+      else {
+        val w = KeyWindows.of(mapping.field(role).name, codec, filters)
+        if (w.isAll) null else w
+      }
+    (KeyWindows.of(mapping.keyField.name, keyCodec, filters),
+      restricting(FieldRole.TransColumn, colCodec),
+      restricting(FieldRole.TransSubColumn, subCodec))
   }
 
-  /** The EXACT half-open sub-column byte window of the pushed sub
-    * comparisons, or null — [[colWindowOf]]'s sub twin. */
-  private[cassandralike] def subWindowOf(mapping: ColumnMapping,
-      subCodec: KeyCodec,
-      filters: Array[Filter]): (Array[Byte], Array[Byte]) = {
-    if (!mapping.hasSubColumn) return null
-    val subN = mapping.field(FieldRole.TransSubColumn).name
-    def enc(v: Any): Array[Byte] = subCodec.encode(
-      org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(v))
-    var lo: Array[Byte] = null
-    var hi: Array[Byte] = null
-    def tightenLo(b: Array[Byte]): Unit =
-      if (lo == null || Codecs.compareBytes(b, lo) > 0) lo = b
-    def tightenHi(b: Array[Byte]): Unit =
-      if (hi == null || Codecs.compareBytes(b, hi) < 0) hi = b
-    filters.foreach {
-      case GreaterThan(c, v) if c == subN && v != null =>
-        tightenLo(KeyLookupBounds.succ(enc(v)))
-      case GreaterThanOrEqual(c, v) if c == subN && v != null => tightenLo(enc(v))
-      case LessThan(c, v) if c == subN && v != null => tightenHi(enc(v))
-      case LessThanOrEqual(c, v) if c == subN && v != null =>
-        tightenHi(KeyLookupBounds.succ(enc(v)))
-      case _ => ()
+  /** The lesser (or, for a max, greater) byte form; null = none. */
+  private[cassandralike] def byteExtreme(wantMin: Boolean)(a: Array[Byte],
+      b: Array[Byte]): Array[Byte] =
+    if (a == null) b
+    else if (b == null || (Codecs.compareBytes(a, b) < 0) == wantMin) a else b
+
+  /** The lesser (or, for a max, greater) value; null = none. */
+  private[cassandralike] def longExtreme(wantMin: Boolean)(a: java.lang.Long,
+      b: java.lang.Long): java.lang.Long =
+    if (a == null) b else if (b == null || (a < b) == wantMin) a else b
+
+  /** One positional probe per file and per (column window × sub window)
+    * pair, folded per point by `merge`: the windows are disjoint, so counts
+    * and sums add and extremes reduce. A column POINT set restricts by
+    * membership instead; an EMPTY window set probes nothing, so every
+    * point keeps the zero (null) it starts from. None = a probe declined
+    * or a sum overflowed. */
+  private[cassandralike] def atPoints[T: scala.reflect.ClassTag](
+      files: Seq[java.nio.file.Path],
+      ks: Array[Array[Byte]], cols: KeyWindows, subs: KeyWindows)(
+      probe: (java.nio.file.Path, Seq[Array[Byte]], Array[Byte], Array[Byte],
+        Seq[Array[Byte]], Array[Byte], Array[Byte]) => Option[Array[T]])(
+      merge: (T, T) => T): Option[Array[T]] = {
+    val acc = new Array[T](ks.length)
+    val colPts: Seq[Array[Byte]] =
+      if (cols == null || cols.points == null) null else cols.points.toSeq
+    val none = Seq[(Array[Byte], Array[Byte])]((null, null))
+    val colWins =
+      if (cols == null) none
+      else if (cols.isEmpty) Nil // an empty point set too: nothing to probe
+      else if (colPts != null) none
+      else cols.spans.toSeq
+    val subWins = if (subs == null) none else subs.spans.toSeq
+    try {
+      for (f <- files; (cLo, cHi) <- colWins; (sLo, sHi) <- subWins)
+        probe(f, ks.toSeq, cLo, cHi, colPts, sLo, sHi) match {
+          case Some(per) =>
+            var i = 0
+            while (i < per.length) { acc(i) = merge(acc(i), per(i)); i += 1 }
+          case None => return None
+        }
+      Some(acc)
+    } catch { case _: ArithmeticException => None }
+  }
+
+  /** Per-point extremal clustering columns (or, with `sub`, extremal
+    * sub-columns of the pinned col points) inside the col/sub windows,
+    * reduced window by window through [[atPoints]]; null = none. */
+  private[cassandralike] def extremalAtPoints(files: Seq[java.nio.file.Path],
+      ks: Array[Array[Byte]], cols: KeyWindows, subs: KeyWindows,
+      sub: Boolean, wantMin: Boolean): Array[Array[Byte]] =
+    atPoints[Array[Byte]](files, ks, cols, subs)((f, p, cLo, cHi, cPts, sLo, sHi) =>
+      Some(if (sub) CellStore.extremalSubsAtPoints(f, p, cPts, sLo, sHi, wantMin)
+        else CellStore.extremalColsAtPoints(f, p, cLo, cHi, wantMin)))(
+      byteExtreme(wantMin)).get
+
+  /** One answer per (file, key window), computed as consumed, so a
+    * decline stops the probes. */
+  private[cassandralike] def perSpan[T](files: Seq[java.nio.file.Path],
+      keys: KeyWindows)(
+      f: (java.nio.file.Path, Array[Byte], Array[Byte]) => T): Iterator[T] =
+    for (file <- files.iterator; (lo, hi) <- keys.spans.iterator) yield f(file, lo, hi)
+
+  /** The sum of per-span answers; None when one declined or it overflows. */
+  private[cassandralike] def total(xs: Iterator[Option[Long]]): Option[Long] = {
+    var t = 0L
+    try xs.foreach {
+      case Some(x) => t = Math.addExact(t, x)
+      case None => return None
+    } catch { case _: ArithmeticException => return None }
+    Some(t)
+  }
+
+  /** The extreme of per-span value extremes (Some(None) = no value);
+    * None when one span declined. */
+  private[cassandralike] def valueExtreme(wantMin: Boolean)(
+      xs: Iterator[Option[Option[Long]]]): Option[Option[Long]] = {
+    var best: java.lang.Long = null
+    xs.foreach {
+      case Some(v) => best = longExtreme(wantMin)(best, v.map(Long.box).orNull)
+      case None => return None
     }
-    if (lo != null && hi != null && Codecs.compareBytes(lo, hi) > 0) (hi, hi)
-    else if (lo == null && hi == null) null
-    else (lo, hi)
+    Some(Option(best).map(_.longValue))
   }
 
   /** Static value gate of the metadata SUM paths: a transposed mapping
@@ -4491,225 +4336,87 @@ object MetadataAggReader {
       case EqualTo(c, v) => c == keyN && v != null
       case In(c, vs) =>
         c == keyN && vs != null && vs.nonEmpty && vs.forall(_ != null)
-      case GreaterThan(c, v) => c == keyN && ranged && v != null
-      case GreaterThanOrEqual(c, v) => c == keyN && ranged && v != null
-      case LessThan(c, v) => c == keyN && ranged && v != null
-      case LessThanOrEqual(c, v) => c == keyN && ranged && v != null
-      case _ => false
+      case f => f.references.sameElements(Array(keyN)) && KeyWindows.ranges(keyCodec, f)
     }
   }
 
   /** The range-aggregate values over `files` (one bucket for the partial
     * readers, the whole store for complete pushdown) within the key
-    * envelope [lo, hi) or point set `ks` — conditions already validated
-    * by the caller. Per-point presence counts (byte-sorted, one index
-    * parse per surviving run per file) serve COUNT and MIN/MAX alike:
-    * the smallest/largest PRESENT point is the envelope's extremal key.
-    * SUM(value) folds the VSUM positional sums; MIN/MAX of the clustering
-    * column reduce the per-key extremal seeks. None = a dynamic decline
-    * (missing VSUM tail on a consulted run, or Long overflow) — the
-    * caller falls back to the cell fold, which reproduces Spark's own
-    * overflow semantics. */
+    * windows `keys` — a finite point set, or ranges summed window by
+    * window — conditions already validated by the caller. Per-point
+    * presence counts (byte-sorted, one index parse per surviving run per
+    * file) serve COUNT and MIN/MAX alike: the smallest/largest PRESENT
+    * point is the windows' extremal key. SUM(value) folds the VSUM
+    * positional sums; MIN/MAX of the clustering column reduce the per-key
+    * extremal seeks. None = a dynamic decline (missing VSUM tail on a
+    * consulted run, or Long overflow) — the caller falls back to the cell
+    * fold, which reproduces Spark's own overflow semantics. */
   private[cassandralike] def rangeVals(
       aggs: Seq[PushedAgg], keyCodec: KeyCodec,
       colCodec: KeyCodec, colName: String,
       files: Seq[java.nio.file.Path],
-      lo: Array[Byte], hi: Array[Byte],
-      ks: Seq[Array[Byte]],
-      colWin: (Array[Byte], Array[Byte]) = null,
-      colPoints: Seq[Array[Byte]] = null,
-      subWin: (Array[Byte], Array[Byte]) = null,
+      keys: KeyWindows,
+      cols: KeyWindows = null,
+      subs: KeyWindows = null,
       valName: String = null,
       netted: Boolean = false,
       subCodec: KeyCodec = null, subName: String = null): Option[Seq[Any]] = {
+    val ks = keys.points
     // col/sub restrictions are only reachable with a pinned key set, and
     // a sub window only inside pinned cols (rangeShapesOk)
-    require((colWin == null && colPoints == null && subWin == null) || ks != null,
+    require((cols == null && subs == null) || ks != null,
       "col/sub restriction without a key set")
-    require(subWin == null || colPoints != null, "sub window without col points")
-    lazy val sortedKs: Array[Array[Byte]] =
-      ks.sortWith((a, b) => Codecs.compareBytes(a, b) < 0).toArray
+    require(subs == null || (cols != null && cols.points != null),
+      "sub window without col points")
     // per-point totals; in netted mode certified delete epochs subtract
     // (None = an unclassifiable run → decline). Memoized: a COUNT+MIN mix
     // must not run the per-point probes twice.
-    lazy val pointTotalsRes: Option[Array[Long]] = pointTotalsOpt()
-    def pointTotalsOpt(): Option[Array[Long]] = {
-      val acc = new Array[Long](sortedKs.length)
-      var ok = true
-      files.foreach { f =>
-        if (ok) {
-          val subLo = if (subWin == null) null else subWin._1
-          val subHi = if (subWin == null) null else subWin._2
-          val perOpt: Option[Array[Long]] =
-            if (netted) {
-              if (colPoints != null)
-                CellStore.nettedCountCellsAtPoints(f, sortedKs,
-                  colPoints = colPoints, subLo = subLo, subHi = subHi)
-              else if (colWin != null)
-                CellStore.nettedCountCellsAtPoints(f, sortedKs, colWin._1, colWin._2)
-              else CellStore.nettedCountCellsAtPoints(f, sortedKs)
-            } else Some(
-              if (colPoints != null)
-                CellStore.countCellsAtPoints(f, sortedKs, colPoints = colPoints,
-                  subLo = subLo, subHi = subHi)
-              else if (colWin != null)
-                CellStore.countCellsAtPoints(f, sortedKs, colWin._1, colWin._2)
-              else CellStore.countCellsAtPoints(f, sortedKs))
-          perOpt match {
-            case Some(per) =>
-              var i = 0
-              while (i < per.length) { acc(i) += per(i); i += 1 }
-            case None => ok = false
-          }
-        }
-      }
-      if (ok) Some(acc) else None
-    }
+    lazy val pointTotalsRes: Option[Array[Long]] =
+      atPoints[Long](files, ks, cols, subs)(
+        if (netted) CellStore.nettedCountCellsAtPoints _
+        else (f, p, a, b, c, d, e) =>
+          Some(CellStore.countCellsAtPoints(f, p, a, b, c, d, e)))(Math.addExact)
     lazy val pointTotals: Array[Long] = pointTotalsRes.get
     // per-point value sums (netted mode: certified delete epochs carry
     // their victims' values and subtract); None = some consulted run
     // lacks VSUM / is unclassifiable / overflowed
-    lazy val pointSums: Option[Array[Long]] = {
-      val acc = new Array[Long](sortedKs.length)
-      val subLo = if (subWin == null) null else subWin._1
-      val subHi = if (subWin == null) null else subWin._2
-      try {
-        files.foreach { f =>
-          val perOpt: Option[Array[Long]] =
-            if (netted) {
-              if (colPoints != null)
-                CellStore.nettedSumCellsAtPoints(f, sortedKs,
-                  colPoints = colPoints, subLo = subLo, subHi = subHi)
-              else if (colWin != null)
-                CellStore.nettedSumCellsAtPoints(f, sortedKs, colWin._1, colWin._2)
-              else CellStore.nettedSumCellsAtPoints(f, sortedKs)
-            } else {
-              if (colPoints != null)
-                CellStore.sumCellsAtPoints(f, sortedKs, colPoints = colPoints,
-                  subLo = subLo, subHi = subHi)
-              else if (colWin != null)
-                CellStore.sumCellsAtPoints(f, sortedKs, colWin._1, colWin._2)
-              else CellStore.sumCellsAtPoints(f, sortedKs)
-            }
-          val per = perOpt match {
-            case Some(p) => p
-            case None => return None
-          }
-          var i = 0
-          while (i < per.length) { acc(i) = Math.addExact(acc(i), per(i)); i += 1 }
-        }
-        Some(acc)
-      } catch { case _: ArithmeticException => None }
-    }
-    lazy val rangeSum: Option[Long] =
-      try {
-        var t = 0L
-        files.foreach { f =>
-          (if (netted) CellStore.nettedSumCellsInRange(f, lo, hi)
-           else CellStore.sumCellsInRange(f, lo, hi)) match {
-            case Some(s) => t = Math.addExact(t, s)
-            case None => return None
-          }
-        }
-        Some(t)
-      } catch { case _: ArithmeticException => None }
+    lazy val pointSums: Option[Array[Long]] =
+      atPoints[Long](files, ks, cols, subs)(
+        if (netted) CellStore.nettedSumCellsAtPoints _
+        else CellStore.sumCellsAtPoints _)(Math.addExact)
+    lazy val rangeSum: Option[Long] = total(perSpan(files, keys)((f, lo, hi) =>
+      if (netted) CellStore.nettedSumCellsInRange(f, lo, hi)
+      else CellStore.sumCellsInRange(f, lo, hi)))
     def extremal(wantMin: Boolean): Option[Array[Byte]] =
       if (ks != null) {
-        val order = if (wantMin) sortedKs.indices else sortedKs.indices.reverse
-        order.collectFirst { case i if pointTotals(i) > 0 => sortedKs(i) }
-      } else {
-        files.flatMap(f => CellStore.extremalKeyInRange(f, lo, hi, wantMin))
-          .reduceOption((a, b) =>
-            if ((Codecs.compareBytes(a, b) < 0) == wantMin) a else b)
-      }
-    // extremal clustering column over the pinned keys (reduced across keys
-    // for the ungrouped form), within the pushed col window
-    def colExtremal(wantMin: Boolean): Option[Array[Byte]] = {
-      val cLo = if (colWin == null) null else colWin._1
-      val cHi = if (colWin == null) null else colWin._2
-      var best: Array[Byte] = null
-      files.foreach { f =>
-        CellStore.extremalColsAtPoints(f, sortedKs, cLo, cHi, wantMin)
-          .foreach { cand =>
-            if (cand != null && (best == null ||
-                (Codecs.compareBytes(cand, best) < 0) == wantMin))
-              best = cand
-          }
-      }
-      Option(best)
-    }
-    // extremal SUB over the pinned (key, col) groups (reduced across keys
-    // and cols for the ungrouped form), within the pushed sub window
-    def subExtremal(wantMin: Boolean): Option[Array[Byte]] = {
-      val sLo = if (subWin == null) null else subWin._1
-      val sHi = if (subWin == null) null else subWin._2
-      var best: Array[Byte] = null
-      files.foreach { f =>
-        CellStore.extremalSubsAtPoints(f, sortedKs, colPoints, sLo, sHi, wantMin)
-          .foreach { cand =>
-            if (cand != null && (best == null ||
-                (Codecs.compareBytes(cand, best) < 0) == wantMin))
-              best = cand
-          }
-      }
-      Option(best)
-    }
+        val order = if (wantMin) ks.indices else ks.indices.reverse
+        order.collectFirst { case i if pointTotals(i) > 0 => ks(i) }
+      } else perSpan(files, keys)((f, lo, hi) =>
+        CellStore.extremalKeyInRange(f, lo, hi, wantMin)).flatten
+        .reduceOption(byteExtreme(wantMin))
+    // extremal clustering column (or sub-column) over the pinned keys
+    // (and pinned cols), reduced across them for the ungrouped form,
+    // within the pushed windows
+    def colExtremal(sub: Boolean, wantMin: Boolean): Option[Array[Byte]] =
+      Option(extremalAtPoints(files, ks, cols, subs, sub, wantMin)
+        .foldLeft(null: Array[Byte])(byteExtreme(wantMin)))
     lazy val nOpt: Option[Long] =
       if (ks != null) pointTotalsRes.map(_.sum)
-      else if (netted) {
-        var t = 0L
-        var ok = true
-        files.foreach(f =>
-          if (ok) CellStore.nettedCountCellsInRange(f, lo, hi) match {
-            case Some(x) => t += x
-            case None => ok = false
-          })
-        if (ok) Some(t) else None
-      } else Some(files.map(f => CellStore.countCellsInRange(f, lo, hi)).sum)
-    lazy val n: Long = nOpt.get // non-netted callers: always Some
-    // extremal decoded VALUE in the envelope, from the VMMX tails:
+      else total(perSpan(files, keys)((f, lo, hi) =>
+        if (netted) CellStore.nettedCountCellsInRange(f, lo, hi)
+        else Some(CellStore.countCellsInRange(f, lo, hi))))
+    // extremal decoded VALUE in the windows, from the VMMX tails:
     // Some(x) = the extreme, Some-of-nothing handled by caller null,
     // None propagated below as a decline (tail missing on a consulted run)
-    def valExtremal(wantMin: Boolean): Option[Option[Long]] = {
-      if (ks != null) {
-        var best: java.lang.Long = null
-        files.foreach { f =>
-          val per =
-            (if (colPoints != null)
-              CellStore.extremalValuesAtPoints(f, sortedKs, colPoints = colPoints,
-                subLo = if (subWin == null) null else subWin._1,
-                subHi = if (subWin == null) null else subWin._2,
-                wantMin = wantMin)
-            else if (colWin != null)
-              CellStore.extremalValuesAtPoints(f, sortedKs, colWin._1, colWin._2,
-                wantMin = wantMin)
-            else CellStore.extremalValuesAtPoints(f, sortedKs, wantMin = wantMin))
-            match {
-              case Some(p) => p
-              case None => return None
-            }
-          per.foreach { v =>
-            if (v != null && (best == null ||
-                (if (wantMin) v < best else v > best))) best = v
-          }
-        }
-        Some(Option(best).map(_.longValue()))
-      } else {
-        var has = false
-        var best = 0L
-        files.foreach { f =>
-          CellStore.extremalValueInRange(f, lo, hi, wantMin) match {
-            case Some(Some(v)) =>
-              if (!has || (if (wantMin) v < best else v > best)) {
-                has = true; best = v
-              }
-            case Some(None) => ()
-            case None => return None
-          }
-        }
-        Some(if (has) Some(best) else None)
-      }
-    }
+    def valExtremal(wantMin: Boolean): Option[Option[Long]] =
+      if (ks != null)
+        atPoints[java.lang.Long](files, ks, cols, subs)((f, p, a, b, c, d, e) =>
+          CellStore.extremalValuesAtPoints(f, p, a, b, c, d, e, wantMin))(
+          longExtreme(wantMin))
+          .map(per => Option(per.foldLeft(null: java.lang.Long)(longExtreme(wantMin)))
+            .map(_.longValue))
+      else valueExtreme(wantMin)(perSpan(files, keys)((f, lo, hi) =>
+        CellStore.extremalValueInRange(f, lo, hi, wantMin)))
     val out = aggs.map {
       case PushedAgg.Count(c) if valName != null && c == valName =>
         // VMMX on every run proves every value decodes non-null
@@ -4733,24 +4440,20 @@ object MetadataAggReader {
           case None => return None
         }
       case PushedAgg.Min(c) if c == colName =>
-        colExtremal(wantMin = true).map(colCodec.decode).orNull
+        colExtremal(sub = false, wantMin = true).map(colCodec.decode).orNull
       case PushedAgg.Max(c) if c == colName =>
-        colExtremal(wantMin = false).map(colCodec.decode).orNull
+        colExtremal(sub = false, wantMin = false).map(colCodec.decode).orNull
       case PushedAgg.Min(c) if subName != null && c == subName =>
-        subExtremal(wantMin = true).map(subCodec.decode).orNull
+        colExtremal(sub = true, wantMin = true).map(subCodec.decode).orNull
       case PushedAgg.Max(c) if subName != null && c == subName =>
-        subExtremal(wantMin = false).map(subCodec.decode).orNull
+        colExtremal(sub = true, wantMin = false).map(subCodec.decode).orNull
       case PushedAgg.Min(_) =>
         extremal(wantMin = true).map(keyCodec.decode).orNull
       case PushedAgg.Max(_) =>
         extremal(wantMin = false).map(keyCodec.decode).orNull
       case PushedAgg.Sum(_) =>
-        (if (ks != null) pointSums.map(_.foldLeft(Option(0L)) {
-          case (Some(a), b) =>
-            try Some(Math.addExact(a, b))
-            catch { case _: ArithmeticException => None }
-          case (None, _) => None
-        }).flatten else rangeSum) match {
+        (if (ks != null) pointSums.flatMap(p => total(p.iterator.map(Some(_))))
+         else rangeSum) match {
           case Some(s) => nOpt match {
             case Some(cnt) => if (cnt == 0L) null else s // SUM over no rows is NULL
             case None => return None
@@ -4777,102 +4480,39 @@ object MetadataAggReader {
   private[cassandralike] def regularRangeVals(
       aggs: Seq[PushedAgg], keyCodec: KeyCodec,
       files: Seq[java.nio.file.Path],
-      lo: Array[Byte], hi: Array[Byte],
-      ks: Seq[Array[Byte]],
+      keys: KeyWindows,
       colBytesOf: String => Array[Byte] = _ => null,
       netted: Boolean = false): Option[Seq[Any]] = {
-    lazy val sortedKs: Array[Array[Byte]] =
-      ks.sortWith((a, b) => Codecs.compareBytes(a, b) < 0).toArray
+    val ks = keys.points
     // per-point NET cell counts: a fully-deleted key nets to zero and
     // counts as absent, exactly like the fold
-    lazy val pointCellsOpt: Option[Array[Long]] = {
-      val acc = new Array[Long](sortedKs.length)
-      var ok = true
-      files.foreach { f =>
-        if (ok) {
-          val perOpt =
-            if (netted) CellStore.nettedCountCellsAtPoints(f, sortedKs)
-            else Some(CellStore.countCellsAtPoints(f, sortedKs))
-          perOpt match {
-            case Some(per) =>
-              var i = 0
-              while (i < per.length) { acc(i) += per(i); i += 1 }
-            case None => ok = false
-          }
-        }
-      }
-      if (ok) Some(acc) else None
-    }
+    lazy val pointCellsOpt: Option[Array[Long]] =
+      atPoints[Long](files, ks, null, null)(
+        if (netted) CellStore.nettedCountCellsAtPoints _
+        else (f, p, a, b, c, d, e) =>
+          Some(CellStore.countCellsAtPoints(f, p, a, b, c, d, e)))(_ + _)
     lazy val pointCells: Array[Long] = pointCellsOpt.get // non-netted: always Some
-    lazy val rangeRows: Option[Long] = {
-      var t = 0L
-      files.foreach { f =>
-        (if (netted) CellStore.nettedCountDistinctKeysInRange(f, lo, hi)
-         else CellStore.countDistinctKeysInRange(f, lo, hi)) match {
-          case Some(x) => t += x
-          case None => return None
-        }
-      }
-      Some(t)
-    }
+    // one answer per (file, key window): a pinned point is the window
+    // [k, succ(k)) (exact under any injective encoding)
+    lazy val rangeRows: Option[Long] = total(perSpan(files, keys)((f, lo, hi) =>
+      if (netted) CellStore.nettedCountDistinctKeysInRange(f, lo, hi)
+      else CellStore.countDistinctKeysInRange(f, lo, hi)))
     def extremal(wantMin: Boolean): Option[Array[Byte]] =
       if (ks != null) {
-        val order = if (wantMin) sortedKs.indices else sortedKs.indices.reverse
-        order.collectFirst { case i if pointCells(i) > 0 => sortedKs(i) }
-      } else {
-        files.flatMap(f => CellStore.extremalKeyInRange(f, lo, hi, wantMin))
-          .reduceOption((a, b) =>
-            if ((Codecs.compareBytes(a, b) < 0) == wantMin) a else b)
-      }
-    // the envelope set: one [lo, hi) for the range form, or one
-    // [k, succ(k)) per pinned point (exact under any injective encoding)
-    def envelopes: Seq[(Array[Byte], Array[Byte])] =
-      if (ks != null) sortedKs.toSeq.map(k => (k, CellStore.byteSucc(k)))
-      else Seq((lo, hi))
-    def colCount(cb: Array[Byte]): Option[Long] = {
-      var t = 0L
-      files.foreach { f =>
-        envelopes.foreach { case (l, h) =>
-          (if (netted) CellStore.nettedCountColCellsInRange(f, cb, l, h)
-           else CellStore.countColCellsInRange(f, cb, l, h)) match {
-            case Some(x) => t += x
-            case None => return None
-          }
-        }
-      }
-      Some(t)
-    }
-    def colSum(cb: Array[Byte]): Option[Long] =
-      try {
-        var t = 0L
-        files.foreach { f =>
-          envelopes.foreach { case (l, h) =>
-            (if (netted) CellStore.nettedSumColCellsInRange(f, cb, l, h)
-             else CellStore.sumColCellsInRange(f, cb, l, h)) match {
-              case Some(x) => t = Math.addExact(t, x)
-              case None => return None
-            }
-          }
-        }
-        Some(t)
-      } catch { case _: ArithmeticException => None }
-    def colExtremal(cb: Array[Byte], wantMin: Boolean): Option[Option[Long]] = {
-      var has = false
-      var best = 0L
-      files.foreach { f =>
-        envelopes.foreach { case (l, h) =>
-          CellStore.extremalColValueInRange(f, cb, l, h, wantMin) match {
-            case Some(Some(v)) =>
-              if (!has || (if (wantMin) v < best else v > best)) {
-                has = true; best = v
-              }
-            case Some(None) => ()
-            case None => return None
-          }
-        }
-      }
-      Some(if (has) Some(best) else None)
-    }
+        val order = if (wantMin) ks.indices else ks.indices.reverse
+        order.collectFirst { case i if pointCells(i) > 0 => ks(i) }
+      } else perSpan(files, keys)((f, lo, hi) =>
+        CellStore.extremalKeyInRange(f, lo, hi, wantMin)).flatten
+        .reduceOption(byteExtreme(wantMin))
+    def colCount(cb: Array[Byte]): Option[Long] = total(perSpan(files, keys)((f, l, h) =>
+      if (netted) CellStore.nettedCountColCellsInRange(f, cb, l, h)
+      else CellStore.countColCellsInRange(f, cb, l, h)))
+    def colSum(cb: Array[Byte]): Option[Long] = total(perSpan(files, keys)((f, l, h) =>
+      if (netted) CellStore.nettedSumColCellsInRange(f, cb, l, h)
+      else CellStore.sumColCellsInRange(f, cb, l, h)))
+    def colExtremal(cb: Array[Byte], wantMin: Boolean): Option[Option[Long]] =
+      valueExtreme(wantMin)(perSpan(files, keys)((f, l, h) =>
+        CellStore.extremalColValueInRange(f, cb, l, h, wantMin)))
     val out = aggs.map {
       case PushedAgg.Count(c) if colBytesOf(c) != null =>
         colCount(colBytesOf(c)) match {
@@ -5289,16 +4929,16 @@ class CellPartitionReader(
   // the projection or a pushed predicate touches are decoded at all
   private val needed: Set[String] =
     required.fieldNames.toSet ++ filters.flatMap(_.references)
-  // Point-lookup pruning: a pushed finite key set (EqualTo/In, or an index
-  // candidate set) is cut to the keys that route to THIS partition's
-  // bucket, by the same TokenRing.bucket call, with the store's bucket
-  // count and range bounds, that the writer and deleteWhere use. The merge
-  // range shrinks to [min, succ(max)) over those keys alone, intersected
-  // with any pushed key range and the partition's own sub-split range;
-  // each run's bloom is tested against them only, and each key that passes
-  // seeks its own index window (CellStore.rangeRun), so an IN list costs
-  // O(keys × segments × IndexEvery) cell reads no matter how far apart its
-  // keys sort or how big the bucket is. A partition left with no key reads
+  // Key windows (KeyWindows): pushed key equality/IN (or an index
+  // candidate set) and key comparisons, cut to the partition's own
+  // sub-split range. A finite key set is further cut to the keys that route
+  // to THIS partition's bucket, by the same TokenRing.bucket call, with the
+  // store's bucket count and range bounds, that the writer and deleteWhere
+  // use; each run's bloom is tested against them only, and each key that
+  // passes seeks its own index window (CellStore.rangeRun), so an IN list
+  // costs O(keys × segments × IndexEvery) cell reads no matter how far
+  // apart its keys sort or how big the bucket is. A range seeks its one or
+  // two byte intervals the same way. Partitions left with no window read
   // nothing. Purely an optimization: FilterEval still applies the exact
   // predicate to every emitted row, and LWW/tombstone reconciliation is
   // per-address, so a key-restricted merge over all segments reconciles
@@ -5310,221 +4950,64 @@ class CellPartitionReader(
   private val subCodec: KeyCodec =
     if (!mapping.hasSubColumn) null
     else KeyCodec.ofSub(mapping.field(FieldRole.TransSubColumn).dataType, opt)
-  // null for range scans
-  private val lookupKeys: Seq[Array[Byte]] = {
-    val ks = KeyLookupBounds.keySet(filters, mapping.keyField.name,
-      keyCodec, part.lower, part.upper)
-    if (ks == null) null
+  private val keys: KeyWindows = {
+    val w = KeyWindows.of(mapping.keyField.name, keyCodec, filters)
+      .within(part.lower, part.upper)
+    if (w.points == null) w
     else {
       val buckets = opt(Options.Buckets).map(_.toInt).getOrElse(Options.DefaultBuckets)
       val bounds = opt(Options.RangeBounds)
         .map(RangeLayout.parse(_, mapping.keyField.dataType, keyCodec)).orNull
-      ks.filter(TokenRing.bucket(_, buckets, bounds) == part.bucket)
+      w.filterPoints(TokenRing.bucket(_, buckets, bounds) == part.bucket)
     }
   }
-  // the routed keys already lie inside the partition's own range, so their
-  // envelope stands in for it
-  private val keyBounds: (Array[Byte], Array[Byte]) =
-    if (lookupKeys == null || lookupKeys.isEmpty)
-      KeyLookupBounds(filters, mapping.keyField.name, keyCodec,
-        part.lower, part.upper)
-    else {
-      val sorted = CellStore.sortedDistinct(lookupKeys)
-      KeyLookupBounds(filters, mapping.keyField.name, keyCodec,
-        sorted.head, KeyLookupBounds.succ(sorted.last))
-    }
 
-  // multi-point slice SEEK: pushed EqualTo/In on the transposed clustering
-  // column becomes a cell-level byte filter INSIDE the merge — the listed
-  // columns' byte forms are sought through every run and non-matching
-  // cells of a wide row never reach reconciliation or decode (see
-  // BucketMergeIterator.colLookup). The exact predicate is still
-  // re-applied per row by FilterEval (belt and braces — the byte encode is
-  // injective per type, so both layers agree).
-  private val colLookup: Seq[Array[Byte]] =
-    if (!mapping.transposed) null
-    else {
-      val colF = mapping.field(FieldRole.TransColumn)
-      // byte equality must IMPLY SQL equality and vice versa, or the seek
-      // would drop rows the exact filter admits: float/double diverge
-      // under the plain bytes form (-0.0 = 0.0 in SQL, different IEEE
-      // bits), so they stay exact-filter-only there — the ORDERED column
-      // encoding normalizes them (one byte form per SQL-equal value), so
-      // every ordered-supported type qualifies under column.encoding
-      val injective = colCodec.ordered || (colF.dataType match {
-        case StringType | BinaryType | BooleanType | DateType |
-          TimestampType | LongType | IntegerType | ShortType | ByteType => true
-        case _ => false
-      })
-      if (!injective) null else {
-      val sets = filters.flatMap {
-        case EqualTo(c, v) if c == colF.name && v != null => Some(Seq(v))
-        case In(c, vs) if c == colF.name && vs.nonEmpty =>
-          Some(vs.toSeq.filter(_ != null))
-        case _ => None
-      }.map(_.map(v => colCodec.encode(
-        CatalystTypeConverters.convertToCatalyst(v)).toSeq).toSet)
-      if (sets.isEmpty) null
-      else sets.reduce(_ intersect _).toSeq.map(_.toArray)
-      }
-    }
-
-  /** Byte form of a static `slice.start`/`slice.finish` option value. On
-    * an ORDERED clustering column the text is a TYPED literal (the
-    * RangeLayout grammar — micros for timestamps, days for dates, plain
-    * decimal for numerics) encoded through colCodec, so the
+  /** Byte form of a static slice option value (`slice.start`/`finish`,
+    * `slice.sub.start`/`finish`). On an ORDERED column the text is a TYPED
+    * literal (the RangeLayout grammar — micros for timestamps, days for
+    * dates, plain decimal for numerics) encoded through the codec, so the
     * reference-parity knobs drive the same numeric windows/seeks as pushed
     * predicates. Everywhere else it stays the verbatim UTF-8 byte form
     * (the reference's behavior, CassandraStorageHandler.java:149-189 in
     * /root/reference — for string columns the two forms coincide). */
-  private def sliceBound(text: String): Array[Byte] =
-    if (mapping.transposed && colCodec.ordered)
-      colCodec.encode(RangeLayout.literal(
-        text, mapping.field(FieldRole.TransColumn).dataType))
+  private def sliceBound(role: FieldRole, codec: KeyCodec)(text: String): Array[Byte] =
+    if (codec.ordered) codec.encode(RangeLayout.literal(text, mapping.field(role).dataType))
     else text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  // SLICE-RANGE window: pushed </<=/>/>= on the clustering column (and the
-  // static slice.start/finish options) fold into one inclusive byte window
-  // [lo, hi] the merge uses to skip whole runs (min/max clustering) and
-  // whole index spans — IO-level pruning for `WHERE col BETWEEN …` over
-  // wide rows. Sound only when byte order == SQL order, so gated to
-  // string/binary clustering columns (integral cell bytes are big-endian
-  // two's complement — negatives order wrong); the window is an
-  // over-approximation (inclusive both ends) and the exact predicates are
-  // re-applied downstream (FilterEval / the pager).
-  private val colWindow: (Array[Byte], Array[Byte]) =
+  // SLICE windows: pushed EqualTo/In (multi-point slice) and comparisons
+  // on the clustering column, plus the static slice.start/finish knobs —
+  // inclusive byte bounds, the reference's SliceRange over comparator
+  // bytes; start is ALWAYS the lower bound and finish the upper,
+  // slice.reversed flips iteration ORDER only (transposedRows applies the
+  // same filter; the fuzz model pins it) — fold into KeyWindows the merge
+  // uses to skip whole runs (min/max clustering, column blooms), whole
+  // index spans, and every other cell before reconciliation or decode:
+  // IO-level pruning for `WHERE col BETWEEN …` or `col IN (…)` over wide
+  // rows. Point sets need an injective byte form (float/double diverge
+  // under the plain bytes form: -0.0 = 0.0 in SQL, different IEEE bits),
+  // so elsewhere they stay exact-filter-only. The exact predicates are
+  // still re-applied per row (FilterEval / the pager). The `:subcolumn`
+  // twin does the same inside one (key, col) group, with the
+  // slice.sub.start/finish knobs.
+  private def sliceWindows(role: FieldRole, codec: KeyCodec,
+      start: String, finish: String): KeyWindows = {
+    val pushed =
+      if (codec.injective) filters
+      else filters.filter { case _: EqualTo | _: In => false; case _ => true }
+    val bound = sliceBound(role, codec) _
+    val w = KeyWindows.of(mapping.field(role).name, codec, pushed)
+      .intersect(KeyWindows.closed(opt(start).map(bound).orNull,
+        opt(finish).map(bound).orNull))
+    if (w.isAll) null else w
+  }
+  private val cols: KeyWindows =
     if (!mapping.transposed) null
-    else {
-      val colF = mapping.field(FieldRole.TransColumn)
-      val byteOrdered = colCodec.ordered || (colF.dataType match {
-        case StringType | BinaryType => true
-        case _ => false
-      })
-      if (!byteOrdered) null else {
-        def enc(v: Any): Array[Byte] =
-          colCodec.encode(CatalystTypeConverters.convertToCatalyst(v))
-        var lo: Array[Byte] = null
-        var hi: Array[Byte] = null
-        def tightenLo(b: Array[Byte]): Unit =
-          if (lo == null || Codecs.compareBytes(b, lo) > 0) lo = b
-        def tightenHi(b: Array[Byte]): Unit =
-          if (hi == null || Codecs.compareBytes(b, hi) < 0) hi = b
-        filters.foreach {
-          case GreaterThan(c, v) if c == colF.name && v != null => tightenLo(enc(v))
-          case GreaterThanOrEqual(c, v) if c == colF.name && v != null => tightenLo(enc(v))
-          case LessThan(c, v) if c == colF.name && v != null => tightenHi(enc(v))
-          case LessThanOrEqual(c, v) if c == colF.name && v != null => tightenHi(enc(v))
-          // LIKE-prefix on a STRING clustering column: the prefixed cells
-          // live exactly in [p, prefixSucc(p)) of the identity UTF-8 byte
-          // form (value-prefix containment IS byte-prefix containment), so
-          // the inclusive window tightens to [p, prefixSucc(p)] — at most
-          // one extra boundary value, re-filtered exactly downstream. A
-          // null prefixSucc (all-0xFF prefix) leaves the upper side open.
-          case StringStartsWith(c, p)
-            if c == colF.name && p != null && colF.dataType == StringType =>
-            val b = enc(p)
-            tightenLo(b)
-            val ps = Codecs.prefixSucc(b)
-            if (ps != null) tightenHi(ps)
-          case _ => ()
-        }
-        // static slice knobs (P2): typed literals on ordered columns,
-        // verbatim UTF-8 on strings (sliceBound). start is ALWAYS the
-        // lower bound and finish the upper — slice.reversed flips
-        // iteration ORDER only, never the bound roles (transposedRows
-        // applies the same filter; the fuzz model pins it)
-        if (colF.dataType == StringType || colCodec.ordered) {
-          opt(Options.SliceStart).map(sliceBound).foreach(tightenLo)
-          opt(Options.SliceFinish).map(sliceBound).foreach(tightenHi)
-        }
-        if (lo == null && hi == null) null else (lo, hi)
-      }
-    }
-
-  // ---- SUB-column (:subcolumn) twins of colLookup/colWindow: pushed
-  // EqualTo/In and range predicates on the sub field become merge-level
-  // byte filters (non-matching cells never reach reconciliation or decode)
-  // plus run-level [subMin, subMax] skips and span-level seeks inside one
-  // (key, col) group — the IO answer to `WHERE sub_column BETWEEN …` over
-  // a wide super row, which previously decoded the full (key, col) span
-  // and filtered above. Gating mirrors the col twins exactly: point sets
-  // need an injective byte form, windows need byte order == SQL order; the
-  // exact predicates are still re-applied per row by FilterEval. ----
-  private val subLookup: Seq[Array[Byte]] =
+    else sliceWindows(FieldRole.TransColumn, colCodec,
+      Options.SliceStart, Options.SliceFinish)
+  private val subs: KeyWindows =
     if (!mapping.hasSubColumn) null
-    else {
-      val subF = mapping.field(FieldRole.TransSubColumn)
-      val injective = subCodec.ordered || (subF.dataType match {
-        case StringType | BinaryType | BooleanType | DateType |
-          TimestampType | LongType | IntegerType | ShortType | ByteType => true
-        case _ => false
-      })
-      if (!injective) null else {
-        val sets = filters.flatMap {
-          case EqualTo(c, v) if c == subF.name && v != null => Some(Seq(v))
-          case In(c, vs) if c == subF.name && vs.nonEmpty =>
-            Some(vs.toSeq.filter(_ != null))
-          case _ => None
-        }.map(_.map(v => subCodec.encode(
-          CatalystTypeConverters.convertToCatalyst(v)).toSeq).toSet)
-        if (sets.isEmpty) null
-        else sets.reduce(_ intersect _).toSeq.map(_.toArray)
-      }
-    }
-
-  /** Byte form of a static `slice.sub.start`/`slice.sub.finish` option
-    * value: a TYPED literal through the ordered sub codec when one is
-    * declared, verbatim UTF-8 otherwise (string subs coincide) — the sub
-    * twin of [[sliceBound]]. */
-  private def subSliceBound(text: String): Array[Byte] =
-    if (mapping.hasSubColumn && subCodec.ordered)
-      subCodec.encode(RangeLayout.literal(
-        text, mapping.field(FieldRole.TransSubColumn).dataType))
-    else text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-  private val subWindow: (Array[Byte], Array[Byte]) =
-    if (!mapping.hasSubColumn) null
-    else {
-      val subF = mapping.field(FieldRole.TransSubColumn)
-      val byteOrdered = subCodec.ordered || (subF.dataType match {
-        case StringType | BinaryType => true
-        case _ => false
-      })
-      def enc(v: Any): Array[Byte] =
-        subCodec.encode(CatalystTypeConverters.convertToCatalyst(v))
-      var lo: Array[Byte] = null
-      var hi: Array[Byte] = null
-      def tightenLo(b: Array[Byte]): Unit =
-        if (lo == null || Codecs.compareBytes(b, lo) > 0) lo = b
-      def tightenHi(b: Array[Byte]): Unit =
-        if (hi == null || Codecs.compareBytes(b, hi) < 0) hi = b
-      // pushed range predicates: sound as a byte window only when byte
-      // order == SQL order (the window is an over-approximation — the
-      // inclusive bounds widen strict comparisons — re-applied exactly by
-      // FilterEval downstream)
-      if (byteOrdered) filters.foreach {
-        case GreaterThan(c, v) if c == subF.name && v != null => tightenLo(enc(v))
-        case GreaterThanOrEqual(c, v) if c == subF.name && v != null => tightenLo(enc(v))
-        case LessThan(c, v) if c == subF.name && v != null => tightenHi(enc(v))
-        case LessThanOrEqual(c, v) if c == subF.name && v != null => tightenHi(enc(v))
-        // LIKE-prefix on a STRING sub column — the sub twin of the
-        // clustering-column prefix window (identity UTF-8 byte form)
-        case StringStartsWith(c, p)
-          if c == subF.name && p != null && subF.dataType == StringType =>
-          val b = enc(p)
-          tightenLo(b)
-          val ps = Codecs.prefixSucc(b)
-          if (ps != null) tightenHi(ps)
-        case _ => ()
-      }
-      // static sub-slice knobs: the option semantic IS the inclusive
-      // byte-comparator window (the reference's SliceRange over comparator
-      // bytes), so no byte-order gate — the merge-level filter applies it
-      // exactly; typed literals on an ordered sub encoding
-      opt(Options.SliceSubStart).map(subSliceBound).foreach(tightenLo)
-      opt(Options.SliceSubFinish).map(subSliceBound).foreach(tightenHi)
-      if (lo == null && hi == null) null else (lo, hi)
-    }
+    else sliceWindows(FieldRole.TransSubColumn, subCodec,
+      Options.SliceSubStart, Options.SliceSubFinish)
 
   // Streaming scan: k-way merge over the bucket's sorted runs, grouped by
   // adjacent key. Memory is O(runs + one row's cells) — one wide row is the
@@ -5534,21 +5017,18 @@ class CellPartitionReader(
   private[cassandralike] val counters = new ScanCounters
 
   private val merge = new CellStore.BucketMergeIterator(
-    part.tableDir, part.bucket, keyBounds._1, keyBounds._2,
+    part.tableDir, part.bucket, keys,
     asOf = opt(Options.ReadAsOf).map(_.toLong).getOrElse(Long.MaxValue),
     ttl = opt(Options.Ttl).map(_.toLong).getOrElse(0L),
     now = opt(Options.ReadNow).map(_.toLong).getOrElse(0L),
     counterMerge = opt(Options.CounterMerge).exists(_.toBoolean),
-    lookupKeys = lookupKeys,
-    colLookup = colLookup,
-    colWindow = colWindow,
-    subLookup = subLookup,
-    subWindow = subWindow,
     onlyFiles =
       if (part.files == null) null
       else part.files.map(n =>
         java.nio.file.Paths.get(part.tableDir, CellStore.SstDir, n)),
-    counters = counters)
+    counters = counters,
+    cols = cols,
+    subs = subs)
   private val rows: Iterator[InternalRow] = {
     val byKey = groupAdjacentByKey(merge)
     val all =
@@ -5678,8 +5158,8 @@ class CellPartitionReader(
   private def transposedRows(group: (Array[Byte], Seq[Cell])): Iterator[InternalRow] = {
     val (key, cellsAsc) = group
     val reversed = opt(Options.SliceReversed).exists(_.toBoolean)
-    val startB = opt(Options.SliceStart).map(sliceBound)
-    val finishB = opt(Options.SliceFinish).map(sliceBound)
+    val startB = opt(Options.SliceStart).map(sliceBound(FieldRole.TransColumn, colCodec))
+    val finishB = opt(Options.SliceFinish).map(sliceBound(FieldRole.TransColumn, colCodec))
     val count = opt(Options.SliceCount).map(_.toInt)
     val pageSize = opt(Options.WideRowPageSize).map(_.toInt)
       .getOrElse(Options.DefaultPageSize)
@@ -5859,104 +5339,4 @@ object FilterEval {
     case (x: Array[Byte], y: Array[Byte]) => Some(Codecs.compareBytes(x, y))
     case _ => None
   }
-}
-
-/** Derives the tightest [lower, upper) encoded-key range a partition's merge
-  * must cover given its pushed filters — the point-lookup pruning companion
-  * to planning-time bucket pruning (`plannedBuckets`). Top-level key
-  * equality / IN conjuncts narrow the range, and — when the key encoding is
-  * order-preserving ([[KeyCodec.rangeOrdered]]) — so do </<=/>/>= range
-  * conjuncts; everything else leaves the partition's own sub-split bounds
-  * untouched. Sound by construction: every key satisfying ALL conjuncts lies
-  * inside every conjunct's envelope ([min, succ(max)) for point sets,
-  * half-open byte ranges for comparisons — byte order == value order is
-  * exactly what rangeOrdered asserts), and the envelope only ever SHRINKS
-  * the scanned range — rows are still exact-filtered post-decode. */
-object KeyLookupBounds {
-  def apply(filters: Array[Filter], keyName: String, codec: KeyCodec,
-      partLower: Array[Byte], partUpper: Array[Byte])
-    : (Array[Byte], Array[Byte]) = {
-    def enc(v: Any): Array[Byte] =
-      codec.encode(CatalystTypeConverters.convertToCatalyst(v))
-    val ranged = codec.rangeOrdered
-    val envelopes: Array[(Array[Byte], Array[Byte])] = filters.flatMap {
-      case EqualTo(c, v) if c == keyName => Some(Seq(v))
-      case In(c, vs) if c == keyName && vs.nonEmpty => Some(vs.toSeq)
-      case _ => None
-    }.map { vs =>
-      val e = vs.map(enc)
-      (e.minBy(identity)(byteOrder), succ(e.maxBy(identity)(byteOrder)))
-    } ++ filters.flatMap {
-      // half-open envelopes from pushed key comparisons: a null bound means
-      // "unbounded on that side" (the partition's own bound prevails in the
-      // fold below). succ() turns the inclusive byte form into the matching
-      // exclusive/inclusive half-open bound.
-      case GreaterThan(c, v) if c == keyName && ranged && v != null =>
-        Some((succ(enc(v)), null: Array[Byte]))
-      case GreaterThanOrEqual(c, v) if c == keyName && ranged && v != null =>
-        Some((enc(v), null: Array[Byte]))
-      case LessThan(c, v) if c == keyName && ranged && v != null =>
-        Some((null: Array[Byte], enc(v)))
-      case LessThanOrEqual(c, v) if c == keyName && ranged && v != null =>
-        Some((null: Array[Byte], succ(enc(v))))
-      // LIKE-prefix on a STRING key (the only type the scan builder
-      // accepts it for): [p, prefixSucc(p)) holds exactly the prefixed
-      // keys — string keys marshal to their UTF-8 bytes, under which
-      // value-prefix containment is byte-prefix containment. A null
-      // prefixSucc (empty or all-0xFF prefix) leaves the upper side to
-      // the partition's own bound.
-      case StringStartsWith(c, p) if c == keyName && ranged && p != null =>
-        val e = enc(p)
-        Some((e, Codecs.prefixSucc(e)))
-      case _ => None
-    }
-    // AND of conjuncts = intersection of envelopes, then the partition range
-    val (lo, hi) = envelopes.foldLeft((partLower, partUpper)) {
-      case ((l, u), (el, eu)) => (maxLower(l, el), minUpper(u, eu))
-    }
-    // an empty intersection must yield an empty scan, not a crossed range
-    if (lo != null && hi != null && Codecs.compareBytes(lo, hi) > 0) (hi, hi)
-    else (lo, hi)
-  }
-
-  /** The EXACT encoded key set a point lookup needs, or null when the
-    * pushed filters don't pin the key to a finite set. Non-null asserts
-    * every row the scan must emit has its key in the set — sound because
-    * conjuncts AND together (multiple EqualTo/In intersect) and the exact
-    * predicates are re-applied row-wise downstream. This is what lets the
-    * store consult per-run blooms ([[CellStore.KeyBloom]]) and skip
-    * segments/runs that provably hold none of the keys. */
-  def keySet(filters: Array[Filter], keyName: String, codec: KeyCodec,
-      partLower: Array[Byte], partUpper: Array[Byte]): Seq[Array[Byte]] = {
-    val sets = filters.flatMap {
-      case EqualTo(c, v) if c == keyName => Some(Seq(v))
-      case In(c, vs) if c == keyName && vs.nonEmpty => Some(vs.toSeq)
-      case _ => None
-    }.map(_.map(v =>
-      codec.encode(CatalystTypeConverters.convertToCatalyst(v))))
-    if (sets.isEmpty) return null
-    val inter = sets.map(_.map(_.toSeq).toSet).reduce(_ intersect _)
-    inter.toSeq.map(_.toArray).filter { k =>
-      (partLower == null || Codecs.compareBytes(k, partLower) >= 0) &&
-        (partUpper == null || Codecs.compareBytes(k, partUpper) < 0)
-    }
-  }
-
-  /** Immediate successor of `k` in unsigned-lexicographic byte order —
-    * delegates to the package's one successor primitive
-    * ([[CellStore.byteSucc]]) so every half-open envelope shares the
-    * same boundary convention. */
-  private[cassandralike] def succ(k: Array[Byte]): Array[Byte] =
-    CellStore.byteSucc(k)
-
-  private val byteOrder: Ordering[Array[Byte]] =
-    (a, b) => Codecs.compareBytes(a, b)
-
-  private def maxLower(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    if (a == null) b else if (b == null) a
-    else if (Codecs.compareBytes(a, b) >= 0) a else b
-
-  private def minUpper(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    if (a == null) b else if (b == null) a
-    else if (Codecs.compareBytes(a, b) <= 0) a else b
 }

@@ -485,7 +485,7 @@ object CellStore {
     * then an OPTIONAL column tail `[int ColsMagic](col bytes)*` — the COL
     * of each indexed cell, making every entry a (key, col) address prefix
     * so a point slice over a very wide row can seek past whole index spans
-    * (see [[SegmentReader.rangeRun]]'s colSet path). The block is
+    * (see [[SegmentReader.rangeRun]]'s column seek). The block is
     * length-prefixed in the run header, so every tail is self-describing by
     * remaining bytes: readers of older files get `bloom = null` /
     * `cols = null`, and an older reader of a new file simply stops after
@@ -1378,9 +1378,9 @@ object CellStore {
 
   /** k ++ 0x00 — the immediate successor of `k` in unsigned-lexicographic
     * byte order: the exclusive upper bound admitting exactly the byte
-    * strings equal to `k`. The ONE successor primitive of the package —
-    * [[KeyLookupBounds.succ]] delegates here, so every half-open envelope
-    * shares the same boundary convention. */
+    * strings equal to `k`. The ONE successor primitive of the package, so
+    * every half-open window ([[KeyWindows]]) shares the same boundary
+    * convention. */
   private[cassandralike] def byteSucc(k: Array[Byte]): Array[Byte] = {
     val out = java.util.Arrays.copyOf(k, k.length + 1)
     out(k.length) = 0
@@ -3901,18 +3901,6 @@ object CellStore {
     b != null && java.util.Arrays.binarySearch(set, b,
       (x: Array[Byte], y: Array[Byte]) => Codecs.compareBytes(x, y)) >= 0
 
-  /** Any member of the SORTED col set inside the inclusive window [a, b]? */
-  def anyColIn(colSet: Array[Array[Byte]], a: Array[Byte], b: Array[Byte]): Boolean = {
-    if (a == null || b == null) return true // unknown window -> must read
-    var lo = 0
-    var hi = colSet.length
-    while (lo < hi) {
-      val m = (lo + hi) >>> 1
-      if (Codecs.compareBytes(colSet(m), a) < 0) lo = m + 1 else hi = m
-    }
-    lo < colSet.length && Codecs.compareBytes(colSet(lo), b) <= 0
-  }
-
   /** Bytes a run cursor reads per block ([[SegmentReader.runIterator]]). */
   private val CursorBlock = 1 << 15
 
@@ -4004,97 +3992,61 @@ object CellStore {
       parseIndex(buf)
     }
 
-    /** Cells of one run restricted to key range [lo, hi) (null = unbounded):
-      * the sparse index prunes non-overlapping runs outright and seeks the
-      * cursor to the last indexed key <= lo, so a range partition reads
-      * O(range + IndexEvery) cells of the run, not the whole run.
-      *
-      * `keys` (sorted, distinct, inside [lo, hi); null = a range read) is
-      * the MULTI-POINT key seek: each key reads only its own index window,
-      * from the last entry strictly below it through the last entry bearing
-      * it, so a pushed IN list or an index candidate set costs
-      * O(keys × IndexEvery) cell reads per run instead of every cell of
-      * the [min, max] key envelope. Cells of other keys inside a window
-      * never leave the run, and the spans between windows are never read
+    /** Cells of one run inside the key windows `keys`: the sparse index
+      * prunes a run no window meets, and each window that meets it reads
+      * only its own index entries, from the last entry strictly below its
+      * lower end (a hot key spans many entries, and its cells can start
+      * inside the span before the first entry bearing it) up to the first
+      * entry at or above its upper end. A point window [k, succ(k)) is the
+      * per-key seek: an IN list or an index candidate set costs
+      * O(keys × IndexEvery) cell reads per run instead of every cell of the
+      * [min, max] key envelope, and a range that crosses zero on a `bytes`
+      * integral key reads its two byte intervals only. Overlapping and
+      * adjacent windows share one cursor, which stops past the upper end of
+      * the last window starting inside it and drops the cells of keys
+      * outside every window; the spans between windows are never read
       * (cellsSeekSkipped counts them).
       *
-      * `colSet` (sorted, non-null together with a col-tailed index) is the
-      * point-slice SEEK: every index entry is a (key, col) address prefix,
-      * so a span that provably lies inside ONE key and whose [col, nextCol]
-      * window contains no wanted column is never read at all — a wanted-3-
-      * columns slice of a million-cell row costs O(matches × IndexEvery)
-      * cell reads instead of the row width. Sound because a skipped span
-      * can hold no cell (live OR tombstone) of any wanted (key, col)
-      * address, and reconciliation is per-address; spans containing a key
-      * boundary are always read (their cols are not monotone across keys).
-      * The exact byte filter downstream (BucketMergeIterator colLookup)
-      * still applies to every cell that IS read. The column seek applies
-      * inside the key windows too. */
-    def rangeRun(ri: RunInfo, lo: Array[Byte], hi: Array[Byte],
-        colSet: Array[Array[Byte]] = null,
-        counters: ScanCounters = null,
-        colWindow: (Array[Byte], Array[Byte]) = null,
-        subSet: Array[Array[Byte]] = null,
-        subWindow: (Array[Byte], Array[Byte]) = null,
-        keys: Array[Array[Byte]] = null): Iterator[Cell] = {
+      * `cols` (with a col-tailed index) is the slice SEEK: every index
+      * entry is a (key, col) address prefix, so a span that provably lies
+      * inside ONE key and whose [col, nextCol] range meets no column
+      * window is never read at all — a wanted-3-columns slice of a
+      * million-cell row costs O(matches × IndexEvery) cell reads instead of
+      * the row width. Sound because a skipped span can hold no cell (live
+      * OR tombstone) of any wanted (key, col) address, and reconciliation
+      * is per-address; spans containing a key boundary are always read
+      * (their cols are not monotone across keys). The exact byte filter
+      * downstream (BucketMergeIterator) still applies to every cell that
+      * IS read. `subs` is the same seek inside one (key, col) group. */
+    def rangeRun(ri: RunInfo, keys: KeyWindows,
+        cols: KeyWindows = null, subs: KeyWindows = null,
+        counters: ScanCounters = null): Iterator[Cell] = {
       if (ri.cellCount == 0) return Iterator.empty
       val idx = readIndex(ri)
-      if (lo != null && Codecs.compareBytes(idx.lastKey, lo) < 0) return Iterator.empty
-      if (hi != null && Codecs.compareBytes(idx.keys(0), hi) >= 0) return Iterator.empty
+      val spans = keys.spans.filter { case (lo, hi) =>
+        (lo == null || Codecs.compareBytes(lo, idx.lastKey) <= 0) &&
+          (hi == null || Codecs.compareBytes(idx.keys(0), hi) < 0)
+      }
+      if (spans.isEmpty) return Iterator.empty
       val seekable = idx.cols != null &&
-        (colSet != null || colWindow != null ||
-          ((subSet != null || subWindow != null) && idx.subs != null))
+        (cols != null || (subs != null && idx.subs != null))
       val mustRead: Int => Boolean =
-        if (!seekable) _ => true
-        else colSpanFilter(ri, idx, colSet, colWindow, subSet, subWindow)
-      if (keys != null) return keySeek(ri, idx, keys, mustRead, counters)
-      // seek to the last index entry STRICTLY below lo: entries equal to
-      // lo must not be skipped — cells with key == lo can start before
-      // them (a hot key spans many index entries, all bearing that key;
-      // advancing on <= here seeked past the whole run and dropped every
-      // cell but the tail — the sf0.1 widerow regression)
-      val e = if (lo == null) 0 else math.max(0, entriesBelow(idx.keys, lo) - 1)
-      val base =
-        if (!seekable)
-          runIterator(ri.payloadOffset + idx.offsets(e), ri.cellCount - idx.cellPos(e))
-        else {
-          // spans from e up to the first entry at or above hi
-          val end = if (hi == null) idx.keys.length else entriesBelow(idx.keys, hi)
-          spanGroups(ri, idx, Iterator.single((e, end)), mustRead, counters)
-            .iterator.flatMap(g => spanCursor(ri, idx, g))
-        }
-      val from =
-        if (lo == null) base
-        else base.dropWhile(c => Codecs.compareBytes(c.key, lo) < 0)
-      if (hi == null) from
-      else from.takeWhile(c => Codecs.compareBytes(c.key, hi) < 0)
-    }
-
-    /** The key seek of [[rangeRun]]. Key k's cells lie in the index spans
-      * from the last entry strictly below k (a hot key spans many entries,
-      * and its cells can start inside the span before the first entry
-      * bearing it) through the last entry <= k. Overlapping and adjacent
-      * windows merge into one cursor, which stops after the largest key
-      * whose window starts inside it and drops the cells of keys outside
-      * the set. */
-    private def keySeek(ri: RunInfo, idx: RunIndex, keys: Array[Array[Byte]],
-        mustRead: Int => Boolean, counters: ScanCounters): Iterator[Cell] = {
-      val inRun = keys.filter(k => Codecs.compareBytes(k, idx.keys(0)) >= 0 &&
-        Codecs.compareBytes(k, idx.lastKey) <= 0)
-      if (inRun.isEmpty) return Iterator.empty
-      val starts = inRun.map(k => math.max(0, entriesBelow(idx.keys, k) - 1))
-      val windows = inRun.indices.iterator.map(j =>
-        (starts(j), entriesBelow(idx.keys, byteSucc(inRun(j)))))
+        if (!seekable) _ => true else colSpanFilter(idx, cols, subs)
+      val starts = spans.map { case (lo, _) =>
+        if (lo == null) 0 else math.max(0, entriesBelow(idx.keys, lo) - 1)
+      }
+      val windows = spans.indices.iterator.map(j => (starts(j),
+        if (spans(j)._2 == null) idx.keys.length else entriesBelow(idx.keys, spans(j)._2)))
       val groups = spanGroups(ri, idx, windows, mustRead, counters)
       var j = 0
       groups.iterator.flatMap { g =>
-        // every key with cells in this cursor has its window start below
-        // the cursor's end, so the cursor can stop past the last such key
-        while (j + 1 < inRun.length && starts(j + 1) < g(1)) j += 1
-        val last = inRun(j)
-        spanCursor(ri, idx, g)
-          .takeWhile(c => Codecs.compareBytes(c.key, last) <= 0)
-          .filter(c => sortedContains(inRun, c.key))
+        // every key with cells in this cursor lies in a window starting
+        // below the cursor's end, so the cursor can stop past the last one
+        while (j + 1 < spans.length && starts(j + 1) < g(1)) j += 1
+        val hi = spans(j)._2
+        val cur = spanCursor(ri, idx, g)
+        val upTo = if (hi == null) cur else cur.takeWhile(c => Codecs.compareBytes(c.key, hi) < 0)
+        if (keys.isAll) upTo else upTo.filter(c => keys.contains(c.key))
       }
     }
 
@@ -4129,35 +4081,22 @@ object CellStore {
       runIterator(ri.payloadOffset + idx.offsets(g(0)), endPos - idx.cellPos(g(0)))
     }
 
-    /** The colSet/subSet span test of [[rangeRun]]: may index span i hold a
-      * cell of a wanted (key, col[, sub]) address? */
-    private def colSpanFilter(ri: RunInfo, idx: RunIndex,
-        colSet: Array[Array[Byte]],
-        colWindow: (Array[Byte], Array[Byte]),
-        subSet: Array[Array[Byte]],
-        subWindow: (Array[Byte], Array[Byte])): Int => Boolean = {
+    /** The column span test of [[rangeRun]]: may index span i hold a cell
+      * of a wanted (key, col[, sub]) address? */
+    private def colSpanFilter(idx: RunIndex, cols: KeyWindows,
+        subs: KeyWindows): Int => Boolean = {
       val n = idx.cellPos.length
-      // any wanted col in the inclusive span window [a, b]? Wanted = a
-      // member of the pushed point set AND/OR the pushed range window
-      // (both over-approximations re-checked exactly downstream;
-      // sub-columns make a span's last col potentially EQUAL its end
-      // entry's col, hence b inclusive; null = unknown → must read)
-      def wantedIn(a: Array[Byte], b: Array[Byte]): Boolean = {
-        if (a == null || b == null) return true
-        (colSet == null || anyColIn(colSet, a, b)) &&
-          (colWindow == null ||
-            ((colWindow._1 == null || Codecs.compareBytes(colWindow._1, b) <= 0) &&
-             (colWindow._2 == null || Codecs.compareBytes(a, colWindow._2) <= 0)))
-      }
+      val colSet = if (cols == null) null else cols.points
+      val subSet = if (subs == null) null else subs.points
+      // any wanted col in the inclusive span range [a, b]? (sub-columns
+      // make a span's last col potentially EQUAL its end entry's col,
+      // hence b inclusive; null = unknown → must read)
+      def wantedIn(a: Array[Byte], b: Array[Byte]): Boolean =
+        a == null || b == null || cols == null || cols.meets(a, b)
       // the sub twin, applied only to spans that provably sit inside ONE
       // (key, col) group — sub bytes are monotone only at equal (key, col)
-      def subWantedIn(a: Array[Byte], b: Array[Byte]): Boolean = {
-        if (a == null || b == null) return true
-        (subSet == null || anyColIn(subSet, a, b)) &&
-          (subWindow == null ||
-            ((subWindow._1 == null || Codecs.compareBytes(subWindow._1, b) <= 0) &&
-             (subWindow._2 == null || Codecs.compareBytes(a, subWindow._2) <= 0)))
-      }
+      def subWantedIn(a: Array[Byte], b: Array[Byte]): Boolean =
+        a == null || b == null || subs == null || subs.meets(a, b)
       // chunked column blooms: span i lies entirely inside chunk
       // cellPos/chunkCells (ChunkCells is a multiple of IndexEvery), so a
       // chunk whose bloom rejects every wanted point column excludes the
@@ -4185,17 +4124,13 @@ object CellStore {
         if (!chunkMightContain(i)) return false
         if (i == n - 1) {
           // final span ends at lastKey with no col upper bound: readable
-          // unless it provably sits inside one key with every wanted col
-          // below its first col
+          // unless it provably sits inside one key with no wanted col at
+          // or above its first col
           !java.util.Arrays.equals(idx.keys(i), idx.lastKey) ||
-            idx.cols(i) == null ||
-            ((colSet == null ||
-              Codecs.compareBytes(colSet(colSet.length - 1), idx.cols(i)) >= 0) &&
-             (colWindow == null || colWindow._2 == null ||
-              Codecs.compareBytes(idx.cols(i), colWindow._2) <= 0))
+            idx.cols(i) == null || cols == null || cols.meets(idx.cols(i), null)
         } else if (!java.util.Arrays.equals(idx.keys(i), idx.keys(i + 1))) true
         else if (!wantedIn(idx.cols(i), idx.cols(i + 1))) false
-        else if ((subSet != null || subWindow != null) && idx.subs != null &&
+        else if (subs != null && idx.subs != null &&
             idx.cols(i) != null && idx.cols(i + 1) != null &&
             java.util.Arrays.equals(idx.cols(i), idx.cols(i + 1)))
           // one (key, col) group: the span's subs run [subs(i), subs(i+1)]
@@ -4206,51 +4141,38 @@ object CellStore {
     }
 
     /** Range cursors over every run, bloom-pruned and key-seeked when the
-      * scan is a point lookup: `keys` non-null (sorted, distinct, inside
-      * [lo, hi)) asserts the caller needs ONLY cells whose key is in the
-      * set (a pushed EqualTo/In or an index candidate set, already cut to
-      * the keys that route to this bucket, re-checked row-exact
-      * downstream). A run whose bloom rejects every key is skipped without
-      * reading its index or payload; otherwise its index is read once and
-      * only the keys its bloom passes seek their own windows through it
-      * (see [[rangeRun]]). Blooms have no false negatives, and
-      * LWW/tombstone reconciliation is per-address, so dropping runs and
-      * spans that provably hold none of the keys reconciles identically for
-      * the keys that remain; every run stays one address-sorted cursor. */
-    def rangeRuns(lo: Array[Byte], hi: Array[Byte],
-        keys: Array[Array[Byte]] = null,
+      * scan is a point lookup: `keys` made of points only asserts the
+      * caller needs ONLY cells whose key is in the set (a pushed EqualTo/In
+      * or an index candidate set, already cut to the keys that route to
+      * this bucket, re-checked row-exact downstream). A run whose bloom
+      * rejects every key is skipped without reading its index or payload;
+      * otherwise its index is read once and only the keys its bloom passes
+      * seek their own windows through it (see [[rangeRun]]). Blooms have no
+      * false negatives, and LWW/tombstone reconciliation is per-address, so
+      * dropping runs and spans that provably hold none of the keys
+      * reconciles identically for the keys that remain; every run stays
+      * one address-sorted cursor. */
+    def rangeRuns(keys: KeyWindows,
         counters: ScanCounters = null,
-        colSet: Array[Array[Byte]] = null,
-        colWindow: (Array[Byte], Array[Byte]) = null,
-        subSet: Array[Array[Byte]] = null,
-        subWindow: (Array[Byte], Array[Byte]) = null): Seq[Iterator[Cell]] = {
+        cols: KeyWindows = null,
+        subs: KeyWindows = null): Seq[Iterator[Cell]] = {
       val infos = runInfos(file)
-      val blooms = if (keys == null) null else runBlooms(file)
-      val colRanges =
-        if (colSet == null && colWindow == null) null else runColRanges(file)
+      val blooms = if (keys.points == null) null else runBlooms(file)
+      val colSet = if (cols == null) null else cols.points
+      val subSet = if (subs == null) null else subs.points
+      val colRanges = if (cols == null) null else runColRanges(file)
       val colBlooms = if (colSet == null) null else runColBlooms(file)
-      val subRanges =
-        if (subSet == null && subWindow == null) null else runSubRanges(file)
+      val subRanges = if (subs == null) null else runSubRanges(file)
       val subBlooms = if (subSet == null) null else runSubBlooms(file)
-      def colExcluded(r: (Array[Byte], Array[Byte])): Boolean =
-        (colSet != null && !anyColIn(colSet, r._1, r._2)) ||
-          (colWindow != null &&
-            ((colWindow._1 != null && Codecs.compareBytes(colWindow._1, r._2) > 0) ||
-             (colWindow._2 != null && Codecs.compareBytes(colWindow._2, r._1) < 0)))
-      def subExcluded(r: (Array[Byte], Array[Byte])): Boolean =
-        (subSet != null && !anyColIn(subSet, r._1, r._2)) ||
-          (subWindow != null &&
-            ((subWindow._1 != null && Codecs.compareBytes(subWindow._1, r._2) > 0) ||
-             (subWindow._2 != null && Codecs.compareBytes(subWindow._2, r._1) < 0)))
       infos.zipWithIndex.map { case (ri, i) =>
         val runKeys =
           if (blooms == null || blooms(i) == null) keys
-          else keys.filter(blooms(i).mightContain)
-        if (runKeys != null && runKeys.isEmpty) {
-          if (counters != null) counters.runsBloomSkipped += 1
+          else keys.filterPoints(blooms(i).mightContain)
+        if (runKeys.isEmpty) {
+          if (counters != null && blooms != null) counters.runsBloomSkipped += 1
           Iterator.empty
         } else if (colRanges != null && colRanges(i) != null &&
-            colExcluded(colRanges(i))) {
+            !cols.meets(colRanges(i)._1, colRanges(i)._2)) {
           // run-wide min/max clustering: no wanted column can be in this
           // run, so neither can a tombstone for one — skip it whole
           if (counters != null) counters.runsColSkipped += 1
@@ -4265,7 +4187,7 @@ object CellStore {
           if (counters != null) counters.runsColBloomSkipped += 1
           Iterator.empty
         } else if (subRanges != null && subRanges(i) != null &&
-            subExcluded(subRanges(i))) {
+            !subs.meets(subRanges(i)._1, subRanges(i)._2)) {
           // run-wide [subMin, subMax]: no wanted SUB-column can be in this
           // run (nor a tombstone for one — tombstones carry their sub
           // bytes and fed the window too) — skip it whole
@@ -4280,8 +4202,7 @@ object CellStore {
           Iterator.empty
         } else {
           if (counters != null) counters.runsRead += 1
-          rangeRun(ri, lo, hi, colSet, counters, colWindow, subSet, subWindow,
-            runKeys)
+          rangeRun(ri, runKeys, cols, subs, counters)
         }
       }
     }
@@ -4398,58 +4319,42 @@ object CellStore {
     * tombstone reconciliation stay exact no matter how a bucket is split;
     * the run index makes each range read ~its share of the bytes. */
   final class BucketMergeIterator(tableDir: String, bucket: Int,
-      lower: Array[Byte] = null, upper: Array[Byte] = null,
+      keys: KeyWindows = KeyWindows.All,
       asOf: Long = Long.MaxValue,
       ttl: Long = 0L, now: Long = 0L,
       counterMerge: Boolean = false,
-      lookupKeys: Seq[Array[Byte]] = null,
       onlyFiles: Seq[Path] = null,
       counters: ScanCounters = null,
-      colLookup: Seq[Array[Byte]] = null,
-      colWindow: (Array[Byte], Array[Byte]) = null,
-      subLookup: Seq[Array[Byte]] = null,
-      subWindow: (Array[Byte], Array[Byte]) = null)
+      cols: KeyWindows = null,
+      subs: KeyWindows = null)
     extends Iterator[Cell] with AutoCloseable {
     // onlyFiles: the change-feed restriction — merge ONLY these committed
     // segments (one micro-batch's delta) instead of the whole bucket; LWW
     // and tombstone reconciliation then apply within the restricted set,
     // which is exactly the batch-local view a change feed emits.
-    // lookupKeys: the finite key set, sorted and cut to [lower, upper);
-    // only cells of these keys are merged, and when no key is left no
-    // segment is opened at all
-    private val keySorted: Array[Array[Byte]] =
-      if (lookupKeys == null) null
-      else sortedDistinct(lookupKeys).filter(k =>
-        (lower == null || Codecs.compareBytes(k, lower) >= 0) &&
-          (upper == null || Codecs.compareBytes(k, upper) < 0))
+    // keys: only cells inside these key windows are merged (a finite key
+    // set seeks key by key), and when no window is left no segment is
+    // opened at all
     private val segs =
-      (if (keySorted != null && keySorted.isEmpty) Nil
+      (if (keys.isEmpty) Nil
        else if (onlyFiles != null) onlyFiles
        else segmentFiles(tableDir, bucket))
         .map(new SegmentReader(_))
     if (counters != null) counters.segmentsRead += segs.size
-    private val colSorted: Array[Array[Byte]] =
-      if (colLookup == null) null else sortedDistinct(colLookup)
-    private val subSorted: Array[Array[Byte]] =
-      if (subLookup == null) null else sortedDistinct(subLookup)
     private val raw =
-      if (lower == null && upper == null && keySorted == null &&
-          colSorted == null && colWindow == null &&
-          subSorted == null && subWindow == null) {
+      if (keys.isAll && cols == null && subs == null) {
         val rs = segs.flatMap(_.runs())
         if (counters != null) counters.runsRead += rs.size
         rs
-      } else segs.flatMap(
-        _.rangeRuns(lower, upper, keySorted, counters, colSorted, colWindow,
-          subSorted, subWindow))
+      } else segs.flatMap(_.rangeRuns(keys, counters, cols, subs))
     // snapshot read: cells written after the as-of bound never enter LWW
     // reconciliation, so the winner per address is the latest cell <= asOf.
     // TTL (table-level default_time_to_live): a live cell expires once
     // now >= ts + ttl; tombstones never expire (they must keep shadowing).
-    // colLookup: the MULTI-POINT SLICE seek (pushed EqualTo/In on the
-    // clustering column) — only cells whose column name is one of the
-    // listed byte forms enter the merge at all, so a wide row's
-    // non-matching cells are never merged, reconciled, buffered, or
+    // cols: the SLICE seek (pushed EqualTo/In/comparisons on the
+    // clustering column, and the static slice knobs) — only cells whose
+    // column bytes lie in the windows enter the merge at all, so a wide
+    // row's non-matching cells are never merged, reconciled, buffered, or
     // decoded (reader memory drops from O(row width) to O(matches); the
     // cellsMerged metric counts matches, not the row width), and the
     // (key, col)-prefixed run-index entries let rangeRun skip whole index
@@ -4458,22 +4363,11 @@ object CellStore {
     // of a matching (key, col) address is kept, every cell of a
     // non-matching one dropped — the kept addresses reconcile exactly as
     // in the full merge, and a tombstone for a matching column shares its
-    // column bytes, so it is kept and keeps shadowing.
-    private def inWindow(w: (Array[Byte], Array[Byte]), b: Array[Byte]): Boolean =
-      b != null &&
-        (w._1 == null || Codecs.compareBytes(w._1, b) <= 0) &&
-        (w._2 == null || Codecs.compareBytes(b, w._2) <= 0)
-    // subLookup/subWindow: the `:subcolumn` twins of colLookup/colWindow —
-    // cells whose sub bytes miss the pushed point set / byte window never
-    // enter the merge (a null sub fails both, matching SQL NULL comparison
-    // semantics downstream). Per-ADDRESS sound exactly like the col twins:
-    // a tombstone for a wanted (key, col, sub) shares its sub bytes, so it
-    // is kept and keeps shadowing.
+    // column bytes, so it is kept and keeps shadowing. subs: the
+    // `:subcolumn` twin (a null sub matches no window, like SQL NULL).
     private def prune(it: Iterator[Cell]): Iterator[Cell] = {
-      val w0 = if (colWindow == null) it else it.filter(c => inWindow(colWindow, c.col))
-      val a0 = if (colSorted == null) w0 else w0.filter(c => sortedContains(colSorted, c.col))
-      val s0 = if (subWindow == null) a0 else a0.filter(c => inWindow(subWindow, c.sub))
-      val s1 = if (subSorted == null) s0 else s0.filter(c => sortedContains(subSorted, c.sub))
+      val a0 = if (cols == null) it else it.filter(c => cols.contains(c.col))
+      val s1 = if (subs == null) a0 else a0.filter(c => subs.contains(c.sub))
       val a = if (asOf == Long.MaxValue) s1 else s1.filter(_.ts <= asOf)
       if (ttl <= 0L || now <= 0L) a
       else a.filter(c => c.tombstone || now < c.ts + ttl)

@@ -36,16 +36,28 @@ final case class KeyCodec(dt: DataType, ordered: Boolean) {
     if (ordered) Codecs.encodeKeyOrdered(dt, v) else Codecs.encode(dt, v)
   def decode(b: Array[Byte]): Any =
     if (ordered) Codecs.decodeKeyOrdered(dt, b) else Codecs.decode(dt, b)
-  /** Whether encoded-byte order equals SQL value order — the property that
-    * makes pushed key RANGES (> >= < <=) sound to translate into merge-range
-    * bounds and run-index seeks. True for the ordered integral form by
-    * construction, and for string/binary keys under the default bytes form
-    * because their SQL ordering IS unsigned byte order (UTF8String and
-    * BinaryType both compare bytes unsigned). The default integral forms are
-    * NOT ordered: big-endian two's complement sorts negatives after
-    * positives. */
+  /** Whether encoded-byte order equals SQL value order, over the whole
+    * domain — the property behind every ORDER claim: MIN/MAX from byte
+    * extremes, reported scan orderings and TopN, and `range.bounds`. True
+    * for the ordered form by construction, and for string/binary values
+    * under the default bytes form because their SQL ordering IS unsigned
+    * byte order (UTF8String and BinaryType both compare bytes unsigned).
+    * The default integral and timestamp forms are NOT ordered: big-endian
+    * two's complement sorts negatives after positives. Range SEEKS do not
+    * need it: [[KeyWindows]] splits a value range on those forms into its
+    * non-negative and negative byte intervals. */
   def rangeOrdered: Boolean =
     ordered || dt == StringType || dt == BinaryType
+
+  /** Whether byte equality is SQL equality, so a pushed point set can seek
+    * and filter by bytes: every ordered form (it normalizes -0.0 and NaN),
+    * and the plain forms except float/double (SQL -0.0 = 0.0, different
+    * IEEE bits) and decimal. */
+  def injective: Boolean = ordered || (dt match {
+    case StringType | BinaryType | BooleanType | DateType | TimestampType |
+      LongType | IntegerType | ShortType | ByteType => true
+    case _ => false
+  })
 }
 
 object KeyCodec {
@@ -472,7 +484,7 @@ object Codecs {
     * which only incrementing the 'a' achieves). Null = no upper bound:
     * the empty prefix matches everything, and an all-0xFF prefix has no
     * byte string above its window. Shared by the row-key prefix envelope
-    * ([[KeyLookupBounds]]) and the index postings prefix seek
+    * ([[KeyWindows]]) and the index postings prefix seek
     * ([[Index]]) so both use one boundary convention. */
   def prefixSucc(p: Array[Byte]): Array[Byte] = {
     var i = p.length - 1

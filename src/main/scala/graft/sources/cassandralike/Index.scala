@@ -551,9 +551,7 @@ object Index {
     val b = TokenRing.bucket(ek, buckets)
     if (filesByBucket != null && !filesByBucket.contains(b))
       return Some(Vector.empty) // no (covered) segments can hold postings
-    val hi = java.util.Arrays.copyOf(ek, ek.length + 1) // succ: ek ++ 0x00
-    val it = new CellStore.BucketMergeIterator(idxDir, b, ek, hi,
-      lookupKeys = Seq(ek),
+    val it = new CellStore.BucketMergeIterator(idxDir, b, KeyWindows.points(Seq(ek)),
       onlyFiles = if (filesByBucket == null) null else filesByBucket(b))
     try {
       val out = Vector.newBuilder[Array[Byte]]
@@ -727,8 +725,8 @@ object Index {
         if (aborted.get() || scanned.get() > budget) None // already aborted
         else {
           bucketsOpened.incrementAndGet()
-          val it = new CellStore.BucketMergeIterator(idxDir, b, lo, hi,
-            onlyFiles = files)
+          val it = new CellStore.BucketMergeIterator(idxDir, b,
+            KeyWindows.span(lo, hi), onlyFiles = files)
           inFlight.add(it)
           try {
             val out = Vector.newBuilder[(Array[Byte], Array[Byte])]

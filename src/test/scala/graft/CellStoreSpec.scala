@@ -351,7 +351,7 @@ class CellStoreSpec extends AnyFunSuite {
         assert(idx.cellPos.toSeq == (0 until 1000 by CellStore.IndexEvery).toSeq)
         assert(new String(idx.lastKey) == "k0999")
         // seek into the middle of the compacted run via the index
-        val ranged = r.rangeRun(infos.head, "k0100".getBytes, "k0200".getBytes)
+        val ranged = r.rangeRun(infos.head, KeyWindows.span("k0100".getBytes, "k0200".getBytes))
           .map(x => new String(x.key)).toSeq
         assert(ranged == (100 until 200).map(i => f"k$i%04d"))
       } finally r.close()
@@ -382,7 +382,7 @@ class CellStoreSpec extends AnyFunSuite {
         val ri = CellStore.runInfos(file).head
         val r = new CellStore.SegmentReader(file)
         try {
-          val full = r.rangeRun(ri, null, null)
+          val full = r.rangeRun(ri, KeyWindows.All)
             .map(c => (new String(c.key), new String(c.col))).toVector
           // random bounds drawn FROM the present keys (worst case: equal keys)
           val keys = full.map(_._1).distinct.sorted
@@ -391,9 +391,9 @@ class CellStoreSpec extends AnyFunSuite {
           val lowers = (null: String) +: bounds
           val uppers = bounds :+ (null: String)
           val tiled = lowers.zip(uppers).flatMap { case (lo, hi) =>
-            r.rangeRun(ri,
+            r.rangeRun(ri, KeyWindows.span(
               if (lo == null) null else lo.getBytes,
-              if (hi == null) null else hi.getBytes)
+              if (hi == null) null else hi.getBytes))
               .map(c => (new String(c.key), new String(c.col))).toVector
           }
           assert(tiled == full,
@@ -445,16 +445,60 @@ class CellStoreSpec extends AnyFunSuite {
     } finally CellStore.dropTable(dir)
   }
 
-  // ---- KeyLookupBounds: point-lookup segment-range pruning ----
+  // ---- KeyWindows: point-lookup segment-range pruning ----
 
-  private val kb = {
-    import org.apache.spark.sql.sources.{EqualTo, In, GreaterThan, Filter}
-    (fs: Array[Filter], lo: Array[Byte], hi: Array[Byte]) =>
-      KeyLookupBounds(fs, "userid", KeyCodec(StringType, ordered = false), lo, hi)
+  private def kw(fs: Array[org.apache.spark.sql.sources.Filter],
+      lo: Array[Byte], hi: Array[Byte]): KeyWindows =
+    KeyWindows.of("userid", KeyCodec(StringType, ordered = false), fs).within(lo, hi)
+  private def kb(fs: Array[org.apache.spark.sql.sources.Filter],
+      lo: Array[Byte], hi: Array[Byte]): (Array[Byte], Array[Byte]) = {
+    val w = kw(fs, lo, hi)
+    assert(!w.isEmpty)
+    (w.spans.head._1, w.spans.last._2)
   }
   private def enc(s: String): Array[Byte] =
     Codecs.encode(StringType, UTF8String.fromString(s))
   private def cmpB(a: Array[Byte], b: Array[Byte]) = Codecs.compareBytes(a, b)
+
+  test("KeyWindows: bytes int/long/timestamp comparisons are exact across zero and the extremes") {
+    import org.apache.spark.sql.sources._
+    import org.apache.spark.sql.types.{DataType, IntegerType, LongType, TimestampType}
+    val ops: Seq[(String, (String, Any) => Filter, (Long, Long) => Boolean)] = Seq(
+      (">", GreaterThan(_, _), _ > _), (">=", GreaterThanOrEqual(_, _), _ >= _),
+      ("<", LessThan(_, _), _ < _), ("<=", LessThanOrEqual(_, _), _ <= _))
+    // stored values (timestamps: whole millis, as the writer stores them)
+    // and the bounds compared against them, in the field's Catalyst unit
+    def check(dt: DataType, stored: Seq[Long], bounds: Seq[Long], lit: Long => Any): Unit = {
+      val codec = KeyCodec(dt, ordered = false)
+      def cat(v: Long): Any = if (dt == IntegerType) v.toInt else v
+      for ((name, op, holds) <- ops; b <- bounds) {
+        val w = KeyWindows.of("k", codec, Array(op("k", lit(b))))
+        assert(w.spans.length <= 2)
+        stored.foreach(v => assert(w.contains(codec.encode(cat(v))) == holds(v, b),
+          s"${dt.simpleString}: $v $name $b"))
+      }
+    }
+    val ints = Seq(Int.MinValue.toLong, Int.MinValue + 1L, -1001L, -1000L, -2L, -1L, 0L, 1L,
+      2L, 1000L, Int.MaxValue - 1L, Int.MaxValue.toLong)
+    check(IntegerType, ints, ints, _.toInt)
+    val longs = Seq(Long.MinValue, Long.MinValue + 1, -1L << 40, -3L, -1L, 0L, 1L, 3L,
+      1L << 40, Long.MaxValue - 1, Long.MaxValue)
+    check(LongType, longs, longs, identity)
+    check(TimestampType, Seq(-3000000L, -2000L, -1000L, 0L, 1000L, 2000L, 3000000L),
+      Seq(Long.MinValue, -2500L, -2000L, -1999L, -1001L, -1L, 0L, 1L, 999L, 1000L, 1001L,
+        2500L, Long.MaxValue), identity)
+    // a timestamp equality with sub-milli micros matches no stored key
+    val ts = KeyCodec(TimestampType, ordered = false)
+    assert(KeyWindows.of("k", ts, Array(EqualTo("k", 1500L))).isEmpty)
+    assert(KeyWindows.of("k", ts, Array(EqualTo("k", 2000L))).points.length == 1)
+    // conjuncts intersect: a sign-crossing range is two windows, a
+    // one-value range is a point
+    val lc = KeyCodec(LongType, ordered = false)
+    assert(KeyWindows.of("k", lc, Array(GreaterThanOrEqual("k", -5L), LessThan("k", 5L)))
+      .spans.length == 2)
+    val one = KeyWindows.of("k", lc, Array(GreaterThanOrEqual("k", 5L), LessThanOrEqual("k", 5L)))
+    assert(one.points.toSeq.map(_.toSeq) == Seq(Codecs.encode(LongType, 5L).toSeq))
+  }
 
   test("key bounds: EqualTo narrows to [k, k+0x00) — exactly the key") {
     import org.apache.spark.sql.sources.EqualTo
@@ -480,16 +524,14 @@ class CellStoreSpec extends AnyFunSuite {
     // EqualTo AND In -> the shared key survives as the envelope
     val (lo, hi) = kb(Array(EqualTo("userid", "g"), In("userid", Array("a", "g"))), null, null)
     assert(cmpB(lo, enc("g")) == 0 && cmpB(hi, enc("g") :+ 0.toByte) == 0)
-    // two different EqualTo -> empty range (lo == hi)
-    val (l2, h2) = kb(Array(EqualTo("userid", "a"), EqualTo("userid", "b")), null, null)
-    assert(cmpB(l2, h2) == 0)
+    // two different EqualTo -> no window at all
+    assert(kw(Array(EqualTo("userid", "a"), EqualTo("userid", "b")), null, null).isEmpty)
   }
 
   test("key bounds: partition sub-split range only ever tightens") {
     import org.apache.spark.sql.sources.EqualTo
     // partition range sits entirely above the key -> empty after intersect
-    val (lo, hi) = kb(Array(EqualTo("userid", "b")), enc("m"), null)
-    assert(lo != null && hi != null && cmpB(lo, hi) >= 0 || cmpB(enc("b"), lo) < 0)
+    assert(kw(Array(EqualTo("userid", "b")), enc("m"), null).isEmpty)
     // no filters -> partition range passes through untouched
     val (l2, h2) = kb(Array.empty, enc("a"), enc("z"))
     assert(cmpB(l2, enc("a")) == 0 && cmpB(h2, enc("z")) == 0)
@@ -569,7 +611,7 @@ class CellStoreSpec extends AnyFunSuite {
       assert(CellStore.runBlooms(CellStore.segmentFiles(dir, 0).head).toSeq == Seq(null))
       // point lookup over a bloom-less run falls back to the range scan
       val it = new CellStore.BucketMergeIterator(dir, 0,
-        "k03".getBytes, "k03 ".getBytes, lookupKeys = Seq("k03".getBytes))
+        KeyWindows.points(Seq("k03".getBytes)))
       try assert(it.map(c => new String(c.value)).toSeq == Seq("v3"))
       finally it.close()
     } finally CellStore.dropTable(dir)
@@ -591,12 +633,9 @@ class CellStoreSpec extends AnyFunSuite {
       assert(holds == Seq(false, true, true), "bloom must separate the segments")
       // bloom-pruned lookup reconciles identically: the seg-c tombstone
       // (ts 3) must still shadow seg-b's live cell (ts 2). Mirror the real
-      // reader: KeyLookupBounds always pairs the key set with its
-      // [min, succ(max)) envelope.
+      // reader: the key set is a list of point windows [k, succ(k)).
       def lookup(keys: Seq[Array[Byte]]) = {
-        val sorted = keys.sortWith(Codecs.compareBytes(_, _) < 0)
-        val it = new CellStore.BucketMergeIterator(dir, 0,
-          sorted.head, sorted.last :+ 0.toByte, lookupKeys = keys)
+        val it = new CellStore.BucketMergeIterator(dir, 0, KeyWindows.points(keys))
         try it.map(x => (new String(x.key), new String(x.value))).toSeq
         finally it.close()
       }
@@ -615,8 +654,7 @@ class CellStoreSpec extends AnyFunSuite {
     import org.apache.spark.sql.sources.{EqualTo, GreaterThan, In}
     def ks(fs: Array[org.apache.spark.sql.sources.Filter],
         lo: Array[Byte] = null, hi: Array[Byte] = null) =
-      Option(KeyLookupBounds.keySet(fs, "userid", KeyCodec(StringType, ordered = false), lo, hi))
-        .map(_.map(new String(_)).sorted)
+      Option(kw(fs, lo, hi).points).map(_.toSeq.map(new String(_)).sorted)
     assert(ks(Array(EqualTo("userid", "m"))).contains(Seq("m")))
     assert(ks(Array(In("userid", Array("c", "g", "t")))).contains(Seq("c", "g", "t")))
     // conjuncts intersect (AND semantics)

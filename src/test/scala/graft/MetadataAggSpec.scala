@@ -384,9 +384,10 @@ class MetadataAggSpec extends SparkSpec {
 
   test("range-count: point IN under a PLAIN (non-ranged) key encoding") {
     val sp = spark; import sp.implicits._
-    // BE two's-complement byte order != numeric order, so a COMPARISON
-    // must decline — but equality/IN envelopes are exact under any
-    // injective encoding and stay metadata-answerable
+    // BE two's-complement byte order != numeric order, yet equality/IN
+    // points are exact under any injective encoding, and a COMPARISON is
+    // exact too as byte windows (non-negative part, then negative part) —
+    // both stay metadata-answerable
     val store = Seed.table(spark, sfDir, "spec_agg_range_plain",
       Seq((-5L, "a", 1L), (3L, "a", 2L), (7L, "a", 3L))
         .toDF("k", "c", "v").repartition(1),
@@ -400,9 +401,13 @@ class MetadataAggSpec extends SparkSpec {
     assert(qin.collect()(0).getLong(0) == 2L)
     val qrange = Seed.read(spark, store).filter(col("k") > 0L)
       .agg(count(lit(1)).as("n"))
-    assert(!scanOf(qrange).scan.description().contains("AggStats"),
-      "plain-encoding comparison envelope is not exact; must decline")
+    assert(scanOf(qrange).scan.description().contains("AggStats: complete"),
+      "plain-encoding comparison windows are exact; must resolve at planning")
     assert(qrange.collect()(0).getLong(0) == 2L)
+    val qneg = Seed.read(spark, store).filter(col("k") > -6L && col("k") < 4L)
+      .agg(count(lit(1)).as("n"))
+    assert(scanOf(qneg).scan.description().contains("AggStats: complete"))
+    assert(qneg.collect()(0).getLong(0) == 2L, "sign-crossing windows count -5 and 3")
   }
 
   test("range-count: MIN/MAX of the key answer from boundary spans") {
@@ -596,7 +601,8 @@ class MetadataAggSpec extends SparkSpec {
       assert(df.collect()(0).getLong(0) == want, s"$f: want $want")
     }
     // PLAIN (big-endian two's complement) numeric col: byte order breaks
-    // at the sign for windows — but points stay injective and qualify
+    // at the sign, so a window crossing it is two byte windows, counted
+    // one by one; points stay injective and qualify
     val plain = Seed.table(spark, sfDir, "spec_agg_colplain",
       rows.toDF("k", "c", "v").repartition(1),
       mapping = Some(":key,:column,:value"),
@@ -609,8 +615,8 @@ class MetadataAggSpec extends SparkSpec {
     val qw = Seed.read(spark, plain)
       .filter(col("k") === 1L && col("c") >= -10L && col("c") <= 10L)
       .agg(count(lit(1)).as("n"))
-    assert(!scanOf(qw).scan.description().contains("AggStats"),
-      "plain numeric col window must decline (sign-broken byte order)")
+    assert(scanOf(qw).scan.description().contains("AggStats: complete"),
+      "plain numeric col windows are exact byte windows")
     assert(qw.collect()(0).getLong(0) == 21L)
   }
 
@@ -843,6 +849,55 @@ class MetadataAggSpec extends SparkSpec {
     val want = (100L until 200L).map(_ * 1000L).sum
     val ro = dfo.collect()(0)
     assert(ro.getLong(0) == want && ro.getLong(1) == 100L, s"got $ro")
+  }
+
+  test("range SUM: sign-crossing key ranges on a bytes INT key count window by window") {
+    // default bytes form: negatives sort after positives, so a range that
+    // crosses zero is two byte windows, counted and summed one by one
+    val sp = spark; import sp.implicits._
+    val keys = (-250 until 250) ++ Seq(Int.MinValue, Int.MaxValue)
+    val src = keys.map(i => (i, f"c${math.abs(i % 5)}%02d", i * 3L))
+    val store = Seed.table(spark, sfDir, "spec_agg_bytes_int_range",
+      src.toDF("k", "c", "v").repartition(1),
+      mapping = Some(":key,:column,:value"), props = Map(Options.Buckets -> "2"))
+    def q(f: org.apache.spark.sql.Column) =
+      Seed.read(spark, store).filter(f).agg(sum("v").as("s"), count(lit(1)).as("n"))
+    def fold(rows: Seq[(Int, String, Long)], keep: Int => Boolean) = {
+      val in = rows.filter(r => keep(r._1))
+      (if (in.isEmpty) None else Some(in.map(_._3).sum), in.size.toLong)
+    }
+    def got(df: DataFrame) = {
+      val r = df.collect()(0)
+      (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getLong(1))
+    }
+    val preds: Seq[(org.apache.spark.sql.Column, Int => Boolean)] = Seq(
+      (col("k") >= -100 && col("k") < 100, k => k >= -100 && k < 100),
+      (col("k") < 0, _ < 0),
+      (col("k") > -3 && col("k") <= 0, k => k > -3 && k <= 0),
+      (col("k") >= Int.MinValue && col("k") <= Int.MaxValue, _ => true),
+      (col("k") > Int.MaxValue - 1, _ == Int.MaxValue),
+      (col("k") > 5 && col("k") < -5, _ => false))
+    // disjoint runs: answered at planning, equal to the fold
+    preds.foreach { case (p, keep) =>
+      val df = q(p)
+      assert(scanOf(df).scan.description().contains("AggStats: complete"),
+        s"not complete for $p: ${scanOf(df).scan.description()}")
+      assert(got(df) == fold(src, keep), s"$p")
+    }
+    // overlapping segments: decline to the merge, same answer as the fold
+    val over = (-120 until 80).map(i => (i, f"c${math.abs(i % 5)}%02d", i * 1000L))
+    Seed.append(over.toDF("k", "c", "v").repartition(1), store,
+      Map(Options.WriteTimestamp -> "2"))
+    val now = (src.map(r => ((r._1, r._2), r)).toMap ++ over.map(r => ((r._1, r._2), r)))
+      .values.toSeq
+    // (the contradictory range keeps no window, so no bucket to fold)
+    preds.dropRight(1).foreach { case (p, keep) =>
+      val df = q(p)
+      assert(!scanOf(df).scan.description().contains("AggStats: complete"), s"$p")
+      assert(drain(df)._1 == 0L, s"overlapping runs must fold for $p")
+      assert(got(df) == fold(now, keep), s"$p after overwrite")
+    }
+    assert(got(q(preds.last._1)) == (None, 0L))
   }
 
   test("range SUM declines: text marshal, non-long values, overflow") {
@@ -1182,6 +1237,39 @@ class MetadataAggSpec extends SparkSpec {
       scanOf(g2).scan.description())
     val rg2 = g2.collect()(0)
     assert(rg2.getString(0) == "s1" && rg2.getString(1) == "s4")
+  }
+
+  test("range-count: contradictory col and sub ranges give NULL MIN/MAX, not a row extreme") {
+    val sp = spark; import sp.implicits._
+    val rows = for {
+      k <- Seq("k1", "k2", "k3")
+      c <- Seq("ca", "cb", "cc")
+      s <- Seq("s1", "s2", "s3", "s4")
+    } yield (k, c, s, 1L)
+    val store = Seed.table(spark, sfDir, "spec_agg_empty_windows",
+      rows.toDF("k", "c", "s", "v").repartition(1),
+      mapping = Some(":key,:column,:subcolumn,:value"))
+    // the col range `cc < c < cb` and the sub range `s3 < s < s2` hold no value
+    val emptyCol = col("c") > "cc" && col("c") < "cb"
+    val emptySub = col("c") === "cb" && col("s") > "s3" && col("s") < "s2"
+    Seq(("c", col("k") === "k1" && emptyCol),
+        ("s", col("k") === "k1" && emptySub)).foreach { case (c, f) =>
+      val u = Seed.read(spark, store).filter(f)
+        .agg(min(c).as("mn"), max(c).as("mx"), count(lit(1)).as("n"))
+      assert(scanOf(u).scan.description().contains("AggStats: complete"),
+        scanOf(u).scan.description())
+      val r = u.collect()(0)
+      assert(r.isNullAt(0) && r.isNullAt(1) && r.getLong(2) == 0L, s"$c: got $r")
+    }
+    // grouped: no key has a cell in the empty windows, so no group
+    Seq(("c", col("k").isin("k1", "k3") && emptyCol),
+        ("s", col("k").isin("k1", "k3") && emptySub)).foreach { case (c, f) =>
+      val g = Seed.read(spark, store).filter(f)
+        .groupBy("k").agg(min(c).as("mn"), max(c).as("mx"))
+      assert(scanOf(g).scan.description().contains("AggStats: complete"),
+        scanOf(g).scan.description())
+      assert(g.collect().isEmpty, s"$c: got ${g.collect().toSeq}")
+    }
   }
 
   test("tombstone netting: DELETE then COUNT without compaction stays metadata") {

@@ -241,16 +241,17 @@ class OrderedKeySpec extends SparkSpec {
       "sign-crossing range must be exact under the ordered encoding")
     val cellsOrd = cellsMergedFor(q)
     assert(cellsOrd < n / 2, s"ordered key range must seek: merged $cellsOrd of $n")
-    // default bytes form on integral keys: big-endian two's complement is
-    // NOT value-ordered (negatives sort after positives), so the range must
-    // not tighten the merge — Spark's residual filter keeps it exact
+    // default bytes form on integral keys: big-endian two's complement
+    // sorts negatives after positives, so the sign-crossing range becomes
+    // two byte windows, [0, 10) then [-10, -1], each seeked on its own
     val bytes = Seed.table(spark, sfDir, "spec_key_range_bytes", src,
       props = Map(Options.Buckets -> "4"))
     val qb = Seed.read(spark, bytes).filter($"k" >= -10L && $"k" < 10L)
     assert(qb.collect().map(_.getLong(0)).sorted.toSeq == (-10L until 10L),
-      "unpushable range must still be exact via Spark's residual filter")
-    assert(cellsMergedFor(qb) == n,
-      "bytes-encoded integral keys must not translate ranges to bounds")
+      "sign-crossing range must be exact under the bytes encoding")
+    val cellsBytes = cellsMergedFor(qb)
+    assert(cellsBytes < n / 2,
+      s"bytes-encoded integral key range must seek its two windows: merged $cellsBytes of $n")
     // string keys: SQL order IS unsigned byte order, so ranges push under
     // the default bytes form with no opt-in
     val ssrc = (0 until n).map(i => (f"k$i%04d", i.toLong)).toDF("k", "i")
@@ -264,6 +265,50 @@ class OrderedKeySpec extends SparkSpec {
     val one = Seed.read(spark, ord).filter($"k" >= 480L)
     assert(one.collect().map(_.getLong(0)).sorted.toSeq == (480L to 499L))
     assert(cellsMergedFor(one) < n / 2, "open-ended range must seek")
+  }
+
+  test("bytes BIGINT keys seek ranges but claim no order: MIN/MAX, ORDER BY, range.bounds") {
+    import org.apache.spark.sql.execution.SortExec
+    val sp = spark; import sp.implicits._
+    // negatives sort AFTER positives in the bytes form, and the type's
+    // extremes sit at both ends of each half
+    val keys = Seq(Long.MinValue, Long.MinValue + 1, -1000L, -2L, -1L, 0L, 1L,
+      2L, 999L, Long.MaxValue - 1, Long.MaxValue)
+    val src = keys.map(k => (k, s"v$k")).toDF("k", "v")
+    val store = Seed.table(spark, sfDir, "spec_bytes_long_order", src,
+      props = Map(Options.Buckets -> "4"))
+    def extremes(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val r = df.agg(min($"k"), max($"k")).collect().head
+      (r.getLong(0), r.getLong(1))
+    }
+    val ranges: Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = Seq(
+      _ => lit(true),
+      k => k >= -1000L && k < 1000L,
+      k => k > Long.MinValue && k <= Long.MaxValue,
+      k => k < 0L,
+      k => k >= 0L,
+      k => k >= Long.MinValue && k < -1L || k === Long.MaxValue)
+    ranges.foreach { r =>
+      val want = extremes(src.filter(r($"k")))
+      assert(extremes(Seed.read(spark, store).filter(r($"k"))) == want,
+        s"MIN/MAX of a bytes BIGINT key must equal Spark's, want $want")
+      assert(Seed.read(spark, store).filter(r($"k")).collect().map(_.getLong(0)).toSet ==
+        src.filter(r($"k")).collect().map(_.getLong(0)).toSet)
+    }
+    // no ordering is reported: ORDER BY k still plans its sort
+    val sorted = Seed.read(spark, store).orderBy($"k")
+    assert(sorted.collect().map(_.getLong(0)).toSeq == keys.sorted)
+    def walk(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = (p match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q +: walk(q.plan)
+        case other => Seq(other)
+      }) ++ p.children.flatMap(walk)
+    assert(walk(sorted.queryExecution.executedPlan).exists(_.isInstanceOf[SortExec]),
+      "a bytes BIGINT key must not report a scan ordering")
+    // range.bounds needs a value-ordered byte form
+    intercept[Exception](Seed.table(spark, sfDir, "spec_bytes_long_bounds", src,
+      props = Map(Options.RangeBounds -> "-10,10", Options.Buckets -> "3")))
   }
 
   test("key.encoding is a locked layout property once segments exist") {

@@ -53,7 +53,7 @@ class ScanMetricsSpec extends SparkSpec {
       seg(dir, "b0-b.bin", Seq(cell("only_in_b", "c1", "vb", 1L)))
       val c = new ScanCounters
       val it = new CellStore.BucketMergeIterator(dir, 0,
-        lookupKeys = Seq("only_in_b".getBytes), counters = c)
+        keys = KeyWindows.points(Seq("only_in_b".getBytes)), counters = c)
       try assert(it.toVector.map(x => new String(x.key)) == Vector("only_in_b"))
       finally it.close()
       assert(c.runsBloomSkipped == 1, s"runsBloomSkipped=${c.runsBloomSkipped}")
@@ -73,7 +73,7 @@ class ScanMetricsSpec extends SparkSpec {
       val wanted = Seq("c00007", "c01234", "c03999").map(_.getBytes.asInstanceOf[Array[Byte]])
       val c = new ScanCounters
       val it = new CellStore.BucketMergeIterator(dir, 0,
-        counters = c, colLookup = wanted)
+        counters = c, cols = KeyWindows.points(wanted))
       try {
         val got = it.toVector.map(x => new String(x.col)).sorted
         assert(got == Seq("c00007", "c01234", "c03999"), s"got $got")
@@ -88,7 +88,7 @@ class ScanMetricsSpec extends SparkSpec {
       seg(dir, "b0-b.bin", Seq(tomb("hotkey", "c01234", 2L)))
       val c2 = new ScanCounters
       val it2 = new CellStore.BucketMergeIterator(dir, 0,
-        counters = c2, colLookup = wanted)
+        counters = c2, cols = KeyWindows.points(wanted))
       try assert(it2.toVector.map(x => new String(x.col)).sorted ==
         Seq("c00007", "c03999"))
       finally it2.close()
@@ -108,7 +108,7 @@ class ScanMetricsSpec extends SparkSpec {
       val wanted = Seq("t00042".getBytes.asInstanceOf[Array[Byte]])
       val c = new ScanCounters
       val it = new CellStore.BucketMergeIterator(dir, 0,
-        counters = c, colLookup = wanted)
+        counters = c, cols = KeyWindows.points(wanted))
       try assert(it.toVector.map(x => new String(x.value)) == Vector("v42"))
       finally it.close()
       assert(c.runsColSkipped == 1, s"runsColSkipped=${c.runsColSkipped}")
@@ -117,7 +117,7 @@ class ScanMetricsSpec extends SparkSpec {
       seg(dir, "b0-del.bin", Seq(tomb("k", "t00700", 3L)))
       val c2 = new ScanCounters
       val it2 = new CellStore.BucketMergeIterator(dir, 0,
-        counters = c2, colLookup = Seq("t00700".getBytes))
+        counters = c2, cols = KeyWindows.points(Seq("t00700".getBytes)))
       try assert(it2.toVector.isEmpty)
       finally it2.close()
       assert(c2.runsColSkipped == 1, "only the old run's window excludes t00700")
@@ -133,7 +133,7 @@ class ScanMetricsSpec extends SparkSpec {
       seg(dir, "b0-b.bin", (4000 until 4200).map(i => cell("hot", f"c$i%05d", s"v$i", 1L)))
       val c = new ScanCounters
       val it = new CellStore.BucketMergeIterator(dir, 0,
-        counters = c, colWindow = ("c00100".getBytes, "c00149".getBytes))
+        counters = c, cols = KeyWindows.closed("c00100".getBytes, "c00149".getBytes))
       try {
         val got = it.toVector.map(x => new String(x.col))
         assert(got == (100 until 150).map(i => f"c$i%05d"), s"got ${got.take(5)}…")
@@ -157,7 +157,7 @@ class ScanMetricsSpec extends SparkSpec {
       val wantedOdd = Seq("c00777".getBytes.asInstanceOf[Array[Byte]])
       val c = new ScanCounters
       val it = new CellStore.BucketMergeIterator(dir, 0,
-        counters = c, colLookup = wantedOdd)
+        counters = c, cols = KeyWindows.points(wantedOdd))
       try assert(it.toVector.isEmpty)
       finally it.close()
       assert(c.runsColSkipped == 0,
@@ -169,7 +169,7 @@ class ScanMetricsSpec extends SparkSpec {
       // a PRESENT even column still reads (bloom has no false negatives)
       val c2 = new ScanCounters
       val it2 = new CellStore.BucketMergeIterator(dir, 0,
-        counters = c2, colLookup = Seq("c00776".getBytes))
+        counters = c2, cols = KeyWindows.points(Seq("c00776".getBytes)))
       try assert(it2.toVector.map(x => new String(x.value)) == Vector("v776"))
       finally it2.close()
       assert(c2.runsColBloomSkipped == 0)
@@ -178,7 +178,7 @@ class ScanMetricsSpec extends SparkSpec {
       seg(dir, "b0-del.bin", Seq(tomb("hot", "c00776", 2L)))
       val c3 = new ScanCounters
       val it3 = new CellStore.BucketMergeIterator(dir, 0,
-        counters = c3, colLookup = Seq("c00776".getBytes))
+        counters = c3, cols = KeyWindows.points(Seq("c00776".getBytes)))
       try assert(it3.toVector.isEmpty)
       finally it3.close()
       assert(c3.tombstonesDropped == 1)
@@ -197,7 +197,7 @@ class ScanMetricsSpec extends SparkSpec {
       seg(dir, "b0-b.bin", (4000 until 4200).map(i => sup("hot", "c0", i, s"v$i")))
       val c = new ScanCounters
       val it = new CellStore.BucketMergeIterator(dir, 0, counters = c,
-        subWindow = ("s00100".getBytes, "s00149".getBytes))
+        subs = KeyWindows.closed("s00100".getBytes, "s00149".getBytes))
       try {
         val got = it.toVector.map(x => new String(x.sub))
         assert(got == (100 until 150).map(i => f"s$i%05d"), s"got ${got.take(5)}…")
@@ -210,7 +210,7 @@ class ScanMetricsSpec extends SparkSpec {
       // a multi-point sub lookup drives the same machinery
       val c2 = new ScanCounters
       val it2 = new CellStore.BucketMergeIterator(dir, 0, counters = c2,
-        subLookup = Seq("s00042".getBytes, "s03999".getBytes))
+        subs = KeyWindows.points(Seq("s00042".getBytes, "s03999".getBytes)))
       try assert(it2.toVector.map(x => new String(x.value)) ==
         Vector("v42", "v3999"))
       finally it2.close()
@@ -222,7 +222,7 @@ class ScanMetricsSpec extends SparkSpec {
       // skips via min/max — both skips land in runsSubSkipped)
       val cb = new ScanCounters
       val itb = new CellStore.BucketMergeIterator(dir, 0, counters = cb,
-        subLookup = Seq("s02000x".getBytes))
+        subs = KeyWindows.points(Seq("s02000x".getBytes)))
       try assert(itb.toVector.isEmpty)
       finally itb.close()
       assert(cb.runsSubSkipped == 2 && cb.runsRead == 0,
@@ -235,7 +235,7 @@ class ScanMetricsSpec extends SparkSpec {
           Array.emptyByteArray, 2L, tombstone = true)))
       val c3 = new ScanCounters
       val it3 = new CellStore.BucketMergeIterator(dir, 0, counters = c3,
-        subLookup = Seq("s00042".getBytes))
+        subs = KeyWindows.points(Seq("s00042".getBytes)))
       try assert(it3.toVector.isEmpty)
       finally it3.close()
       assert(c3.tombstonesDropped == 1)
@@ -249,7 +249,7 @@ class ScanMetricsSpec extends SparkSpec {
         // just assert the window read is exact when the run must be read
         val c4 = new ScanCounters
         val it4 = new CellStore.BucketMergeIterator(legacy, 0, counters = c4,
-          subWindow = ("s00003".getBytes, "s00004".getBytes))
+          subs = KeyWindows.closed("s00003".getBytes, "s00004".getBytes))
         try assert(it4.toVector.map(x => new String(x.value)) == Vector("v3", "v4"))
         finally it4.close()
       } finally CellStore.dropTable(legacy)
@@ -268,7 +268,7 @@ class ScanMetricsSpec extends SparkSpec {
       // rejects it -> whole-run skip, zero payload IO
       val c = new ScanCounters
       val it = new CellStore.BucketMergeIterator(dir, 0, counters = c,
-        colLookup = Seq("c00000777".getBytes))
+        cols = KeyWindows.points(Seq("c00000777".getBytes)))
       try assert(it.toVector.isEmpty)
       finally it.close()
       assert(c.runsColBloomSkipped == 1,
@@ -279,7 +279,7 @@ class ScanMetricsSpec extends SparkSpec {
       val wanted = f"c${2 * (n - 100)}%08d"
       val c2 = new ScanCounters
       val it2 = new CellStore.BucketMergeIterator(dir, 0, counters = c2,
-        colLookup = Seq(wanted.getBytes))
+        cols = KeyWindows.points(Seq(wanted.getBytes)))
       try assert(it2.toVector.map(x => new String(x.value)) == Vector(s"v${n - 100}"))
       finally it2.close()
       assert(c2.runsColBloomSkipped == 0)
@@ -326,7 +326,7 @@ class ScanMetricsSpec extends SparkSpec {
       out.close()
       val c = new ScanCounters
       val it = new CellStore.BucketMergeIterator(dir, 0,
-        counters = c, colLookup = Seq("c0123".getBytes))
+        counters = c, cols = KeyWindows.points(Seq("c0123".getBytes)))
       try assert(it.toVector.map(x => new String(x.value)) == Vector("v123"))
       finally it.close()
       assert(c.cellsSeekSkipped == 0, "legacy index has no col tail to seek by")
@@ -402,6 +402,26 @@ class ScanMetricsSpec extends SparkSpec {
       }
     }
     totals
+  }
+
+  test("key range on a bytes INT wide store merges exactly the rows in range") {
+    // 1,000 rows of 200 int columns under the default bytes encoding: a
+    // 50-row key range becomes byte windows the run indexes seek, so the
+    // merge reads those 50 rows' cells and nothing else
+    val sp = spark; import sp.implicits._
+    val wide = spark.range(0L, 1000L * 200L, 1L, 4)
+      .select((col("id") / 200 + 1).cast("int").as("s"), (col("id") % 200).cast("int").as("c"),
+        (col("id") * 7).as("v"))
+    val dir = Seed.table(spark, sfDir, "spec_metrics_int_range", wide,
+      mapping = Some(":key,:column,:value"))
+    val df = Seed.read(spark, dir).filter(col("s") >= 301 && col("s") < 351)
+    assert(df.collect().length == 50 * 200)
+    val totals = driveTotals(df)
+    assert(totals("cellsMerged") == 10000L, s"50 rows x 200 cells: $totals")
+    // a sign-crossing range over the same layout: two byte windows per run
+    val neg = Seed.read(spark, dir).filter(col("s") >= -5 && col("s") < 3)
+    assert(neg.collect().map(_.getInt(0)).toSet == Set(1, 2))
+    assert(driveTotals(neg)("cellsMerged") == 400L)
   }
 
   test("LIKE-prefix on a string clustering column merges O(matches), not the row width") {
@@ -544,7 +564,7 @@ class ScanMetricsSpec extends SparkSpec {
         .map(_.getBytes.asInstanceOf[Array[Byte]])
       val c = new ScanCounters
       val it = new CellStore.BucketMergeIterator(dir, 0,
-        lookupKeys = keys, counters = c)
+        keys = KeyWindows.points(keys), counters = c)
       val got = try it.toVector.map(x =>
         (new String(x.key), new String(x.col), new String(x.value)))
       finally it.close()
@@ -560,8 +580,8 @@ class ScanMetricsSpec extends SparkSpec {
       // the column seek still applies inside a key window
       val c2 = new ScanCounters
       val it2 = new CellStore.BucketMergeIterator(dir, 0,
-        lookupKeys = Seq("hot".getBytes), counters = c2,
-        colLookup = Seq("c0007", "c0500", "c0999").map(_.getBytes.asInstanceOf[Array[Byte]]))
+        keys = KeyWindows.points(Seq("hot".getBytes)), counters = c2,
+        cols = KeyWindows.points(Seq("c0007", "c0500", "c0999").map(_.getBytes.asInstanceOf[Array[Byte]])))
       try assert(it2.toVector.map(x => new String(x.col)) == Vector("c0007", "c0999"))
       finally it2.close()
       assert(c2.cellsMerged == 2 && c2.cellsSeekSkipped >= 600,

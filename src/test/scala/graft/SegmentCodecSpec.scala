@@ -110,7 +110,7 @@ class SegmentCodecSpec extends AnyFunSuite {
           val want = CellStore.sortedDistinct(
             rnd.shuffle(present).take(5) ++ present.filter(_.length > 1000).take(1) ++
               Seq(bytes(rnd, 3), bytes(rnd, 10)))
-          val byKey = r.rangeRuns(null, null, keys = want).flatMap(_.toSeq).map(norm)
+          val byKey = r.rangeRuns(KeyWindows.points(want)).flatMap(_.toSeq).map(norm)
           same(byKey, cells.filter(c => CellStore.sortedContains(want, c.key)).map(norm),
             s"trial $trial: key seek")
           // column seeks: the seek skips spans, the exact filter stays downstream
@@ -118,11 +118,11 @@ class SegmentCodecSpec extends AnyFunSuite {
             rnd.shuffle(cells.map(_.col).distinctBy(_.toSeq)).take(3) :+ bytes(rnd, 7))
           def inCols(c: Cell) = CellStore.sortedContains(colSet, c.col)
           val c = new ScanCounters
-          val byCol = r.rangeRuns(null, null, counters = c, colSet = colSet)
+          val byCol = r.rangeRuns(KeyWindows.All, counters = c, cols = KeyWindows.points(colSet))
             .flatMap(_.toSeq).filter(inCols).map(norm)
           same(byCol, cells.filter(inCols).map(norm), s"trial $trial: column seek")
           // key and column seek together
-          val both = r.rangeRuns(null, null, keys = want, colSet = colSet)
+          val both = r.rangeRuns(KeyWindows.points(want), cols = KeyWindows.points(colSet))
             .flatMap(_.toSeq).filter(inCols).map(norm)
           same(both, cells.filter(x => inCols(x) &&
             CellStore.sortedContains(want, x.key)).map(norm), s"trial $trial: key + column seek")

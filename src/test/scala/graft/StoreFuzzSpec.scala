@@ -32,6 +32,33 @@ class StoreFuzzSpec extends SparkSpec {
   /** One model cell: (ts, tombstone, encoded value bytes). */
   private case class MCell(ts: Long, tomb: Boolean, bytes: Array[Byte])
 
+  /** Key i of the regular fuzz: both sides of zero, and the type's
+    * extremes at the ends (the bytes form sorts negatives after
+    * positives, so key ranges there are two byte windows). */
+  private def keyOf(i: Int): Long =
+    if (i == 0) Long.MinValue else if (i == 49) Long.MaxValue else i - 25L
+
+  /** A random comparison pair on `c` over `pool`: each side absent,
+    * strict or inclusive, so bounds cross zero and hit MIN/MAX. Returns
+    * the Spark predicate and its model twin. */
+  private def randomRange[T](rnd: Random, c: String, pool: IndexedSeq[T])(
+      implicit ord: Ordering[T]): (org.apache.spark.sql.Column, T => Boolean) = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val lo = pool(rnd.nextInt(pool.size))
+    val hi = pool(rnd.nextInt(pool.size))
+    val (lc, lf): (org.apache.spark.sql.Column, T => Boolean) = rnd.nextInt(3) match {
+      case 0 => (lit(true), _ => true)
+      case 1 => (col(c) > lit(lo), ord.gt(_, lo))
+      case _ => (col(c) >= lit(lo), ord.gteq(_, lo))
+    }
+    val (hc, hf): (org.apache.spark.sql.Column, T => Boolean) = rnd.nextInt(3) match {
+      case 0 => (lit(true), _ => true)
+      case 1 => (col(c) < lit(hi), ord.lt(_, hi))
+      case _ => (col(c) <= lit(hi), ord.lteq(_, hi))
+    }
+    (lc && hc, v => lf(v) && hf(v))
+  }
+
   private def newer(a: MCell, b: MCell): Boolean =
     if (a.ts != b.ts) a.ts > b.ts
     else if (a.tomb != b.tomb) a.tomb
@@ -102,7 +129,7 @@ class StoreFuzzSpec extends SparkSpec {
       def appendRows(tombstoneNulls: Boolean): Unit = {
         ts += 1
         val rows = Seq.fill(1 + rnd.nextInt(30)) {
-          val k = rnd.nextInt(50).toLong
+          val k = keyOf(rnd.nextInt(50))
           val a = if (rnd.nextInt(4) == 0) null
             else java.lang.Double.valueOf(math.round(rnd.nextDouble() * 1e4) / 100.0)
           val b = if (rnd.nextInt(4) == 0) null else s"v${rnd.nextInt(1000)}"
@@ -136,7 +163,7 @@ class StoreFuzzSpec extends SparkSpec {
       }
 
       def deleteKeys(): Unit = {
-        val keys = Seq.fill(1 + rnd.nextInt(5))(rnd.nextInt(60).toLong).distinct
+        val keys = Seq.fill(1 + rnd.nextInt(5))(keyOf(rnd.nextInt(60))).distinct
         val tbl = new CassandraLikeTable(dir, dir, schema, None,
           Map(Options.Buckets -> Buckets.toString))
         tbl.deleteWhere(Array[org.apache.spark.sql.sources.Filter](
@@ -161,8 +188,8 @@ class StoreFuzzSpec extends SparkSpec {
       }
 
       // a random IN read: live, deleted and never-written keys (the model
-      // holds 0..59 at most). Its own stream, so the op sequence above is
-      // the same with or without it.
+      // holds keyOf(0..59) at most). Its own stream, so the op sequence
+      // above is the same with or without it.
       val inRnd = new Random(20260900L + trial)
       def inRead(): Unit = {
         val want = expected(model, Long.MaxValue)
@@ -183,6 +210,27 @@ class StoreFuzzSpec extends SparkSpec {
           s"trial $trial: IN ${keys.mkString(",")} diverged from model after ts=$ts")
       }
 
+      // a random key-range read and range COUNT: bounds cross zero and
+      // include the type's extremes; the count may answer positionally
+      // (window by window) or fold, and must equal the model either way
+      val rangeRnd = new Random(20260950L + trial)
+      val keyPool = Vector(Long.MinValue, Long.MinValue + 1, -30L, -25L, -10L, -1L,
+        0L, 1L, 10L, 24L, 30L, Long.MaxValue - 1, Long.MaxValue)
+      def rangeRead(): Unit = {
+        val (p, keep) = randomRange(rangeRnd, "k", keyPool)
+        val want = expected(model, Long.MaxValue).filter(r => keep(r._1))
+        val got = Seed.read(spark, dir).filter(p).collect().map { r =>
+          (r.getLong(0),
+            if (r.isNullAt(1)) None else Some(r.getDouble(1)),
+            if (r.isNullAt(2)) None else Some(r.getString(2)))
+        }.toSet
+        assert(got == want, s"trial $trial: key range $p diverged from model after ts=$ts")
+        val n = Seed.read(spark, dir).filter(p)
+          .agg(org.apache.spark.sql.functions.count(
+            org.apache.spark.sql.functions.lit(1))).collect()(0).getLong(0)
+        assert(n == want.size, s"trial $trial: COUNT over $p is $n, model ${want.size}")
+      }
+
       (1 to 18).foreach { _ =>
         rnd.nextInt(10) match {
           case n if n <= 4 => appendRows(tombstoneNulls = false)
@@ -195,6 +243,7 @@ class StoreFuzzSpec extends SparkSpec {
         assert(readBack(dir) == expected(model, Long.MaxValue),
           s"trial $trial: live read diverged from model after ts=$ts")
         inRead()
+        rangeRead()
         // metadata-vs-fold COUNT under every interleaving: buckets whose
         // runs are stats-bearing, tombstone-free and key-disjoint answer
         // from the STAT tails, the rest fold cells — the mix is random
@@ -384,6 +433,113 @@ class StoreFuzzSpec extends SparkSpec {
         assert(readBackT(opts) == expectedSlice(start, finish, reversed, count),
           s"trial $trial: slice read (start=$start finish=$finish rev=$reversed " +
             s"count=$count) diverged from model after ts=$ts")
+      }
+      CellStore.dropTable(dir)
+    }
+  }
+
+  private val iSchema = StructType(Seq(
+    StructField("row_key", IntegerType),
+    StructField("column_name", IntegerType),
+    StructField("value", LongType)))
+
+  test("transposed mapping, int keys and columns: random key and column ranges match the LWW model") {
+    // the wide-row fuzz over INT row keys and clustering columns in the
+    // default bytes form, where a value range crossing zero is two byte
+    // windows (negatives sort after positives): every read is a random key
+    // range, column range or both, and range COUNT/SUM may answer
+    // positionally (window by window) or fold
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    val rnd = new Random(20260817)
+    def ikeyOf(i: Int): Int = if (i == 0) Int.MinValue else if (i == 11) Int.MaxValue else i - 6
+    def icolOf(j: Int): Int = if (j == 0) Int.MinValue else if (j == 19) Int.MaxValue else j - 10
+    val keyPool = Vector(Int.MinValue, Int.MinValue + 1, -7, -6, -3, -1, 0, 1, 3, 5, 7,
+      Int.MaxValue - 1, Int.MaxValue)
+    val colPool = Vector(Int.MinValue, -11, -10, -4, -1, 0, 1, 4, 8, 9, Int.MaxValue)
+    (1 to 2).foreach { trial =>
+      val dir = s"/tmp/graft_cellstore_fuzz/i$trial"
+      CellStore.dropTable(dir)
+      CellStore.writeMeta(dir, CellStore.Meta(iSchema.toDDL,
+        ":key,:column,:value", Map(Options.Buckets -> Buckets.toString)))
+      val model = mutable.Map.empty[(Int, Int), mutable.ArrayBuffer[MCell]]
+      var ts = 0L
+      def live: Set[(Int, Int, Long)] =
+        model.iterator.flatMap { case ((k, c), cs) =>
+          winner(cs.toSeq, Long.MaxValue).filter(!_.tomb).map(m =>
+            (k, c, java.nio.ByteBuffer.wrap(m.bytes).getLong))
+        }.toSet
+      def appendCells(tombstoneNulls: Boolean): Unit = {
+        ts += 1
+        val rows = Seq.fill(1 + rnd.nextInt(40)) {
+          val v = if (tombstoneNulls && rnd.nextInt(3) == 0) null
+            else java.lang.Long.valueOf(rnd.nextInt(2000) - 1000L)
+          Row(ikeyOf(rnd.nextInt(12)), icolOf(rnd.nextInt(20)), v)
+        }
+        Seed.append(spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), iSchema),
+          dir, Map(Options.WriteTimestamp -> ts.toString) ++
+            (if (tombstoneNulls) Map(Options.NullsAsTombstones -> "true") else Map.empty))
+        rows.foreach { r =>
+          val v = r.get(2)
+          if (v != null || tombstoneNulls)
+            model.getOrElseUpdate((r.getInt(0), r.getInt(1)), mutable.ArrayBuffer.empty) +=
+              (if (v == null) MCell(ts, tomb = true, null)
+               else MCell(ts, tomb = false,
+                 java.nio.ByteBuffer.allocate(8).putLong(r.getLong(2)).array()))
+        }
+      }
+      def deleteRowKeys(): Unit = {
+        val keys = Seq.fill(1 + rnd.nextInt(3))(ikeyOf(rnd.nextInt(14))).distinct
+        new CassandraLikeTable(dir, dir, iSchema, Some(":key,:column,:value"),
+          Map(Options.Buckets -> Buckets.toString))
+          .deleteWhere(Array[org.apache.spark.sql.sources.Filter](
+            org.apache.spark.sql.sources.In("row_key", keys.map(Int.box).toArray[Any])))
+        keys.groupBy(k => TokenRing.bucket(Codecs.encode(IntegerType, k), Buckets))
+          .foreach { case (_, ks) =>
+            val doomed = model.keys.filter(a => ks.contains(a._1)).toSeq
+              .flatMap(a => winner(model(a).toSeq, Long.MaxValue).filter(!_.tomb).map(c => (a, c)))
+            if (doomed.nonEmpty) {
+              val dts = doomed.map(_._2.ts).max + 1
+              doomed.foreach { case (a, _) => model(a) += MCell(dts, tomb = true, null) }
+              ts = math.max(ts, dts)
+            }
+          }
+      }
+      val readRnd = new Random(20260970L + trial)
+      def rangeReads(): Unit = {
+        val (kp, kKeep) = randomRange(readRnd, "row_key", keyPool)
+        val (cp, cKeep) = randomRange(readRnd, "column_name", colPool)
+        val want = live.filter(r => kKeep(r._1) && cKeep(r._2))
+        val got = Seed.read(spark, dir).filter(kp && cp).collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
+        assert(got == want, s"trial $trial: ranges $kp, $cp diverged from model after ts=$ts")
+        // aggregates over a key range alone, and over a column range under
+        // a pinned key set
+        val byKey = live.filter(r => kKeep(r._1))
+        val agg = Seed.read(spark, dir).filter(kp).agg(count(lit(1)), sum(col("value")))
+          .collect().head
+        assert(agg.getLong(0) == byKey.size &&
+          Option(agg.get(1)) == byKey.headOption.map(_ => byKey.toSeq.map(_._3).sum),
+          s"trial $trial: COUNT/SUM over $kp = $agg, model ${byKey.size}")
+        val pinned = Seq.fill(2)(ikeyOf(readRnd.nextInt(12))).distinct
+        val byCol = live.filter(r => pinned.contains(r._1) && cKeep(r._2))
+        val agg2 = Seed.read(spark, dir).filter(col("row_key").isin(pinned: _*) && cp)
+          .agg(count(lit(1)), sum(col("value"))).collect().head
+        assert(agg2.getLong(0) == byCol.size &&
+          Option(agg2.get(1)) == byCol.headOption.map(_ => byCol.toSeq.map(_._3).sum),
+          s"trial $trial: COUNT/SUM over keys $pinned and $cp = $agg2, model ${byCol.size}")
+      }
+      (1 to 14).foreach { _ =>
+        rnd.nextInt(10) match {
+          case n if n <= 4 => appendCells(tombstoneNulls = false)
+          case 5 | 6 => appendCells(tombstoneNulls = true)
+          case 7 | 8 => deleteRowKeys()
+          case 9 => (0 until Buckets).foreach(b => CellStore.compactBucket(dir, b))
+        }
+        assert(Seed.read(spark, dir).collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet == live,
+          s"trial $trial: int-keyed live read diverged from model after ts=$ts")
+        rangeReads()
+        rangeReads()
       }
       CellStore.dropTable(dir)
     }
