@@ -2664,9 +2664,9 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan =
-    new CellScan(table, required, pushed, options, limit, aggs, groupKeys,
-      limitLast,
+  override def build(): Scan = {
+    val scan = new CellScan(table, required, pushed, options, limit, aggs,
+      groupKeys, limitLast,
       // the answer rows apply only if Spark actually pushed the SAME
       // aggregate list (and grouping) it proved complete (a support probe
       // without the follow-up push must not turn a plain scan into answer
@@ -2674,9 +2674,50 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       completeAnswer.collect {
         case (want, gk, rows) if aggs == want && groupKeys == gk => rows
       })
+    val points = scan.keyWindows.points
+    val answerable = points != null &&
+      points.length <= CellScanBuilder.MaxStatPoints &&
+      aggs.isEmpty && scan.completeRows.isEmpty &&
+      !table.opt(options, Options.ReportPartitioning).exists(_.toBoolean)
+    if (answerable) answerOnDriver(scan).getOrElse(scan) else scan
+  }
+
+  /** Key-addressed read answered at planning: every planned partition is
+    * read serially through the executors' own reader (so LWW, tombstones,
+    * TTL, as-of, slices, FilterEval and blooms stay one implementation) and
+    * the rows go to a [[DriverAnswerScan]], which Spark plans as a
+    * `LocalTableScanExec`: collecting it starts no job. The read stops at
+    * one task's worth of work, `split.target.cells` merged cells; over it
+    * the rows are dropped and the scan runs distributed. The check runs per
+    * emitted row, so one key's cells (the pager's unit) can pass the cap
+    * before the read gives up. Rows are read when the query is planned. */
+  private def answerOnDriver(scan: CellScan): Option[Scan] = {
+    val cap = table.opt(options, Options.SplitTargetCells).map(_.toLong)
+      .getOrElse(Options.DefaultSplitTargetCells)
+    val parts = scan.planInputPartitions()
+    val factory = scan.createReaderFactory()
+    val total = new ScanCounters
+    val rows = mutable.ArrayBuffer.empty[InternalRow]
+    var i = 0
+    while (i < parts.length && total.cellsMerged <= cap) {
+      val r = factory.createReader(parts(i)).asInstanceOf[CellPartitionReader]
+      try {
+        while (total.cellsMerged + r.counters.cellsMerged <= cap && r.next())
+          rows += r.get().copy()
+      } finally { r.close(); total.add(r.counters) }
+      i += 1
+    }
+    if (total.cellsMerged > cap) None
+    else Some(new DriverAnswerScan(scan, rows.toArray, total))
+  }
 }
 
 object CellScanBuilder {
+  /** Largest finite key set that planning reads point by point: the exact
+    * filtered row count of [[CellScan.estimateStatistics]] and the driver
+    * answer of [[CellScanBuilder.build]]. */
+  val MaxStatPoints = 128
+
   /** Pushed-IN size past which COMPLETE range aggregation declines and
     * the distributed partial path owns the point probes. */
   val MaxCompletePoints = 8192
@@ -2817,7 +2858,7 @@ class CellScan(
     // .supportCompletePushDown) — one row for ungrouped forms, one per
     // PRESENT group key for the grouped form; the scan plans ONE
     // partition emitting them
-    completeRows: Option[Seq[InternalRow]] = None)
+    private[cassandralike] val completeRows: Option[Seq[InternalRow]] = None)
   extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning
   with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -3160,7 +3201,6 @@ class CellScan(
     // tails across the store (the quickRunStats policy above). Range
     // COUNTS remain metadata-answerable — through the pushed-aggregate
     // paths, which run only for aggregate queries.
-    val MaxStatPoints = 128
     val exactFiltered: Option[Long] =
       if (exact.isDefined || filters.isEmpty || aggs.nonEmpty) None
       else if (!table.mapping.transposed) None
@@ -3172,7 +3212,7 @@ class CellScan(
       else {
         val (keys, cols, subs) = MetadataAggReader.windowsOf(table.mapping,
           table.keyCodec, table.colCodec, table.subCodec, filters)
-        if (keys.points == null || keys.points.length > MaxStatPoints) None
+        if (keys.points == null || keys.points.length > CellScanBuilder.MaxStatPoints) None
         else {
           val provable = plannedBuckets.forall { b =>
             val rec = CellStore.bucketStats(table.dir, b,
@@ -3210,7 +3250,7 @@ class CellScan(
         k => table.opt(options, k), table.tableProps)) None
       else {
         val ks = KeyWindows.of(table.mapping.keyField.name, table.keyCodec, filters).points
-        if (ks == null || ks.length <= MaxStatPoints) None
+        if (ks == null || ks.length <= CellScanBuilder.MaxStatPoints) None
         else plannedBuckets.foldLeft(Option((0L, 0L))) { (acc, b) =>
           acc.flatMap { case (dk, cls) =>
             CellStore.readBucketStats(table.dir, b,
@@ -3242,7 +3282,7 @@ class CellScan(
   }
 
   /** The pushed key windows of the scan (planning-time + runtime). */
-  private def keyWindows: KeyWindows =
+  private[cassandralike] def keyWindows: KeyWindows =
     KeyWindows.of(table.mapping.keyField.name, table.keyCodec, effectiveFilters)
 
   private def plannedBuckets: Seq[Int] = {
@@ -3320,6 +3360,31 @@ class CellScan(
           effectiveFilters, options, table.tableProps, limit, aggs,
           aggGroupKeys, columnar = true, limitLast = limitLast)
     }
+}
+
+/** A key-addressed read answered at planning (see
+  * [[CellScanBuilder.build]]): Spark plans a `LocalScan` as a
+  * `LocalTableScanExec`, whose collect launches no job. `counters` are the
+  * read's store IO, summed over its partitions; `toBatch` is the wrapped
+  * scan's, so those planned partitions stay inspectable. */
+final class DriverAnswerScan(
+    val scan: CellScan,
+    answer: Array[InternalRow],
+    val counters: ScanCounters)
+  extends org.apache.spark.sql.connector.read.LocalScan
+  with SupportsReportStatistics {
+  override def rows(): Array[InternalRow] = answer
+  override def readSchema(): StructType = scan.readSchema()
+  override def toBatch: Batch = scan
+  override def description(): String =
+    s"${scan.description()} DriverAnswer: rows=${answer.length}, " +
+      s"cellsMerged=${counters.cellsMerged}"
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(
+      math.max(1L, answer.length.toLong * readSchema().defaultSize))
+    override def numRows(): java.util.OptionalLong =
+      java.util.OptionalLong.of(answer.length.toLong)
+  }
 }
 
 /** Emits the planning-precomputed rows of a COMPLETE metadata aggregate
@@ -5069,16 +5134,18 @@ class CellPartitionReader(
     ScanMetrics.values(counters)
 
   /** Cells arrive in (key, col, sub) order; group runs of equal key without
-    * materializing anything beyond the current row. */
-  private def groupAdjacentByKey(cells: Iterator[Cell]): Iterator[(Array[Byte], Seq[Cell])] = {
+    * materializing anything beyond the current row. A row is indexed, so
+    * the pager's per-cell steps are O(1). */
+  private def groupAdjacentByKey(cells: Iterator[Cell])
+      : Iterator[(Array[Byte], IndexedSeq[Cell])] = {
     val it = cells.buffered
-    new Iterator[(Array[Byte], Seq[Cell])] {
+    new Iterator[(Array[Byte], IndexedSeq[Cell])] {
       def hasNext: Boolean = it.hasNext
-      def next(): (Array[Byte], Seq[Cell]) = {
+      def next(): (Array[Byte], IndexedSeq[Cell]) = {
         val k = it.head.key
         val buf = mutable.ArrayBuffer.empty[Cell]
         while (it.hasNext && java.util.Arrays.equals(it.head.key, k)) buf += it.next()
-        (k, buf.toSeq)
+        (k, buf.toIndexedSeq)
       }
     }
   }
@@ -5155,7 +5222,7 @@ class CellPartitionReader(
   }
 
   /** Transposed mapping: one row per cell, via the wide-row pager (S4/S5/S6). */
-  private def transposedRows(group: (Array[Byte], Seq[Cell])): Iterator[InternalRow] = {
+  private def transposedRows(group: (Array[Byte], IndexedSeq[Cell])): Iterator[InternalRow] = {
     val (key, cellsAsc) = group
     val reversed = opt(Options.SliceReversed).exists(_.toBoolean)
     val startB = opt(Options.SliceStart).map(sliceBound(FieldRole.TransColumn, colCodec))
@@ -5171,17 +5238,23 @@ class CellPartitionReader(
     }
     val sliced = if (reversed) sliced0.reverse else sliced0
 
-    // the remote-fetch model the pager drives: cells from startCol (inclusive)
-    // in scan direction, capped at `cnt`
-    def fetch(startCol: Array[Byte], cnt: Int): Seq[Cell] = {
-      val from =
-        if (startCol == null) sliced
-        else if (reversed) sliced.dropWhile(c => Codecs.compareBytes(c.col, startCol) > 0)
-        else sliced.dropWhile(c => Codecs.compareBytes(c.col, startCol) < 0)
-      from.take(cnt)
-    }
     val order: (Array[Byte], Array[Byte]) => Int =
       if (reversed) (a, b) => -Codecs.compareBytes(a, b) else Codecs.compareBytes
+    // the remote-fetch model the pager drives: cells from startCol (inclusive)
+    // in scan direction, capped at `cnt`; the slice is sorted in scan
+    // order, so the start is a binary search and a page costs O(log row +
+    // page), not a walk from the row's first cell
+    def fetch(startCol: Array[Byte], cnt: Int): IndexedSeq[Cell] = {
+      var lo = 0
+      if (startCol != null) {
+        var hi = sliced.length
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (order(sliced(mid).col, startCol) < 0) lo = mid + 1 else hi = mid
+        }
+      }
+      sliced.slice(lo, lo + cnt)
+    }
     var it: Iterator[Cell] = new WideRowIterator(fetch, math.max(2, pageSize), order)
     count.foreach(n => it = it.take(n)) // per-key count cap (P2)
 

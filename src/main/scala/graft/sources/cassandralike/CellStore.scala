@@ -4749,7 +4749,8 @@ final class WideRowIterator(
     val k = order(c.col, col)
     if (k != 0) k else order(nb(c.sub), nb(sub))
   }
-  private var page: Seq[Cell] = fetch(null, pageSize)
+  // pages are indexed: hasNext and next index into them once per cell
+  private var page: IndexedSeq[Cell] = fetch(null, pageSize).toIndexedSeq
   // a raw (untrimmed) page shorter than requested is the row's last page
   private var finalPage = page.length < pageSize
   private var idx = 0
@@ -4767,12 +4768,12 @@ final class WideRowIterator(
     // (its cells all trim away and a same-size re-fetch could never
     // progress past a group larger than one page)
     var cnt = pageSize
-    var np = fetch(lastCol, cnt)
+    var np = fetch(lastCol, cnt).toIndexedSeq
     var fp = np.length < cnt
     var trimmed = np.dropWhile(c => addrCmp(c, lastCol, lastSub) <= 0)
     while (trimmed.isEmpty && !fp) {
       cnt *= 2
-      np = fetch(lastCol, cnt)
+      np = fetch(lastCol, cnt).toIndexedSeq
       fp = np.length < cnt
       trimmed = np.dropWhile(c => addrCmp(c, lastCol, lastSub) <= 0)
     }

@@ -44,6 +44,20 @@ final class ScanCounters {
   /** Partitions whose pushed COUNT/MIN/MAX was answered from run-index
     * metadata alone — zero cell payload IO (see MetadataAggReader). */
   var partitionsStatsOnly: Long = 0L
+
+  /** Adds another partition's counts to these. */
+  def add(c: ScanCounters): Unit = {
+    segmentsRead += c.segmentsRead
+    runsRead += c.runsRead
+    runsBloomSkipped += c.runsBloomSkipped
+    cellsMerged += c.cellsMerged
+    tombstonesDropped += c.tombstonesDropped
+    cellsSeekSkipped += c.cellsSeekSkipped
+    runsColSkipped += c.runsColSkipped
+    runsColBloomSkipped += c.runsColBloomSkipped
+    runsSubSkipped += c.runsSubSkipped
+    partitionsStatsOnly += c.partitionsStatsOnly
+  }
 }
 
 /** Driver-visible seek-saving totals for a STREAMING scan: the change

@@ -1,21 +1,13 @@
 package graft
 
 import graft.sources.cassandralike._
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** End-to-end DSv2 connector tests on sf0.001: write->read round trips plus
   * plan-level assertions that pushdown actually reached the source. */
 class ConnectorSpec extends SparkSpec {
 
-  private def scanOf(df: org.apache.spark.sql.DataFrame): BatchScanExec = {
-    val plan = df.queryExecution.executedPlan
-    plan.collectFirst { case b: BatchScanExec => b }
-      .orElse(plan.collectFirst {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a
-      }.flatMap(_.executedPlan.collectFirst { case b: BatchScanExec => b }))
-      .getOrElse(fail("no BatchScanExec in plan"))
-  }
+  private def scanOf(df: org.apache.spark.sql.DataFrame): PlannedScan = PlannedScan.of(df)
 
   test("regular round trip preserves every value (binary codecs)") {
     val cust = Tables.load(spark, sfDir, "customer")
@@ -308,9 +300,9 @@ class ConnectorSpec extends SparkSpec {
   test("S1: key-equality predicates prune token-range partitions") {
     val store = Seed.table(spark, sfDir, "spec_bucketprune",
       Tables.load(spark, sfDir, "customer"))
-    val all = scanOf(Seed.read(spark, store)).inputRDD.getNumPartitions
+    val all = scanOf(Seed.read(spark, store)).partitions.length
     val one = scanOf(Seed.read(spark, store).filter(col("c_custkey") === 42L))
-      .inputRDD.getNumPartitions
+      .partitions.length
     assert(all > 1, s"expected multiple buckets, got $all")
     assert(one == 1, s"expected 1 pruned partition, got $one")
   }
@@ -370,6 +362,21 @@ class ConnectorSpec extends SparkSpec {
     val store = Seed.table(spark, sfDir, "spec_trans", src)
     val got = Seed.read(spark, store).as[(String, String, String)].collect().toSet
     assert(got == Set(("a", "c1", "v1"), ("a", "c2", "v2"), ("b", "c9", "v9")))
+  }
+
+  test("a 100k-cell wide row pages through whole and in column order") {
+    // a hundred pages of the default size: the row and its pages are
+    // indexed, so each cell costs O(1) pager steps, not O(page)
+    val n = 100000
+    val store = Seed.table(spark, sfDir, "spec_wide_100k",
+      spark.range(0L, n.toLong, 1L, 4).select(lit("hot").as("row_key"),
+        format_string("c%06d", col("id")).as("column_name"), col("id").as("value")),
+      mapping = Some(":key,:column,:value"))
+    for (df <- Seq(Seed.read(spark, store), Seed.read(spark, store).filter(col("row_key") === "hot"))) {
+      val got = df.collect()
+      assert(got.length == n)
+      assert(got.indices.forall(i => got(i).getLong(2) == i.toLong), "cells out of column order")
+    }
   }
 
   test("slice count caps per key, not globally") {
@@ -481,7 +488,7 @@ class ConnectorSpec extends SparkSpec {
     def partsFor(filters: Array[org.apache.spark.sql.sources.Filter]): Int = {
       val b = new CellScanBuilder(table, Map(Options.SplitTargetCells -> "500"))
       b.pushFilters(filters)
-      b.build().asInstanceOf[CellScan].planInputPartitions().length
+      PlannedScan(b.build()).partitions.length
     }
     val full = partsFor(Array.empty)
     assert(full >= 4, s"expected multiple sub-splits in one bucket, got $full")
@@ -744,11 +751,11 @@ class ConnectorSpec extends SparkSpec {
       props = Map(Options.Buckets -> "4"))
     // default target (64Ki cells) -> no splitting at this size
     val plain = Seed.read(spark, store, Map(Options.Buckets -> "4"))
-    assert(scanOf(plain).inputRDD.getNumPartitions == 4)
+    assert(scanOf(plain).partitions.length == 4)
     // low target -> every bucket splits into multiple key ranges
     val opts = Map(Options.Buckets -> "4", Options.SplitTargetCells -> "1000")
     val split = Seed.read(spark, store, opts)
-    val parts = scanOf(split).inputRDD.getNumPartitions
+    val parts = scanOf(split).partitions.length
     assert(parts > 4, s"expected sub-bucket splits beyond 4 buckets, got $parts")
     // ranges partition the keyspace exactly: no row lost or duplicated
     assert(split.count() == 20000)

@@ -1,0 +1,174 @@
+package graft
+
+import graft.sources.cassandralike._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+
+/** Key-addressed reads answered at planning ([[DriverAnswerScan]]): they
+  * start no job, return the executors' reader's rows, fall back to the
+  * distributed scan past one task's worth of merged cells, and keep the
+  * change feed, broadcast joins and read-your-writes working. */
+class DriverAnswerSpec extends SparkSpec {
+
+  /** 2,000 rows, four per indexed `name`: few enough candidates that the
+    * index's cost gate plans a point read. */
+  private lazy val regular: String = {
+    val sp = spark; import sp.implicits._
+    Seed.table(spark, sfDir, "spec_driver_regular",
+      (1L to 2000L).map(i => (i, s"n${i % 500}", i * 1.5)).toDF("id", "name", "bal")
+        .repartition(2),
+      props = Map(Options.IndexColumns -> "name", Options.Buckets -> "8"))
+  }
+
+  private lazy val wide: String = {
+    val sp = spark; import sp.implicits._
+    Seed.table(spark, sfDir, "spec_driver_wide",
+      (for (s <- 1 to 20; c <- 0 until 200) yield (s, c, s * 1000L + c))
+        .toDF("s", "c", "v").repartition(2),
+      mapping = Some(":key,:column,:value"), props = Map(Options.Buckets -> "8"))
+  }
+
+  /** Jobs started while `body` runs, counted by a listener on the body's
+    * own job group; a marker job in another group, seen last, shows the
+    * listener bus has delivered every earlier job start. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"driver-answer-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "driver answer", interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seen.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(marker), "listener never saw the marker job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  private def all(dir: String): Array[Row] = Seed.read(spark, dir).collect()
+
+  test("key =, key IN, a wide-row slice and an indexed equality start no job") {
+    val reg = all(regular)
+    val cells = all(wide)
+    val reads: Seq[(String, DataFrame, Set[Row])] = Seq(
+      ("regular key =", Seed.read(spark, regular).filter(col("id") === 7L),
+        reg.filter(_.getLong(0) == 7L).toSet),
+      ("regular key IN", Seed.read(spark, regular).filter(col("id").isin(3L, 99L, 400L, 99999L)),
+        reg.filter(r => Set(3L, 99L, 400L)(r.getLong(0))).toSet),
+      ("indexed equality", Seed.read(spark, regular).filter(col("name") === "n7"),
+        reg.filter(_.getString(1) == "n7").toSet),
+      ("transposed key =", Seed.read(spark, wide).filter(col("s") === 4),
+        cells.filter(_.getInt(0) == 4).toSet),
+      ("transposed key IN", Seed.read(spark, wide).filter(col("s").isin(2, 19, 77)),
+        cells.filter(r => Set(2, 19)(r.getInt(0))).toSet),
+      ("wide-row slice", Seed.read(spark, wide)
+        .filter(col("s") === 5 && col("c") >= 40 && col("c") < 60),
+        cells.filter(r => r.getInt(0) == 5 && r.getInt(1) >= 40 && r.getInt(1) < 60).toSet))
+    reads.foreach { case (what, df, want) =>
+      assert(want.nonEmpty, what)
+      var got: Array[Row] = null
+      val jobs = jobsIn { got = df.collect() }
+      assert(jobs == 0, s"$what started $jobs jobs")
+      assert(got.length == want.size && got.toSet == want, what)
+      val scan = PlannedScan.of(df)
+      assert(scan.answered, s"$what: ${scan.description}")
+      assert(scan.description.contains(s"DriverAnswer: rows=${want.size}, cellsMerged="),
+        scan.description)
+      val plan = nodes(df.queryExecution.executedPlan)
+      assert(plan.exists(_.isInstanceOf[LocalTableScanExec]) &&
+        !plan.exists(_.isInstanceOf[BatchScanExec]), s"$what:\n$plan")
+      assert(df.queryExecution.executedPlan.toString.contains("LocalTableScan"))
+    }
+  }
+
+  test("past one task's worth of merged cells the read runs distributed, same rows") {
+    // 40 rows of two cells each: 80 merged cells against a 16-cell split
+    val keys = (1L to 40L).map(_ * 9)
+    val want = all(regular).filter(r => keys.contains(r.getLong(0))).toSet
+    val capped = Seed.read(spark, regular, Map(Options.SplitTargetCells -> "16"))
+      .filter(col("id").isin(keys: _*))
+    assert(!PlannedScan.of(capped).answered)
+    assert(capped.collect().toSet == want)
+    assert(nodes(capped.queryExecution.executedPlan).exists(_.isInstanceOf[BatchScanExec]))
+    val answered = Seed.read(spark, regular).filter(col("id").isin(keys: _*))
+    val scan = PlannedScan.of(answered)
+    assert(scan.answered)
+    assert(answered.collect().toSet == want)
+    // the answer's counters are its partitions drained through the reader
+    assert(scan.counters == PlannedScan(scan.cellScan).counters)
+    assert(scan.counters("cellsMerged") == 80L, s"${scan.counters}")
+  }
+
+  test("a streaming read of the same store still plans the change feed") {
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+    val ckpt = java.nio.file.Files.createTempDirectory("driver-answer-feed").toString
+    val q = spark.readStream.format("cassandralike").option(Options.Path, regular).load()
+      .filter(col("id") === 7L)
+      .writeStream
+      .foreachBatch { (b: DataFrame, _: Long) => b.collect().foreach(rows.add); () }
+      .outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    // a source's progress description is its stream's class
+    val sources = q.recentProgress.toSeq.flatMap(_.sources).map(_.description)
+    assert(sources.nonEmpty && sources.forall(_.contains("CellChangeFeedStream")),
+      s"sources: $sources")
+    assert(rows.toArray.toSeq == all(regular).filter(_.getLong(0) == 7L).toSeq)
+  }
+
+  test("a point read joined to a larger store still broadcasts") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "4096")
+    try {
+      val point = Seed.read(spark, regular).filter(col("id").isin(3L, 5L))
+        .select(col("id").cast("int").as("s"), col("name"))
+      val joined = Seed.read(spark, wide).join(point, "s")
+      val got = joined.collect()
+      assert(got.length == 2 * 200 && got.forall(r => Set(3, 5)(r.getInt(0))))
+      val plan = nodes(joined.queryExecution.executedPlan)
+      assert(plan.exists(_.isInstanceOf[BroadcastHashJoinExec]), plan.mkString("\n"))
+      val broadcast = plan.collect { case b: BroadcastExchangeLike => b }
+      assert(broadcast.exists(b => nodes(b).exists(_.isInstanceOf[LocalTableScanExec])),
+        s"the point read must be the broadcast side:\n${plan.mkString("\n")}")
+    } finally spark.conf.unset(key)
+  }
+
+  test("rows are read at planning: a new DataFrame sees a later write") {
+    val sp = spark; import sp.implicits._
+    val dir = Seed.table(spark, sfDir, "spec_driver_writes",
+      Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "name", "bal"))
+    val before = Seed.read(spark, dir).filter(col("id") === 1L)
+    assert(before.collect().toSeq == Seq(Row(1L, "a", 1.0)))
+    Seed.append(Seq((1L, "z", 9.0)).toDF("id", "name", "bal"), dir,
+      Map(Options.WriteTimestamp -> "2"))
+    assert(Seed.read(spark, dir).filter(col("id") === 1L).collect().toSeq ==
+      Seq(Row(1L, "z", 9.0)))
+    // the planned DataFrame keeps the rows it read when it was planned
+    assert(before.collect().toSeq == Seq(Row(1L, "a", 1.0)))
+  }
+}

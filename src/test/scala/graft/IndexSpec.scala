@@ -25,15 +25,8 @@ class IndexSpec extends SparkSpec {
       Some(meta.mapping), meta.properties)
   }
 
-  private def scanDesc(df: org.apache.spark.sql.DataFrame): String = {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val plan = df.queryExecution.executedPlan
-    plan.collectFirst { case b: BatchScanExec => b }
-      .orElse(plan.collectFirst {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a
-      }.flatMap(_.executedPlan.collectFirst { case b: BatchScanExec => b }))
-      .map(_.scan.description()).getOrElse("")
-  }
+  private def scanDesc(df: org.apache.spark.sql.DataFrame): String =
+    PlannedScan.of(df).description
 
 
   /** Planned partitions for pushed filters, through the real builder. */
@@ -46,7 +39,7 @@ class IndexSpec extends SparkSpec {
     val b = t.newScanBuilder(new CaseInsensitiveStringMap(m))
     b.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownFilters]
       .pushFilters(filters)
-    b.build().toBatch.planInputPartitions().length
+    PlannedScan(b.build()).partitions.length
   }
 
   test("indexed equality plans a point lookup, not a table scan") {

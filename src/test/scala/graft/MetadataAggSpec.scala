@@ -10,15 +10,7 @@ import org.apache.spark.sql.functions._
   * cell-fold scan — with identical results — when they don't. */
 class MetadataAggSpec extends SparkSpec {
 
-  private def scanOf(df: DataFrame) = {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val plan = df.queryExecution.executedPlan
-    plan.collectFirst { case b: BatchScanExec => b }
-      .orElse(plan.collectFirst {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a
-      }.flatMap(_.executedPlan.collectFirst { case b: BatchScanExec => b }))
-      .getOrElse(fail("no BatchScanExec"))
-  }
+  private def scanOf(df: DataFrame): PlannedScan = PlannedScan.of(df)
 
   /** Drains every partition reader by hand and returns
     * (partitionsStatsOnly total, partition count). */
@@ -246,7 +238,7 @@ class MetadataAggSpec extends SparkSpec {
       (1L to 1000L).map(i => (i, "c", i)).toDF("k", "c", "v").repartition(1),
       mapping = Some(":key,:column,:value"),
       props = Map(Options.KeyEncoding -> "ordered"))
-    def stats(df: org.apache.spark.sql.DataFrame) = scanOf(df).scan
+    def stats(df: org.apache.spark.sql.DataFrame) = scanOf(df).cellScan
       .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
       .estimateStatistics()
     // a two-key IN over 1000 rows: numRows is the TRUE 2 (not 1000) and

@@ -45,6 +45,11 @@ class PlanShapeSpec extends SparkSpec {
       case other => Seq(other)
     }
 
+  /** The cassandralike scans a query plans, distributed or answered at
+    * planning. */
+  private def storeScansOf(df: org.apache.spark.sql.DataFrame): Seq[PlannedScan] =
+    PlannedScan.all(df).filter(_.description.contains("cassandralike"))
+
   private val batchQueries: Seq[String] =
     SparkEntry.benchQueries.map(_.name).filterNot(_.startsWith("stream_"))
 
@@ -258,16 +263,14 @@ class PlanShapeSpec extends SparkSpec {
     // probed cell (bucket-pruned point lookups) — never a full index scan;
     // and candidates arrive payload-complete from the store, so NO join
     // back to the embeddings corpus appears downstream of the index scan
-    val all = collectAll(plan("llm_ann_incremental"))
-    val storeScans = all.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-        if b.scan.description().contains("cassandralike") => b
-    }
+    val df = SparkEntry.queries("llm_ann_incremental")(spark, sfDir)
+    val all = collectAll(df.queryExecution.executedPlan)
+    val storeScans = storeScansOf(df)
     assert(storeScans.nonEmpty, "expected the probe to read the cassandralike IVF store")
     // <= 10 queries x 3 probes, <= 25 distinct cells — each a point lookup
     storeScans.foreach { b =>
-      assert(b.inputPartitions.size <= 25,
-        s"index probe should plan point lookups, got ${b.inputPartitions.size} partitions")
+      assert(b.partitions.length <= 25,
+        s"index probe should plan point lookups, got ${b.partitions.length} partitions")
     }
     val shuffles = all.count(_.isInstanceOf[ShuffleExchangeLike])
     assert(shuffles <= 3,
@@ -279,15 +282,11 @@ class PlanShapeSpec extends SparkSpec {
     // reads as <= nprobe x queries point lookups — plus the PQ property:
     // the only reads of the full embeddings table are the corpus/query
     // loads, never a per-candidate scan (re-rank joins the top-32 back)
-    val all = collectAll(plan("llm_ann_ivfpq"))
-    val storeScans = all.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-        if b.scan.description().contains("cassandralike") => b
-    }
+    val storeScans = storeScansOf(SparkEntry.queries("llm_ann_ivfpq")(spark, sfDir))
     assert(storeScans.nonEmpty, "expected the probe to read the cassandralike IVF-PQ store")
     storeScans.foreach { b =>
-      assert(b.inputPartitions.size <= 25,
-        s"index probe should plan point lookups, got ${b.inputPartitions.size} partitions")
+      assert(b.partitions.length <= 25,
+        s"index probe should plan point lookups, got ${b.partitions.length} partitions")
     }
   }
 

@@ -51,7 +51,7 @@ class RangeLayoutSpec extends SparkSpec {
       : Seq[CellInputPartition] = {
       val b = new CellScanBuilder(table, Map.empty)
       b.pushFilters(filters)
-      b.build().asInstanceOf[CellScan].planInputPartitions()
+      PlannedScan(b.build()).partitions
         .map(_.asInstanceOf[CellInputPartition]).toSeq
     }
     assert(partsFor(Array.empty).map(_.bucket).distinct.sorted == Seq(0, 1, 2, 3))

@@ -243,30 +243,34 @@ class RowLevelSpec extends SparkSpec {
 
   test("UPDATE's affected-row scan bucket-prunes on the key predicate") {
     freshCatalogTable("rl_prune")
-    val df = spark.sql(
-      "UPDATE cassandralike.ks.rl_prune SET bal = 0 WHERE k = 3")
-    def walk(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-      val self = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          q +: walk(q.plan)
-        case c: org.apache.spark.sql.execution.CommandResultExec =>
-          c +: walk(c.commandPhysicalPlan)
-        case other => Seq(other)
+    // the command's own optimized plan (it executes eagerly, nested in the
+    // returned CommandResult) reaches a QueryExecutionListener
+    val executed = new java.util.concurrent.LinkedBlockingQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        executed.add(qe)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val scans = try {
+      spark.sql("UPDATE cassandralike.ks.rl_prune SET bal = 0 WHERE k = 3")
+      var found = Seq.empty[PlannedScan]
+      val deadline = System.currentTimeMillis() + 30000L
+      while (found.isEmpty && System.currentTimeMillis() < deadline) {
+        Option(executed.poll(100, java.util.concurrent.TimeUnit.MILLISECONDS))
+          .foreach(qe => found = PlannedScan.all(qe.optimizedPlan))
       }
-      self ++ p.children.flatMap(walk) ++ p.subqueries.flatMap(walk)
-    }
-    val scans = walk(df.queryExecution.executedPlan).collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }
+      found
+    } finally spark.listenerManager.unregister(listener)
     assert(scans.nonEmpty, "no store scan under the UPDATE plan")
     scans.foreach { b =>
-      assert(b.scan.description().contains("EqualTo(k,3)"),
-        s"key predicate not pushed into the DML scan: ${b.scan.description()}")
-      assert(b.inputPartitions.size <= 1,
-        s"key-equality UPDATE must prune to one bucket, got ${b.inputPartitions.size}")
+      assert(b.description.contains("EqualTo(k,3)"),
+        s"key predicate not pushed into the DML scan: ${b.description}")
+      assert(b.partitions.length <= 1,
+        s"key-equality UPDATE must prune to one bucket, got ${b.partitions.length}")
     }
     assert(state("rl_prune")(3L)._1.contains(0.0))
   }

@@ -349,9 +349,7 @@ class ScanMetricsSpec extends SparkSpec {
       Tables.load(spark, sfDir, "nation"))
     val df = Seed.read(spark, store).filter(col("n_nationkey") === 3L)
     // driver side: the scan node declares the metric set
-    val scan = df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
-    }.getOrElse(fail("no BatchScanExec"))
+    val scan = PlannedScan.of(df).cellScan
     val declared = scan.supportedCustomMetrics().map(m => m.name()).toSet
     assert(declared == Set("segmentsRead", "runsRead", "runsBloomSkipped",
       "cellsMerged", "tombstonesDropped", "cellsSeekSkipped",
@@ -385,24 +383,9 @@ class ScanMetricsSpec extends SparkSpec {
     }
   }
 
-  /** Drive every partition of `df`'s scan and sum the task metric values. */
-  private def driveTotals(df: org.apache.spark.sql.DataFrame)
-    : collection.mutable.Map[String, Long] = {
-    val scan = df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
-    }.getOrElse(fail("no BatchScanExec"))
-    val batch = scan.toBatch
-    val factory = batch.createReaderFactory()
-    val totals = collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-    batch.planInputPartitions().foreach { p =>
-      val r = factory.createReader(p)
-      try { while (r.next()) r.get() } finally {
-        r.currentMetricsValues().foreach(m => totals(m.name()) += m.value())
-        r.close()
-      }
-    }
-    totals
-  }
+  /** The store IO of `df`'s scan, by task metric name. */
+  private def driveTotals(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    PlannedScan.of(df).counters
 
   test("key range on a bytes INT wide store merges exactly the rows in range") {
     // 1,000 rows of 200 int columns under the default bytes encoding: a
@@ -439,9 +422,7 @@ class ScanMetricsSpec extends SparkSpec {
       mapping = Some(":key,:column,:value"))
     val df = Seed.read(spark, dir).filter(col("c").startsWith("pre"))
     // pushed, not residual
-    val scan = df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
-    }.getOrElse(fail("no BatchScanExec"))
+    val scan = PlannedScan.of(df).scan
     assert(scan.description().contains("StringStartsWith"),
       s"prefix must reach the scan: ${scan.description()}")
     val got = df.collect().map(_.getLong(2)).sorted
@@ -478,9 +459,7 @@ class ScanMetricsSpec extends SparkSpec {
   }
 
   private def scanParts(df: org.apache.spark.sql.DataFrame): Int =
-    df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
-    }.getOrElse(fail("no BatchScanExec")).toBatch.planInputPartitions().length
+    PlannedScan.of(df).partitions.length
 
   test("multi-point key seek merges ~matches, not the IN envelope") {
     // the key twin of the slice seek: each key of a pushed IN list reads
@@ -527,9 +506,7 @@ class ScanMetricsSpec extends SparkSpec {
     // the base run's spans between the keys' windows are never read
     assert(t("cellsSeekSkipped") >= inB0.size.toLong, s"$t")
     // a partition of a bucket no listed key routes to opens no segment
-    val factory = one.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
-    }.get.toBatch.createReaderFactory()
+    val factory = PlannedScan.of(one).readerFactory
     val other = factory.createReader(CellInputPartition(store, 1, Array.empty))
     try {
       assert(!other.next())

@@ -98,6 +98,10 @@ class StoreFuzzSpec extends SparkSpec {
       if (a.isEmpty && b.isEmpty) None else Some((k, a, b))
     }.toSet
 
+  /** Read options of a key-set read's two paths: answered at planning
+    * (defaults), and distributed (a split target of one merged cell). */
+  private val bothPaths = Seq(Map.empty[String, String], Map(Options.SplitTargetCells -> "1"))
+
   private def readBack(dir: String, asOf: Option[Long] = None): Set[(Long, Option[Double], Option[String])] =
     Seed.read(spark, dir,
         asOf.map(t => Map(Options.ReadAsOf -> t.toString)).getOrElse(Map.empty))
@@ -199,15 +203,18 @@ class StoreFuzzSpec extends SparkSpec {
           if (ks.isEmpty) Nil else Seq.fill(n)(ks(inRnd.nextInt(ks.size)))
         val keys = (pick(live, 1 + inRnd.nextInt(6)) ++ pick(dead, inRnd.nextInt(3)) ++
           Seq.fill(1 + inRnd.nextInt(2))(60L + inRnd.nextInt(40))).distinct
-        val got = Seed.read(spark, dir)
-          .filter(org.apache.spark.sql.functions.col("k").isin(keys: _*))
-          .collect().map { r =>
+        bothPaths.foreach { opts =>
+          val df = Seed.read(spark, dir, opts)
+            .filter(org.apache.spark.sql.functions.col("k").isin(keys: _*))
+          val got = df.collect().map { r =>
             (r.getLong(0),
               if (r.isNullAt(1)) None else Some(r.getDouble(1)),
               if (r.isNullAt(2)) None else Some(r.getString(2)))
           }.toSet
-        assert(got == want.filter(r => keys.contains(r._1)),
-          s"trial $trial: IN ${keys.mkString(",")} diverged from model after ts=$ts")
+          assert(got == want.filter(r => keys.contains(r._1)),
+            s"trial $trial: IN ${keys.mkString(",")} $opts diverged from model after ts=$ts")
+          assert(opts.nonEmpty || PlannedScan.of(df).answered, s"trial $trial: not answered")
+        }
       }
 
       // a random key-range read and range COUNT: bounds cross zero and
@@ -398,13 +405,16 @@ class StoreFuzzSpec extends SparkSpec {
         val cols =
           if (inRnd.nextBoolean()) None
           else Some(Seq.fill(1 + inRnd.nextInt(4))(f"c${inRnd.nextInt(20)}%03d").distinct)
-        val byKey = Seed.read(spark, dir)
-          .filter(org.apache.spark.sql.functions.col("row_key").isin(keys: _*))
-        val df = cols.fold(byKey)(cs =>
-          byKey.filter(org.apache.spark.sql.functions.col("column_name").isin(cs: _*)))
-        val got = df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-        assert(got == want.filter(r => keys.contains(r._1) && cols.forall(_.contains(r._2))),
-          s"trial $trial: IN ${keys.mkString(",")} cols=$cols diverged from model after ts=$ts")
+        bothPaths.foreach { opts =>
+          val byKey = Seed.read(spark, dir, opts)
+            .filter(org.apache.spark.sql.functions.col("row_key").isin(keys: _*))
+          val df = cols.fold(byKey)(cs =>
+            byKey.filter(org.apache.spark.sql.functions.col("column_name").isin(cs: _*)))
+          val got = df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+          assert(got == want.filter(r => keys.contains(r._1) && cols.forall(_.contains(r._2))),
+            s"trial $trial: IN ${keys.mkString(",")} cols=$cols $opts diverged from model after ts=$ts")
+          assert(opts.nonEmpty || PlannedScan.of(df).answered, s"trial $trial: not answered")
+        }
       }
 
       (1 to 16).foreach { _ =>
