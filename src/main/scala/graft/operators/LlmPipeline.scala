@@ -367,7 +367,7 @@ object LlmPipeline {
       cellsPerKey: Long = IncrementalProbeCellsPerKey): DataFrame = {
     import graft.sources.cassandralike.CellStore
     val cells = CellStore.allSegmentFiles(storeDir).values.flatten
-      .map(f => CellStore.segmentStats(f).cells).sum
+      .map(f => CellStore.meta(f).cells).sum
     if (cells < minIndexCells) return index
     // cellsPerKey <= 0 disables the ratio gate (spec hook: fixture indexes
     // are self-probed, so cells/keys never clears a realistic factor there)

@@ -848,14 +848,7 @@ object Relational {
       def reset(name: String): Unit = {
         s.sql(s"DROP TABLE IF EXISTS $db.$name")
         val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-        val dir0 = java.nio.file.Paths.get(s"$wh/$db.db/$name")
-        if (java.nio.file.Files.exists(dir0)) {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(dir0)
-          try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .iterator().asScala.foreach(java.nio.file.Files.delete)
-          finally walk.close()
-        }
+        graft.sources.cassandralike.CellStore.dropTable(s"$wh/$db.db/$name")
       }
       reset("orders_b"); reset("lineitem_b")
       t(s, dir, "orders").select($"o_orderkey", $"o_orderpriority", $"o_totalprice")

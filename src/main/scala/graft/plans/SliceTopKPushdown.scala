@@ -200,6 +200,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => SliceTopKPushdown)
+    e.injectPlannerStrategy(_ => DriverAnswerRename)
     e.injectFunction((
       new FunctionIdentifier("cassandra_decode"),
       new ExpressionInfo(classOf[CassandraDecode].getName, "cassandra_decode"),

@@ -339,6 +339,7 @@ class CassandraLikeCatalog extends TableCatalog with SupportsNamespaces
       throw new NoSuchTableException(oldIdent)
     java.nio.file.Files.createDirectories(tableDir(newIdent).getParent)
     java.nio.file.Files.move(tableDir(oldIdent), tableDir(newIdent))
+    CellStore.forgetSegments(tableDir(oldIdent))
   }
 
   // ---- SupportsNamespaces (keyspace lifecycle) ----

@@ -2677,9 +2677,17 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     val points = scan.keyWindows.points
     val answerable = points != null &&
       points.length <= CellScanBuilder.MaxStatPoints &&
-      aggs.isEmpty && scan.completeRows.isEmpty &&
+      aggs.isEmpty &&
       !table.opt(options, Options.ReportPartitioning).exists(_.toBoolean)
-    if (answerable) answerOnDriver(scan).getOrElse(scan) else scan
+    scan.completeRows match {
+      // a complete metadata aggregate: its rows are already on the driver
+      case Some(rows) =>
+        val counters = new ScanCounters
+        counters.partitionsStatsOnly = 1L
+        new DriverAnswerScan(scan, rows.toArray, counters)
+      case None if answerable => answerOnDriver(scan).getOrElse(scan)
+      case None => scan
+    }
   }
 
   /** Key-addressed read answered at planning: every planned partition is
@@ -2688,9 +2696,10 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     * the rows go to a [[DriverAnswerScan]], which Spark plans as a
     * `LocalTableScanExec`: collecting it starts no job. The read stops at
     * one task's worth of work, `split.target.cells` merged cells; over it
-    * the rows are dropped and the scan runs distributed. The check runs per
-    * emitted row, so one key's cells (the pager's unit) can pass the cap
-    * before the read gives up. Rows are read when the query is planned. */
+    * the rows are dropped and the scan runs distributed. The merge itself
+    * stops at the first cell past the cap, so a row wider than the cap is
+    * not merged whole before the read gives up. Rows are read when the
+    * query is planned. */
   private def answerOnDriver(scan: CellScan): Option[Scan] = {
     val cap = table.opt(options, Options.SplitTargetCells).map(_.toLong)
       .getOrElse(Options.DefaultSplitTargetCells)
@@ -2699,14 +2708,18 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     val total = new ScanCounters
     val rows = mutable.ArrayBuffer.empty[InternalRow]
     var i = 0
-    while (i < parts.length && total.cellsMerged <= cap) {
-      val r = factory.createReader(parts(i)).asInstanceOf[CellPartitionReader]
-      try {
-        while (total.cellsMerged + r.counters.cellsMerged <= cap && r.next())
-          rows += r.get().copy()
-      } finally { r.close(); total.add(r.counters) }
-      i += 1
-    }
+    try {
+      while (i < parts.length && total.cellsMerged <= cap) {
+        val r = factory.createReader(parts(i)).asInstanceOf[CellPartitionReader]
+        r.counters.mergeCap = cap - total.cellsMerged
+        try {
+          while (total.cellsMerged + r.counters.cellsMerged <= cap && r.next())
+            rows += r.get().copy()
+        } finally { r.close(); total.add(r.counters) }
+        i += 1
+      }
+    } catch { case _: ScanCounters.OverCap => }
+    CellScanBuilder.driverCellsMerged.addAndGet(total.cellsMerged)
     if (total.cellsMerged > cap) None
     else Some(new DriverAnswerScan(scan, rows.toArray, total))
   }
@@ -2717,6 +2730,10 @@ object CellScanBuilder {
     * filtered row count of [[CellScan.estimateStatistics]] and the driver
     * answer of [[CellScanBuilder.build]]. */
   val MaxStatPoints = 128
+
+  /** Diagnostic: cells merged by driver reads ([[CellScanBuilder.build]]),
+    * answered or given up. */
+  val driverCellsMerged = new java.util.concurrent.atomic.AtomicLong()
 
   /** Pushed-IN size past which COMPLETE range aggregation declines and
     * the distributed partial path owns the point probes. */
@@ -2780,13 +2797,13 @@ private[cassandralike] object SplitPlanner {
       targetCells: Long,
       restrictFiles: Boolean): Seq[CellInputPartition] = {
     val names = if (restrictFiles) files.map(_.getFileName.toString) else null
-    val cells = files.iterator.map(CellStore.segmentStats(_).cells).sum
+    val cells = files.iterator.map(CellStore.meta(_).cells).sum
     val nSplits = math.max(1L, (cells + targetCells - 1) / targetCells).toInt
     if (nSplits <= 1) Seq(CellInputPartition(dir, bucket, hosts, files = names))
     else {
       // merged sparse key sample (~1 key per IndexEvery cells, index-only
       // reads, memoized per immutable file) -> cell-count quantiles
-      val sample = files.flatMap(CellStore.sampleKeys)
+      val sample = files.flatMap(CellStore.meta(_).sample)
         .sortWith((a, c) => Codecs.compareBytes(a, c) < 0)
       val raw = (1 until nSplits)
         .map(i => sample(((i.toLong * sample.size) / nSplits).toInt))
@@ -3084,7 +3101,7 @@ class CellScan(
       // total cells of the scan's own committed listing (memoized segment
       // stats — no extra IO): the cost gate's full-scan side
       () => segmentsByBucket.values.flatten
-        .map(f => CellStore.segmentStats(f).cells).sum)
+        .map(f => CellStore.meta(f).cells).sum)
 
   private def effectiveFilters: Array[Filter] =
     filters ++ runtimeFilters ++ indexKeyFilters
@@ -3139,25 +3156,17 @@ class CellScan(
     * join sizing so small cassandralike tables auto-broadcast — the
     * reference's Hive stack needed a manual MAPJOIN hint for this. */
   override def estimateStatistics(): Statistics = {
-    completeRows.foreach { rows =>
-      return new Statistics {
-        override def sizeInBytes(): java.util.OptionalLong =
-          java.util.OptionalLong.of(math.max(1L, 64L * rows.size))
-        override def numRows(): java.util.OptionalLong =
-          java.util.OptionalLong.of(rows.size.toLong)
-      }
-    }
     val files = plannedBuckets.flatMap(segmentsByBucket.getOrElse(_, Nil))
-    val stats = files.map(CellStore.segmentStats)
-    val bytes = stats.map(_.bytes).sum
-    val cells = stats.map(_.cells).sum
+    val segs = files.map(CellStore.meta)
+    val bytes = segs.map(_.bytes).sum
+    val cells = segs.map(_.cells).sum
     val rowFanout =
       if (table.mapping.transposed) 1L
       else math.max(1, table.mapping.cellFields.size).toLong
     // EXACT numRows when the view is clean: per bucket, the STAT-sidecar
     // record if fresh (O(1) bytes, and it proves the multi-run-disjoint
     // case too), else the fixed 16-byte STAT suffix per run
-    // (quickRunStats) for the single-run steady state. Feeds Catalyst's
+    // (SegmentMeta.quick) for the single-run steady state. Feeds Catalyst's
     // broadcast threshold with the truth instead of the cells/fan-out
     // estimate, which over-counts every overwritten address. Planning a
     // plain scan must never parse full index tails (blooms included)
@@ -3180,7 +3189,7 @@ class CellScan(
                   else rec.nettedKeys))
               else None
             case None =>
-              val qs = files.flatMap(f => CellStore.quickRunStats(f).toSeq)
+              val qs = files.flatMap(CellStore.meta(_).quick.toSeq)
               if (qs.lengthCompare(1) > 0 || qs.exists(_.tombstones != 0)) None
               else Some(total + qs.map(s =>
                 if (table.mapping.transposed) s.distinctAddrs.toLong
@@ -3198,7 +3207,7 @@ class CellScan(
     // routing then prunes the tail reads to the keys' own buckets. A key
     // RANGE (any layout) stays on the estimate: the covered buckets are
     // unbounded and planning a plain scan must never walk full index
-    // tails across the store (the quickRunStats policy above). Range
+    // tails across the store (the SegmentMeta.quick policy above). Range
     // COUNTS remain metadata-answerable — through the pushed-aggregate
     // paths, which run only for aggregate queries.
     val exactFiltered: Option[Long] =
@@ -3302,7 +3311,8 @@ class CellScan(
     * are whole keys, so a wide row never straddles two splits and LWW /
     * tombstone reconciliation stays exact within each range. */
   override def planInputPartitions(): Array[InputPartition] = {
-    // complete metadata answer: one partition, zero segment IO
+    // complete metadata answer (read on the driver, see build(); planned
+    // only for plan inspection): one partition, zero segment IO
     if (completeRows.isDefined)
       return Array[InputPartition](
         CellInputPartition(table.dir, 0, Array.empty, files = Nil))
@@ -3352,18 +3362,14 @@ class CellScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    completeRows match {
-      case Some(rows) => AnswerReaderFactory(rows)
-      case None =>
-        CellReaderFactory(table.tableSchema, table.mapping.fields,
-          if (aggs.nonEmpty) aggBaseSchema else required,
-          effectiveFilters, options, table.tableProps, limit, aggs,
-          aggGroupKeys, columnar = true, limitLast = limitLast)
-    }
+    CellReaderFactory(table.tableSchema, table.mapping.fields,
+      if (aggs.nonEmpty) aggBaseSchema else required,
+      effectiveFilters, options, table.tableProps, limit, aggs,
+      aggGroupKeys, columnar = true, limitLast = limitLast)
 }
 
-/** A key-addressed read answered at planning (see
-  * [[CellScanBuilder.build]]): Spark plans a `LocalScan` as a
+/** A key-addressed read or a complete metadata aggregate, answered at
+  * planning (see [[CellScanBuilder.build]]): Spark plans a `LocalScan` as a
   * `LocalTableScanExec`, whose collect launches no job. `counters` are the
   * read's store IO, summed over its partitions; `toBatch` is the wrapped
   * scan's, so those planned partitions stay inspectable. */
@@ -3385,28 +3391,6 @@ final class DriverAnswerScan(
     override def numRows(): java.util.OptionalLong =
       java.util.OptionalLong.of(answer.length.toLong)
   }
-}
-
-/** Emits the planning-precomputed rows of a COMPLETE metadata aggregate
-  * pushdown (see CellScanBuilder.supportCompletePushDown) — one row for
-  * the ungrouped forms, one per present group key for the grouped form. */
-final case class AnswerReaderFactory(rows: Seq[InternalRow])
-  extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val it = rows.iterator
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { cur = it.next(); true } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-      override def currentMetricsValues()
-          : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-        val c = new ScanCounters
-        c.partitionsStatsOnly = 1L
-        ScanMetrics.values(c)
-      }
-    }
 }
 
 final case class CellReaderFactory(

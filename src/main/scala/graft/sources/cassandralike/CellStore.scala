@@ -437,7 +437,7 @@ object CellStore {
     * and every run header; any mismatch or truncation throws a crisp
     * IOException — a corrupt file must never be silently misparsed (the r4
     * regression) or spun on (the skip loop is progress-checked). */
-  def runInfos(file: Path): Seq[RunInfo] = {
+  def runInfos(file: Path): IndexedSeq[RunInfo] = {
     val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(file), 1 << 12))
     try {
       val magic = try in.readInt() catch {
@@ -472,13 +472,13 @@ object CellStore {
           offset += RunHeaderLen + len + idxLen
         }
       }
-      runs.toSeq
+      runs.toIndexedSeq
     } finally in.close()
   }
 
   /** (payload offset, cell count) view of [[runInfos]]. */
   def runOffsets(file: Path): Seq[(Long, Int)] =
-    runInfos(file).map(ri => (ri.payloadOffset, ri.cellCount))
+    meta(file).runs.map(ri => (ri.payloadOffset, ri.cellCount))
 
   /** Index block layout: `[int numEntries](int pos, long off, key)* lastKey`
     * then an OPTIONAL bloom tail `[int numKeys][int numWords][long words…]`
@@ -881,7 +881,7 @@ object CellStore {
     // older tail keeps its position; legacy readers stop before it,
     // legacy files parse with -1s (stats unknown → the metadata path
     // declines and the scan folds cells as before). INVARIANT: STAT must
-    // stay the FINAL tail — [[quickRunStats]] reads it as the fixed
+    // stay the FINAL tail — [[SegmentMeta.quick]] reads it as the fixed
     // 16-byte suffix of the index block; a future tail appended after it
     // must bump that reader.
     if (statTombstones >= 0 && statKeys >= 0 && statAddrs >= 0) {
@@ -1124,87 +1124,6 @@ object CellStore {
       vMins, vMaxs, vMin, vMax, colVals, certDeletes, tsMin, tsMax, hasTs)
   }
 
-  // ---- immutable-file driver-side caches: a committed segment never
-  // changes (temp-write + atomic rename), so (path, size, mtime) keys stats
-  // and sample reads forever; planning cost stays O(1) per segment per
-  // process instead of re-walking run headers every plan (VERDICT r3 #8) ----
-
-  final case class SegmentStats(bytes: Long, cells: Long)
-
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), SegmentStats]()
-  private val sampleCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Seq[Array[Byte]]]()
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Array[KeyBloom]]()
-  private val boundsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), (Array[Byte], Array[Byte])]()
-  private val colRangeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Array[(Array[Byte], Array[Byte])]]()
-  private val colBloomCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Array[Array[KeyBloom]]]()
-  private val subRangeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Array[(Array[Byte], Array[Byte])]]()
-  private val subBloomCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Array[Array[KeyBloom]]]()
-  private val runStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Array[RunStats]]()
-  private val quickStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Array[QuickStats]]()
-
-  private def cacheKey(file: Path): (String, Long, Long) =
-    (file.toString, Files.size(file), Files.getLastModifiedTime(file).toMillis)
-
-  /** Test hook: drop every driver-side planning memo (run stats, quick
-    * stats, bucket-stat sidecars) so a spec can replay the COLD-driver
-    * planning cost inside one JVM. Never called on a production path —
-    * the caches are correct forever (immutable files). */
-  private[graft] def clearPlannerCaches(): Unit = {
-    runStatsCache.clear()
-    quickStatsCache.clear()
-    bucketStatCache.clear()
-    subsetStatCache.clear()
-    sidecarRunStatsCache.clear()
-  }
-
-  /** Total (bytes, cells) of one segment; memoized per immutable file. */
-  def segmentStats(file: Path): SegmentStats =
-    statsCache.computeIfAbsent(cacheKey(file), _ =>
-      SegmentStats(Files.size(file), runInfos(file).map(_.cellCount.toLong).sum))
-
-  /** Sparse key sample of one segment (~1 key per [[IndexEvery]] cells, from
-    * the run indexes only — no cell data read); memoized per immutable file. */
-  def sampleKeys(file: Path): Seq[Array[Byte]] =
-    sampleCache.computeIfAbsent(cacheKey(file), _ => {
-      val r = new SegmentReader(file)
-      try runInfos(file).flatMap(ri => r.readIndex(ri).keys) finally r.close()
-    })
-
-  /** (min, max) key of one segment — min over each run's first indexed key,
-    * max over each run's lastKey, from the run indexes only (no cell data
-    * read); memoized per immutable file. (null, null) = empty segment. The
-    * planning-time bucket-skip check for index range probes: a bucket none
-    * of whose segments intersect `[lo, hi)` is provably posting-free and is
-    * never opened. */
-  def keyBounds(file: Path): (Array[Byte], Array[Byte]) =
-    boundsCache.computeIfAbsent(cacheKey(file), _ => {
-      val r = new SegmentReader(file)
-      try {
-        var lo: Array[Byte] = null
-        var hi: Array[Byte] = null
-        runInfos(file).foreach { ri =>
-          if (ri.cellCount > 0) {
-            val idx = r.readIndex(ri)
-            if (lo == null || Codecs.compareBytes(idx.keys(0), lo) < 0)
-              lo = idx.keys(0)
-            if (hi == null || Codecs.compareBytes(idx.lastKey, hi) > 0)
-              hi = idx.lastKey
-          }
-        }
-        (lo, hi)
-      } finally r.close()
-    })
-
   /** Everything a metadata-only aggregate needs about one run, read from
     * the run index alone (no cell payload IO): exact cell/tombstone/
     * distinct counts from the STAT tail (-1s on legacy runs — the caller
@@ -1254,21 +1173,100 @@ object CellStore {
   final case class QuickStats(cells: Int, tombstones: Int,
       distinctKeys: Int, distinctAddrs: Int)
 
-  /** STAT counters of every non-empty run, read from the FIXED 16-byte
-    * suffix of each index block — STAT is always the LAST tail
-    * ([[serializeIndex]] keeps that invariant; any future tail appended
-    * after it must bump this reader). O(16 bytes) per run, so cheap
-    * enough for every planning's exact-numRows check, where parsing full
-    * index tails (blooms included) would be a driver-side terabyte at
-    * 100-TB segment counts. A legacy run whose trailing bytes happen to
-    * spell the magic is rejected by the range sanity checks (counts must
-    * be within the run's cell count and mutually consistent) — and a
-    * false negative only costs the exact statistic, never correctness.
-    * tombstones = -1 marks a run without a (valid) tail. */
-  def quickRunStats(file: Path): Array[QuickStats] =
-    quickStatsCache.computeIfAbsent(cacheKey(file), _ => {
+  /** One non-empty run of a segment: where it sits in the file and what
+    * its index tails say about it. */
+  final case class RunMeta(info: RunInfo, stats: RunStats)
+
+  /** What the planner and the readers know about one segment file, read
+    * from its run headers and index blocks, never from cell data. Each
+    * field is read on its first use and kept, so a field no caller asked
+    * for is never read; a committed segment never changes (temp write plus
+    * atomic rename), so a kept field stays true until the segment is
+    * deleted, which drops the handle ([[forgetSegments]]). Per-run arrays
+    * align with [[live]], the non-empty runs. */
+  final class SegmentMeta private[CellStore] (val file: Path) {
+    /** Every run, empty ones included, from the run headers. */
+    lazy val runs: IndexedSeq[RunInfo] = runInfos(file)
+
+    /** Non-empty runs, each with its [[RunStats]]. */
+    lazy val live: IndexedSeq[RunMeta] =
+      liveInfos.zip(stats).map { case (ri, s) => RunMeta(ri, s) }
+
+    lazy val bytes: Long = Files.size(file)
+
+    def cells: Long = runs.iterator.map(_.cellCount.toLong).sum
+
+    @volatile private var stats0: Array[RunStats] = _
+
+    /** Per-run [[RunStats]], from the index tails or from a bucket-stat
+      * sidecar ([[seedRunStatsFromSidecar]]). */
+    def stats: Array[RunStats] = {
+      if (stats0 == null) synchronized {
+        if (stats0 == null) {
+          runTailReads.incrementAndGet()
+          stats0 = fromIndexes(runStatsOf)
+        }
+      }
+      stats0
+    }
+
+    private[CellStore] def hasStats: Boolean = stats0 != null
+
+    private[CellStore] def seedStats(s: Array[RunStats]): Unit =
+      synchronized { if (stats0 == null) stats0 = s }
+
+    /** Per-run key blooms (null element = pre-bloom run) — Cassandra's
+      * posture, where SSTable blooms are resident and a point read that
+      * misses every bloom touches no data file at all. */
+    lazy val blooms: Array[KeyBloom] = fromIndexes((_, idx) => idx.bloom)
+
+    /** Per-run DISTINCT-column bloom CHUNKS (null element = legacy
+      * pre-bloom run). A point slice skips a run when EVERY chunk's bloom
+      * rejects every wanted column — the false-window case min/max windows
+      * can't prune (wanted column INSIDE [colMin, colMax] but absent —
+      * interleaved-column wide rows). No false negatives, and the blooms
+      * saw tombstone cells' columns too, so a skipped run provably holds no
+      * cell (live or tombstone) of any wanted address. Single-chunk (CBLM)
+      * runs surface as a 1-element array. */
+    lazy val colBlooms: Array[Array[KeyBloom]] = fromIndexes((_, idx) => idx.colBlooms)
+
+    /** Per-run distinct-SUB bloom chunks (null element = legacy run): the
+      * sub twin of [[colBlooms]]. */
+    lazy val subBlooms: Array[Array[KeyBloom]] = fromIndexes((_, idx) => idx.subBlooms)
+
+    /** Sparse key sample (~1 key per [[IndexEvery]] cells, from the run
+      * indexes). */
+    lazy val sample: Seq[Array[Byte]] =
+      fromIndexes((_, idx) => idx.keys).toSeq.flatten
+
+    /** (min, max) key over the runs' first and last keys; (null, null) =
+      * empty segment. The planning-time bucket-skip check for index range
+      * probes: a bucket none of whose segments intersect `[lo, hi)` is
+      * provably posting-free and is never opened. */
+    def keyBounds: (Array[Byte], Array[Byte]) = {
+      var lo: Array[Byte] = null
+      var hi: Array[Byte] = null
+      stats.foreach { s =>
+        if (lo == null || Codecs.compareBytes(s.firstKey, lo) < 0) lo = s.firstKey
+        if (hi == null || Codecs.compareBytes(s.lastKey, hi) > 0) hi = s.lastKey
+      }
+      (lo, hi)
+    }
+
+    /** STAT counters of every non-empty run, read from the FIXED 16-byte
+      * suffix of each index block — STAT is always the LAST tail
+      * ([[serializeIndex]] keeps that invariant; any future tail appended
+      * after it must bump this reader). O(16 bytes) per run, so cheap
+      * enough for every planning's exact-numRows check, where parsing full
+      * index tails (blooms included) would be a driver-side terabyte at
+      * 100-TB segment counts. A legacy run whose trailing bytes happen to
+      * spell the magic is rejected by the range sanity checks (counts must
+      * be within the run's cell count and mutually consistent) — and a
+      * false negative only costs the exact statistic, never correctness.
+      * tombstones = -1 marks a run without a (valid) tail. */
+    lazy val quick: Array[QuickStats] = {
       val ch = java.nio.channels.FileChannel.open(file)
-      try runInfos(file).filter(_.cellCount > 0).map { ri =>
+      try liveInfos.map { ri =>
         val legacy = QuickStats(ri.cellCount, -1, -1, -1)
         if (ri.indexByteLen < 16) legacy
         else {
@@ -1285,7 +1283,62 @@ object CellStore {
         }
       }.toArray
       finally ch.close()
-    })
+    }
+
+    /** Run headers of the non-empty runs, without their stats. */
+    def liveInfos: IndexedSeq[RunInfo] = runs.filter(_.cellCount > 0)
+
+    /** `f` over every non-empty run's parsed index, one file handle. */
+    private def fromIndexes[T: scala.reflect.ClassTag](
+        f: (RunInfo, RunIndex) => T): Array[T] = {
+      val r = new SegmentReader(file)
+      try liveInfos.map(ri => f(ri, r.readIndex(ri))).toArray
+      finally r.close()
+    }
+  }
+
+  /** Handles of committed segments, one per path. */
+  private val metas = new java.util.concurrent.ConcurrentHashMap[Path, SegmentMeta]()
+
+  /** Committed segment name, the listing contract of [[segmentFiles]]. */
+  private val CommittedName = "b(\\d+)-.*\\.bin".r
+
+  /** The metadata handle of one segment file. A committed segment (a
+    * `b<bucket>-….bin` name in a table's `sst/` dir) shares one handle per
+    * path; any other file — a writer's staged `tmp-` file, which commit
+    * may rewrite in place — gets a fresh handle, so it is never answered
+    * from memory. */
+  def meta(file: Path): SegmentMeta = {
+    val p = file.toAbsolutePath.normalize
+    val committed = p.getParent != null &&
+      p.getParent.getFileName.toString == SstDir &&
+      CommittedName.matches(p.getFileName.toString)
+    if (committed) metas.computeIfAbsent(p, new SegmentMeta(_))
+    else new SegmentMeta(file)
+  }
+
+  /** Drop every segment handle and bucket-stat record at or under `path`
+    * (a table dir, or one segment). Every operation that deletes or
+    * rewrites segments calls it, so memory holds live segments only. */
+  private[graft] def forgetSegments(path: Path): Unit = {
+    val p = path.toAbsolutePath.normalize
+    metas.keySet.removeIf(_.startsWith(p))
+    bucketStatCache.keySet.removeIf(_.startsWith(p))
+  }
+
+  /** Paths that hold a segment handle right now. */
+  private[graft] def memoizedSegments: Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    metas.keySet.asScala.toSeq
+  }
+
+  /** Test hook: drop every handle and bucket-stat record, so a spec can
+    * replay the COLD-driver planning cost inside one JVM, or rewrite a
+    * committed segment in place. */
+  private[graft] def clearPlannerCaches(): Unit = {
+    metas.clear()
+    bucketStatCache.clear()
+  }
 
   /** Cells of one segment whose key falls in [lo, hi) (null = unbounded),
     * counted from the sparse index: runs fully inside the range count
@@ -1301,15 +1354,13 @@ object CellStore {
     * run-disjointness, zero tombstones) before treating this as a row
     * count — see [[graft.sources.cassandralike.MetadataAggReader]]. */
   def countCellsInRange(file: Path, lo: Array[Byte], hi: Array[Byte]): Long = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file) // aligned: runStats skips empty runs too
+    val runs = meta(file).live
     var total = 0L
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -1413,59 +1464,56 @@ object CellStore {
       subLo: Array[Byte] = null, subHi: Array[Byte] = null): Array[Long] = {
     val out = new Array[Long](points.length)
     if (points.isEmpty) return out
-    val infosAll = runInfos(file)
-    val blooms = runBlooms(file) // aligned with infosAll (unfiltered)
-    val statsIt = runStats(file).iterator // aligned with non-empty runs
+    val seg = meta(file)
+    val runs = seg.live
+    val blooms = seg.blooms
     var reader: SegmentReader = null
     try {
       var r = 0
-      while (r < infosAll.length) {
-        val ri = infosAll(r)
-        if (ri.cellCount > 0) {
-          val s = statsIt.next()
-          var idx: RunIndex = null
-          var p = 0
-          while (p < points.length) {
-            val k = points(p)
-            val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-              Codecs.compareBytes(k, s.lastKey) <= 0
-            if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-              if (idx == null) {
-                if (reader == null) reader = new SegmentReader(file)
-                pointProbeIndexReads.incrementAndGet()
-                idx = reader.readIndex(ri)
-              }
-              if (colPoints != null) {
-                // one contiguous interval per (k, c):
-                // [ (k, c, subLo) , (k, c, subHi) ), null sub bounds
-                // falling back to the whole (k, c) group
-                var ci = 0
-                while (ci < colPoints.length) {
-                  val c = colPoints(ci)
-                  val below =
-                    if (subHi == null)
-                      cellsBelowComposite(reader, ri, idx, k, byteSucc(c))
-                    else cellsBelowComposite(reader, ri, idx, k, c, subHi)
-                  val above =
-                    if (subLo == null) cellsBelowComposite(reader, ri, idx, k, c)
-                    else cellsBelowComposite(reader, ri, idx, k, c, subLo)
-                  out(p) += below - above
-                  ci += 1
-                }
-              } else {
-                // [ (k, colLo) , (k, colHi) ) — a null col bound falls back
-                // to the key-only boundary: (k, -inf) = k, (k, +inf) = succ(k)
-                val below =
-                  if (colHi == null) cellsBelow(reader, ri, idx, byteSucc(k))
-                  else cellsBelowComposite(reader, ri, idx, k, colHi)
-                val above =
-                  if (colLo == null) cellsBelow(reader, ri, idx, k)
-                  else cellsBelowComposite(reader, ri, idx, k, colLo)
-                out(p) += below - above
-              }
+      while (r < runs.length) {
+        val RunMeta(ri, s) = runs(r)
+        var idx: RunIndex = null
+        var p = 0
+        while (p < points.length) {
+          val k = points(p)
+          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
+            Codecs.compareBytes(k, s.lastKey) <= 0
+          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
+            if (idx == null) {
+              if (reader == null) reader = new SegmentReader(file)
+              pointProbeIndexReads.incrementAndGet()
+              idx = reader.readIndex(ri)
             }
-            p += 1
+            if (colPoints != null) {
+              // one contiguous interval per (k, c):
+              // [ (k, c, subLo) , (k, c, subHi) ), null sub bounds
+              // falling back to the whole (k, c) group
+              var ci = 0
+              while (ci < colPoints.length) {
+                val c = colPoints(ci)
+                val below =
+                  if (subHi == null)
+                    cellsBelowComposite(reader, ri, idx, k, byteSucc(c))
+                  else cellsBelowComposite(reader, ri, idx, k, c, subHi)
+                val above =
+                  if (subLo == null) cellsBelowComposite(reader, ri, idx, k, c)
+                  else cellsBelowComposite(reader, ri, idx, k, c, subLo)
+                out(p) += below - above
+                ci += 1
+              }
+            } else {
+              // [ (k, colLo) , (k, colHi) ) — a null col bound falls back
+              // to the key-only boundary: (k, -inf) = k, (k, +inf) = succ(k)
+              val below =
+                if (colHi == null) cellsBelow(reader, ri, idx, byteSucc(k))
+                else cellsBelowComposite(reader, ri, idx, k, colHi)
+              val above =
+                if (colLo == null) cellsBelow(reader, ri, idx, k)
+                else cellsBelowComposite(reader, ri, idx, k, colLo)
+              out(p) += below - above
+            }
           }
+          p += 1
         }
         r += 1
       }
@@ -1544,15 +1592,13 @@ object CellStore {
     * distinct visible row (zero tombstones, disjoint runs, per-run
     * distinctAddrs == cells) — same proof obligations as the counts. */
   def sumCellsInRange(file: Path, lo: Array[Byte], hi: Array[Byte]): Option[Long] = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file)
+    val runs = meta(file).live
     var total = 0L
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -1613,54 +1659,51 @@ object CellStore {
       subLo: Array[Byte] = null, subHi: Array[Byte] = null): Option[Array[Long]] = {
     val out = new Array[Long](points.length)
     if (points.isEmpty) return Some(out)
-    val infosAll = runInfos(file)
-    val blooms = runBlooms(file)
-    val statsIt = runStats(file).iterator
+    val seg = meta(file)
+    val runs = seg.live
+    val blooms = seg.blooms
     var reader: SegmentReader = null
     try {
       var r = 0
-      while (r < infosAll.length) {
-        val ri = infosAll(r)
-        if (ri.cellCount > 0) {
-          val s = statsIt.next()
-          var idx: RunIndex = null
-          var p = 0
-          while (p < points.length) {
-            val k = points(p)
-            val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-              Codecs.compareBytes(k, s.lastKey) <= 0
-            if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-              if (!s.hasValSums) return None
-              if (idx == null) {
-                if (reader == null) reader = new SegmentReader(file)
-                idx = reader.readIndex(ri)
-              }
-              if (colPoints != null) {
-                var ci = 0
-                while (ci < colPoints.length) {
-                  val c = colPoints(ci)
-                  val below =
-                    if (subHi == null)
-                      sumBelowComposite(reader, ri, idx, k, byteSucc(c))
-                    else sumBelowComposite(reader, ri, idx, k, c, subHi)
-                  val above =
-                    if (subLo == null) sumBelowComposite(reader, ri, idx, k, c)
-                    else sumBelowComposite(reader, ri, idx, k, c, subLo)
-                  out(p) = Math.addExact(out(p), Math.subtractExact(below, above))
-                  ci += 1
-                }
-              } else {
-                val below =
-                  if (colHi == null) sumBelow(reader, ri, idx, byteSucc(k))
-                  else sumBelowComposite(reader, ri, idx, k, colHi)
-                val above =
-                  if (colLo == null) sumBelow(reader, ri, idx, k)
-                  else sumBelowComposite(reader, ri, idx, k, colLo)
-                out(p) = Math.addExact(out(p), Math.subtractExact(below, above))
-              }
+      while (r < runs.length) {
+        val RunMeta(ri, s) = runs(r)
+        var idx: RunIndex = null
+        var p = 0
+        while (p < points.length) {
+          val k = points(p)
+          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
+            Codecs.compareBytes(k, s.lastKey) <= 0
+          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
+            if (!s.hasValSums) return None
+            if (idx == null) {
+              if (reader == null) reader = new SegmentReader(file)
+              idx = reader.readIndex(ri)
             }
-            p += 1
+            if (colPoints != null) {
+              var ci = 0
+              while (ci < colPoints.length) {
+                val c = colPoints(ci)
+                val below =
+                  if (subHi == null)
+                    sumBelowComposite(reader, ri, idx, k, byteSucc(c))
+                  else sumBelowComposite(reader, ri, idx, k, c, subHi)
+                val above =
+                  if (subLo == null) sumBelowComposite(reader, ri, idx, k, c)
+                  else sumBelowComposite(reader, ri, idx, k, c, subLo)
+                out(p) = Math.addExact(out(p), Math.subtractExact(below, above))
+                ci += 1
+              }
+            } else {
+              val below =
+                if (colHi == null) sumBelow(reader, ri, idx, byteSucc(k))
+                else sumBelowComposite(reader, ri, idx, k, colHi)
+              val above =
+                if (colLo == null) sumBelow(reader, ri, idx, k)
+                else sumBelowComposite(reader, ri, idx, k, colLo)
+              out(p) = Math.addExact(out(p), Math.subtractExact(below, above))
+            }
           }
+          p += 1
         }
         r += 1
       }
@@ -1768,8 +1811,7 @@ object CellStore {
     * per-run distinctAddrs == cells), the same proofs the counts use. */
   def extremalValueInRange(file: Path, lo: Array[Byte], hi: Array[Byte],
       wantMin: Boolean): Option[Option[Long]] = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file)
+    val runs = meta(file).live
     var has = false
     var best = 0L
     def consider(v: Long): Unit =
@@ -1777,9 +1819,8 @@ object CellStore {
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -1822,9 +1863,9 @@ object CellStore {
       wantMin: Boolean = true): Option[Array[java.lang.Long]] = {
     val out = new Array[java.lang.Long](points.length)
     if (points.isEmpty) return Some(out)
-    val infosAll = runInfos(file)
-    val blooms = runBlooms(file)
-    val statsIt = runStats(file).iterator
+    val seg = meta(file)
+    val runs = seg.live
+    val blooms = seg.blooms
     var reader: SegmentReader = null
     def merge(p: Int, v: Option[Long]): Unit = v.foreach { x =>
       if (out(p) == null || (if (wantMin) x < out(p) else x > out(p)))
@@ -1832,48 +1873,45 @@ object CellStore {
     }
     try {
       var r = 0
-      while (r < infosAll.length) {
-        val ri = infosAll(r)
-        if (ri.cellCount > 0) {
-          val s = statsIt.next()
-          var idx: RunIndex = null
-          var p = 0
-          while (p < points.length) {
-            val k = points(p)
-            val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-              Codecs.compareBytes(k, s.lastKey) <= 0
-            if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-              if (!s.hasValRange) return None
-              if (idx == null) {
-                if (reader == null) reader = new SegmentReader(file)
-                idx = reader.readIndex(ri)
-              }
-              if (colPoints != null) {
-                var ci = 0
-                while (ci < colPoints.length) {
-                  val c = colPoints(ci)
-                  val hiPos =
-                    if (subHi == null)
-                      cellsBelowComposite(reader, ri, idx, k, byteSucc(c))
-                    else cellsBelowComposite(reader, ri, idx, k, c, subHi)
-                  val loPos =
-                    if (subLo == null) cellsBelowComposite(reader, ri, idx, k, c)
-                    else cellsBelowComposite(reader, ri, idx, k, c, subLo)
-                  merge(p, extremalValueBetween(reader, ri, idx, loPos, hiPos, wantMin))
-                  ci += 1
-                }
-              } else {
-                val hiPos =
-                  if (colHi == null) cellsBelow(reader, ri, idx, byteSucc(k))
-                  else cellsBelowComposite(reader, ri, idx, k, colHi)
-                val loPos =
-                  if (colLo == null) cellsBelow(reader, ri, idx, k)
-                  else cellsBelowComposite(reader, ri, idx, k, colLo)
-                merge(p, extremalValueBetween(reader, ri, idx, loPos, hiPos, wantMin))
-              }
+      while (r < runs.length) {
+        val RunMeta(ri, s) = runs(r)
+        var idx: RunIndex = null
+        var p = 0
+        while (p < points.length) {
+          val k = points(p)
+          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
+            Codecs.compareBytes(k, s.lastKey) <= 0
+          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
+            if (!s.hasValRange) return None
+            if (idx == null) {
+              if (reader == null) reader = new SegmentReader(file)
+              idx = reader.readIndex(ri)
             }
-            p += 1
+            if (colPoints != null) {
+              var ci = 0
+              while (ci < colPoints.length) {
+                val c = colPoints(ci)
+                val hiPos =
+                  if (subHi == null)
+                    cellsBelowComposite(reader, ri, idx, k, byteSucc(c))
+                  else cellsBelowComposite(reader, ri, idx, k, c, subHi)
+                val loPos =
+                  if (subLo == null) cellsBelowComposite(reader, ri, idx, k, c)
+                  else cellsBelowComposite(reader, ri, idx, k, c, subLo)
+                merge(p, extremalValueBetween(reader, ri, idx, loPos, hiPos, wantMin))
+                ci += 1
+              }
+            } else {
+              val hiPos =
+                if (colHi == null) cellsBelow(reader, ri, idx, byteSucc(k))
+                else cellsBelowComposite(reader, ri, idx, k, colHi)
+              val loPos =
+                if (colLo == null) cellsBelow(reader, ri, idx, k)
+                else cellsBelowComposite(reader, ri, idx, k, colLo)
+              merge(p, extremalValueBetween(reader, ri, idx, loPos, hiPos, wantMin))
+            }
           }
+          p += 1
         }
         r += 1
       }
@@ -1898,15 +1936,13 @@ object CellStore {
     * or a key split across runs would count twice. */
   def countDistinctKeysInRange(file: Path, lo: Array[Byte], hi: Array[Byte])
     : Option[Long] = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file)
+    val runs = meta(file).live
     var total = 0L
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -2107,73 +2143,70 @@ object CellStore {
     val counts = new Array[Long](points.length)
     val sums = if (wantSums) new Array[Long](points.length) else null
     if (points.isEmpty) return Some((counts, sums))
-    val infosAll = runInfos(file)
-    val blooms = runBlooms(file)
-    val statsIt = runStats(file).iterator
+    val seg = meta(file)
+    val runs = seg.live
+    val blooms = seg.blooms
     var reader: SegmentReader = null
     try {
       var r = 0
-      while (r < infosAll.length) {
-        val ri = infosAll(r)
-        if (ri.cellCount > 0) {
-          val s = statsIt.next()
-          def hits(k: Array[Byte]): Boolean =
-            Codecs.compareBytes(k, s.firstKey) >= 0 &&
-              Codecs.compareBytes(k, s.lastKey) <= 0 &&
-              (blooms(r) == null || blooms(r).mightContain(k))
-          if (points.exists(hits)) {
-            // consulted: the run must be classifiable and fully tailed
-            // even when it holds no `col` cells (its tombstones could
-            // still shadow them)
-            val sign =
-              if (!netted) 1
-              else nettedSign(s) match {
-                case Some(x) => x
-                case None => return None
-              }
-            if (s.colVals == null) return None
-            val cv = findColValStat(s.colVals, col)
-            if (cv != null) { // absent column = zero cells, exactly
-              if (wantSums && !cv.sumsOk) return None
-              if (reader == null) reader = new SegmentReader(file)
-              pointProbeIndexReads.incrementAndGet()
-              val idx = reader.readIndex(ri)
-              var p = 0
-              while (p < points.length) {
-                val k = points(p)
-                if (hits(k)) {
-                  // fused per-point walk: ONE seek + one span-bounded
-                  // scan yields count AND sum together (the prefix-diff
-                  // form costs four separate seek+stream constructions
-                  // per point — the dominant cost at ~50 candidates per
-                  // bucket, measured 4× this)
-                  val start =
-                    if (Codecs.compareBytes(idx.keys(0), k) >= 0) 0
-                    else lastEntryBelow(idx.keys, k)
-                  val it = reader.runIterator(
-                    ri.payloadOffset + idx.offsets(start),
-                    ri.cellCount - idx.cellPos(start))
-                  var cnt = 0L
-                  var sm = 0L
-                  var scanning = true
-                  while (scanning && it.hasNext) {
-                    val c = it.next()
-                    val kc = Codecs.compareBytes(c.key, k)
-                    if (kc > 0) scanning = false
-                    else if (kc == 0 && c.col != null &&
-                        java.util.Arrays.equals(c.col, col)) {
-                      cnt += 1
-                      if (wantSums) sm = Math.addExact(sm, valueLong(c))
-                    }
+      while (r < runs.length) {
+        val RunMeta(ri, s) = runs(r)
+        def hits(k: Array[Byte]): Boolean =
+          Codecs.compareBytes(k, s.firstKey) >= 0 &&
+            Codecs.compareBytes(k, s.lastKey) <= 0 &&
+            (blooms(r) == null || blooms(r).mightContain(k))
+        if (points.exists(hits)) {
+          // consulted: the run must be classifiable and fully tailed
+          // even when it holds no `col` cells (its tombstones could
+          // still shadow them)
+          val sign =
+            if (!netted) 1
+            else nettedSign(s) match {
+              case Some(x) => x
+              case None => return None
+            }
+          if (s.colVals == null) return None
+          val cv = findColValStat(s.colVals, col)
+          if (cv != null) { // absent column = zero cells, exactly
+            if (wantSums && !cv.sumsOk) return None
+            if (reader == null) reader = new SegmentReader(file)
+            pointProbeIndexReads.incrementAndGet()
+            val idx = reader.readIndex(ri)
+            var p = 0
+            while (p < points.length) {
+              val k = points(p)
+              if (hits(k)) {
+                // fused per-point walk: ONE seek + one span-bounded
+                // scan yields count AND sum together (the prefix-diff
+                // form costs four separate seek+stream constructions
+                // per point — the dominant cost at ~50 candidates per
+                // bucket, measured 4× this)
+                val start =
+                  if (Codecs.compareBytes(idx.keys(0), k) >= 0) 0
+                  else lastEntryBelow(idx.keys, k)
+                val it = reader.runIterator(
+                  ri.payloadOffset + idx.offsets(start),
+                  ri.cellCount - idx.cellPos(start))
+                var cnt = 0L
+                var sm = 0L
+                var scanning = true
+                while (scanning && it.hasNext) {
+                  val c = it.next()
+                  val kc = Codecs.compareBytes(c.key, k)
+                  if (kc > 0) scanning = false
+                  else if (kc == 0 && c.col != null &&
+                      java.util.Arrays.equals(c.col, col)) {
+                    cnt += 1
+                    if (wantSums) sm = Math.addExact(sm, valueLong(c))
                   }
-                  counts(p) += sign * cnt
-                  if (wantSums)
-                    sums(p) =
-                      if (sign > 0) Math.addExact(sums(p), sm)
-                      else Math.subtractExact(sums(p), sm)
                 }
-                p += 1
+                counts(p) += sign * cnt
+                if (wantSums)
+                  sums(p) =
+                    if (sign > 0) Math.addExact(sums(p), sm)
+                    else Math.subtractExact(sums(p), sm)
               }
+              p += 1
             }
           }
         }
@@ -2202,54 +2235,51 @@ object CellStore {
       col: Array[Byte]): Option[Array[Array[Byte]]] = {
     val out = new Array[Array[Byte]](points.length)
     if (points.isEmpty) return Some(out)
-    val infosAll = runInfos(file)
-    val blooms = runBlooms(file)
-    val statsIt = runStats(file).iterator
+    val seg = meta(file)
+    val runs = seg.live
+    val blooms = seg.blooms
     var reader: SegmentReader = null
     try {
       var r = 0
-      while (r < infosAll.length) {
-        val ri = infosAll(r)
-        if (ri.cellCount > 0) {
-          val s = statsIt.next()
-          def hits(k: Array[Byte]): Boolean =
-            Codecs.compareBytes(k, s.firstKey) >= 0 &&
-              Codecs.compareBytes(k, s.lastKey) <= 0 &&
-              (blooms(r) == null || blooms(r).mightContain(k))
-          if (points.exists(hits)) {
-            if (s.colVals == null) return None
-            val cv = findColValStat(s.colVals, col)
-            if (cv != null) { // absent column = no values here, exactly
-              if (reader == null) reader = new SegmentReader(file)
-              pointProbeIndexReads.incrementAndGet()
-              val idx = reader.readIndex(ri)
-              var p = 0
-              while (p < points.length) {
-                val k = points(p)
-                if (hits(k)) {
-                  val start =
-                    if (Codecs.compareBytes(idx.keys(0), k) >= 0) 0
-                    else lastEntryBelow(idx.keys, k)
-                  val it = reader.runIterator(
-                    ri.payloadOffset + idx.offsets(start),
-                    ri.cellCount - idx.cellPos(start))
-                  var scanning = true
-                  while (scanning && it.hasNext) {
-                    val c = it.next()
-                    val kc = Codecs.compareBytes(c.key, k)
-                    if (kc > 0) scanning = false
-                    else if (kc == 0 && c.col != null &&
-                        java.util.Arrays.equals(c.col, col)) {
-                      // the clean proof promises one live cell per
-                      // address; a tombstone or a second match breaks
-                      // the promise — decline, never guess
-                      if (c.tombstone || out(p) != null) return None
-                      out(p) = c.value
-                    }
+      while (r < runs.length) {
+        val RunMeta(ri, s) = runs(r)
+        def hits(k: Array[Byte]): Boolean =
+          Codecs.compareBytes(k, s.firstKey) >= 0 &&
+            Codecs.compareBytes(k, s.lastKey) <= 0 &&
+            (blooms(r) == null || blooms(r).mightContain(k))
+        if (points.exists(hits)) {
+          if (s.colVals == null) return None
+          val cv = findColValStat(s.colVals, col)
+          if (cv != null) { // absent column = no values here, exactly
+            if (reader == null) reader = new SegmentReader(file)
+            pointProbeIndexReads.incrementAndGet()
+            val idx = reader.readIndex(ri)
+            var p = 0
+            while (p < points.length) {
+              val k = points(p)
+              if (hits(k)) {
+                val start =
+                  if (Codecs.compareBytes(idx.keys(0), k) >= 0) 0
+                  else lastEntryBelow(idx.keys, k)
+                val it = reader.runIterator(
+                  ri.payloadOffset + idx.offsets(start),
+                  ri.cellCount - idx.cellPos(start))
+                var scanning = true
+                while (scanning && it.hasNext) {
+                  val c = it.next()
+                  val kc = Codecs.compareBytes(c.key, k)
+                  if (kc > 0) scanning = false
+                  else if (kc == 0 && c.col != null &&
+                      java.util.Arrays.equals(c.col, col)) {
+                    // the clean proof promises one live cell per
+                    // address; a tombstone or a second match breaks
+                    // the promise — decline, never guess
+                    if (c.tombstone || out(p) != null) return None
+                    out(p) = c.value
                   }
                 }
-                p += 1
               }
+              p += 1
             }
           }
         }
@@ -2269,15 +2299,13 @@ object CellStore {
     * mapping this IS `COUNT(c)` in a key range — non-missing `c` cells. */
   def countColCellsInRange(file: Path, col: Array[Byte],
       lo: Array[Byte], hi: Array[Byte]): Option[Long] = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file)
+    val runs = meta(file).live
     var total = 0L
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -2313,15 +2341,13 @@ object CellStore {
     * accumulation overflows Long (the fold then owns the query). */
   def sumColCellsInRange(file: Path, col: Array[Byte],
       lo: Array[Byte], hi: Array[Byte]): Option[Long] = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file)
+    val runs = meta(file).live
     var total = 0L
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -2363,8 +2389,7 @@ object CellStore {
   def extremalColValueInRange(file: Path, col: Array[Byte],
       lo: Array[Byte], hi: Array[Byte],
       wantMin: Boolean): Option[Option[Long]] = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file)
+    val runs = meta(file).live
     var has = false
     var best = 0L
     def consider(v: Long): Unit =
@@ -2372,9 +2397,8 @@ object CellStore {
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -2438,15 +2462,13 @@ object CellStore {
     * [[BucketStat.nettedOk]]. */
   def nettedCountCellsInRange(file: Path, lo: Array[Byte],
       hi: Array[Byte]): Option[Long] = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file)
+    val runs = meta(file).live
     var total = 0L
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -2483,59 +2505,56 @@ object CellStore {
     : Option[Array[Long]] = {
     val out = new Array[Long](points.length)
     if (points.isEmpty) return Some(out)
-    val infosAll = runInfos(file)
-    val blooms = runBlooms(file)
-    val statsIt = runStats(file).iterator
+    val seg = meta(file)
+    val runs = seg.live
+    val blooms = seg.blooms
     var reader: SegmentReader = null
     try {
       var r = 0
-      while (r < infosAll.length) {
-        val ri = infosAll(r)
-        if (ri.cellCount > 0) {
-          val s = statsIt.next()
-          var sign = 0
-          var idx: RunIndex = null
-          var p = 0
-          while (p < points.length) {
-            val k = points(p)
-            val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-              Codecs.compareBytes(k, s.lastKey) <= 0
-            if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-              if (sign == 0) sign = nettedSign(s) match {
-                case Some(x) => x
-                case None => return None
-              }
-              if (idx == null) {
-                if (reader == null) reader = new SegmentReader(file)
-                pointProbeIndexReads.incrementAndGet()
-                idx = reader.readIndex(ri)
-              }
-              if (colPoints != null) {
-                var ci = 0
-                while (ci < colPoints.length) {
-                  val c = colPoints(ci)
-                  val below =
-                    if (subHi == null)
-                      cellsBelowComposite(reader, ri, idx, k, byteSucc(c))
-                    else cellsBelowComposite(reader, ri, idx, k, c, subHi)
-                  val above =
-                    if (subLo == null) cellsBelowComposite(reader, ri, idx, k, c)
-                    else cellsBelowComposite(reader, ri, idx, k, c, subLo)
-                  out(p) += sign * (below - above)
-                  ci += 1
-                }
-              } else {
-                val below =
-                  if (colHi == null) cellsBelow(reader, ri, idx, byteSucc(k))
-                  else cellsBelowComposite(reader, ri, idx, k, colHi)
-                val above =
-                  if (colLo == null) cellsBelow(reader, ri, idx, k)
-                  else cellsBelowComposite(reader, ri, idx, k, colLo)
-                out(p) += sign * (below - above)
-              }
+      while (r < runs.length) {
+        val RunMeta(ri, s) = runs(r)
+        var sign = 0
+        var idx: RunIndex = null
+        var p = 0
+        while (p < points.length) {
+          val k = points(p)
+          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
+            Codecs.compareBytes(k, s.lastKey) <= 0
+          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
+            if (sign == 0) sign = nettedSign(s) match {
+              case Some(x) => x
+              case None => return None
             }
-            p += 1
+            if (idx == null) {
+              if (reader == null) reader = new SegmentReader(file)
+              pointProbeIndexReads.incrementAndGet()
+              idx = reader.readIndex(ri)
+            }
+            if (colPoints != null) {
+              var ci = 0
+              while (ci < colPoints.length) {
+                val c = colPoints(ci)
+                val below =
+                  if (subHi == null)
+                    cellsBelowComposite(reader, ri, idx, k, byteSucc(c))
+                  else cellsBelowComposite(reader, ri, idx, k, c, subHi)
+                val above =
+                  if (subLo == null) cellsBelowComposite(reader, ri, idx, k, c)
+                  else cellsBelowComposite(reader, ri, idx, k, c, subLo)
+                out(p) += sign * (below - above)
+                ci += 1
+              }
+            } else {
+              val below =
+                if (colHi == null) cellsBelow(reader, ri, idx, byteSucc(k))
+                else cellsBelowComposite(reader, ri, idx, k, colHi)
+              val above =
+                if (colLo == null) cellsBelow(reader, ri, idx, k)
+                else cellsBelowComposite(reader, ri, idx, k, colLo)
+              out(p) += sign * (below - above)
+            }
           }
+          p += 1
         }
         r += 1
       }
@@ -2551,15 +2570,13 @@ object CellStore {
     * (e.g. non-long victims), or any accumulation overflows. */
   def nettedSumCellsInRange(file: Path, lo: Array[Byte],
       hi: Array[Byte]): Option[Long] = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file)
+    val runs = meta(file).live
     var total = 0L
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -2601,61 +2618,58 @@ object CellStore {
     : Option[Array[Long]] = {
     val out = new Array[Long](points.length)
     if (points.isEmpty) return Some(out)
-    val infosAll = runInfos(file)
-    val blooms = runBlooms(file)
-    val statsIt = runStats(file).iterator
+    val seg = meta(file)
+    val runs = seg.live
+    val blooms = seg.blooms
     var reader: SegmentReader = null
     try {
       var r = 0
-      while (r < infosAll.length) {
-        val ri = infosAll(r)
-        if (ri.cellCount > 0) {
-          val s = statsIt.next()
-          var sign = 0
-          var idx: RunIndex = null
-          var p = 0
-          while (p < points.length) {
-            val k = points(p)
-            val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-              Codecs.compareBytes(k, s.lastKey) <= 0
-            if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-              if (sign == 0) sign = nettedSign(s) match {
-                case Some(x) => x
-                case None => return None
-              }
-              if (!s.hasValSums) return None
-              if (idx == null) {
-                if (reader == null) reader = new SegmentReader(file)
-                idx = reader.readIndex(ri)
-              }
-              if (colPoints != null) {
-                var ci = 0
-                while (ci < colPoints.length) {
-                  val c = colPoints(ci)
-                  val below =
-                    if (subHi == null)
-                      sumBelowComposite(reader, ri, idx, k, byteSucc(c))
-                    else sumBelowComposite(reader, ri, idx, k, c, subHi)
-                  val above =
-                    if (subLo == null) sumBelowComposite(reader, ri, idx, k, c)
-                    else sumBelowComposite(reader, ri, idx, k, c, subLo)
-                  out(p) = addSigned(out(p), sign,
-                    Math.subtractExact(below, above))
-                  ci += 1
-                }
-              } else {
+      while (r < runs.length) {
+        val RunMeta(ri, s) = runs(r)
+        var sign = 0
+        var idx: RunIndex = null
+        var p = 0
+        while (p < points.length) {
+          val k = points(p)
+          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
+            Codecs.compareBytes(k, s.lastKey) <= 0
+          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
+            if (sign == 0) sign = nettedSign(s) match {
+              case Some(x) => x
+              case None => return None
+            }
+            if (!s.hasValSums) return None
+            if (idx == null) {
+              if (reader == null) reader = new SegmentReader(file)
+              idx = reader.readIndex(ri)
+            }
+            if (colPoints != null) {
+              var ci = 0
+              while (ci < colPoints.length) {
+                val c = colPoints(ci)
                 val below =
-                  if (colHi == null) sumBelow(reader, ri, idx, byteSucc(k))
-                  else sumBelowComposite(reader, ri, idx, k, colHi)
+                  if (subHi == null)
+                    sumBelowComposite(reader, ri, idx, k, byteSucc(c))
+                  else sumBelowComposite(reader, ri, idx, k, c, subHi)
                 val above =
-                  if (colLo == null) sumBelow(reader, ri, idx, k)
-                  else sumBelowComposite(reader, ri, idx, k, colLo)
+                  if (subLo == null) sumBelowComposite(reader, ri, idx, k, c)
+                  else sumBelowComposite(reader, ri, idx, k, c, subLo)
                 out(p) = addSigned(out(p), sign,
                   Math.subtractExact(below, above))
+                ci += 1
               }
+            } else {
+              val below =
+                if (colHi == null) sumBelow(reader, ri, idx, byteSucc(k))
+                else sumBelowComposite(reader, ri, idx, k, colHi)
+              val above =
+                if (colLo == null) sumBelow(reader, ri, idx, k)
+                else sumBelowComposite(reader, ri, idx, k, colLo)
+              out(p) = addSigned(out(p), sign,
+                Math.subtractExact(below, above))
             }
-            p += 1
           }
+          p += 1
         }
         r += 1
       }
@@ -2669,15 +2683,13 @@ object CellStore {
     * epoch's CVAL tails sum its victims' values per column name. */
   def nettedSumColCellsInRange(file: Path, col: Array[Byte],
       lo: Array[Byte], hi: Array[Byte]): Option[Long] = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file)
+    val runs = meta(file).live
     var total = 0L
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -2723,15 +2735,13 @@ object CellStore {
     * from the live side. */
   def nettedCountDistinctKeysInRange(file: Path, lo: Array[Byte],
       hi: Array[Byte]): Option[Long] = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file)
+    val runs = meta(file).live
     var total = 0L
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -2766,15 +2776,13 @@ object CellStore {
     * same column bucket). */
   def nettedCountColCellsInRange(file: Path, col: Array[Byte],
       lo: Array[Byte], hi: Array[Byte]): Option[Long] = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file)
+    val runs = meta(file).live
     var total = 0L
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -2825,40 +2833,37 @@ object CellStore {
       wantMin: Boolean): Array[Array[Byte]] = {
     val out = new Array[Array[Byte]](points.length)
     if (points.isEmpty) return out
-    val infosAll = runInfos(file)
-    val blooms = runBlooms(file)
-    val statsIt = runStats(file).iterator
+    val seg = meta(file)
+    val runs = seg.live
+    val blooms = seg.blooms
     var reader: SegmentReader = null
     try {
       var r = 0
-      while (r < infosAll.length) {
-        val ri = infosAll(r)
-        if (ri.cellCount > 0) {
-          val s = statsIt.next()
-          var idx: RunIndex = null
-          var p = 0
-          while (p < points.length) {
-            val k = points(p)
-            val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-              Codecs.compareBytes(k, s.lastKey) <= 0
-            if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-              require(s.colEntries, "extremalColsAtPoints needs per-entry col bytes")
-              if (idx == null) {
-                if (reader == null) reader = new SegmentReader(file)
-                idx = reader.readIndex(ri)
-              }
-              val cand =
-                if (wantMin) firstColAtLeast(reader, ri, idx, k, colLo)
-                else lastColBelow(reader, ri, idx, k, colHi)
-              val ok = cand != null &&
-                (colLo == null || Codecs.compareBytes(cand, colLo) >= 0) &&
-                (colHi == null || Codecs.compareBytes(cand, colHi) < 0)
-              if (ok && (out(p) == null ||
-                  (Codecs.compareBytes(cand, out(p)) < 0) == wantMin))
-                out(p) = cand
+      while (r < runs.length) {
+        val RunMeta(ri, s) = runs(r)
+        var idx: RunIndex = null
+        var p = 0
+        while (p < points.length) {
+          val k = points(p)
+          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
+            Codecs.compareBytes(k, s.lastKey) <= 0
+          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
+            require(s.colEntries, "extremalColsAtPoints needs per-entry col bytes")
+            if (idx == null) {
+              if (reader == null) reader = new SegmentReader(file)
+              idx = reader.readIndex(ri)
             }
-            p += 1
+            val cand =
+              if (wantMin) firstColAtLeast(reader, ri, idx, k, colLo)
+              else lastColBelow(reader, ri, idx, k, colHi)
+            val ok = cand != null &&
+              (colLo == null || Codecs.compareBytes(cand, colLo) >= 0) &&
+              (colHi == null || Codecs.compareBytes(cand, colHi) < 0)
+            if (ok && (out(p) == null ||
+                (Codecs.compareBytes(cand, out(p)) < 0) == wantMin))
+              out(p) = cand
           }
+          p += 1
         }
         r += 1
       }
@@ -2887,46 +2892,43 @@ object CellStore {
       wantMin: Boolean): Array[Array[Byte]] = {
     val out = new Array[Array[Byte]](points.length)
     if (points.isEmpty || colPoints == null || colPoints.isEmpty) return out
-    val infosAll = runInfos(file)
-    val blooms = runBlooms(file)
-    val statsIt = runStats(file).iterator
+    val seg = meta(file)
+    val runs = seg.live
+    val blooms = seg.blooms
     var reader: SegmentReader = null
     def better(cand: Array[Byte], best: Array[Byte]): Boolean =
       best == null || (Codecs.compareBytes(cand, best) < 0) == wantMin
     try {
       var r = 0
-      while (r < infosAll.length) {
-        val ri = infosAll(r)
-        if (ri.cellCount > 0) {
-          val s = statsIt.next()
-          var idx: RunIndex = null
-          var p = 0
-          while (p < points.length) {
-            val k = points(p)
-            val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-              Codecs.compareBytes(k, s.lastKey) <= 0
-            if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-              require(s.colEntries && s.subEntries,
-                "extremalSubsAtPoints needs per-entry col and sub bytes")
-              if (idx == null) {
-                if (reader == null) reader = new SegmentReader(file)
-                idx = reader.readIndex(ri)
-              }
-              var ci = 0
-              while (ci < colPoints.length) {
-                val c = colPoints(ci)
-                val cand =
-                  if (wantMin) firstSubAtLeast(reader, ri, idx, k, c, subLo)
-                  else lastSubBelow(reader, ri, idx, k, c, subHi)
-                val ok = cand != null &&
-                  (subLo == null || Codecs.compareBytes(cand, subLo) >= 0) &&
-                  (subHi == null || Codecs.compareBytes(cand, subHi) < 0)
-                if (ok && better(cand, out(p))) out(p) = cand
-                ci += 1
-              }
+      while (r < runs.length) {
+        val RunMeta(ri, s) = runs(r)
+        var idx: RunIndex = null
+        var p = 0
+        while (p < points.length) {
+          val k = points(p)
+          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
+            Codecs.compareBytes(k, s.lastKey) <= 0
+          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
+            require(s.colEntries && s.subEntries,
+              "extremalSubsAtPoints needs per-entry col and sub bytes")
+            if (idx == null) {
+              if (reader == null) reader = new SegmentReader(file)
+              idx = reader.readIndex(ri)
             }
-            p += 1
+            var ci = 0
+            while (ci < colPoints.length) {
+              val c = colPoints(ci)
+              val cand =
+                if (wantMin) firstSubAtLeast(reader, ri, idx, k, c, subLo)
+                else lastSubBelow(reader, ri, idx, k, c, subHi)
+              val ok = cand != null &&
+                (subLo == null || Codecs.compareBytes(cand, subLo) >= 0) &&
+                (subHi == null || Codecs.compareBytes(cand, subHi) < 0)
+              if (ok && better(cand, out(p))) out(p) = cand
+              ci += 1
+            }
           }
+          p += 1
         }
         r += 1
       }
@@ -3102,15 +3104,13 @@ object CellStore {
     * straddles the bound scans the ONE span containing it. */
   def extremalKeyInRange(file: Path, lo: Array[Byte], hi: Array[Byte],
       wantMin: Boolean): Option[Array[Byte]] = {
-    val infos = runInfos(file).filter(_.cellCount > 0)
-    val stats = runStats(file)
+    val runs = meta(file).live
     var best: Array[Byte] = null
     var reader: SegmentReader = null
     try {
       var i = 0
-      while (i < infos.length) {
-        val ri = infos(i)
-        val s = stats(i)
+      while (i < runs.length) {
+        val RunMeta(ri, s) = runs(i)
         val disjoint =
           (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
             (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
@@ -3180,10 +3180,8 @@ object CellStore {
     last
   }
 
-  /** Per-run [[RunStats]] of one segment; memoized per immutable file,
-    * index-tail reads only. Empty runs are skipped. */
-  /** Diagnostic: number of run-index-tail parses that actually hit the
-    * file (cache misses). The incremental-sidecar spec pins commit-time
+  /** Diagnostic: number of [[SegmentMeta.stats]] fills that parsed the
+    * index tails of a file. The incremental-sidecar spec pins commit-time
     * refreshes to O(new files) by watching this not move for carried
     * files. */
   val runTailReads = new java.util.concurrent.atomic.AtomicLong()
@@ -3198,34 +3196,27 @@ object CellStore {
     * judged query. */
   val pointProbeIndexReads = new java.util.concurrent.atomic.AtomicLong()
 
-  def runStats(file: Path): Array[RunStats] =
-    runStatsCache.computeIfAbsent(cacheKey(file), _ => {
-      runTailReads.incrementAndGet()
-      val r = new SegmentReader(file)
-      try runInfos(file).filter(_.cellCount > 0).map { ri =>
-        val idx = r.readIndex(ri)
-        RunStats(ri.cellCount, idx.keys(0), idx.lastKey,
-          idx.colMin, idx.colMax, idx.subMin, idx.subMax,
-          idx.statTombstones, idx.statKeys, idx.statAddrs,
-          colEntries = idx.cols != null && !idx.cols.exists(_ == null),
-          subEntries = idx.subs != null && !idx.subs.exists(_ == null),
-          hasKeyPrefix = idx.keyPrefix != null,
-          hasValSums = idx.valSums != null,
-          valTotal = idx.valTotal,
-          hasValRange = idx.valMins != null,
-          valMin = idx.valMin,
-          valMax = idx.valMax,
-          colVals = if (idx.colVals == null) null
-            else idx.colVals.map(cv => ColValStat(cv.col, cv.sumsOk,
-              cv.rangeOk, cv.totalCount.toLong, cv.totalSum,
-              cv.runMin, cv.runMax)),
-          certDeletes = idx.certDeletes,
-          tsMin = idx.tsMin,
-          tsMax = idx.tsMax,
-          hasTsRange = idx.hasTsRange)
-      }.toArray
-      finally r.close()
-    })
+  /** The [[RunStats]] of one run, from its parsed index. */
+  private def runStatsOf(ri: RunInfo, idx: RunIndex): RunStats =
+    RunStats(ri.cellCount, idx.keys(0), idx.lastKey,
+      idx.colMin, idx.colMax, idx.subMin, idx.subMax,
+      idx.statTombstones, idx.statKeys, idx.statAddrs,
+      colEntries = idx.cols != null && !idx.cols.exists(_ == null),
+      subEntries = idx.subs != null && !idx.subs.exists(_ == null),
+      hasKeyPrefix = idx.keyPrefix != null,
+      hasValSums = idx.valSums != null,
+      valTotal = idx.valTotal,
+      hasValRange = idx.valMins != null,
+      valMin = idx.valMin,
+      valMax = idx.valMax,
+      colVals = if (idx.colVals == null) null
+        else idx.colVals.map(cv => ColValStat(cv.col, cv.sumsOk,
+          cv.rangeOk, cv.totalCount.toLong, cv.totalSum,
+          cv.runMin, cv.runMax)),
+      certDeletes = idx.certDeletes,
+      tsMin = idx.tsMin,
+      tsMax = idx.tsMax,
+      hasTsRange = idx.hasTsRange)
 
   // ---- per-bucket STAT sidecar: cold-driver planning in O(buckets) ----
 
@@ -3491,11 +3482,15 @@ object CellStore {
   def writeBucketStats(tableDir: String, bucket: Int): Unit = {
     val target = bucketStatFile(tableDir, bucket)
     val files = segmentFiles(tableDir, bucket)
-    if (files.isEmpty) { Files.deleteIfExists(target); return }
+    if (files.isEmpty) {
+      Files.deleteIfExists(target)
+      bucketStatCache.remove(target.toAbsolutePath.normalize)
+      return
+    }
     val prev = readSidecarRunStats(target)
     val perFile: Seq[(Path, Array[RunStats])] = files.map { f =>
       val sig = (f.getFileName.toString, Files.size(f))
-      f -> prev.getOrElse(sig, runStats(f))
+      f -> prev.getOrElse(sig, meta(f).stats)
     }
     val rec = aggregateBucketStat(fileSig(files),
       perFile.flatMap(_._2.toSeq))
@@ -3568,6 +3563,7 @@ object CellStore {
       }
     } finally out.close()
     Files.move(tmp, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    bucketStatCache.remove(target.toAbsolutePath.normalize)
   }
 
   private def writeRunStats(out: DataOutputStream, s: RunStats): Unit = {
@@ -3640,43 +3636,30 @@ object CellStore {
       in.readBoolean())
   }
 
-  /** Seed [[runStats]]' memo from one bucket's sidecar per-file section:
-    * a COLD driver's per-run judgments (as-of gating, subset stats) then
-    * answer from ONE sidecar read instead of opening every segment's
-    * tail — the planning twin of the incremental commit refresh. Only
-    * files whose (name, size) signature matches a live segment seed (the
-    * same staleness authority as the reduction); files already memoized
-    * are untouched. Cheap to call repeatedly: parses are memoized per
-    * sidecar identity. */
+  /** Fill the [[SegmentMeta.stats]] of one bucket's segments from its
+    * sidecar's per-file section: a COLD driver's per-run judgments (as-of
+    * gating, subset stats) then answer from ONE sidecar read instead of
+    * opening every segment's tail — the planning twin of the incremental
+    * commit refresh. Only files whose (name, size) signature matches a
+    * live segment seed (the same staleness authority as the reduction);
+    * handles that already hold stats are untouched, so once every file
+    * holds them the sidecar is not read again. */
   def seedRunStatsFromSidecar(tableDir: String, bucket: Int,
       files: Seq[Path]): Unit = {
-    if (files.forall(f => runStatsCache.containsKey(cacheKey(f)))) return
+    val ms = files.map(meta)
+    if (ms.forall(_.hasStats)) return
     val carried = readSidecarRunStats(bucketStatFile(tableDir, bucket))
-    if (carried.isEmpty) return
-    files.foreach { f =>
-      carried.get((f.getFileName.toString, Files.size(f))).foreach { rs =>
-        runStatsCache.putIfAbsent(cacheKey(f), rs)
-      }
+    ms.foreach { m =>
+      carried.get((m.file.getFileName.toString, m.bytes)).foreach(m.seedStats)
     }
   }
 
   /** Parse the per-file run-stats section of one sidecar, skipping the
     * reduction — the commit-path companion of [[readBucketStats]]. An
     * absent, legacy, or corrupt sidecar returns empty (the refresh then
-    * reads every tail, exactly the pre-incremental behavior). Memoized
-    * per sidecar file identity (sidecars are replaced atomically, never
-    * appended). */
+    * reads every tail, exactly the pre-incremental behavior). Not
+    * memoized: each commit parses the sidecar it is about to replace. */
   private def readSidecarRunStats(p: Path)
-    : Map[(String, Long), Array[RunStats]] = {
-    if (!Files.exists(p)) return Map.empty
-    sidecarRunStatsCache.computeIfAbsent(cacheKey(p), _ =>
-      readSidecarRunStats0(p))
-  }
-
-  private val sidecarRunStatsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), Map[(String, Long), Array[RunStats]]]()
-
-  private def readSidecarRunStats0(p: Path)
     : Map[(String, Long), Array[RunStats]] = {
     if (!Files.exists(p)) return Map.empty
     val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(p)))
@@ -3695,19 +3678,22 @@ object CellStore {
     } finally in.close()
   }
 
+  /** Parsed sidecar reductions by sidecar path. [[writeBucketStats]] and
+    * [[forgetSegments]] drop an entry when its sidecar is replaced or
+    * deleted. */
   private val bucketStatCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), BucketStat]()
+    new java.util.concurrent.ConcurrentHashMap[Path, BucketStat]()
 
   /** Parse one bucket's sidecar IF it exists, parses, and its recorded
     * listing matches `files` exactly — else None (never a stale answer).
-    * Parsed records memoize per sidecar file identity; the listing
-    * comparison reruns per call (it is the staleness authority). */
+    * Parsed records memoize per sidecar path; the listing comparison
+    * reruns per call (it is the staleness authority). */
   def readBucketStats(tableDir: String, bucket: Int,
       files: Seq[Path]): Option[BucketStat] = {
     val p = bucketStatFile(tableDir, bucket)
     if (!Files.exists(p)) return None
     val rec =
-      try bucketStatCache.computeIfAbsent(cacheKey(p), _ => {
+      try bucketStatCache.computeIfAbsent(p.toAbsolutePath.normalize, _ => {
         val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(p)))
         try {
           if (in.readInt() != BucketStatMagic)
@@ -3772,7 +3758,7 @@ object CellStore {
   def bucketStats(tableDir: String, bucket: Int, files: Seq[Path]): BucketStat =
     readBucketStats(tableDir, bucket, files).getOrElse {
       bucketStatWalks.incrementAndGet()
-      aggregateBucketStat(fileSig(files), files.flatMap(f => runStats(f).toSeq))
+      subsetBucketStats(files)
     }
 
   /** PER-RUN as-of gating (SURVEY §7.4 #5, round 13): partition one
@@ -3797,7 +3783,7 @@ object CellStore {
     var i = 0
     val arr = files.toIndexedSeq
     while (i < arr.length) {
-      val rs = runStats(arr(i))
+      val rs = meta(arr(i)).stats
       if (rs.exists(!_.hasTsRange)) return None
       if (rs.forall(_.tsMax <= bound)) out += arr(i)
       else if (!rs.forall(_.tsMin > bound)) return None
@@ -3806,87 +3792,11 @@ object CellStore {
     Some(out.result())
   }
 
-  /** Bucket-stat reduction over an explicit file SUBSET (the as-of
-    * covered files): the same judgments the sidecar record carries,
-    * recomputed over the subset from per-file memoized index tails.
-    * Memoized per file list — segments are immutable, so a signature
-    * seen once reduces the same way forever. */
+  /** Bucket-stat reduction over an explicit file list (a bucket's
+    * listing, or the as-of covered files): the same judgments the sidecar
+    * record carries, reduced from each file's [[SegmentMeta.stats]]. */
   def subsetBucketStats(files: Seq[Path]): BucketStat =
-    subsetStatCache.computeIfAbsent(files.map(cacheKey).sorted.mkString("\n"),
-      _ => aggregateBucketStat(fileSig(files),
-        files.flatMap(f => runStats(f).toSeq)))
-
-  private val subsetStatCache =
-    new java.util.concurrent.ConcurrentHashMap[String, BucketStat]()
-
-  /** Per-run key blooms of one segment (null element = pre-bloom run);
-    * memoized per immutable file, so after the first lookup against a
-    * segment its blooms answer from memory — Cassandra's posture, where
-    * SSTable blooms are resident and a point read that misses every bloom
-    * touches no data file at all. Reads index blocks only, never cells. */
-  def runBlooms(file: Path): Array[KeyBloom] =
-    bloomCache.computeIfAbsent(cacheKey(file), _ => {
-      val r = new SegmentReader(file)
-      try runInfos(file).map(ri => r.readIndex(ri).bloom).toArray
-      finally r.close()
-    })
-
-  /** Per-run [colMin, colMax] windows (null element = legacy run or no
-    * non-null cols) — Cassandra's sstable min/max clustering, memoized per
-    * immutable file. A slice lookup skips a run whose window provably holds
-    * no wanted column, without touching its payload. */
-  def runColRanges(file: Path): Array[(Array[Byte], Array[Byte])] =
-    colRangeCache.computeIfAbsent(cacheKey(file), _ => {
-      val r = new SegmentReader(file)
-      try runInfos(file).map { ri =>
-        val idx = r.readIndex(ri)
-        if (idx.colMin == null || idx.colMax == null) null
-        else (idx.colMin, idx.colMax)
-      }.toArray
-      finally r.close()
-    })
-
-  /** Per-run DISTINCT-column bloom CHUNKS (null element = legacy pre-bloom
-    * run); memoized per immutable file. A point slice skips a run when
-    * EVERY chunk's bloom rejects every wanted column — the false-window
-    * case min/max windows can't prune (wanted column INSIDE
-    * [colMin, colMax] but absent — interleaved-column wide rows). No false
-    * negatives, and the blooms saw tombstone cells' columns too, so a
-    * skipped run provably holds no cell (live or tombstone) of any wanted
-    * address. Single-chunk (CBLM) runs surface as a 1-element array. */
-  def runColBlooms(file: Path): Array[Array[KeyBloom]] =
-    colBloomCache.computeIfAbsent(cacheKey(file), _ => {
-      val r = new SegmentReader(file)
-      try runInfos(file).map(ri => r.readIndex(ri).colBlooms).toArray
-      finally r.close()
-    })
-
-  /** Per-run [subMin, subMax] windows over `:subcolumn` bytes (null
-    * element = legacy run or no non-null subs) — the sub twin of
-    * [[runColRanges]], memoized per immutable file. A sub-slice lookup
-    * skips a run whose window provably holds no wanted sub, without
-    * touching its payload. */
-  def runSubRanges(file: Path): Array[(Array[Byte], Array[Byte])] =
-    subRangeCache.computeIfAbsent(cacheKey(file), _ => {
-      val r = new SegmentReader(file)
-      try runInfos(file).map { ri =>
-        val idx = r.readIndex(ri)
-        if (idx.subMin == null || idx.subMax == null) null
-        else (idx.subMin, idx.subMax)
-      }.toArray
-      finally r.close()
-    })
-
-  /** Per-run distinct-SUB bloom chunks (null element = legacy run); the
-    * sub twin of [[runColBlooms]], memoized per immutable file. A point
-    * sub lookup skips a run when every chunk rejects every wanted sub —
-    * the false-window case the [subMin, subMax] check can't prune. */
-  def runSubBlooms(file: Path): Array[Array[KeyBloom]] =
-    subBloomCache.computeIfAbsent(cacheKey(file), _ => {
-      val r = new SegmentReader(file)
-      try runInfos(file).map(ri => r.readIndex(ri).subBlooms).toArray
-      finally r.close()
-    })
+    aggregateBucketStat(fileSig(files), files.flatMap(meta(_).stats.toSeq))
 
   /** Byte strings sorted ascending, duplicates dropped. */
   def sortedDistinct(xs: Seq[Array[Byte]]): Array[Array[Byte]] = {
@@ -4156,23 +4066,26 @@ object CellStore {
         counters: ScanCounters = null,
         cols: KeyWindows = null,
         subs: KeyWindows = null): Seq[Iterator[Cell]] = {
-      val infos = runInfos(file)
-      val blooms = if (keys.points == null) null else runBlooms(file)
+      val seg = meta(file)
+      val infos = seg.liveInfos
+      val blooms = if (keys.points == null) null else seg.blooms
       val colSet = if (cols == null) null else cols.points
       val subSet = if (subs == null) null else subs.points
-      val colRanges = if (cols == null) null else runColRanges(file)
-      val colBlooms = if (colSet == null) null else runColBlooms(file)
-      val subRanges = if (subs == null) null else runSubRanges(file)
-      val subBlooms = if (subSet == null) null else runSubBlooms(file)
-      infos.zipWithIndex.map { case (ri, i) =>
+      // run-wide column and sub windows come from the run stats, read
+      // only for a sliced scan
+      val stats = if (cols == null && subs == null) null else seg.stats
+      val colBlooms = if (colSet == null) null else seg.colBlooms
+      val subBlooms = if (subSet == null) null else seg.subBlooms
+      infos.indices.map { i =>
+        val ri = infos(i)
         val runKeys =
           if (blooms == null || blooms(i) == null) keys
           else keys.filterPoints(blooms(i).mightContain)
         if (runKeys.isEmpty) {
           if (counters != null && blooms != null) counters.runsBloomSkipped += 1
           Iterator.empty
-        } else if (colRanges != null && colRanges(i) != null &&
-            !cols.meets(colRanges(i)._1, colRanges(i)._2)) {
+        } else if (cols != null && stats(i).colMin != null &&
+            stats(i).colMax != null && !cols.meets(stats(i).colMin, stats(i).colMax)) {
           // run-wide min/max clustering: no wanted column can be in this
           // run, so neither can a tombstone for one — skip it whole
           if (counters != null) counters.runsColSkipped += 1
@@ -4186,8 +4099,8 @@ object CellStore {
           // cells' columns were added too, so reconciliation is unaffected.
           if (counters != null) counters.runsColBloomSkipped += 1
           Iterator.empty
-        } else if (subRanges != null && subRanges(i) != null &&
-            !subs.meets(subRanges(i)._1, subRanges(i)._2)) {
+        } else if (subs != null && stats(i).subMin != null &&
+            stats(i).subMax != null && !subs.meets(stats(i).subMin, stats(i).subMax)) {
           // run-wide [subMin, subMax]: no wanted SUB-column can be in this
           // run (nor a tombstone for one — tombstones carry their sub
           // bytes and fed the window too) — skip it whole
@@ -4270,7 +4183,10 @@ object CellStore {
         if (dropTombstones && out.tombstone) {
           if (counters != null) counters.tombstonesDropped += 1
         } else {
-          if (counters != null) counters.cellsMerged += 1
+          if (counters != null) {
+            counters.cellsMerged += 1
+            if (counters.cellsMerged > counters.mergeCap) throw new ScanCounters.OverCap
+          }
           return out
         }
       }
@@ -4401,6 +4317,7 @@ object CellStore {
       writeSegment(tmp, new MergeIterator(reader.runs(), dropTombstones = false))
     } finally reader.close()
     Files.move(tmp, file, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    forgetSegments(file)
   }
 
   /** Make staged segments visible with a MONOTONE commit stamp: every new
@@ -4454,13 +4371,12 @@ object CellStore {
   def allSegmentFiles(tableDir: String): Map[Int, Seq[Path]] = {
     val d = Paths.get(tableDir, SstDir)
     if (!Files.isDirectory(d)) return Map.empty
-    val Name = "b(\\d+)-.*\\.bin".r // same committed-name contract as segmentFiles
     val s = Files.list(d)
     try {
       import scala.jdk.CollectionConverters._
       s.iterator().asScala.flatMap { p =>
         p.getFileName.toString match {
-          case Name(b) => Some(b.toInt -> p)
+          case CommittedName(b) => Some(b.toInt -> p)
           case _ => None
         }
       }.toSeq.groupMap(_._1)(_._2)
@@ -4576,6 +4492,7 @@ object CellStore {
     files.foreach { f =>
       Files.deleteIfExists(f)
       Files.deleteIfExists(provFile(f)) // an input may itself be a compaction output
+      forgetSegments(f)
     }
     // refresh the bucket-stat sidecar to the post-compaction listing —
     // compaction is exactly when a bucket becomes single-run and every
@@ -4686,6 +4603,7 @@ object CellStore {
     try walk.sorted(java.util.Comparator.reverseOrder[Path]())
       .iterator().asScala.foreach(Files.delete)
     finally walk.close()
+    forgetSegments(root)
   }
 
   /** Drop every COMMITTED segment. Runs inside the overwrite job's commit,
@@ -4709,6 +4627,8 @@ object CellStore {
       try l.iterator().asScala.foreach(Files.deleteIfExists(_))
       finally l.close()
     }
+    forgetSegments(sst)
+    forgetSegments(bs)
   }
 
   def newSegmentName(bucket: Int): String = s"b$bucket-${UUID.randomUUID()}.bin"

@@ -697,7 +697,7 @@ object Index {
     val toVisit = (0 until buckets).flatMap(b => bucketFiles.get(b).map(b -> _))
       .filter { case (_, files) =>
         !seek || files.exists { f =>
-          val (mn, mx) = CellStore.keyBounds(f)
+          val (mn, mx) = CellStore.meta(f).keyBounds
           mn != null &&
             (hi == null || Codecs.compareBytes(mn, hi) < 0) &&
             (lo == null || Codecs.compareBytes(mx, lo) >= 0)

@@ -44,6 +44,9 @@ final class ScanCounters {
   /** Partitions whose pushed COUNT/MIN/MAX was answered from run-index
     * metadata alone — zero cell payload IO (see MetadataAggReader). */
   var partitionsStatsOnly: Long = 0L
+  /** Cells the merge may emit: the one past it throws
+    * [[ScanCounters.OverCap]]. Unbounded except on a driver read. */
+  var mergeCap: Long = Long.MaxValue
 
   /** Adds another partition's counts to these. */
   def add(c: ScanCounters): Unit = {
@@ -58,6 +61,11 @@ final class ScanCounters {
     runsSubSkipped += c.runsSubSkipped
     partitionsStatsOnly += c.partitionsStatsOnly
   }
+}
+
+object ScanCounters {
+  /** A merge passed its [[ScanCounters.mergeCap]]. */
+  final class OverCap extends scala.util.control.ControlThrowable
 }
 
 /** Driver-visible seek-saving totals for a STREAMING scan: the change

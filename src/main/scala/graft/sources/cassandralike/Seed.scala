@@ -101,7 +101,9 @@ object Seed {
     val now = listSegments(dir)
     if (!base.subsetOf(now)) return false
     (now -- base).foreach { rel =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, rel))
+      val p = java.nio.file.Paths.get(dir, rel)
+      java.nio.file.Files.deleteIfExists(p)
+      CellStore.forgetSegments(p)
     }
     true
   }

@@ -21,7 +21,7 @@ object PlanSplits {
     val table = new CassandraLikeTable(dir, dir,
       StructType.fromDDL(meta.schemaDdl), Some(meta.mapping), meta.properties)
     val byBucket = CellStore.allSegmentFiles(dir)
-    val cells = byBucket.values.flatten.map(CellStore.segmentStats(_).cells).sum
+    val cells = byBucket.values.flatten.map(CellStore.meta(_).cells).sum
     val segs = byBucket.values.map(_.size).sum
     val scan = table.newScanBuilder(new CaseInsensitiveStringMap(
       java.util.Collections.emptyMap())).build()

@@ -355,7 +355,7 @@ class CellStoreSpec extends AnyFunSuite {
           .map(x => new String(x.key)).toSeq
         assert(ranged == (100 until 200).map(i => f"k$i%04d"))
       } finally r.close()
-      assert(CellStore.sampleKeys(file).nonEmpty)
+      assert(CellStore.meta(file).sample.nonEmpty)
     } finally CellStore.dropTable(dir)
   }
 
@@ -561,7 +561,7 @@ class CellStoreSpec extends AnyFunSuite {
       seg(dir, "b0-a.bin", (0 until 300).map(c), (300 until 600).map(c))
       val file = CellStore.segmentFiles(dir, 0).head
       def checkBlooms(): Unit = {
-        val blooms = CellStore.runBlooms(file)
+        val blooms = CellStore.meta(file).blooms
         assert(blooms.forall(_ != null))
         blooms.zip(Seq(0 until 300, 300 until 600).take(blooms.length)).foreach {
           case (bl, range) =>
@@ -573,7 +573,7 @@ class CellStoreSpec extends AnyFunSuite {
       checkBlooms()
       // compaction (the streaming SegmentWriter) re-emits a bloom
       CellStore.compactSegment(file)
-      val blooms = CellStore.runBlooms(file)
+      val blooms = CellStore.meta(file).blooms
       assert(blooms.length == 1 && blooms.head != null)
       assert(blooms.head.numKeys == 600)
       (0 until 600).foreach(i => assert(blooms.head.mightContain(f"k$i%04d".getBytes)))
@@ -608,7 +608,7 @@ class CellStoreSpec extends AnyFunSuite {
       out.writeInt(index.size())
       payload.writeTo(out); index.writeTo(out)
       out.close()
-      assert(CellStore.runBlooms(CellStore.segmentFiles(dir, 0).head).toSeq == Seq(null))
+      assert(CellStore.meta(CellStore.segmentFiles(dir, 0).head).blooms.toSeq == Seq(null))
       // point lookup over a bloom-less run falls back to the range scan
       val it = new CellStore.BucketMergeIterator(dir, 0,
         KeyWindows.points(Seq("k03".getBytes)))
@@ -629,7 +629,7 @@ class CellStoreSpec extends AnyFunSuite {
       seg(dir, "b0-c.bin", Seq(c("kmid", "", 3, dead = true), c("kzzz", "z3", 3)))
       val key = "kmid".getBytes
       val files = CellStore.segmentFiles(dir, 0)
-      val holds = files.map(f => CellStore.runBlooms(f).exists(_.mightContain(key)))
+      val holds = files.map(f => CellStore.meta(f).blooms.exists(_.mightContain(key)))
       assert(holds == Seq(false, true, true), "bloom must separate the segments")
       // bloom-pruned lookup reconciles identically: the seg-c tombstone
       // (ts 3) must still shadow seg-b's live cell (ts 2). Mirror the real

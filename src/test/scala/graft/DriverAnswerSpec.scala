@@ -122,6 +122,40 @@ class DriverAnswerSpec extends SparkSpec {
     assert(scan.counters("cellsMerged") == 80L, s"${scan.counters}")
   }
 
+  test("a complete COUNT(*) is answered at planning and starts no job") {
+    val sp = spark; import sp.implicits._
+    val store = Seed.table(spark, sfDir, "spec_driver_complete",
+      (1L to 300L).map(i => (i, s"v$i")).toDF("k", "v").repartition(1),
+      props = Map(Options.KeyEncoding -> "ordered", Options.Buckets -> "4"))
+    val q = Seed.read(spark, store).agg(count(lit(1)).as("n"))
+    val scan = PlannedScan.of(q)
+    assert(scan.description.contains("AggStats: complete"), scan.description)
+    assert(scan.answered)
+    assert(scan.counters(ScanMetrics.PartitionsStatsOnly) == 1L)
+    var got: Array[Row] = null
+    val jobs = jobsIn { got = q.collect() }
+    assert(jobs == 0, s"complete COUNT(*) started $jobs jobs:\n${q.queryExecution.executedPlan}")
+    assert(got.toSeq == Seq(Row(300L)))
+    assert(nodes(q.queryExecution.executedPlan).exists(_.isInstanceOf[LocalTableScanExec]))
+  }
+
+  test("a row wider than the cap stops the driver read at the cap") {
+    // one 100,000-cell transposed row against the default 65,536-cell cap
+    val rows = 100000L
+    val dir = Seed.table(spark, sfDir, "spec_driver_widerow",
+      spark.range(0L, rows, 1L, 2).select(lit(1).as("s"),
+        col("id").cast("int").as("c"), col("id").as("v")),
+      mapping = Some(":key,:column,:value"), props = Map(Options.Buckets -> "4"))
+    val cap = Options.DefaultSplitTargetCells
+    val df = Seed.read(spark, dir).filter(col("s") === 1)
+    val before = CellScanBuilder.driverCellsMerged.get()
+    val scan = PlannedScan.of(df)
+    val merged = CellScanBuilder.driverCellsMerged.get() - before
+    assert(!scan.answered)
+    assert(merged > cap && merged <= cap + 1, s"driver read merged $merged cells")
+    assert(df.count() == rows)
+  }
+
   test("a streaming read of the same store still plans the change feed") {
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
     val ckpt = java.nio.file.Files.createTempDirectory("driver-answer-feed").toString

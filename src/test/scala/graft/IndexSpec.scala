@@ -260,7 +260,7 @@ class IndexSpec extends SparkSpec {
     def intersecting(lo: Array[Byte], hi: Array[Byte]): Int =
       CellStore.allSegmentFiles(idxDir).count { case (_, files) =>
         files.exists { f =>
-          val (mn, mx) = CellStore.keyBounds(f)
+          val (mn, mx) = CellStore.meta(f).keyBounds
           mn != null && (hi == null || Codecs.compareBytes(mn, hi) < 0) &&
             (lo == null || Codecs.compareBytes(mx, lo) >= 0)
         }
@@ -750,7 +750,7 @@ class IndexSpec extends SparkSpec {
       props = Map(Options.IndexColumns -> "name"))
     val t = tableOf(dir)
     val cells = CellStore.allSegmentFiles(dir).values.flatten
-      .map(f => CellStore.segmentStats(f).cells).sum
+      .map(f => CellStore.meta(f).cells).sum
     def kf(f: Filter, opts: Map[String, String] = Map.empty) =
       Index.keyFilters(t, opts, Array(f), () => cells)
     // DEFAULT gate: 200 candidates × 300 cells/point ≫ 800 cells — the

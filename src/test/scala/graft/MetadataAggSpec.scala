@@ -12,23 +12,12 @@ class MetadataAggSpec extends SparkSpec {
 
   private def scanOf(df: DataFrame): PlannedScan = PlannedScan.of(df)
 
-  /** Drains every partition reader by hand and returns
-    * (partitionsStatsOnly total, partition count). */
+  /** (partitionsStatsOnly total, partition count) of the planned scan:
+    * a driver answer's own counters, else every partition drained. */
   private def drain(df: DataFrame): (Long, Int) = {
-    val scan = scanOf(df).scan
-    val batch = scan.toBatch
-    val parts = batch.planInputPartitions()
-    val factory = batch.createReaderFactory()
-    var statsOnly = 0L
-    parts.foreach { p =>
-      val r = factory.createReader(p)
-      try { while (r.next()) r.get() } finally {
-        r.currentMetricsValues().foreach(m =>
-          if (m.name() == ScanMetrics.PartitionsStatsOnly) statsOnly += m.value())
-        r.close()
-      }
-    }
-    (statsOnly, parts.length)
+    val scan = scanOf(df)
+    (scan.counters.getOrElse(ScanMetrics.PartitionsStatsOnly, 0L),
+      scan.partitions.length)
   }
 
   test("STAT tail: exact per-run tombstone/distinct counts round-trip") {
@@ -47,7 +36,7 @@ class MetadataAggSpec extends SparkSpec {
         c("k2", "c1", 1L), c("k2", "c9", 3L, tomb = true),
         c("k3", "c1", 1L)))
       out.close()
-      val stats = CellStore.runStats(sst.resolve("b0-a.bin"))
+      val stats = CellStore.meta(sst.resolve("b0-a.bin")).stats
       assert(stats.length == 1)
       val s = stats(0)
       assert(s.cells == 6, s"cells=${s.cells}")
@@ -716,7 +705,7 @@ class MetadataAggSpec extends SparkSpec {
         Cell("k0100x".getBytes, f"d$j%04d".getBytes, null, v(j.toLong), 1L, tombstone = false))
       CellStore.writeRun(out, cells)
       out.close()
-      val st = CellStore.runStats(file)(0)
+      val st = CellStore.meta(file).stats(0)
       assert(st.hasKeyPrefix && st.hasValSums, s"tails missing: $st")
       val sorted = cells.sorted(CellStore.addressOrdering)
       val allKeys = sorted.map(c => new String(c.key)).distinct.sorted
@@ -776,7 +765,7 @@ class MetadataAggSpec extends SparkSpec {
         Cell("a".getBytes, "c".getBytes, null, v(Long.MaxValue), 1L, tombstone = false),
         Cell("b".getBytes, "c".getBytes, null, v(Long.MaxValue), 1L, tombstone = false)))
       out2.close()
-      val so = CellStore.runStats(sst.resolve("b0-o.bin"))(0)
+      val so = CellStore.meta(sst.resolve("b0-o.bin")).stats(0)
       assert(!so.hasValSums, "overflowing run must not carry a VSUM tail")
       assert(so.hasKeyPrefix, "KPFX is value-independent and stays")
       assert(CellStore.sumCellsInRange(sst.resolve("b0-o.bin"), null, null).isEmpty)
@@ -1031,7 +1020,7 @@ class MetadataAggSpec extends SparkSpec {
         c("k1", "a", v8(5L)), c("k1", "b", "xx".getBytes),
         c("k2", "a", v8(7L))))
       out.close()
-      val s = CellStore.runStats(sst.resolve("b0-a.bin"))(0)
+      val s = CellStore.meta(sst.resolve("b0-a.bin")).stats(0)
       assert(s.colVals != null, "CVAL tail must be present")
       val a = s.colVals.find(cv => new String(cv.col) == "a").get
       assert(a.count == 2L && a.sumsOk && a.sum == 12L &&
@@ -1044,7 +1033,7 @@ class MetadataAggSpec extends SparkSpec {
       CellStore.writeRun(out2, (1 to CellStore.MaxColValCols + 5).map(i =>
         c("k1", f"col$i%03d", v8(i.toLong))))
       out2.close()
-      val s2 = CellStore.runStats(sst.resolve("b0-b.bin"))(0)
+      val s2 = CellStore.meta(sst.resolve("b0-b.bin")).stats(0)
       assert(s2.colVals == null, "over-cap run must drop the CVAL tail")
       // under-cap high-col run keeps it, and a column first seen mid-run
       // backfills zero prefixes (exercised via a range read below)

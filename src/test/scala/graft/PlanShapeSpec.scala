@@ -108,10 +108,8 @@ class PlanShapeSpec extends SparkSpec {
       ("conn_agg_indexed_needle_range", 1), // asym budget: needle × hot (r16)
       ("conn_agg_indexed_and_or", 1), // conjunct × disjunction (r16)
       ("conn_agg_probe_group", 1))) { // GROUP BY non-indexed col under OR (r16)
-      val scans = collectAll(plan(name)).collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-          if b.scan.description().contains("cassandralike") => b.scan.description()
-      }
+      val scans = storeScansOf(SparkEntry.queries(name)(spark, sfDir))
+        .map(_.description)
       val complete = scans.count(_.contains("AggStats: complete"))
       assert(complete >= minComplete,
         s"$name: want >=$minComplete complete metadata scans, got $complete of " +
