@@ -1058,7 +1058,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     *      always ⊇ base cells of the column, so equality forces
     *      one-posting-per-visible-cell everywhere; any surplus declines.
     *   3. Per-value counts then come from key-point arithmetic on the
-    *      routed index bucket ([[CellStore.countCellsAtPoints]] — run
+    *      routed index bucket ([[CellStore.summarize]] over point windows — run
     *      index + blooms, no posting payload reads), globally dup-free
     *      by (2) even across overlapping index runs.
     *
@@ -1373,9 +1373,9 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     pred.pts.map(_._1).groupBy(ek => TokenRing.bucket(ek, ctx.buckets))
       .foreach { case (b, ps) =>
         pred.idxByBucket.get(b).foreach { files =>
-          files.foreach { f =>
-            CellStore.countCellsAtPoints(f, ps).foreach(total += _)
-          }
+          total += CellStore.summarize(files,
+            CellStore.Window.points(ps).map(_.copy(slot = 0)), 1,
+            CellStore.Measure.Cells).getOrElse(return None).count(0)
         }
       }
     Some((want, Nil, Seq(InternalRow.fromSeq(want.map(_ => total: Any)))))
@@ -1464,18 +1464,11 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     private def computePresentMask(): Option[Array[Boolean]] = {
       val mask = new Array[Boolean](ks.size)
       routed.foreach { case (pts, idxs, files) =>
-        val acc = new Array[Long](pts.length)
-        files.foreach { f =>
-          CellStore.nettedCountCellsAtPoints(f, pts) match {
-            case Some(per) =>
-              var i = 0
-              while (i < per.length) { acc(i) += per(i); i += 1 }
-            case None => return None
-          }
-        }
+        val per = CellStore.summarize(files, CellStore.Window.points(pts),
+          pts.length, CellStore.Measure.Cells, netted = true).getOrElse(return None)
         var i = 0
-        while (i < acc.length) {
-          if (acc(i) > 0) mask(idxs(i)) = true
+        while (i < idxs.length) {
+          if (per.count(i) > 0) mask(idxs(i)) = true
           i += 1
         }
       }
@@ -1499,23 +1492,17 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       if (cb == null) return None
       val counts = new Array[Long](ks.size)
       val sums = if (wantSums) new Array[Long](ks.size) else null
-      try {
-        routed.foreach { case (pts, idxs, files) =>
-          files.foreach { f =>
-            CellStore.colAggAtPoints(f, pts, cb, wantSums, ctx.netted) match {
-              case Some((cs, ss)) =>
-                var i = 0
-                while (i < cs.length) {
-                  counts(idxs(i)) += cs(i)
-                  if (sums != null)
-                    sums(idxs(i)) = Math.addExact(sums(idxs(i)), ss(i))
-                  i += 1
-                }
-              case None => return None
-            }
-          }
+      routed.foreach { case (pts, idxs, files) =>
+        val per = CellStore.summarize(files, CellStore.Window.points(pts),
+          pts.length, CellStore.Measure.Column(cb), wantSum = wantSums,
+          netted = ctx.netted).getOrElse(return None)
+        var i = 0
+        while (i < idxs.length) {
+          counts(idxs(i)) = per.count(i)
+          if (sums != null) sums(idxs(i)) = per.sum(i)
+          i += 1
         }
-      } catch { case _: ArithmeticException => return None }
+      }
       Some((counts, sums))
     }
   }
@@ -2212,63 +2199,45 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     validatedRangeContext(want).flatMap { ctx =>
       val sortedKs = ctx.keys.points
       if (sortedKs == null) return None // enumerable groups need pinned keys
-      import MetadataAggReader.{atPoints, extremalAtPoints, longExtreme}
-      // netted stores serve grouped COUNTs and SUMs too (the per-bucket
-      // netted shape gate in validatedRangeContext already rejected
-      // extremals): a fully-deleted key nets to zero and emits no group,
-      // exactly like the fold; an unclassifiable run under netting declines
-      val totals = atPoints[Long](ctx.files, sortedKs, ctx.cols, ctx.subs)(
-        if (ctx.netted) CellStore.nettedCountCellsAtPoints _
-        else (f, p, a, b, c, d, e) =>
-          Some(CellStore.countCellsAtPoints(f, p, a, b, c, d, e)))(_ + _)
-        .getOrElse(return None)
+      import CellStore.{Measure, Window}
+      val windows = Window.points(sortedKs, ctx.cols, ctx.subs)
+      val n = sortedKs.length
       val wantSum = want.exists {
         case PushedAgg.Sum(_) => true
         case _ => false
       }
-      // per-key positional sums; a decline (missing tail / overflow)
-      // demotes the WHOLE grouped answer to the fold
-      val sums: Array[Long] =
-        if (!wantSum) null
-        else atPoints[Long](ctx.files, sortedKs, ctx.cols, ctx.subs)(
-          if (ctx.netted) CellStore.nettedSumCellsAtPoints _
-          else CellStore.sumCellsAtPoints _)(Math.addExact).getOrElse(return None)
-      // per-key extremal col within the col windows, and extremal SUB of
-      // the pinned (key, col) groups ("first/last sub-entry of each row's
-      // pinned column") — composite seeks
-      def extremals(sub: Boolean, wantMin: Boolean): Array[Array[Byte]] =
-        extremalAtPoints(ctx.files, sortedKs, ctx.cols, ctx.subs, sub, wantMin)
-      lazy val colMins = extremals(sub = false, wantMin = true)
-      lazy val colMaxs = extremals(sub = false, wantMin = false)
-      lazy val subMins = extremals(sub = true, wantMin = true)
-      lazy val subMaxs = extremals(sub = true, wantMin = false)
-      // per-key VALUE extremals ("per-user peak in the window"), from the
-      // same composite interval positions; a missing-tail decline demotes
-      // the whole grouped answer to the fold
-      def valExtremals(wantMin: Boolean): Array[java.lang.Long] =
-        atPoints[java.lang.Long](ctx.files, sortedKs, ctx.cols, ctx.subs)((f, p, a, b, c, d, e) =>
-          CellStore.extremalValuesAtPoints(f, p, a, b, c, d, e, wantMin))(
-          longExtreme(wantMin)).orNull // decline marker, checked below
-      val wantValMin = want.exists {
+      val wantExt = want.exists {
         case PushedAgg.Min(c) => c == valN
-        case _ => false
-      }
-      val wantValMax = want.exists {
         case PushedAgg.Max(c) => c == valN
         case _ => false
       }
-      val valMins = if (wantValMin) valExtremals(wantMin = true) else null
-      if (wantValMin && valMins == null) return None
-      val valMaxs = if (wantValMax) valExtremals(wantMin = false) else null
-      if (wantValMax && valMaxs == null) return None
+      // per-key count, value sum and value extremes ("per-user peak in the
+      // window") in one pass. Netted stores serve grouped COUNTs and SUMs
+      // too (the per-bucket netted shape gate in validatedRangeContext
+      // already rejected extremals): a fully-deleted key nets to zero and
+      // emits no group, exactly like the fold. A decline (missing tail,
+      // overflow, unclassifiable run) demotes the WHOLE grouped answer to
+      // the fold
+      val per = CellStore.summarize(ctx.files, windows, n,
+        if (wantSum || wantExt) Measure.Values else Measure.Cells,
+        wantSum, wantExt, ctx.netted).getOrElse(return None)
+      // per-key extremal col within the col windows, and extremal SUB of
+      // the pinned (key, col) groups ("first/last sub-entry of each row's
+      // pinned column")
+      def extremals(field: Int, wantMin: Boolean): Array[Array[Byte]] =
+        CellStore.extremalAddresses(ctx.files, windows, n, field, wantMin)
+      lazy val colMins = extremals(1, wantMin = true)
+      lazy val colMaxs = extremals(1, wantMin = false)
+      lazy val subMins = extremals(2, wantMin = true)
+      lazy val subMaxs = extremals(2, wantMin = false)
       val rows = sortedKs.indices.collect {
-        case i if totals(i) > 0 =>
+        case i if per.count(i) > 0 =>
           InternalRow.fromSeq(
             table.keyCodec.decode(sortedKs(i)) +: want.map {
-              case PushedAgg.CountStar | PushedAgg.Count(_) => totals(i)
-              case PushedAgg.Sum(_) => sums(i)
-              case PushedAgg.Min(c) if c == valN => valMins(i)
-              case PushedAgg.Max(c) if c == valN => valMaxs(i)
+              case PushedAgg.CountStar | PushedAgg.Count(_) => per.count(i)
+              case PushedAgg.Sum(_) => per.sum(i)
+              case PushedAgg.Min(c) if c == valN => per.extreme(i, wantMin = true)
+              case PushedAgg.Max(c) if c == valN => per.extreme(i, wantMin = false)
               case PushedAgg.Min(c) if subN != null && c == subN =>
                 if (subMins(i) == null) null else table.subCodec.decode(subMins(i))
               case PushedAgg.Max(c) if subN != null && c == subN =>
@@ -3382,9 +3351,15 @@ final class DriverAnswerScan(
   override def rows(): Array[InternalRow] = answer
   override def readSchema(): StructType = scan.readSchema()
   override def toBatch: Batch = scan
+  /** The wrapped scan's text, then the answer's store IO: `cellsMerged`
+    * and every other nonzero counter. */
   override def description(): String =
     s"${scan.description()} DriverAnswer: rows=${answer.length}, " +
-      s"cellsMerged=${counters.cellsMerged}"
+      s"cellsMerged=${counters.cellsMerged}" +
+      ScanMetrics.values(counters).collect {
+        case m if m.value != 0L && m.name != ScanMetrics.CellsMerged =>
+          s", ${m.name}=${m.value}"
+      }.mkString
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(
       math.max(1L, answer.length.toLong * readSchema().defaultSize))
@@ -3928,8 +3903,8 @@ object MetadataAggReader {
     * containing each boundary (≤ 2×IndexEvery cell decodes per run,
     * however wide the range) — the "how many events in [t1, t2]" count
     * and the "first/last event in the window" extremal without reading
-    * the range ([[CellStore.countCellsInRange]] /
-    * [[CellStore.extremalKeyInRange]] / [[CellStore.countCellsAtPoints]]).
+    * the range ([[CellStore.summarize]] / [[CellStore.extremalAddresses]]
+    * over the key windows).
     * MIN/MAX require the key's byte order to BE its value order
     * (order-preserving encoding) and need neither run disjointness nor
     * address dedup (an overwrite never removes an address); counts need
@@ -4088,13 +4063,13 @@ object MetadataAggReader {
       case In(c, vs) => c == keyN && vs != null && vs.nonEmpty
       case _ => false
     }
-    // SUM(value) rides the VSUM prefix tails ([[CellStore.sumCellsInRange]]
-    // / [[CellStore.sumCellsAtPoints]]) under the same exact envelopes the
+    // SUM(value) rides the VSUM prefix tails ([[CellStore.summarize]] over
+    // [[CellStore.Measure.Values]]) under the same exact envelopes the
     // counts use; `sumOk` is the caller-checked static value gate
     // ([[sumEligible]] — binary 8-byte long marshal). MIN/MAX of the
     // CLUSTERING COLUMN are admitted under a PINNED key set (each key's
     // extremal col in the window comes from composite boundary seeks,
-    // [[CellStore.extremalColsAtPoints]]) when col byte order is value
+    // [[CellStore.extremalAddresses]]) when col byte order is value
     // order; a col POINT set alongside would need point-filtered extremals
     // (the seeks already serve that shape) — declined below via the
     // colPinned/colWindowed exclusivity the window forms rely on.
@@ -4186,91 +4161,6 @@ object MetadataAggReader {
       restricting(FieldRole.TransSubColumn, subCodec))
   }
 
-  /** The lesser (or, for a max, greater) byte form; null = none. */
-  private[cassandralike] def byteExtreme(wantMin: Boolean)(a: Array[Byte],
-      b: Array[Byte]): Array[Byte] =
-    if (a == null) b
-    else if (b == null || (Codecs.compareBytes(a, b) < 0) == wantMin) a else b
-
-  /** The lesser (or, for a max, greater) value; null = none. */
-  private[cassandralike] def longExtreme(wantMin: Boolean)(a: java.lang.Long,
-      b: java.lang.Long): java.lang.Long =
-    if (a == null) b else if (b == null || (a < b) == wantMin) a else b
-
-  /** One positional probe per file and per (column window × sub window)
-    * pair, folded per point by `merge`: the windows are disjoint, so counts
-    * and sums add and extremes reduce. A column POINT set restricts by
-    * membership instead; an EMPTY window set probes nothing, so every
-    * point keeps the zero (null) it starts from. None = a probe declined
-    * or a sum overflowed. */
-  private[cassandralike] def atPoints[T: scala.reflect.ClassTag](
-      files: Seq[java.nio.file.Path],
-      ks: Array[Array[Byte]], cols: KeyWindows, subs: KeyWindows)(
-      probe: (java.nio.file.Path, Seq[Array[Byte]], Array[Byte], Array[Byte],
-        Seq[Array[Byte]], Array[Byte], Array[Byte]) => Option[Array[T]])(
-      merge: (T, T) => T): Option[Array[T]] = {
-    val acc = new Array[T](ks.length)
-    val colPts: Seq[Array[Byte]] =
-      if (cols == null || cols.points == null) null else cols.points.toSeq
-    val none = Seq[(Array[Byte], Array[Byte])]((null, null))
-    val colWins =
-      if (cols == null) none
-      else if (cols.isEmpty) Nil // an empty point set too: nothing to probe
-      else if (colPts != null) none
-      else cols.spans.toSeq
-    val subWins = if (subs == null) none else subs.spans.toSeq
-    try {
-      for (f <- files; (cLo, cHi) <- colWins; (sLo, sHi) <- subWins)
-        probe(f, ks.toSeq, cLo, cHi, colPts, sLo, sHi) match {
-          case Some(per) =>
-            var i = 0
-            while (i < per.length) { acc(i) = merge(acc(i), per(i)); i += 1 }
-          case None => return None
-        }
-      Some(acc)
-    } catch { case _: ArithmeticException => None }
-  }
-
-  /** Per-point extremal clustering columns (or, with `sub`, extremal
-    * sub-columns of the pinned col points) inside the col/sub windows,
-    * reduced window by window through [[atPoints]]; null = none. */
-  private[cassandralike] def extremalAtPoints(files: Seq[java.nio.file.Path],
-      ks: Array[Array[Byte]], cols: KeyWindows, subs: KeyWindows,
-      sub: Boolean, wantMin: Boolean): Array[Array[Byte]] =
-    atPoints[Array[Byte]](files, ks, cols, subs)((f, p, cLo, cHi, cPts, sLo, sHi) =>
-      Some(if (sub) CellStore.extremalSubsAtPoints(f, p, cPts, sLo, sHi, wantMin)
-        else CellStore.extremalColsAtPoints(f, p, cLo, cHi, wantMin)))(
-      byteExtreme(wantMin)).get
-
-  /** One answer per (file, key window), computed as consumed, so a
-    * decline stops the probes. */
-  private[cassandralike] def perSpan[T](files: Seq[java.nio.file.Path],
-      keys: KeyWindows)(
-      f: (java.nio.file.Path, Array[Byte], Array[Byte]) => T): Iterator[T] =
-    for (file <- files.iterator; (lo, hi) <- keys.spans.iterator) yield f(file, lo, hi)
-
-  /** The sum of per-span answers; None when one declined or it overflows. */
-  private[cassandralike] def total(xs: Iterator[Option[Long]]): Option[Long] = {
-    var t = 0L
-    try xs.foreach {
-      case Some(x) => t = Math.addExact(t, x)
-      case None => return None
-    } catch { case _: ArithmeticException => return None }
-    Some(t)
-  }
-
-  /** The extreme of per-span value extremes (Some(None) = no value);
-    * None when one span declined. */
-  private[cassandralike] def valueExtreme(wantMin: Boolean)(
-      xs: Iterator[Option[Option[Long]]]): Option[Option[Long]] = {
-    var best: java.lang.Long = null
-    xs.foreach {
-      case Some(v) => best = longExtreme(wantMin)(best, v.map(Long.box).orNull)
-      case None => return None
-    }
-    Some(Option(best).map(_.longValue))
-  }
-
   /** Static value gate of the metadata SUM paths: a transposed mapping
     * whose VALUE field is a LongType stored through the BINARY marshal
     * (8-byte big-endian two's complement — exactly the interpretation the
@@ -4354,7 +4244,7 @@ object MetadataAggReader {
   /** Static shape gate of the REGULAR-mapping range aggregates: a regular
     * row IS one distinct key (its cells are the schema's fields, missing
     * cells just surface NULL columns), so COUNT under a key envelope =
-    * distinct keys there ([[CellStore.countDistinctKeysInRange]] — runs
+    * distinct keys there ([[CellStore.Measure.Keys]] — runs
     * inside the envelope answer from STAT distinctKeys, boundary runs from
     * the KPFX prefix tail), a key IN counts PRESENT points (any cell ⇒
     * the row exists), and MIN/MAX(key) reuse the byte-extremal seeks under
@@ -4391,15 +4281,16 @@ object MetadataAggReader {
 
   /** The range-aggregate values over `files` (one bucket for the partial
     * readers, the whole store for complete pushdown) within the key
-    * windows `keys` — a finite point set, or ranges summed window by
-    * window — conditions already validated by the caller. Per-point
-    * presence counts (byte-sorted, one index parse per surviving run per
-    * file) serve COUNT and MIN/MAX alike: the smallest/largest PRESENT
-    * point is the windows' extremal key. SUM(value) folds the VSUM
-    * positional sums; MIN/MAX of the clustering column reduce the per-key
-    * extremal seeks. None = a dynamic decline (missing VSUM tail on a
-    * consulted run, or Long overflow) — the caller falls back to the cell
-    * fold, which reproduces Spark's own overflow semantics. */
+    * windows `keys` — a finite point set, narrowed by the col and sub
+    * windows, or key ranges — conditions already validated by the caller.
+    * COUNT, SUM(value) and MIN/MAX(value) come from one [[CellStore
+    * .summarize]] pass over the windows; MIN/MAX of the key take the
+    * smallest/largest PRESENT point of a point set, else the key ranges'
+    * extremal address; MIN/MAX of the clustering column (sub-column) take
+    * the windows' extremal address. None = a dynamic decline (missing
+    * value tail on a consulted run, an unclassifiable netted run, or Long
+    * overflow) — the caller falls back to the cell fold, which reproduces
+    * Spark's own overflow semantics. */
   private[cassandralike] def rangeVals(
       aggs: Seq[PushedAgg], keyCodec: KeyCodec,
       colCodec: KeyCodec, colName: String,
@@ -4410,6 +4301,7 @@ object MetadataAggReader {
       valName: String = null,
       netted: Boolean = false,
       subCodec: KeyCodec = null, subName: String = null): Option[Seq[Any]] = {
+    import CellStore.{Measure, Window}
     val ks = keys.points
     // col/sub restrictions are only reachable with a pinned key set, and
     // a sub window only inside pinned cols (rangeShapesOk)
@@ -4417,98 +4309,58 @@ object MetadataAggReader {
       "col/sub restriction without a key set")
     require(subs == null || (cols != null && cols.points != null),
       "sub window without col points")
-    // per-point totals; in netted mode certified delete epochs subtract
-    // (None = an unclassifiable run → decline). Memoized: a COUNT+MIN mix
-    // must not run the per-point probes twice.
-    lazy val pointTotalsRes: Option[Array[Long]] =
-      atPoints[Long](files, ks, cols, subs)(
-        if (netted) CellStore.nettedCountCellsAtPoints _
-        else (f, p, a, b, c, d, e) =>
-          Some(CellStore.countCellsAtPoints(f, p, a, b, c, d, e)))(Math.addExact)
-    lazy val pointTotals: Array[Long] = pointTotalsRes.get
-    // per-point value sums (netted mode: certified delete epochs carry
-    // their victims' values and subtract); None = some consulted run
-    // lacks VSUM / is unclassifiable / overflowed
-    lazy val pointSums: Option[Array[Long]] =
-      atPoints[Long](files, ks, cols, subs)(
-        if (netted) CellStore.nettedSumCellsAtPoints _
-        else CellStore.sumCellsAtPoints _)(Math.addExact)
-    lazy val rangeSum: Option[Long] = total(perSpan(files, keys)((f, lo, hi) =>
-      if (netted) CellStore.nettedSumCellsInRange(f, lo, hi)
-      else CellStore.sumCellsInRange(f, lo, hi)))
-    def extremal(wantMin: Boolean): Option[Array[Byte]] =
-      if (ks != null) {
-        val order = if (wantMin) ks.indices else ks.indices.reverse
-        order.collectFirst { case i if pointTotals(i) > 0 => ks(i) }
-      } else perSpan(files, keys)((f, lo, hi) =>
-        CellStore.extremalKeyInRange(f, lo, hi, wantMin)).flatten
-        .reduceOption(byteExtreme(wantMin))
-    // extremal clustering column (or sub-column) over the pinned keys
-    // (and pinned cols), reduced across them for the ungrouped form,
-    // within the pushed windows
-    def colExtremal(sub: Boolean, wantMin: Boolean): Option[Array[Byte]] =
-      Option(extremalAtPoints(files, ks, cols, subs, sub, wantMin)
-        .foldLeft(null: Array[Byte])(byteExtreme(wantMin)))
-    lazy val nOpt: Option[Long] =
-      if (ks != null) pointTotalsRes.map(_.sum)
-      else total(perSpan(files, keys)((f, lo, hi) =>
-        if (netted) CellStore.nettedCountCellsInRange(f, lo, hi)
-        else Some(CellStore.countCellsInRange(f, lo, hi))))
-    // extremal decoded VALUE in the windows, from the VMMX tails:
-    // Some(x) = the extreme, Some-of-nothing handled by caller null,
-    // None propagated below as a decline (tail missing on a consulted run)
-    def valExtremal(wantMin: Boolean): Option[Option[Long]] =
-      if (ks != null)
-        atPoints[java.lang.Long](files, ks, cols, subs)((f, p, a, b, c, d, e) =>
-          CellStore.extremalValuesAtPoints(f, p, a, b, c, d, e, wantMin))(
-          longExtreme(wantMin))
-          .map(per => Option(per.foldLeft(null: java.lang.Long)(longExtreme(wantMin)))
-            .map(_.longValue))
-      else valueExtreme(wantMin)(perSpan(files, keys)((f, lo, hi) =>
-        CellStore.extremalValueInRange(f, lo, hi, wantMin)))
+    val windows = if (ks != null) Window.points(ks, cols, subs) else Window.ranges(keys)
+    val one = windows.map(_.copy(slot = 0))
+    def isVal(c: String) = valName != null && c == valName
+    def isSub(c: String) = subName != null && c == subName
+    val wantSum = aggs.exists { case PushedAgg.Sum(_) => true; case _ => false }
+    val wantExt = aggs.exists {
+      case PushedAgg.Min(c) => isVal(c)
+      case PushedAgg.Max(c) => isVal(c)
+      case _ => false
+    }
+    val wantKeyExt = aggs.exists {
+      case PushedAgg.Min(c) => !isVal(c) && c != colName && !isSub(c)
+      case PushedAgg.Max(c) => !isVal(c) && c != colName && !isSub(c)
+      case _ => false
+    }
+    // every window into one slot: the count, value sum and value extremes
+    lazy val all = CellStore.summarize(files, one, 1,
+      if (wantSum || wantExt) Measure.Values else Measure.Cells,
+      wantSum, wantExt, netted)
+    // per-point counts (netted: certified delete epochs subtract), which
+    // order the PRESENT keys for MIN/MAX(key) and count them too
+    lazy val presence = CellStore.summarize(files, windows, ks.length,
+      Measure.Cells, netted = netted).map(_.count)
+    def n: Option[Long] =
+      if (ks != null && wantKeyExt) presence.map(_.sum) else all.map(_.count(0))
+    def keyExtremal(wantMin: Boolean): Option[Array[Byte]] =
+      if (ks == null) Some(CellStore.extremalAddresses(files, one, 1, 0, wantMin)(0))
+      else presence.map(p => firstPresent(ks, p, wantMin))
+    def decoded(codec: KeyCodec, field: Int, wantMin: Boolean): Any =
+      Option(CellStore.extremalAddresses(files, one, 1, field, wantMin)(0))
+        .map(codec.decode).orNull
     val out = aggs.map {
-      case PushedAgg.Count(c) if valName != null && c == valName =>
-        // VMMX on every run proves every value decodes non-null
-        nOpt match {
-          case Some(x) => x
-          case None => return None
-        }
-      case PushedAgg.CountStar | PushedAgg.Count(_) =>
-        nOpt match {
-          case Some(x) => x
-          case None => return None // netted decline: unclassifiable run
-        }
-      case PushedAgg.Min(c) if valName != null && c == valName =>
-        valExtremal(wantMin = true) match {
-          case Some(v) => v.map(Long.box).orNull
-          case None => return None
-        }
-      case PushedAgg.Max(c) if valName != null && c == valName =>
-        valExtremal(wantMin = false) match {
-          case Some(v) => v.map(Long.box).orNull
-          case None => return None
-        }
-      case PushedAgg.Min(c) if c == colName =>
-        colExtremal(sub = false, wantMin = true).map(colCodec.decode).orNull
-      case PushedAgg.Max(c) if c == colName =>
-        colExtremal(sub = false, wantMin = false).map(colCodec.decode).orNull
-      case PushedAgg.Min(c) if subName != null && c == subName =>
-        colExtremal(sub = true, wantMin = true).map(subCodec.decode).orNull
-      case PushedAgg.Max(c) if subName != null && c == subName =>
-        colExtremal(sub = true, wantMin = false).map(subCodec.decode).orNull
+      // VMMX on every run proves every value decodes non-null, so
+      // COUNT(value) is the row count
+      case PushedAgg.CountStar | PushedAgg.Count(_) => n.getOrElse(return None)
+      case PushedAgg.Min(c) if isVal(c) =>
+        all.getOrElse(return None).extreme(0, wantMin = true)
+      case PushedAgg.Max(c) if isVal(c) =>
+        all.getOrElse(return None).extreme(0, wantMin = false)
+      case PushedAgg.Min(c) if c == colName => decoded(colCodec, 1, wantMin = true)
+      case PushedAgg.Max(c) if c == colName => decoded(colCodec, 1, wantMin = false)
+      case PushedAgg.Min(c) if isSub(c) => decoded(subCodec, 2, wantMin = true)
+      case PushedAgg.Max(c) if isSub(c) => decoded(subCodec, 2, wantMin = false)
       case PushedAgg.Min(_) =>
-        extremal(wantMin = true).map(keyCodec.decode).orNull
+        Option(keyExtremal(wantMin = true).getOrElse(return None))
+          .map(keyCodec.decode).orNull
       case PushedAgg.Max(_) =>
-        extremal(wantMin = false).map(keyCodec.decode).orNull
+        Option(keyExtremal(wantMin = false).getOrElse(return None))
+          .map(keyCodec.decode).orNull
       case PushedAgg.Sum(_) =>
-        (if (ks != null) pointSums.flatMap(p => total(p.iterator.map(Some(_))))
-         else rangeSum) match {
-          case Some(s) => nOpt match {
-            case Some(cnt) => if (cnt == 0L) null else s // SUM over no rows is NULL
-            case None => return None
-          }
-          case None => return None
-        }
+        val s = all.getOrElse(return None)
+        if (s.count(0) == 0L) null else s.sum(0) // SUM over no rows is NULL
       case other =>
         throw new IllegalStateException(s"unanswerable range aggregate $other")
     }
@@ -4518,89 +4370,71 @@ object MetadataAggReader {
   /** [[rangeVals]]' regular-mapping twin: rows are distinct keys.
     * Point (IN) shapes count PRESENT keys (any cell ⇒ the row exists —
     * no disjointness needed); range shapes count distinct keys
-    * positionally from the KPFX tails (None on a tail-less boundary run
-    * → fold). MIN/MAX(key) reuse presence order / byte-extremal seeks.
+    * positionally from the KPFX tails (a tail-less boundary run declines).
+    * MIN/MAX(key) reuse presence order / the extremal address seek.
     * NON-KEY columns (resolved by `colBytesOf`, null for the key) ride
-    * the CVAL per-column tails: COUNT(c) = the column's visible cells in
-    * the envelope, SUM/MIN/MAX(c) from per-column prefix sums and span
-    * extremes; a point set evaluates per-point [k, succ(k)) envelopes.
-    * None = a dynamic decline (tail-less run, invalid per-column sums,
-    * or Long overflow) — the caller falls back to the cell fold. */
+    * the CVAL per-column tails: one summary per column over the key
+    * windows gives COUNT(c) = the column's visible cells there and
+    * SUM/MIN/MAX(c). None = a dynamic decline (tail-less run, invalid
+    * per-column sums, or Long overflow) — the caller falls back to the
+    * cell fold. */
   private[cassandralike] def regularRangeVals(
       aggs: Seq[PushedAgg], keyCodec: KeyCodec,
       files: Seq[java.nio.file.Path],
       keys: KeyWindows,
       colBytesOf: String => Array[Byte] = _ => null,
       netted: Boolean = false): Option[Seq[Any]] = {
+    import CellStore.{Measure, Window}
     val ks = keys.points
+    // a pinned point is the window [k, succ(k)) (exact under any
+    // injective encoding)
+    val windows = Window.ranges(keys)
     // per-point NET cell counts: a fully-deleted key nets to zero and
     // counts as absent, exactly like the fold
-    lazy val pointCellsOpt: Option[Array[Long]] =
-      atPoints[Long](files, ks, null, null)(
-        if (netted) CellStore.nettedCountCellsAtPoints _
-        else (f, p, a, b, c, d, e) =>
-          Some(CellStore.countCellsAtPoints(f, p, a, b, c, d, e)))(_ + _)
-    lazy val pointCells: Array[Long] = pointCellsOpt.get // non-netted: always Some
-    // one answer per (file, key window): a pinned point is the window
-    // [k, succ(k)) (exact under any injective encoding)
-    lazy val rangeRows: Option[Long] = total(perSpan(files, keys)((f, lo, hi) =>
-      if (netted) CellStore.nettedCountDistinctKeysInRange(f, lo, hi)
-      else CellStore.countDistinctKeysInRange(f, lo, hi)))
-    def extremal(wantMin: Boolean): Option[Array[Byte]] =
-      if (ks != null) {
-        val order = if (wantMin) ks.indices else ks.indices.reverse
-        order.collectFirst { case i if pointCells(i) > 0 => ks(i) }
-      } else perSpan(files, keys)((f, lo, hi) =>
-        CellStore.extremalKeyInRange(f, lo, hi, wantMin)).flatten
-        .reduceOption(byteExtreme(wantMin))
-    def colCount(cb: Array[Byte]): Option[Long] = total(perSpan(files, keys)((f, l, h) =>
-      if (netted) CellStore.nettedCountColCellsInRange(f, cb, l, h)
-      else CellStore.countColCellsInRange(f, cb, l, h)))
-    def colSum(cb: Array[Byte]): Option[Long] = total(perSpan(files, keys)((f, l, h) =>
-      if (netted) CellStore.nettedSumColCellsInRange(f, cb, l, h)
-      else CellStore.sumColCellsInRange(f, cb, l, h)))
-    def colExtremal(cb: Array[Byte], wantMin: Boolean): Option[Option[Long]] =
-      valueExtreme(wantMin)(perSpan(files, keys)((f, l, h) =>
-        CellStore.extremalColValueInRange(f, cb, l, h, wantMin)))
+    lazy val presence = CellStore.summarize(files, Window.points(ks), ks.length,
+      Measure.Cells, netted = netted).map(_.count)
+    lazy val rows = CellStore.summarize(files, windows, 1, Measure.Keys,
+      netted = netted).map(_.count(0))
+    def keyExtremal(wantMin: Boolean): Option[Array[Byte]] =
+      if (ks == null) Some(CellStore.extremalAddresses(files, windows, 1, 0, wantMin)(0))
+      else presence.map(p => firstPresent(ks, p, wantMin))
+    val perCol = collection.mutable.Map.empty[String, Option[CellStore.Summary]]
+    def col(c: String): Option[CellStore.Summary] = perCol.getOrElseUpdate(c,
+      CellStore.summarize(files, windows, 1, Measure.Column(colBytesOf(c)),
+        wantSum = aggs.contains(PushedAgg.Sum(c)),
+        wantExt = aggs.contains(PushedAgg.Min(c)) || aggs.contains(PushedAgg.Max(c)),
+        netted = netted))
     val out = aggs.map {
       case PushedAgg.Count(c) if colBytesOf(c) != null =>
-        colCount(colBytesOf(c)) match {
-          case Some(x) => x
-          case None => return None
-        }
+        col(c).getOrElse(return None).count(0)
       case PushedAgg.Sum(c) if colBytesOf(c) != null =>
-        val cb = colBytesOf(c)
-        (colCount(cb), colSum(cb)) match {
-          case (Some(n), Some(s)) => if (n == 0L) null else Long.box(s)
-          case _ => return None
-        }
+        val s = col(c).getOrElse(return None)
+        if (s.count(0) == 0L) null else s.sum(0)
       case PushedAgg.Min(c) if colBytesOf(c) != null =>
-        colExtremal(colBytesOf(c), wantMin = true) match {
-          case Some(v) => v.map(Long.box).orNull
-          case None => return None
-        }
+        col(c).getOrElse(return None).extreme(0, wantMin = true)
       case PushedAgg.Max(c) if colBytesOf(c) != null =>
-        colExtremal(colBytesOf(c), wantMin = false) match {
-          case Some(v) => v.map(Long.box).orNull
-          case None => return None
-        }
+        col(c).getOrElse(return None).extreme(0, wantMin = false)
       case PushedAgg.CountStar | PushedAgg.Count(_) =>
-        if (ks != null) pointCellsOpt match {
-          case Some(pc) => pc.indices.count(pc(_) > 0).toLong
-          case None => return None // netted decline
-        }
-        else rangeRows match {
-          case Some(x) => x
-          case None => return None
-        }
+        if (ks != null) presence.getOrElse(return None).count(_ > 0).toLong
+        else rows.getOrElse(return None)
       case PushedAgg.Min(_) =>
-        extremal(wantMin = true).map(keyCodec.decode).orNull
+        Option(keyExtremal(wantMin = true).getOrElse(return None))
+          .map(keyCodec.decode).orNull
       case PushedAgg.Max(_) =>
-        extremal(wantMin = false).map(keyCodec.decode).orNull
+        Option(keyExtremal(wantMin = false).getOrElse(return None))
+          .map(keyCodec.decode).orNull
       case other =>
         throw new IllegalStateException(s"unanswerable regular range aggregate $other")
     }
     Some(out)
+  }
+
+  /** The smallest (or largest) sorted point whose count is positive; null
+    * = none present. */
+  private def firstPresent(ks: Array[Array[Byte]], counts: Array[Long],
+      wantMin: Boolean): Array[Byte] = {
+    val order = if (wantMin) ks.indices else ks.indices.reverse
+    order.collectFirst { case i if counts(i) > 0 => ks(i) }.orNull
   }
 
   private def answerReader(row: InternalRow): PartitionReader[InternalRow] =

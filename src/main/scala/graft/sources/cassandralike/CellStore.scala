@@ -350,7 +350,7 @@ object CellStore {
     * .deleteWhere]] satisfies this by construction (it reads the doomed
     * visible cells and stamps max-ts+1); nothing else may set it. The
     * marker is what lets positional counts NET OUT deletions
-    * ([[nettedCountCellsInRange]] and twins) instead of declining to the
+    * ([[summarize]] under `netted`) instead of declining to the
     * fold until compaction. It is written only when the run is genuinely
     * all-tombstone. */
   def writeRun(out: DataOutputStream, cells: Seq[Cell],
@@ -1340,946 +1340,502 @@ object CellStore {
     bucketStatCache.clear()
   }
 
-  /** Cells of one segment whose key falls in [lo, hi) (null = unbounded),
-    * counted from the sparse index: runs fully inside the range count
-    * positionally (cellCount, no IO beyond the memoized stats), runs
-    * disjoint from it count zero, and only a BOUNDARY-crossing run reads
-    * its index and scans the one span containing each boundary — at most
-    * 2×[[IndexEvery]] cell decodes per run, however wide the range. The
-    * metadata-count companion to the seek machinery: a range COUNT over a
-    * compacted store costs O(runs) metadata instead of O(range) decodes.
+  // ---- positional window aggregates: one summary kernel and one extremal
+  // address seek, both over half-open composite address windows ----
+
+  /** One end of a composite address window: the (key, col, sub) prefix a
+    * cell address is compared with. A null trailing field is a coarser
+    * level: `Addr(k)` sits before every cell of key k, `Addr(k, c)` before
+    * every cell of (k, c). A cell's null col or sub compares as empty
+    * bytes, as in [[addressOrdering]]. */
+  final case class Addr(key: Array[Byte], col: Array[Byte] = null,
+      sub: Array[Byte] = null)
+
+  /** The cells with address in `[lo, hi)` (null = unbounded on that side),
+    * folded into output slot `slot`. */
+  final case class Window(slot: Int, lo: Addr, hi: Addr) {
+    /** The one key every cell of the window carries, or null — the key a
+      * run's bloom is probed with. */
+    val singleKey: Array[Byte] =
+      if (lo == null || hi == null) null
+      else if (java.util.Arrays.equals(
+          if (hi.col != null) lo.key else byteSucc(lo.key), hi.key)) lo.key
+      else null
+
+    /** Can a cell of the run lie inside, judged by its key range? */
+    private[CellStore] def meets(s: RunStats): Boolean =
+      (lo == null || Codecs.compareBytes(s.lastKey, lo.key) >= 0) &&
+        (hi == null || {
+          val c = Codecs.compareBytes(s.firstKey, hi.key)
+          c < 0 || (c == 0 && hi.col != null)
+        })
+
+    /** Is every cell of key `k` at or above `lo`? */
+    private[CellStore] def keyAbove(k: Array[Byte]): Boolean = lo == null || {
+      val c = Codecs.compareBytes(k, lo.key)
+      c > 0 || (c == 0 && lo.col == null)
+    }
+
+    /** Is every cell of key `k` below `hi`? */
+    private[CellStore] def keyBelow(k: Array[Byte]): Boolean =
+      hi == null || Codecs.compareBytes(k, hi.key) < 0
+
+    private[CellStore] def holds(c: Cell): Boolean =
+      (lo == null || cmpAddr(c.key, c.col, c.sub, lo) >= 0) &&
+        (hi == null || cmpAddr(c.key, c.col, c.sub, hi) < 0)
+  }
+
+  object Window {
+    /** `[lo, hi)` over keys (null = unbounded). */
+    def range(slot: Int, lo: Array[Byte], hi: Array[Byte]): Window =
+      Window(slot, if (lo == null) null else Addr(lo), if (hi == null) null else Addr(hi))
+
+    /** One window per key span, all into slot 0. */
+    def ranges(keys: KeyWindows): Seq[Window] =
+      keys.spans.toSeq.map { case (lo, hi) => range(0, lo, hi) }
+
+    /** Key `ks(i)` into slot i: the whole key, or its cells inside the
+      * column windows `cols`; when `cols` are points, each column point,
+      * narrowed to the sub windows `subs` (null = unrestricted). An empty
+      * window set gives no window, so its slots stay empty. */
+    def points(ks: Seq[Array[Byte]], cols: KeyWindows = null,
+        subs: KeyWindows = null): Seq[Window] = {
+      val colPts = if (cols == null) null else cols.points
+      ks.indices.flatMap { i =>
+        val k = ks(i)
+        if (cols == null) Seq(Window(i, Addr(k), Addr(byteSucc(k))))
+        else if (colPts != null) for {
+          c <- colPts.toSeq
+          (sLo, sHi) <- if (subs == null) Seq((null, null)) else subs.spans.toSeq
+        } yield Window(i, Addr(k, c, sLo),
+          if (sHi == null) Addr(k, byteSucc(c)) else Addr(k, c, sHi))
+        else cols.spans.toSeq.map { case (cLo, cHi) =>
+          Window(i, Addr(k, cLo), if (cHi == null) Addr(byteSucc(k)) else Addr(k, cHi))
+        }
+      }
+    }
+  }
+
+  /** What [[summarize]] counts, sums and bounds. */
+  sealed trait Measure
+  object Measure {
+    /** Cells, counted. */
+    case object Cells extends Measure
+    /** Distinct keys, from the KPFX tail; key-level windows only. */
+    case object Keys extends Measure
+    /** Cells and their 8-byte long values: VSUM sums, VMMX extremes. */
+    case object Values extends Measure
+    /** The cells named `name` and their values: the CVAL tail. */
+    final case class Column(name: Array[Byte]) extends Measure
+  }
+
+  /** Per-slot count, sum, min and max; a slot's extremes hold a value iff
+    * its count is positive. */
+  final class Summary(slots: Int) {
+    val count = new Array[Long](slots)
+    val sum = new Array[Long](slots)
+    val min: Array[Long] = Array.fill(slots)(Long.MaxValue)
+    val max: Array[Long] = Array.fill(slots)(Long.MinValue)
+    /** The slot's min or max; null = no cell. */
+    def extreme(slot: Int, wantMin: Boolean): java.lang.Long =
+      if (count(slot) <= 0) null else Long.box(if (wantMin) min(slot) else max(slot))
+  }
+
+  /** The `measure` over the cells of `files` inside each window, folded per
+    * slot: the one positional aggregate kernel. Per run:
+    *  1. a run no window meets is skipped without index IO — judged by its
+    *     key range, and by its key bloom for a single-key window;
+    *  2. a consulted run that is unclassifiable under `netted`
+    *     ([[nettedSign]]), or lacks the tail the measure needs, declines;
+    *     one that holds no cell of the measure (a column absent from its
+    *     CVAL tail) contributes zero, exactly, with no IO;
+    *  3. a window that holds the whole run folds the run totals from
+    *     [[RunStats]] with no index IO;
+    *  4. any other window reads the run index, parsed once for all its
+    *     windows, and searches its entries for both ends. Ends in one span
+    *     scan that span once; otherwise the two boundary spans are scanned
+    *     and the spans between give their prefix-tail difference (count,
+    *     sum) and their span tails (min, max).
+    * Under `netted` each run adds with its sign, so a certified delete
+    * epoch subtracts its victims; extremes never net, so asking for them
+    * under `netted` declines.
     *
-    * Counts CELLS. The caller must have proven every counted cell is a
-    * distinct visible row (STAT distinctAddrs == cells per run, pairwise
-    * run-disjointness, zero tombstones) before treating this as a row
-    * count — see [[graft.sources.cassandralike.MetadataAggReader]]. */
-  def countCellsInRange(file: Path, lo: Array[Byte], hi: Array[Byte]): Long = {
-    val runs = meta(file).live
-    var total = 0L
+    * None = a decline (a tail-less or unclassifiable consulted run, or a
+    * Long overflow): the fold then owns the query, which reproduces
+    * Spark's own overflow semantics. Counts CELLS (or keys): the caller
+    * must have proven every counted cell a distinct visible row (see
+    * [[MetadataAggReader]]), and per-entry col (sub) bytes on every run a
+    * composite window end reaches ([[RunStats.colEntries]]). */
+  def summarize(files: Seq[Path], windows: Seq[Window], slots: Int,
+      measure: Measure, wantSum: Boolean = false, wantExt: Boolean = false,
+      netted: Boolean = false): Option[Summary] = {
+    require(!(wantSum || wantExt) || measure == Measure.Values ||
+      measure.isInstanceOf[Measure.Column], s"$measure has no values")
+    if (netted && wantExt) return None
+    val out = new Summary(slots)
+    val ws = windows.toIndexedSeq
+    if (ws.isEmpty) return Some(out)
+    val fold = new Fold(measure, wantSum, wantExt)
+    try if (files.forall(summarizeFile(_, ws, fold, netted, out))) Some(out) else None
+    catch { case _: ArithmeticException => None }
+  }
+
+  /** [[summarize]] over one file; false = decline. */
+  private def summarizeFile(file: Path, ws: IndexedSeq[Window], fold: Fold,
+      netted: Boolean, out: Summary): Boolean = {
+    val seg = meta(file)
+    val runs = seg.live
     var reader: SegmentReader = null
     try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          val fullLow = lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0
-          val fullHigh = hi == null || Codecs.compareBytes(s.lastKey, hi) < 0
-          if (fullLow && fullHigh) total += ri.cellCount
-          else {
-            if (reader == null) reader = new SegmentReader(file)
-            val idx = reader.readIndex(ri)
-            // f(hi) - f(lo), where a null bound contributes its identity
-            // (f(-inf) = 0 cells below a missing lower bound, f(+inf) =
-            // cellCount below a missing upper bound)
-            total +=
-              (if (hi == null) ri.cellCount.toLong
-               else cellsBelow(reader, ri, idx, hi)) -
-              (if (lo == null) 0L else cellsBelow(reader, ri, idx, lo))
+      var r = 0
+      while (r < runs.length) {
+        val RunMeta(ri, s) = runs(r)
+        var totals: Totals = null // null until a window consults the run
+        var sign = 1
+        var tails: Tails = null
+        var i = 0
+        while (i < ws.length) {
+          val w = ws(i)
+          if (consults(seg, r, w)) {
+            if (totals == null) {
+              if (netted) sign = nettedSign(s).getOrElse(return false)
+              totals = fold.totals(ri, s)
+              if (totals == null) return false
+            }
+            if (totals.count != 0) {
+              if (w.keyAbove(s.firstKey) && w.keyBelow(s.lastKey)) fold.set(totals)
+              else {
+                if (tails == null) {
+                  if (reader == null) reader = new SegmentReader(file)
+                  tails = fold.tails(ri, s, readIndex(reader, ri, w))
+                  if (tails == null) return false
+                }
+                fold.window(reader, tails, w)
+              }
+              fold.addTo(out, w.slot, sign)
+            }
           }
+          i += 1
         }
-        i += 1
+        r += 1
       }
+      true
     } finally if (reader != null) reader.close()
-    total
   }
 
-  /** f(x) = #cells of one run with key < x (x non-null), from its parsed
-    * index. Entry keys are non-decreasing (a hot key spans entries), so
-    * binary-search the LAST entry strictly below x: every earlier span is
-    * fully below and counts positionally; only the found span is scanned
-    * (sorted — stops at the first key >= x). */
-  private def cellsBelow(reader: SegmentReader, ri: RunInfo, idx: RunIndex,
-      x: Array[Byte]): Long = {
-    val keys = idx.keys
-    if (Codecs.compareBytes(keys(0), x) >= 0) return 0L
-    if (Codecs.compareBytes(idx.lastKey, x) < 0) return ri.cellCount.toLong
-    val m = lastEntryBelow(keys, x)
-    var n = idx.cellPos(m).toLong
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(m),
-      spanLength(ri, idx, m))
-    var scanning = true
-    while (scanning && it.hasNext) {
-      if (Codecs.compareBytes(it.next().key, x) < 0) n += 1
-      else scanning = false
-    }
-    n
+  /** Does window `w` reach run `r` of `seg`: its key range, and for a
+    * single-key window its key bloom? */
+  private def consults(seg: SegmentMeta, r: Int, w: Window): Boolean =
+    w.meets(seg.live(r).stats) && (w.singleKey == null || {
+      val b = seg.blooms(r)
+      b == null || b.mightContain(w.singleKey)
+    })
+
+  /** The one place a window read parses a run index; a parse for a point
+    * window counts in [[pointProbeIndexReads]]. */
+  private def readIndex(reader: SegmentReader, ri: RunInfo, w: Window): RunIndex = {
+    if (w.singleKey != null) pointProbeIndexReads.incrementAndGet()
+    reader.readIndex(ri)
   }
 
-  /** Largest entry index with keys(i) < x; caller guarantees keys(0) < x. */
-  private def lastEntryBelow(keys: Array[Array[Byte]], x: Array[Byte]): Int =
-    entriesBelow(keys, x) - 1
+  /** Sign of the cell address (k, c, s) against `x`, compared at `x`'s
+    * level. */
+  private def cmpAddr(k: Array[Byte], c: Array[Byte], s: Array[Byte], x: Addr): Int = {
+    val kc = Codecs.compareBytes(k, x.key)
+    if (kc != 0 || x.col == null) return kc
+    val cc = Codecs.compareBytes(if (c == null) Array.emptyByteArray else c, x.col)
+    if (cc != 0 || x.sub == null) return cc
+    Codecs.compareBytes(if (s == null) Array.emptyByteArray else s, x.sub)
+  }
 
-  /** Number of (non-decreasing) entry keys strictly below x. */
-  private def entriesBelow(keys: Array[Array[Byte]], x: Array[Byte]): Int = {
+  /** The last index entry whose address lies below `x`; -1 when none.
+    * Entry addresses are the (key, col, sub) of the cell at each entry and
+    * never decrease, and every cell of a later span is at or above the
+    * next entry, so the cells below `x` are the entry's prefix plus part
+    * of its one span. */
+  private def lastEntryBelow(idx: RunIndex, x: Addr): Int = {
+    require(x.col == null || idx.cols != null,
+      "composite window end on a run without per-entry col bytes")
     var a = 0
-    var b = keys.length
+    var b = idx.keys.length
     while (a < b) {
-      val mid = (a + b) >>> 1
-      if (Codecs.compareBytes(keys(mid), x) < 0) a = mid + 1 else b = mid
+      val m = (a + b) >>> 1
+      if (cmpAddr(idx.keys(m), if (idx.cols == null) null else idx.cols(m),
+          if (idx.subs == null) null else idx.subs(m), x) < 0) a = m + 1
+      else b = m
     }
-    a
+    a - 1
   }
 
   private def spanLength(ri: RunInfo, idx: RunIndex, e: Int): Int =
     (if (e == idx.cellPos.length - 1) ri.cellCount else idx.cellPos(e + 1)) -
       idx.cellPos(e)
 
-  /** k ++ 0x00 — the immediate successor of `k` in unsigned-lexicographic
-    * byte order: the exclusive upper bound admitting exactly the byte
-    * strings equal to `k`. The ONE successor primitive of the package, so
-    * every half-open window ([[KeyWindows]]) shares the same boundary
-    * convention. */
-  private[cassandralike] def byteSucc(k: Array[Byte]): Array[Byte] = {
-    val out = java.util.Arrays.copyOf(k, k.length + 1)
-    out(k.length) = 0
-    out
+  private def spanCells(reader: SegmentReader, ri: RunInfo, idx: RunIndex,
+      e: Int): Iterator[Cell] =
+    reader.runIterator(ri.payloadOffset + idx.offsets(e), spanLength(ri, idx, e))
+
+  /** A measure's whole-run count, sum, min and max. */
+  private final case class Totals(count: Long, sum: Long, min: Long, max: Long)
+  private val NoCells = Totals(0L, 0L, Long.MaxValue, Long.MinValue)
+
+  /** One parsed run as a measure reads it: per-entry prefix counts and
+    * sums (an index past the last entry is the run total) and per-span
+    * extremes. */
+  private final class Tails(val ri: RunInfo, val idx: RunIndex,
+      counts: Array[Int], countTotal: Long,
+      sums: Array[Long], sumTotal: Long,
+      val mins: Array[Long], val maxs: Array[Long]) {
+    def count(e: Int): Long = if (e == counts.length) countTotal else counts(e)
+    def sum(e: Int): Long = if (e == sums.length) sumTotal else sums(e)
   }
 
-  /** Per-point present-cell counts over one segment — the IN twin of
-    * [[countCellsInRange]]: a run whose memoized key window or key bloom
-    * rejects every point is skipped without ANY index IO, and one index
-    * parse per surviving run answers all its points (a large pushed IN
-    * must not parse the index once per key). Returned counts align with
-    * `points`. Same cells-not-rows caveat as [[countCellsInRange]].
-    *
-    * `colLo`/`colHi` (optional, half-open) restrict each point to its
-    * cells with clustering-column bytes in [colLo, colHi) — the wide-row
-    * "how many columns of row k in [a, b)" count, answered from COMPOSITE
-    * (key, col) boundaries (a key's cells are col-sorted within a run, so
-    * the restriction is still one contiguous interval). `colPoints`
-    * (mutually exclusive with the col window) restricts each key to the
-    * listed clustering columns instead — each (key, col) pair its own
-    * contiguous interval — optionally narrowed further to sub-column
-    * bytes in [subLo, subHi) (sub bytes are sorted within one (key, col)
-    * group, null sub ordering as empty). Callers must have proven every
-    * candidate run carries complete per-entry col bytes
-    * ([[RunStats.colEntries]]) before passing col bounds, and sub bytes
-    * ([[RunStats.subEntries]]) before passing sub bounds. */
-  def countCellsAtPoints(file: Path, points: Seq[Array[Byte]],
-      colLo: Array[Byte] = null, colHi: Array[Byte] = null,
-      colPoints: Seq[Array[Byte]] = null,
-      subLo: Array[Byte] = null, subHi: Array[Byte] = null): Array[Long] = {
-    val out = new Array[Long](points.length)
-    if (points.isEmpty) return out
-    val seg = meta(file)
-    val runs = seg.live
-    val blooms = seg.blooms
-    var reader: SegmentReader = null
-    try {
-      var r = 0
-      while (r < runs.length) {
-        val RunMeta(ri, s) = runs(r)
-        var idx: RunIndex = null
-        var p = 0
-        while (p < points.length) {
-          val k = points(p)
-          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-            Codecs.compareBytes(k, s.lastKey) <= 0
-          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-            if (idx == null) {
-              if (reader == null) reader = new SegmentReader(file)
-              pointProbeIndexReads.incrementAndGet()
-              idx = reader.readIndex(ri)
-            }
-            if (colPoints != null) {
-              // one contiguous interval per (k, c):
-              // [ (k, c, subLo) , (k, c, subHi) ), null sub bounds
-              // falling back to the whole (k, c) group
-              var ci = 0
-              while (ci < colPoints.length) {
-                val c = colPoints(ci)
-                val below =
-                  if (subHi == null)
-                    cellsBelowComposite(reader, ri, idx, k, byteSucc(c))
-                  else cellsBelowComposite(reader, ri, idx, k, c, subHi)
-                val above =
-                  if (subLo == null) cellsBelowComposite(reader, ri, idx, k, c)
-                  else cellsBelowComposite(reader, ri, idx, k, c, subLo)
-                out(p) += below - above
-                ci += 1
-              }
-            } else {
-              // [ (k, colLo) , (k, colHi) ) — a null col bound falls back
-              // to the key-only boundary: (k, -inf) = k, (k, +inf) = succ(k)
-              val below =
-                if (colHi == null) cellsBelow(reader, ri, idx, byteSucc(k))
-                else cellsBelowComposite(reader, ri, idx, k, colHi)
-              val above =
-                if (colLo == null) cellsBelow(reader, ri, idx, k)
-                else cellsBelowComposite(reader, ri, idx, k, colLo)
-              out(p) += below - above
-            }
-          }
-          p += 1
+  /** The count, sum, min and max of one measure over one window of one
+    * run, added to its slot by [[addTo]]. */
+  private final class Fold(measure: Measure, wantSum: Boolean, wantExt: Boolean) {
+    private val name = measure match {
+      case Measure.Column(c) => c
+      case _ => null
+    }
+    private val keys = measure == Measure.Keys
+    private val decode = wantSum || wantExt
+    private var count = 0L
+    private var sum = 0L
+    private var min = Long.MaxValue
+    private var max = Long.MinValue
+
+    /** The run's totals from its [[RunStats]]; null = it lacks the tail. */
+    def totals(ri: RunInfo, s: RunStats): Totals = measure match {
+      case Measure.Cells => Totals(ri.cellCount, 0L, 0L, 0L)
+      case Measure.Keys =>
+        if (s.distinctKeys < 0) null else Totals(s.distinctKeys, 0L, 0L, 0L)
+      case Measure.Values =>
+        if ((wantSum && !s.hasValSums) || (wantExt && !s.hasValRange)) null
+        else Totals(ri.cellCount, s.valTotal, s.valMin, s.valMax)
+      case Measure.Column(c) =>
+        if (s.colVals == null) null
+        else findColValStat(s.colVals, c) match {
+          case null => NoCells // tail presence proves the run holds none
+          case cv =>
+            if ((wantSum && !cv.sumsOk) || (wantExt && !cv.rangeOk)) null
+            else Totals(cv.count, cv.sum, cv.min, cv.max)
         }
-        r += 1
-      }
-    } finally if (reader != null) reader.close()
-    out
-  }
-
-  /** f(X) for the COMPOSITE boundary X = (keyB[, colB[, subB]]): #cells of
-    * one run whose (key, col, sub) address is lexicographically below X —
-    * the multi-level twin of [[cellsBelow]]. A null colB compares at key
-    * level only ((k) = "before any cell of k"); a null subB at (key, col)
-    * level. Requires per-entry col/sub bytes down to the deepest non-null
-    * bound (the caller gates on [[RunStats.colEntries]] /
-    * [[RunStats.subEntries]]); entry addresses are non-decreasing in
-    * (key, col, sub), so the same last-entry-below search applies and only
-    * the boundary span is scanned. */
-  private def cellsBelowComposite(reader: SegmentReader, ri: RunInfo,
-      idx: RunIndex, keyB: Array[Byte], colB: Array[Byte],
-      subB: Array[Byte] = null): Long = {
-    def addrBelow(k: Array[Byte], c: Array[Byte], s: Array[Byte]): Boolean = {
-      val kc = Codecs.compareBytes(k, keyB)
-      if (kc != 0) return kc < 0
-      if (colB == null) return false
-      val cc = Codecs.compareBytes(c, colB)
-      if (cc != 0) return cc < 0
-      if (subB == null) return false
-      // [[addressOrdering]] sorts a null sub as EMPTY bytes — compare the
-      // same way, so hidden null-sub cells order consistently
-      Codecs.compareBytes(
-        if (s == null) Array.emptyByteArray else s, subB) < 0
     }
-    val keys = idx.keys
-    val cols = idx.cols
-    val subs = idx.subs
-    def entrySub(i: Int): Array[Byte] = if (subs == null) null else subs(i)
-    if (!addrBelow(keys(0), cols(0), entrySub(0))) return 0L
-    // binary search the LAST entry strictly below the boundary
-    var a = 0
-    var b = keys.length - 1
-    while (a < b) {
-      val mid = (a + b + 1) >>> 1
-      if (addrBelow(keys(mid), cols(mid), entrySub(mid))) a = mid else b = mid - 1
-    }
-    var n = idx.cellPos(a).toLong
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(a),
-      spanLength(ri, idx, a))
-    var scanning = true
-    while (scanning && it.hasNext) {
-      val cell = it.next()
-      if (addrBelow(cell.key, cell.col, cell.sub)) n += 1
-      else scanning = false
-    }
-    n
-  }
 
-  /** The 8-byte big-endian long value of a cell under a VSUM-tailed run.
-    * Tail presence proves every cell value in the run is an 8-byte long;
-    * throws the same ArithmeticException the overflow paths use, so any
-    * impossible shape surfaces as a decline, never a wrong sum. */
-  private def valueLong(c: Cell): Long =
-    if (c.value != null && c.value.length == 8) ByteBuffer.wrap(c.value).getLong
-    else throw new ArithmeticException("non-8-byte value under VSUM tail")
+    /** The measure's tails in a parsed run index; null = absent. */
+    def tails(ri: RunInfo, s: RunStats, idx: RunIndex): Tails = measure match {
+      case Measure.Cells =>
+        new Tails(ri, idx, idx.cellPos, ri.cellCount, null, 0L, null, null)
+      case Measure.Keys =>
+        if (idx.keyPrefix == null) null
+        else new Tails(ri, idx, idx.keyPrefix, s.distinctKeys, null, 0L, null, null)
+      case Measure.Values =>
+        if ((wantSum && idx.valSums == null) || (wantExt && idx.valMins == null)) null
+        else new Tails(ri, idx, idx.cellPos, ri.cellCount, idx.valSums,
+          idx.valTotal, idx.valMins, idx.valMaxs)
+      case Measure.Column(c) =>
+        val cv = findColVal(idx.colVals, c)
+        if (cv == null || (wantSum && !cv.sumsOk) || (wantExt && !cv.rangeOk)) null
+        else new Tails(ri, idx, cv.prefixCounts, cv.totalCount, cv.prefixSums,
+          cv.totalSum, cv.spanMins, cv.spanMaxs)
+    }
 
-  /** Value-sum of one segment's cells with key in [lo, hi) (null =
-    * unbounded), from the VSUM prefix tails: runs fully inside the range
-    * contribute their run total with no IO beyond the memoized stats, and
-    * only boundary-crossing runs read their index and scan the ONE span
-    * containing each boundary — the SUM twin of [[countCellsInRange]]
-    * ("total volume in the window" without reading the range). None when
-    * any non-disjoint run lacks the tail, or any accumulation overflows
-    * Long (the fold then owns the query — Spark's own non-ANSI wrap-around
-    * reproduces there; a wrapped metadata answer would silently disagree
-    * with ANSI mode).
-    *
-    * Sums CELL values. The caller must have proven every summed cell a
-    * distinct visible row (zero tombstones, disjoint runs, per-run
-    * distinctAddrs == cells) — same proof obligations as the counts. */
-  def sumCellsInRange(file: Path, lo: Array[Byte], hi: Array[Byte]): Option[Long] = {
-    val runs = meta(file).live
-    var total = 0L
-    var reader: SegmentReader = null
-    try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          if (!s.hasValSums) return None
-          val fullLow = lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0
-          val fullHigh = hi == null || Codecs.compareBytes(s.lastKey, hi) < 0
-          if (fullLow && fullHigh) total = Math.addExact(total, s.valTotal)
-          else {
-            if (reader == null) reader = new SegmentReader(file)
-            val idx = reader.readIndex(ri)
-            val below =
-              if (hi == null) idx.valTotal else sumBelow(reader, ri, idx, hi)
-            val above =
-              if (lo == null) 0L else sumBelow(reader, ri, idx, lo)
-            total = Math.addExact(total, Math.subtractExact(below, above))
+    def set(t: Totals): Unit = { count = t.count; sum = t.sum; min = t.min; max = t.max }
+
+    /** The window's cells in one run, its ends located by entry search; an
+      * end outside the run's keys needs none. */
+    def window(reader: SegmentReader, t: Tails, w: Window): Unit = {
+      set(NoCells)
+      val idx = t.idx
+      val n = idx.keys.length
+      val a = if (w.keyAbove(idx.keys(0))) -1 else lastEntryBelow(idx, w.lo)
+      val b = if (w.keyBelow(idx.lastKey)) n else lastEntryBelow(idx, w.hi)
+      if (b < 0 || a > b) return // every cell at or above hi, or lo >= hi
+      if (a == b) scan(reader, t, a, w.lo, w.hi)
+      else {
+        if (a >= 0) scan(reader, t, a, w.lo, null)
+        count += t.count(b) - t.count(a + 1)
+        if (wantSum) sum = Math.addExact(sum, Math.subtractExact(t.sum(b), t.sum(a + 1)))
+        if (wantExt) {
+          var e = a + 1
+          while (e < b) {
+            if (t.mins(e) < min) min = t.mins(e)
+            if (t.maxs(e) > max) max = t.maxs(e)
+            e += 1
           }
         }
-        i += 1
+        if (b < n) scan(reader, t, b, null, w.hi)
       }
-      Some(total)
-    } catch {
-      case _: ArithmeticException => None
-    } finally if (reader != null) reader.close()
-  }
-
-  /** Value-sum of one run's cells with key < x — [[cellsBelow]]'s VSUM
-    * twin (caller guarantees idx.valSums != null). Prefix sums at entry
-    * boundaries plus a scan of the one boundary span; every intermediate
-    * is a true prefix of the run, so it fits Long by tail construction. */
-  private def sumBelow(reader: SegmentReader, ri: RunInfo, idx: RunIndex,
-      x: Array[Byte]): Long = {
-    val keys = idx.keys
-    if (Codecs.compareBytes(keys(0), x) >= 0) return 0L
-    if (Codecs.compareBytes(idx.lastKey, x) < 0) return idx.valTotal
-    val m = lastEntryBelow(keys, x)
-    var s = idx.valSums(m)
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(m),
-      spanLength(ri, idx, m))
-    var scanning = true
-    while (scanning && it.hasNext) {
-      val c = it.next()
-      if (Codecs.compareBytes(c.key, x) < 0) s = Math.addExact(s, valueLong(c))
-      else scanning = false
     }
-    s
-  }
 
-  /** Per-point value sums over one segment — the SUM twin of
-    * [[countCellsAtPoints]] (same pruning: a run whose key window or bloom
-    * rejects every point is skipped without index IO and without needing a
-    * VSUM tail). Supports the same col-window / col-point / sub-window
-    * narrowing via composite boundaries. None when any CONSULTED run lacks
-    * the tail or an accumulation overflows. Same cells-not-rows caveat. */
-  def sumCellsAtPoints(file: Path, points: Seq[Array[Byte]],
-      colLo: Array[Byte] = null, colHi: Array[Byte] = null,
-      colPoints: Seq[Array[Byte]] = null,
-      subLo: Array[Byte] = null, subHi: Array[Byte] = null): Option[Array[Long]] = {
-    val out = new Array[Long](points.length)
-    if (points.isEmpty) return Some(out)
-    val seg = meta(file)
-    val runs = seg.live
-    val blooms = seg.blooms
-    var reader: SegmentReader = null
-    try {
-      var r = 0
-      while (r < runs.length) {
-        val RunMeta(ri, s) = runs(r)
-        var idx: RunIndex = null
-        var p = 0
-        while (p < points.length) {
-          val k = points(p)
-          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-            Codecs.compareBytes(k, s.lastKey) <= 0
-          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-            if (!s.hasValSums) return None
-            if (idx == null) {
-              if (reader == null) reader = new SegmentReader(file)
-              idx = reader.readIndex(ri)
-            }
-            if (colPoints != null) {
-              var ci = 0
-              while (ci < colPoints.length) {
-                val c = colPoints(ci)
-                val below =
-                  if (subHi == null)
-                    sumBelowComposite(reader, ri, idx, k, byteSucc(c))
-                  else sumBelowComposite(reader, ri, idx, k, c, subHi)
-                val above =
-                  if (subLo == null) sumBelowComposite(reader, ri, idx, k, c)
-                  else sumBelowComposite(reader, ri, idx, k, c, subLo)
-                out(p) = Math.addExact(out(p), Math.subtractExact(below, above))
-                ci += 1
-              }
-            } else {
-              val below =
-                if (colHi == null) sumBelow(reader, ri, idx, byteSucc(k))
-                else sumBelowComposite(reader, ri, idx, k, colHi)
-              val above =
-                if (colLo == null) sumBelow(reader, ri, idx, k)
-                else sumBelowComposite(reader, ri, idx, k, colLo)
-              out(p) = Math.addExact(out(p), Math.subtractExact(below, above))
+    /** Folds the cells of span `e` inside [from, to) (null = open). */
+    private def scan(reader: SegmentReader, t: Tails, e: Int, from: Addr, to: Addr): Unit = {
+      val idx = t.idx
+      // a key start is a cell whose key differs from the cell before it
+      var prev: Array[Byte] =
+        if (!keys || idx.keyStart(e)) null else idx.keys(e)
+      val it = spanCells(reader, t.ri, idx, e)
+      while (it.hasNext) {
+        val c = it.next()
+        if (to != null && cmpAddr(c.key, c.col, c.sub, to) >= 0) return
+        if (from == null || cmpAddr(c.key, c.col, c.sub, from) >= 0) {
+          if (keys) {
+            if (prev == null || !java.util.Arrays.equals(prev, c.key)) count += 1
+          } else if (name == null || (c.col != null && java.util.Arrays.equals(c.col, name))) {
+            count += 1
+            if (decode) {
+              val v = valueLong(c)
+              if (wantSum) sum = Math.addExact(sum, v)
+              if (v < min) min = v
+              if (v > max) max = v
             }
           }
-          p += 1
         }
-        r += 1
+        prev = c.key
       }
-      Some(out)
-    } catch {
-      case _: ArithmeticException => None
-    } finally if (reader != null) reader.close()
-  }
+    }
 
-  /** Value-sum of one run's cells with (key, col, sub) address below the
-    * composite boundary — [[cellsBelowComposite]]'s VSUM twin (caller
-    * guarantees valSums, and col/sub entry bytes down to the deepest
-    * non-null bound). */
-  private def sumBelowComposite(reader: SegmentReader, ri: RunInfo,
-      idx: RunIndex, keyB: Array[Byte], colB: Array[Byte],
-      subB: Array[Byte] = null): Long = {
-    def addrBelow(k: Array[Byte], c: Array[Byte], s: Array[Byte]): Boolean = {
-      val kc = Codecs.compareBytes(k, keyB)
-      if (kc != 0) return kc < 0
-      if (colB == null) return false
-      val cc = Codecs.compareBytes(c, colB)
-      if (cc != 0) return cc < 0
-      if (subB == null) return false
-      Codecs.compareBytes(
-        if (s == null) Array.emptyByteArray else s, subB) < 0
-    }
-    val keys = idx.keys
-    val cols = idx.cols
-    val subs = idx.subs
-    def entrySub(i: Int): Array[Byte] = if (subs == null) null else subs(i)
-    if (!addrBelow(keys(0), cols(0), entrySub(0))) return 0L
-    var a = 0
-    var b = keys.length - 1
-    while (a < b) {
-      val mid = (a + b + 1) >>> 1
-      if (addrBelow(keys(mid), cols(mid), entrySub(mid))) a = mid else b = mid - 1
-    }
-    var n = idx.valSums(a)
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(a),
-      spanLength(ri, idx, a))
-    var scanning = true
-    while (scanning && it.hasNext) {
-      val cell = it.next()
-      if (addrBelow(cell.key, cell.col, cell.sub)) n = Math.addExact(n, valueLong(cell))
-      else scanning = false
-    }
-    n
-  }
-
-  /** Extremal decoded VALUE over the cell POSITIONS [loPos, hiPos) of one
-    * run, from the VMMX tail (caller guarantees idx.valMins != null):
-    * spans fully inside the interval contribute their tail min/max with
-    * no IO, only the (at most two) partial boundary spans scan cells —
-    * the value twin of the positional counts. None = empty interval. */
-  private def extremalValueBetween(reader: SegmentReader, ri: RunInfo,
-      idx: RunIndex, loPos: Long, hiPos: Long,
-      wantMin: Boolean): Option[Long] = {
-    if (loPos >= hiPos) return None
-    val n = idx.cellPos.length
-    var has = false
-    var best = 0L
-    def consider(v: Long): Unit =
-      if (!has || (if (wantMin) v < best else v > best)) { has = true; best = v }
-    // first span that can overlap: the last span starting at or below loPos
-    var s = {
-      var a = 0
-      var b = n - 1
-      while (a < b) {
-        val mid = (a + b + 1) >>> 1
-        if (idx.cellPos(mid) <= loPos) a = mid else b = mid - 1
+    def addTo(out: Summary, slot: Int, sign: Int): Unit = {
+      out.count(slot) = addSigned(out.count(slot), sign, count)
+      if (wantSum) out.sum(slot) = addSigned(out.sum(slot), sign, sum)
+      if (wantExt) {
+        if (min < out.min(slot)) out.min(slot) = min
+        if (max > out.max(slot)) out.max(slot) = max
       }
-      a
     }
-    while (s < n && idx.cellPos(s) < hiPos) {
-      val start = idx.cellPos(s).toLong
-      val end = (if (s == n - 1) ri.cellCount else idx.cellPos(s + 1)).toLong
-      if (end > loPos) {
-        if (start >= loPos && end <= hiPos)
-          consider(if (wantMin) idx.valMins(s) else idx.valMaxs(s))
-        else {
-          val it = reader.runIterator(ri.payloadOffset + idx.offsets(s),
-            (end - start).toInt)
-          var p = start
-          while (p < end && p < hiPos && it.hasNext) {
-            val c = it.next()
-            if (p >= loPos) consider(valueLong(c))
-            p += 1
-          }
-        }
-      }
-      s += 1
-    }
-    if (has) Some(best) else None
   }
 
-  /** Extremal decoded VALUE of one segment's cells with key in [lo, hi)
-    * (null = unbounded) — "the peak reading in the window" from the VMMX
-    * tails: runs fully inside answer from run-wide min/max with no IO,
-    * boundary runs resolve the interval POSITIONS with the usual boundary
-    * searches and take interior spans from the tail. Some(None) = no cell
-    * in range; None = a non-disjoint run lacks the tail (decline → fold).
-    *
-    * Values of OVERWRITTEN addresses would contribute here — the caller
-    * must have proven every cell visible (zero tombstones, disjoint runs,
-    * per-run distinctAddrs == cells), the same proofs the counts use. */
-  def extremalValueInRange(file: Path, lo: Array[Byte], hi: Array[Byte],
-      wantMin: Boolean): Option[Option[Long]] = {
-    val runs = meta(file).live
-    var has = false
-    var best = 0L
-    def consider(v: Long): Unit =
-      if (!has || (if (wantMin) v < best else v > best)) { has = true; best = v }
-    var reader: SegmentReader = null
-    try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          if (!s.hasValRange) return None
-          val fullLow = lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0
-          val fullHigh = hi == null || Codecs.compareBytes(s.lastKey, hi) < 0
-          if (fullLow && fullHigh) consider(if (wantMin) s.valMin else s.valMax)
-          else {
-            if (reader == null) reader = new SegmentReader(file)
-            val idx = reader.readIndex(ri)
-            val loPos = if (fullLow) 0L else cellsBelow(reader, ri, idx, lo)
-            val hiPos =
-              if (fullHigh) ri.cellCount.toLong else cellsBelow(reader, ri, idx, hi)
-            extremalValueBetween(reader, ri, idx, loPos, hiPos, wantMin)
-              .foreach(consider)
-          }
-        }
-        i += 1
-      }
-      Some(if (has) Some(best) else None)
-    } catch {
-      // a corrupt run whose VMMX tail coexists with a non-8-byte value
-      // declines like the SUM twin does, instead of crashing the query
-      case _: ArithmeticException => None
-    } finally if (reader != null) reader.close()
-  }
-
-  /** Per-point extremal VALUES over one segment — the value twin of
-    * [[countCellsAtPoints]], with the same col-window / col-point /
-    * sub-window narrowing (interval positions from the composite boundary
-    * searches, interior spans from the VMMX tail). Returned array aligns
-    * with `points`; a null element = that key has no cell in its
-    * interval. None = a consulted run lacks the tail (decline). Same
-    * visible-row proof obligations as [[extremalValueInRange]]. */
-  def extremalValuesAtPoints(file: Path, points: Seq[Array[Byte]],
-      colLo: Array[Byte] = null, colHi: Array[Byte] = null,
-      colPoints: Seq[Array[Byte]] = null,
-      subLo: Array[Byte] = null, subHi: Array[Byte] = null,
-      wantMin: Boolean = true): Option[Array[java.lang.Long]] = {
-    val out = new Array[java.lang.Long](points.length)
-    if (points.isEmpty) return Some(out)
-    val seg = meta(file)
-    val runs = seg.live
-    val blooms = seg.blooms
-    var reader: SegmentReader = null
-    def merge(p: Int, v: Option[Long]): Unit = v.foreach { x =>
-      if (out(p) == null || (if (wantMin) x < out(p) else x > out(p)))
-        out(p) = x
-    }
-    try {
-      var r = 0
-      while (r < runs.length) {
-        val RunMeta(ri, s) = runs(r)
-        var idx: RunIndex = null
-        var p = 0
-        while (p < points.length) {
-          val k = points(p)
-          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-            Codecs.compareBytes(k, s.lastKey) <= 0
-          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-            if (!s.hasValRange) return None
-            if (idx == null) {
-              if (reader == null) reader = new SegmentReader(file)
-              idx = reader.readIndex(ri)
-            }
-            if (colPoints != null) {
-              var ci = 0
-              while (ci < colPoints.length) {
-                val c = colPoints(ci)
-                val hiPos =
-                  if (subHi == null)
-                    cellsBelowComposite(reader, ri, idx, k, byteSucc(c))
-                  else cellsBelowComposite(reader, ri, idx, k, c, subHi)
-                val loPos =
-                  if (subLo == null) cellsBelowComposite(reader, ri, idx, k, c)
-                  else cellsBelowComposite(reader, ri, idx, k, c, subLo)
-                merge(p, extremalValueBetween(reader, ri, idx, loPos, hiPos, wantMin))
-                ci += 1
-              }
-            } else {
-              val hiPos =
-                if (colHi == null) cellsBelow(reader, ri, idx, byteSucc(k))
-                else cellsBelowComposite(reader, ri, idx, k, colHi)
-              val loPos =
-                if (colLo == null) cellsBelow(reader, ri, idx, k)
-                else cellsBelowComposite(reader, ri, idx, k, colLo)
-              merge(p, extremalValueBetween(reader, ri, idx, loPos, hiPos, wantMin))
-            }
-          }
-          p += 1
-        }
-        r += 1
-      }
-      Some(out)
-    } catch {
-      // same decline-not-crash contract as the range form above
-      case _: ArithmeticException => None
-    } finally if (reader != null) reader.close()
-  }
-
-  /** DISTINCT-KEY count of one segment within [lo, hi) (null = unbounded)
-    * — rows of a REGULAR store in a key range (one row per key, however
-    * many cells it carries): runs fully inside contribute their STAT
-    * distinctKeys with no IO, disjoint runs zero, and boundary runs count
-    * key STARTS below each boundary from the KPFX prefix tail plus one
-    * boundary-span scan. None when a boundary run lacks the tail or a
-    * counted run lacks STAT keys.
-    *
-    * Additivity across runs (and files) is the CALLER's obligation: every
-    * pair of runs in the store must be strictly key-disjoint
-    * ([[graft.sources.cassandralike.MetadataAggReader.exactRows]]' check),
-    * or a key split across runs would count twice. */
-  def countDistinctKeysInRange(file: Path, lo: Array[Byte], hi: Array[Byte])
-    : Option[Long] = {
-    val runs = meta(file).live
-    var total = 0L
-    var reader: SegmentReader = null
-    try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          if (s.distinctKeys < 0) return None
-          val fullLow = lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0
-          val fullHigh = hi == null || Codecs.compareBytes(s.lastKey, hi) < 0
-          if (fullLow && fullHigh) total += s.distinctKeys.toLong
-          else {
-            if (!s.hasKeyPrefix) return None
-            if (reader == null) reader = new SegmentReader(file)
-            val idx = reader.readIndex(ri)
-            total +=
-              (if (hi == null) s.distinctKeys.toLong
-               else dkBelow(reader, ri, idx, hi, s.distinctKeys)) -
-              (if (lo == null) 0L else dkBelow(reader, ri, idx, lo, s.distinctKeys))
-          }
-        }
-        i += 1
-      }
-      Some(total)
-    } finally if (reader != null) reader.close()
-  }
-
-  /** #distinct keys of one run with key < x — [[cellsBelow]]'s KPFX twin:
-    * keyPrefix(m) counts the keys that STARTED before the boundary span,
-    * keyStart(m) says whether the span's first cell starts a new key (a
-    * hot key can straddle the entry boundary; counting it again would
-    * double-count), and the span scan counts the key changes below x. */
-  private def dkBelow(reader: SegmentReader, ri: RunInfo, idx: RunIndex,
-      x: Array[Byte], statKeys: Int): Long = {
-    val keys = idx.keys
-    if (Codecs.compareBytes(keys(0), x) >= 0) return 0L
-    if (Codecs.compareBytes(idx.lastKey, x) < 0) return statKeys.toLong
-    val m = lastEntryBelow(keys, x)
-    var n = idx.keyPrefix(m).toLong
-    // prev != null suppresses counting the straddling key again: its start
-    // was before the span and is already inside keyPrefix(m)
-    var prev: Array[Byte] = if (idx.keyStart(m)) null else keys(m)
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(m),
-      spanLength(ri, idx, m))
-    var scanning = true
-    while (scanning && it.hasNext) {
-      val c = it.next()
-      if (Codecs.compareBytes(c.key, x) < 0) {
-        if (prev == null || !java.util.Arrays.equals(c.key, prev)) {
-          n += 1; prev = c.key
-        }
-      } else scanning = false
-    }
-    n
-  }
-
-  // ---- per-COLUMN positional aggregates (CVAL tails): the regular-
-  // mapping value family — SUM/MIN/MAX/COUNT of one NAMED column's cells
-  // under a key envelope, the per-column twins of countCellsInRange /
-  // sumCellsInRange / extremalValueInRange. Same caller obligations:
-  // every consulted cell must be a distinct visible row (zero tombstones,
-  // disjoint runs, per-run distinctAddrs == cells), and the planner must
-  // have proven the column TYPE a binary 8-byte-long marshal before
-  // trusting sums/extremes. ----
-
-  private def findColVal(cvs: Array[ColValIdx], col: Array[Byte]): ColValIdx = {
-    if (cvs == null) return null
-    var i = 0
-    while (i < cvs.length) {
-      if (java.util.Arrays.equals(cvs(i).col, col)) return cvs(i)
-      i += 1
-    }
-    null
-  }
-
-  private def findColValStat(cvs: Array[ColValStat], col: Array[Byte]): ColValStat = {
-    if (cvs == null) return null
-    var i = 0
-    while (i < cvs.length) {
-      if (java.util.Arrays.equals(cvs(i).col, col)) return cvs(i)
-      i += 1
-    }
-    null
-  }
-
-  /** #cells NAMED `cvi.col` of one run with key < x — [[cellsBelow]]'s
-    * CVAL twin: the per-entry prefix count plus a scan of the one
-    * boundary span filtering on the column name. */
-  private def colCountBelow(reader: SegmentReader, ri: RunInfo, idx: RunIndex,
-      cvi: ColValIdx, x: Array[Byte]): Long = {
-    val keys = idx.keys
-    if (Codecs.compareBytes(keys(0), x) >= 0) return 0L
-    if (Codecs.compareBytes(idx.lastKey, x) < 0) return cvi.totalCount.toLong
-    val m = lastEntryBelow(keys, x)
-    var n = cvi.prefixCounts(m).toLong
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(m),
-      spanLength(ri, idx, m))
-    var scanning = true
-    while (scanning && it.hasNext) {
-      val c = it.next()
-      if (Codecs.compareBytes(c.key, x) < 0) {
-        if (c.col != null && java.util.Arrays.equals(c.col, cvi.col)) n += 1
-      } else scanning = false
-    }
-    n
-  }
-
-  /** Value-sum of one run's `cvi.col` cells with key < x — [[sumBelow]]'s
-    * CVAL twin (caller guarantees cvi.sumsOk). */
-  private def colSumBelow(reader: SegmentReader, ri: RunInfo, idx: RunIndex,
-      cvi: ColValIdx, x: Array[Byte]): Long = {
-    val keys = idx.keys
-    if (Codecs.compareBytes(keys(0), x) >= 0) return 0L
-    if (Codecs.compareBytes(idx.lastKey, x) < 0) return cvi.totalSum
-    val m = lastEntryBelow(keys, x)
-    var s = cvi.prefixSums(m)
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(m),
-      spanLength(ri, idx, m))
-    var scanning = true
-    while (scanning && it.hasNext) {
-      val c = it.next()
-      if (Codecs.compareBytes(c.key, x) < 0) {
-        if (c.col != null && java.util.Arrays.equals(c.col, cvi.col))
-          s = Math.addExact(s, valueLong(c))
-      } else scanning = false
-    }
-    s
-  }
-
-  /** Extremal value of one run's `cvi.col` cells over the cell POSITIONS
-    * [loPos, hiPos) — [[extremalValueBetween]]'s CVAL twin (caller
-    * guarantees cvi.rangeOk): interior spans take their per-span extreme
-    * from the tail (empty-span sentinels skipped), boundary spans scan
-    * with the column-name filter. None = no such cell in the interval. */
-  private def colExtremalBetween(reader: SegmentReader, ri: RunInfo,
-      idx: RunIndex, cvi: ColValIdx, loPos: Long, hiPos: Long,
-      wantMin: Boolean): Option[Long] = {
-    if (loPos >= hiPos) return None
-    val n = idx.cellPos.length
-    var has = false
-    var best = 0L
-    def consider(v: Long): Unit =
-      if (!has || (if (wantMin) v < best else v > best)) { has = true; best = v }
-    var s = {
-      var a = 0
-      var b = n - 1
-      while (a < b) {
-        val mid = (a + b + 1) >>> 1
-        if (idx.cellPos(mid) <= loPos) a = mid else b = mid - 1
-      }
-      a
-    }
-    while (s < n && idx.cellPos(s) < hiPos) {
-      val start = idx.cellPos(s).toLong
-      val end = (if (s == n - 1) ri.cellCount else idx.cellPos(s + 1)).toLong
-      if (end > loPos) {
-        if (start >= loPos && end <= hiPos) {
-          val mn = cvi.spanMins(s)
-          val mx = cvi.spanMaxs(s)
-          if (mn != Long.MaxValue || mx != Long.MinValue)
-            consider(if (wantMin) mn else mx)
-        } else {
-          val it = reader.runIterator(ri.payloadOffset + idx.offsets(s),
-            (end - start).toInt)
-          var p = start
-          while (p < end && p < hiPos && it.hasNext) {
-            val c = it.next()
-            if (p >= loPos && c.col != null &&
-                java.util.Arrays.equals(c.col, cvi.col))
-              consider(valueLong(c))
-            p += 1
-          }
-        }
-      }
-      s += 1
-    }
-    if (has) Some(best) else None
-  }
-
-  /** Per-point COUNT (and optionally value-SUM) of cells NAMED `col` at
-    * the given key points, with optional tombstone NETTING — the BATCHED
-    * point twin of [[countColCellsInRange]]/[[sumColCellsInRange]]
-    * (round 13, indexed candidate aggregates). The per-envelope form
-    * re-reads a run's index tail for EVERY candidate
-    * (O(files × candidates × aggs) readIndex calls — measured 150×
-    * slower than the scan it was meant to beat at 1.5k candidates); here
-    * a consulted run parses its index ONCE for all points, each point is
-    * a per-column prefix diff at its two key boundaries, and only
-    * boundary spans are scanned. Runs whose key window or bloom rejects
-    * every point are skipped without IO.
-    *
-    * Returns (counts, sums) aligned with `points`; `sums` is null unless
-    * `wantSums`. Under a CLEAN store a point's count for a named cell is
-    * 0 or 1, so when it is 1 the point's sum IS the cell's value — the
-    * caller's per-candidate MIN/MAX source. None = a consulted run lacks
-    * the CVAL tail (or is unclassifiable under `netted`), the column's
-    * sums are invalid where sums were requested, or an accumulation
-    * overflows (decline → fold). */
-  def colAggAtPoints(file: Path, points: Seq[Array[Byte]], col: Array[Byte],
-      wantSums: Boolean, netted: Boolean): Option[(Array[Long], Array[Long])] = {
-    val counts = new Array[Long](points.length)
-    val sums = if (wantSums) new Array[Long](points.length) else null
-    if (points.isEmpty) return Some((counts, sums))
-    val seg = meta(file)
-    val runs = seg.live
-    val blooms = seg.blooms
-    var reader: SegmentReader = null
-    try {
-      var r = 0
-      while (r < runs.length) {
-        val RunMeta(ri, s) = runs(r)
-        def hits(k: Array[Byte]): Boolean =
-          Codecs.compareBytes(k, s.firstKey) >= 0 &&
-            Codecs.compareBytes(k, s.lastKey) <= 0 &&
-            (blooms(r) == null || blooms(r).mightContain(k))
-        if (points.exists(hits)) {
-          // consulted: the run must be classifiable and fully tailed
-          // even when it holds no `col` cells (its tombstones could
-          // still shadow them)
-          val sign =
-            if (!netted) 1
-            else nettedSign(s) match {
-              case Some(x) => x
-              case None => return None
-            }
-          if (s.colVals == null) return None
-          val cv = findColValStat(s.colVals, col)
-          if (cv != null) { // absent column = zero cells, exactly
-            if (wantSums && !cv.sumsOk) return None
-            if (reader == null) reader = new SegmentReader(file)
-            pointProbeIndexReads.incrementAndGet()
-            val idx = reader.readIndex(ri)
-            var p = 0
-            while (p < points.length) {
-              val k = points(p)
-              if (hits(k)) {
-                // fused per-point walk: ONE seek + one span-bounded
-                // scan yields count AND sum together (the prefix-diff
-                // form costs four separate seek+stream constructions
-                // per point — the dominant cost at ~50 candidates per
-                // bucket, measured 4× this)
-                val start =
-                  if (Codecs.compareBytes(idx.keys(0), k) >= 0) 0
-                  else lastEntryBelow(idx.keys, k)
-                val it = reader.runIterator(
-                  ri.payloadOffset + idx.offsets(start),
-                  ri.cellCount - idx.cellPos(start))
-                var cnt = 0L
-                var sm = 0L
-                var scanning = true
-                while (scanning && it.hasNext) {
-                  val c = it.next()
-                  val kc = Codecs.compareBytes(c.key, k)
-                  if (kc > 0) scanning = false
-                  else if (kc == 0 && c.col != null &&
-                      java.util.Arrays.equals(c.col, col)) {
-                    cnt += 1
-                    if (wantSums) sm = Math.addExact(sm, valueLong(c))
-                  }
+  /** Per slot, field `field` (0 key, 1 col, 2 sub) of the first (`wantMin`)
+    * or last cell address inside one of the slot's windows, reduced within
+    * the slot by that field's byte order; null = no such cell, or a null
+    * field. The one extremal seek: the first address at or above `lo` is
+    * in the span holding `lo`, else it is the next entry's own cell; the
+    * last address below `hi` is in the span holding `hi`. A run whose
+    * first (last) key lies wholly inside the window answers a key from
+    * [[RunStats]] with no index IO; runs are pruned as in [[summarize]].
+    * Needs neither run disjointness nor address dedup (an overwrite never
+    * removes an address) but the zero-tombstone proof, and per-entry col
+    * (and sub) bytes on every run for a col (sub) field or composite ends
+    * ([[RunStats.colEntries]], [[RunStats.subEntries]]). */
+  def extremalAddresses(files: Seq[Path], windows: Seq[Window], slots: Int,
+      field: Int, wantMin: Boolean): Array[Array[Byte]] = {
+    val out = new Array[Array[Byte]](slots)
+    val ws = windows.toIndexedSeq
+    if (ws.nonEmpty) files.foreach { file =>
+      val seg = meta(file)
+      var reader: SegmentReader = null
+      try {
+        var r = 0
+        while (r < seg.live.length) {
+          val RunMeta(ri, s) = seg.live(r)
+          var idx: RunIndex = null
+          ws.foreach { w =>
+            if (consults(seg, r, w)) {
+              require(field == 0 || (s.colEntries && (field == 1 || s.subEntries)),
+                "extremal col/sub seek needs per-entry col and sub bytes")
+              val edge = if (wantMin) s.firstKey else s.lastKey
+              val cand =
+                if (field == 0 && w.keyAbove(edge) && w.keyBelow(edge)) edge
+                else {
+                  if (reader == null) reader = new SegmentReader(file)
+                  if (idx == null) idx = readIndex(reader, ri, w)
+                  val c =
+                    if (wantMin) firstAtLeast(reader, ri, idx, w.lo)
+                    else lastBelow(reader, ri, idx, w.hi)
+                  if (c == null || !w.holds(c)) null
+                  else if (field == 0) c.key else if (field == 1) c.col else c.sub
                 }
-                counts(p) += sign * cnt
-                if (wantSums)
-                  sums(p) =
-                    if (sign > 0) Math.addExact(sums(p), sm)
-                    else Math.subtractExact(sums(p), sm)
-              }
-              p += 1
+              if (cand != null && (out(w.slot) == null ||
+                  (Codecs.compareBytes(cand, out(w.slot)) < 0) == wantMin))
+                out(w.slot) = cand
             }
           }
+          r += 1
         }
-        r += 1
-      }
-      Some((counts, sums))
-    } catch {
-      case _: ArithmeticException => None
-    } finally if (reader != null) reader.close()
+      } finally if (reader != null) reader.close()
+    }
+    out
+  }
+
+  /** The first cell of a run at or above `lo` (null = the run's first);
+    * null when none. */
+  private def firstAtLeast(reader: SegmentReader, ri: RunInfo, idx: RunIndex,
+      lo: Addr): Cell = {
+    def entry(e: Int) = Cell(idx.keys(e), if (idx.cols == null) null else idx.cols(e),
+      if (idx.subs == null) null else idx.subs(e), null, 0L, tombstone = false)
+    val a = if (lo == null) -1 else lastEntryBelow(idx, lo)
+    if (a < 0) return entry(0)
+    val it = spanCells(reader, ri, idx, a)
+    while (it.hasNext) {
+      val c = it.next()
+      if (cmpAddr(c.key, c.col, c.sub, lo) >= 0) return c
+    }
+    if (a + 1 < idx.keys.length) entry(a + 1) else null
+  }
+
+  /** The last cell of a run below `hi` (null = the run's last); null when
+    * none. */
+  private def lastBelow(reader: SegmentReader, ri: RunInfo, idx: RunIndex,
+      hi: Addr): Cell = {
+    val b = if (hi == null) idx.keys.length - 1 else lastEntryBelow(idx, hi)
+    if (b < 0) return null
+    var last: Cell = null
+    val it = spanCells(reader, ri, idx, b)
+    while (it.hasNext) {
+      val c = it.next()
+      if (hi != null && cmpAddr(c.key, c.col, c.sub, hi) >= 0) return last
+      last = c
+    }
+    last
   }
 
   /** Per-point VALUE BYTES of one named cell column — the round-16
     * primitive behind asymmetric-budget conjunctions: `type = rare AND
     * ts BETWEEN <wide>` resolves the needle's candidates through its
     * index, then VERIFIES the wide conjunct per candidate by reading the
-    * actual base cell value here (today's per-point passes yield
-    * counts/sums, not comparable values). Returns one entry per input
-    * point: the (key, col) cell's value bytes, or null when this file
-    * holds no such cell. CLEAN-ONLY by contract (the caller's proof
-    * established tombstone-free + all-addresses-distinct buckets): a
-    * tombstoned or DUPLICATE match — either would make "the value"
-    * ambiguous — declines with None instead of guessing. Cost mirrors
-    * [[colAggAtPoints]]: one seek + span-bounded scan per (hitting run,
-    * point). */
+    * actual base cell value here (the summaries yield counts and sums,
+    * not comparable values). Returns one entry per input point: the
+    * (key, col) cell's value bytes, or null when this file holds no such
+    * cell. CLEAN-ONLY by contract (the caller's proof established
+    * tombstone-free + all-addresses-distinct buckets): a tombstoned or
+    * DUPLICATE match — either would make "the value" ambiguous — declines
+    * with None instead of guessing. Runs are pruned as in [[summarize]];
+    * each (hitting run, point) costs one seek to the span holding the
+    * key and a scan to the key's last cell. */
   def colBytesAtPoints(file: Path, points: Seq[Array[Byte]],
       col: Array[Byte]): Option[Array[Array[Byte]]] = {
     val out = new Array[Array[Byte]](points.length)
-    if (points.isEmpty) return Some(out)
+    val ws = Window.points(points).toIndexedSeq
     val seg = meta(file)
-    val runs = seg.live
-    val blooms = seg.blooms
     var reader: SegmentReader = null
     try {
       var r = 0
-      while (r < runs.length) {
-        val RunMeta(ri, s) = runs(r)
-        def hits(k: Array[Byte]): Boolean =
-          Codecs.compareBytes(k, s.firstKey) >= 0 &&
-            Codecs.compareBytes(k, s.lastKey) <= 0 &&
-            (blooms(r) == null || blooms(r).mightContain(k))
-        if (points.exists(hits)) {
-          if (s.colVals == null) return None
-          val cv = findColValStat(s.colVals, col)
-          if (cv != null) { // absent column = no values here, exactly
-            if (reader == null) reader = new SegmentReader(file)
-            pointProbeIndexReads.incrementAndGet()
-            val idx = reader.readIndex(ri)
-            var p = 0
-            while (p < points.length) {
-              val k = points(p)
-              if (hits(k)) {
-                val start =
-                  if (Codecs.compareBytes(idx.keys(0), k) >= 0) 0
-                  else lastEntryBelow(idx.keys, k)
-                val it = reader.runIterator(
-                  ri.payloadOffset + idx.offsets(start),
-                  ri.cellCount - idx.cellPos(start))
-                var scanning = true
-                while (scanning && it.hasNext) {
-                  val c = it.next()
-                  val kc = Codecs.compareBytes(c.key, k)
-                  if (kc > 0) scanning = false
-                  else if (kc == 0 && c.col != null &&
-                      java.util.Arrays.equals(c.col, col)) {
-                    // the clean proof promises one live cell per
-                    // address; a tombstone or a second match breaks
-                    // the promise — decline, never guess
-                    if (c.tombstone || out(p) != null) return None
-                    out(p) = c.value
-                  }
+      while (r < seg.live.length) {
+        val RunMeta(ri, s) = seg.live(r)
+        var idx: RunIndex = null
+        ws.foreach { w =>
+          if (consults(seg, r, w)) {
+            if (s.colVals == null) return None
+            // absent column = no values here, exactly
+            if (findColValStat(s.colVals, col) != null) {
+              if (reader == null) reader = new SegmentReader(file)
+              if (idx == null) idx = readIndex(reader, ri, w)
+              val k = w.lo.key
+              val start = math.max(0, lastEntryBelow(idx, w.lo))
+              val it = reader.runIterator(ri.payloadOffset + idx.offsets(start),
+                ri.cellCount - idx.cellPos(start))
+              var scanning = true
+              while (scanning && it.hasNext) {
+                val c = it.next()
+                val kc = Codecs.compareBytes(c.key, k)
+                if (kc > 0) scanning = false
+                else if (kc == 0 && c.col != null && java.util.Arrays.equals(c.col, col)) {
+                  // the clean proof promises one live cell per address; a
+                  // tombstone or a second match breaks it — decline
+                  if (c.tombstone || out(w.slot) != null) return None
+                  out(w.slot) = c.value
                 }
               }
-              p += 1
             }
           }
         }
@@ -2289,163 +1845,45 @@ object CellStore {
     } finally if (reader != null) reader.close()
   }
 
-  /** COUNT of one segment's cells NAMED `col` with key in [lo, hi) (null =
-    * unbounded), from the CVAL prefix-count tails: runs fully inside the
-    * envelope contribute their per-column run total with no IO beyond the
-    * memoized stats, runs whose tail lists no such column contribute zero
-    * EXACTLY (tail presence proves complete coverage), and only boundary-
-    * crossing runs scan the one span holding each boundary. None when a
-    * non-disjoint run lacks the tail (decline → fold). On a REGULAR
-    * mapping this IS `COUNT(c)` in a key range — non-missing `c` cells. */
-  def countColCellsInRange(file: Path, col: Array[Byte],
-      lo: Array[Byte], hi: Array[Byte]): Option[Long] = {
-    val runs = meta(file).live
-    var total = 0L
-    var reader: SegmentReader = null
-    try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          if (s.colVals == null) return None
-          val cv = findColValStat(s.colVals, col)
-          if (cv != null) { // absent column = zero cells, exactly
-            val fullLow = lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0
-            val fullHigh = hi == null || Codecs.compareBytes(s.lastKey, hi) < 0
-            if (fullLow && fullHigh) total += cv.count
-            else {
-              if (reader == null) reader = new SegmentReader(file)
-              val idx = reader.readIndex(ri)
-              val cvi = findColVal(idx.colVals, col)
-              if (cvi == null) return None // tail/stat drift: decline
-              total +=
-                (if (hi == null) cvi.totalCount.toLong
-                 else colCountBelow(reader, ri, idx, cvi, hi)) -
-                (if (lo == null) 0L else colCountBelow(reader, ri, idx, cvi, lo))
-            }
-          }
-        }
-        i += 1
-      }
-      Some(total)
-    } finally if (reader != null) reader.close()
+  /** k ++ 0x00 — the immediate successor of `k` in unsigned-lexicographic
+    * byte order: the exclusive upper bound admitting exactly the byte
+    * strings equal to `k`. The ONE successor primitive of the package, so
+    * every half-open window ([[KeyWindows]], [[Window]]) shares the same
+    * boundary convention. */
+  private[cassandralike] def byteSucc(k: Array[Byte]): Array[Byte] = {
+    val out = java.util.Arrays.copyOf(k, k.length + 1)
+    out(k.length) = 0
+    out
   }
 
-  /** Value-sum of one segment's cells NAMED `col` with key in [lo, hi) —
-    * [[countColCellsInRange]]'s SUM twin, from the CVAL prefix-sum tails.
-    * None when a non-disjoint run lacks the tail, the column's sums are
-    * invalid there (non-8-byte value or write-time overflow), or any
-    * accumulation overflows Long (the fold then owns the query). */
-  def sumColCellsInRange(file: Path, col: Array[Byte],
-      lo: Array[Byte], hi: Array[Byte]): Option[Long] = {
-    val runs = meta(file).live
-    var total = 0L
-    var reader: SegmentReader = null
-    try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          if (s.colVals == null) return None
-          val cv = findColValStat(s.colVals, col)
-          if (cv != null) {
-            if (!cv.sumsOk) return None
-            val fullLow = lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0
-            val fullHigh = hi == null || Codecs.compareBytes(s.lastKey, hi) < 0
-            if (fullLow && fullHigh) total = Math.addExact(total, cv.sum)
-            else {
-              if (reader == null) reader = new SegmentReader(file)
-              val idx = reader.readIndex(ri)
-              val cvi = findColVal(idx.colVals, col)
-              if (cvi == null || !cvi.sumsOk) return None
-              val below =
-                if (hi == null) cvi.totalSum
-                else colSumBelow(reader, ri, idx, cvi, hi)
-              val above =
-                if (lo == null) 0L else colSumBelow(reader, ri, idx, cvi, lo)
-              total = Math.addExact(total, Math.subtractExact(below, above))
-            }
-          }
-        }
-        i += 1
-      }
-      Some(total)
-    } catch {
-      case _: ArithmeticException => None
-    } finally if (reader != null) reader.close()
-  }
+  /** The 8-byte big-endian long value of a cell under a VSUM- or
+    * CVAL-tailed run. Tail presence proves every value an 8-byte long;
+    * throws the same ArithmeticException the overflow paths use, so any
+    * impossible shape surfaces as a decline, never a wrong sum. */
+  private def valueLong(c: Cell): Long =
+    if (c.value != null && c.value.length == 8) ByteBuffer.wrap(c.value).getLong
+    else throw new ArithmeticException("non-8-byte value under a value tail")
 
-  /** Extremal value of one segment's cells NAMED `col` with key in
-    * [lo, hi) — "peak reading of THIS series in the window" — from the
-    * CVAL per-span extremes. Some(None) = no such cell in range; None = a
-    * non-disjoint run lacks the tail or its extremes are invalid for the
-    * column (decline → fold). */
-  def extremalColValueInRange(file: Path, col: Array[Byte],
-      lo: Array[Byte], hi: Array[Byte],
-      wantMin: Boolean): Option[Option[Long]] = {
-    val runs = meta(file).live
-    var has = false
-    var best = 0L
-    def consider(v: Long): Unit =
-      if (!has || (if (wantMin) v < best else v > best)) { has = true; best = v }
-    var reader: SegmentReader = null
-    try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          if (s.colVals == null) return None
-          val cv = findColValStat(s.colVals, col)
-          if (cv != null) {
-            if (!cv.rangeOk) return None
-            val fullLow = lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0
-            val fullHigh = hi == null || Codecs.compareBytes(s.lastKey, hi) < 0
-            if (fullLow && fullHigh) {
-              if (cv.count > 0) consider(if (wantMin) cv.min else cv.max)
-            } else {
-              if (reader == null) reader = new SegmentReader(file)
-              val idx = reader.readIndex(ri)
-              val cvi = findColVal(idx.colVals, col)
-              if (cvi == null || !cvi.rangeOk) return None
-              val loPos = if (fullLow) 0L else cellsBelow(reader, ri, idx, lo)
-              val hiPos =
-                if (fullHigh) ri.cellCount.toLong
-                else cellsBelow(reader, ri, idx, hi)
-              colExtremalBetween(reader, ri, idx, cvi, loPos, hiPos, wantMin)
-                .foreach(consider)
-            }
-          }
-        }
-        i += 1
-      }
-      Some(if (has) Some(best) else None)
-    } catch {
-      case _: ArithmeticException => None
-    } finally if (reader != null) reader.close()
-  }
+  private def findColVal(cvs: Array[ColValIdx], col: Array[Byte]): ColValIdx =
+    if (cvs == null) null
+    else cvs.find(cv => java.util.Arrays.equals(cv.col, col)).orNull
 
-  // ---- TOMBSTONE-NETTED positional counts: visible rows of a store with
-  // UNCOMPACTED certified delete epochs = (live cells) − (certified
-  // tombstones), per envelope, because the bucket-level proofs
-  // ([[BucketStat.nettedOk]]) make every live cell a distinct visible row
-  // and every certified tombstone the shadow of exactly one of them —
-  // and a tombstone shares its victim's ADDRESS, so both fall in the same
-  // key envelope and the subtraction is exact per range, per point and
-  // per column. SUM/MIN/MAX never net (a tombstone doesn't carry the
-  // shadowed value) — they keep declining until compaction. ----
+  private def findColValStat(cvs: Array[ColValStat], col: Array[Byte]): ColValStat =
+    if (cvs == null) null
+    else cvs.find(cv => java.util.Arrays.equals(cv.col, col)).orNull
 
-  /** +1 for a live run, −1 for a certified pure-tombstone delete epoch,
-    * None for anything else (mixed or uncertified tombstones → the
-    * caller must decline). */
+  /** Tombstone NETTING: visible rows of a store with uncompacted certified
+    * delete epochs = live cells − certified tombstones, per window, because
+    * the bucket-level proofs ([[BucketStat.nettedOk]]) make every live cell
+    * a distinct visible row and every certified tombstone the shadow of
+    * exactly one of them, at the same address — so both fall in the same
+    * window. A certified epoch carries its victims' values and column
+    * names, so sums and per-column counts net the same way; extremes never
+    * net (removing an extreme is not a subtraction).
+    *
+    * +1 for a live run, −1 for a certified pure-tombstone delete epoch,
+    * None for anything else (mixed or uncertified tombstones → the caller
+    * must decline). */
   private def nettedSign(s: RunStats): Option[Int] =
     if (s.tombstones == 0) Some(1)
     else if (s.tombstones == s.cells && s.certDeletes) Some(-1)
@@ -2456,739 +1894,15 @@ object CellStore {
   private def addSigned(acc: Long, sign: Int, x: Long): Long =
     if (sign >= 0) Math.addExact(acc, x) else Math.subtractExact(acc, x)
 
-  /** [[countCellsInRange]]'s tombstone-netting twin: live runs add,
-    * certified delete epochs subtract. None when an envelope-overlapping
-    * run is neither (decline → fold). Caller must have proven
-    * [[BucketStat.nettedOk]]. */
-  def nettedCountCellsInRange(file: Path, lo: Array[Byte],
-      hi: Array[Byte]): Option[Long] = {
-    val runs = meta(file).live
-    var total = 0L
-    var reader: SegmentReader = null
-    try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          val sign = nettedSign(s) match {
-            case Some(x) => x
-            case None => return None
-          }
-          val fullLow = lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0
-          val fullHigh = hi == null || Codecs.compareBytes(s.lastKey, hi) < 0
-          if (fullLow && fullHigh) total += sign * ri.cellCount.toLong
-          else {
-            if (reader == null) reader = new SegmentReader(file)
-            val idx = reader.readIndex(ri)
-            total += sign *
-              ((if (hi == null) ri.cellCount.toLong
-                else cellsBelow(reader, ri, idx, hi)) -
-               (if (lo == null) 0L else cellsBelow(reader, ri, idx, lo)))
-          }
-        }
-        i += 1
-      }
-      Some(total)
-    } finally if (reader != null) reader.close()
-  }
-
-  /** [[countCellsAtPoints]]' tombstone-netting twin (same col-window /
-    * col-point / sub-window narrowing). None when a consulted run is
-    * unclassifiable. */
-  def nettedCountCellsAtPoints(file: Path, points: Seq[Array[Byte]],
-      colLo: Array[Byte] = null, colHi: Array[Byte] = null,
-      colPoints: Seq[Array[Byte]] = null,
-      subLo: Array[Byte] = null, subHi: Array[Byte] = null)
-    : Option[Array[Long]] = {
-    val out = new Array[Long](points.length)
-    if (points.isEmpty) return Some(out)
-    val seg = meta(file)
-    val runs = seg.live
-    val blooms = seg.blooms
-    var reader: SegmentReader = null
-    try {
-      var r = 0
-      while (r < runs.length) {
-        val RunMeta(ri, s) = runs(r)
-        var sign = 0
-        var idx: RunIndex = null
-        var p = 0
-        while (p < points.length) {
-          val k = points(p)
-          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-            Codecs.compareBytes(k, s.lastKey) <= 0
-          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-            if (sign == 0) sign = nettedSign(s) match {
-              case Some(x) => x
-              case None => return None
-            }
-            if (idx == null) {
-              if (reader == null) reader = new SegmentReader(file)
-              pointProbeIndexReads.incrementAndGet()
-              idx = reader.readIndex(ri)
-            }
-            if (colPoints != null) {
-              var ci = 0
-              while (ci < colPoints.length) {
-                val c = colPoints(ci)
-                val below =
-                  if (subHi == null)
-                    cellsBelowComposite(reader, ri, idx, k, byteSucc(c))
-                  else cellsBelowComposite(reader, ri, idx, k, c, subHi)
-                val above =
-                  if (subLo == null) cellsBelowComposite(reader, ri, idx, k, c)
-                  else cellsBelowComposite(reader, ri, idx, k, c, subLo)
-                out(p) += sign * (below - above)
-                ci += 1
-              }
-            } else {
-              val below =
-                if (colHi == null) cellsBelow(reader, ri, idx, byteSucc(k))
-                else cellsBelowComposite(reader, ri, idx, k, colHi)
-              val above =
-                if (colLo == null) cellsBelow(reader, ri, idx, k)
-                else cellsBelowComposite(reader, ri, idx, k, colLo)
-              out(p) += sign * (below - above)
-            }
-          }
-          p += 1
-        }
-        r += 1
-      }
-      Some(out)
-    } finally if (reader != null) reader.close()
-  }
-
-  /** [[sumCellsInRange]]'s tombstone-netting twin: certified delete
-    * epochs carry their VICTIMS' value bytes (deleteWhere records the
-    * just-read visible cell), so their VSUM tails hold the SHADOWED sums
-    * and `visible sum = live sums − certified sums` per envelope. None
-    * when an overlapping run is unclassifiable, lacks the VSUM tail
-    * (e.g. non-long victims), or any accumulation overflows. */
-  def nettedSumCellsInRange(file: Path, lo: Array[Byte],
-      hi: Array[Byte]): Option[Long] = {
-    val runs = meta(file).live
-    var total = 0L
-    var reader: SegmentReader = null
-    try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          val sign = nettedSign(s) match {
-            case Some(x) => x
-            case None => return None
-          }
-          if (!s.hasValSums) return None
-          val fullLow = lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0
-          val fullHigh = hi == null || Codecs.compareBytes(s.lastKey, hi) < 0
-          if (fullLow && fullHigh)
-            total = addSigned(total, sign, s.valTotal)
-          else {
-            if (reader == null) reader = new SegmentReader(file)
-            val idx = reader.readIndex(ri)
-            val below =
-              if (hi == null) idx.valTotal else sumBelow(reader, ri, idx, hi)
-            val above =
-              if (lo == null) 0L else sumBelow(reader, ri, idx, lo)
-            total = addSigned(total, sign,
-              Math.subtractExact(below, above))
-          }
-        }
-        i += 1
-      }
-      Some(total)
-    } catch {
-      case _: ArithmeticException => None
-    } finally if (reader != null) reader.close()
-  }
-
-  /** [[sumCellsAtPoints]]' tombstone-netting twin (same col-window /
-    * col-point / sub-window narrowing). */
-  def nettedSumCellsAtPoints(file: Path, points: Seq[Array[Byte]],
-      colLo: Array[Byte] = null, colHi: Array[Byte] = null,
-      colPoints: Seq[Array[Byte]] = null,
-      subLo: Array[Byte] = null, subHi: Array[Byte] = null)
-    : Option[Array[Long]] = {
-    val out = new Array[Long](points.length)
-    if (points.isEmpty) return Some(out)
-    val seg = meta(file)
-    val runs = seg.live
-    val blooms = seg.blooms
-    var reader: SegmentReader = null
-    try {
-      var r = 0
-      while (r < runs.length) {
-        val RunMeta(ri, s) = runs(r)
-        var sign = 0
-        var idx: RunIndex = null
-        var p = 0
-        while (p < points.length) {
-          val k = points(p)
-          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-            Codecs.compareBytes(k, s.lastKey) <= 0
-          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-            if (sign == 0) sign = nettedSign(s) match {
-              case Some(x) => x
-              case None => return None
-            }
-            if (!s.hasValSums) return None
-            if (idx == null) {
-              if (reader == null) reader = new SegmentReader(file)
-              idx = reader.readIndex(ri)
-            }
-            if (colPoints != null) {
-              var ci = 0
-              while (ci < colPoints.length) {
-                val c = colPoints(ci)
-                val below =
-                  if (subHi == null)
-                    sumBelowComposite(reader, ri, idx, k, byteSucc(c))
-                  else sumBelowComposite(reader, ri, idx, k, c, subHi)
-                val above =
-                  if (subLo == null) sumBelowComposite(reader, ri, idx, k, c)
-                  else sumBelowComposite(reader, ri, idx, k, c, subLo)
-                out(p) = addSigned(out(p), sign,
-                  Math.subtractExact(below, above))
-                ci += 1
-              }
-            } else {
-              val below =
-                if (colHi == null) sumBelow(reader, ri, idx, byteSucc(k))
-                else sumBelowComposite(reader, ri, idx, k, colHi)
-              val above =
-                if (colLo == null) sumBelow(reader, ri, idx, k)
-                else sumBelowComposite(reader, ri, idx, k, colLo)
-              out(p) = addSigned(out(p), sign,
-                Math.subtractExact(below, above))
-            }
-          }
-          p += 1
-        }
-        r += 1
-      }
-      Some(out)
-    } catch {
-      case _: ArithmeticException => None
-    } finally if (reader != null) reader.close()
-  }
-
-  /** [[sumColCellsInRange]]'s tombstone-netting twin: a certified
-    * epoch's CVAL tails sum its victims' values per column name. */
-  def nettedSumColCellsInRange(file: Path, col: Array[Byte],
-      lo: Array[Byte], hi: Array[Byte]): Option[Long] = {
-    val runs = meta(file).live
-    var total = 0L
-    var reader: SegmentReader = null
-    try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          val sign = nettedSign(s) match {
-            case Some(x) => x
-            case None => return None
-          }
-          if (s.colVals == null) return None
-          val cv = findColValStat(s.colVals, col)
-          if (cv != null) {
-            if (!cv.sumsOk) return None
-            val fullLow = lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0
-            val fullHigh = hi == null || Codecs.compareBytes(s.lastKey, hi) < 0
-            if (fullLow && fullHigh)
-              total = addSigned(total, sign, cv.sum)
-            else {
-              if (reader == null) reader = new SegmentReader(file)
-              val idx = reader.readIndex(ri)
-              val cvi = findColVal(idx.colVals, col)
-              if (cvi == null || !cvi.sumsOk) return None
-              val below =
-                if (hi == null) cvi.totalSum
-                else colSumBelow(reader, ri, idx, cvi, hi)
-              val above =
-                if (lo == null) 0L else colSumBelow(reader, ri, idx, cvi, lo)
-              total = addSigned(total, sign,
-                Math.subtractExact(below, above))
-            }
-          }
-        }
-        i += 1
-      }
-      Some(total)
-    } catch {
-      case _: ArithmeticException => None
-    } finally if (reader != null) reader.close()
-  }
-
-  /** [[countDistinctKeysInRange]]'s tombstone-netting twin: a certified
-    * delete epoch tombstones WHOLE keys (writeRun's contract), so its
-    * distinct keys in the envelope subtract exactly the rows it removed
-    * from the live side. */
-  def nettedCountDistinctKeysInRange(file: Path, lo: Array[Byte],
-      hi: Array[Byte]): Option[Long] = {
-    val runs = meta(file).live
-    var total = 0L
-    var reader: SegmentReader = null
-    try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          val sign = nettedSign(s) match {
-            case Some(x) => x
-            case None => return None
-          }
-          if (s.distinctKeys < 0) return None
-          val fullLow = lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0
-          val fullHigh = hi == null || Codecs.compareBytes(s.lastKey, hi) < 0
-          if (fullLow && fullHigh) total += sign * s.distinctKeys.toLong
-          else {
-            if (!s.hasKeyPrefix) return None
-            if (reader == null) reader = new SegmentReader(file)
-            val idx = reader.readIndex(ri)
-            total += sign *
-              ((if (hi == null) s.distinctKeys.toLong
-                else dkBelow(reader, ri, idx, hi, s.distinctKeys)) -
-               (if (lo == null) 0L else dkBelow(reader, ri, idx, lo, s.distinctKeys)))
-          }
-        }
-        i += 1
-      }
-      Some(total)
-    } finally if (reader != null) reader.close()
-  }
-
-  /** [[countColCellsInRange]]'s tombstone-netting twin: a certified
-    * epoch's tombstones carry their victims' column names, so per-column
-    * counts net the same way (a victim cell and its tombstone land in the
-    * same column bucket). */
-  def nettedCountColCellsInRange(file: Path, col: Array[Byte],
-      lo: Array[Byte], hi: Array[Byte]): Option[Long] = {
-    val runs = meta(file).live
-    var total = 0L
-    var reader: SegmentReader = null
-    try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          val sign = nettedSign(s) match {
-            case Some(x) => x
-            case None => return None
-          }
-          if (s.colVals == null) return None
-          val cv = findColValStat(s.colVals, col)
-          if (cv != null) {
-            val fullLow = lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0
-            val fullHigh = hi == null || Codecs.compareBytes(s.lastKey, hi) < 0
-            if (fullLow && fullHigh) total += sign * cv.count
-            else {
-              if (reader == null) reader = new SegmentReader(file)
-              val idx = reader.readIndex(ri)
-              val cvi = findColVal(idx.colVals, col)
-              if (cvi == null) return None
-              total += sign *
-                ((if (hi == null) cvi.totalCount.toLong
-                  else colCountBelow(reader, ri, idx, cvi, hi)) -
-                 (if (lo == null) 0L else colCountBelow(reader, ri, idx, cvi, lo)))
-            }
-          }
-        }
-        i += 1
-      }
-      Some(total)
-    } finally if (reader != null) reader.close()
-  }
-
-  /** Per-point extremal CLUSTERING-COLUMN bytes within the half-open col
-    * window [colLo, colHi) (null = unbounded) over one segment — the
-    * per-group MIN/MAX(col) of the grouped metadata aggregates
-    * ("first/last reading of each row in the window"). Returned array
-    * aligns with `points`; a null element = that row has no cell in the
-    * window in this segment. A run whose key window or bloom rejects
-    * every point is skipped without IO; a consulted run parses its index
-    * ONCE for all points, binary-searches the COMPOSITE (key, col)
-    * entries per point and scans only the span holding each boundary.
-    * Caller must have proven every run's per-entry col bytes
-    * ([[RunStats.colEntries]]); needs neither run disjointness nor
-    * address dedup (an overwrite never removes an address), but the usual
-    * zero-tombstone proof (a tombstoned cell would surface as extremal). */
-  def extremalColsAtPoints(file: Path, points: Seq[Array[Byte]],
-      colLo: Array[Byte], colHi: Array[Byte],
-      wantMin: Boolean): Array[Array[Byte]] = {
-    val out = new Array[Array[Byte]](points.length)
-    if (points.isEmpty) return out
-    val seg = meta(file)
-    val runs = seg.live
-    val blooms = seg.blooms
-    var reader: SegmentReader = null
-    try {
-      var r = 0
-      while (r < runs.length) {
-        val RunMeta(ri, s) = runs(r)
-        var idx: RunIndex = null
-        var p = 0
-        while (p < points.length) {
-          val k = points(p)
-          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-            Codecs.compareBytes(k, s.lastKey) <= 0
-          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-            require(s.colEntries, "extremalColsAtPoints needs per-entry col bytes")
-            if (idx == null) {
-              if (reader == null) reader = new SegmentReader(file)
-              idx = reader.readIndex(ri)
-            }
-            val cand =
-              if (wantMin) firstColAtLeast(reader, ri, idx, k, colLo)
-              else lastColBelow(reader, ri, idx, k, colHi)
-            val ok = cand != null &&
-              (colLo == null || Codecs.compareBytes(cand, colLo) >= 0) &&
-              (colHi == null || Codecs.compareBytes(cand, colHi) < 0)
-            if (ok && (out(p) == null ||
-                (Codecs.compareBytes(cand, out(p)) < 0) == wantMin))
-              out(p) = cand
-          }
-          p += 1
-        }
-        r += 1
-      }
-    } finally if (reader != null) reader.close()
-    out
-  }
-
-  /** Per-point extremal SUB-COLUMN bytes of the pinned (key, col) groups
-    * within the half-open sub window [subLo, subHi) (null = unbounded)
-    * over one segment — the per-group MIN/MAX(sub) of the grouped super-
-    * mapping aggregates ("first/last sub-entry of each row's pinned
-    * column"). For each point key and each pinned col, cells of the
-    * (key, col) group are SUB-sorted within a run, so the extremal sub is
-    * the first/last cell of the group's composite interval — one boundary
-    * binary search + at most one span scan per (point, col) per run.
-    * Returned array aligns with `points` (reduced across the pinned
-    * cols); null element = no cell in any pinned group in this segment.
-    * Caller must have proven per-entry col AND sub bytes
-    * ([[RunStats.colEntries]]/[[RunStats.subEntries]]) and the usual
-    * zero-tombstone proof; like the col seeks, needs neither run
-    * disjointness nor address dedup (an overwrite never removes an
-    * address). */
-  def extremalSubsAtPoints(file: Path, points: Seq[Array[Byte]],
-      colPoints: Seq[Array[Byte]],
-      subLo: Array[Byte], subHi: Array[Byte],
-      wantMin: Boolean): Array[Array[Byte]] = {
-    val out = new Array[Array[Byte]](points.length)
-    if (points.isEmpty || colPoints == null || colPoints.isEmpty) return out
-    val seg = meta(file)
-    val runs = seg.live
-    val blooms = seg.blooms
-    var reader: SegmentReader = null
-    def better(cand: Array[Byte], best: Array[Byte]): Boolean =
-      best == null || (Codecs.compareBytes(cand, best) < 0) == wantMin
-    try {
-      var r = 0
-      while (r < runs.length) {
-        val RunMeta(ri, s) = runs(r)
-        var idx: RunIndex = null
-        var p = 0
-        while (p < points.length) {
-          val k = points(p)
-          val inWindow = Codecs.compareBytes(k, s.firstKey) >= 0 &&
-            Codecs.compareBytes(k, s.lastKey) <= 0
-          if (inWindow && (blooms(r) == null || blooms(r).mightContain(k))) {
-            require(s.colEntries && s.subEntries,
-              "extremalSubsAtPoints needs per-entry col and sub bytes")
-            if (idx == null) {
-              if (reader == null) reader = new SegmentReader(file)
-              idx = reader.readIndex(ri)
-            }
-            var ci = 0
-            while (ci < colPoints.length) {
-              val c = colPoints(ci)
-              val cand =
-                if (wantMin) firstSubAtLeast(reader, ri, idx, k, c, subLo)
-                else lastSubBelow(reader, ri, idx, k, c, subHi)
-              val ok = cand != null &&
-                (subLo == null || Codecs.compareBytes(cand, subLo) >= 0) &&
-                (subHi == null || Codecs.compareBytes(cand, subHi) < 0)
-              if (ok && better(cand, out(p))) out(p) = cand
-              ci += 1
-            }
-          }
-          p += 1
-        }
-        r += 1
-      }
-    } finally if (reader != null) reader.close()
-    out
-  }
-
-  /** addr < (keyB, colB[, subB]) at full composite level — the boundary
-    * predicate of the extremal-sub seeks (null subB = (key, col) level;
-    * null cell sub compares as EMPTY bytes, same as [[addressOrdering]]). */
-  private def addrBelowKCS(k: Array[Byte], c: Array[Byte], s: Array[Byte],
-      keyB: Array[Byte], colB: Array[Byte], subB: Array[Byte]): Boolean = {
-    val kc = Codecs.compareBytes(k, keyB)
-    if (kc != 0) return kc < 0
-    val cc = Codecs.compareBytes(
-      if (c == null) Array.emptyByteArray else c, colB)
-    if (cc != 0) return cc < 0
-    if (subB == null) return false
-    Codecs.compareBytes(if (s == null) Array.emptyByteArray else s, subB) < 0
-  }
-
-  /** Sub bytes of the FIRST cell of one run with address >= (k, c, subLo)
-    * (null subLo = (k, c) itself), when that cell belongs to group
-    * (k, c) — else null. ≤ one span scan + 1 cell. */
-  private def firstSubAtLeast(reader: SegmentReader, ri: RunInfo,
-      idx: RunIndex, k: Array[Byte], c: Array[Byte],
-      subLo: Array[Byte]): Array[Byte] = {
-    val keys = idx.keys
-    val cols = idx.cols
-    val subs = idx.subs
-    def entrySub(i: Int): Array[Byte] = if (subs == null) null else subs(i)
-    val start =
-      if (!addrBelowKCS(keys(0), cols(0), entrySub(0), k, c, subLo)) 0
-      else {
-        var a = 0
-        var b = keys.length - 1
-        while (a < b) {
-          val mid = (a + b + 1) >>> 1
-          if (addrBelowKCS(keys(mid), cols(mid), entrySub(mid), k, c, subLo))
-            a = mid
-          else b = mid - 1
-        }
-        a
-      }
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(start),
-      ri.cellCount - idx.cellPos(start))
-    while (it.hasNext) {
-      val cell = it.next()
-      if (!addrBelowKCS(cell.key, cell.col, cell.sub, k, c, subLo))
-        return if (java.util.Arrays.equals(cell.key, k) &&
-          cell.col != null && java.util.Arrays.equals(cell.col, c))
-          cell.sub
-        else null
-    }
-    null
-  }
-
-  /** Sub bytes of the LAST cell of one run with address < (k, c, subHi)
-    * (null subHi = the last cell of group (k, c)), when that cell belongs
-    * to group (k, c) — else null. */
-  private def lastSubBelow(reader: SegmentReader, ri: RunInfo,
-      idx: RunIndex, k: Array[Byte], c: Array[Byte],
-      subHi: Array[Byte]): Array[Byte] = {
-    // null subHi: bound at (k, succ(c)) — the first address past the group
-    val (colB, subB) =
-      if (subHi != null) (c, subHi) else (byteSucc(c), null)
-    val keys = idx.keys
-    val cols = idx.cols
-    val subs = idx.subs
-    def entrySub(i: Int): Array[Byte] = if (subs == null) null else subs(i)
-    if (!addrBelowKCS(keys(0), cols(0), entrySub(0), k, colB, subB)) return null
-    var a = 0
-    var b = keys.length - 1
-    while (a < b) {
-      val mid = (a + b + 1) >>> 1
-      if (addrBelowKCS(keys(mid), cols(mid), entrySub(mid), k, colB, subB))
-        a = mid
-      else b = mid - 1
-    }
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(a),
-      spanLength(ri, idx, a))
-    var lastKey: Array[Byte] = null
-    var lastCol: Array[Byte] = null
-    var lastSub: Array[Byte] = null
-    var scanning = true
-    while (scanning && it.hasNext) {
-      val cell = it.next()
-      if (addrBelowKCS(cell.key, cell.col, cell.sub, k, colB, subB)) {
-        lastKey = cell.key; lastCol = cell.col; lastSub = cell.sub
-      } else scanning = false
-    }
-    if (lastKey != null && java.util.Arrays.equals(lastKey, k) &&
-      lastCol != null && java.util.Arrays.equals(lastCol, c)) lastSub
-    else null
-  }
-
-  /** addr < (keyB[, colB]) at (key, col) level — the shared boundary
-    * predicate of the extremal-col seeks (null colB = key level only). */
-  private def addrBelowKC(k: Array[Byte], c: Array[Byte],
-      keyB: Array[Byte], colB: Array[Byte]): Boolean = {
-    val kc = Codecs.compareBytes(k, keyB)
-    if (kc != 0) return kc < 0
-    if (colB == null) return false
-    Codecs.compareBytes(if (c == null) Array.emptyByteArray else c, colB) < 0
-  }
-
-  /** Col bytes of the FIRST cell of one run with address >= (k, colLo)
-    * (null colLo = (k) itself), when that cell belongs to row k — else
-    * null (row k has no cell at/after the boundary in this run). The
-    * first such address lies in the boundary span or is the next entry's
-    * own cell, so the scan is ≤ one span + 1. */
-  private def firstColAtLeast(reader: SegmentReader, ri: RunInfo,
-      idx: RunIndex, k: Array[Byte], colLo: Array[Byte]): Array[Byte] = {
-    val keys = idx.keys
-    val cols = idx.cols
-    val start =
-      if (!addrBelowKC(keys(0), cols(0), k, colLo)) 0
-      else {
-        var a = 0
-        var b = keys.length - 1
-        while (a < b) {
-          val mid = (a + b + 1) >>> 1
-          if (addrBelowKC(keys(mid), cols(mid), k, colLo)) a = mid else b = mid - 1
-        }
-        a
-      }
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(start),
-      ri.cellCount - idx.cellPos(start))
-    while (it.hasNext) {
-      val c = it.next()
-      if (!addrBelowKC(c.key, c.col, k, colLo))
-        return if (java.util.Arrays.equals(c.key, k)) c.col else null
-    }
-    null
-  }
-
-  /** Col bytes of the LAST cell of one run with address < (k, colHi)
-    * (null colHi = < succ(k), i.e. the last cell of row k), when that
-    * cell belongs to row k — else null. The last such address lies in the
-    * span holding the boundary (every later span starts at an entry >=
-    * the boundary). */
-  private def lastColBelow(reader: SegmentReader, ri: RunInfo,
-      idx: RunIndex, k: Array[Byte], colHi: Array[Byte]): Array[Byte] = {
-    val (keyB, colB) =
-      if (colHi != null) (k, colHi) else (byteSucc(k), null)
-    val keys = idx.keys
-    val cols = idx.cols
-    if (!addrBelowKC(keys(0), cols(0), keyB, colB)) return null
-    var a = 0
-    var b = keys.length - 1
-    while (a < b) {
-      val mid = (a + b + 1) >>> 1
-      if (addrBelowKC(keys(mid), cols(mid), keyB, colB)) a = mid else b = mid - 1
-    }
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(a),
-      spanLength(ri, idx, a))
-    var lastKey: Array[Byte] = null
-    var lastCol: Array[Byte] = null
-    var scanning = true
-    while (scanning && it.hasNext) {
-      val c = it.next()
-      if (addrBelowKC(c.key, c.col, keyB, colB)) { lastKey = c.key; lastCol = c.col }
-      else scanning = false
-    }
-    if (lastKey != null && java.util.Arrays.equals(lastKey, k)) lastCol else null
-  }
-
-  /** Extremal key BYTES of one segment within [lo, hi) (null = unbounded),
-    * or None when the segment holds no cell in the range. wantMin = the
-    * smallest key >= lo; else the largest key < hi. A run whose window
-    * sits inside the binding bound answers from the memoized stats with
-    * no IO (firstKey/lastKey IS the answer); only a run whose window
-    * straddles the bound scans the ONE span containing it. */
-  def extremalKeyInRange(file: Path, lo: Array[Byte], hi: Array[Byte],
-      wantMin: Boolean): Option[Array[Byte]] = {
-    val runs = meta(file).live
-    var best: Array[Byte] = null
-    var reader: SegmentReader = null
-    try {
-      var i = 0
-      while (i < runs.length) {
-        val RunMeta(ri, s) = runs(i)
-        val disjoint =
-          (lo != null && Codecs.compareBytes(s.lastKey, lo) < 0) ||
-            (hi != null && Codecs.compareBytes(s.firstKey, hi) >= 0)
-        if (!disjoint) {
-          val cand: Array[Byte] =
-            if (wantMin) {
-              if (lo == null || Codecs.compareBytes(lo, s.firstKey) <= 0) s.firstKey
-              else {
-                // !disjoint gives s.lastKey >= lo: a first-at-least exists
-                if (reader == null) reader = new SegmentReader(file)
-                firstKeyAtLeast(reader, ri, reader.readIndex(ri), lo)
-              }
-            } else {
-              if (hi == null || Codecs.compareBytes(s.lastKey, hi) < 0) s.lastKey
-              else {
-                // !disjoint gives s.firstKey < hi: a last-below exists
-                if (reader == null) reader = new SegmentReader(file)
-                lastKeyBelow(reader, ri, reader.readIndex(ri), hi)
-              }
-            }
-          // the one-sided seek can still land outside the OTHER bound —
-          // then this run has no cell in the range at all
-          val inRange = cand != null &&
-            (lo == null || Codecs.compareBytes(cand, lo) >= 0) &&
-            (hi == null || Codecs.compareBytes(cand, hi) < 0)
-          if (inRange &&
-              (best == null || (Codecs.compareBytes(cand, best) < 0) == wantMin))
-            best = cand
-        }
-        i += 1
-      }
-    } finally if (reader != null) reader.close()
-    Option(best)
-  }
-
-  /** Smallest key >= lo of one run (caller guarantees lastKey >= lo and
-    * firstKey < lo): scan the span holding the boundary; if it exhausts
-    * below lo, the NEXT entry's key is the answer (it is >= lo by the
-    * entry search, and it IS the first cell of its span). */
-  private def firstKeyAtLeast(reader: SegmentReader, ri: RunInfo,
-      idx: RunIndex, lo: Array[Byte]): Array[Byte] = {
-    val m = lastEntryBelow(idx.keys, lo)
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(m),
-      spanLength(ri, idx, m))
-    while (it.hasNext) {
-      val k = it.next().key
-      if (Codecs.compareBytes(k, lo) >= 0) return k
-    }
-    if (m + 1 < idx.keys.length) idx.keys(m + 1) else null // null: unreachable
-  }
-
-  /** Largest key < hi of one run (caller guarantees firstKey < hi and
-    * lastKey >= hi): cells past the boundary span start at an entry
-    * key >= hi, so the answer is inside the ONE span holding the
-    * boundary — scan it tracking the last key below. */
-  private def lastKeyBelow(reader: SegmentReader, ri: RunInfo,
-      idx: RunIndex, hi: Array[Byte]): Array[Byte] = {
-    val m = lastEntryBelow(idx.keys, hi)
-    val it = reader.runIterator(ri.payloadOffset + idx.offsets(m),
-      spanLength(ri, idx, m))
-    var last: Array[Byte] = null
-    var scanning = true
-    while (scanning && it.hasNext) {
-      val k = it.next().key
-      if (Codecs.compareBytes(k, hi) < 0) last = k else scanning = false
-    }
-    last
-  }
-
   /** Diagnostic: number of [[SegmentMeta.stats]] fills that parsed the
     * index tails of a file. The incremental-sidecar spec pins commit-time
     * refreshes to O(new files) by watching this not move for carried
     * files. */
   val runTailReads = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Diagnostic: run-index parses performed by the per-point probe
-    * functions (countCellsAtPoints / colAggAtPoints /
-    * nettedCountCellsAtPoints / sumCellsAtPoints). The batched grouped
+  /** Diagnostic: run-index parses made for point windows — by
+    * [[summarize]], [[extremalAddresses]] and [[colBytesAtPoints]], all
+    * through one counting `readIndex`. The batched grouped
     * indexed-aggregate path pins "G groups cost the parses of one" by
     * watching this stay flat as the IN widens (the per-group re-parse it
     * replaced is SURVEY §5's round-14 "Known residual"; the batched pass
@@ -3943,10 +2657,11 @@ object CellStore {
       val mustRead: Int => Boolean =
         if (!seekable) _ => true else colSpanFilter(idx, cols, subs)
       val starts = spans.map { case (lo, _) =>
-        if (lo == null) 0 else math.max(0, entriesBelow(idx.keys, lo) - 1)
+        if (lo == null) 0 else math.max(0, lastEntryBelow(idx, Addr(lo)))
       }
       val windows = spans.indices.iterator.map(j => (starts(j),
-        if (spans(j)._2 == null) idx.keys.length else entriesBelow(idx.keys, spans(j)._2)))
+        if (spans(j)._2 == null) idx.keys.length
+        else lastEntryBelow(idx, Addr(spans(j)._2)) + 1))
       val groups = spanGroups(ri, idx, windows, mustRead, counters)
       var j = 0
       groups.iterator.flatMap { g =>

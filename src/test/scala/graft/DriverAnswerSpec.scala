@@ -3,7 +3,7 @@ package graft
 import graft.sources.cassandralike._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{LocalTableScanExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
@@ -137,6 +137,40 @@ class DriverAnswerSpec extends SparkSpec {
     assert(jobs == 0, s"complete COUNT(*) started $jobs jobs:\n${q.queryExecution.executedPlan}")
     assert(got.toSeq == Seq(Row(300L)))
     assert(nodes(q.queryExecution.executedPlan).exists(_.isInstanceOf[LocalTableScanExec]))
+  }
+
+  test("a complete COUNT(*) under a computing projection starts no job") {
+    val sp = spark; import sp.implicits._
+    val store = Seed.table(spark, sfDir, "spec_driver_project",
+      (1L to 300L).map(i => (i, s"v$i")).toDF("k", "v").repartition(1),
+      props = Map(Options.KeyEncoding -> "ordered", Options.Buckets -> "4"))
+    val n = Seed.read(spark, store).agg(count(lit(1)).as("n"))
+    Seq(("CAST AS INT", n.select(col("n").cast("int").as("n")), Row(300)),
+      ("+ 1", n.select((col("n") + 1).as("n")), Row(301L))).foreach {
+      case (what, q, want) =>
+        assert(PlannedScan.of(q).answered, what)
+        var got: Array[Row] = null
+        val jobs = jobsIn { got = q.collect() }
+        assert(jobs == 0, s"$what started $jobs jobs:\n${q.queryExecution.executedPlan}")
+        assert(got.toSeq == Seq(want), what)
+        assert(!nodes(q.queryExecution.executedPlan).exists(_.isInstanceOf[ProjectExec]),
+          s"$what:\n${q.queryExecution.executedPlan}")
+    }
+    // a nondeterministic projection is not folded into the local rows
+    val r = n.select(col("n"), rand(7).as("r"))
+    assert(nodes(r.queryExecution.executedPlan).exists(_.isInstanceOf[ProjectExec]),
+      r.queryExecution.executedPlan.toString)
+    assert(r.collect().map(_.getLong(0)).toSeq == Seq(300L))
+  }
+
+  test("a driver answer's description shows the segments and runs it read") {
+    val scan = PlannedScan.of(Seed.read(spark, regular).filter(col("id") === 7L))
+    assert(scan.answered)
+    val c = scan.counters
+    assert(c(ScanMetrics.SegmentsRead) > 0 && c(ScanMetrics.RunsRead) > 0, s"$c")
+    Seq(ScanMetrics.SegmentsRead, ScanMetrics.RunsRead).foreach { m =>
+      assert(scan.description.contains(s", $m=${c(m)}"), scan.description)
+    }
   }
 
   test("a row wider than the cap stops the driver read at the cap") {

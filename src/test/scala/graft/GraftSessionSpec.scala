@@ -30,6 +30,23 @@ class GraftSessionSpec extends SparkSpec {
     } finally spark.sparkContext.setLogLevel("ERROR")
   }
 
+  test("registering the test tables keeps no session alive") {
+    def register(): java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession] = {
+      val s = spark.newSession()
+      Tables.registerAll(s, sfDir)
+      assert(s.catalog.tableExists("events"))
+      new java.lang.ref.WeakReference(s)
+    }
+    val refs = Seq.fill(3)(register())
+    val deadline = System.currentTimeMillis() + 30000L
+    while (refs.exists(_.get != null) && System.currentTimeMillis() < deadline) {
+      System.gc()
+      Thread.sleep(50)
+    }
+    assert(refs.forall(_.get == null),
+      s"${refs.count(_.get != null)} of ${refs.size} sessions still reachable")
+  }
+
   test("main code builds sessions and reads graft system properties nowhere else") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"${root.toAbsolutePath} not found")

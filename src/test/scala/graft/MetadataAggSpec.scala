@@ -20,6 +20,25 @@ class MetadataAggSpec extends SparkSpec {
       scan.partitions.length)
   }
 
+  /** One file's summary over the key window [lo, hi) (null = unbounded). */
+  private def sum1(file: java.nio.file.Path, lo: Array[Byte], hi: Array[Byte],
+      m: CellStore.Measure, wantSum: Boolean = false,
+      wantExt: Boolean = false): Option[CellStore.Summary] =
+    CellStore.summarize(Seq(file), Seq(CellStore.Window.range(0, lo, hi)), 1, m,
+      wantSum, wantExt)
+
+  /** The extremal value in [lo, hi): Some(None) = no cell, None = decline. */
+  private def valueExtreme(file: java.nio.file.Path, lo: Array[Byte],
+      hi: Array[Byte], wantMin: Boolean): Option[Option[Long]] =
+    sum1(file, lo, hi, CellStore.Measure.Values, wantExt = true)
+      .map(s => Option(s.extreme(0, wantMin)).map(_.longValue))
+
+  /** Per key, its extremal col inside [lo, hi). */
+  private def colExtremes(file: java.nio.file.Path, ks: Seq[Array[Byte]],
+      lo: Array[Byte], hi: Array[Byte], wantMin: Boolean): Array[Array[Byte]] =
+    CellStore.extremalAddresses(Seq(file),
+      CellStore.Window.points(ks, KeyWindows.span(lo, hi)), ks.length, 1, wantMin)
+
   test("STAT tail: exact per-run tombstone/distinct counts round-trip") {
     val dir = java.nio.file.Files.createTempDirectory("statstail").toString
     try {
@@ -723,14 +742,15 @@ class MetadataAggSpec extends SparkSpec {
         val wantN = allKeys.count(k =>
           Codecs.compareBytes(k.getBytes, lo) >= 0 &&
             Codecs.compareBytes(k.getBytes, hi) < 0)
-        val gotN = CellStore.countDistinctKeysInRange(file, lo, hi)
+        val gotN = sum1(file, lo, hi, CellStore.Measure.Keys).map(_.count(0))
         assert(gotN.contains(wantN.toLong),
           s"dk [${new String(lo)}, ${new String(hi)}): got $gotN want $wantN")
         val wantS = sorted.filter(c =>
           Codecs.compareBytes(c.key, lo) >= 0 &&
             Codecs.compareBytes(c.key, hi) < 0)
           .map(c => java.nio.ByteBuffer.wrap(c.value).getLong).sum
-        val gotS = CellStore.sumCellsInRange(file, lo, hi)
+        val gotS = sum1(file, lo, hi, CellStore.Measure.Values, wantSum = true)
+          .map(_.sum(0))
         assert(gotS.contains(wantS),
           s"sum [${new String(lo)}, ${new String(hi)}): got $gotS want $wantS")
         // VMMX: extremal value in the same envelope, vs brute force
@@ -738,8 +758,8 @@ class MetadataAggSpec extends SparkSpec {
           Codecs.compareBytes(c.key, lo) >= 0 &&
             Codecs.compareBytes(c.key, hi) < 0)
           .map(c => java.nio.ByteBuffer.wrap(c.value).getLong)
-        val gotMn = CellStore.extremalValueInRange(file, lo, hi, wantMin = true)
-        val gotMx = CellStore.extremalValueInRange(file, lo, hi, wantMin = false)
+        val gotMn = valueExtreme(file, lo, hi, wantMin = true)
+        val gotMx = valueExtreme(file, lo, hi, wantMin = false)
         assert(gotMn.contains(inRange.minOption),
           s"vmin [${new String(lo)}, ${new String(hi)}): got $gotMn")
         assert(gotMx.contains(inRange.maxOption),
@@ -748,8 +768,8 @@ class MetadataAggSpec extends SparkSpec {
       // per-key extremal cols under a window, vs brute force
       val ks = Seq("k0003", "k0100x", "k0999").map(_.getBytes("UTF-8"))
       val lo = "c01".getBytes; val hi = "d0100".getBytes
-      val mins = CellStore.extremalColsAtPoints(file, ks, lo, hi, wantMin = true)
-      val maxs = CellStore.extremalColsAtPoints(file, ks, lo, hi, wantMin = false)
+      val mins = colExtremes(file, ks, lo, hi, wantMin = true)
+      val maxs = colExtremes(file, ks, lo, hi, wantMin = false)
       ks.indices.foreach { i =>
         val want = sorted.filter(c => java.util.Arrays.equals(c.key, ks(i)) &&
           Codecs.compareBytes(c.col, lo) >= 0 && Codecs.compareBytes(c.col, hi) < 0)
@@ -768,12 +788,154 @@ class MetadataAggSpec extends SparkSpec {
       val so = CellStore.meta(sst.resolve("b0-o.bin")).stats(0)
       assert(!so.hasValSums, "overflowing run must not carry a VSUM tail")
       assert(so.hasKeyPrefix, "KPFX is value-independent and stays")
-      assert(CellStore.sumCellsInRange(sst.resolve("b0-o.bin"), null, null).isEmpty)
+      assert(sum1(sst.resolve("b0-o.bin"), null, null, CellStore.Measure.Values,
+        wantSum = true).isEmpty)
       // ...but VMMX survives the overflow (extremes can't overflow)
       assert(so.hasValRange && so.valMin == Long.MaxValue && so.valMax == Long.MaxValue,
         s"VMMX must survive a VSUM overflow: $so")
-      assert(CellStore.extremalValueInRange(sst.resolve("b0-o.bin"), null, null,
+      assert(valueExtreme(sst.resolve("b0-o.bin"), null, null,
         wantMin = false).contains(Some(Long.MaxValue)))
+
+      // ---- every measure × window form of the kernels against a brute-
+      // force fold over the segment's runs ----
+      import CellStore.{Addr, Measure, Window}
+      def b(x: String): Array[Byte] = if (x == null) null else x.getBytes("UTF-8")
+      val kf = sst.resolve("b0-k.bin")
+      // live run: every cell carries a sub; even keys hold cols c0..c2 × two
+      // subs, odd keys one cell; hot keys k050h and k120h hold 300 cells
+      // each (cols d0..d3 × 75 subs), straddling index entries; column
+      // "late" first appears mid-run (k150 on), after several index spans
+      val live = (0 until 200).flatMap { i =>
+        val k = f"k$i%03d"
+        val grid = if (i % 2 == 0) for (c <- 0 to 2; sb <- 0 to 1) yield (c, sb) else Seq((1, 0))
+        grid.map { case (c, sb) =>
+          Cell(b(k), b(s"c$c"), b(s"s$sb"), v(i.toLong * 7 - 500 + c * 3 + sb), 1L, tombstone = false)
+        } ++ (if (i >= 150) Seq(Cell(b(k), b("late"), b("s0"), v(i.toLong * 11), 1L,
+          tombstone = false)) else Nil)
+      } ++ Seq("k050h", "k120h").flatMap(k => (0 until 300).map(j =>
+        Cell(b(k), b(s"d${j % 4}"), b(f"t$j%03d"), v(j.toLong - 150), 1L, tombstone = false)))
+      // certified delete epoch: whole keys tombstoned, victims' values kept
+      val doomed = live.filter(c => Set("k010", "k020", "k120h", "k155", "k190")(new String(c.key)))
+      val kout = CellStore.newSegmentStream(kf)
+      CellStore.writeRun(kout, live)
+      CellStore.writeRun(kout, doomed.map(_.copy(ts = 2L, tombstone = true)),
+        certifiedDeletes = true)
+      kout.close()
+      val kStats = CellStore.meta(kf).stats
+      assert(kStats.length == 2 && kStats(1).certDeletes && kStats(0).colVals != null &&
+        kStats(0).colEntries && kStats(0).subEntries, "test segment shape")
+      val runCells: Seq[Vector[Cell]] = {
+        val r = new CellStore.SegmentReader(kf)
+        try r.runs().map(_.toVector) finally r.close()
+      }
+      def orEmpty(x: Array[Byte]) = if (x == null) Array.emptyByteArray else x
+      def cmpA(c: Cell, x: Addr): Int = {
+        val kc = Codecs.compareBytes(c.key, x.key)
+        if (kc != 0 || x.col == null) kc
+        else {
+          val cc = Codecs.compareBytes(orEmpty(c.col), x.col)
+          if (cc != 0 || x.sub == null) cc
+          else Codecs.compareBytes(orEmpty(c.sub), x.sub)
+        }
+      }
+      def inW(c: Cell, w: Window) =
+        (w.lo == null || cmpA(c, w.lo) >= 0) && (w.hi == null || cmpA(c, w.hi) < 0)
+      def valueOf(c: Cell) = java.nio.ByteBuffer.wrap(c.value).getLong
+      def check(what: String, ws: Seq[Window], slots: Int, fields: Seq[Int]): Unit = {
+        val measures = Seq[Measure](Measure.Cells, Measure.Values,
+          Measure.Column(b("c1")), Measure.Column(b("late")), Measure.Column(b("zz"))) ++
+          (if (ws.forall(w => (w.lo == null || w.lo.col == null) &&
+            (w.hi == null || w.hi.col == null))) Seq(Measure.Keys) else Nil)
+        for (m <- measures; netted <- Seq(false, true)) {
+          val values = m == Measure.Values || m.isInstanceOf[Measure.Column]
+          val got = CellStore.summarize(Seq(kf), ws, slots, m, wantSum = values,
+            wantExt = values && !netted, netted = netted)
+          assert(got.isDefined, s"$what $m netted=$netted declined")
+          (0 until slots).foreach { slot =>
+            var count = 0L
+            var sum = 0L
+            val vs = collection.mutable.ArrayBuffer.empty[Long]
+            runCells.foreach { cells =>
+              val sign = if (netted && cells.forall(_.tombstone)) -1 else 1
+              val in = cells.filter(c => ws.exists(w => w.slot == slot && inW(c, w)))
+              val sel = m match {
+                case Measure.Column(n) => in.filter(c => java.util.Arrays.equals(c.col, n))
+                case _ => in
+              }
+              count += sign * (if (m == Measure.Keys)
+                sel.map(c => new String(c.key)).distinct.size else sel.size)
+              if (values) { sum += sign * sel.map(valueOf).sum; vs ++= sel.map(valueOf) }
+            }
+            val at = s"$what $m netted=$netted slot $slot"
+            assert(got.get.count(slot) == count, s"$at: count ${got.get.count(slot)} want $count")
+            if (values) assert(got.get.sum(slot) == sum, s"$at: sum ${got.get.sum(slot)} want $sum")
+            if (values && !netted) {
+              assert(Option(got.get.extreme(slot, wantMin = true)).map(_.longValue) == vs.minOption, s"$at: min")
+              assert(Option(got.get.extreme(slot, wantMin = false)).map(_.longValue) == vs.maxOption, s"$at: max")
+            }
+          }
+        }
+        // extremes never net
+        assert(CellStore.summarize(Seq(kf), ws, slots, Measure.Values, wantExt = true,
+          netted = true).isEmpty)
+        // the extremal address seek: per slot, the extreme field bytes of the
+        // slot's cells (tombstones included — the seek never reads them),
+        // for the fields the slot's windows pin every coarser level of
+        for (field <- fields; wantMin <- Seq(true, false)) {
+          val got = CellStore.extremalAddresses(Seq(kf), ws, slots, field, wantMin)
+          (0 until slots).foreach { slot =>
+            val fs = runCells.flatten.filter(c => ws.exists(w => w.slot == slot && inW(c, w)))
+              .map(c => new String(if (field == 0) c.key else if (field == 1) c.col else c.sub))
+            assert(Option(got(slot)).map(new String(_)) == (if (wantMin) fs.minOption else fs.maxOption),
+              s"$what field $field wantMin=$wantMin slot $slot")
+          }
+        }
+      }
+      val bounds = Seq(null, "a", "k000", "k010", "k050", "k050h", "k050h ", "k051",
+        "k120h", "k150", "k155", "k199", "zzz")
+      val spans = for (lo <- bounds; hi <- bounds
+        if lo == null || hi == null || lo < hi) yield (lo, hi)
+      check("key ranges", spans.zipWithIndex.map { case ((lo, hi), i) =>
+        Window.range(i, b(lo), b(hi)) }, spans.size, Seq(0))
+      check("two ranges in one slot", Seq(Window.range(0, b("k005"), b("k050h ")),
+        Window.range(0, b("k120"), b("k160"))), 1, Seq(0))
+      val pts = Seq("k000", "k010", "k011", "k050h", "k120h", "k154", "k155", "k199",
+        "k999", "j").map(b)
+      check("points", Window.points(pts), pts.size, Seq(0, 1))
+      check("points × col window", Window.points(pts, KeyWindows.span(b("c1"), b("d2"))),
+        pts.size, Seq(0, 1))
+      check("points × open col windows", Window.points(pts,
+        KeyWindows.span(null, b("c2")).intersect(KeyWindows.span(b("c0 "), null))),
+        pts.size, Seq(0, 1))
+      check("points × col points", Window.points(pts,
+        KeyWindows.points(Seq("c0", "c2", "d1", "late").map(b))), pts.size, Seq(0, 1, 2))
+      check("points × col points × sub window", Window.points(pts,
+        KeyWindows.points(Seq("c1", "d2").map(b)), KeyWindows.span(b("s1"), null)),
+        pts.size, Seq(0, 1, 2))
+      check("points × col points × sub points", Window.points(pts,
+        KeyWindows.points(Seq("c0", "c1").map(b)), KeyWindows.points(Seq(b("s0")))),
+        pts.size, Seq(0, 1, 2))
+      assert(Window.points(pts, KeyWindows.points(Nil)).isEmpty, "an empty col set gives no window")
+      // a consulted run without the tail the measure needs declines; one
+      // no window reaches does not
+      val df = sst.resolve("b0-d.bin")
+      val dout = CellStore.newSegmentStream(df)
+      CellStore.writeRun(dout, Seq(Cell(b("m1"), b("c1"), null, b("text"), 1L, tombstone = false)))
+      CellStore.writeRun(dout, Seq(Cell(b("m2"), b("c1"), null, v(5L), 1L, tombstone = false)))
+      CellStore.writeRun(dout, Seq(Cell(b("m3"), b("c1"), null, v(6L), 1L, tombstone = false),
+        Cell(b("m4"), b("c1"), null, v(7L), 2L, tombstone = true)))
+      dout.close()
+      def one(lo: String, hi: String) = Seq(Window.range(0, b(lo), b(hi)))
+      assert(CellStore.summarize(Seq(df), one(null, null), 1, Measure.Values,
+        wantSum = true).isEmpty, "a run with a non-long value has no VSUM tail")
+      assert(CellStore.summarize(Seq(df), one("m2", "m3"), 1, Measure.Values,
+        wantSum = true).map(_.sum(0)).contains(5L), "a run no window reaches is not consulted")
+      assert(CellStore.summarize(Seq(df), one(null, null), 1, Measure.Cells)
+        .map(_.count(0)).contains(4L))
+      assert(CellStore.summarize(Seq(df), one("m3", null), 1, Measure.Cells,
+        netted = true).isEmpty, "an uncertified tombstone run is unclassifiable")
+      assert(CellStore.summarize(Seq(df), one(null, "m3"), 1, Measure.Cells,
+        netted = true).map(_.count(0)).contains(2L))
     } finally CellStore.dropTable(dir)
   }
 
@@ -1037,10 +1199,10 @@ class MetadataAggSpec extends SparkSpec {
       assert(s2.colVals == null, "over-cap run must drop the CVAL tail")
       // under-cap high-col run keeps it, and a column first seen mid-run
       // backfills zero prefixes (exercised via a range read below)
-      assert(CellStore.countColCellsInRange(sst.resolve("b0-a.bin"),
-        "a".getBytes, null, null).contains(2L))
-      assert(CellStore.countColCellsInRange(sst.resolve("b0-b.bin"),
-        "a".getBytes, null, null).isEmpty, "tail-less run must decline")
+      assert(sum1(sst.resolve("b0-a.bin"), null, null,
+        CellStore.Measure.Column("a".getBytes)).map(_.count(0)).contains(2L))
+      assert(sum1(sst.resolve("b0-b.bin"), null, null,
+        CellStore.Measure.Column("a".getBytes)).isEmpty, "tail-less run must decline")
     } finally CellStore.dropTable(dir)
   }
 
