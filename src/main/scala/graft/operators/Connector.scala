@@ -202,12 +202,15 @@ object Connector {
         |  count(DISTINCT l_orderkey) AS wide_rows
         |FROM lineitem""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val src = t(s, dir, "lineitem").select(
-        lpad($"l_orderkey".cast("string"), 10, "0").as("row_key"),
-        lpad($"l_linenumber".cast("string"), 4, "0").as("column_name"),
-        floor($"l_quantity").cast("bigint").as("value"))
-      val store = Seed.table(s, dir, "agg_distinct", src.repartition(1),
-        mapping = Some(":key,:column,:value"))
+      val store = s"${Seed.storeRoot(dir)}/agg_distinct"
+      seedOnce(s"$dir#agg_distinct") {
+        val src = t(s, dir, "lineitem").select(
+          lpad($"l_orderkey".cast("string"), 10, "0").as("row_key"),
+          lpad($"l_linenumber".cast("string"), 4, "0").as("column_name"),
+          floor($"l_quantity").cast("bigint").as("value"))
+        Seed.table(s, dir, "agg_distinct", src.repartition(1),
+          mapping = Some(":key,:column,:value"))
+      }
       Seed.read(s, store)
         .agg(count(lit(1)).as("cells"),
           countDistinct($"row_key").as("wide_rows"))
@@ -281,14 +284,17 @@ object Connector {
         |   WHERE k IN ('00000001', '00000007')
         |     AND c >= '000000020000') AS n_two""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val src = t(s, dir, "lineitem").select(
-        lpad($"l_suppkey".cast("string"), 8, "0").as("row_key"),
-        lpad(($"l_orderkey" * 10 + $"l_linenumber").cast("string"), 12, "0")
-          .as("column_name"),
-        floor($"l_quantity").cast("bigint").as("value"))
-        .dropDuplicates("row_key", "column_name")
-      val store = Seed.table(s, dir, "agg_widerow_window", src.repartition(1),
-        mapping = Some(":key,:column,:value"))
+      val store = s"${Seed.storeRoot(dir)}/agg_widerow_window"
+      seedOnce(s"$dir#agg_widerow_window") {
+        val src = t(s, dir, "lineitem").select(
+          lpad($"l_suppkey".cast("string"), 8, "0").as("row_key"),
+          lpad(($"l_orderkey" * 10 + $"l_linenumber").cast("string"), 12, "0")
+            .as("column_name"),
+          floor($"l_quantity").cast("bigint").as("value"))
+          .dropDuplicates("row_key", "column_name")
+        Seed.table(s, dir, "agg_widerow_window", src.repartition(1),
+          mapping = Some(":key,:column,:value"))
+      }
       val r = Seed.read(s, store)
       val nWin = r
         .filter($"row_key" === "00000003" &&
@@ -321,15 +327,18 @@ object Connector {
         |   WHERE k = '0042' AND c IN ('00000001', '00000003')
         |     AND s >= '000000010000' AND s < '000001000000') AS n_subwin""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val src = t(s, dir, "lineitem").select(
-        lpad(($"l_partkey" % 100).cast("string"), 4, "0").as("row_key"),
-        lpad($"l_suppkey".cast("string"), 8, "0").as("column_name"),
-        lpad(($"l_orderkey" * 10 + $"l_linenumber").cast("string"), 12, "0")
-          .as("sub_column_name"),
-        floor($"l_quantity").cast("bigint").as("value"))
-        .dropDuplicates("row_key", "column_name", "sub_column_name")
-      val store = Seed.table(s, dir, "agg_super_window", src.repartition(1),
-        mapping = Some(":key,:column,:subcolumn,:value"))
+      val store = s"${Seed.storeRoot(dir)}/agg_super_window"
+      seedOnce(s"$dir#agg_super_window") {
+        val src = t(s, dir, "lineitem").select(
+          lpad(($"l_partkey" % 100).cast("string"), 4, "0").as("row_key"),
+          lpad($"l_suppkey".cast("string"), 8, "0").as("column_name"),
+          lpad(($"l_orderkey" * 10 + $"l_linenumber").cast("string"), 12, "0")
+            .as("sub_column_name"),
+          floor($"l_quantity").cast("bigint").as("value"))
+          .dropDuplicates("row_key", "column_name", "sub_column_name")
+        Seed.table(s, dir, "agg_super_window", src.repartition(1),
+          mapping = Some(":key,:column,:subcolumn,:value"))
+      }
       val r = Seed.read(s, store)
       val nCols = r
         .filter($"row_key" === "0042" &&
@@ -362,15 +371,18 @@ object Connector {
         |WHERE k IN ('0042', '0077', '9999') AND c = '00000001'
         |GROUP BY k ORDER BY k""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val src = t(s, dir, "lineitem").select(
-        lpad(($"l_partkey" % 100).cast("string"), 4, "0").as("row_key"),
-        lpad($"l_suppkey".cast("string"), 8, "0").as("column_name"),
-        lpad(($"l_orderkey" * 10 + $"l_linenumber").cast("string"), 12, "0")
-          .as("sub_column_name"),
-        floor($"l_quantity").cast("bigint").as("value"))
-        .dropDuplicates("row_key", "column_name", "sub_column_name")
-      val store = Seed.table(s, dir, "agg_sub_extremal", src.repartition(1),
-        mapping = Some(":key,:column,:subcolumn,:value"))
+      val store = s"${Seed.storeRoot(dir)}/agg_sub_extremal"
+      seedOnce(s"$dir#agg_sub_extremal") {
+        val src = t(s, dir, "lineitem").select(
+          lpad(($"l_partkey" % 100).cast("string"), 4, "0").as("row_key"),
+          lpad($"l_suppkey".cast("string"), 8, "0").as("column_name"),
+          lpad(($"l_orderkey" * 10 + $"l_linenumber").cast("string"), 12, "0")
+            .as("sub_column_name"),
+          floor($"l_quantity").cast("bigint").as("value"))
+          .dropDuplicates("row_key", "column_name", "sub_column_name")
+        Seed.table(s, dir, "agg_sub_extremal", src.repartition(1),
+          mapping = Some(":key,:column,:subcolumn,:value"))
+      }
       Seed.read(s, store)
         .filter($"row_key".isin("0042", "0077", "9999") &&
           $"column_name" === "00000001")
@@ -398,13 +410,16 @@ object Connector {
         |WHERE k IN ('0000000001', '0000000032', '0000000066', '0000099999')
         |GROUP BY k ORDER BY k""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val src = t(s, dir, "lineitem").select(
-        lpad($"l_orderkey".cast("string"), 10, "0").as("row_key"),
-        lpad($"l_linenumber".cast("string"), 4, "0").as("column_name"),
-        floor($"l_quantity").cast("bigint").as("value"))
-        .dropDuplicates("row_key", "column_name")
-      val store = Seed.table(s, dir, "agg_grouped_range", src.repartition(1),
-        mapping = Some(":key,:column,:value"))
+      val store = s"${Seed.storeRoot(dir)}/agg_grouped_range"
+      seedOnce(s"$dir#agg_grouped_range") {
+        val src = t(s, dir, "lineitem").select(
+          lpad($"l_orderkey".cast("string"), 10, "0").as("row_key"),
+          lpad($"l_linenumber".cast("string"), 4, "0").as("column_name"),
+          floor($"l_quantity").cast("bigint").as("value"))
+          .dropDuplicates("row_key", "column_name")
+        Seed.table(s, dir, "agg_grouped_range", src.repartition(1),
+          mapping = Some(":key,:column,:value"))
+      }
       Seed.read(s, store)
         .filter($"row_key".isin(
           "0000000001", "0000000032", "0000000066", "0000099999"))
@@ -650,13 +665,16 @@ object Connector {
         |  AND c >= '0002'
         |GROUP BY k ORDER BY k""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val src = t(s, dir, "lineitem").select(
-        lpad($"l_orderkey".cast("string"), 10, "0").as("row_key"),
-        lpad($"l_linenumber".cast("string"), 4, "0").as("column_name"),
-        (($"l_orderkey" % 97) * 100 + $"l_linenumber").cast("bigint").as("value"))
-        .dropDuplicates("row_key", "column_name")
-      val store = Seed.table(s, dir, "agg_grouped_stats", src.repartition(1),
-        mapping = Some(":key,:column,:value"))
+      val store = s"${Seed.storeRoot(dir)}/agg_grouped_stats"
+      seedOnce(s"$dir#agg_grouped_stats") {
+        val src = t(s, dir, "lineitem").select(
+          lpad($"l_orderkey".cast("string"), 10, "0").as("row_key"),
+          lpad($"l_linenumber".cast("string"), 4, "0").as("column_name"),
+          (($"l_orderkey" % 97) * 100 + $"l_linenumber").cast("bigint").as("value"))
+          .dropDuplicates("row_key", "column_name")
+        Seed.table(s, dir, "agg_grouped_stats", src.repartition(1),
+          mapping = Some(":key,:column,:value"))
+      }
       Seed.read(s, store)
         .filter($"row_key".isin(
           "0000000001", "0000000032", "0000000066", "0000099999") &&
@@ -1027,12 +1045,15 @@ object Connector {
         |GROUP BY row_key, column_name
         |ORDER BY row_key, column_name""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val src = t(s, dir, "lineitem").select(
-        lpad($"l_suppkey".cast("string"), 8, "0").as("row_key"),
-        lpad($"l_orderkey".cast("string"), 10, "0").as("column_name"),
-        lpad($"l_linenumber".cast("string"), 4, "0").as("sub_column_name"),
-        floor($"l_quantity").cast("bigint").as("value"))
-      val store = Seed.table(s, dir, "agg_grouped_pair", src)
+      val store = s"${Seed.storeRoot(dir)}/agg_grouped_pair"
+      seedOnce(s"$dir#agg_grouped_pair") {
+        val src = t(s, dir, "lineitem").select(
+          lpad($"l_suppkey".cast("string"), 8, "0").as("row_key"),
+          lpad($"l_orderkey".cast("string"), 10, "0").as("column_name"),
+          lpad($"l_linenumber".cast("string"), 4, "0").as("sub_column_name"),
+          floor($"l_quantity").cast("bigint").as("value"))
+        Seed.table(s, dir, "agg_grouped_pair", src)
+      }
       Seed.read(s, store)
         .groupBy($"row_key", $"column_name")
         .agg(count(lit(1)).as("n_lines"), sum($"value").as("qty"),

@@ -707,37 +707,39 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
   /** Partition prefixes, not the global answer: Spark keeps its TopN. */
   override def isPartiallyPushed(): Boolean = true
 
-  /** PARTIAL aggregate pushdown: ungrouped COUNT(*) / COUNT(col) / MIN /
-    * MAX fold inside each partition's reader — the scan emits ONE partial
-    * row per partition instead of materializing (and decoding) every table
-    * row, and Spark's final aggregate combines the partials. Exact by
-    * construction: the reader folds exactly the rows the normal scan would
-    * emit (same LWW/tombstone reconciliation, same pushed-filter
-    * evaluation). Complete pushdown is declined (default false): partial
-    * keeps the per-partition parallelism and lets Spark own the final
-    * combine, which is the scalable shape at any partition count. Spark
-    * only attempts this when no residual filter sits above the scan, so
-    * the speculative index predicates (which must be re-applied) can never
-    * meet a pushed aggregate. */
-  /** COMPLETE aggregate pushdown — the planning-time metadata answer.
-    * When every aggregate is answerable from the run indexes' STAT tails
-    * (COUNT(*)/COUNT(address)/MIN/MAX of order-preserving address fields,
-    * plus COUNT(DISTINCT key) — buckets partition keys disjointly and
-    * per-bucket disjoint runs make per-run distinctKeys additive, a claim
-    * no PARTIAL pushdown can make because Spark would have to trust the
-    * partitions' key-disjointness) and the driver-side check proves every
-    * bucket stats-bearing, tombstone-free and run-disjoint, the ENTIRE
-    * aggregation resolves at planning: the scan plans one partition whose
-    * reader emits the precomputed final row — zero executor IO, no final
-    * combine in the plan. Any unprovable condition returns false and
-    * Spark retries the partial path (which has its own per-bucket
-    * metadata/fold split, [[MetadataAggReader]]). The answer is
-    * planning-time-consistent, the same single-maintainer discipline as
-    * every pinned-file scan. */
+  /** Aggregate pushdown. Spark offers the aggregation here first, and the
+    * paths are tried in this order:
+    *  1. METADATA-COMPLETE ([[computeMetadataAnswer]]): every aggregate is
+    *     answerable from run-index stats, sidecars or postings, and the
+    *     driver proves every bucket's conditions (stats-bearing, tombstone-
+    *     free or certified-netted, run-disjoint, tails present), so the
+    *     final rows are computed at planning with zero cell IO. This tier
+    *     alone answers COUNT(DISTINCT key), which no partial form can (Spark
+    *     would have to trust the partitions' key-disjointness), grouped
+    *     answers, and an empty ungrouped aggregate list (one zero-column
+    *     row).
+    *  2. DRIVER FOLD ([[foldOnDriver]]): an ungrouped aggregate the partial
+    *     path would push, over key windows whose cells memoized segment
+    *     metadata bounds within one task's worth of work
+    *     (`split.target.cells`), is folded at planning by draining the
+    *     partial scan's partitions through the executors' own readers and
+    *     combining their partial rows.
+    *  3. PARTIAL ([[pushAggregation]] after this returns false): each
+    *     partition's reader folds exactly the rows the normal scan would
+    *     emit (same LWW/tombstone reconciliation, same pushed-filter
+    *     evaluation) into one partial row — or answers its bucket from
+    *     metadata ([[MetadataAggReader]]) — and Spark's final aggregate
+    *     combines the partials.
+    * Either complete answer plans as a [[DriverAnswerScan]], whose collect
+    * starts no job; it is read at planning, the same single-maintainer
+    * discipline as every pinned-file scan. Spark offers aggregates only
+    * when no residual filter sits above the scan, so the speculative index
+    * predicates (which must be re-applied) never meet a pushed aggregate. */
   override def supportCompletePushDown(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     : Boolean = {
     completeAnswer = computeMetadataAnswer(aggregation)
+      .orElse(foldOnDriver(aggregation))
     completeAnswer.isDefined
   }
 
@@ -745,11 +747,63 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     * ungrouped forms, one row per PRESENT group key for the grouped form. */
   private var completeAnswer: Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] = None
 
+  /** The complete answer's rows once [[pushAggregation]] accepted it (a
+    * support probe without the follow-up push must not turn a plain scan
+    * into answer rows). */
+  private var completeRows: Option[Seq[InternalRow]] = None
+
+  /** The driver fold's answer, wrapping the partial scan it drained. */
+  private var driverFold: Option[DriverAnswerScan] = None
+
+  /** Tier 2 of [[supportCompletePushDown]]: the ungrouped partial
+    * aggregation folded at planning. The partial scan's cells are bounded
+    * first from memoized segment metadata ([[CellScan.cellBound]]); only a
+    * bound within `split.target.cells` drains its partitions through the
+    * executors' reader factory ([[drainOnDriver]]), so the per-bucket
+    * metadata answers, LWW, tombstones, as-of and FilterEval stay one
+    * implementation, and the partial rows combine into the final one
+    * ([[AggregatePartitionReader.combine]]). The bound keeps every
+    * partition within the cap, so they drain concurrently on the driver's
+    * cores, one partition per drain, as the distributed scan's tasks would
+    * run them. A Long overflow, a decimal sum past its type, or a drain
+    * past the cap declines to the distributed partial path, which then
+    * fails or wraps exactly as it does today. */
+  private def foldOnDriver(
+      aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
+    : Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] =
+    partialAggs(aggregation).collect { case (want, Nil) => want }.flatMap { want =>
+      import scala.collection.parallel.CollectionConverters._
+      val scan = new CellScan(table, required, pushed, options, limit, want)
+      val cap = splitTargetCells
+      if (scan.cellBound > cap) None
+      else {
+        val factory = scan.createReaderFactory()
+        val answer =
+          try {
+            val drained = scan.planInputPartitions().toSeq.par
+              .map(p => drainOnDriver(Seq(p), factory, cap)).seq
+            val total = new ScanCounters
+            drained.flatten.foreach(d => total.add(d._2))
+            if (drained.exists(_.isEmpty) || total.cellsMerged > cap) None
+            else AggregatePartitionReader.combine(scan.readSchema(), want,
+                drained.flatten.flatMap(_._1))
+              .map(row => new DriverAnswerScan(scan, Array(row), total))
+          } catch { case _: ArithmeticException => None } // a partition's decimal sum
+        driverFold = answer
+        answer.map(a => (want, Nil, a.rows().toSeq))
+      }
+    }
+
   private def computeMetadataAnswer(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     : Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
-    if (aggregation.aggregateExpressions().isEmpty) return None
+    // an EMPTY aggregate list (Dataset.count() over an ungrouped aggregate
+    // keeps only its row): ungrouped, one zero-column row whatever the
+    // store holds; grouped, it needs the present group keys — declined
+    if (aggregation.aggregateExpressions().isEmpty)
+      return if (aggregation.groupByExpressions().isEmpty)
+        Some((Nil, Nil, Seq(InternalRow.empty))) else None
     if (limit.isDefined) return None
     if (!CassandraLikeTable.plainView(
         k => Options.effective(options, table.tableProps, k),
@@ -2359,20 +2413,33 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
   override def pushAggregation(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     : Boolean = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
-    // COMPLETE metadata answer already proven by supportCompletePushDown
-    // (Spark calls it first, with the same aggregation): accept as-is
+    // COMPLETE answer already proven by supportCompletePushDown (Spark
+    // calls it first, with the same aggregation): accept as-is
     completeAnswer match {
-      case Some((want, gk, _)) =>
-        aggs = want; groupKeys = gk
-        return true
-      case None => ()
+      case Some((want, gk, rows)) =>
+        aggs = want; groupKeys = gk; completeRows = Some(rows)
+        true
+      case None =>
+        partialAggs(aggregation) match {
+          case Some((want, gk)) => aggs = want; groupKeys = gk; true
+          case None => false
+        }
     }
-    // an EMPTY aggregate list occurs in optimized shapes (e.g. a count()
-    // over an already-aggregated subquery); accepting it vacuously would
-    // promise a zero-column scan — decline so the normal row scan serves it
-    if (aggregation.aggregateExpressions().isEmpty) return false
-    if (limit.isDefined) return false
+  }
+
+  /** The PARTIAL pushdown of `aggregation`, as (aggregates, group keys)
+    * whose per-partition rows Spark's final aggregate combines, or None
+    * when some function or grouping is not pushable. */
+  private def partialAggs(
+      aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
+    : Option[(Seq[PushedAgg], Seq[String])] = {
+    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
+    // an EMPTY aggregate list (a count() over an already-aggregated
+    // subquery) has no partial form: ungrouped, supportCompletePushDown
+    // answers it as one zero-column row; grouped, it would promise a
+    // zero-column scan per group, so the normal row scan serves it
+    if (aggregation.aggregateExpressions().isEmpty) return None
+    if (limit.isDefined) return None
     def col(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
         case nr: org.apache.spark.sql.connector.expressions.NamedReference
@@ -2433,7 +2500,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
           Some(Seq(k, c))
         case _ => None
       }
-    if (grouping.isEmpty) return false
+    if (grouping.isEmpty) return None
     val translated: Seq[Option[PushedAgg]] =
       aggregation.aggregateExpressions().toSeq.map {
         case _: CountStar => Some(PushedAgg.CountStar)
@@ -2443,8 +2510,8 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
         case s: Sum if !s.isDistinct => col(s.column).filter(summable).map(PushedAgg.Sum.apply)
         case _ => None
       }
-    if (translated.exists(_.isEmpty)) false
-    else { aggs = translated.flatten; groupKeys = grouping.get; true }
+    if (translated.exists(_.isEmpty)) None
+    else Some((translated.flatten, grouping.get))
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -2634,15 +2701,13 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan = {
+    // a driver fold already holds its answer and the partial scan it read
+    driverFold match {
+      case Some(answer) if completeRows.isDefined => return answer
+      case _ => ()
+    }
     val scan = new CellScan(table, required, pushed, options, limit, aggs,
-      groupKeys, limitLast,
-      // the answer rows apply only if Spark actually pushed the SAME
-      // aggregate list (and grouping) it proved complete (a support probe
-      // without the follow-up push must not turn a plain scan into answer
-      // rows)
-      completeAnswer.collect {
-        case (want, gk, rows) if aggs == want && groupKeys == gk => rows
-      })
+      groupKeys, limitLast, completeRows)
     val points = scan.keyWindows.points
     val answerable = points != null &&
       points.length <= CellScanBuilder.MaxStatPoints &&
@@ -2663,34 +2728,45 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     * read serially through the executors' own reader (so LWW, tombstones,
     * TTL, as-of, slices, FilterEval and blooms stay one implementation) and
     * the rows go to a [[DriverAnswerScan]], which Spark plans as a
-    * `LocalTableScanExec`: collecting it starts no job. The read stops at
-    * one task's worth of work, `split.target.cells` merged cells; over it
-    * the rows are dropped and the scan runs distributed. The merge itself
-    * stops at the first cell past the cap, so a row wider than the cap is
-    * not merged whole before the read gives up. Rows are read when the
-    * query is planned. */
-  private def answerOnDriver(scan: CellScan): Option[Scan] = {
-    val cap = table.opt(options, Options.SplitTargetCells).map(_.toLong)
+    * `LocalTableScanExec`: collecting it starts no job. Over one task's
+    * worth of work the scan runs distributed ([[drainOnDriver]]). Rows are
+    * read when the query is planned. */
+  private def answerOnDriver(scan: CellScan): Option[Scan] =
+    drainOnDriver(scan.planInputPartitions().toSeq, scan.createReaderFactory(),
+        splitTargetCells).map { case (rows, counters) =>
+      new DriverAnswerScan(scan, rows, counters)
+    }
+
+  /** One task's worth of merged cells: `split.target.cells`. */
+  private def splitTargetCells: Long =
+    table.opt(options, Options.SplitTargetCells).map(_.toLong)
       .getOrElse(Options.DefaultSplitTargetCells)
-    val parts = scan.planInputPartitions()
-    val factory = scan.createReaderFactory()
+
+  /** `parts`, drained serially on the driver through the scan's reader
+    * factory: the rows (one partial row per partition for a pushed
+    * aggregate) and the summed store IO, or None past `cap` merged cells.
+    * The merge itself stops at the first cell past the cap, so a row wider
+    * than the cap is not merged whole before the read gives up. */
+  private def drainOnDriver(parts: Seq[InputPartition],
+      factory: PartitionReaderFactory, cap: Long)
+    : Option[(Array[InternalRow], ScanCounters)] = {
     val total = new ScanCounters
     val rows = mutable.ArrayBuffer.empty[InternalRow]
     var i = 0
     try {
       while (i < parts.length && total.cellsMerged <= cap) {
-        val r = factory.createReader(parts(i)).asInstanceOf[CellPartitionReader]
-        r.counters.mergeCap = cap - total.cellsMerged
+        val r = factory.createReader(parts(i))
+        val c = r.asInstanceOf[CountedReader].counters
+        c.mergeCap = cap - total.cellsMerged
         try {
-          while (total.cellsMerged + r.counters.cellsMerged <= cap && r.next())
+          while (total.cellsMerged + c.cellsMerged <= cap && r.next())
             rows += r.get().copy()
-        } finally { r.close(); total.add(r.counters) }
+        } finally { r.close(); total.add(c) }
         i += 1
       }
     } catch { case _: ScanCounters.OverCap => }
     CellScanBuilder.driverCellsMerged.addAndGet(total.cellsMerged)
-    if (total.cellsMerged > cap) None
-    else Some(new DriverAnswerScan(scan, rows.toArray, total))
+    if (total.cellsMerged > cap) None else Some((rows.toArray, total))
   }
 }
 
@@ -3083,7 +3159,7 @@ class CellScan(
     CellStore.allSegmentFiles(table.dir)
 
   override def readSchema(): StructType =
-    if (aggs.nonEmpty) aggSchema else required
+    if (aggs.nonEmpty || completeRows.isDefined) aggSchema else required
   override def toBatch: Batch = this
 
   /** Scan observability (Spark UI, per scan node): segment/run IO, bloom
@@ -3109,7 +3185,7 @@ class CellScan(
       s"PushedFilters: [$f] Slice: [$slice]" +
       limit.map(n =>
         if (limitLast) s" LimitLast: $n" else s" Limit: $n").getOrElse("") +
-      (if (aggs.nonEmpty)
+      (if (aggs.nonEmpty || completeRows.isDefined)
         s" PushedAggregates: [${aggs.mkString(", ")}]" +
           (if (aggGroupKeys.nonEmpty)
             s" GroupedBy: [${aggGroupKeys.mkString(", ")}]" else "") +
@@ -3263,6 +3339,22 @@ class CellScan(
   private[cassandralike] def keyWindows: KeyWindows =
     KeyWindows.of(table.mapping.keyField.name, table.keyCodec, effectiveFilters)
 
+  /** An upper bound on the cells the scan's planned buckets hold inside
+    * its key windows, from memoized [[CellStore.SegmentMeta]] alone: each
+    * sparse-sample key inside the windows opens at most one index span,
+    * and each run meets each window in at most one more span starting
+    * before it, every span holding at most [[CellStore.IndexEvery]] cells;
+    * never more than the segment's cells. */
+  private[cassandralike] def cellBound: Long = {
+    val keys = keyWindows
+    plannedBuckets.iterator.flatMap(segmentsByBucket(_)).map { f =>
+      val m = CellStore.meta(f)
+      val spans = m.sample.count(keys.contains) +
+        m.live.iterator.map(r => keys.meeting(r.stats.firstKey, r.stats.lastKey)).sum
+      math.min(m.cells, spans.toLong * CellStore.IndexEvery)
+    }.sum
+  }
+
   private def plannedBuckets: Seq[Int] = {
     val buckets = table.opt(options, Options.Buckets)
       .map(_.toInt).getOrElse(Options.DefaultBuckets)
@@ -3337,11 +3429,12 @@ class CellScan(
       aggGroupKeys, columnar = true, limitLast = limitLast)
 }
 
-/** A key-addressed read or a complete metadata aggregate, answered at
-  * planning (see [[CellScanBuilder.build]]): Spark plans a `LocalScan` as a
-  * `LocalTableScanExec`, whose collect launches no job. `counters` are the
-  * read's store IO, summed over its partitions; `toBatch` is the wrapped
-  * scan's, so those planned partitions stay inspectable. */
+/** A key-addressed read, a complete metadata aggregate or a driver-folded
+  * aggregate, answered at planning (see [[CellScanBuilder.build]]): Spark
+  * plans a `LocalScan` as a `LocalTableScanExec`, whose collect launches no
+  * job. `counters` are the read's store IO, summed over its partitions;
+  * `toBatch` is the wrapped scan's (a fold wraps the partial scan it
+  * drained), so those planned partitions stay inspectable. */
 final class DriverAnswerScan(
     val scan: CellScan,
     answer: Array[InternalRow],
@@ -3427,12 +3520,12 @@ final case class CellReaderFactory(
       dropped, limitLast)
     val counted = accums match {
       case None => base
-      case Some(a) => new PartitionReader[InternalRow] {
+      case Some(a) => new CountedReader {
         // streaming-feed accumulator tap: fold the task's counters into the
         // driver-side accumulators at close (task completion merges them)
+        override def counters: ScanCounters = base.counters
         override def next(): Boolean = base.next()
         override def get(): InternalRow = base.get()
-        override def currentMetricsValues() = base.currentMetricsValues()
         override def close(): Unit = { a.add(base.counters); base.close() }
       }
     }
@@ -4437,19 +4530,15 @@ object MetadataAggReader {
     order.collectFirst { case i if counts(i) > 0 => ks(i) }.orNull
   }
 
-  private def answerReader(row: InternalRow): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
+  private def answerReader(row: InternalRow): CountedReader =
+    new CountedReader {
+      override val counters: ScanCounters = new ScanCounters
+      counters.partitionsStatsOnly = 1L
       private var emitted = false
       override def next(): Boolean =
         if (emitted) false else { emitted = true; true }
       override def get(): InternalRow = row
       override def close(): Unit = ()
-      override def currentMetricsValues()
-          : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-        val c = new ScanCounters
-        c.partitionsStatsOnly = 1L
-        ScanMetrics.values(c)
-      }
     }
 }
 
@@ -4467,10 +4556,12 @@ object MetadataAggReader {
   * memory at ANY group cardinality; an empty partition emits nothing (an
   * empty grouped result is correctly empty). */
 class AggregatePartitionReader(
-    inner: PartitionReader[InternalRow],
+    inner: CountedReader,
     base: StructType,
     aggs: Seq[PushedAgg],
-    groupKeys: Seq[String] = Nil) extends PartitionReader[InternalRow] {
+    groupKeys: Seq[String] = Nil) extends CountedReader {
+
+  override def counters: ScanCounters = inner.counters
 
   private var done = false
   private var innerDone = false
@@ -4647,9 +4738,42 @@ class AggregatePartitionReader(
 
   override def get(): InternalRow = result
   override def close(): Unit = inner.close()
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    inner.currentMetricsValues()
+}
+
+object AggregatePartitionReader {
+  /** The final row of an UNGROUPED aggregation from its partitions'
+    * partial rows (`partial` is their schema, one column per aggregate):
+    * counts and integral sums add with `Math.addExact`, double sums add
+    * from 0.0 as Spark's final Sum does, decimal sums add exactly and must
+    * fit the widened type, and MIN/MAX keep the extreme by the column
+    * type's interpreted ordering; NULL partials are skipped, so a SUM, MIN
+    * or MAX over no rows is NULL. None on any overflow, where Spark's own
+    * final aggregate would wrap, throw or give NULL. */
+  def combine(partial: StructType, aggs: Seq[PushedAgg],
+      rows: Seq[InternalRow]): Option[InternalRow] = {
+    try Some(InternalRow.fromSeq(aggs.indices.map { i =>
+      val dt = partial(i).dataType
+      val vs = rows.filterNot(_.isNullAt(i)).map(_.get(i, dt))
+      aggs(i) match {
+        case PushedAgg.CountStar | PushedAgg.Count(_) =>
+          vs.foldLeft(0L)((a, v) => Math.addExact(a, v.asInstanceOf[Long]))
+        case _ if vs.isEmpty => null
+        case PushedAgg.Sum(_) => dt match {
+          case DoubleType => vs.foldLeft(0.0)(_ + _.asInstanceOf[Double])
+          case d: DecimalType =>
+            val sum = Decimal(vs.map(_.asInstanceOf[Decimal].toJavaBigDecimal)
+              .reduce(_ add _))
+            if (sum.changePrecision(d.precision, d.scale)) sum else return None
+          case _ => vs.map(_.asInstanceOf[Long]).reduce(Math.addExact(_, _))
+        }
+        case PushedAgg.Min(_) =>
+          vs.min(org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt))
+        case PushedAgg.Max(_) =>
+          vs.max(org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt))
+        case PushedAgg.CountDistinct(_) => return None // no partial form
+      }
+    })) catch { case _: ArithmeticException => None }
+  }
 }
 
 /** Batches the row reader's output into on-heap column vectors (4096 rows
@@ -4800,7 +4924,7 @@ class CellPartitionReader(
     limit: Option[Int] = None,
     dropped: Map[String, Long] = Map.empty,
     limitLast: Boolean = false)
-  extends PartitionReader[InternalRow] {
+  extends CountedReader {
 
   // T2: positional per-cell validator list (reference's
   // cassandra.cf.validatorType, serde/CassandraColumnSerDe.java:24,106-126);
@@ -4897,7 +5021,7 @@ class CellPartitionReader(
   // unit the pager (S4) then chunks, matching the reference's bound where
   // the server holds the row and the client pages it.
   /** Task-local scan counters, surfaced via [[currentMetricsValues]]. */
-  private[cassandralike] val counters = new ScanCounters
+  override val counters = new ScanCounters
 
   private val merge = new CellStore.BucketMergeIterator(
     part.tableDir, part.bucket, keys,
@@ -4947,9 +5071,6 @@ class CellPartitionReader(
   }
   override def get(): InternalRow = current
   override def close(): Unit = merge.close()
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    ScanMetrics.values(counters)
 
   /** Cells arrive in (key, col, sub) order; group runs of equal key without
     * materializing anything beyond the current row. A row is indexed, so

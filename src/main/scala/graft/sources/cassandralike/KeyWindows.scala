@@ -80,6 +80,16 @@ final class KeyWindows private (val spans: Array[(Array[Byte], Array[Byte])]) {
     })
   }
 
+  /** How many windows meet the byte range from `a` to `b`, both inclusive
+    * (null = unbounded)? */
+  def meeting(a: Array[Byte], b: Array[Byte]): Int = {
+    var i = if (a == null) 0 else firstAbove(a)
+    val first = i
+    while (i < spans.length && (b == null || spans(i)._1 == null || cmp(spans(i)._1, b) <= 0))
+      i += 1
+    i - first
+  }
+
   def intersect(o: KeyWindows): KeyWindows =
     if (o.isAll) this
     else if (isAll) o

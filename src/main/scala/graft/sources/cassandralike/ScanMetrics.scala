@@ -63,6 +63,15 @@ final class ScanCounters {
   }
 }
 
+/** A partition reader whose store IO is one [[ScanCounters]]: every reader
+  * [[CellReaderFactory]] makes, so a driver read can cap and sum it. */
+trait CountedReader extends org.apache.spark.sql.connector.read.PartitionReader[
+    org.apache.spark.sql.catalyst.InternalRow] {
+  def counters: ScanCounters
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    ScanMetrics.values(counters)
+}
+
 object ScanCounters {
   /** A merge passed its [[ScanCounters.mergeCap]]. */
   final class OverCap extends scala.util.control.ControlThrowable

@@ -1,6 +1,12 @@
 package graft.tools
 
-/** Print the formatted physical plan of judged queries:
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+
+/** Print the formatted physical plan of judged queries, then the
+  * description of every DSv2 scan in the optimized plan (subqueries
+  * included): a scan answered at planning runs as a bare `LocalTableScan`,
+  * and its description is what shows the scan it wraps, the pushed
+  * aggregates with their `AggStats:` path and the `DriverAnswer:` store IO.
   * `runMain graft.tools.ExplainQuery <name> [<name>...]`. */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
@@ -9,7 +15,11 @@ object ExplainQuery {
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       println(s"\n===== $name =====")
-      graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      val df = graft.SparkEntry.queries(name)(spark, sfDir)
+      df.explain("formatted")
+      df.queryExecution.optimizedPlan.collectWithSubqueries {
+        case r: DataSourceV2ScanRelation => r.scan.description()
+      }.zipWithIndex.foreach { case (d, i) => println(s"Scan ${i + 1}: $d") }
     }
     spark.stop()
   }

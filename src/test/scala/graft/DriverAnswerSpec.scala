@@ -190,6 +190,111 @@ class DriverAnswerSpec extends SparkSpec {
     assert(df.count() == rows)
   }
 
+  /** 40 wide rows of 50 cells, written as two halves of every row: each
+    * bucket holds two segments whose key ranges overlap, so no metadata
+    * tier answers a range aggregate and the driver fold owns it. */
+  private lazy val overlapping: String = {
+    val sp = spark; import sp.implicits._
+    def half(cs: Range) =
+      (for (s <- 1 to 40; c <- cs) yield (s, c, s * 1000L + c * 7 - 150L)).toDF("s", "c", "v")
+    val dir = Seed.table(spark, sfDir, "spec_driver_fold", half(0 until 25),
+      mapping = Some(":key,:column,:value"), props = Map(Options.Buckets -> "4"))
+    Seed.append(half(25 until 50), dir, Map(Options.WriteTimestamp -> "2"))
+    dir
+  }
+
+  private def foldAgg(df: DataFrame): DataFrame =
+    df.agg(count(lit(1)), sum(col("v")), min(col("v")), max(col("v")), min(col("c")))
+
+  test("a small pushed aggregate over overlapping segments folds on the driver, no job") {
+    val segs = CellStore.allSegmentFiles(overlapping)
+    assert(segs.nonEmpty && segs.values.forall(_.size > 1), s"$segs")
+    val range = col("s") >= 5 && col("s") < 23
+    val q = foldAgg(Seed.read(spark, overlapping).filter(range))
+    val scan = PlannedScan.of(q)
+    assert(scan.answered, scan.description)
+    assert(scan.description.contains("PushedAggregates: [") &&
+      !scan.description.contains("AggStats: complete"), scan.description)
+    // the answer's counters are the partial scan's partitions drained
+    assert(scan.counters == PlannedScan(scan.cellScan).counters)
+    assert(scan.counters(ScanMetrics.CellsMerged) == 18L * 50, s"${scan.counters}")
+    var got: Array[Row] = null
+    val jobs = jobsIn { got = q.collect() }
+    assert(jobs == 0, s"the fold started $jobs jobs:\n${q.queryExecution.executedPlan}")
+    assert(nodes(q.queryExecution.executedPlan).exists(_.isInstanceOf[LocalTableScanExec]))
+    // the same query distributed under a small split target
+    val dist = foldAgg(Seed.read(spark, overlapping, Map(Options.SplitTargetCells -> "64"))
+      .filter(range))
+    assert(!PlannedScan.of(dist).answered)
+    assert(nodes(dist.queryExecution.executedPlan).exists(_.isInstanceOf[BatchScanExec]))
+    val vs = for (s <- 5 until 23; c <- 0 until 50) yield s * 1000L + c * 7 - 150L
+    val want = Row(vs.size.toLong, vs.sum, vs.min, vs.max, 0)
+    assert(got.toSeq == Seq(want))
+    assert(dist.collect().toSeq == Seq(want))
+  }
+
+  test("a pushed aggregate whose cell bound is over the cap reads nothing on the driver") {
+    // 40 rows of 50 cells against a 256-cell cap: the bound alone declines
+    val q = foldAgg(Seed.read(spark, overlapping, Map(Options.SplitTargetCells -> "256"))
+      .filter(col("s") >= 5 && col("s") < 23))
+    val before = CellScanBuilder.driverCellsMerged.get()
+    val scan = PlannedScan.of(q)
+    assert(CellScanBuilder.driverCellsMerged.get() == before)
+    assert(!scan.answered)
+    assert(nodes(q.queryExecution.executedPlan).exists(_.isInstanceOf[BatchScanExec]))
+    assert(q.collect().head.getLong(0) == 18L * 50)
+  }
+
+  test("a Long SUM overflowing across partitions matches the distributed path") {
+    val sp = spark; import sp.implicits._
+    // one row key per bucket, each cell Long.MaxValue / 2: every
+    // partition's partial fits, their total does not
+    val keys = Iterator.from(1).map(k => k -> TokenRing.bucket(
+      Codecs.encode(org.apache.spark.sql.types.IntegerType, k), 4))
+      .scanLeft(Map.empty[Int, Int]) { case (m, (k, b)) => if (m.contains(b)) m else m + (b -> k) }
+      .dropWhile(_.size < 4).next().values.toSeq
+    val dir = Seed.table(spark, sfDir, "spec_driver_fold_overflow",
+      keys.map(k => (k, 0, Long.MaxValue / 2)).toDF("s", "c", "v").repartition(2),
+      mapping = Some(":key,:column,:value"), props = Map(Options.Buckets -> "4"))
+    def q(o: Map[String, String]): DataFrame =
+      Seed.read(spark, dir, o).filter(col("s") >= 1).agg(count(lit(1)), sum(col("v")))
+    // the overflow declines the fold
+    assert(!PlannedScan.of(q(Map.empty)).answered)
+    val folded = scala.util.Try(q(Map.empty).collect().toSeq)
+    val dist = scala.util.Try(q(Map(Options.SplitTargetCells -> "1")).collect().toSeq)
+    (folded, dist) match {
+      case (scala.util.Success(a), scala.util.Success(b)) => assert(a == b)
+      case (scala.util.Failure(a), scala.util.Failure(b)) =>
+        assert(a.getClass == b.getClass, s"$a vs $b")
+      case _ => fail(s"$folded vs $dist")
+    }
+  }
+
+  test("an empty range folds to count 0 and a NULL sum") {
+    val q = Seed.read(spark, overlapping).filter(col("s") > 100)
+      .agg(count(lit(1)), sum(col("v")))
+    assert(PlannedScan.of(q).answered)
+    var got: Array[Row] = null
+    assert(jobsIn { got = q.collect() } == 0)
+    assert(got.toSeq == Seq(Row(0L, null)))
+  }
+
+  test("count() of every judged conn_agg_* query equals its collected rows") {
+    val aggs = SparkEntry.registry.map(_.name).filter(_.startsWith("conn_agg_"))
+    assert(aggs.size >= 30, s"$aggs")
+    aggs.foreach { name =>
+      val q = SparkEntry.queries(name)(spark, sfDir)
+      assert(q.count() == q.collect().length.toLong, name)
+    }
+    // an ungrouped aggregate's count() keeps an empty aggregate list over
+    // the store: one zero-column row, answered at planning
+    val metadata = SparkEntry.queries("conn_agg_metadata")(spark, sfDir)
+    val counted = metadata.groupBy().count()
+    assert(counted.collect().toSeq == Seq(Row(1L)))
+    assert(!nodes(counted.queryExecution.executedPlan).exists(_.isInstanceOf[BatchScanExec]),
+      counted.queryExecution.executedPlan.toString)
+  }
+
   test("a streaming read of the same store still plans the change feed") {
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
     val ckpt = java.nio.file.Files.createTempDirectory("driver-answer-feed").toString

@@ -68,18 +68,18 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("conn_agg_pushdown: the scan carries the aggregates, output is partial rows") {
-    val scans = collectAll(plan("conn_agg_pushdown")).collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-        if b.scan.description().contains("cassandralike") => b
-    }
+    // the planned store scan: distributed, or drained on the driver when
+    // its cells fit one task (the fold wraps the same partial scan)
+    val scans = storeScansOf(SparkEntry.queries("conn_agg_pushdown")(spark, sfDir))
     assert(scans.nonEmpty, "no cassandralike scan found")
-    val desc = scans.head.scan.description()
+    val desc = scans.head.description
     assert(desc.contains("PushedAggregates"), s"aggregates not pushed: $desc")
     assert(desc.contains("CountStar") && desc.contains("Min(c_acctbal)"),
       s"unexpected pushed set: $desc")
     // scan output = one partial-agg column set, never table rows
-    assert(scans.head.output.forall(_.name.startsWith("agg_")),
-      s"scan output should be partial aggregates: ${scans.head.output}")
+    val output = scans.head.scan.readSchema().fieldNames
+    assert(output.forall(_.startsWith("agg_")),
+      s"scan output should be partial aggregates: ${output.mkString(", ")}")
   }
 
   test("metadata-aggregate judged queries plan COMPLETE on their real seeded stores") {

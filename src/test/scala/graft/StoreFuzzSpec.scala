@@ -459,7 +459,7 @@ class StoreFuzzSpec extends SparkSpec {
     // windows (negatives sort after positives): every read is a random key
     // range, column range or both, and range COUNT/SUM may answer
     // positionally (window by window) or fold
-    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
     val rnd = new Random(20260817)
     def ikeyOf(i: Int): Int = if (i == 0) Int.MinValue else if (i == 11) Int.MaxValue else i - 6
     def icolOf(j: Int): Int = if (j == 0) Int.MinValue else if (j == 19) Int.MaxValue else j - 10
@@ -537,6 +537,22 @@ class StoreFuzzSpec extends SparkSpec {
         assert(agg2.getLong(0) == byCol.size &&
           Option(agg2.get(1)) == byCol.headOption.map(_ => byCol.toSeq.map(_._3).sum),
           s"trial $trial: COUNT/SUM over keys $pinned and $cp = $agg2, model ${byCol.size}")
+        // ungrouped COUNT/SUM/MIN/MAX over the key range on both paths: the
+        // answer at planning (a metadata tier or the driver fold) and the
+        // distributed partial aggregate
+        val vs = byKey.toSeq.map(_._3)
+        val cs = byKey.toSeq.map(_._2)
+        val wantAgg = Seq[Any](vs.size.toLong, vs.reduceOption(_ + _).map(Long.box).orNull,
+          vs.minOption.map(Long.box).orNull, vs.maxOption.map(Long.box).orNull,
+          cs.minOption.map(Int.box).orNull, cs.maxOption.map(Int.box).orNull)
+        bothPaths.foreach { o =>
+          val got = Seed.read(spark, dir, o).filter(kp)
+            .agg(count(lit(1)), sum(col("value")), min(col("value")), max(col("value")),
+              min(col("column_name")), max(col("column_name")))
+            .collect().head.toSeq
+          assert(got == wantAgg,
+            s"trial $trial: COUNT/SUM/MIN/MAX over $kp with $o = $got, model $wantAgg")
+        }
       }
       (1 to 14).foreach { _ =>
         rnd.nextInt(10) match {
