@@ -552,12 +552,8 @@ class CassandraLikeTable(
         try CellStore.writeRun(out, doomed.map(_.copy(ts = ts)),
           certifiedDeletes = !counterTable)
         finally out.close()
-        CellStore.commitSegments(dir,
-          Seq(tmp -> CellStore.newSegmentName(bucket)))
-        // refresh the bucket-stat sidecar (the tombstones just written
-        // flip its tombstoneFree flag — planning reads that from O(1)
-        // bytes instead of walking a stale-listing fallback)
-        CellStore.writeBucketStats(dir, bucket)
+        CellStore.warmSegments(CellStore.commitSegments(dir,
+          Seq(tmp -> CellStore.newSegmentName(bucket))))
       }
     }
   }
@@ -710,7 +706,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
   /** Aggregate pushdown. Spark offers the aggregation here first, and the
     * paths are tried in this order:
     *  1. METADATA-COMPLETE ([[computeMetadataAnswer]]): every aggregate is
-    *     answerable from run-index stats, sidecars or postings, and the
+    *     answerable from run-index stats or postings, and the
     *     driver proves every bucket's conditions (stats-bearing, tombstone-
     *     free or certified-netted, run-disjoint, tails present), so the
     *     final rows are computed at planning with zero cell IO. This tier
@@ -905,13 +901,12 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       case PushedAgg.Max(c) => isVal(c)
       case _ => false
     }
-    // driver-side dynamic check, fold over every bucket's SIDECAR record:
-    // ONE directory listing (the repeated per-bucket listing was the
-    // planning bottleneck VERDICT r4 #4 already retired once), then one
-    // tiny `_bucket_stats/b<n>.stat` read per bucket — O(buckets) bytes on
-    // a cold driver (VERDICT r10 #3); a bucket whose sidecar is absent or
-    // stale transparently walks its run index tails (memoized per JVM),
-    // costing IO, never correctness. Disjointness is judged PER BUCKET
+    // driver-side dynamic check, fold over every bucket's run-stat
+    // reduction: ONE directory listing (the repeated per-bucket listing was
+    // the planning bottleneck VERDICT r4 #4 already retired once), then
+    // each bucket's record reduced from its segments' memoized run stats
+    // (a segment no commit in this process warmed costs one parse of its
+    // index tails). Disjointness is judged PER BUCKET
     // (different buckets never share a key); the min/max reduction runs
     // over the bucket records. The whole-store SUM(value) is the sum of
     // per-run VSUM totals — exactly one visible row per summed cell is
@@ -928,7 +923,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     // serve row-equivalent COUNTs — COUNT(*) / COUNT(address) on
     // transposed, COUNT(*) / COUNT(key) on regular — and SUM of the
     // transposed value column (certified tombstones carry their victims'
-    // values, so the sidecar's nettedSum is the visible total)
+    // values, so the bucket record's nettedSum is the visible total)
     val nettedAnswerable = want.forall {
       case PushedAgg.CountStar => true
       case PushedAgg.Count(c) =>
@@ -946,8 +941,8 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       Options.ReadAsOf).map(_.toLong)
     val recs = Seq.newBuilder[CellStore.BucketStat]
     byBucket.foreach { case (b, files) =>
-      val rec0 = CellStore.bucketStats(table.dir, b, files)
-      val rec = MetadataAggReader.asOfView(table.dir, b, files, rec0,
+      val rec0 = CellStore.bucketStats(files)
+      val rec = MetadataAggReader.asOfView(files, rec0,
           asOfBound) match {
         case Some((_, r)) => r
         case None => return None
@@ -1183,7 +1178,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     * only mutable input) is final before Spark offers aggregates. The
     * histogram's extra-column form memoizes per extraCols alongside
     * (VERDICT r15 #4): a grouped+scalar offer used to re-walk the
-    * base+index sidecars on every grouped offer. */
+    * base+index bucket records on every grouped offer. */
   private lazy val indexedAggCtx: Option[IndexedCtx] = indexedAggContext()
 
   private val indexedAggCtxExtra =
@@ -1315,11 +1310,11 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     var baseRows = 0L
     val baseB = Map.newBuilder[Int, Seq[java.nio.file.Path]]
     CellStore.allSegmentFiles(table.dir).foreach { case (b, files0) =>
-      val rec0 = CellStore.bucketStats(table.dir, b, files0)
+      val rec0 = CellStore.bucketStats(files0)
       if (!rec0.statsValid) return None
       // an as-of bound keeps only the covered files, stats recomputed over
       // the subset from memoized tails; straddling runs decline
-      val (files, rec) = MetadataAggReader.asOfView(table.dir, b, files0,
+      val (files, rec) = MetadataAggReader.asOfView(files0,
         rec0, asOf).getOrElse(return None)
       if (!rec.statsValid) return None
       def colCount(cvs: Seq[CellStore.ColValStat], cb: Array[Byte]): Long =
@@ -1358,9 +1353,9 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       var idxCells = 0L
       val idxB = Map.newBuilder[Int, Seq[java.nio.file.Path]]
       CellStore.allSegmentFiles(idxDir).foreach { case (b, files0) =>
-        val rec0 = CellStore.bucketStats(idxDir, b, files0)
+        val rec0 = CellStore.bucketStats(files0)
         if (!rec0.statsValid) return None
-        val (files, rec) = MetadataAggReader.asOfView(idxDir, b, files0,
+        val (files, rec) = MetadataAggReader.asOfView(files0,
           rec0, asOf).getOrElse(return None)
         if (!(rec.statsValid && rec.tombstoneFree)) return None
         idxCells += rec.cells
@@ -1699,8 +1694,8 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
   private def computeIndexedGroupAnswer(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     : Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] = {
-    // cheap shape gate FIRST — the ctx proof walks every bucket's
-    // sidecar, pure waste for a group key this path can never serve
+    // cheap shape gate FIRST — the ctx proof reduces every bucket's
+    // run stats, pure waste for a group key this path can never serve
     val groupCol = aggregation.groupByExpressions().toSeq.map(aggCol) match {
       case Seq(Some(g)) => g
       case _ => return None
@@ -2359,14 +2354,13 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       Options.ReadAsOf).map(_.toLong)
     byBucket.foreach { case (b, files0) =>
       if (relevant(b)) {
-        // bucket-level judgment from the sidecar (walk fallback inside):
-        // O(1) per bucket instead of full index tails; an as-of bound
-        // between epochs gates per run ([[MetadataAggReader.asOfView]])
-        // and the positional arithmetic below runs over the covered
-        // file subset only
-        val rec0 = CellStore.bucketStats(table.dir, b, files0)
+        // bucket-level judgment from the memoized run stats; an as-of
+        // bound between epochs gates per run
+        // ([[MetadataAggReader.asOfView]]) and the positional arithmetic
+        // below runs over the covered file subset only
+        val rec0 = CellStore.bucketStats(files0)
         val (files, rec) =
-          MetadataAggReader.asOfView(table.dir, b, files0, rec0,
+          MetadataAggReader.asOfView(files0, rec0,
             asOfBound) match {
             case Some(fr) => fr
             case None => return None
@@ -2784,7 +2778,7 @@ object CellScanBuilder {
     * the distributed partial path owns the point probes. */
   val MaxCompletePoints = 8192
 
-  /** Test instrumentation: proof-context walks (base+index sidecar
+  /** Test instrumentation: proof-context walks (base+index bucket-record
     * passes) — pins the per-extraCols memoization (a grouped+scalar
     * planning pass must not re-walk per offer). */
   private[graft] val contextPasses =
@@ -2904,6 +2898,12 @@ final case class CellInputPartition(
   override def partitionKey(): org.apache.spark.sql.catalyst.InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](bucket))
+
+  /** The segments a reader of this split merges: the pinned `files`, else
+    * every committed segment of the bucket, listed now. */
+  def segments(): Seq[java.nio.file.Path] =
+    if (files != null) files.map(n => java.nio.file.Paths.get(tableDir, CellStore.SstDir, n))
+    else CellStore.segmentFiles(tableDir, bucket)
 }
 
 class CellScan(
@@ -3208,38 +3208,25 @@ class CellScan(
     val rowFanout =
       if (table.mapping.transposed) 1L
       else math.max(1, table.mapping.cellFields.size).toLong
-    // EXACT numRows when the view is clean: per bucket, the STAT-sidecar
-    // record if fresh (O(1) bytes, and it proves the multi-run-disjoint
-    // case too), else the fixed 16-byte STAT suffix per run
-    // (SegmentMeta.quick) for the single-run steady state. Feeds Catalyst's
-    // broadcast threshold with the truth instead of the cells/fan-out
-    // estimate, which over-counts every overwritten address. Planning a
-    // plain scan must never parse full index tails (blooms included)
-    // across the whole store driver-side — so NO walk fallback here
-    // (readBucketStats, not bucketStats); the aggregate paths own the
-    // full-tail reads, for aggregate queries only.
+    // EXACT numRows when the view is clean: per planned bucket, the
+    // run-stat reduction ([[CellStore.bucketStats]], from run stats every
+    // commit warms), which proves the multi-run-disjoint and the netted
+    // cases too. Feeds Catalyst's broadcast threshold with the truth
+    // instead of the cells/fan-out estimate, which over-counts every
+    // overwritten address.
     val exact: Option[Long] =
       if (!cleanUnslicedView) None
       else plannedBuckets.foldLeft(Option(0L)) { (acc, b) =>
         acc.flatMap { total =>
-          val files = segmentsByBucket.getOrElse(b, Nil)
-          CellStore.readBucketStats(table.dir, b, files) match {
-            case Some(rec) =>
-              if (rec.tombstoneFree && rec.disjoint)
-                Some(total + (if (table.mapping.transposed) rec.distinctAddrs
-                  else rec.distinctKeys))
-              else if (rec.nettedOk)
-                // certified delete epochs: exact visible rows by netting
-                Some(total + (if (table.mapping.transposed) rec.nettedAddrs
-                  else rec.nettedKeys))
-              else None
-            case None =>
-              val qs = files.flatMap(CellStore.meta(_).quick.toSeq)
-              if (qs.lengthCompare(1) > 0 || qs.exists(_.tombstones != 0)) None
-              else Some(total + qs.map(s =>
-                if (table.mapping.transposed) s.distinctAddrs.toLong
-                else s.distinctKeys.toLong).sum)
-          }
+          val rec = CellStore.bucketStats(segmentsByBucket.getOrElse(b, Nil))
+          if (rec.tombstoneFree && rec.disjoint)
+            Some(total + (if (table.mapping.transposed) rec.distinctAddrs
+              else rec.distinctKeys))
+          else if (rec.nettedOk)
+            // certified delete epochs: exact visible rows by netting
+            Some(total + (if (table.mapping.transposed) rec.nettedAddrs
+              else rec.nettedKeys))
+          else None
         }
       }
     // EXACT numRows under pushed KEY filters, from the same range-count
@@ -3249,12 +3236,11 @@ class CellScan(
     // anything auto-broadcasts instead of carrying the whole store's
     // size. Containment: this runs at EVERY planning of a plain filtered
     // scan, so it engages ONLY for a small finite key set — bucket
-    // routing then prunes the tail reads to the keys' own buckets. A key
-    // RANGE (any layout) stays on the estimate: the covered buckets are
-    // unbounded and planning a plain scan must never walk full index
-    // tails across the store (the SegmentMeta.quick policy above). Range
-    // COUNTS remain metadata-answerable — through the pushed-aggregate
-    // paths, which run only for aggregate queries.
+    // routing then prunes the point probes to the keys' own buckets. A
+    // key RANGE (any layout) stays on the estimate: its positional count
+    // would probe every covered bucket's indexes. Range COUNTS remain
+    // metadata-answerable — through the pushed-aggregate paths, which run
+    // only for aggregate queries.
     val exactFiltered: Option[Long] =
       if (exact.isDefined || filters.isEmpty || aggs.nonEmpty) None
       else if (!table.mapping.transposed) None
@@ -3269,8 +3255,7 @@ class CellScan(
         if (keys.points == null || keys.points.length > CellScanBuilder.MaxStatPoints) None
         else {
           val provable = plannedBuckets.forall { b =>
-            val rec = CellStore.bucketStats(table.dir, b,
-              segmentsByBucket.getOrElse(b, Nil))
+            val rec = CellStore.bucketStats(segmentsByBucket.getOrElse(b, Nil))
             MetadataAggReader.rangeConditionsOkB(rec, Seq(PushedAgg.CountStar),
               needColEntries = cols != null, needSubEntries = subs != null)
           }
@@ -3291,9 +3276,9 @@ class CellScan(
     // store's cells-per-key fan-out. An UPPER bound — so a broadcast
     // decision made with it is safe (overestimating never broadcasts
     // something too big) while a thousand-key IN stops inheriting the
-    // WHOLE store's size — at O(relevant buckets) sidecar bytes under the
-    // same no-walk planning policy (a bucket without a fresh sidecar
-    // keeps the whole-store estimate). A per-bucket membership sketch was
+    // WHOLE store's size — from the relevant buckets' run-stat reductions
+    // (a bucket without valid STAT counters keeps the whole-store
+    // estimate). A per-bucket membership sketch was
     // evaluated and rejected: a fixed-size mergeable filter saturates at
     // realistic bucket cardinalities, and the broadcast decision only
     // needs this bound (SURVEY §7.4).
@@ -3307,12 +3292,9 @@ class CellScan(
         if (ks == null || ks.length <= CellScanBuilder.MaxStatPoints) None
         else plannedBuckets.foldLeft(Option((0L, 0L))) { (acc, b) =>
           acc.flatMap { case (dk, cls) =>
-            CellStore.readBucketStats(table.dir, b,
-              segmentsByBucket.getOrElse(b, Nil)) match {
-              case Some(rec) if rec.statsValid =>
-                Some((dk + rec.distinctKeys, cls + rec.cells))
-              case _ => None
-            }
+            val rec = CellStore.bucketStats(segmentsByBucket.getOrElse(b, Nil))
+            if (rec.statsValid) Some((dk + rec.distinctKeys, cls + rec.cells))
+            else None
           }
         }.map { case (dk, cls) =>
           val present = math.min(ks.size.toLong, dk)
@@ -3501,9 +3483,12 @@ final case class CellReaderFactory(
     // metadata-only aggregates: a planner-flagged partition answers its
     // COUNT/MIN/MAX from run-index stats when the run-level conditions
     // hold (index-tail IO only); otherwise it falls through to the
-    // cell-fold scan below
-    if (cp.aggStats && aggs.nonEmpty && aggGroupKeys.isEmpty) {
-      MetadataAggReader.create(cp, ColumnMapping(mappedFields), aggs,
+    // cell-fold scan below, over the same listing
+    val listed =
+      if (cp.aggStats && aggs.nonEmpty && aggGroupKeys.isEmpty) cp.segments()
+      else null
+    if (listed != null) {
+      MetadataAggReader.create(cp, listed, ColumnMapping(mappedFields), aggs,
         (k: String) => Options.effective(options, tableProps, k),
         filters) match {
         case Some(r) => return r
@@ -3517,7 +3502,7 @@ final case class CellReaderFactory(
     }
     val base = new CellPartitionReader(cp, ColumnMapping(mappedFields), required,
       filters, (k: String) => Options.effective(options, tableProps, k), limit,
-      dropped, limitLast)
+      dropped, limitLast, listed)
     val counted = accums match {
       case None => base
       case Some(a) => new CountedReader {
@@ -3646,7 +3631,7 @@ object MetadataAggReader {
   }
 
   /** [[rangeConditionsOk]]'s bucket-record twin, consumed by the COMPLETE
-    * planner (O(1) per bucket from the sidecar). Must stay judgment-
+    * planner (one reduced record per bucket). Must stay judgment-
     * equivalent to the run-level form the per-bucket partial readers use —
     * both are independently sound, but divergence would make complete and
     * partial answers qualify differently for no reason. */
@@ -3753,7 +3738,7 @@ object MetadataAggReader {
   /** Resolve the (files, stats) pair a metadata path may answer from
     * under an optional AS-OF bound. No bound — or a bound covering the
     * whole bucket (TSRG on every run and maxTs ≤ bound ⇒ the bounded
-    * view IS the current view) — keeps the committed record unchanged.
+    * view IS the current view) — keeps the listing's record unchanged.
     * A bound BETWEEN commit epochs gates PER RUN
     * ([[CellStore.asOfCoveredFiles]], SURVEY §7.4 #5): fully-covered
     * runs answer positionally through their subset record, fully-newer
@@ -3762,8 +3747,6 @@ object MetadataAggReader {
     * that is netted NOW can be tombstone-free AS-OF a pre-delete bound,
     * so the historical audit read keeps the full fast-path set. */
   private[cassandralike] def asOfView(
-      tableDir: String,
-      bucket: Int,
       files: Seq[java.nio.file.Path],
       rec: CellStore.BucketStat,
       asOf: Option[Long])
@@ -3772,39 +3755,31 @@ object MetadataAggReader {
       case None => Some((files, rec))
       case Some(a) if rec.tsAll && rec.maxTs <= a => Some((files, rec))
       case Some(a) =>
-        // cold-driver planning IO: the per-run judgments below answer
-        // from the sidecar's per-file section (one read) instead of
-        // opening every segment's index tail
-        CellStore.seedRunStatsFromSidecar(tableDir, bucket, files)
         CellStore.asOfCoveredFiles(files, a)
-          .map(cov => (cov, CellStore.subsetBucketStats(cov)))
+          .map(cov => (cov, CellStore.bucketStats(cov)))
     }
 
+  /** `files0` is the partition's segments ([[CellInputPartition.segments]]),
+    * listed once by the caller, which merges the same list if this
+    * declines. */
   def create(
       part: CellInputPartition,
+      files0: Seq[java.nio.file.Path],
       mapping: ColumnMapping,
       aggs: Seq[PushedAgg],
       opt: String => Option[String],
       filters: Array[Filter] = Array.empty): Option[PartitionReader[InternalRow]] = {
-    val files0 =
-      if (part.files != null) part.files.map(n =>
-        java.nio.file.Paths.get(part.tableDir, CellStore.SstDir, n))
-      else CellStore.segmentFiles(part.tableDir, part.bucket)
-    // per-task planning IO through the bucket-stat SIDECAR (walk fallback
-    // inside; a change-feed part whose pinned file list differs from the
-    // committed listing mismatches the sidecar and walks exactly its own
-    // files) — at thousands of segments per bucket the reader judges its
-    // conditions from one fixed-size record instead of every index tail,
-    // through the SAME rangeConditionsOkB judgments the complete planner
-    // uses, so the two paths cannot drift (VERDICT r10 follow-up; was
-    // SURVEY §7.4 round-12 #3)
-    val rec0 = CellStore.bucketStats(part.tableDir, part.bucket, files0)
+    // the reader judges its conditions from its segments' run-stat
+    // reduction (one record, from memoized run stats), through the SAME
+    // rangeConditionsOkB judgments the complete planner uses, so the two
+    // paths cannot drift (VERDICT r10 follow-up; was SURVEY §7.4
+    // round-12 #3); a change-feed part reduces exactly its pinned files
+    val rec0 = CellStore.bucketStats(files0)
     // an AS-OF bound between epochs gates PER RUN ([[asOfView]]): covered
     // runs answer positionally from their subset record, newer runs drop
     // out, straddlers fold
     val asOf = opt(Options.ReadAsOf).map(_.toLong)
-    val (files, rec) = asOfView(part.tableDir, part.bucket, files0,
-        rec0, asOf) match {
+    val (files, rec) = asOfView(files0, rec0, asOf) match {
       case Some(fr) => fr
       case None => return None
     }
@@ -3827,7 +3802,7 @@ object MetadataAggReader {
     if (part.lower != null || part.upper != null) return None
     if (netted) {
       // netted unfiltered COUNTs + SUMs: visible rows and the netted
-      // value total from the sidecar reductions; REGULAR per-column
+      // value total from the bucket reductions; REGULAR per-column
       // COUNT(c)/SUM(c) from the NETTED CVAL twins (live − certified,
       // round 13 — the whole-store "column totals after a purge").
       // Transposed SUM only on the value column.
@@ -4923,7 +4898,11 @@ class CellPartitionReader(
     opt: String => Option[String],
     limit: Option[Int] = None,
     dropped: Map[String, Long] = Map.empty,
-    limitLast: Boolean = false)
+    limitLast: Boolean = false,
+    // the partition's segments when the caller already listed them
+    // ([[CellInputPartition.segments]]); null = list at open, only if a
+    // key window is left to merge
+    files: Seq[java.nio.file.Path] = null)
   extends CountedReader {
 
   // T2: positional per-cell validator list (reference's
@@ -5030,9 +5009,7 @@ class CellPartitionReader(
     now = opt(Options.ReadNow).map(_.toLong).getOrElse(0L),
     counterMerge = opt(Options.CounterMerge).exists(_.toBoolean),
     onlyFiles =
-      if (part.files == null) null
-      else part.files.map(n =>
-        java.nio.file.Paths.get(part.tableDir, CellStore.SstDir, n)),
+      if (files != null || part.files == null) files else part.segments(),
     counters = counters,
     cols = cols,
     subs = subs)

@@ -125,17 +125,18 @@ private[graft] object CellCommit {
     // index segment ever lacks its encoding version.
     idxFiles.map(_._1).distinct.foreach(c =>
       Index.stampFormat(Index.dir(table.dir, c)))
-    idxFiles.groupBy(_._1).foreach { case (col, fs) =>
+    val committedIdx = idxFiles.groupBy(_._1).toSeq.flatMap { case (col, fs) =>
       val idxDir = Index.dir(table.dir, col)
       val sst = Paths.get(idxDir, CellStore.SstDir)
       CellStore.commitSegments(idxDir, fs.toSeq.map { case (_, bucket, tmp) =>
         sst.resolve(tmp) -> CellStore.newSegmentName(bucket)
       })
     }
-    CellStore.commitSegments(table.dir, files.toSeq.map { case (bucket, tmp) =>
-      Paths.get(table.dir, CellStore.SstDir, tmp) ->
-        CellStore.newSegmentName(bucket)
-    })
+    val committed = committedIdx ++
+      CellStore.commitSegments(table.dir, files.toSeq.map { case (bucket, tmp) =>
+        Paths.get(table.dir, CellStore.SstDir, tmp) ->
+          CellStore.newSegmentName(bucket)
+      })
     // size-tiered auto-compaction: any touched bucket now holding more than
     // `compact.segments.max` committed segments is full-compacted before the
     // commit returns — read amplification stays bounded under arbitrarily
@@ -159,21 +160,10 @@ private[graft] object CellCommit {
             case None => over.foreach { case (d, b) => CellStore.compactBucket(d, b) }
           }
       }
-    // per-bucket STAT sidecars for every touched bucket, from the final
-    // post-compaction listing: a cold driver then plans complete metadata
-    // aggregates (count(*), sum(value), min/max) from O(buckets) sidecar
-    // bytes instead of walking every segment's index tails. After a
-    // truncate, untouched buckets lost their segments too — their stale
-    // sidecars were cleared by CellStore.truncate.
-    files.map(_._1).distinct.foreach(b =>
-      CellStore.writeBucketStats(table.dir, b))
-    // index sub-store buckets refresh too: compaction above may have
-    // written sidecars under index dirs, and a later epoch's segments would
-    // otherwise leave them stale forever (harmless — the listing check
-    // rejects them — but every aggregate-planning call over the index
-    // sub-store would walk index tails instead of reading one record)
-    idxFiles.map { case (c, b, _) => (c, b) }.distinct.foreach { case (c, b) =>
-      CellStore.writeBucketStats(Index.dir(table.dir, c), b) }
+    // warm the run stats of the committed segments compaction left (its
+    // own outputs are warmed by compactBucket), so aggregate planning after
+    // the commit reduces every segment from memory
+    CellStore.warmSegments(committed.filter(Files.exists(_)))
   }
 
   def abortEpoch(table: CassandraLikeTable,

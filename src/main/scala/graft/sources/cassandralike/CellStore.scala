@@ -615,8 +615,8 @@ object CellStore {
       runMin: Long, runMax: Long,
       spanMins: Array[Long], spanMaxs: Array[Long])
 
-  /** [[ColValIdx]] reduced to its run totals — what [[RunStats]] and the
-    * bucket-stat sidecar carry (the per-entry arrays stay in the index). */
+  /** [[ColValIdx]] reduced to its run totals — what [[RunStats]] and
+    * [[BucketStat]] carry (the per-entry arrays stay in the index). */
   final case class ColValStat(col: Array[Byte], sumsOk: Boolean,
       rangeOk: Boolean, count: Long, sum: Long, min: Long, max: Long)
 
@@ -880,10 +880,7 @@ object CellStore {
     // exactly during the single sorted write pass. Written last so every
     // older tail keeps its position; legacy readers stop before it,
     // legacy files parse with -1s (stats unknown → the metadata path
-    // declines and the scan folds cells as before). INVARIANT: STAT must
-    // stay the FINAL tail — [[SegmentMeta.quick]] reads it as the fixed
-    // 16-byte suffix of the index block; a future tail appended after it
-    // must bump that reader.
+    // declines and the scan folds cells as before).
     if (statTombstones >= 0 && statKeys >= 0 && statAddrs >= 0) {
       out.writeInt(StatsMagic)
       out.writeInt(statTombstones)
@@ -1169,10 +1166,6 @@ object CellStore {
       tsMax: Long = 0L,
       hasTsRange: Boolean = false)
 
-  /** The STAT counters of one run, without the rest of its index. */
-  final case class QuickStats(cells: Int, tombstones: Int,
-      distinctKeys: Int, distinctAddrs: Int)
-
   /** One non-empty run of a segment: where it sits in the file and what
     * its index tails say about it. */
   final case class RunMeta(info: RunInfo, stats: RunStats)
@@ -1196,24 +1189,13 @@ object CellStore {
 
     def cells: Long = runs.iterator.map(_.cellCount.toLong).sum
 
-    @volatile private var stats0: Array[RunStats] = _
-
-    /** Per-run [[RunStats]], from the index tails or from a bucket-stat
-      * sidecar ([[seedRunStatsFromSidecar]]). */
-    def stats: Array[RunStats] = {
-      if (stats0 == null) synchronized {
-        if (stats0 == null) {
-          runTailReads.incrementAndGet()
-          stats0 = fromIndexes(runStatsOf)
-        }
-      }
-      stats0
+    /** Per-run [[RunStats]], from the index tails (counted in
+      * [[runTailReads]]). Every commit warms it for the segments it
+      * commits, so in-process planning never parses a tail it wrote. */
+    lazy val stats: Array[RunStats] = {
+      runTailReads.incrementAndGet()
+      fromIndexes(runStatsOf)
     }
-
-    private[CellStore] def hasStats: Boolean = stats0 != null
-
-    private[CellStore] def seedStats(s: Array[RunStats]): Unit =
-      synchronized { if (stats0 == null) stats0 = s }
 
     /** Per-run key blooms (null element = pre-bloom run) — Cassandra's
       * posture, where SSTable blooms are resident and a point read that
@@ -1253,38 +1235,6 @@ object CellStore {
       (lo, hi)
     }
 
-    /** STAT counters of every non-empty run, read from the FIXED 16-byte
-      * suffix of each index block — STAT is always the LAST tail
-      * ([[serializeIndex]] keeps that invariant; any future tail appended
-      * after it must bump this reader). O(16 bytes) per run, so cheap
-      * enough for every planning's exact-numRows check, where parsing full
-      * index tails (blooms included) would be a driver-side terabyte at
-      * 100-TB segment counts. A legacy run whose trailing bytes happen to
-      * spell the magic is rejected by the range sanity checks (counts must
-      * be within the run's cell count and mutually consistent) — and a
-      * false negative only costs the exact statistic, never correctness.
-      * tombstones = -1 marks a run without a (valid) tail. */
-    lazy val quick: Array[QuickStats] = {
-      val ch = java.nio.channels.FileChannel.open(file)
-      try liveInfos.map { ri =>
-        val legacy = QuickStats(ri.cellCount, -1, -1, -1)
-        if (ri.indexByteLen < 16) legacy
-        else {
-          val buf = java.nio.ByteBuffer.allocate(16)
-          val pos = ri.indexOffset + ri.indexByteLen - 16
-          while (buf.hasRemaining) {
-            if (ch.read(buf, pos + buf.position()) < 0)
-              throw new EOFException(s"truncated index tail: $file")
-          }
-          val (m, t, k, a) = (buf.getInt(0), buf.getInt(4), buf.getInt(8), buf.getInt(12))
-          if (m != StatsMagic || t < 0 || k < 1 || a < k ||
-              t > ri.cellCount || a > ri.cellCount) legacy
-          else QuickStats(ri.cellCount, t, k, a)
-        }
-      }.toArray
-      finally ch.close()
-    }
-
     /** Run headers of the non-empty runs, without their stats. */
     def liveInfos: IndexedSeq[RunInfo] = runs.filter(_.cellCount > 0)
 
@@ -1317,13 +1267,12 @@ object CellStore {
     else new SegmentMeta(file)
   }
 
-  /** Drop every segment handle and bucket-stat record at or under `path`
-    * (a table dir, or one segment). Every operation that deletes or
-    * rewrites segments calls it, so memory holds live segments only. */
+  /** Drop every segment handle at or under `path` (a table dir, or one
+    * segment). Every operation that deletes or rewrites segments calls it,
+    * so memory holds live segments only. */
   private[graft] def forgetSegments(path: Path): Unit = {
     val p = path.toAbsolutePath.normalize
     metas.keySet.removeIf(_.startsWith(p))
-    bucketStatCache.keySet.removeIf(_.startsWith(p))
   }
 
   /** Paths that hold a segment handle right now. */
@@ -1332,13 +1281,15 @@ object CellStore {
     metas.keySet.asScala.toSeq
   }
 
-  /** Test hook: drop every handle and bucket-stat record, so a spec can
-    * replay the COLD-driver planning cost inside one JVM, or rewrite a
-    * committed segment in place. */
-  private[graft] def clearPlannerCaches(): Unit = {
-    metas.clear()
-    bucketStatCache.clear()
-  }
+  /** Test hook: drop every handle, so a spec can replay the COLD-driver
+    * planning cost inside one JVM, or rewrite a committed segment in
+    * place. */
+  private[graft] def clearPlannerCaches(): Unit = metas.clear()
+
+  /** Read the [[SegmentMeta.stats]] of segments a commit just made
+    * visible, so planning after the commit reduces them from memory. */
+  private[graft] def warmSegments(files: Seq[Path]): Unit =
+    files.foreach(meta(_).stats)
 
   // ---- positional window aggregates: one summary kernel and one extremal
   // address seek, both over half-open composite address windows ----
@@ -1894,10 +1845,9 @@ object CellStore {
   private def addSigned(acc: Long, sign: Int, x: Long): Long =
     if (sign >= 0) Math.addExact(acc, x) else Math.subtractExact(acc, x)
 
-  /** Diagnostic: number of [[SegmentMeta.stats]] fills that parsed the
-    * index tails of a file. The incremental-sidecar spec pins commit-time
-    * refreshes to O(new files) by watching this not move for carried
-    * files. */
+  /** Diagnostic: number of [[SegmentMeta.stats]] fills, one per segment
+    * whose index tails were parsed. MetadataAggSpec pins a commit to
+    * O(new files) parses and a warm planning to none. */
   val runTailReads = new java.util.concurrent.atomic.AtomicLong()
 
   /** Diagnostic: run-index parses made for point windows — by
@@ -1932,19 +1882,15 @@ object CellStore {
       tsMax = idx.tsMax,
       hasTsRange = idx.hasTsRange)
 
-  // ---- per-bucket STAT sidecar: cold-driver planning in O(buckets) ----
+  // ---- per-bucket run-stat reduction ----
 
-  /** Aggregated run-stat judgment of ONE bucket — everything the
-    * complete-pushdown planner and the exact-statistics path ask of a
-    * bucket, reduced to a fixed-size record so a cold driver plans a
-    * 4096-bucket `count(*)` from 4096 tiny sidecar reads instead of
-    * walking every segment's full index tails (VERDICT r10 #3; the
-    * `_range_digests/` sidecar-plus-self-healing-fallback pattern).
-    * `files` is the EXACT (name, size) listing the record was computed
-    * from — a reader whose own listing differs ignores the sidecar and
-    * walks (stale sidecars can cost IO, never correctness). */
+  /** Aggregated run-stat judgment of ONE bucket, or of any segment subset
+    * (an as-of bound's covered files) — everything the complete-pushdown
+    * planner, the metadata readers and the exact-statistics path ask of a
+    * bucket, reduced by [[bucketStats]] from the segments' memoized
+    * [[SegmentMeta.stats]]. Cassandra keeps its statistics per SSTable
+    * (`Statistics.db`) the same way, with no cross-file summary on disk. */
   final case class BucketStat(
-      files: Seq[(String, Long)],
       runs: Int, cells: Long,
       tombstoneFree: Boolean, disjoint: Boolean, allAddrsDistinct: Boolean,
       colEntriesAll: Boolean, subEntriesAll: Boolean,
@@ -2004,25 +1950,8 @@ object CellStore {
       nettedColValsOk: Boolean = false,
       nettedColVals: Seq[ColValStat] = Nil)
 
-  val BucketStatsDir = "_bucket_stats"
-  // "BST8" — bumped twice in r13: per-column NETTED reductions, then the
-  // per-file RUN-STATS section that makes the commit-time refresh
-  // incremental (BST6 added statsValid + CVAL + netting + TSRG); older
-  // sidecars parse as corrupt → one walk, then the rewrite upgrades them
-  private val BucketStatMagic = 0x42535438
-
-  /** Diagnostic: number of bucket-stat requests that fell back to walking
-    * run index tails (sidecar absent, stale, or corrupt). Tests pin the
-    * sidecar fast path by asserting this does not move. */
-  val bucketStatWalks = new java.util.concurrent.atomic.AtomicLong()
-
-  private def fileSig(files: Seq[Path]): Seq[(String, Long)] =
-    files.map(f => (f.getFileName.toString, Files.size(f)))
-      .sortBy(_._1)
-
   /** Reduce one bucket's per-run stats to its [[BucketStat]] record. */
-  private def aggregateBucketStat(sig: Seq[(String, Long)],
-      stats: Seq[RunStats]): BucketStat = {
+  private def aggregateBucketStat(stats: Seq[RunStats]): BucketStat = {
     val tombstoneFree = !stats.exists(_.tombstones != 0) // legacy -1 counts dirty
     val disjoint =
       if (stats.lengthCompare(1) <= 0) true
@@ -2067,7 +1996,7 @@ object CellStore {
           }
         })
         // runaway union (schema churn across many runs): drop rather than
-        // grow the sidecar unboundedly — costs the fast path, never truth
+        // grow the record unboundedly — costs the fast path, never truth
         if (m.size > 4 * MaxColValCols) { colValsAll = false; Nil }
         else m.values.toSeq
       }
@@ -2133,7 +2062,6 @@ object CellStore {
         m.values.toSeq
       }
     BucketStat(
-      files = sig,
       runs = stats.length,
       cells = stats.map(_.cells.toLong).sum,
       tombstoneFree = tombstoneFree,
@@ -2174,307 +2102,6 @@ object CellStore {
       nettedColVals = nettedColVals)
   }
 
-  private def bucketStatFile(tableDir: String, bucket: Int): Path =
-    Paths.get(tableDir, BucketStatsDir, s"b$bucket.stat")
-
-  /** (Re)write one bucket's sidecar from its CURRENT committed listing —
-    * called at write commit and after compaction (the two points segments
-    * change under the single-maintainer discipline). An empty bucket
-    * deletes its sidecar. Atomic temp+rename; a crash mid-write leaves a
-    * temp file nothing reads.
-    *
-    * INCREMENTAL (round 13): the sidecar carries a per-file RUN-STATS
-    * section after the reduction, so a refresh re-reads index tails only
-    * for files the previous sidecar has not seen — O(new tails) per
-    * commit instead of O(all tails), the difference between a constant
-    * and a linear commit cost at thousands of segments per bucket.
-    * Files removed by compaction simply drop out of the carried map
-    * (matched by (name, size), the same signature the staleness
-    * authority trusts for the whole record). Planning reads are
-    * unaffected: [[readBucketStats]] stops parsing BEFORE the per-file
-    * section, keeping planning IO at the reduction's ~fixed bytes. */
-  def writeBucketStats(tableDir: String, bucket: Int): Unit = {
-    val target = bucketStatFile(tableDir, bucket)
-    val files = segmentFiles(tableDir, bucket)
-    if (files.isEmpty) {
-      Files.deleteIfExists(target)
-      bucketStatCache.remove(target.toAbsolutePath.normalize)
-      return
-    }
-    val prev = readSidecarRunStats(target)
-    val perFile: Seq[(Path, Array[RunStats])] = files.map { f =>
-      val sig = (f.getFileName.toString, Files.size(f))
-      f -> prev.getOrElse(sig, meta(f).stats)
-    }
-    val rec = aggregateBucketStat(fileSig(files),
-      perFile.flatMap(_._2.toSeq))
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(s"b$bucket-${UUID.randomUUID()}.tmp")
-    val out = new DataOutputStream(new BufferedOutputStream(
-      Files.newOutputStream(tmp)))
-    try {
-      out.writeInt(BucketStatMagic)
-      out.writeInt(rec.files.length)
-      rec.files.foreach { case (n, sz) => out.writeUTF(n); out.writeLong(sz) }
-      out.writeInt(rec.runs)
-      out.writeLong(rec.cells)
-      out.writeBoolean(rec.tombstoneFree)
-      out.writeBoolean(rec.disjoint)
-      out.writeBoolean(rec.allAddrsDistinct)
-      out.writeBoolean(rec.colEntriesAll)
-      out.writeBoolean(rec.subEntriesAll)
-      out.writeLong(rec.distinctKeys)
-      out.writeLong(rec.distinctAddrs)
-      out.writeBoolean(rec.valSumsAll)
-      out.writeBoolean(rec.valTotalOk)
-      out.writeLong(rec.valTotal)
-      writeBytes(out, rec.firstKey)
-      writeBytes(out, rec.lastKey)
-      out.writeBoolean(rec.colWindowsAll)
-      writeBytes(out, rec.colMin)
-      writeBytes(out, rec.colMax)
-      out.writeBoolean(rec.subWindowsAll)
-      writeBytes(out, rec.subMin)
-      writeBytes(out, rec.subMax)
-      out.writeBoolean(rec.valRangeAll)
-      out.writeLong(rec.valMin)
-      out.writeLong(rec.valMax)
-      out.writeBoolean(rec.statsValid)
-      out.writeBoolean(rec.colValsAll)
-      out.writeInt(rec.colVals.length)
-      rec.colVals.foreach { cv =>
-        writeBytes(out, cv.col)
-        out.writeBoolean(cv.sumsOk)
-        out.writeBoolean(cv.rangeOk)
-        out.writeLong(cv.count)
-        out.writeLong(cv.sum)
-        out.writeLong(cv.min)
-        out.writeLong(cv.max)
-      }
-      out.writeBoolean(rec.nettedOk)
-      out.writeLong(rec.nettedAddrs)
-      out.writeLong(rec.nettedKeys)
-      out.writeBoolean(rec.tsAll)
-      out.writeLong(rec.maxTs)
-      out.writeBoolean(rec.nettedSumOk)
-      out.writeLong(rec.nettedSum)
-      out.writeBoolean(rec.nettedColValsOk)
-      out.writeInt(rec.nettedColVals.length)
-      rec.nettedColVals.foreach { cv =>
-        writeBytes(out, cv.col)
-        out.writeBoolean(cv.sumsOk)
-        out.writeLong(cv.count)
-        out.writeLong(cv.sum)
-      }
-      // per-file RUN-STATS section (incremental refresh; parse-optional —
-      // planning readers stop before it)
-      out.writeInt(perFile.length)
-      perFile.foreach { case (f, rs) =>
-        out.writeUTF(f.getFileName.toString)
-        out.writeLong(Files.size(f))
-        out.writeInt(rs.length)
-        rs.foreach(writeRunStats(out, _))
-      }
-    } finally out.close()
-    Files.move(tmp, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    bucketStatCache.remove(target.toAbsolutePath.normalize)
-  }
-
-  private def writeRunStats(out: DataOutputStream, s: RunStats): Unit = {
-    out.writeInt(s.cells)
-    writeBytes(out, s.firstKey)
-    writeBytes(out, s.lastKey)
-    writeBytes(out, s.colMin)
-    writeBytes(out, s.colMax)
-    writeBytes(out, s.subMin)
-    writeBytes(out, s.subMax)
-    out.writeInt(s.tombstones)
-    out.writeInt(s.distinctKeys)
-    out.writeInt(s.distinctAddrs)
-    out.writeBoolean(s.colEntries)
-    out.writeBoolean(s.subEntries)
-    out.writeBoolean(s.hasKeyPrefix)
-    out.writeBoolean(s.hasValSums)
-    out.writeLong(s.valTotal)
-    out.writeBoolean(s.hasValRange)
-    out.writeLong(s.valMin)
-    out.writeLong(s.valMax)
-    if (s.colVals == null) out.writeInt(-1)
-    else {
-      out.writeInt(s.colVals.length)
-      s.colVals.foreach { cv =>
-        writeBytes(out, cv.col)
-        out.writeBoolean(cv.sumsOk)
-        out.writeBoolean(cv.rangeOk)
-        out.writeLong(cv.count)
-        out.writeLong(cv.sum)
-        out.writeLong(cv.min)
-        out.writeLong(cv.max)
-      }
-    }
-    out.writeBoolean(s.certDeletes)
-    out.writeLong(s.tsMin)
-    out.writeLong(s.tsMax)
-    out.writeBoolean(s.hasTsRange)
-  }
-
-  private def readRunStats0(in: DataInputStream): RunStats = {
-    val cells = in.readInt()
-    val firstKey = readBytes(in)
-    val lastKey = readBytes(in)
-    val colMin = readBytes(in)
-    val colMax = readBytes(in)
-    val subMin = readBytes(in)
-    val subMax = readBytes(in)
-    val tombstones = in.readInt()
-    val distinctKeys = in.readInt()
-    val distinctAddrs = in.readInt()
-    val colEntries = in.readBoolean()
-    val subEntries = in.readBoolean()
-    val hasKeyPrefix = in.readBoolean()
-    val hasValSums = in.readBoolean()
-    val valTotal = in.readLong()
-    val hasValRange = in.readBoolean()
-    val valMin = in.readLong()
-    val valMax = in.readLong()
-    val ncv = in.readInt()
-    val colVals =
-      if (ncv < 0) null
-      else Array.fill(ncv)(ColValStat(readBytes(in), in.readBoolean(),
-        in.readBoolean(), in.readLong(), in.readLong(), in.readLong(),
-        in.readLong()))
-    RunStats(cells, firstKey, lastKey, colMin, colMax, subMin, subMax,
-      tombstones, distinctKeys, distinctAddrs, colEntries, subEntries,
-      hasKeyPrefix, hasValSums, valTotal, hasValRange, valMin, valMax,
-      colVals, in.readBoolean(), in.readLong(), in.readLong(),
-      in.readBoolean())
-  }
-
-  /** Fill the [[SegmentMeta.stats]] of one bucket's segments from its
-    * sidecar's per-file section: a COLD driver's per-run judgments (as-of
-    * gating, subset stats) then answer from ONE sidecar read instead of
-    * opening every segment's tail — the planning twin of the incremental
-    * commit refresh. Only files whose (name, size) signature matches a
-    * live segment seed (the same staleness authority as the reduction);
-    * handles that already hold stats are untouched, so once every file
-    * holds them the sidecar is not read again. */
-  def seedRunStatsFromSidecar(tableDir: String, bucket: Int,
-      files: Seq[Path]): Unit = {
-    val ms = files.map(meta)
-    if (ms.forall(_.hasStats)) return
-    val carried = readSidecarRunStats(bucketStatFile(tableDir, bucket))
-    ms.foreach { m =>
-      carried.get((m.file.getFileName.toString, m.bytes)).foreach(m.seedStats)
-    }
-  }
-
-  /** Parse the per-file run-stats section of one sidecar, skipping the
-    * reduction — the commit-path companion of [[readBucketStats]]. An
-    * absent, legacy, or corrupt sidecar returns empty (the refresh then
-    * reads every tail, exactly the pre-incremental behavior). Not
-    * memoized: each commit parses the sidecar it is about to replace. */
-  private def readSidecarRunStats(p: Path)
-    : Map[(String, Long), Array[RunStats]] = {
-    if (!Files.exists(p)) return Map.empty
-    val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(p)))
-    try {
-      if (in.readInt() != BucketStatMagic) return Map.empty
-      readReduction(in) // discard — only the section after it is wanted
-      val nf = in.readInt()
-      (0 until nf).map { _ =>
-        val name = in.readUTF()
-        val size = in.readLong()
-        val nr = in.readInt()
-        (name, size) -> Array.fill(nr)(readRunStats0(in))
-      }.toMap
-    } catch {
-      case _: IOException | _: RuntimeException => Map.empty
-    } finally in.close()
-  }
-
-  /** Parsed sidecar reductions by sidecar path. [[writeBucketStats]] and
-    * [[forgetSegments]] drop an entry when its sidecar is replaced or
-    * deleted. */
-  private val bucketStatCache =
-    new java.util.concurrent.ConcurrentHashMap[Path, BucketStat]()
-
-  /** Parse one bucket's sidecar IF it exists, parses, and its recorded
-    * listing matches `files` exactly — else None (never a stale answer).
-    * Parsed records memoize per sidecar path; the listing comparison
-    * reruns per call (it is the staleness authority). */
-  def readBucketStats(tableDir: String, bucket: Int,
-      files: Seq[Path]): Option[BucketStat] = {
-    val p = bucketStatFile(tableDir, bucket)
-    if (!Files.exists(p)) return None
-    val rec =
-      try bucketStatCache.computeIfAbsent(p.toAbsolutePath.normalize, _ => {
-        val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(p)))
-        try {
-          if (in.readInt() != BucketStatMagic)
-            throw new IOException(s"not a bucket-stat sidecar: $p")
-          // the REDUCTION only — the per-file run-stats section after it
-          // is never read at planning (commit-path readers parse it via
-          // readSidecarRunStats), keeping planning IO at the reduction's
-          // ~fixed bytes however many runs the bucket carries
-          readReduction(in)
-        } finally in.close()
-      })
-      catch { case _: IOException | _: RuntimeException => return None }
-    if (rec.files == fileSig(files)) Some(rec) else None
-  }
-
-  /** Parse the sidecar's REDUCTION record (everything before the
-    * per-file run-stats section); the stream is left positioned at the
-    * section's file count. */
-  private def readReduction(in: DataInputStream): BucketStat = {
-    val nf = in.readInt()
-    val sig = (0 until nf).map(_ => (in.readUTF(), in.readLong()))
-    val base = BucketStat(sig, in.readInt(), in.readLong(),
-      in.readBoolean(), in.readBoolean(), in.readBoolean(),
-      in.readBoolean(), in.readBoolean(),
-      in.readLong(), in.readLong(),
-      in.readBoolean(), in.readBoolean(), in.readLong(),
-      readBytes(in), readBytes(in),
-      in.readBoolean(), readBytes(in), readBytes(in),
-      in.readBoolean(), readBytes(in), readBytes(in),
-      in.readBoolean(), in.readLong(), in.readLong())
-    val statsValid = in.readBoolean()
-    val colValsAll = in.readBoolean()
-    val ncv = in.readInt()
-    val colVals = (0 until ncv).map { _ =>
-      ColValStat(readBytes(in), in.readBoolean(), in.readBoolean(),
-        in.readLong(), in.readLong(), in.readLong(), in.readLong())
-    }
-    val withNet = base.copy(statsValid = statsValid,
-      colValsAll = colValsAll,
-      colVals = colVals,
-      nettedOk = in.readBoolean(),
-      nettedAddrs = in.readLong(),
-      nettedKeys = in.readLong(),
-      tsAll = in.readBoolean(),
-      maxTs = in.readLong(),
-      nettedSumOk = in.readBoolean(),
-      nettedSum = in.readLong())
-    val nettedColValsOk = in.readBoolean()
-    val nncv = in.readInt()
-    val nettedColVals = (0 until nncv).map { _ =>
-      ColValStat(readBytes(in), in.readBoolean(), rangeOk = false,
-        in.readLong(), in.readLong(), 0L, 0L)
-    }
-    withNet.copy(nettedColValsOk = nettedColValsOk,
-      nettedColVals = nettedColVals)
-  }
-
-  /** One bucket's [[BucketStat]]: the sidecar when fresh, else computed by
-    * walking the run index tails (counted in [[bucketStatWalks]]). The
-    * aggregate-planning entry point — NEVER call from a plain-scan path
-    * (the walk reads full index tails, blooms included). */
-  def bucketStats(tableDir: String, bucket: Int, files: Seq[Path]): BucketStat =
-    readBucketStats(tableDir, bucket, files).getOrElse {
-      bucketStatWalks.incrementAndGet()
-      subsetBucketStats(files)
-    }
-
   /** PER-RUN as-of gating (SURVEY §7.4 #5, round 13): partition one
     * bucket's segment files under an AS-OF bound into the COVERED subset.
     * Some(covered) when every run of every file carries the TSRG window
@@ -2489,8 +2116,8 @@ object CellStore {
     * Soundness: the bounded view replays exactly the cells with
     * ts ≤ bound under LWW — which is exactly the covered files' cells.
     * So every per-run judgment (disjointness, dedup, netting, CVAL/VSUM
-    * tails) recomputed over the covered subset describes the bounded
-    * view the way the committed sidecar describes the current one.
+    * tails) reduced over the covered subset describes the bounded view
+    * the way the whole listing's reduction describes the current one.
     * Reads memoized index tails only — no cell payload IO. */
   def asOfCoveredFiles(files: Seq[Path], bound: Long): Option[Seq[Path]] = {
     val out = Seq.newBuilder[Path]
@@ -2506,11 +2133,13 @@ object CellStore {
     Some(out.result())
   }
 
-  /** Bucket-stat reduction over an explicit file list (a bucket's
-    * listing, or the as-of covered files): the same judgments the sidecar
-    * record carries, reduced from each file's [[SegmentMeta.stats]]. */
-  def subsetBucketStats(files: Seq[Path]): BucketStat =
-    aggregateBucketStat(fileSig(files), files.flatMap(meta(_).stats.toSeq))
+  /** The [[BucketStat]] of a segment list (a bucket's listing, or an
+    * as-of bound's covered files), reduced from each file's memoized
+    * [[SegmentMeta.stats]]. The aggregate-planning entry point; a segment
+    * whose handle is cold costs one parse of its index tails, blooms
+    * included. */
+  def bucketStats(files: Seq[Path]): BucketStat =
+    aggregateBucketStat(files.flatMap(meta(_).stats.toSeq))
 
   /** Byte strings sorted ascending, duplicates dropped. */
   def sortedDistinct(xs: Seq[Array[Byte]]): Array[Array[Byte]] = {
@@ -2959,8 +2588,9 @@ object CellStore {
       cols: KeyWindows = null,
       subs: KeyWindows = null)
     extends Iterator[Cell] with AutoCloseable {
-    // onlyFiles: the change-feed restriction — merge ONLY these committed
-    // segments (one micro-batch's delta) instead of the whole bucket; LWW
+    // onlyFiles: the segments to merge, null = every committed segment of
+    // the bucket, listed here. A scan reader passes the listing it already
+    // made; the change feed passes ONLY one micro-batch's delta, and LWW
     // and tombstone reconciliation then apply within the restricted set,
     // which is exactly the batch-local view a change feed emits.
     // keys: only cells inside these key windows are merged (a finite key
@@ -3044,11 +2674,11 @@ object CellStore {
     * fall back to (order-meaningless) name comparison. Files of ONE commit
     * share one stamp (one epoch — intra-commit order is meaningless by
     * construction). Single-maintainer discipline means no racing
-    * committers per table; a reader's (path, size, mtime) cache keys see
-    * only the final stamped value because the stamp lands BEFORE the
-    * rename. */
-  def commitSegments(tableDir: String, staged: Seq[(Path, String)]): Unit = {
-    if (staged.isEmpty) return
+    * committers per table; a reader sees only the final stamped value
+    * because the stamp lands BEFORE the rename. Returns the committed
+    * paths. */
+  def commitSegments(tableDir: String, staged: Seq[(Path, String)]): Seq[Path] = {
+    if (staged.isEmpty) return Nil
     val sst = Paths.get(tableDir, SstDir)
     val floor = allSegmentFiles(tableDir).values.flatten.foldLeft(0L) { (m, p) =>
       math.max(m, try Files.getLastModifiedTime(p).toMillis
@@ -3057,7 +2687,7 @@ object CellStore {
     val stamp = java.nio.file.attribute.FileTime.fromMillis(
       math.max(System.currentTimeMillis(), floor + 1))
     staged.foreach { case (tmp, _) => Files.setLastModifiedTime(tmp, stamp) }
-    staged.foreach { case (tmp, name) =>
+    staged.map { case (tmp, name) =>
       Files.move(tmp, sst.resolve(name), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
   }
@@ -3177,7 +2807,7 @@ object CellStore {
     val files = segmentFiles(tableDir, bucket)
     if (files.size <= 1 && files.forall(runOffsets(_).size <= 1)) return
     val readers = files.map(new SegmentReader(_))
-    try {
+    val committed = try {
       // counter tables collapse increment history here — ALL segments
       // participate, so every address group is complete and the summed
       // cell is exact (the segment-scope path must not do this)
@@ -3209,10 +2839,7 @@ object CellStore {
       Files.deleteIfExists(provFile(f)) // an input may itself be a compaction output
       forgetSegments(f)
     }
-    // refresh the bucket-stat sidecar to the post-compaction listing —
-    // compaction is exactly when a bucket becomes single-run and every
-    // metadata fast path starts to qualify
-    writeBucketStats(tableDir, bucket)
+    warmSegments(committed)
   }
 
   /** Compaction-provenance sidecar of a committed segment: the input
@@ -3334,16 +2961,7 @@ object CellStore {
       .filter(_.getFileName.toString.startsWith("b"))
       .foreach(Files.delete)
     finally s.close()
-    // bucket-stat sidecars describe the segments just removed; stale ones
-    // would only cost a walk (listing mismatch) but clearing is cleaner
-    val bs = Paths.get(tableDir, BucketStatsDir)
-    if (Files.isDirectory(bs)) {
-      val l = Files.list(bs)
-      try l.iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally l.close()
-    }
     forgetSegments(sst)
-    forgetSegments(bs)
   }
 
   def newSegmentName(bucket: Int): String = s"b$bucket-${UUID.randomUUID()}.bin"

@@ -1567,60 +1567,57 @@ class MetadataAggSpec extends SparkSpec {
     assert(dfRegMm.collect()(0).getLong(0) == keptAllR.map(_ * 2L).min)
   }
 
-  test("bucket-stat sidecars: planning reads O(buckets) sidecar bytes; walk fallback pinned") {
+  test("aggregate planning parses each segment's index once per process") {
     val sp = spark; import sp.implicits._
     val store = Seed.table(spark, sfDir, "spec_agg_sidecar",
       (1L to 300L).map(i => (i, f"c${i % 5}%02d", i * 3L)).toDF("k", "c", "v")
         .repartition(1),
       mapping = Some(":key,:column,:value"),
       props = Map(Options.KeyEncoding -> "ordered", Options.Buckets -> "4"))
-    val bsDir = java.nio.file.Paths.get(store, CellStore.BucketStatsDir)
-    import scala.jdk.CollectionConverters._
-    def sidecars(): Seq[java.nio.file.Path] = {
-      if (!java.nio.file.Files.isDirectory(bsDir)) return Nil
-      val s = java.nio.file.Files.list(bsDir)
-      try s.iterator().asScala.toSeq finally s.close()
-    }
-    assert(sidecars().nonEmpty, "write commit must leave bucket-stat sidecars")
+    def liveSegments(): Int = CellStore.allSegmentFiles(store).values.map(_.size).sum
     def q() = Seed.read(spark, store)
       .agg(count(lit(1)).as("n"), sum("v").as("s"), min("k").as("mn"))
-    // fresh scans plan COMPLETELY from the sidecars alone: the walk
-    // counter must not move
-    val walks0 = CellStore.bucketStatWalks.get()
+    // a cold planning reduces every bucket from freshly parsed index
+    // tails, one parse per live segment, and still answers completely
+    CellStore.clearPlannerCaches()
+    val tails0 = CellStore.runTailReads.get()
     assert(scanOf(q()).scan.description().contains("AggStats: complete"))
+    assert(CellStore.runTailReads.get() - tails0 == liveSegments(),
+      s"cold planning read ${CellStore.runTailReads.get() - tails0} tails, " +
+        s"${liveSegments()} live segments")
+    // a second planning reduces the memoized run stats: no tail is read
+    val tails1 = CellStore.runTailReads.get()
     val r0 = q().collect()(0)
     assert(r0.getLong(0) == 300L && r0.getLong(1) == (1L to 300L).map(_ * 3L).sum
       && r0.getLong(2) == 1L)
-    assert(CellStore.bucketStatWalks.get() == walks0,
-      "sidecar-covered planning must not walk index tails")
-    // deleting the sidecars flips planning to the (counted) walk fallback —
-    // same answers
-    sidecars().foreach(java.nio.file.Files.delete)
-    val r1 = q().collect()(0)
-    assert(r1 == r0, "walk fallback must answer identically")
-    assert(CellStore.bucketStatWalks.get() > walks0,
-      "missing sidecars must be counted as walks")
-    // a corrupt sidecar is ignored (walk), never misparsed
-    java.nio.file.Files.createDirectories(bsDir)
-    java.nio.file.Files.write(bsDir.resolve("b0.stat"),
-      "garbage".getBytes("UTF-8"))
-    assert(q().collect()(0) == r0)
-    // a STALE sidecar (listing changed underneath it) is detected by the
-    // exact file-list comparison and ignored: duplicate a segment so the
-    // listing no longer matches — the dup addresses also demote the
-    // complete path, and LWW still dedups the fold to the same answer
+    assert(CellStore.runTailReads.get() == tails1, "warm planning must read no tail")
+    // duplicate a segment so its addresses repeat: the dup addresses
+    // demote the complete path, and LWW still dedups the fold to the same
+    // answer
     Seed.append((1L to 300L).map(i => (i, f"c${i % 5}%02d", i * 3L))
       .toDF("k", "c", "v").repartition(1), store,
       Map(Options.WriteTimestamp -> "1"))
+    import scala.jdk.CollectionConverters._
     val sst = java.nio.file.Paths.get(store, CellStore.SstDir)
     val seg = java.nio.file.Files.list(sst).iterator().asScala.toSeq.head
     java.nio.file.Files.copy(seg, seg.resolveSibling(
       seg.getFileName.toString.replaceFirst("-", "-ffff")))
     val r2 = q().collect()(0)
-    assert(r2 == r0, s"stale-sidecar read must stay exact: $r2 vs $r0")
+    assert(r2 == r0, s"duplicated-segment read must stay exact: $r2 vs $r0")
+    // no commit path leaves a per-bucket stats file behind: the commit
+    // above, a compaction and a deleteWhere
+    (0 until 4).foreach(b => CellStore.compactBucket(store, b))
+    val meta = CellStore.readMeta(store).get
+    new CassandraLikeTable(store, store,
+      org.apache.spark.sql.types.StructType.fromDDL(meta.schemaDdl),
+      Some(meta.mapping), meta.properties)
+      .deleteWhere(Array[org.apache.spark.sql.sources.Filter](
+        org.apache.spark.sql.sources.In("k", Array[Any](7L, 8L))))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(store, "_bucket_stats")))
+    assert(q().collect()(0).getLong(0) == 298L)
   }
 
-  test("incremental sidecar refresh: a commit re-reads only NEW files' tails") {
+  test("a commit reads only its new files' indexes") {
     val sp = spark; import sp.implicits._
     val store = Seed.table(spark, sfDir, "spec_incr_sidecar",
       (1L to 400L).map(i => (i, s"v$i")).toDF("k", "v").repartition(1),
@@ -1629,8 +1626,8 @@ class MetadataAggSpec extends SparkSpec {
       CellStore.allSegmentFiles(store).values.flatten
         .map(_.getFileName.toString).toSet
     val before = allSegs()
-    // COLD driver: the carried per-run stats must come from the sidecar's
-    // per-file section, not the in-memory memo
+    // COLD driver: the earlier segments' stats are not in memory, and the
+    // commit must not read them
     CellStore.clearPlannerCaches()
     val reads0 = CellStore.runTailReads.get()
     Seed.append((401L to 500L).map(i => (i, s"v$i")).toDF("k", "v")
@@ -1640,23 +1637,6 @@ class MetadataAggSpec extends SparkSpec {
     assert(newFiles.nonEmpty)
     assert(delta == newFiles.size,
       s"commit must read only the ${newFiles.size} new files' tails, read $delta")
-    // the incrementally-refreshed reduction equals a from-scratch walk
-    CellStore.allSegmentFiles(store).foreach { case (b, files) =>
-      val side = CellStore.readBucketStats(store, b, files)
-        .getOrElse(fail(s"bucket $b sidecar missing/stale"))
-      val walk = CellStore.subsetBucketStats(files)
-      assert(side.runs == walk.runs && side.cells == walk.cells &&
-        side.distinctKeys == walk.distinctKeys &&
-        side.distinctAddrs == walk.distinctAddrs &&
-        side.tombstoneFree == walk.tombstoneFree &&
-        side.disjoint == walk.disjoint &&
-        side.allAddrsDistinct == walk.allAddrsDistinct &&
-        side.colValsAll == walk.colValsAll &&
-        side.colVals.length == walk.colVals.length &&
-        side.tsAll == walk.tsAll && side.maxTs == walk.maxTs &&
-        side.nettedOk == walk.nettedOk,
-        s"bucket $b: incremental reduction diverged from the walk")
-    }
     // and the answers stay exact
     val n = Seed.read(spark, store).agg(count(lit(1)).as("n")).collect()(0)
     assert(n.getLong(0) == 500L)
@@ -1936,13 +1916,20 @@ class MetadataAggSpec extends SparkSpec {
     val rNow = now.collect()(0)
     val wantNow = ((10L until 210L) ++ (230L until 240L)).map(_ * 3L)
     assert(rNow.getLong(0) == 210L && rNow.getLong(1) == wantNow.sum, s"got $rNow")
-    // COLD driver: the per-run gating judgments answer from the sidecar's
-    // per-file section (one read per bucket) — zero index-tail opens
+    // COLD driver: the per-run gating judgments parse each segment's
+    // index tails once (the covered files and the newer ones they are
+    // told apart from), and a repeat reads none
     CellStore.clearPlannerCaches()
     val tails0 = CellStore.runTailReads.get()
     assert(q(Map(Options.ReadAsOf -> "5")).collect()(0) == rPre)
-    assert(CellStore.runTailReads.get() == tails0,
-      "cold as-of per-run gating must read the sidecar section, not tails")
+    val segs = CellStore.allSegmentFiles(store).values.flatten.toSeq
+    assert(CellStore.runTailReads.get() - tails0 == segs.size,
+      s"cold as-of planning must read each of ${segs.size} files once, " +
+        s"read ${CellStore.runTailReads.get() - tails0}")
+    val tails1 = CellStore.runTailReads.get()
+    assert(q(Map(Options.ReadAsOf -> "5")).collect()(0) == rPre)
+    assert(CellStore.runTailReads.get() == tails1,
+      "a repeated as-of planning must read no tail")
     // GROUPED as-of composes: per-key counts/sums over pinned points at a
     // bound between epochs run the same per-point arithmetic over the
     // covered subset (215 is deleted at ts=6 but visible as-of 5; at
@@ -1962,8 +1949,7 @@ class MetadataAggSpec extends SparkSpec {
     assert(g1.collect().map(_.getLong(0)).toSeq == Seq(15L))
     // a STRADDLING run folds: one run whose TSRG window crosses the
     // bound (a raw segment carrying BOTH ts=2 and ts=6 cells — the real
-    // write path stamps one ts per run, so the straddle is seeded raw;
-    // the stale sidecar walks, which is exactly the posture under test)
+    // write path stamps one ts per run, so the straddle is seeded raw)
     val store2 = Seed.table(spark, sfDir, "spec_agg_asof_straddle",
       Seq(("k1", "c1", "v1"), ("k2", "c1", "v2")).toDF("k", "c", "v")
         .repartition(1),

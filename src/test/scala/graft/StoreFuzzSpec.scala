@@ -195,6 +195,9 @@ class StoreFuzzSpec extends SparkSpec {
       // holds keyOf(0..59) at most). Its own stream, so the op sequence
       // above is the same with or without it.
       val inRnd = new Random(20260900L + trial)
+      // drops every segment handle before a random half of the COUNT
+      // checks, so their planning reduces freshly parsed index tails
+      val coldRnd = new Random(20260990L + trial)
       def inRead(): Unit = {
         val want = expected(model, Long.MaxValue)
         val live = want.map(_._1).toVector.sorted
@@ -257,6 +260,7 @@ class StoreFuzzSpec extends SparkSpec {
         // here (compaction flips buckets onto the fast path), and either
         // way the count must equal the model's live row count
         locally {
+          if (coldRnd.nextBoolean()) CellStore.clearPlannerCaches()
           val n = Seed.read(spark, dir)
             .agg(org.apache.spark.sql.functions.count(
               org.apache.spark.sql.functions.lit(1))).collect()(0).getLong(0)
@@ -515,6 +519,9 @@ class StoreFuzzSpec extends SparkSpec {
           }
       }
       val readRnd = new Random(20260970L + trial)
+      // drops every segment handle before a random half of the
+      // COUNT/SUM/MIN/MAX checks (its own stream, as readRnd)
+      val coldRnd = new Random(20260980L + trial)
       def rangeReads(): Unit = {
         val (kp, kKeep) = randomRange(readRnd, "row_key", keyPool)
         val (cp, cKeep) = randomRange(readRnd, "column_name", colPool)
@@ -546,6 +553,7 @@ class StoreFuzzSpec extends SparkSpec {
           vs.minOption.map(Long.box).orNull, vs.maxOption.map(Long.box).orNull,
           cs.minOption.map(Int.box).orNull, cs.maxOption.map(Int.box).orNull)
         bothPaths.foreach { o =>
+          if (coldRnd.nextBoolean()) CellStore.clearPlannerCaches()
           val got = Seed.read(spark, dir, o).filter(kp)
             .agg(count(lit(1)), sum(col("value")), min(col("value")), max(col("value")),
               min(col("column_name")), max(col("column_name")))
