@@ -5009,7 +5009,9 @@ class CellPartitionReader(
     now = opt(Options.ReadNow).map(_.toLong).getOrElse(0L),
     counterMerge = opt(Options.CounterMerge).exists(_.toBoolean),
     onlyFiles =
-      if (files != null || part.files == null) files else part.segments(),
+      if (files != null) files
+      else if (part.files != null) part.segments()
+      else null,
     counters = counters,
     cols = cols,
     subs = subs)

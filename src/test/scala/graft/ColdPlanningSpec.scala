@@ -34,6 +34,8 @@ class ColdPlanningSpec extends SparkSpec {
       val warm = SparkEntry.queries(name)(spark, sfDir)
       val warmTiers = tiers(warm)
       val warmRows = rows(warm)
+      // the query body may seed its store, and that commit warms the
+      // handles; drop them after it, so the planning below starts cold
       val cold = SparkEntry.queries(name)(spark, sfDir)
       CellStore.clearPlannerCaches()
       assert(tiers(cold) == warmTiers, s"$name: cold planning changed the tier")
