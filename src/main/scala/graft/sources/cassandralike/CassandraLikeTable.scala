@@ -708,8 +708,10 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     *  1. METADATA-COMPLETE ([[computeMetadataAnswer]]): every aggregate is
     *     answerable from run-index stats or postings, and the
     *     driver proves every bucket's conditions (stats-bearing, tombstone-
-    *     free or certified-netted, run-disjoint, tails present), so the
-    *     final rows are computed at planning with zero cell IO. This tier
+    *     free or certified-netted, run-disjoint, tails present) — outside
+    *     the indexed and grouped shapes, every planned bucket answers
+    *     ([[MetadataAggReader.BucketAnswer]]) and the bucket rows combine —
+    *     so the final rows are computed at planning with zero cell IO. This tier
     *     alone answers COUNT(DISTINCT key), which no partial form can (Spark
     *     would have to trust the partitions' key-disjointness), grouped
     *     answers, and an empty ungrouped aggregate list (one zero-column
@@ -723,9 +725,9 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     *  3. PARTIAL ([[pushAggregation]] after this returns false): each
     *     partition's reader folds exactly the rows the normal scan would
     *     emit (same LWW/tombstone reconciliation, same pushed-filter
-    *     evaluation) into one partial row — or answers its bucket from
-    *     metadata ([[MetadataAggReader]]) — and Spark's final aggregate
-    *     combines the partials.
+    *     evaluation) into one partial row — or emits the row its bucket
+    *     answered from metadata at planning ([[CellScan.metadataRows]]) —
+    *     and Spark's final aggregate combines the partials.
     * Either complete answer plans as a [[DriverAnswerScan]], whose collect
     * starts no job; it is read at planning, the same single-maintainer
     * discipline as every pinned-file scan. Spark offers aggregates only
@@ -755,9 +757,10 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     * aggregation folded at planning. The partial scan's cells are bounded
     * first from memoized segment metadata ([[CellScan.cellBound]]); only a
     * bound within `split.target.cells` drains its partitions through the
-    * executors' reader factory ([[drainOnDriver]]), so the per-bucket
-    * metadata answers, LWW, tombstones, as-of and FilterEval stay one
-    * implementation, and the partial rows combine into the final one
+    * executors' reader factory ([[drainOnDriver]]), so LWW, tombstones,
+    * as-of and FilterEval stay one implementation (a bucket answered from
+    * metadata counts no cells and emits its row), and the partial rows
+    * combine into the final one
     * ([[AggregatePartitionReader.combine]]). The bound keeps every
     * partition within the cap, so they drain concurrently on the driver's
     * cores, one partition per drain, as the distributed scan's tasks would
@@ -769,7 +772,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     : Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] =
     partialAggs(aggregation).collect { case (want, Nil) => want }.flatMap { want =>
       import scala.collection.parallel.CollectionConverters._
-      val scan = new CellScan(table, required, pushed, options, limit, want)
+      val scan = judgedScan(want)
       val cap = splitTargetCells
       if (scan.cellBound > cap) None
       else {
@@ -793,7 +796,6 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
   private def computeMetadataAnswer(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     : Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
     // an EMPTY aggregate list (Dataset.count() over an ungrouped aggregate
     // keeps only its row): ungrouped, one zero-column row whatever the
     // store holds; grouped, it needs the present group keys — declined
@@ -810,313 +812,49 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     if (aggregation.groupByExpressions().nonEmpty)
       return computeIndexedGroupAnswer(aggregation)
         .orElse(computeGroupedRangeAnswer(aggregation))
-    // pushed FILTERS route to the range-aggregate planner (the unfiltered
-    // STAT-tail fold below cannot see a key restriction); an absorbed
-    // INDEXED equality/IN tries the zero-base-IO postings-count path
-    // first, then the candidate-point value-aggregate path
-    if (pushed.nonEmpty)
-      return computeIndexedCountAnswer(aggregation)
+    // an absorbed INDEXED equality/IN tries the zero-base-IO postings-count
+    // path first, then the candidate-point value-aggregate path; every
+    // other shape is answered bucket by bucket
+    val indexed =
+      if (pushed.isEmpty) None
+      else computeIndexedCountAnswer(aggregation)
         .orElse(computeIndexedStatsAnswer(aggregation))
-        .orElse(computeRangeAnswer(aggregation))
-    def col(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case nr: org.apache.spark.sql.connector.expressions.NamedReference
-          if nr.fieldNames.length == 1 &&
-            table.tableSchema.fieldNames.contains(nr.fieldNames.head) =>
-          Some(nr.fieldNames.head)
-        case _ => None
-      }
-    val keyN = table.mapping.keyField.name
-    def minMaxable(c: String): Boolean =
-      table.isAddressField(c) && table.isOrderPreservingAddress(c)
-    val sumOk = MetadataAggReader.sumEligible(table.mapping,
-      k => Options.effective(options, table.tableProps, k))
-    val valN =
-      if (table.mapping.transposed)
-        table.mapping.field(FieldRole.TransValue).name else null
-    // Count(value)/Min(value)/Max(value) under the same static value gate
-    // as SUM: the VMMX tails (checked per bucket below) prove every value
-    // non-null, so Count(value) == COUNT(*), and carry the extremes
-    def isVal(c: String): Boolean = sumOk && valN != null && c == valN
-    // REGULAR per-column aggregates (CVAL tails, round 12): COUNT of any
-    // named cell column (non-missing cells), SUM/MIN/MAX of a binary-long
-    // one — the whole-store "column totals" without reading the table
-    val optF: String => Option[String] =
-      k => Options.effective(options, table.tableProps, k)
-    def isRegCell(c: String): Boolean =
-      MetadataAggReader.regularCountEligible(table.mapping, c, optF)
-    def isRegVal(c: String): Boolean =
-      MetadataAggReader.regularValueEligible(table.mapping, c, optF)
+    indexed.orElse(translateAggs(aggregation).flatMap { want =>
+      judgedScan(want).metadataAnswer.map(row => (want, Nil, Seq(row)))
+    })
+  }
+
+  /** The scan that judged `want` bucket by bucket on its listing
+    * ([[CellScan.metadataRows]]), made once per builder: the complete
+    * tier, the driver fold and the partial scan [[build]] returns share
+    * its listing and answers. */
+  private var judged: (Seq[PushedAgg], CellScan) = (Nil, null)
+  private def judgedScan(want: Seq[PushedAgg]): CellScan = {
+    if (judged._1 != want)
+      judged = (want, new CellScan(table, required, pushed, options, limit, want))
+    judged._2
+  }
+
+  /** The aggregation as pushed aggregates over plain columns, or None for
+    * any other function or argument; each tier gates the shapes it
+    * answers. */
+  private def translateAggs(
+      aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
+    : Option[Seq[PushedAgg]] = {
+    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
     val translated: Seq[Option[PushedAgg]] =
       aggregation.aggregateExpressions().toSeq.map {
         case _: CountStar => Some(PushedAgg.CountStar)
-        case c: Count if !c.isDistinct =>
-          col(c.column).filter(c0 => table.isAddressField(c0) || isVal(c0) ||
-            isRegCell(c0)).map(PushedAgg.Count.apply)
-        case c: Count if c.isDistinct =>
-          col(c.column).filter(_ == keyN).map(PushedAgg.CountDistinct.apply)
-        case m: Min => col(m.column).filter(c0 => minMaxable(c0) || isVal(c0) ||
-          isRegVal(c0)).map(PushedAgg.Min.apply)
-        case m: Max => col(m.column).filter(c0 => minMaxable(c0) || isVal(c0) ||
-          isRegVal(c0)).map(PushedAgg.Max.apply)
-        case s: Sum if !s.isDistinct && sumOk =>
-          col(s.column).filter(_ == valN).map(PushedAgg.Sum.apply)
-        case s: Sum if !s.isDistinct =>
-          col(s.column).filter(isRegVal).map(PushedAgg.Sum.apply)
+        case c: Count if c.isDistinct => aggCol(c.column).map(PushedAgg.CountDistinct.apply)
+        case c: Count => aggCol(c.column).map(PushedAgg.Count.apply)
+        case m: Min => aggCol(m.column).map(PushedAgg.Min.apply)
+        case m: Max => aggCol(m.column).map(PushedAgg.Max.apply)
+        case s: Sum if !s.isDistinct => aggCol(s.column).map(PushedAgg.Sum.apply)
         case _ => None
       }
-    if (translated.exists(_.isEmpty)) return None
-    val want = translated.flatten
-    // which reg columns each aggregate kind touches (empty on transposed)
-    val regCols: Seq[String] = want.flatMap {
-      case PushedAgg.Count(c) if !table.isAddressField(c) && isRegCell(c) => Some(c)
-      case PushedAgg.Sum(c) if isRegVal(c) => Some(c)
-      case PushedAgg.Min(c) if !minMaxable(c) && isRegVal(c) => Some(c)
-      case PushedAgg.Max(c) if !minMaxable(c) && isRegVal(c) => Some(c)
-      case _ => None
-    }.distinct
-    val regWantSum = want.collect {
-      case PushedAgg.Sum(c) if isRegVal(c) => c }.toSet
-    val regWantExt = want.collect {
-      case PushedAgg.Min(c) if !minMaxable(c) && isRegVal(c) => c
-      case PushedAgg.Max(c) if !minMaxable(c) && isRegVal(c) => c }.toSet
-    final class RegAcc {
-      var count = 0L
-      var sum = 0L
-      var has = false
-      var min = 0L
-      var max = 0L
-    }
-    val regAcc: Map[String, RegAcc] = regCols.map(_ -> new RegAcc).toMap
-    val wantSum = want.exists {
-      case PushedAgg.Sum(c) => !regAcc.contains(c) // per-col sums ride CVAL, not VSUM
-      case _ => false
-    }
-    val wantValCount = want.exists {
-      case PushedAgg.Count(c) => isVal(c)
-      case _ => false
-    }
-    val wantValExtremal = want.exists {
-      case PushedAgg.Min(c) => isVal(c)
-      case PushedAgg.Max(c) => isVal(c)
-      case _ => false
-    }
-    // driver-side dynamic check, fold over every bucket's run-stat
-    // reduction: ONE directory listing (the repeated per-bucket listing was
-    // the planning bottleneck VERDICT r4 #4 already retired once), then
-    // each bucket's record reduced from its segments' memoized run stats
-    // (a segment no commit in this process warmed costs one parse of its
-    // index tails). Disjointness is judged PER BUCKET
-    // (different buckets never share a key); the min/max reduction runs
-    // over the bucket records. The whole-store SUM(value) is the sum of
-    // per-run VSUM totals — exactly one visible row per summed cell is
-    // required (the same disjoint + per-run-deduped proofs the counts
-    // use), and any Long overflow declines to the fold.
-    val byBucket = CellStore.allSegmentFiles(table.dir)
-    var rows = 0L
-    var dKeys = 0L
-    var valSum = 0L
-    var valMinHas = false
-    var valMinAll = 0L
-    var valMaxAll = 0L
-    // tombstone NETTING (certified delete epochs): a netted bucket can
-    // serve row-equivalent COUNTs — COUNT(*) / COUNT(address) on
-    // transposed, COUNT(*) / COUNT(key) on regular — and SUM of the
-    // transposed value column (certified tombstones carry their victims'
-    // values, so the bucket record's nettedSum is the visible total)
-    val nettedAnswerable = want.forall {
-      case PushedAgg.CountStar => true
-      case PushedAgg.Count(c) =>
-        if (table.mapping.transposed) table.isAddressField(c) || isVal(c)
-        else c == keyN || isRegCell(c) // netted CVAL twins (r13)
-      case PushedAgg.Sum(c) =>
-        if (table.mapping.transposed) isVal(c)
-        else isRegVal(c) // netted CVAL twins (r13); extremals never net
-      case _ => false
-    }
-    // an AS-OF bound gates PER RUN ([[MetadataAggReader.asOfView]]):
-    // covered runs answer from their subset record, newer runs drop out,
-    // straddlers fold the whole answer
-    val asOfBound = Options.effective(options, table.tableProps,
-      Options.ReadAsOf).map(_.toLong)
-    val recs = Seq.newBuilder[CellStore.BucketStat]
-    byBucket.foreach { case (b, files) =>
-      val rec0 = CellStore.bucketStats(files)
-      val rec = MetadataAggReader.asOfView(files, rec0,
-          asOfBound) match {
-        case Some((_, r)) => r
-        case None => return None
-      }
-      if (!rec.tombstoneFree) {
-        // netted bucket: certified deletions subtract from the row count
-        // and the value sum; anything beyond declines the whole answer.
-        // recs is NOT extended (extremalB unreachable under the netted
-        // shape gate).
-        if (!rec.nettedOk || !nettedAnswerable) return None
-        if (wantValCount && !rec.valRangeAll) return None
-        rows += (if (table.mapping.transposed) rec.nettedAddrs
-          else rec.nettedKeys)
-        if (wantSum) {
-          if (!rec.nettedSumOk) return None
-          try valSum = Math.addExact(valSum, rec.nettedSum)
-          catch { case _: ArithmeticException => return None }
-        }
-        if (regCols.nonEmpty) {
-          // regular per-column aggregates over a netted bucket: the
-          // NETTED CVAL twins (live − certified) carry visible counts
-          // and sums; extremals were rejected by nettedAnswerable
-          if (!rec.nettedColValsOk) return None
-          regCols.foreach { c =>
-            val cb = MetadataAggReader.regularCellBytes(table.mapping, c)
-            rec.nettedColVals.find(cv =>
-              java.util.Arrays.equals(cv.col, cb)).foreach { cv =>
-              val a = regAcc(c)
-              a.count += cv.count
-              if (regWantSum(c)) {
-                if (!cv.sumsOk) return None
-                try a.sum = Math.addExact(a.sum, cv.sum)
-                catch { case _: ArithmeticException => return None }
-              }
-            }
-          }
-        }
-      } else {
-      if (!rec.disjoint) return None // overlapping runs in this bucket
-      rows += (if (table.mapping.transposed) rec.distinctAddrs
-        else rec.distinctKeys)
-      if (wantSum) {
-        if (!rec.valSumsAll || !rec.valTotalOk || !rec.allAddrsDistinct)
-          return None
-        try valSum = Math.addExact(valSum, rec.valTotal)
-        catch { case _: ArithmeticException => return None }
-      }
-      if (regCols.nonEmpty) {
-        // per-column aggregates need every cell to be a distinct visible
-        // row plus the CVAL tails on every run of every bucket
-        if (!rec.colValsAll || !rec.allAddrsDistinct) return None
-        regCols.foreach { c =>
-          val cb = MetadataAggReader.regularCellBytes(table.mapping, c)
-          rec.colVals.find(cv => java.util.Arrays.equals(cv.col, cb)).foreach { cv =>
-            val a = regAcc(c)
-            a.count += cv.count
-            if (regWantSum(c)) {
-              if (!cv.sumsOk) return None
-              try a.sum = Math.addExact(a.sum, cv.sum)
-              catch { case _: ArithmeticException => return None }
-            }
-            if (regWantExt(c)) {
-              if (!cv.rangeOk) return None
-              if (cv.count > 0L) {
-                if (!a.has) { a.has = true; a.min = cv.min; a.max = cv.max }
-                else {
-                  if (cv.min < a.min) a.min = cv.min
-                  if (cv.max > a.max) a.max = cv.max
-                }
-              }
-            }
-          }
-        }
-      }
-      if (wantValCount && !rec.valRangeAll) return None // a NULL-able value
-      if (wantValExtremal) {
-        // overwritten values must not contribute: same visible-row proofs
-        // as the counts, plus the VMMX tails everywhere
-        if (!rec.valRangeAll || !rec.allAddrsDistinct) return None
-        if (rec.runs > 0) {
-          if (!valMinHas) { valMinHas = true; valMinAll = rec.valMin; valMaxAll = rec.valMax }
-          else {
-            if (rec.valMin < valMinAll) valMinAll = rec.valMin
-            if (rec.valMax > valMaxAll) valMaxAll = rec.valMax
-          }
-        }
-      }
-      dKeys += rec.distinctKeys
-      // a bucket whose as-of covered subset is EMPTY holds no visible
-      // rows: it contributes nothing to the extremal reduction (its
-      // null key window would otherwise decline the whole answer)
-      if (rec.runs > 0) recs += rec
-      }
-    }
-    val buckets = recs.result()
-    def levelOf(c: String): MetadataAggReader.AddrLevel =
-      if (c == keyN) MetadataAggReader.KeyLevel
-      else if (table.mapping.transposed &&
-        c == table.mapping.field(FieldRole.TransColumn).name)
-        MetadataAggReader.ColLevel
-      else MetadataAggReader.SubLevel
-    val vals: Seq[Any] = want.map {
-      case PushedAgg.Count(c) if regAcc.contains(c) => regAcc(c).count
-      case PushedAgg.Sum(c) if regAcc.contains(c) =>
-        if (regAcc(c).count == 0L) null else Long.box(regAcc(c).sum)
-      case PushedAgg.Min(c) if regAcc.contains(c) && regWantExt(c) =>
-        if (regAcc(c).has) Long.box(regAcc(c).min) else null
-      case PushedAgg.Max(c) if regAcc.contains(c) && regWantExt(c) =>
-        if (regAcc(c).has) Long.box(regAcc(c).max) else null
-      case PushedAgg.CountStar | PushedAgg.Count(_) => rows
-      case PushedAgg.CountDistinct(_) => dKeys
-      case PushedAgg.Sum(_) => if (rows == 0L) null else valSum
-      case PushedAgg.Min(c) if isVal(c) =>
-        if (valMinHas) Long.box(valMinAll) else null
-      case PushedAgg.Max(c) if isVal(c) =>
-        if (valMinHas) Long.box(valMaxAll) else null
-      case PushedAgg.Min(c) =>
-        if (buckets.isEmpty) null
-        else MetadataAggReader.extremalB(buckets, levelOf(c), wantMin = true) match {
-          case Some(b) => table.decodeAddress(c, b)
-          case None => return None // incomplete window tail: decline
-        }
-      case PushedAgg.Max(c) =>
-        if (buckets.isEmpty) null
-        else MetadataAggReader.extremalB(buckets, levelOf(c), wantMin = false) match {
-          case Some(b) => table.decodeAddress(c, b)
-          case None => return None
-        }
-      case _ => return None // unreachable (translation above)
-    }
-    Some((want, Nil, Seq(InternalRow.fromSeq(vals))))
+    if (translated.exists(_.isEmpty)) None else Some(translated.flatten)
   }
 
-  /** COMPLETE pushdown of a RANGE/POINT-CONSTRAINED aggregation: when the
-    * pushed filters are all exact key shapes and the driver-side check
-    * proves EVERY bucket's run-level conditions
-    * ([[MetadataAggReader.rangeConditionsOk]] — keys never cross buckets,
-    * so per-bucket proofs compose), the whole filtered COUNT/MIN(key)/
-    * MAX(key) resolves at planning from run-index arithmetic
-    * ([[MetadataAggReader.rangeVals]]): one partition, a precomputed row,
-    * zero executor IO — "how many events in [t1, t2]" answered before the
-    * job starts. COUNT(DISTINCT) never qualifies here (distinct keys
-    * inside a range are not derivable from positions). Any unprovable
-    * condition returns None and Spark retries the partial path, whose
-    * per-bucket readers re-judge the same conditions independently. */
-  /** COMPLETE pushdown of `count(*) WHERE indexed_col = v` (or IN): the
-    * answer is the POSTINGS count — zero base IO (round 13, VERDICT r12
-    * #5). The index is a stale SUPERSET by design, so counting it raw
-    * would be wrong; the count is exact only under a composed proof:
-    *
-    *   1. CLEAN BASE: every base bucket is tombstone-free with disjoint,
-    *      per-run-deduped runs — no cell was ever overwritten or deleted,
-    *      so every posting's (value, key) is still the row's CURRENT
-    *      value and every visible cell produced exactly one posting
-    *      write (the append-only corpus shape: "how many docs have
-    *      lang = 'en'").
-    *   2. NO ORPHANS: index segments commit BEFORE base segments, so a
-    *      crashed or retried write can leave postings with no base cell
-    *      (or duplicated postings). Those are invisible to per-bucket
-    *      cleanliness — they are caught by an exact TOTALS equality:
-    *      Σ index cells == Σ base CVAL count(indexed column). Postings
-    *      always ⊇ base cells of the column, so equality forces
-    *      one-posting-per-visible-cell everywhere; any surplus declines.
-    *   3. Per-value counts then come from key-point arithmetic on the
-    *      routed index bucket ([[CellStore.summarize]] over point windows — run
-    *      index + blooms, no posting payload reads), globally dup-free
-    *      by (2) even across overlapping index runs.
-    *
-    * Anything outside the shape — other filters, non-COUNT aggregates,
-    * transposed mappings, a bound some run straddles — returns None and
-    * the existing paths own the query (candidate point reads +
-    * reader-side fold: exact, just not zero-IO). AS-OF bounds compose
-    * when every run is cleanly covered or newer (see the pairing note in
-    * [[indexedAggContext]]). */
   /** One absorbed indexed predicate inside [[IndexedCtx]]: the column,
     * its DISTINCT encoded value points (equality/IN — paired with their
     * Catalyst values, the grouped form's group keys) OR its range bounds
@@ -1386,6 +1124,35 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     Some(IndexedCtx(preds, buckets, anyNetted, baseByBucket, baseRows, orF))
   }
 
+  /** COMPLETE pushdown of `count(*) WHERE indexed_col = v` (or IN): the
+    * answer is the POSTINGS count — zero base IO (round 13, VERDICT r12
+    * #5). The index is a stale SUPERSET by design, so counting it raw
+    * would be wrong; the count is exact only under a composed proof:
+    *
+    *   1. CLEAN BASE: every base bucket is tombstone-free with disjoint,
+    *      per-run-deduped runs — no cell was ever overwritten or deleted,
+    *      so every posting's (value, key) is still the row's CURRENT
+    *      value and every visible cell produced exactly one posting
+    *      write (the append-only corpus shape: "how many docs have
+    *      lang = 'en'").
+    *   2. NO ORPHANS: index segments commit BEFORE base segments, so a
+    *      crashed or retried write can leave postings with no base cell
+    *      (or duplicated postings). Those are invisible to per-bucket
+    *      cleanliness — they are caught by an exact TOTALS equality:
+    *      Σ index cells == Σ base CVAL count(indexed column). Postings
+    *      always ⊇ base cells of the column, so equality forces
+    *      one-posting-per-visible-cell everywhere; any surplus declines.
+    *   3. Per-value counts then come from key-point arithmetic on the
+    *      routed index bucket ([[CellStore.summarize]] over point windows — run
+    *      index + blooms, no posting payload reads), globally dup-free
+    *      by (2) even across overlapping index runs.
+    *
+    * Anything outside the shape — other filters, non-COUNT aggregates,
+    * transposed mappings, a bound some run straddles — returns None and
+    * the existing paths own the query (candidate point reads +
+    * reader-side fold: exact, just not zero-IO). AS-OF bounds compose
+    * when every run is cleanly covered or newer (see the pairing note in
+    * [[indexedAggContext]]). */
   private def computeIndexedCountAnswer(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     : Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] = {
@@ -2154,55 +1921,6 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     Some(out)
   }
 
-  private def computeRangeAnswer(
-      aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-    : Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
-    val translated: Seq[Option[PushedAgg]] =
-      aggregation.aggregateExpressions().toSeq.map {
-        case _: CountStar => Some(PushedAgg.CountStar)
-        case c: Count if !c.isDistinct =>
-          aggCol(c.column).filter(c0 =>
-            table.isAddressField(c0) ||
-              (!table.mapping.transposed &&
-                (c0 == table.mapping.keyField.name ||
-                  MetadataAggReader.regularCountEligible(table.mapping, c0,
-                    k => Options.effective(options, table.tableProps, k)))) ||
-              (table.mapping.transposed &&
-                c0 == table.mapping.field(FieldRole.TransValue).name))
-            .map(PushedAgg.Count.apply)
-        case m: Min => aggCol(m.column).map(PushedAgg.Min.apply)
-        case m: Max => aggCol(m.column).map(PushedAgg.Max.apply)
-        case s: Sum if !s.isDistinct => aggCol(s.column).map(PushedAgg.Sum.apply)
-        case _ => None
-      }
-    if (translated.exists(_.isEmpty)) return None
-    val want = translated.flatten
-    validatedRangeContext(want).flatMap { ctx =>
-      val vals =
-        if (table.mapping.transposed)
-          MetadataAggReader.rangeVals(want, table.keyCodec,
-            table.colCodec, table.mapping.field(FieldRole.TransColumn).name,
-            ctx.files, ctx.keys, ctx.cols, ctx.subs,
-            valName = table.mapping.field(FieldRole.TransValue).name,
-            netted = ctx.netted,
-            subCodec = table.subCodec,
-            subName =
-              if (table.mapping.hasSubColumn)
-                table.mapping.field(FieldRole.TransSubColumn).name
-              else null)
-        else
-          MetadataAggReader.regularRangeVals(want, table.keyCodec, ctx.files,
-            ctx.keys,
-            colBytesOf =
-              if (MetadataAggReader.regularColAggs(table.mapping, want))
-                MetadataAggReader.regularCellBytes(table.mapping, _)
-              else _ => null,
-            netted = ctx.netted)
-      vals.map(v => (want, Nil, Seq(InternalRow.fromSeq(v))))
-    }
-  }
-
   /** GROUPED complete pushdown: `GROUP BY key` over pushed key POINTS —
     * the batch width/presence check (`SELECT key, count(*) ... WHERE key
     * IN (...) GROUP BY key`) resolves at planning into one row per
@@ -2217,7 +1935,6 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
   private def computeGroupedRangeAnswer(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     : Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
     if (!table.mapping.transposed) return None
     val keyN = table.mapping.keyField.name
     val colN = table.mapping.field(FieldRole.TransColumn).name
@@ -2230,75 +1947,77 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       case Seq(Some(g)) if g == keyN => ()
       case _ => return None
     }
-    val translated: Seq[Option[PushedAgg]] =
-      aggregation.aggregateExpressions().toSeq.map {
-        case _: CountStar => Some(PushedAgg.CountStar)
-        case c: Count if !c.isDistinct =>
-          aggCol(c.column).filter(c0 =>
-            table.isAddressField(c0) || c0 == valN).map(PushedAgg.Count.apply)
-        case m: Min => aggCol(m.column).filter(c0 => c0 == colN || c0 == valN ||
-          (subN != null && c0 == subN)).map(PushedAgg.Min.apply)
-        case m: Max => aggCol(m.column).filter(c0 => c0 == colN || c0 == valN ||
-          (subN != null && c0 == subN)).map(PushedAgg.Max.apply)
-        case s: Sum if !s.isDistinct => aggCol(s.column).map(PushedAgg.Sum.apply)
-        case _ => None
-      }
-    if (translated.exists(_.isEmpty)) return None
-    val want = translated.flatten
-    validatedRangeContext(want).flatMap { ctx =>
-      val sortedKs = ctx.keys.points
-      if (sortedKs == null) return None // enumerable groups need pinned keys
-      import CellStore.{Measure, Window}
-      val windows = Window.points(sortedKs, ctx.cols, ctx.subs)
-      val n = sortedKs.length
-      val wantSum = want.exists {
-        case PushedAgg.Sum(_) => true
-        case _ => false
-      }
-      val wantExt = want.exists {
-        case PushedAgg.Min(c) => c == valN
-        case PushedAgg.Max(c) => c == valN
-        case _ => false
-      }
-      // per-key count, value sum and value extremes ("per-user peak in the
-      // window") in one pass. Netted stores serve grouped COUNTs and SUMs
-      // too (the per-bucket netted shape gate in validatedRangeContext
-      // already rejected extremals): a fully-deleted key nets to zero and
-      // emits no group, exactly like the fold. A decline (missing tail,
-      // overflow, unclassifiable run) demotes the WHOLE grouped answer to
-      // the fold
-      val per = CellStore.summarize(ctx.files, windows, n,
-        if (wantSum || wantExt) Measure.Values else Measure.Cells,
-        wantSum, wantExt, ctx.netted).getOrElse(return None)
-      // per-key extremal col within the col windows, and extremal SUB of
-      // the pinned (key, col) groups ("first/last sub-entry of each row's
-      // pinned column")
-      def extremals(field: Int, wantMin: Boolean): Array[Array[Byte]] =
-        CellStore.extremalAddresses(ctx.files, windows, n, field, wantMin)
-      lazy val colMins = extremals(1, wantMin = true)
-      lazy val colMaxs = extremals(1, wantMin = false)
-      lazy val subMins = extremals(2, wantMin = true)
-      lazy val subMaxs = extremals(2, wantMin = false)
-      val rows = sortedKs.indices.collect {
-        case i if per.count(i) > 0 =>
-          InternalRow.fromSeq(
-            table.keyCodec.decode(sortedKs(i)) +: want.map {
-              case PushedAgg.CountStar | PushedAgg.Count(_) => per.count(i)
-              case PushedAgg.Sum(_) => per.sum(i)
-              case PushedAgg.Min(c) if c == valN => per.extreme(i, wantMin = true)
-              case PushedAgg.Max(c) if c == valN => per.extreme(i, wantMin = false)
-              case PushedAgg.Min(c) if subN != null && c == subN =>
-                if (subMins(i) == null) null else table.subCodec.decode(subMins(i))
-              case PushedAgg.Max(c) if subN != null && c == subN =>
-                if (subMaxs(i) == null) null else table.subCodec.decode(subMaxs(i))
-              case PushedAgg.Min(_) => table.colCodec.decode(colMins(i))
-              case PushedAgg.Max(_) => table.colCodec.decode(colMaxs(i))
-              case other => throw new IllegalStateException(
-                s"unanswerable grouped aggregate $other")
-            })
-      }
-      Some((want, Seq(keyN), rows.toSeq))
+    def extremalCol(c: String): Boolean = c == colN || c == valN || (subN != null && c == subN)
+    val want = translateAggs(aggregation).filter(_.forall {
+      case PushedAgg.CountStar | PushedAgg.Sum(_) => true
+      case PushedAgg.Count(c) => table.isAddressField(c) || c == valN
+      case PushedAgg.Min(c) => extremalCol(c)
+      case PushedAgg.Max(c) => extremalCol(c)
+      case PushedAgg.CountDistinct(_) => false
+    }).getOrElse(return None)
+    // the per-bucket proofs of the ungrouped answer, over the buckets the
+    // pinned key set routes to (a tombstone in an UNRELATED bucket must
+    // not demote the answer); enumerable groups need pinned keys
+    val judge = new MetadataAggReader.BucketAnswer(table,
+      k => Options.effective(options, table.tableProps, k), pushed, want)
+    val sortedKs = judge.keys.points
+    if (!judge.eligible || sortedKs == null) return None
+    val relevant = table.bucketsMeeting(judge.keys, options)
+    val proven = CellStore.allSegmentFiles(table.dir).toSeq.collect {
+      case (b, files) if relevant(b) => judge.proof(files).getOrElse(return None)
     }
+    val files = proven.flatMap(_._1)
+    val netted = proven.exists(!_._2.tombstoneFree)
+    import CellStore.{Measure, Window}
+    val windows = Window.points(sortedKs, judge.cols, judge.subs)
+    val n = sortedKs.length
+    val wantSum = want.exists {
+      case PushedAgg.Sum(_) => true
+      case _ => false
+    }
+    val wantExt = want.exists {
+      case PushedAgg.Min(c) => c == valN
+      case PushedAgg.Max(c) => c == valN
+      case _ => false
+    }
+    // per-key count, value sum and value extremes ("per-user peak in the
+    // window") in one pass. Netted stores serve grouped COUNTs and SUMs
+    // too (the per-bucket netted shape gate already rejected
+    // extremals): a fully-deleted key nets to zero and
+    // emits no group, exactly like the fold. A decline (missing tail,
+    // overflow, unclassifiable run) demotes the WHOLE grouped answer to
+    // the fold
+    val per = CellStore.summarize(files, windows, n,
+      if (wantSum || wantExt) Measure.Values else Measure.Cells,
+      wantSum, wantExt, netted).getOrElse(return None)
+    // per-key extremal col within the col windows, and extremal SUB of
+    // the pinned (key, col) groups ("first/last sub-entry of each row's
+    // pinned column")
+    def extremals(field: Int, wantMin: Boolean): Array[Array[Byte]] =
+      CellStore.extremalAddresses(files, windows, n, field, wantMin)
+    lazy val colMins = extremals(1, wantMin = true)
+    lazy val colMaxs = extremals(1, wantMin = false)
+    lazy val subMins = extremals(2, wantMin = true)
+    lazy val subMaxs = extremals(2, wantMin = false)
+    val rows = sortedKs.indices.collect {
+      case i if per.count(i) > 0 =>
+        InternalRow.fromSeq(
+          table.keyCodec.decode(sortedKs(i)) +: want.map {
+            case PushedAgg.CountStar | PushedAgg.Count(_) => per.count(i)
+            case PushedAgg.Sum(_) => per.sum(i)
+            case PushedAgg.Min(c) if c == valN => per.extreme(i, wantMin = true)
+            case PushedAgg.Max(c) if c == valN => per.extreme(i, wantMin = false)
+            case PushedAgg.Min(c) if subN != null && c == subN =>
+              if (subMins(i) == null) null else table.subCodec.decode(subMins(i))
+            case PushedAgg.Max(c) if subN != null && c == subN =>
+              if (subMaxs(i) == null) null else table.subCodec.decode(subMaxs(i))
+            case PushedAgg.Min(_) => table.colCodec.decode(colMins(i))
+            case PushedAgg.Max(_) => table.colCodec.decode(colMaxs(i))
+            case other => throw new IllegalStateException(
+              s"unanswerable grouped aggregate $other")
+          })
+    }
+    Some((want, Seq(keyN), rows.toSeq))
   }
 
   private def aggCol(
@@ -2310,99 +2029,6 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
         Some(nr.fieldNames.head)
       case _ => None
     }
-
-  /** Envelope + file set of a provable range aggregation, or None.
-    * `netted` = at least one relevant bucket carries certified delete
-    * epochs: the count arithmetic must subtract them per run. */
-  private case class RangeCtx(files: Seq[java.nio.file.Path],
-      keys: KeyWindows, cols: KeyWindows, subs: KeyWindows,
-      netted: Boolean = false)
-
-  /** Shared validation of the COMPLETE range paths: exact filter shapes,
-    * then per-bucket run-level proofs over ONE directory listing,
-    * restricted to the buckets the envelope can touch — a pinned key set
-    * routes to its own buckets (a tombstone in an UNRELATED bucket must
-    * not demote the complete answer, and a one-key count must not read
-    * the whole store's index tails), a range on the RANGE layout covers
-    * contiguous buckets, and only a hash-layout range keeps every
-    * non-empty bucket (its keys scatter across all of them). */
-  private def validatedRangeContext(want: Seq[PushedAgg]): Option[RangeCtx] = {
-    val transposed = table.mapping.transposed
-    if (transposed) {
-      if (!MetadataAggReader.rangeShapesOk(table.mapping, want, table.keyCodec,
-          table.colCodec, table.subCodec, pushed,
-          sumOk = MetadataAggReader.sumEligible(table.mapping,
-            k => Options.effective(options, table.tableProps, k)))) return None
-    } else {
-      if (!MetadataAggReader.regularRangeShapesOk(table.mapping, want,
-          table.keyCodec, pushed,
-          k => Options.effective(options, table.tableProps, k))) return None
-    }
-    val (keys, cols, subs) = MetadataAggReader.windowsOf(table.mapping,
-      table.keyCodec, table.colCodec, table.subCodec, pushed)
-    // a HUGE pushed IN must not stall planning on driver-side point
-    // probes: decline complete and let the DISTRIBUTED partial readers
-    // own it (each bucket probes the same points in parallel, bloom- and
-    // window-pruned per run)
-    if (keys.points != null && keys.points.length > CellScanBuilder.MaxCompletePoints)
-      return None
-    val relevant = table.bucketsMeeting(keys, options)
-    val byBucket = CellStore.allSegmentFiles(table.dir)
-    val allFiles = Seq.newBuilder[java.nio.file.Path]
-    var anyNetted = false
-    val asOfBound = Options.effective(options, table.tableProps,
-      Options.ReadAsOf).map(_.toLong)
-    byBucket.foreach { case (b, files0) =>
-      if (relevant(b)) {
-        // bucket-level judgment from the memoized run stats; an as-of
-        // bound between epochs gates per run
-        // ([[MetadataAggReader.asOfView]]) and the positional arithmetic
-        // below runs over the covered file subset only
-        val rec0 = CellStore.bucketStats(files0)
-        val (files, rec) =
-          MetadataAggReader.asOfView(files0, rec0,
-            asOfBound) match {
-            case Some(fr) => fr
-            case None => return None
-          }
-        val ok =
-          if (!rec.tombstoneFree) {
-            // tombstone NETTING: certified delete epochs subtract from
-            // COUNTs positionally — counts-only shapes, and col/sub
-            // narrowing or per-column counts need their tails everywhere
-            anyNetted = true
-            rec.nettedOk &&
-              MetadataAggReader.nettedShapesOk(table.mapping, want,
-                k => Options.effective(options, table.tableProps, k)) &&
-              (!transposed ||
-                ((cols == null || rec.colEntriesAll) &&
-                  (subs == null || rec.subEntriesAll) &&
-                  // Count(value) needs the VMMX non-null proof
-                  (!want.exists {
-                    case PushedAgg.Count(c) =>
-                      c == table.mapping.field(FieldRole.TransValue).name
-                    case _ => false
-                  } || rec.valRangeAll))) &&
-              (transposed ||
-                !MetadataAggReader.regularColAggs(table.mapping, want) ||
-                rec.colValsAll)
-          } else if (transposed)
-            MetadataAggReader.rangeConditionsOkB(rec, want,
-              needColEntries = cols != null ||
-                MetadataAggReader.wantsColExtremal(table.mapping, want) ||
-                MetadataAggReader.wantsSubExtremal(table.mapping, want),
-              needSubEntries = subs != null ||
-                MetadataAggReader.wantsSubExtremal(table.mapping, want),
-              valName = table.mapping.field(FieldRole.TransValue).name)
-          else MetadataAggReader.regularRangeConditionsOkB(rec, want,
-            pointsOnly = keys.points != null,
-            colAggs = MetadataAggReader.regularColAggs(table.mapping, want))
-        if (!ok) return None
-        allFiles ++= files
-      }
-    }
-    Some(RangeCtx(allFiles.result(), keys, cols, subs, netted = anyNetted))
-  }
 
   override def pushAggregation(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
@@ -2427,21 +2053,12 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
   private def partialAggs(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     : Option[(Seq[PushedAgg], Seq[String])] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
     // an EMPTY aggregate list (a count() over an already-aggregated
     // subquery) has no partial form: ungrouped, supportCompletePushDown
     // answers it as one zero-column row; grouped, it would promise a
     // zero-column scan per group, so the normal row scan serves it
     if (aggregation.aggregateExpressions().isEmpty) return None
     if (limit.isDefined) return None
-    def col(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case nr: org.apache.spark.sql.connector.expressions.NamedReference
-          if nr.fieldNames.length == 1 &&
-            table.tableSchema.fieldNames.contains(nr.fieldNames.head) =>
-          Some(nr.fieldNames.head)
-        case _ => None
-      }
     def orderable(c: String): Boolean =
       orderableType(table.tableSchema(c).dataType)
     // SUM only over types whose partial accumulation matches Spark's own
@@ -2486,7 +2103,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
         Some(table.mapping.field(FieldRole.TransColumn).name)
       else None
     val grouping: Option[Seq[String]] =
-      aggregation.groupByExpressions().toSeq.map(col) match {
+      aggregation.groupByExpressions().toSeq.map(aggCol) match {
         case Nil => Some(Nil)
         case Seq(Some(c)) if c == keyName && !reportsLayout => Some(Seq(c))
         case Seq(Some(k), Some(c))
@@ -2495,17 +2112,13 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
         case _ => None
       }
     if (grouping.isEmpty) return None
-    val translated: Seq[Option[PushedAgg]] =
-      aggregation.aggregateExpressions().toSeq.map {
-        case _: CountStar => Some(PushedAgg.CountStar)
-        case c: Count if !c.isDistinct => col(c.column).map(PushedAgg.Count.apply)
-        case m: Min => col(m.column).filter(orderable).map(PushedAgg.Min.apply)
-        case m: Max => col(m.column).filter(orderable).map(PushedAgg.Max.apply)
-        case s: Sum if !s.isDistinct => col(s.column).filter(summable).map(PushedAgg.Sum.apply)
-        case _ => None
-      }
-    if (translated.exists(_.isEmpty)) None
-    else Some((translated.flatten, grouping.get))
+    translateAggs(aggregation).filter(_.forall {
+      case PushedAgg.CountStar | PushedAgg.Count(_) => true
+      case PushedAgg.CountDistinct(_) => false
+      case PushedAgg.Min(c) => orderable(c)
+      case PushedAgg.Max(c) => orderable(c)
+      case PushedAgg.Sum(c) => summable(c)
+    }).map((_, grouping.get))
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -2701,7 +2314,8 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       case _ => ()
     }
     val scan = new CellScan(table, required, pushed, options, limit, aggs,
-      groupKeys, limitLast, completeRows)
+      groupKeys, limitLast, completeRows,
+      judged = if (groupKeys.isEmpty && judged._1 == aggs) judged._2 else null)
     val points = scan.keyWindows.points
     val answerable = points != null &&
       points.length <= CellScanBuilder.MaxStatPoints &&
@@ -2876,16 +2490,10 @@ final case class CellInputPartition(
     // committed segment names (relative to the sst dir); null = the batch
     // scan's view, every committed segment at reader-open time
     files: Seq[String] = null,
-    // metadata-only aggregate candidate (see [[MetadataAggReader]]): the
-    // planner verified the STATIC conditions. UNFILTERED stats require a
-    // whole-bucket partition (the single reader both judges the run-level
-    // conditions and answers for the bucket from bucket-wide STAT counts,
-    // so the planner flags no sub-splits there); the RANGE-COUNT path
-    // (pushed key filters) IS flagged on key-range sub-splits — it counts
-    // positionally within the partition's own [lower, upper) slice, and a
-    // slice's visible-row count is view-independent, so no cross-split
-    // coordination exists to get torn either way
-    aggStats: Boolean = false) extends InputPartition
+    // a whole bucket answered from metadata at planning
+    // ([[CellScan.metadataRows]]): the partial row its reader emits, with
+    // no segment IO; null = the reader merges cells
+    answer: InternalRow = null) extends InputPartition
   with org.apache.spark.sql.connector.read.HasPartitionKey {
   /** S2: replica-aware placement hook (the reference's split locations,
     * input/HiveCassandraStandardSplit.java:69-71). Empty in local mode. */
@@ -2920,7 +2528,11 @@ class CellScan(
     // .supportCompletePushDown) — one row for ungrouped forms, one per
     // PRESENT group key for the grouped form; the scan plans ONE
     // partition emitting them
-    private[cassandralike] val completeRows: Option[Seq[InternalRow]] = None)
+    private[cassandralike] val completeRows: Option[Seq[InternalRow]] = None,
+    // a scan of the same builder that already listed the buckets and
+    // judged these aggregates on them ([[metadataRows]]); null = list and
+    // judge here
+    judged: CellScan = null)
   extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning
   with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -2958,77 +2570,32 @@ class CellScan(
             PushedAgg.sumType(table.tableSchema(c).dataType), nullable = true)
       })
 
-  /** STATIC half of the metadata-only aggregate gate (the dynamic,
-    * run-level half lives in [[MetadataAggReader]]): an UNGROUPED pushed
-    * aggregation whose every function is answerable from the run indexes
-    * alone — COUNT(*)/COUNT(address field) (address fields never NULL),
-    * MIN/MAX of an address field whose decoded order equals byte order —
-    * over the UNSLICED, UNFILTERED, current-time view of the store (any
-    * pushed filter, slice knob, as-of bound, TTL or dropped-column
-    * history changes which cells are visible in ways the index stats
-    * can't see). When it holds, planning pins the committed file set into
-    * the partitions and the readers answer COUNT/MIN/MAX from index
-    * tails — O(runs) metadata IO instead of O(cells): at 100 TB,
-    * `SELECT count(*)` over a compacted store reads a few KB per bucket. */
-  private lazy val statsEligible: Boolean = {
-    def isVal(c: String): Boolean =
-      table.mapping.transposed &&
-        c == table.mapping.field(FieldRole.TransValue).name &&
-        MetadataAggReader.sumEligible(table.mapping, k => table.opt(options, k))
-    // REGULAR per-column aggregates (CVAL tails): COUNT of any named
-    // cell column; SUM/MIN/MAX of a binary-long one
-    def isRegCell(c: String): Boolean =
-      MetadataAggReader.regularCountEligible(table.mapping, c,
-        k => table.opt(options, k))
-    def isRegVal(c: String): Boolean =
-      MetadataAggReader.regularValueEligible(table.mapping, c,
-        k => table.opt(options, k))
-    def answerable(a: PushedAgg): Boolean = a match {
-      case PushedAgg.CountStar => true
-      case PushedAgg.Count(c) => table.isAddressField(c) || isVal(c) ||
-        isRegCell(c)
-      case PushedAgg.Min(c) =>
-        (table.isAddressField(c) && table.isOrderPreservingAddress(c)) ||
-          isVal(c) || isRegVal(c)
-      case PushedAgg.Max(c) =>
-        (table.isAddressField(c) && table.isOrderPreservingAddress(c)) ||
-          isVal(c) || isRegVal(c)
-      case PushedAgg.Sum(c) => isVal(c) || isRegVal(c)
-      case _ => false
-    }
-    // unlike [[cleanUnslicedView]], a bounded AS-OF read is tolerated:
-    // the per-bucket readers prove maxTs ≤ bound dynamically
-    aggs.nonEmpty && aggGroupKeys.isEmpty && aggs.forall(answerable) &&
-      filters.isEmpty && CassandraLikeTable.plainView(
-        k => table.opt(options, k), table.tableProps, allowBoundedAsOf = true)
-  }
+  /** The per-bucket metadata judgment of the pushed ungrouped aggregates
+    * ([[MetadataAggReader.BucketAnswer]]). */
+  private lazy val bucketAnswer =
+    new MetadataAggReader.BucketAnswer(table, k => table.opt(options, k), filters, aggs)
 
-  /** Static gate of the RANGE/POINT-CONSTRAINED metadata aggregates
-    * ([[MetadataAggReader.rangeCount]]): COUNT / MIN(key) / MAX(key)
-    * over a transposed mapping whose pushed filters are all EXACT key
-    * shapes — plus col comparisons under a pinned key set
-    * ([[MetadataAggReader.rangeShapesOk]]) — on an otherwise-plain
-    * view. The run-level conditions (STAT tails, zero tombstones, run
-    * disjointness, per-run address-deduped, col entries for col windows)
-    * are judged by the reader. */
-  private lazy val rangeCountEligible: Boolean =
-    aggGroupKeys.isEmpty &&
-      (if (table.mapping.transposed)
-        MetadataAggReader.rangeShapesOk(table.mapping, aggs, table.keyCodec,
-          table.colCodec, table.subCodec, filters,
-          sumOk = MetadataAggReader.sumEligible(table.mapping,
-            k => table.opt(options, k)))
-      else MetadataAggReader.regularRangeShapesOk(table.mapping, aggs,
-        table.keyCodec, filters, k => table.opt(options, k))) &&
-      CassandraLikeTable.plainView(k => table.opt(options, k),
-        table.tableProps, allowBoundedAsOf = true)
+  private def metadataEligible: Boolean = aggGroupKeys.isEmpty && bucketAnswer.eligible
 
-  /** No pushed filters + [[CassandraLikeTable.plainView]]: the shared gate
-    * of [[statsEligible]] and the exact-numRows branch of
-    * [[estimateStatistics]]. */
-  private lazy val cleanUnslicedView: Boolean =
-    filters.isEmpty && CassandraLikeTable.plainView(
-      k => table.opt(options, k), table.tableProps)
+  /** Each planned bucket's metadata answer (None = it folds its cells),
+    * judged on the driver from this scan's listing, in bucket order and
+    * each bucket once: a complete answer stops at the first decline. */
+  private lazy val judgments: LazyList[(Int, Option[InternalRow])] =
+    if (judged != null) judged.judgments
+    else if (!metadataEligible) LazyList.empty
+    else LazyList.from(plannedBuckets).map(b => b -> bucketAnswer(segmentsByBucket(b)))
+
+  /** The planned buckets answered from metadata, each with its partial
+    * row: each plans as one partition that carries its row
+    * ([[planInputPartitions]]), and the other buckets fold their cells. */
+  private[cassandralike] lazy val metadataRows: Map[Int, InternalRow] =
+    judgments.collect { case (b, Some(row)) => b -> row }.toMap
+
+  /** The whole aggregate from metadata: every planned bucket answered and
+    * their rows combined (None on an overflow). */
+  private[cassandralike] def metadataAnswer: Option[InternalRow] =
+    if (!metadataEligible || !judgments.forall(_._2.isDefined)) None
+    else AggregatePartitionReader.combine(readSchema(), aggs, judgments.flatMap(_._2))
 
   /** Storage-partitioned join hook: report the token-bucket layout as a
     * KeyGroupedPartitioning over `bucket(buckets, key)` when the table
@@ -3156,7 +2723,7 @@ class CellScan(
     * a driver-side planning bottleneck (VERDICT r4 #4). Segments are
     * immutable once visible, so caching per scan instance is exact. */
   private lazy val segmentsByBucket: Map[Int, Seq[java.nio.file.Path]] =
-    CellStore.allSegmentFiles(table.dir)
+    if (judged != null) judged.segmentsByBucket else CellStore.allSegmentFiles(table.dir)
 
   override def readSchema(): StructType =
     if (aggs.nonEmpty || completeRows.isDefined) aggSchema else required
@@ -3190,8 +2757,10 @@ class CellScan(
           (if (aggGroupKeys.nonEmpty)
             s" GroupedBy: [${aggGroupKeys.mkString(", ")}]" else "") +
           (if (completeRows.isDefined) " AggStats: complete"
-          else if (statsEligible) " AggStats: metadata-eligible"
-          else if (rangeCountEligible) " AggStats: range-count" else "")
+          else if (metadataEligible)
+            s" AggStats: ${if (filters.isEmpty) "metadata-eligible" else "range-count"}" +
+              s" answered=${metadataRows.size}/${plannedBuckets.size}"
+          else "")
       else "")
   }
 
@@ -3208,67 +2777,33 @@ class CellScan(
     val rowFanout =
       if (table.mapping.transposed) 1L
       else math.max(1, table.mapping.cellFields.size).toLong
-    // EXACT numRows when the view is clean: per planned bucket, the
-    // run-stat reduction ([[CellStore.bucketStats]], from run stats every
-    // commit warms), which proves the multi-run-disjoint and the netted
-    // cases too. Feeds Catalyst's broadcast threshold with the truth
-    // instead of the cells/fan-out estimate, which over-counts every
-    // overwritten address.
-    val exact: Option[Long] =
-      if (!cleanUnslicedView) None
-      else plannedBuckets.foldLeft(Option(0L)) { (acc, b) =>
-        acc.flatMap { total =>
-          val rec = CellStore.bucketStats(segmentsByBucket.getOrElse(b, Nil))
-          if (rec.tombstoneFree && rec.disjoint)
-            Some(total + (if (table.mapping.transposed) rec.distinctAddrs
-              else rec.distinctKeys))
-          else if (rec.nettedOk)
-            // certified delete epochs: exact visible rows by netting
-            Some(total + (if (table.mapping.transposed) rec.nettedAddrs
-              else rec.nettedKeys))
-          else None
-        }
-      }
-    // EXACT numRows under pushed KEY filters, from the same range-count
-    // arithmetic the metadata aggregates use: a point/IN lookup on a
-    // provably-clean view reports its true filtered row count AND a
+    // EXACT numRows on a plain view, from the planned buckets' metadata
+    // COUNT(*) ([[MetadataAggReader.BucketAnswer]]; run stats every commit
+    // warms), which proves the multi-run-disjoint and the netted cases
+    // too. Feeds Catalyst's broadcast threshold with the truth instead of
+    // the cells/fan-out estimate, which over-counts every overwritten
+    // address. Under pushed KEY filters a point/IN lookup also reports a
     // proportional sizeInBytes — so `store WHERE key IN (...)` joined to
     // anything auto-broadcasts instead of carrying the whole store's
     // size. Containment: this runs at EVERY planning of a plain filtered
-    // scan, so it engages ONLY for a small finite key set — bucket
-    // routing then prunes the point probes to the keys' own buckets. A
-    // key RANGE (any layout) stays on the estimate: its positional count
+    // scan, so it engages ONLY for a small finite key set on a transposed
+    // mapping — bucket routing then prunes the point probes to the keys'
+    // own buckets. A key RANGE stays on the estimate: its positional count
     // would probe every covered bucket's indexes. Range COUNTS remain
-    // metadata-answerable — through the pushed-aggregate paths, which run
+    // metadata-answerable through the pushed-aggregate paths, which run
     // only for aggregate queries.
+    lazy val count = new MetadataAggReader.BucketAnswer(table,
+      k => table.opt(options, k), filters, Seq(PushedAgg.CountStar))
+    def metadataCount: Option[Long] = plannedBuckets.foldLeft(Option(0L)) { (acc, b) =>
+      acc.flatMap(n => count(segmentsByBucket(b)).map(n + _.getLong(0)))
+    }
+    val plain = CassandraLikeTable.plainView(k => table.opt(options, k), table.tableProps)
+    val exact: Option[Long] = if (plain && filters.isEmpty) metadataCount else None
     val exactFiltered: Option[Long] =
-      if (exact.isDefined || filters.isEmpty || aggs.nonEmpty) None
-      else if (!table.mapping.transposed) None
-      else if (!CassandraLikeTable.plainView(
-        k => table.opt(options, k), table.tableProps)) None
-      else if (!MetadataAggReader.rangeShapesOk(table.mapping,
-        Seq(PushedAgg.CountStar), table.keyCodec, table.colCodec,
-        table.subCodec, filters)) None
-      else {
-        val (keys, cols, subs) = MetadataAggReader.windowsOf(table.mapping,
-          table.keyCodec, table.colCodec, table.subCodec, filters)
-        if (keys.points == null || keys.points.length > CellScanBuilder.MaxStatPoints) None
-        else {
-          val provable = plannedBuckets.forall { b =>
-            val rec = CellStore.bucketStats(segmentsByBucket.getOrElse(b, Nil))
-            MetadataAggReader.rangeConditionsOkB(rec, Seq(PushedAgg.CountStar),
-              needColEntries = cols != null, needSubEntries = subs != null)
-          }
-          if (!provable) None
-          else {
-            val files = plannedBuckets.flatMap(segmentsByBucket.getOrElse(_, Nil))
-            MetadataAggReader.rangeVals(Seq(PushedAgg.CountStar),
-              table.keyCodec, table.colCodec,
-              table.mapping.field(FieldRole.TransColumn).name,
-              files, keys, cols, subs)
-              .map(_.head.asInstanceOf[Long])
-          }
-        }
+      if (!plain || filters.isEmpty || aggs.nonEmpty || !table.mapping.transposed) None
+      else count.keys.points match {
+        case ks if ks == null || ks.length > CellScanBuilder.MaxStatPoints => None
+        case _ => metadataCount
       }
     // BOUNDED estimate for LARGE pinned INs (> MaxStatPoints, where the
     // exact per-point probes would stall planning): present keys ≤
@@ -3283,10 +2818,7 @@ class CellScan(
     // realistic bucket cardinalities, and the broadcast decision only
     // needs this bound (SURVEY §7.4).
     val boundedFiltered: Option[Long] =
-      if (exact.isDefined || exactFiltered.isDefined || filters.isEmpty ||
-        aggs.nonEmpty) None
-      else if (!CassandraLikeTable.plainView(
-        k => table.opt(options, k), table.tableProps)) None
+      if (!plain || exactFiltered.isDefined || filters.isEmpty || aggs.nonEmpty) None
       else {
         val ks = KeyWindows.of(table.mapping.keyField.name, table.keyCodec, filters).points
         if (ks == null || ks.length <= CellScanBuilder.MaxStatPoints) None
@@ -3326,10 +2858,12 @@ class CellScan(
     * sparse-sample key inside the windows opens at most one index span,
     * and each run meets each window in at most one more span starting
     * before it, every span holding at most [[CellStore.IndexEvery]] cells;
-    * never more than the segment's cells. */
+    * never more than the segment's cells. A bucket answered from metadata
+    * ([[metadataRows]]) reads no cells. */
   private[cassandralike] def cellBound: Long = {
     val keys = keyWindows
-    plannedBuckets.iterator.flatMap(segmentsByBucket(_)).map { f =>
+    plannedBuckets.iterator.filterNot(metadataRows.contains)
+      .flatMap(segmentsByBucket(_)).map { f =>
       val m = CellStore.meta(f)
       val spans = m.sample.count(keys.contains) +
         m.live.iterator.map(r => keys.meeting(r.stats.firstKey, r.stats.lastKey)).sum
@@ -3365,25 +2899,15 @@ class CellScan(
       if (hosts.isEmpty) Array.empty[String] else Array(hosts(b % hosts.length))
     val target = table.opt(options, Options.SplitTargetCells).map(_.toLong)
       .getOrElse(Options.DefaultSplitTargetCells)
-    // partial metadata-aggregate path: only an UNSPLIT bucket is flagged
-    // — its single reader both judges the run-level conditions and
-    // answers for the whole bucket, so no cross-sub-split coordination
-    // (and no pinned planning-time file set, with its vanished-segment
-    // exposure under concurrent compaction) is ever needed. Sub-split
-    // buckets fold as before; the all-clean sub-split case is owned by
-    // COMPLETE pushdown, which resolves at planning and touches no files
-    // at execution.
+    // a bucket answered from metadata plans whole, carrying its row; the
+    // others fold the cells their readers list when their tasks run
     val planned = plannedBuckets.flatMap { b =>
-      val ps = SplitPlanner.forBucket(table.dir, b,
-        segmentsByBucket.getOrElse(b, Nil), hostsFor(b), target,
-        restrictFiles = false)
-      // the unfiltered STAT path needs the whole bucket in one reader;
-      // the range-count path counts positionally within any key slice,
-      // so its flag survives sub-splitting (big buckets keep the fast
-      // count exactly where the fold is most expensive)
-      if ((statsEligible && ps.lengthCompare(1) == 0) || rangeCountEligible)
-        ps.map(_.copy(aggStats = true))
-      else ps
+      metadataRows.get(b) match {
+        case Some(row) => Seq(CellInputPartition(table.dir, b, hostsFor(b), answer = row))
+        case None => SplitPlanner.forBucket(table.dir, b,
+          segmentsByBucket.getOrElse(b, Nil), hostsFor(b), target,
+          restrictFiles = false)
+      }
     }
     // Planning-time SUB-SPLIT pruning from the pushed key windows: a
     // partition whose [lower, upper) misses every window is dropped here —
@@ -3480,20 +3004,13 @@ final case class CellReaderFactory(
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val cp = p.asInstanceOf[CellInputPartition]
-    // metadata-only aggregates: a planner-flagged partition answers its
-    // COUNT/MIN/MAX from run-index stats when the run-level conditions
-    // hold (index-tail IO only); otherwise it falls through to the
-    // cell-fold scan below, over the same listing
-    val listed =
-      if (cp.aggStats && aggs.nonEmpty && aggGroupKeys.isEmpty) cp.segments()
-      else null
-    if (listed != null) {
-      MetadataAggReader.create(cp, listed, ColumnMapping(mappedFields), aggs,
-        (k: String) => Options.effective(options, tableProps, k),
-        filters) match {
-        case Some(r) => return r
-        case None => ()
-      }
+    if (cp.answer != null) return new CountedReader {
+      override val counters: ScanCounters = new ScanCounters
+      counters.partitionsStatsOnly = 1L
+      private var emitted = false
+      override def next(): Boolean = !emitted && { emitted = true; true }
+      override def get(): InternalRow = cp.answer
+      override def close(): Unit = ()
     }
     // dropped-column history: cellName -> drop ts (cells at/below are hidden)
     val dropped = tableProps.collect {
@@ -3502,7 +3019,7 @@ final case class CellReaderFactory(
     }
     val base = new CellPartitionReader(cp, ColumnMapping(mappedFields), required,
       filters, (k: String) => Options.effective(options, tableProps, k), limit,
-      dropped, limitLast, listed)
+      dropped, limitLast)
     val counted = accums match {
       case None => base
       case Some(a) => new CountedReader {
@@ -3519,34 +3036,31 @@ final case class CellReaderFactory(
   }
 }
 
-/** Metadata-only aggregates: answers an UNGROUPED pushed COUNT/MIN/MAX
-  * from the run indexes' STAT tails and key/col/sub windows — zero cell
-  * payload IO (the per-bucket cost is a few KB of index tails). The
-  * parquet-footer-count idea applied to the LSM store: at 100 TB,
-  * `SELECT count(*)` over a compacted store touches metadata only.
+/** Metadata-only aggregates: an UNGROUPED pushed COUNT/SUM/MIN/MAX answers
+  * bucket by bucket from the run indexes' STAT tails, prefix tails and
+  * key/col/sub windows — zero cell payload IO (the per-bucket cost is a
+  * few KB of index tails, memoized per segment). The parquet-footer-count
+  * idea applied to the LSM store: at 100 TB, `SELECT count(*)` over a
+  * compacted store touches metadata only.
   *
-  * The STATIC conditions (aggregate shapes, no filters/slices/as-of/TTL/
-  * dropped history) were verified at planning ([[CellScan.statsEligible]]),
-  * which flags ONLY whole-bucket partitions — the single reader both
-  * judges the DYNAMIC conditions and answers for its bucket, so there is
-  * no cross-sub-split coordination to get torn, and the reader lists the
-  * committed segments at open time exactly like the fold it replaces (no
-  * pinned planning-time file set, no vanished-segment exposure under a
-  * concurrent compaction). The dynamic conditions:
+  * [[BucketAnswer]] is the one judgment. The driver makes it at planning,
+  * per planned bucket, always for the whole bucket (a bucket big enough
+  * to sub-split answers whole): the complete tier answers when every
+  * bucket does, and the partial scan plans each answered bucket as one
+  * partition that carries its row, while the others fold their cells
+  * ([[CellScan.metadataRows]]). The conditions, judged from the bucket's
+  * [[CellStore.BucketStat]] reduction:
   *  - every run carries the STAT tail (legacy segments decline);
-  *  - zero tombstones anywhere (a delete invalidates counts and can hide
-  *    the extremal key/column);
-  *  - for COUNTs additionally: the runs' key ranges are pairwise DISJOINT
-  *    — no two runs can then share a cell address, so per-run distinct
-  *    counts are additive. The compacted single-run bucket qualifies
-  *    trivially; disjoint multi-run covers the time-series append pattern
-  *    (batches landing in non-overlapping key ranges). MIN/MAX need no
-  *    disjointness — overwrites never remove an address — but DO decline
-  *    on any absent window tail, on every path.
-  * Any failed condition returns None and the bucket falls back to the
-  * cell-fold scan. Sub-split (big) buckets never take this path — the
-  * all-clean sub-split case is owned by COMPLETE pushdown, which
-  * resolves at planning.
+  *  - zero tombstones, or only CERTIFIED delete epochs under a
+  *    counts-and-sums shape ([[nettedShapesOk]]) — a delete otherwise
+  *    invalidates counts and can hide the extremal key/column;
+  *  - for COUNTs and SUMs additionally: the runs' key ranges are pairwise
+  *    DISJOINT — no two runs can then share a cell address, so per-run
+  *    distinct counts are additive. The compacted single-run bucket
+  *    qualifies trivially; disjoint multi-run covers the time-series
+  *    append pattern. MIN/MAX of an address need no disjointness —
+  *    overwrites never remove an address — but DO decline on any absent
+  *    window tail.
   *
   * Row counts: a transposed/super SQL row IS one cell address, so rows =
   * distinct (key, col, sub) addresses; a regular row is one KEY (its
@@ -3555,86 +3069,11 @@ final case class CellReaderFactory(
   * the same counts hold. COUNT(address field) = COUNT(*): address fields
   * are never NULL in emitted rows. */
 object MetadataAggReader {
-  /** EXACT visible-row count from per-run stats, or None when not
-    * provable: every run must carry the STAT tail with zero tombstones,
-    * and (multi-run) the runs' key ranges must be pairwise disjoint so
-    * distinct counts are additive. Shared by the metadata aggregate
-    * readers (per bucket) and [[CellScan.estimateStatistics]] (whole
-    * store — exact numRows feeds Catalyst's broadcast-join threshold,
-    * where the old cells/fan-out estimate over-counted every overwritten
-    * or duplicated address). */
-  def exactRows(stats: Seq[CellStore.RunStats], transposed: Boolean)
-    : Option[Long] = {
-    if (stats.exists(_.tombstones != 0)) return None // legacy (-1) or deletes
-    if (stats.length > 1) {
-      val byFirst = stats.sortWith((a, b) =>
-        Codecs.compareBytes(a.firstKey, b.firstKey) < 0)
-      var i = 1
-      while (i < byFirst.length) {
-        if (Codecs.compareBytes(byFirst(i - 1).lastKey, byFirst(i).firstKey) >= 0)
-          return None // overlapping key ranges: counts not additive
-        i += 1
-      }
-    }
-    Some(
-      if (transposed) stats.map(_.distinctAddrs.toLong).sum
-      else stats.map(_.distinctKeys.toLong).sum)
-  }
-
-  /** The three address levels a run window describes. */
-  sealed trait AddrLevel extends Serializable
-  case object KeyLevel extends AddrLevel
-  case object ColLevel extends AddrLevel
-  case object SubLevel extends AddrLevel
-
-  /** Extremal byte form of one address level across runs, or None when
-    * any run's window is absent (incomplete tail — the caller must
-    * DECLINE, never guess; a silent partial answer here is a wrong MIN).
-    * Shared by the per-bucket readers and the complete-pushdown planner
-    * so the two paths cannot drift. */
-  def extremal(stats: Seq[CellStore.RunStats], level: AddrLevel,
-      wantMin: Boolean): Option[Array[Byte]] = {
-    if (stats.isEmpty) return None
-    val vs = stats.map { s =>
-      level match {
-        case KeyLevel => if (wantMin) s.firstKey else s.lastKey
-        case ColLevel => if (wantMin) s.colMin else s.colMax
-        case SubLevel => if (wantMin) s.subMin else s.subMax
-      }
-    }
-    if (vs.exists(_ == null)) None
-    else Some(vs.reduce((a, b) =>
-      if ((Codecs.compareBytes(a, b) < 0) == wantMin) a else b))
-  }
-
-  /** [[extremal]]'s bucket-record twin: the per-bucket windows were
-    * reduced from the same run stats, and a bucket whose window tail was
-    * incomplete carries `colWindowsAll`/`subWindowsAll` = false (or a
-    * null reduced window) — decline, never guess. */
-  def extremalB(buckets: Seq[CellStore.BucketStat], level: AddrLevel,
-      wantMin: Boolean): Option[Array[Byte]] = {
-    if (buckets.isEmpty) return None
-    val vs = buckets.map { b =>
-      level match {
-        case KeyLevel => if (wantMin) b.firstKey else b.lastKey
-        case ColLevel =>
-          if (!b.colWindowsAll) null
-          else if (wantMin) b.colMin else b.colMax
-        case SubLevel =>
-          if (!b.subWindowsAll) null
-          else if (wantMin) b.subMin else b.subMax
-      }
-    }
-    if (vs.exists(_ == null)) None
-    else Some(vs.reduce((a, b) =>
-      if ((Codecs.compareBytes(a, b) < 0) == wantMin) a else b))
-  }
-
-  /** [[rangeConditionsOk]]'s bucket-record twin, consumed by the COMPLETE
-    * planner (one reduced record per bucket). Must stay judgment-
-    * equivalent to the run-level form the per-bucket partial readers use —
-    * both are independently sound, but divergence would make complete and
-    * partial answers qualify differently for no reason. */
+  /** Run-level conditions of a transposed key-window aggregate over one
+    * tombstone-free bucket record: col/sub entries where windows or
+    * extremals need them, VSUM/VMMX tails for value aggregates, and for
+    * counts, sums and value extremes disjoint runs with per-run distinct
+    * addresses (every cell in the windows is then one visible row). */
   def rangeConditionsOkB(b: CellStore.BucketStat, aggs: Seq[PushedAgg],
       needColEntries: Boolean, needSubEntries: Boolean,
       valName: String = null): Boolean = {
@@ -3666,7 +3105,9 @@ object MetadataAggReader {
       (b.disjoint && b.allAddrsDistinct)
   }
 
-  /** [[regularRangeConditionsOk]]'s bucket-record twin. `colAggs` marks a
+  /** Run-level conditions of a regular key-window aggregate over one
+    * tombstone-free bucket record: a count over key ranges needs disjoint
+    * runs (a point set counts present keys). `colAggs` marks a
     * per-COLUMN aggregate in the list (CVAL paths): those need every
     * consulted cell to be a distinct visible row — disjoint runs, per-run
     * address dedup — plus the CVAL tails on every run. */
@@ -3759,345 +3200,188 @@ object MetadataAggReader {
           .map(cov => (cov, CellStore.bucketStats(cov)))
     }
 
-  /** `files0` is the partition's segments ([[CellInputPartition.segments]]),
-    * listed once by the caller, which merges the same list if this
-    * declines. */
-  def create(
-      part: CellInputPartition,
-      files0: Seq[java.nio.file.Path],
-      mapping: ColumnMapping,
-      aggs: Seq[PushedAgg],
-      opt: String => Option[String],
-      filters: Array[Filter] = Array.empty): Option[PartitionReader[InternalRow]] = {
-    // the reader judges its conditions from its segments' run-stat
-    // reduction (one record, from memoized run stats), through the SAME
-    // rangeConditionsOkB judgments the complete planner uses, so the two
-    // paths cannot drift (VERDICT r10 follow-up; was SURVEY §7.4
-    // round-12 #3); a change-feed part reduces exactly its pinned files
-    val rec0 = CellStore.bucketStats(files0)
-    // an AS-OF bound between epochs gates PER RUN ([[asOfView]]): covered
-    // runs answer positionally from their subset record, newer runs drop
-    // out, straddlers fold
-    val asOf = opt(Options.ReadAsOf).map(_.toLong)
-    val (files, rec) = asOfView(files0, rec0, asOf) match {
-      case Some(fr) => fr
-      case None => return None
+  /** One bucket's answer to an UNGROUPED pushed aggregation `aggs` under
+    * the pushed `filters`, from its segments' run stats alone: the
+    * bucket's partial row (one column per aggregate, the row the fold
+    * would emit for the bucket), or None when a condition fails and the
+    * bucket folds its cells. Buckets partition the keys, so bucket rows
+    * combine into the store's answer ([[AggregatePartitionReader
+    * .combine]]), COUNT(DISTINCT key) included.
+    *
+    * [[eligible]] is the static half: the aggregate shapes, the plain view
+    * ([[CassandraLikeTable.plainView]]; a bounded as-of read is
+    * tolerated) and, under filters, exact key shapes ([[rangeShapesOk]],
+    * [[regularRangeShapesOk]]) over at most
+    * [[CellScanBuilder.MaxCompletePoints]] pinned keys. Unfiltered, the
+    * row comes from the bucket record: STAT counts, VSUM/VMMX value
+    * totals and extremes, CVAL per-column totals, or the netted twins of
+    * each. Under key filters it is positional arithmetic over the key
+    * windows ([[rangeVals]], [[regularRangeVals]]). An as-of bound gates
+    * per run ([[asOfView]]). */
+  final class BucketAnswer(table: CassandraLikeTable,
+      opt: String => Option[String], filters: Array[Filter],
+      aggs: Seq[PushedAgg]) {
+    private val mapping = table.mapping
+    private val transposed = mapping.transposed
+    private val keyN = mapping.keyField.name
+    private val valN = if (transposed) mapping.field(FieldRole.TransValue).name else null
+    private val sumOk = sumEligible(mapping, opt)
+    private def isVal(c: String): Boolean = sumOk && c == valN
+
+    /** The exact key windows of the filters, and the clustering and sub
+      * windows (null when no filter restricts them). */
+    private[cassandralike] lazy val (keys, cols, subs) =
+      windowsOf(mapping, table.keyCodec, table.colCodec, table.subCodec, filters)
+
+    private def statAnswerable(a: PushedAgg): Boolean = a match {
+      case PushedAgg.CountStar => true
+      case PushedAgg.Count(c) => table.isAddressField(c) || isVal(c) ||
+        regularCountEligible(mapping, c, opt)
+      case PushedAgg.CountDistinct(c) => c == keyN
+      case PushedAgg.Min(c) => minMaxable(c)
+      case PushedAgg.Max(c) => minMaxable(c)
+      case PushedAgg.Sum(c) => isVal(c) || regularValueEligible(mapping, c, opt)
     }
-    // tombstones: either the bucket proves TOMBSTONE NETTING — certified
-    // delete epochs only (DCRT), where COUNTs subtract deletions
-    // positionally — or every metadata path declines to the fold. A
-    // change-feed partition pins a file SUBSET that can split a tombstone
-    // from its victim run: never net those.
-    val netted = !rec.tombstoneFree
-    if (netted && (!rec.nettedOk || part.files != null ||
-        !nettedShapesOk(mapping, aggs, opt))) return None
-    // the range-count path is sub-split-safe (it counts positionally
-    // within ANY key slice), so it is consulted before the whole-bucket
-    // guard below
-    if (filters.nonEmpty) return rangeCount(part, mapping, aggs, opt, filters,
-      files, rec)
-    // UNFILTERED stats: whole-bucket partitions only (the planner never
-    // flags sub-splits here; belt and braces — a key-range restriction
-    // would falsify the bucket-wide STAT counts)
-    if (part.lower != null || part.upper != null) return None
-    if (netted) {
-      // netted unfiltered COUNTs + SUMs: visible rows and the netted
-      // value total from the bucket reductions; REGULAR per-column
-      // COUNT(c)/SUM(c) from the NETTED CVAL twins (live − certified,
-      // round 13 — the whole-store "column totals after a purge").
-      // Transposed SUM only on the value column.
-      val keyN0 = mapping.keyField.name
-      val valNN =
-        if (mapping.transposed) mapping.field(FieldRole.TransValue).name
-        else null
-      def regNetted(c: String): Option[CellStore.ColValStat] = {
+    private def minMaxable(c: String): Boolean =
+      (table.isAddressField(c) && table.isOrderPreservingAddress(c)) ||
+        isVal(c) || regularValueEligible(mapping, c, opt)
+
+    val eligible: Boolean = aggs.nonEmpty &&
+      CassandraLikeTable.plainView(opt, table.tableProps, allowBoundedAsOf = true) &&
+      (if (filters.isEmpty) aggs.forall(statAnswerable)
+      else if (transposed)
+        rangeShapesOk(mapping, aggs, table.keyCodec, table.colCodec,
+          table.subCodec, filters, sumOk)
+      else regularRangeShapesOk(mapping, aggs, table.keyCodec, filters, opt)) &&
+      (keys.points == null || keys.points.length <= CellScanBuilder.MaxCompletePoints)
+
+    private val counts = aggs.exists {
+      case PushedAgg.CountStar | PushedAgg.Count(_) | PushedAgg.CountDistinct(_) => true
+      case _ => false
+    }
+    // transposed SUM is of the value column; regular sums are per-column
+    private val valSum = transposed && aggs.exists {
+      case PushedAgg.Sum(_) => true
+      case _ => false
+    }
+    private val valCount = aggs.contains(PushedAgg.Count(valN))
+    private val valExtremal =
+      aggs.contains(PushedAgg.Min(valN)) || aggs.contains(PushedAgg.Max(valN))
+    private val colAggs = regularColAggs(mapping, aggs)
+
+    /** The bucket's judged files (an as-of bound's covered subset) and
+      * their record, when its runs prove the aggregates; None = fold. */
+    def proof(files0: Seq[java.nio.file.Path])
+      : Option[(Seq[java.nio.file.Path], CellStore.BucketStat)] = {
+      if (!eligible) return None
+      val (files, rec) = asOfView(files0, CellStore.bucketStats(files0),
+        opt(Options.ReadAsOf).map(_.toLong)).getOrElse(return None)
+      val proven =
+        if (!rec.tombstoneFree)
+          // certified delete epochs subtract: counts and sums only, and
+          // col/sub narrowing, Count(value) and per-column aggregates need
+          // their tails on every run (a certified epoch carries its
+          // victims' col/sub bytes and values)
+          rec.nettedOk && nettedShapesOk(mapping, aggs, opt) &&
+            (!valCount || rec.valRangeAll) &&
+            (if (filters.isEmpty)
+              (!colAggs || rec.nettedColValsOk) && (!valSum || rec.nettedSumOk)
+            else
+              (cols == null || rec.colEntriesAll) &&
+                (subs == null || rec.subEntriesAll) && (!colAggs || rec.colValsAll))
+        else if (filters.nonEmpty) {
+          if (transposed)
+            rangeConditionsOkB(rec, aggs,
+              needColEntries = cols != null ||
+                wantsColExtremal(mapping, aggs) || wantsSubExtremal(mapping, aggs),
+              needSubEntries = subs != null || wantsSubExtremal(mapping, aggs),
+              valName = valN)
+          else regularRangeConditionsOkB(rec, aggs,
+            pointsOnly = keys.points != null, colAggs = colAggs)
+        } else
+          (!(counts || valSum || valExtremal) || rec.disjoint) &&
+            (!valSum || (rec.valSumsAll && rec.valTotalOk && rec.allAddrsDistinct)) &&
+            (!colAggs || (rec.disjoint && rec.allAddrsDistinct && rec.colValsAll)) &&
+            (!valExtremal || rec.allAddrsDistinct) &&
+            // VMMX tails everywhere prove every value non-null (Count) and
+            // carry the extremes
+            (!(valCount || valExtremal) || rec.valRangeAll)
+      if (proven) Some((files, rec)) else None
+    }
+
+    /** The bucket's partial row over `files0`, or None = fold. */
+    def apply(files0: Seq[java.nio.file.Path]): Option[InternalRow] =
+      proof(files0).flatMap { case (files, rec) =>
+        val netted = !rec.tombstoneFree
+        (if (filters.isEmpty) statVals(rec, netted)
+        else if (transposed)
+          rangeVals(aggs, table.keyCodec, table.colCodec,
+            mapping.field(FieldRole.TransColumn).name, files, keys, cols, subs,
+            valName = valN, netted = netted, subCodec = table.subCodec,
+            subName =
+              if (mapping.hasSubColumn) mapping.field(FieldRole.TransSubColumn).name
+              else null)
+        else regularRangeVals(aggs, table.keyCodec, files, keys,
+          colBytesOf = if (colAggs) regularCellBytes(mapping, _) else _ => null,
+          netted = netted)).map(InternalRow.fromSeq)
+      }
+
+    /** The unfiltered row from the bucket record (netted: the live minus
+      * certified twins); None on a per-column sum or range the tails could
+      * not carry, or an incomplete window tail. */
+    private def statVals(rec: CellStore.BucketStat, netted: Boolean): Option[Seq[Any]] = {
+      val rows: Long =
+        if (netted) { if (transposed) rec.nettedAddrs else rec.nettedKeys }
+        else if (transposed) rec.distinctAddrs else rec.distinctKeys
+      // a regular cell column's reduction; absent = provably no cells
+      def colStat(c: String): Option[CellStore.ColValStat] = {
         val cb = regularCellBytes(mapping, c)
-        rec.nettedColVals.find(cv => java.util.Arrays.equals(cv.col, cb))
+        (if (netted) rec.nettedColVals else rec.colVals)
+          .find(cv => java.util.Arrays.equals(cv.col, cb))
       }
-      val answerableHere = aggs.forall {
-        case PushedAgg.CountStar => true
-        case PushedAgg.Count(c) =>
-          if (mapping.transposed)
-            // Count(value) == rows only under the VMMX non-null proof
-            c != valNN || rec.valRangeAll
-          else c == keyN0 || rec.nettedColValsOk
-        case PushedAgg.Sum(c) =>
-          if (mapping.transposed) rec.nettedSumOk
-          else rec.nettedColValsOk && regNetted(c).forall(_.sumsOk)
-        case _ => false
+      def colExtreme(c: String, wantMin: Boolean): Option[Any] = colStat(c) match {
+        case Some(cv) if !cv.rangeOk => None
+        case Some(cv) if cv.count > 0L => Some(if (wantMin) cv.min else cv.max)
+        case _ => Some(null)
       }
-      if (!answerableHere) return None
-      val rowCount: Long =
-        if (mapping.transposed) rec.nettedAddrs else rec.nettedKeys
-      return Some(answerReader(InternalRow.fromSeq(aggs.map {
-        case PushedAgg.Count(c) if !mapping.transposed && c != keyN0 =>
-          // visible cells named c (an absent column has exactly zero)
-          regNetted(c).map(_.count).getOrElse(0L): Any
-        case PushedAgg.Sum(c) if !mapping.transposed =>
-          regNetted(c) match {
-            case Some(cv) if cv.count > 0L => Long.box(cv.sum)
-            case _ => null // SUM over no visible cells is NULL
+      // an address field's extremal bytes; None = its window tail is
+      // incomplete on some run: decline, never guess
+      def address(c: String, wantMin: Boolean): Option[Any] =
+        if (rec.runs == 0) Some(null)
+        else Option(
+          if (c == keyN) { if (wantMin) rec.firstKey else rec.lastKey }
+          else if (transposed && c == mapping.field(FieldRole.TransColumn).name) {
+            if (!rec.colWindowsAll) null else if (wantMin) rec.colMin else rec.colMax
+          } else if (!rec.subWindowsAll) null
+          else if (wantMin) rec.subMin else rec.subMax
+        ).map(table.decodeAddress(c, _))
+      val regular = !transposed
+      Some(aggs.map {
+        case PushedAgg.Count(c) if regular && c != keyN => colStat(c).map(_.count).getOrElse(0L)
+        case PushedAgg.Sum(c) if regular =>
+          colStat(c) match {
+            case Some(cv) if !cv.sumsOk => return None // non-long bytes or overflow
+            case Some(cv) if cv.count > 0L => cv.sum
+            case _ => null // SUM over no cells is NULL
           }
+        case PushedAgg.Min(c) if regular && c != keyN =>
+          colExtreme(c, wantMin = true).getOrElse(return None)
+        case PushedAgg.Max(c) if regular && c != keyN =>
+          colExtreme(c, wantMin = false).getOrElse(return None)
+        case PushedAgg.CountStar | PushedAgg.Count(_) => rows
+        case PushedAgg.CountDistinct(_) => rec.distinctKeys
         case PushedAgg.Sum(_) =>
-          if (rowCount == 0L) null else Long.box(rec.nettedSum)
-        case _ => rowCount: Any
-      })))
+          if (rows == 0L) null else if (netted) rec.nettedSum else rec.valTotal
+        case PushedAgg.Min(c) if c == valN => if (rec.runs > 0) rec.valMin else null
+        case PushedAgg.Max(c) if c == valN => if (rec.runs > 0) rec.valMax else null
+        case PushedAgg.Min(c) => address(c, wantMin = true).getOrElse(return None)
+        case PushedAgg.Max(c) => address(c, wantMin = false).getOrElse(return None)
+      })
     }
-    val valN0 =
-      if (mapping.transposed) mapping.field(FieldRole.TransValue).name else null
-    val valOk0 = valN0 != null && sumEligible(mapping, opt)
-    def isVal(c: String): Boolean = valOk0 && c == valN0
-    // REGULAR per-column aggregates (CVAL): COUNT/SUM/MIN/MAX of a named
-    // cell column answer from the bucket's per-column reductions — the
-    // static type/encoding eligibility was proven by the pushdown gate
-    // (statsEligible); here only the dynamic store proofs are judged
-    def regBytes(c: String): Array[Byte] =
-      if (mapping.transposed || c == mapping.keyField.name) null
-      else regularCellBytes(mapping, c)
-    if (regularColAggs(mapping, aggs) &&
-        !(rec.disjoint && rec.allAddrsDistinct && rec.colValsAll))
-      return None
-    def regStat(c: String): Option[CellStore.ColValStat] = {
-      val cb = regBytes(c)
-      rec.colVals.find(cv => java.util.Arrays.equals(cv.col, cb))
-    }
-    val needCount = aggs.exists {
-      case PushedAgg.CountStar | PushedAgg.Count(_) => true
-      case _ => false
-    }
-    val needSum = aggs.exists {
-      case PushedAgg.Sum(c) => regBytes(c) == null // per-col sums gate above
-      case _ => false
-    }
-    val needValExtremal = aggs.exists {
-      case PushedAgg.Min(c) => isVal(c)
-      case PushedAgg.Max(c) => isVal(c)
-      case _ => false
-    }
-    val needValCount = aggs.exists {
-      case PushedAgg.Count(c) => isVal(c)
-      case _ => false
-    }
-    if ((needCount || needSum || needValExtremal) && !rec.disjoint)
-      return None // overlapping runs
-    if (needSum && (!sumEligible(mapping, opt) ||
-        !rec.valSumsAll || !rec.valTotalOk || !rec.allAddrsDistinct))
-      return None
-    // value-column aggregates: VMMX tails everywhere prove every value
-    // non-null (Count) and carry the extremes (Min/Max — which also need
-    // the visible-row dedup, an overwritten value must not surface)
-    if ((needValCount || needValExtremal) && !rec.valRangeAll)
-      return None
-    if (needValExtremal && !rec.allAddrsDistinct)
-      return None
-    val keyF = mapping.keyField
-    val keyCodec = KeyCodec.of(keyF.dataType, opt)
-    val colF = if (mapping.transposed) mapping.field(FieldRole.TransColumn) else null
-    val colCodec = if (colF == null) null else KeyCodec.ofColumn(colF.dataType, opt)
-    val subF = if (mapping.hasSubColumn) mapping.field(FieldRole.TransSubColumn) else null
-    val subCodec = if (subF == null) null else KeyCodec.ofSub(subF.dataType, opt)
-    def levelOf(c: String): Option[AddrLevel] =
-      if (c == keyF.name) Some(KeyLevel)
-      else if (colF != null && c == colF.name) Some(ColLevel)
-      else if (subF != null && c == subF.name) Some(SubLevel)
-      else None
-    def decode(c: String, b: Array[Byte]): Any =
-      if (c == keyF.name) keyCodec.decode(b)
-      else if (colF != null && c == colF.name) colCodec.decode(b)
-      else subCodec.decode(b)
-    val rowCount: Long =
-      if (mapping.transposed) rec.distinctAddrs else rec.distinctKeys
-    val vals = new Array[Any](aggs.length)
-    var i = 0
-    while (i < aggs.length) {
-      aggs(i) match {
-        case PushedAgg.Count(c) if regBytes(c) != null =>
-          // visible cells named c (an absent column has exactly zero)
-          vals(i) = regStat(c).map(_.count).getOrElse(0L)
-        case PushedAgg.Sum(c) if regBytes(c) != null =>
-          regStat(c) match {
-            case Some(cv) =>
-              if (!cv.sumsOk) return None // non-long bytes or overflow
-              vals(i) = if (cv.count == 0L) null else Long.box(cv.sum)
-            case None => vals(i) = null // SUM over no rows is NULL
-          }
-        case PushedAgg.Min(c) if regBytes(c) != null =>
-          regStat(c) match {
-            case Some(cv) =>
-              if (!cv.rangeOk) return None
-              if (cv.count > 0L) vals(i) = Long.box(cv.min)
-            case None => () // no cells: NULL partial
-          }
-        case PushedAgg.Max(c) if regBytes(c) != null =>
-          regStat(c) match {
-            case Some(cv) =>
-              if (!cv.rangeOk) return None
-              if (cv.count > 0L) vals(i) = Long.box(cv.max)
-            case None => ()
-          }
-        case PushedAgg.CountStar | PushedAgg.Count(_) =>
-          vals(i) = rowCount // Count(value) == rows: VMMX gated above
-        case PushedAgg.Min(c) if isVal(c) =>
-          if (rec.runs > 0) vals(i) = Long.box(rec.valMin)
-        case PushedAgg.Max(c) if isVal(c) =>
-          if (rec.runs > 0) vals(i) = Long.box(rec.valMax)
-        case PushedAgg.Min(c) =>
-          if (rec.runs > 0) levelOf(c).flatMap(
-            extremalB(Seq(rec), _, wantMin = true)) match {
-            case Some(b) => vals(i) = decode(c, b)
-            case None => return None
-          }
-        case PushedAgg.Max(c) =>
-          if (rec.runs > 0) levelOf(c).flatMap(
-            extremalB(Seq(rec), _, wantMin = false)) match {
-            case Some(b) => vals(i) = decode(c, b)
-            case None => return None
-          }
-        case PushedAgg.Sum(_) =>
-          // gated above: disjoint runs, per-run dedup, VSUM tails present
-          vals(i) = if (rowCount == 0L) null else rec.valTotal
-        case _ => return None // unanswerable from stats
-      }
-      i += 1
-    }
-    Some(answerReader(InternalRow.fromSeq(vals.toIndexedSeq)))
   }
 
-  /** RANGE/POINT-CONSTRAINED metadata aggregates: a pushed COUNT(*) /
-    * COUNT(address) — and MIN/MAX of the ROW KEY itself — under pushed
-    * ROW-KEY predicates answers from run-index arithmetic — runs fully
-    * inside the key envelope count positionally from the memoized stats,
-    * and only the boundary-crossing runs scan the ONE index span
-    * containing each boundary (≤ 2×IndexEvery cell decodes per run,
-    * however wide the range) — the "how many events in [t1, t2]" count
-    * and the "first/last event in the window" extremal without reading
-    * the range ([[CellStore.summarize]] / [[CellStore.extremalAddresses]]
-    * over the key windows).
-    * MIN/MAX require the key's byte order to BE its value order
-    * (order-preserving encoding) and need neither run disjointness nor
-    * address dedup (an overwrite never removes an address); counts need
-    * both.
-    *
-    * Exactness needs the envelope to BE the satisfying key set, and every
-    * counted cell to be a distinct visible row:
-    *  - transposed/super mappings only (a visible row IS one cell
-    *    address); a regular mapping's rows-per-key varies with missing
-    *    cells, which positions can't see;
-    *  - every pushed filter is a key equality/IN (point windows are
-    *    exact under any injective encoding) or a key comparison that
-    *    [[KeyWindows]] turns into exact byte windows (an order-preserving
-    *    form, or a `bytes` int/long/timestamp key — counted window by
-    *    window; any other comparison would leave the windows wider than
-    *    the predicate);
-    *  - zero tombstones, pairwise-disjoint runs AND per-run
-    *    distinctAddrs == cells ([[CellStore.RunStats]]) — every cell in
-    *    the envelope is then exactly one LWW-visible row. Counter
-    *    collapse merges per address, so all-distinct addresses leave
-    *    nothing to collapse.
-    * A key IN / equality counts per-point envelopes [k, succ(k)) — each
-    * contributes the number of PRESENT keys, so absent lookup keys count
-    * zero, exactly like the fold. Any unprovable condition returns None
-    * and the bucket falls back to the (seek-pruned) cell-fold scan.
-    *
-    * SUB-SPLIT SAFE, unlike the whole-bucket STAT path: the envelope is
-    * intersected with the partition's own [lower, upper) key slice and
-    * counted positionally, and split boundaries are whole keys, so each
-    * visible row lands in exactly one sub-split's count. No cross-split
-    * coordination is needed even under a concurrent compaction: a slice's
-    * visible-row count is VIEW-INDEPENDENT (compaction preserves visible
-    * cells), so any reader whose own committed listing satisfies the
-    * run-level conditions answers the same number a pre/post-compaction
-    * view would — and a reader whose view doesn't prove them just folds
-    * its own slice. */
-  private def rangeCount(
-      part: CellInputPartition,
-      mapping: ColumnMapping,
-      aggs: Seq[PushedAgg],
-      opt: String => Option[String],
-      filters: Array[Filter],
-      files: Seq[java.nio.file.Path],
-      rec: CellStore.BucketStat): Option[PartitionReader[InternalRow]] = {
-    if (!mapping.transposed)
-      return regularRange(part, mapping, aggs, opt, filters, files, rec)
-    val keyCodec = KeyCodec.of(mapping.keyField.dataType, opt)
-    val colCodec = KeyCodec.ofColumn(
-      mapping.field(FieldRole.TransColumn).dataType, opt)
-    val subCodec =
-      if (mapping.hasSubColumn)
-        KeyCodec.ofSub(mapping.field(FieldRole.TransSubColumn).dataType, opt)
-      else null
-    if (!rangeShapesOk(mapping, aggs, keyCodec, colCodec, subCodec, filters,
-        sumOk = sumEligible(mapping, opt)))
-      return None
-    // the key windows ∩ the partition's own key slice (sub-splits
-    // partition the bucket's keys)
-    val (keys0, cols, subs) = windowsOf(mapping, keyCodec, colCodec, subCodec, filters)
-    val keys = keys0.within(part.lower, part.upper)
-    val valN = mapping.field(FieldRole.TransValue).name
-    val netted = !rec.tombstoneFree
-    if (netted) {
-      // [[create]] pre-proved nettedOk + netted shapes; col/sub
-      // narrowing additionally needs per-entry bytes on EVERY run (a
-      // certified epoch carries its victims' col/sub bytes), and
-      // Count(value) needs the VMMX non-null proof
-      if (cols != null && !rec.colEntriesAll) return None
-      if (subs != null && !rec.subEntriesAll) return None
-      val wantsValCount = aggs.exists {
-        case PushedAgg.Count(c) => c == valN
-        case _ => false
-      }
-      if (wantsValCount && !rec.valRangeAll) return None
-    } else if (!rangeConditionsOkB(rec, aggs,
-        needColEntries = cols != null ||
-          wantsColExtremal(mapping, aggs) || wantsSubExtremal(mapping, aggs),
-        needSubEntries = subs != null || wantsSubExtremal(mapping, aggs),
-        valName = valN))
-      return None
-    rangeVals(aggs, keyCodec, colCodec,
-      mapping.field(FieldRole.TransColumn).name,
-      files, keys, cols, subs, valName = valN,
-      netted = netted,
-      subCodec = subCodec,
-      subName =
-        if (mapping.hasSubColumn) mapping.field(FieldRole.TransSubColumn).name
-        else null)
-      .map(vals => answerReader(InternalRow.fromSeq(vals)))
-  }
-
-  /** [[rangeCount]]'s regular-mapping twin: COUNT under key predicates =
-    * distinct keys in the envelope (one row per key); MIN/MAX(key) from
-    * the byte-extremal seeks. Same sub-split safety argument — split
-    * boundaries are whole keys, so each key's row lands in exactly one
-    * sub-split's intersected envelope. */
-  private def regularRange(
-      part: CellInputPartition,
-      mapping: ColumnMapping,
-      aggs: Seq[PushedAgg],
-      opt: String => Option[String],
-      filters: Array[Filter],
-      files: Seq[java.nio.file.Path],
-      rec: CellStore.BucketStat): Option[PartitionReader[InternalRow]] = {
-    val keyCodec = KeyCodec.of(mapping.keyField.dataType, opt)
-    if (!regularRangeShapesOk(mapping, aggs, keyCodec, filters, opt)) return None
-    val keys = KeyWindows.of(mapping.keyField.name, keyCodec, filters)
-      .within(part.lower, part.upper)
-    val colAggs = regularColAggs(mapping, aggs)
-    val netted = !rec.tombstoneFree
-    if (netted) {
-      // [[create]] pre-proved nettedOk + counts-only shapes; per-column
-      // netted counts additionally need the CVAL tails on every run
-      if (colAggs && !rec.colValsAll) return None
-    } else if (!regularRangeConditionsOkB(rec, aggs,
-        pointsOnly = keys.points != null, colAggs = colAggs))
-      return None
-    regularRangeVals(aggs, keyCodec, files, keys,
-      colBytesOf = if (colAggs) regularCellBytes(mapping, _) else _ => null,
-      netted = netted)
-      .map(vals => answerReader(InternalRow.fromSeq(vals)))
-  }
-
-  /** Static shape half of the range-aggregate gate, shared by the
-    * per-bucket readers and the COMPLETE-pushdown planner: answerable
+  /** Static shape half of the range-aggregate gate, shared by
+    * [[BucketAnswer]] and the grouped complete planner: answerable
     * aggregates are counts of address fields plus MIN/MAX of the ROW KEY
     * itself when byte order == value order (the byte-extremal cell in the
     * envelope IS the value-extremal row — "first/last event in the
@@ -4347,8 +3631,7 @@ object MetadataAggReader {
     }
   }
 
-  /** The range-aggregate values over `files` (one bucket for the partial
-    * readers, the whole store for complete pushdown) within the key
+  /** The range-aggregate values over `files` (one bucket's) within the key
     * windows `keys` — a finite point set, narrowed by the col and sub
     * windows, or key ranges — conditions already validated by the caller.
     * COUNT, SUM(value) and MIN/MAX(value) come from one [[CellStore
@@ -4504,17 +3787,6 @@ object MetadataAggReader {
     val order = if (wantMin) ks.indices else ks.indices.reverse
     order.collectFirst { case i if counts(i) > 0 => ks(i) }.orNull
   }
-
-  private def answerReader(row: InternalRow): CountedReader =
-    new CountedReader {
-      override val counters: ScanCounters = new ScanCounters
-      counters.partitionsStatsOnly = 1L
-      private var emitted = false
-      override def next(): Boolean =
-        if (emitted) false else { emitted = true; true }
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
-    }
 }
 
 /** Folds a partition's scan rows into partial-aggregate rows (see
@@ -4718,7 +3990,8 @@ class AggregatePartitionReader(
 object AggregatePartitionReader {
   /** The final row of an UNGROUPED aggregation from its partitions'
     * partial rows (`partial` is their schema, one column per aggregate):
-    * counts and integral sums add with `Math.addExact`, double sums add
+    * counts (COUNT(DISTINCT key) too, over whole-bucket rows) and integral
+    * sums add with `Math.addExact`, double sums add
     * from 0.0 as Spark's final Sum does, decimal sums add exactly and must
     * fit the widened type, and MIN/MAX keep the extreme by the column
     * type's interpreted ordering; NULL partials are skipped, so a SUM, MIN
@@ -4730,7 +4003,8 @@ object AggregatePartitionReader {
       val dt = partial(i).dataType
       val vs = rows.filterNot(_.isNullAt(i)).map(_.get(i, dt))
       aggs(i) match {
-        case PushedAgg.CountStar | PushedAgg.Count(_) =>
+        // a key never crosses buckets, so per-bucket distinct keys add
+        case PushedAgg.CountStar | PushedAgg.Count(_) | PushedAgg.CountDistinct(_) =>
           vs.foldLeft(0L)((a, v) => Math.addExact(a, v.asInstanceOf[Long]))
         case _ if vs.isEmpty => null
         case PushedAgg.Sum(_) => dt match {
@@ -4745,7 +4019,6 @@ object AggregatePartitionReader {
           vs.min(org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt))
         case PushedAgg.Max(_) =>
           vs.max(org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt))
-        case PushedAgg.CountDistinct(_) => return None // no partial form
       }
     })) catch { case _: ArithmeticException => None }
   }
@@ -4898,11 +4171,7 @@ class CellPartitionReader(
     opt: String => Option[String],
     limit: Option[Int] = None,
     dropped: Map[String, Long] = Map.empty,
-    limitLast: Boolean = false,
-    // the partition's segments when the caller already listed them
-    // ([[CellInputPartition.segments]]); null = list at open, only if a
-    // key window is left to merge
-    files: Seq[java.nio.file.Path] = null)
+    limitLast: Boolean = false)
   extends CountedReader {
 
   // T2: positional per-cell validator list (reference's
@@ -5008,10 +4277,7 @@ class CellPartitionReader(
     ttl = opt(Options.Ttl).map(_.toLong).getOrElse(0L),
     now = opt(Options.ReadNow).map(_.toLong).getOrElse(0L),
     counterMerge = opt(Options.CounterMerge).exists(_.toBoolean),
-    onlyFiles =
-      if (files != null) files
-      else if (part.files != null) part.segments()
-      else null,
+    onlyFiles = if (part.files != null) part.segments() else null,
     counters = counters,
     cols = cols,
     subs = subs)

@@ -9,10 +9,12 @@ import org.apache.spark.sql.{DataFrame, Row}
 class ColdPlanningSpec extends SparkSpec {
 
   /** Per DSv2 scan of the plan: answered at planning or distributed, and
-    * its `AggStats:` label. */
+    * its `AggStats:` label with the count of buckets answered from
+    * metadata. */
   private def tiers(df: DataFrame): Seq[String] =
     PlannedScan.all(df).map { s =>
-      val label = "AggStats: [a-z-]+".r.findFirstIn(s.description).getOrElse("no AggStats")
+      val label = "AggStats: [a-z-]+( answered=[0-9]+/[0-9]+)?".r
+        .findFirstIn(s.description).getOrElse("no AggStats")
       s"${if (s.answered) "driver answer" else "BatchScanExec"}, $label"
     }
 

@@ -2028,4 +2028,37 @@ class MetadataAggSpec extends SparkSpec {
         s"$pred: got $r want ${want.size}")
     }
   }
+
+  test("a clean bucket big enough to sub-split answers whole from metadata") {
+    val sp = spark; import sp.implicits._
+    // two buckets, one writer task: one run per bucket, about 4,000 cells
+    // each, so a 1,000-cell split target sub-splits both
+    val store = Seed.table(spark, sfDir, "spec_agg_meta_subsplit",
+      (1L to 8000L).map(i => (i, java.lang.Long.valueOf(i * 3L))).toDF("k", "v")
+        .repartition(1),
+      props = Map(Options.Buckets -> "2"))
+    val bucketOf = (k: Long) => TokenRing.bucket(
+      Codecs.encode(org.apache.spark.sql.types.LongType, k), 2)
+    // a tombstone in bucket 0: that bucket folds, bucket 1 stays clean
+    val gone = (1L to 8000L).find(bucketOf(_) == 0).get
+    Seed.append(Seq((gone, null.asInstanceOf[java.lang.Long])).toDF("k", "v").repartition(1),
+      store, Map(Options.NullsAsTombstones -> "true", Options.WriteTimestamp -> "2"))
+    def q(o: Map[String, String]): DataFrame = Seed.read(spark, store, o)
+      .agg(count(lit(1)).as("n"), sum("v").as("s"), min("v").as("mn"), max("v").as("mx"))
+    val split = Map(Options.SplitTargetCells -> "1000")
+    val df = q(split)
+    val scan = scanOf(df)
+    assert(!scan.answered && scan.description.contains(
+      "AggStats: metadata-eligible answered=1/2"), scan.description)
+    val (statsOnly, nParts) = drain(df)
+    // the fold of both buckets: every bucket sub-split
+    val (foldStatsOnly, foldParts) = drain(q(split + (Options.MetadataAgg -> "false")))
+    assert(statsOnly == 1L && foldStatsOnly == 0L, s"$statsOnly, $foldStatsOnly")
+    assert(foldParts > nParts && nParts > 2, s"$nParts of $foldParts partitions")
+    assert(scan.partitions.count(_.asInstanceOf[CellInputPartition].bucket == 1) == 1)
+    val vs = (1L to 8000L).filter(_ != gone).map(_ * 3L)
+    val want = Seq(org.apache.spark.sql.Row(vs.size.toLong, vs.sum, vs.min, vs.max))
+    assert(df.collect().toSeq == want)
+    assert(q(Map.empty).collect().toSeq == want)
+  }
 }
