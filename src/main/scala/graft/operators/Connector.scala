@@ -3243,7 +3243,7 @@ object Connector {
     // ---- CONJUNCT × DISJUNCTION aggregate (round 16, VERDICT r15 #3):
     // `src LIKE 'MACH%' AND (v < x OR v > y)` — the Or's branch union
     // intersects the conjunct's candidate set under the same bijection
-    // proofs (combinedCandidateKeys); either side over budget falls to
+    // proofs (Index.resolve); either side over budget falls to
     // the per-candidate base-cell value probe. The aggregate twin of a
     // filter shape users actually write ("errors OR timeouts, in this
     // service"). ----

@@ -672,8 +672,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     }
     val keyF = table.mapping.keyField
     if (!table.keyCodec.rangeOrdered) return false
-    val reversed = Options.effective(options, table.tableProps,
-      Options.SliceReversed).exists(_.toBoolean)
+    val reversed = optF(Options.SliceReversed).exists(_.toBoolean)
     // natural(dir): every order key follows `dir` on the mapping's
     // address-column sequence, each level byte-ordered
     def natural(dir: SortDirection): Boolean = {
@@ -796,16 +795,16 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
   private def computeMetadataAnswer(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     : Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] = {
-    // an EMPTY aggregate list (Dataset.count() over an ungrouped aggregate
-    // keeps only its row): ungrouped, one zero-column row whatever the
-    // store holds; grouped, it needs the present group keys — declined
-    if (aggregation.aggregateExpressions().isEmpty)
-      return if (aggregation.groupByExpressions().isEmpty)
-        Some((Nil, Nil, Seq(InternalRow.empty))) else None
+    // an EMPTY aggregate list (what Dataset.count() leaves of an
+    // aggregate query): ungrouped, one zero-column row whatever the store
+    // holds; grouped, the present group keys, which the group tiers below
+    // answer as an empty measure list
+    if (aggregation.aggregateExpressions().isEmpty &&
+        aggregation.groupByExpressions().isEmpty)
+      return Some((Nil, Nil, Seq(InternalRow.empty)))
     if (limit.isDefined) return None
-    if (!CassandraLikeTable.plainView(
-        k => Options.effective(options, table.tableProps, k),
-        table.tableProps, allowBoundedAsOf = true)) return None
+    if (!CassandraLikeTable.plainView(optF, table.tableProps,
+        allowBoundedAsOf = true)) return None
     // GROUP BY the row key over pushed key points (or the INDEXED column
     // over an absorbed IN): per-group presence counts from the same
     // positional arithmetic
@@ -855,15 +854,9 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     if (translated.exists(_.isEmpty)) None else Some(translated.flatten)
   }
 
-  /** One absorbed indexed predicate inside [[IndexedCtx]]: the column,
-    * its DISTINCT encoded value points (equality/IN — paired with their
-    * Catalyst values, the grouped form's group keys) OR its range bounds
-    * (exclusive), and the column's index-store segment map, pinned
-    * (possibly an as-of covered subset) by the proof walk. */
-  private case class IdxPred(col: String,
-      pts: Seq[(Array[Byte], Any)],
-      bounds: Seq[Filter],
-      idxDir: String,
+  /** One indexed column of [[IndexedCtx]]: its index-store segment map,
+    * pinned (possibly an as-of covered subset) by the proof walk. */
+  private case class IdxCol(col: String,
       idxByBucket: Map[Int, Seq[java.nio.file.Path]],
       /** the column's VISIBLE base cells (clean buckets: the CVAL count;
         * netted: the netted-CVAL count — live minus certified victims) —
@@ -872,23 +865,21 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
         * the proof's ever-written totals: on a netted store postings
         * outnumber visible cells by exactly the victims. */
       visColCells: Long,
-      /** NO pushed predicate constrains this column — it was proven as an
-        * extra (histogram group column) or as a disjunction leaf column.
-        * Distinguishes "open walk over the whole postings" from "an
-        * equality whose every point was unrepresentable" (pts empty too,
-        * but matching NOTHING rather than everything). */
-      open: Boolean = false)
+      /** NO pushed conjunct constrains this column — it was proven as an
+        * extra (histogram group column) or as a disjunction leaf column,
+        * so an "open" walk covers its whole postings. */
+      open: Boolean)
 
   /** The proven context every indexed-aggregate path shares: the absorbed
-    * indexed predicates (ONE per referenced column — a conjunction across
-    * columns intersects their candidate sets, round 14: `type = 'click'
-    * AND ts BETWEEN a AND b`) and the pinned base listing — produced only
-    * after the full composed proof above (clean base, tombstone-free
+    * indexed conjuncts (leaves on any number of columns, and at most one
+    * disjunction — `type = 'click' AND ts BETWEEN a AND b AND (p OR q)`),
+    * resolved by [[Index.resolve]], and the pinned base listing — produced
+    * only after the full composed proof (clean base, tombstone-free
     * postings, totals equality PER INDEX) has held, so callers may treat
     * each column's postings as a BIJECTION onto the base's current cells
     * of that column. */
-  private case class IndexedCtx(preds: Seq[IdxPred],
-      buckets: Int,
+  private case class IndexedCtx(filters: Seq[Filter],
+      cols: Seq[IdxCol],
       /** some base bucket carries certified delete epochs: candidates are
         * a superset of the visible rows (deleted keys net to zero), the
         * per-point arithmetic must use the netted twins, and value
@@ -904,12 +895,30 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
         * Σ distinctKeys over disjoint runs; netted: Σ nettedKeys) — what
         * the histogram path compares against a column's colCells to prove
         * every visible row carries the cell (round 15) */
-      baseRows: Long,
-      /** a pushed DISJUNCTION (round 15): candidates resolve to the union
-        * of the branches' sets under the same per-column bijection proofs
-        * (every referenced column has an IdxPred carrying its pinned
-        * index listing); only the scalar stats path serves this shape */
-      orFilter: Option[Filter] = None)
+      baseRows: Long) {
+    def hasOr: Boolean = filters.exists(_.isInstanceOf[Or])
+    def col(c: String): Option[IdxCol] = cols.find(_.col == c)
+  }
+
+  /** Option lookup under this read's options, then the table's. */
+  private val optF: String => Option[String] =
+    k => Options.effective(options, table.tableProps, k)
+
+  private def dtOf(c: String): DataType = table.tableSchema(c).dataType
+
+  /** The table's index settings under this read's options. */
+  private lazy val idx: Index.Lookup = Index.Lookup.of(table, options)
+
+  /** Resolution pinned to the context's proven index listings, with the
+    * complete tiers' budget: `index.max.candidates`, capped at
+    * [[CellScanBuilder.MaxCompletePoints]] — past it the planner declines
+    * and the index-shrunk distributed scan owns the query. */
+  private def ctxLookup(ctx: IndexedCtx): Index.Lookup = {
+    val byCol = ctx.cols.map(p => p.col -> p.idxByBucket).toMap
+    idx.copy(idxCols = byCol.keySet,
+      budget = math.min(idx.budget, CellScanBuilder.MaxCompletePoints),
+      pinned = c => byCol.getOrElse(c, null))
+  }
 
   /** Memoized per builder — the scalar count, scalar stats and grouped
     * paths all consult it during ONE planning pass, and `pushed` (its
@@ -936,8 +945,6 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     : Option[IndexedCtx] = {
     if (table.mapping.transposed) return None
     CellScanBuilder.contextPasses.incrementAndGet()
-    val optF: String => Option[String] =
-      k => Options.effective(options, table.tableProps, k)
     // AS-OF composes (round 14): postings carry the SAME logical cell
     // timestamps as their base cells (the write path stamps both sides of
     // a posting/cell pair with one ts), so gating BOTH stores per run by
@@ -949,82 +956,30 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     // epochs) decline to the fold, exactly like the plain metadata paths.
     // Every candidate probe then runs against the pinned covered maps.
     val asOf = optF(Options.ReadAsOf).map(_.toLong)
-    // the pushed set must be ENTIRELY absorbed indexed predicates: per
-    // referenced column either ONE equality/IN or a conjunction of
-    // comparisons (`BETWEEN a AND b`); columns conjoin by candidate
-    // intersection (round 14). Mixed eq+range on ONE column declines (the
-    // scan path's keyFilters intersection owns it), as does anything else
-    // pushed — the IsNotNull conjuncts Catalyst pairs with the absorbed
-    // shapes are subsumed by them.
-    val idxCols = Index.columns(table.mapping, optF)
+    // the pushed set must be ENTIRELY absorbed indexed predicates —
+    // leaves on any columns (several on one column intersect in the
+    // resolver) and at most one disjunction — as does anything else
+    // pushed; the IsNotNull conjuncts Catalyst pairs with the absorbed
+    // shapes are subsumed by them
+    val idxCols = idx.idxCols
     if (extraCols.exists(c => !idxCols(c))) return None
-    val eqVals = collection.mutable.LinkedHashMap.empty[String, Seq[Any]]
-    val rngs = collection.mutable.LinkedHashMap.empty[String, Vector[Filter]]
-    val ors = Seq.newBuilder[Filter]
-    pushed.foreach {
-      case _: org.apache.spark.sql.sources.IsNotNull => ()
-      case EqualTo(c, v) if idxCols(c) && v != null =>
-        if (eqVals.contains(c)) return None
-        eqVals(c) = Seq(v)
-      case In(c, vs) if idxCols(c) && vs != null && vs.nonEmpty =>
-        if (eqVals.contains(c)) return None
-        eqVals(c) = vs.toSeq
-      case f @ GreaterThan(c, v) if idxCols(c) && v != null =>
-        rngs(c) = rngs.getOrElse(c, Vector.empty) :+ (f: Filter)
-      case f @ GreaterThanOrEqual(c, v) if idxCols(c) && v != null =>
-        rngs(c) = rngs.getOrElse(c, Vector.empty) :+ (f: Filter)
-      case f @ LessThan(c, v) if idxCols(c) && v != null =>
-        rngs(c) = rngs.getOrElse(c, Vector.empty) :+ (f: Filter)
-      case f @ LessThanOrEqual(c, v) if idxCols(c) && v != null =>
-        rngs(c) = rngs.getOrElse(c, Vector.empty) :+ (f: Filter)
-      // LIKE-prefix (round 15): just another one-column range —
-      // [p, prefixSucc(p)) in the order-preserving value encoding
-      case f @ StringStartsWith(c, p) if idxCols(c) && p != null &&
-        table.tableSchema(c).dataType == StringType =>
-        rngs(c) = rngs.getOrElse(c, Vector.empty) :+ (f: Filter)
-      // DISJUNCTION (round 15): held whole; resolved as the union of its
-      // branches' candidate sets by the stats path
-      case o: org.apache.spark.sql.sources.Or => ors += o
-      case _ => return None
-    }
-    // disjunction shape: at most ONE Or, now (round 16) freely mixed with
-    // conjuncts — `x = a AND (p OR q)` resolves as the conjuncts'
-    // candidate intersection ∩ the Or's branch union under the same
-    // proofs ([[combinedCandidateKeys]]); only the histogram's extra-col
-    // form keeps declining (no per-group candidate slicing under an Or)
-    val orF: Option[Filter] = ors.result() match {
-      case Seq() => None
-      case Seq(one) if extraCols.isEmpty => Some(one)
-      case _ => return None
-    }
+    val filters = pushed.toSeq.filterNot(_.isInstanceOf[IsNotNull])
+    val leaves = filters.filterNot(_.isInstanceOf[Or])
+      .map(Index.leaf(_, idxCols, dtOf).getOrElse(return None))
+    // the histogram's extra-col form declines an Or (no per-group
+    // candidate slicing under a disjunction)
+    val ors = filters.filter(_.isInstanceOf[Or])
+    if (ors.size > 1 || (ors.nonEmpty && extraCols.nonEmpty)) return None
     // every column a disjunction leaf references joins the proof set —
     // absorption guaranteed the leaves are indexed predicates, but verify
     // against THIS reader's index view (options can differ)
-    def treeCols(f: Filter): Set[String] = f match {
-      case org.apache.spark.sql.sources.Or(l, r) => treeCols(l) ++ treeCols(r)
-      case org.apache.spark.sql.sources.And(l, r) =>
-        treeCols(l) ++ treeCols(r)
-      case leaf => leaf.references.toSet
-    }
-    val orCols: Seq[String] = orF.map(treeCols(_).toSeq.sorted).getOrElse(Nil)
+    val orCols = ors.flatMap(_.references).distinct.sorted
     if (orCols.exists(c => !idxCols(c))) return None
-    val cols: Seq[String] =
-      ((eqVals.keys ++ rngs.keys) ++ orCols ++ extraCols).toSeq.distinct
-    if (cols.isEmpty || eqVals.keySet.intersect(rngs.keySet).nonEmpty)
-      return None
-    // an Or implies non-null only for a column EVERY branch constrains
-    // (the shape Catalyst infers IsNotNull from)
-    def orImpliesNonNull(c: String): Boolean = orF.exists { o =>
-      def branchCols(f: Filter): Seq[Set[String]] = f match {
-        case org.apache.spark.sql.sources.Or(l, r) =>
-          branchCols(l) ++ branchCols(r)
-        case other => Seq(other.references.toSet)
-      }
-      branchCols(o).forall(_.contains(c))
-    }
+    val cols = (leaves.map(_.col) ++ orCols ++ extraCols).distinct
+    if (cols.isEmpty) return None
+    val nonNull = filters.flatMap(Index.nonNullCols).toSet
     if (pushed.exists {
-      case org.apache.spark.sql.sources.IsNotNull(c) =>
-        !eqVals.contains(c) && !rngs.contains(c) && !orImpliesNonNull(c)
+      case IsNotNull(c) => !nonNull(c)
       case _ => false
     }) return None
     val colBytesByCol: Map[String, Array[Byte]] = cols.map { c =>
@@ -1081,16 +1036,12 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       baseB += b -> files
     }
     val baseByBucket = baseB.result()
-    val textEnc = optF(Options.Encoding).contains("text")
-    val buckets = optF(Options.Buckets).map(_.toInt)
-      .getOrElse(Options.DefaultBuckets)
-    val preds = cols.map { c =>
-      val idxDir = Index.dir(table.dir, c)
+    val idxColsProven = cols.map { c =>
       // index-side totals (tombstone-free postings, raw cell count) over
       // the same bound's covered subset, one equality per index store
       var idxCells = 0L
       val idxB = Map.newBuilder[Int, Seq[java.nio.file.Path]]
-      CellStore.allSegmentFiles(idxDir).foreach { case (b, files0) =>
+      CellStore.allSegmentFiles(Index.dir(table.dir, c)).foreach { case (b, files0) =>
         val rec0 = CellStore.bucketStats(files0)
         if (!rec0.statsValid) return None
         val (files, rec) = MetadataAggReader.asOfView(files0,
@@ -1100,28 +1051,9 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
         idxB += b -> files
       }
       if (idxCells != baseColCells(c)) return None // orphan/dup postings
-      val dt = table.tableSchema(c).dataType
-      // distinct encoded points, keeping the Catalyst value (dup IN values
-      // count once; absorbed types encode injectively, so distinct bytes =
-      // distinct SQL values). The ONE lossy encode — timestamps marshal to
-      // millis — drops sub-millisecond points outright: no stored value
-      // can equal them, and counting their collapsed-millisecond postings
-      // would claim rows whose value is NOT the probe's (over-count)
-      val seen = collection.mutable.Set.empty[Seq[Byte]]
-      val pts = Seq.newBuilder[(Array[Byte], Any)]
-      eqVals.getOrElse(c, Nil).foreach { v =>
-        val cat = org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .convertToCatalyst(v)
-        if (cat != null && !Index.lossyPoint(dt, cat)) {
-          val ek = Index.encodeKey(dt, cat, textEnc)
-          if (seen.add(ek.toSeq)) pts += ((ek, cat))
-        }
-      }
-      IdxPred(c, pts.result(), rngs.getOrElse(c, Vector.empty), idxDir,
-        idxB.result(), visColCells(c),
-        open = !eqVals.contains(c) && !rngs.contains(c))
+      IdxCol(c, idxB.result(), visColCells(c), open = !leaves.exists(_.col == c))
     }
-    Some(IndexedCtx(preds, buckets, anyNetted, baseByBucket, baseRows, orF))
+    Some(IndexedCtx(filters, idxColsProven, anyNetted, baseByBucket, baseRows))
   }
 
   /** COMPLETE pushdown of `count(*) WHERE indexed_col = v` (or IN): the
@@ -1149,46 +1081,44 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     *
     * Anything outside the shape — other filters, non-COUNT aggregates,
     * transposed mappings, a bound some run straddles — returns None and
-    * the existing paths own the query (candidate point reads +
-    * reader-side fold: exact, just not zero-IO). AS-OF bounds compose
-    * when every run is cleanly covered or newer (see the pairing note in
-    * [[indexedAggContext]]). */
+    * the candidate tiers own the query. This is the one tier that counts
+    * past [[CellScanBuilder.MaxCompletePoints]] without reading keys. AS-OF
+    * bounds compose when every run is cleanly covered or newer (see the
+    * pairing note in [[indexedAggContext]]). */
   private def computeIndexedCountAnswer(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     : Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar}
     if (aggregation.groupByExpressions().nonEmpty) return None
     val ctx = indexedAggCtx.getOrElse(return None)
     // postings count deleted rows too: the zero-IO count is clean-only
-    // (the candidate-point stats path below answers netted stores); the
-    // RANGE and multi-predicate forms have no single point set to route —
-    // their counts ride the candidate stats path (still O(matching)), as
-    // does a DISJUNCTION (point-counting branches would double-count a
-    // row matching several)
-    if (ctx.netted || ctx.orFilter.nonEmpty) return None
-    val pred = ctx.preds match {
-      case Seq(one) if one.bounds.isEmpty => one
+    // (the candidate stats path below answers netted stores); the RANGE
+    // and multi-predicate forms have no single point set to route, and a
+    // DISJUNCTION could double-count a row matching several branches —
+    // their counts ride the candidate stats path (still O(matching))
+    if (ctx.netted) return None
+    val pred = ctx.filters match {
+      case Seq(f) => Index.leaf(f, idx.idxCols, dtOf) match {
+        case Some(p: Index.Points) => p
+        case _ => return None
+      }
       case _ => return None
     }
     val keyN = table.mapping.keyField.name
     // every aggregate must be row-count-equivalent: COUNT(*), COUNT(key)
     // (the key is never missing), or COUNT(indexed col) — every matching
     // row carries the indexed cell by definition of matching
-    val translated: Seq[Option[PushedAgg]] =
-      aggregation.aggregateExpressions().toSeq.map {
-        case _: CountStar => Some(PushedAgg.CountStar)
-        case c: Count if !c.isDistinct =>
-          aggCol(c.column).filter(c0 => c0 == keyN || c0 == pred.col)
-            .map(PushedAgg.Count.apply)
-        case _ => None
-      }
-    if (translated.exists(_.isEmpty)) return None
-    val want = translated.flatten
+    val want = translateAggs(aggregation).filter(_.forall {
+      case PushedAgg.CountStar => true
+      case PushedAgg.Count(c) => c == keyN || c == pred.col
+      case _ => false
+    }).getOrElse(return None)
+    val idxByBucket = ctx.col(pred.col).get.idxByBucket
     // count the value points on their routed index buckets
     var total = 0L
-    pred.pts.map(_._1).groupBy(ek => TokenRing.bucket(ek, ctx.buckets))
+    Index.encodedPoints(pred, dtOf(pred.col), idx.textEnc).map(_._1)
+      .groupBy(ek => TokenRing.bucket(ek, idx.buckets))
       .foreach { case (b, ps) =>
-        pred.idxByBucket.get(b).foreach { files =>
+        idxByBucket.get(b).foreach { files =>
           total += CellStore.summarize(files,
             CellStore.Window.points(ps).map(_.copy(slot = 0)), 1,
             CellStore.Measure.Cells).getOrElse(return None).count(0)
@@ -1197,49 +1127,24 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     Some((want, Nil, Seq(InternalRow.fromSeq(want.map(_ => total: Any)))))
   }
 
-  /** COMPLETE pushdown of VALUE aggregates under an absorbed indexed
-    * equality/IN — `SELECT sum(c2), min(c2), count(c2) WHERE c1 = v` —
+  /** COMPLETE pushdown of VALUE aggregates under absorbed indexed
+    * predicates — `SELECT sum(c2), min(c2), count(c2) WHERE c1 = v` —
     * the "statistics of one source/segment/language" polling shape
-    * (round 13, extending the postings-count path above). Composition:
-    * under the same bijection proof ([[indexedAggContext]]), the
-    * postings for value v list EXACTLY the matching rows' keys, so the
-    * candidate keys (one bounded postings point read) feed the existing
-    * per-point positional arithmetic ([[MetadataAggReader
-    * .regularRangeVals]] with pinned key points: presence from boundary
-    * seeks, per-column COUNT/SUM/MIN/MAX from the CVAL interval
-    * machinery). Planning IO is O(matching postings + candidates · log),
-    * independent of table size — never a base scan. Budgeted twice: the
-    * index's own candidate budget, then [[CellScanBuilder
-    * .MaxCompletePoints]] — past either, the planner declines and the
-    * index-shrunk distributed scan owns the query (exact, just not
-    * planning-time). */
+    * (round 13, extending the postings-count path above). Under the
+    * bijection proof ([[indexedAggContext]]) the resolved candidates
+    * ([[matchingKeys]]) are EXACTLY the matching rows' keys, and they
+    * feed the per-point positional arithmetic ([[foldSlices]] as one
+    * ungrouped slice). Planning IO is O(matching postings + candidates ·
+    * log), independent of table size — never a base scan. */
   private def computeIndexedStatsAnswer(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     : Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] = {
     if (aggregation.groupByExpressions().nonEmpty) return None
     val ctx = indexedAggCtx.getOrElse(return None)
-    val want = translateIndexedValueAggs(aggregation, ctx.netted)
-      .getOrElse(return None)
-    // per-predicate candidate resolution enforces the MaxCompletePoints
-    // cap while resolving; a conjunction intersects the columns' sets, a
-    // disjunction (round 15) unions its branches' sets — and the two now
-    // COMPOSE (round 16, `x = a AND (p OR q)`): the union intersects the
-    // conjuncts' sets, with over-budget sides probe-verified per
-    // candidate. The result is a key SET, so a row matching several
-    // branches feeds the per-point arithmetic once
-    val ks = combinedCandidateKeys(ctx).getOrElse(return None)
-    val aggsP = new IndexedPointAggs(ks, ctx)
-    // netted: restrict to the VISIBLE rows (a deleted key nets to zero
-    // presence) — afterwards the index set is exactly the matching rows
-    // under either proof, so key extremals may decode it directly
-    val present =
-      if (!ctx.netted) Array.range(0, ks.size)
-      else {
-        val mask = aggsP.presentMask.getOrElse(return None)
-        Array.range(0, ks.size).filter(mask)
-      }
-    foldIndexedVals(want, present, ks, aggsP, ctx)
-      .map(v => (want, Nil, Seq(InternalRow.fromSeq(v))))
+    val want = indexedAggs(aggregation, ctx.netted).getOrElse(return None)
+    val cands = matchingKeys(ctx).getOrElse(return None)
+    foldSlices(want, cands, Seq((Nil, cands.ks.indices.toArray)), ctx)
+      .map(rows => (want, Nil, rows))
   }
 
   /** Per-point probe results for ONE candidate list, shared by every
@@ -1251,18 +1156,18 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     * cells can only live in its own bucket, so every probe touches exactly
     * the files that could hold it (hash buckets span the whole key domain,
     * so key-window pruning alone cannot reject foreign candidates —
-    * routing can). Presence and per-column accumulators then run as ONE
-    * batched pass per (bucket, column, file) over ALL points, results
-    * input-aligned so the grouped path slices them per group — G groups
-    * cost the same segment opens and index parses as one. */
-  private final class IndexedPointAggs(ks: IndexedSeq[Array[Byte]],
+    * routing can). Presence, per-column accumulators and cell values then
+    * run as ONE batched pass per (bucket, column, file) over ALL points,
+    * results input-aligned so the grouped paths slice them per group — G
+    * groups cost the same segment opens and index parses as one. */
+  private final class IndexedPointAggs(val ks: IndexedSeq[Array[Byte]],
       ctx: IndexedCtx) {
     /** (bucket-sorted points, their input indices, proven files). */
     private val routed
       : Seq[(Seq[Array[Byte]], Array[Int], Seq[java.nio.file.Path])] = {
       val rb = table.rangeBounds
       ks.zipWithIndex.groupBy { case (k, _) =>
-        TokenRing.bucket(k, ctx.buckets, rb)
+        TokenRing.bucket(k, idx.buckets, rb)
       }.toSeq.flatMap { case (b, pws) =>
         ctx.baseByBucket.get(b).map { files =>
           val sorted = pws.sortWith((a, c) =>
@@ -1291,7 +1196,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       Some(mask)
     }
 
-    private val cache = collection.mutable.Map
+    private val aggCache = collection.mutable.Map
       .empty[(String, Boolean), Option[(Array[Long], Array[Long])]]
 
     /** Input-aligned per-point (counts, sums-or-null) of one cell column —
@@ -1300,7 +1205,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       * unclassifiable netted run). */
     def colPointAggs(c: String, wantSums: Boolean)
       : Option[(Array[Long], Array[Long])] =
-      cache.getOrElseUpdate((c, wantSums), computeColPointAggs(c, wantSums))
+      aggCache.getOrElseUpdate((c, wantSums), computeColPointAggs(c, wantSums))
 
     private def computeColPointAggs(c: String, wantSums: Boolean)
       : Option[(Array[Long], Array[Long])] = {
@@ -1321,6 +1226,68 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       }
       Some((counts, sums))
     }
+
+    private val valueCache =
+      collection.mutable.Map.empty[String, Option[Array[Array[Byte]]]]
+
+    /** Input-aligned VALUE BYTES of one cell column (null = no such cell
+      * for that candidate), memoized: each (bucket, file) runs ONE batched
+      * [[CellStore.colBytesAtPoints]] pass, and a value found in TWO files
+      * (impossible under the clean proof's all-addresses-distinct — means
+      * the proof is stale) declines instead of picking one. */
+    def colValues(c: String): Option[Array[Array[Byte]]] =
+      valueCache.getOrElseUpdate(c, computeColValues(c))
+
+    private def computeColValues(c: String): Option[Array[Array[Byte]]] = {
+      val cb = MetadataAggReader.regularCellBytes(table.mapping, c)
+      if (cb == null) return None
+      val out = new Array[Array[Byte]](ks.size)
+      routed.foreach { case (pts, idxs, files) =>
+        files.foreach { f =>
+          val per = CellStore.colBytesAtPoints(f, pts, cb).getOrElse(return None)
+          var i = 0
+          while (i < per.length) {
+            if (per(i) != null) {
+              if (out(idxs(i)) != null) return None // dup across files
+              out(idxs(i)) = per(i)
+            }
+            i += 1
+          }
+        }
+      }
+      Some(out)
+    }
+  }
+
+  /** The EXACT keys of the rows the context's predicates admit: the
+    * conjuncts and the disjunction resolve through [[Index.resolve]],
+    * pinned to the proof's listings, and the residual it leaves — a side
+    * that BLEW its budget (ASYMMETRIC BUDGETS, SURVEY §7.4 #1: `type =
+    * rare AND ts BETWEEN <wide>`) or the over-budget Or — is checked per
+    * candidate by ONE [[FilterEval.compile]] over the candidates' base
+    * cell values ([[IndexedPointAggs.colValues]]): cost O(candidates ·
+    * log), never O(postings on the wide side). Exact: the probes read the
+    * same pinned files the proof judged, and a NULL/absent cell fails a
+    * conjunct and an Or leaf alike (SQL three-valued logic — absorption
+    * admitted only exactly-evaluable leaf types). At least one side must
+    * have resolved (probes verify candidates, they cannot produce them),
+    * and a netted store with a residual declines: a netted bucket's
+    * per-point value needs tombstone reconciliation the probe refuses. */
+  private def matchingKeys(ctx: IndexedCtx): Option[IndexedPointAggs] = {
+    val r = Index.resolve(ctx.filters, ctxLookup(ctx)).getOrElse(return None)
+    val all = new IndexedPointAggs(r.keys.iterator.map(_.toArray).toIndexedSeq, ctx)
+    if (r.residual.isEmpty) Some(all)
+    else if (ctx.netted) None
+    else {
+      val check = FilterEval.compile(r.residual.reduce[Filter](And(_, _)))
+      val vals = r.residual.flatMap(_.references).distinct
+        .map(c => c -> all.colValues(c).getOrElse(return None))
+      val kept = all.ks.indices.filter(i => check(vals.iterator.map { case (c, vs) =>
+        c -> (if (vs(i) == null) null else Codecs.decode(dtOf(c), vs(i)))
+      }.toMap))
+      Some(if (kept.size == all.ks.size) all
+        else new IndexedPointAggs(kept.map(all.ks), ctx))
+    }
   }
 
   /** MIN/MAX-able column types — one list shared by the partial-pushdown
@@ -1336,13 +1303,33 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       case _ => false
     }
 
+  /** The one slice-and-fold of the indexed tiers: one answer row per
+    * slice of `cands` — (group key values, candidate indices) — its key
+    * values followed by [[foldIndexedVals]] over the slice. On a netted
+    * store a slice keeps only its VISIBLE candidates (a deleted key nets
+    * to zero presence), and a group left with none emits no row, exactly
+    * like the fold; an ungrouped slice (no key values) emits its row even
+    * when empty. */
+  private def foldSlices(want: Seq[PushedAgg], cands: IndexedPointAggs,
+      slices: Seq[(Seq[Any], Array[Int])], ctx: IndexedCtx)
+    : Option[Seq[InternalRow]] = {
+    val mask = if (ctx.netted) cands.presentMask.getOrElse(return None) else null
+    Some(slices.flatMap { case (key, idxs) =>
+      val present = if (mask == null) idxs else idxs.filter(mask(_))
+      if (present.isEmpty && key.nonEmpty) None
+      else foldIndexedVals(want, present, cands, ctx) match {
+        case Some(vals) => Some(InternalRow.fromSeq(key ++ vals))
+        case None => return None
+      }
+    })
+  }
+
   /** One answer row folded from the batched per-point results, restricted
-    * to `present` (this group's VISIBLE candidate indices — all of them on
-    * clean stores, the positive-presence subset on netted ones).
-    * Everything leans on the bijection proof: the visible candidate set IS
-    * the matching row set, so
-    *   - row counts (COUNT(*), COUNT(key), COUNT(indexed col)) are the
-    *     candidate COUNT — zero base IO;
+    * to `present` (one slice's VISIBLE candidate indices). Everything
+    * leans on the bijection proof: the visible candidate set IS the
+    * matching row set, so
+    *   - row counts (COUNT(*), COUNT(key), COUNT of a column the
+    *     predicates prove non-null) are the candidate COUNT — zero base IO;
     *   - MIN/MAX of the KEY decode the candidates and compare under the
     *     type's own ordering — exact under ANY key codec, zero base IO;
     *   - per-column COUNT/SUM/MIN/MAX slice the shared batched pass
@@ -1353,14 +1340,13 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     *     slower than the scan it was meant to beat at 1.5k candidates). */
   private def foldIndexedVals(want: Seq[PushedAgg],
       present: Array[Int],
-      ks: IndexedSeq[Array[Byte]],
-      aggsP: IndexedPointAggs,
+      cands: IndexedPointAggs,
       ctx: IndexedCtx): Option[Seq[Any]] = {
     val keyN = table.mapping.keyField.name
     lazy val ord = org.apache.spark.sql.catalyst.util.TypeUtils
-      .getInterpretedOrdering(table.tableSchema(keyN).dataType)
+      .getInterpretedOrdering(dtOf(keyN))
     lazy val decoded: Seq[Any] =
-      present.toSeq.map(i => table.keyCodec.decode(ks(i)))
+      present.toSeq.map(i => table.keyCodec.decode(cands.ks(i)))
     // which cell columns need VALUES alongside counts (SUM/MIN/MAX share
     // one per-point pass with COUNT; under the dedup proofs a point's
     // count for a named cell is 0/1, so its per-point sum IS the value)
@@ -1375,7 +1361,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     val folded = collection.mutable.Map.empty[String, ColAgg]
     def colAgg(c: String): Option[ColAgg] =
       folded.get(c).map(Some(_)).getOrElse {
-        val (counts, sums) = aggsP.colPointAggs(c, needSums(c))
+        val (counts, sums) = cands.colPointAggs(c, needSums(c))
           .getOrElse(return None)
         var count = 0L
         var sum = 0L
@@ -1405,48 +1391,28 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
         folded(c) = r
         Some(r)
       }
-    def colCount(c: String): Option[Long] = colAgg(c).map(_.count)
-    def colSum(c: String): Option[Long] = colAgg(c).map(_.sum)
-    def colExtremal(c: String, wantMin: Boolean): Option[Option[Long]] =
-      colAgg(c).map(a => Option(if (wantMin) a.min else a.max).map(Long.unbox))
-    // ONLY the key and the CONJUNCTIVELY-filtered columns are
-    // never-missing on matching rows (every conjunct references a
-    // non-null cell there) — another indexed-but-unfiltered column can
-    // hold nulls, and so can an OPEN pred's column (a disjunction leaf:
-    // a row can match through the OTHER branch with this cell NULL; a
-    // histogram extra column: no predicate constrains it at all — round
-    // 15, caught by the prefix/disjunction fuzz arm), so their COUNTs
-    // must go through the per-point cell arithmetic like any other cell
-    def rowCountEquivalent(c: String): Boolean =
-      c == keyN || ctx.preds.exists(p => p.col == c && !p.open)
+    // ONLY the key and the columns the predicates prove non-null are
+    // never-missing on matching rows — another indexed-but-unfiltered
+    // column can hold nulls, and so can a column only SOME disjunction
+    // branches constrain (a row can match through the OTHER branch with
+    // this cell NULL) or a histogram group column (no predicate
+    // constrains it — round 15, caught by the prefix/disjunction fuzz
+    // arm), so their COUNTs go through the per-point cell arithmetic
+    val nonNull = ctx.filters.flatMap(Index.nonNullCols).toSet + keyN
     val out = want.map {
       case PushedAgg.CountStar => present.length.toLong
-      case PushedAgg.Count(c) if rowCountEquivalent(c) => present.length.toLong
-      case PushedAgg.Count(c) =>
-        colCount(c) match {
-          case Some(x) => x
-          case None => return None
-        }
+      case PushedAgg.Count(c) if nonNull(c) => present.length.toLong
+      case PushedAgg.Count(c) => colAgg(c).getOrElse(return None).count
       case PushedAgg.Sum(c) =>
-        (colCount(c), colSum(c)) match {
-          case (Some(n), Some(s)) => if (n == 0L) null else Long.box(s)
-          case _ => return None
-        }
+        val a = colAgg(c).getOrElse(return None)
+        if (a.count == 0L) null else Long.box(a.sum)
       case PushedAgg.Min(c) if c == keyN =>
         if (present.isEmpty) null else decoded.min(ord)
       case PushedAgg.Max(c) if c == keyN =>
         if (present.isEmpty) null else decoded.max(ord)
-      case PushedAgg.Min(c) =>
-        colExtremal(c, wantMin = true) match {
-          case Some(v) => v.map(Long.box).orNull
-          case None => return None
-        }
-      case PushedAgg.Max(c) =>
-        colExtremal(c, wantMin = false) match {
-          case Some(v) => v.map(Long.box).orNull
-          case None => return None
-        }
-      case other => return None // CountDistinct never translates here
+      case PushedAgg.Min(c) => colAgg(c).getOrElse(return None).min
+      case PushedAgg.Max(c) => colAgg(c).getOrElse(return None).max
+      case _ => return None // CountDistinct never passes the shape gate
     }
     Some(out)
   }
@@ -1477,7 +1443,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     // walk (no filters = no candidates to slice). A pushed-but-unabsorbed
     // filter set (memoized None with pushed nonEmpty) declines: no proof.
     val ctx: IndexedCtx = indexedAggCtx match {
-      case Some(c) if c.orFilter.isEmpty && c.preds.exists(_.col == groupCol) =>
+      case Some(c) if !c.hasOr && c.col(groupCol).isDefined =>
         // group pred's own per-group postings first (cheapest); an
         // asymmetric-budget decline there (another conjunct over budget)
         // falls to probe-sliced grouping, which verifies the wide side
@@ -1486,7 +1452,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
           .orElse(probeSlicedGroupAnswer(aggregation, groupCol, c))
       case Some(c) =>
         return probeSlicedGroupAnswer(aggregation, groupCol, c).orElse {
-          if (c.orFilter.isEmpty)
+          if (!c.hasOr)
             indexedAggContextMemo(Set(groupCol))
               .flatMap(groupAnswerWithCtx(aggregation, groupCol, _))
           else None
@@ -1505,7 +1471,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
       groupCol: String, ctx: IndexedCtx)
     : Option[(Seq[PushedAgg], Seq[String], Seq[InternalRow])] = {
-    val gp = ctx.preds.find(_.col == groupCol).getOrElse(return None)
+    val gp = ctx.col(groupCol).getOrElse(return None)
     // HISTOGRAM null-group guard: the open walk enumerates rows CARRYING
     // the group cell; rows without it form SQL's NULL group, whose
     // aggregates no index can supply — answer only when the totals prove
@@ -1513,48 +1479,33 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     // visible cells; at most one cell per row holds by the address
     // uniqueness the proof already established)
     if (gp.open && ctx.baseRows != gp.visColCells) return None
-    val want = translateIndexedValueAggs(aggregation, ctx.netted)
-      .getOrElse(return None)
+    val want = indexedAggs(aggregation, ctx.netted).getOrElse(return None)
+    val lookup = ctxLookup(ctx)
+    val (own, others) = ctx.filters.partition(f =>
+      Index.leaf(f, lookup.idxCols, dtOf).exists(_.col == groupCol))
     // per-group candidates: one point lookup per IN value, or — the RANGE
-    // form (round 14, "histogram per source over a value window") — one
-    // postings walk that keeps the VALUE bytes, yielding the distinct
-    // group values and their base keys together; group keys decode from
-    // the value bytes (exact: absorbed types round-trip every STORED
-    // value). Both forms enforce the MaxCompletePoints cap while
-    // resolving, so no size re-check is needed here.
-    val optF: String => Option[String] =
-      k => Options.effective(options, table.tableProps, k)
-    val textEnc = optF(Options.Encoding).contains("text")
-    val groupCands0: Seq[(Any, Seq[Array[Byte]])] =
-      if (!gp.open && gp.bounds.isEmpty) {
-        val cands = groupPointCandidates(gp, ctx).getOrElse(return None)
-        gp.pts.map { case (ek, cat) =>
-          (cat, cands.getOrElse(ek.toSeq, Nil))
-        }
-      } else {
-        // RANGE form, or — round 15, `gp.open` — the HISTOGRAM's
-        // unbounded walk (empty bounds = every posting): one budgeted
-        // seek yields the distinct group values and their base keys
-        val budget = math.min(
-          optF(Options.IndexMaxCandidates).map(_.toInt)
-            .getOrElse(Options.DefaultIndexMaxCandidates),
-          CellScanBuilder.MaxCompletePoints)
-        val dt = table.tableSchema(gp.col).dataType
-        Index.rangeLookupGrouped(gp.idxDir, dt, textEnc, gp.col,
-            gp.bounds, ctx.buckets, budget, gp.idxByBucket,
-            optF(Options.IndexWalkTimeoutMs).map(_.toLong)
-              .getOrElse(Options.DefaultIndexWalkTimeoutMs))
+    // form (round 14, "histogram per source over a value window"), and
+    // the HISTOGRAM's unbounded walk (round 15, no bounds) — one postings
+    // walk that keeps the VALUE bytes, yielding the distinct group values
+    // and their base keys together; group keys decode from the value
+    // bytes (exact: absorbed types round-trip every STORED value)
+    val dt = dtOf(groupCol)
+    val groups: Seq[(Any, Seq[Array[Byte]])] = own.flatMap(Index.leaf(_, lookup.idxCols, dtOf)) match {
+      case Seq(p: Index.Points) => lookup.pointKeys(p).getOrElse(return None)
+      case bs if bs.forall(_.isInstanceOf[Index.Bound]) =>
+        Index.rangeLookupGrouped(Index.dir(table.dir, groupCol), dt, idx.textEnc,
+            groupCol, own, idx.buckets, lookup.budget, gp.idxByBucket, idx.timeoutMs)
           .getOrElse(return None)
-          .map { case (ek, ks) => (Index.decodeKey(dt, ek, textEnc), ks) }
-      }
-    // conjunction: the OTHER predicates' candidate sets intersect every
+          .map { case (ek, ks) => (Index.decodeKey(dt, ek, idx.textEnc), ks) }
+      case _ => return None
+    }
+    // conjunction: the OTHER predicates' candidates intersect every
     // group's candidates (GROUP BY src WHERE src IN (...) AND ts BETWEEN)
-    val otherSets: Seq[Set[Seq[Byte]]] = ctx.preds.filterNot(_ eq gp)
-      .map(p => predCandidateKeys(p, ctx).getOrElse(return None))
-    val groupCands: Seq[(Any, Seq[Array[Byte]])] =
-      if (otherSets.isEmpty) groupCands0
-      else groupCands0.map { case (cat, ks) =>
-        (cat, ks.filter(k => otherSets.forall(_.contains(k.toSeq))))
+    val otherKeys: Option[Set[Seq[Byte]]] =
+      if (others.isEmpty) None
+      else Index.resolve(others, lookup) match {
+        case Some(r) if r.residual.isEmpty => Some(r.keys)
+        case _ => return None
       }
     // ALL groups' candidates batch into ONE point list (each group keeps
     // its index range): the presence and per-column passes then open each
@@ -1563,51 +1514,29 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     // groups cost the index parses of one
     val allKs = Vector.newBuilder[Array[Byte]]
     var off = 0
-    val slices: Seq[(Any, Range)] = groupCands.flatMap { case (cat, g) =>
-      if (g.isEmpty) None
-      else {
-        val start = off
-        allKs ++= g
-        off += g.size
-        Some((cat, start until off))
-      }
+    val slices = groups.map { case (cat, g0) =>
+      val g = otherKeys.fold(g0)(ok => g0.filter(k => ok(k.toSeq)))
+      allKs ++= g
+      off += g.size
+      (Seq(cat), (off - g.size until off).toArray)
     }
-    val ks = allKs.result()
-    val aggsP = new IndexedPointAggs(ks, ctx)
-    val visible: Int => Boolean =
-      if (!ctx.netted) _ => true
-      else {
-        val mask = aggsP.presentMask.getOrElse(return None)
-        mask(_)
-      }
-    val rows = slices.flatMap { case (cat, range) =>
-      // netted: a value whose every matching row was deleted nets to an
-      // EMPTY visible set and emits no group, exactly like the fold
-      val present = range.filter(visible).toArray
-      if (present.isEmpty) None
-      else foldIndexedVals(want, present, ks, aggsP, ctx) match {
-        case Some(vals) => Some(InternalRow.fromSeq(cat +: vals))
-        case None => return None
-      }
-    }
-    Some((want, Seq(gp.col), rows))
+    val cands = new IndexedPointAggs(allKs.result(), ctx)
+    foldSlices(want, cands, slices, ctx).map(rows => (want, Seq(groupCol), rows))
   }
 
   /** PROBE-SLICED grouping (round 16): `SELECT g, agg(...) WHERE <indexed
     * predicates — conjuncts and/or a disjunction> GROUP BY g` for ANY
     * named cell column g — indexed or not. The filters' candidate keys
-    * resolve exactly as the scalar path's ([[combinedCandidateKeys]]:
-    * intersection ∩ branch union, over-budget sides probe-verified), then
-    * ONE batched value probe fetches g's cell per candidate and the
-    * groups are sliced by the decoded values — a candidate with NO g cell
-    * lands in SQL's NULL group (which the postings-walk forms can never
-    * emit; the fold does, and so does this). Group keys normalize
-    * floating zeros/NaN the way Spark's grouping does. Clean stores only
-    * (the value probe refuses netted reconciliation) — the extra-column
+    * resolve exactly as the scalar path's ([[matchingKeys]]), then ONE
+    * batched value probe fetches g's cell per candidate and the groups
+    * are sliced by the decoded values — a candidate with NO g cell lands
+    * in SQL's NULL group (which the postings-walk forms can never emit;
+    * the fold does, and so does this). Group keys normalize floating
+    * zeros/NaN the way Spark's grouping does. Clean stores only (the
+    * value probe refuses netted reconciliation) — the extra-column
     * postings-walk fallback still owns netted histograms. Cost:
-    * O(candidates · log) — the probe pass batches per (bucket, file), and
-    * G groups share one [[IndexedPointAggs]] exactly like the postings
-    * form. */
+    * O(candidates · log) — G groups share one [[IndexedPointAggs]]
+    * exactly like the postings form. */
   private def probeSlicedGroupAnswer(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
       groupCol: String, ctx: IndexedCtx)
@@ -1615,12 +1544,10 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     if (ctx.netted) return None
     if (MetadataAggReader.regularCellBytes(table.mapping, groupCol) == null)
       return None
-    val want = translateIndexedValueAggs(aggregation, netted = false)
-      .getOrElse(return None)
-    val ks = combinedCandidateKeys(ctx).getOrElse(return None)
-    if (ks.isEmpty) return Some((want, Seq(groupCol), Nil))
-    val gvals = colValuesAtKeys(ks, groupCol, ctx).getOrElse(return None)
-    val dt = table.tableSchema(groupCol).dataType
+    val want = indexedAggs(aggregation, netted = false).getOrElse(return None)
+    val cands = matchingKeys(ctx).getOrElse(return None)
+    val gvals = cands.colValues(groupCol).getOrElse(return None)
+    val dt = dtOf(groupCol)
     // grouping identity: Spark normalizes -0.0 to +0.0 and all NaNs to
     // one NaN in group keys; binary wraps for value equality
     def mapKey(v: Any): Any = v match {
@@ -1640,285 +1567,41 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     }
     val groups =
       collection.mutable.LinkedHashMap.empty[Any, collection.mutable.ArrayBuffer[Int]]
-    var i = 0
-    while (i < ks.size) {
+    cands.ks.indices.foreach { i =>
       val v = if (gvals(i) == null) null else Codecs.decode(dt, gvals(i))
       groups.getOrElseUpdate(mapKey(v), collection.mutable.ArrayBuffer.empty) += i
-      i += 1
     }
-    val aggsP = new IndexedPointAggs(ks, ctx)
-    val rows = groups.iterator.map { case (gk, idxs) =>
-      foldIndexedVals(want, idxs.toArray, ks, aggsP, ctx) match {
-        case Some(vals) => InternalRow.fromSeq(rowKeyVal(gk) +: vals)
-        case None => return None
-      }
-    }.toVector
-    Some((want, Seq(groupCol), rows))
+    val slices = groups.iterator.map { case (gk, is) => (Seq(rowKeyVal(gk)), is.toArray) }
+    foldSlices(want, cands, slices.toSeq, ctx).map(rows => (want, Seq(groupCol), rows))
   }
 
-  /** Aggregates the indexed VALUE paths can answer: row counts, per-column
-    * counts of any named cell, SUM/MIN/MAX of binary-long cells, MIN/MAX
-    * of an order-preserving key. Anything else declines the whole answer. */
-  private def translateIndexedValueAggs(
+  /** The aggregates the indexed candidate tiers answer: row counts,
+    * per-column counts of any named cell, SUM/MIN/MAX of binary-long
+    * cells, MIN/MAX of an orderable key. SUMs net (certified tombstones
+    * carry their victims' values); value EXTREMALS never net (removing
+    * an extreme is not a subtraction; a deleted cell's bytes must not
+    * surface), so netted stores decline MIN/MAX(value). */
+  private def indexedAggs(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
       netted: Boolean)
     : Option[Seq[PushedAgg]] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min, Sum}
-    val optF: String => Option[String] =
-      k => Options.effective(options, table.tableProps, k)
     val keyN = table.mapping.keyField.name
-    // SUMs net (certified tombstones carry their victims' values);
-    // value EXTREMALS never net (removing an extreme is not a
-    // subtraction; a deleted cell's bytes must not surface) — netted
-    // stores keep counts/sums/key-extremals and decline MIN/MAX(value)
     def sumOk(c: String): Boolean =
       MetadataAggReader.regularValueEligible(table.mapping, c, optF)
-    def valOk(c: String): Boolean = !netted && sumOk(c)
     // key extremals decode the candidate list and use the type's own
-    // ordering (see indexedVals) — any orderable key type qualifies,
+    // ordering (see foldIndexedVals) — any orderable key type qualifies,
     // order-preserving codec NOT required
-    def keyMinMaxOk(c: String): Boolean =
-      c == keyN && orderableType(table.tableSchema(c).dataType)
-    val translated: Seq[Option[PushedAgg]] =
-      aggregation.aggregateExpressions().toSeq.map {
-        case _: CountStar => Some(PushedAgg.CountStar)
-        case c: Count if !c.isDistinct =>
-          aggCol(c.column).filter(c0 => c0 == keyN ||
-            MetadataAggReader.regularCountEligible(table.mapping, c0, optF))
-            .map(PushedAgg.Count.apply)
-        case m: Min =>
-          aggCol(m.column).filter(c0 => valOk(c0) || keyMinMaxOk(c0))
-            .map(PushedAgg.Min.apply)
-        case m: Max =>
-          aggCol(m.column).filter(c0 => valOk(c0) || keyMinMaxOk(c0))
-            .map(PushedAgg.Max.apply)
-        case s: Sum if !s.isDistinct =>
-          aggCol(s.column).filter(sumOk).map(PushedAgg.Sum.apply)
-        case _ => None
-      }
-    if (translated.exists(_.isEmpty)) None else Some(translated.flatten)
-  }
-
-  /** Candidate BASE KEYS per encoded value point, from one budgeted
-    * postings point read each ([[Index.lookupOne]] — run index + blooms on
-    * the routed bucket); the RANGE form resolves as a single entry from
-    * one run-index range seek over the postings ([[Index.rangeLookup]] —
-    * cost O(buckets · log + matching postings)). None = the candidates
-    * blew the budget; the caller declines to the index-shrunk scan. */
-  private def candidateBudget: Int = math.min(
-    Options.effective(options, table.tableProps, Options.IndexMaxCandidates)
-      .map(_.toInt).getOrElse(Options.DefaultIndexMaxCandidates),
-    CellScanBuilder.MaxCompletePoints)
-
-  private def groupPointCandidates(p: IdxPred, ctx: IndexedCtx)
-    : Option[Map[Seq[Byte], Seq[Array[Byte]]]] = {
-    val budget = candidateBudget
-    val out = Map.newBuilder[Seq[Byte], Seq[Array[Byte]]]
-    var total = 0
-    p.pts.foreach { case (ek, _) =>
-      Index.lookupOne(p.idxDir, ek, ctx.buckets, budget,
-          p.idxByBucket) match {
-        case Some(ks) =>
-          // enforce the TOTAL cap while resolving, so an oversized IN
-          // never materializes |IN| × budget keys only to be discarded
-          total += ks.size
-          if (total > CellScanBuilder.MaxCompletePoints) return None
-          out += ek.toSeq -> ks
-        case None => return None
-      }
-    }
-    Some(out.result())
-  }
-
-  /** One predicate's DEDUPED candidate key set: budgeted point lookups
-    * (equality/IN) or one postings range seek, both pinned to the proof's
-    * (possibly as-of covered) index listing. rangeLookup's budget counts
-    * SCANNED postings (≥ matching), so both forms respect the same
-    * MaxCompletePoints cap. None = over budget; the caller declines to
-    * the (cost-gated) index-shrunk scan. */
-  private def predCandidateKeys(p: IdxPred, ctx: IndexedCtx)
-    : Option[Set[Seq[Byte]]] = {
-    if (p.bounds.nonEmpty) {
-      val optF: String => Option[String] =
-        k => Options.effective(options, table.tableProps, k)
-      val dt = table.tableSchema(p.col).dataType
-      val textEnc = optF(Options.Encoding).contains("text")
-      Index.rangeLookup(p.idxDir, dt, textEnc, p.col, p.bounds,
-        ctx.buckets, candidateBudget, p.idxByBucket,
-        optF(Options.IndexWalkTimeoutMs).map(_.toLong)
-          .getOrElse(Options.DefaultIndexWalkTimeoutMs))
-    } else
-      groupPointCandidates(p, ctx)
-        .map(_.valuesIterator.flatMap(_.iterator.map(_.toSeq)).toSet)
-  }
-
-  /** The disjunction's candidate keys (round 15): the pushed Or resolves
-    * through [[Index.resolveTree]] in EXACT mode — every leaf must resolve
-    * (a branch admitting unknown rows would under-count), lookups pin to
-    * the proof's (possibly as-of covered) per-column index listings, and
-    * the union is a set so overlapping branches contribute each key once.
-    * Under the per-column bijection proofs the result is EXACTLY the keys
-    * of rows satisfying the disjunction. */
-  private def orCandidateKeys(ctx: IndexedCtx)
-    : Option[Set[Seq[Byte]]] = {
-    val optF: String => Option[String] =
-      k => Options.effective(options, table.tableProps, k)
-    val textEnc = optF(Options.Encoding).contains("text")
-    val byCol = ctx.preds.map(p => p.col -> p.idxByBucket).toMap
-    // every leaf column must carry a proven, pinned index listing — a
-    // column outside the proof set must FAIL the resolution (null signals
-    // absence; resolveTree maps it to None), never fall back to a fresh
-    // (unproven) listing or to "no postings" (Map.empty would read as an
-    // empty candidate set — an under-count, ADVICE r15)
-    val pinned: String => Map[Int, Seq[java.nio.file.Path]] =
-      c => byCol.getOrElse(c, null)
-    Index.resolveTree(ctx.orFilter.getOrElse(return None),
-      byCol.keySet, c => table.tableSchema(c).dataType, table.dir,
-      textEnc, ctx.buckets, candidateBudget,
-      optF(Options.IndexWalkTimeoutMs).map(_.toLong)
-        .getOrElse(Options.DefaultIndexWalkTimeoutMs),
-      pinned, requireAll = true)
-  }
-
-  /** Candidate keys of the FULL absorbed predicate set — conjuncts AND
-    * the disjunction (round 16 unifies what were two disjoint paths):
-    * every conjunct that resolves within budget intersects, the Or (when
-    * pushed) resolves as its branch union and intersects too, and each
-    * side that BLEW its budget — an over-budget conjunct (ASYMMETRIC
-    * BUDGETS, SURVEY §7.4 #1: `type = rare AND ts BETWEEN <wide>`) or the
-    * over-budget Or itself — is verified per surviving candidate by
-    * reading the actual base cell values ([[CellStore.colBytesAtPoints]],
-    * one batched pass per proven file per column) and evaluating the
-    * predicate on the decoded values: cost O(resolved candidates · log),
-    * never O(postings on the wide side). Exact: the probes read the same
-    * pinned files the proof judged, a NULL/absent cell fails a conjunct
-    * and an Or leaf alike (SQL three-valued logic — FilterEval's exact
-    * leaves map unknown to false, sound under OR because absorption
-    * admitted only exactly-evaluable leaf types), and at least one side
-    * must have RESOLVED (probes verify candidates, they cannot produce
-    * them). Clean stores only — a netted bucket's per-point value needs
-    * tombstone reconciliation the primitive deliberately refuses. */
-  private def combinedCandidateKeys(ctx: IndexedCtx)
-    : Option[IndexedSeq[Array[Byte]]] = {
-    var acc: Set[Seq[Byte]] = null
-    val unresolved = Seq.newBuilder[IdxPred]
-    var orUnresolved = false
-    // conjuncts (or-only columns carry OPEN preds — no conjunct to apply)
-    ctx.preds.filterNot(_.open).foreach { p =>
-      if (acc == null || acc.nonEmpty) {
-        predCandidateKeys(p, ctx) match {
-          case Some(ks) => acc = if (acc == null) ks else acc.intersect(ks)
-          case None => unresolved += p
-        }
-      }
-    }
-    if (ctx.orFilter.isDefined && (acc == null || acc.nonEmpty)) {
-      orCandidateKeys(ctx) match {
-        case Some(ks) => acc = if (acc == null) ks else acc.intersect(ks)
-        case None => orUnresolved = true
-      }
-    }
-    val us = unresolved.result()
-    // every side over budget: probes have nothing to verify against
-    if (acc == null) return None
-    if (acc.isEmpty || (us.isEmpty && !orUnresolved))
-      return Some(acc.iterator.map(_.toArray).toIndexedSeq)
-    if (ctx.netted) return None
-    val cands = acc.iterator.map(_.toArray).toIndexedSeq
-    val optF: String => Option[String] =
-      k => Options.effective(options, table.tableProps, k)
-    val textEnc = optF(Options.Encoding).contains("text")
-    val keep = Array.fill(cands.size)(true)
-    us.foreach { p =>
-      val dt = table.tableSchema(p.col).dataType
-      // the conjunct as a value predicate: range bounds compile through
-      // FilterEval (exact for every absorbed type); a point set compares
-      // in the index's own normalized encoded form (the same bytes the
-      // index writer derives from the stored value)
-      val check: Any => Boolean =
-        if (p.bounds.nonEmpty) {
-          val fs = p.bounds.map(FilterEval.compile)
-          v => fs.forall(_(Map(p.col -> v)))
-        } else {
-          val set = p.pts.iterator.map(_._1.toSeq).toSet
-          v => set.contains(Index.encodeKey(dt, v, textEnc).toSeq)
-        }
-      val vals = colValuesAtKeys(cands, p.col, ctx).getOrElse(return None)
-      var i = 0
-      while (i < cands.size) {
-        if (keep(i)) {
-          val b = vals(i)
-          keep(i) = b != null && check(Codecs.decode(dt, b))
-        }
-        i += 1
-      }
-    }
-    if (orUnresolved) {
-      val or = ctx.orFilter.get
-      def treeCols(f: Filter): Set[String] = f match {
-        case org.apache.spark.sql.sources.Or(l, r) => treeCols(l) ++ treeCols(r)
-        case org.apache.spark.sql.sources.And(l, r) => treeCols(l) ++ treeCols(r)
-        case leaf => leaf.references.toSet
-      }
-      // fetch every referenced column's value per candidate, then evaluate
-      // the whole tree — absorption (orAbsorbable) guaranteed each leaf's
-      // type is exactly evaluable, so the composed compile is exact
-      val colVals: Map[String, Array[Array[Byte]]] = treeCols(or).iterator
-        .map(c => c -> colValuesAtKeys(cands, c, ctx).getOrElse(return None))
-        .toMap
-      val compiled = FilterEval.compile(or)
-      var i = 0
-      while (i < cands.size) {
-        if (keep(i)) {
-          val row: Map[String, Any] = colVals.iterator.map { case (c, vs) =>
-            val dt = table.tableSchema(c).dataType
-            c -> (if (vs(i) == null) null else Codecs.decode(dt, vs(i)))
-          }.toMap
-          keep(i) = compiled(row)
-        }
-        i += 1
-      }
-    }
-    Some(cands.indices.collect { case i if keep(i) => cands(i) })
-  }
-
-  /** Per-candidate VALUE BYTES of one cell column over the proof's pinned
-    * base listing — candidates route to their own bucket (a key's cells
-    * can only live there), each (bucket, file) runs ONE batched
-    * [[CellStore.colBytesAtPoints]] pass, and a value found in TWO files
-    * (impossible under the clean proof's all-addresses-distinct — means
-    * the proof is stale) declines instead of picking one. Null entry =
-    * no such cell for that candidate. */
-  private def colValuesAtKeys(ks: IndexedSeq[Array[Byte]], col: String,
-      ctx: IndexedCtx): Option[Array[Array[Byte]]] = {
-    val cb = MetadataAggReader.regularCellBytes(table.mapping, col)
-    if (cb == null) return None
-    val out = new Array[Array[Byte]](ks.size)
-    val rb = table.rangeBounds
-    ks.zipWithIndex.groupBy { case (k, _) =>
-      TokenRing.bucket(k, ctx.buckets, rb)
-    }.foreach { case (b, pws) =>
-      ctx.baseByBucket.get(b).foreach { files =>
-        val sorted = pws.sortWith((a, c) => Codecs.compareBytes(a._1, c._1) < 0)
-        val pts = sorted.map(_._1)
-        val idxs = sorted.map(_._2)
-        files.foreach { f =>
-          CellStore.colBytesAtPoints(f, pts, cb) match {
-            case Some(per) =>
-              var i = 0
-              while (i < per.length) {
-                if (per(i) != null) {
-                  if (out(idxs(i)) != null) return None // dup across files
-                  out(idxs(i)) = per(i)
-                }
-                i += 1
-              }
-            case None => return None
-          }
-        }
-      }
-    }
-    Some(out)
+    def minMaxOk(c: String): Boolean = (!netted && sumOk(c)) ||
+      (c == keyN && orderableType(dtOf(c)))
+    translateAggs(aggregation).filter(_.forall {
+      case PushedAgg.CountStar => true
+      case PushedAgg.Count(c) => c == keyN ||
+        MetadataAggReader.regularCountEligible(table.mapping, c, optF)
+      case PushedAgg.Sum(c) => sumOk(c)
+      case PushedAgg.Min(c) => minMaxOk(c)
+      case PushedAgg.Max(c) => minMaxOk(c)
+      case PushedAgg.CountDistinct(_) => false
+    })
   }
 
   /** GROUPED complete pushdown: `GROUP BY key` over pushed key POINTS —
@@ -1957,9 +1640,10 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     }).getOrElse(return None)
     // the per-bucket proofs of the ungrouped answer, over the buckets the
     // pinned key set routes to (a tombstone in an UNRELATED bucket must
-    // not demote the answer); enumerable groups need pinned keys
-    val judge = new MetadataAggReader.BucketAnswer(table,
-      k => Options.effective(options, table.tableProps, k), pushed, want)
+    // not demote the answer); enumerable groups need pinned keys. An
+    // empty list (the present keys alone) takes COUNT(*)'s proof
+    val judge = new MetadataAggReader.BucketAnswer(table, optF, pushed,
+      if (want.isEmpty) Seq(PushedAgg.CountStar) else want)
     val sortedKs = judge.keys.points
     if (!judge.eligible || sortedKs == null) return None
     val relevant = table.bucketsMeeting(judge.keys, options)
@@ -2095,8 +1779,7 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     // plan aggregates in place with ZERO exchange — strictly better than
     // shuffling per-key partials to a combine (plan-asserted by the
     // key-grouped-aggregation spec).
-    val reportsLayout = Options.effective(options, table.tableProps,
-      Options.ReportPartitioning).exists(_.toBoolean)
+    val reportsLayout = optF(Options.ReportPartitioning).exists(_.toBoolean)
     val keyName = table.mapping.keyField.name
     val clusterName =
       if (table.mapping.transposed)
@@ -2170,10 +1853,11 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
       case _ => false
     }
     val (accepted, rejected0) = filters.partition(pushable)
-    // Secondary index: equality AND comparison predicates on indexed cell
-    // columns ALSO reach the scan — they resolve to key candidates at
-    // planning (Index.keyFilters: point lookups for =/IN, run-index range
-    // seeks for >/>=/</<=). On a column whose type the reader compares
+    // Secondary index: every indexed leaf ([[Index.leaf]] — =/IN, >/>=/</<=,
+    // LIKE-prefix) and every disjunction of them ALSO reaches the scan, and
+    // one resolver ([[Index.resolve]]) turns them into key candidates at
+    // planning: for the scan shrink (Index.keyFilters) and for the indexed
+    // aggregate tiers. On a column whose type the reader compares
     // EXACTLY like Spark (integrals, default-collation strings, boolean,
     // date/timestamp, and — round 14 — float/double: FilterEval's
     // comparators normalize -0.0 to +0.0 and use Double.compare, which
@@ -2184,11 +1868,10 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
     // AGGREGATE pushdown compose with index lookups — Spark only pushes
     // aggregates below a plan with no residual filters
     // (`count(*) WHERE lang = 'en'`, `sum(v) WHERE ts BETWEEN a AND b` —
-    // see computeIndexedCountAnswer / computeIndexedStatsAnswer).
+    // the postings count, or the resolved candidates' slice-and-fold,
+    // [[foldSlices]]).
     // Comparisons on DECIMAL stay residual (precision/scale cast
     // semantics diverge from the raw comparators).
-    val idxCols = Index.columns(m,
-      k => Options.effective(options, table.tableProps, k))
     def exactEvalType(c: String): Boolean =
       table.tableSchema(c).dataType match {
         case org.apache.spark.sql.types.ByteType |
@@ -2204,103 +1887,35 @@ class CellScanBuilder(table: CassandraLikeTable, options: Map[String, String])
           s == org.apache.spark.sql.types.StringType // default collation only
         case _ => false
       }
-    // one absorbable LEAF: an equality/IN/comparison/LIKE-prefix on an
-    // indexed cell column whose type the reader compares exactly like
-    // Spark — the unit the conjunctive absorption below and the
-    // DISJUNCTION absorption (round 15) are both built from
-    def absorbableLeaf(f: Filter): Boolean = f match {
-      case EqualTo(c, v) => idxCols(c) && v != null && exactEvalType(c)
-      case In(c, vs) => idxCols(c) && vs != null && vs.nonEmpty &&
-        exactEvalType(c)
-      case GreaterThan(c, v) => idxCols(c) && v != null && exactEvalType(c)
-      case GreaterThanOrEqual(c, v) =>
-        idxCols(c) && v != null && exactEvalType(c)
-      case LessThan(c, v) => idxCols(c) && v != null && exactEvalType(c)
-      case LessThanOrEqual(c, v) =>
-        idxCols(c) && v != null && exactEvalType(c)
-      // LIKE-prefix: StringStartsWith is a UTF8String byte-prefix test on
-      // both sides (Spark's StartsWith and FilterEval agree bit for bit
-      // on default-collation strings), and resolves to one postings range
-      // seek [p, prefixSucc(p)) on the column's index
-      case StringStartsWith(c, p) => idxCols(c) && p != null &&
-        exactEvalType(c) && table.tableSchema(c).dataType == StringType
-      case _ => false
-    }
-    // a DISJUNCTION absorbs when every leaf under it (through nested
+    def indexed(f: Filter): Option[Index.Leaf] = Index.leaf(f, idx.idxCols, dtOf)
+    // one absorbable LEAF: an indexed leaf whose column type the reader
+    // compares exactly like Spark (a LIKE-prefix is a UTF8String
+    // byte-prefix test on both sides) — the unit the conjunctive
+    // absorption and the DISJUNCTION absorption (round 15) are both built
+    // from. A disjunction absorbs when every leaf under it (through nested
     // Or/And) is absorbable: the reader re-applies the whole tree exactly
     // (FilterEval.compile composes OR/AND over exact leaves), and the
-    // index resolves it to the union of the branches' candidate sets
-    // (Index.resolveTree). One inabsorbable leaf poisons the tree — its
-    // branch admits rows no index can enumerate.
-    def orAbsorbable(f: Filter): Boolean = f match {
-      case Or(l, r) => orAbsorbable(l) && orAbsorbable(r)
-      case And(l, r) => orAbsorbable(l) && orAbsorbable(r)
-      case leaf => absorbableLeaf(leaf)
-    }
-    val (absorbedEq, rejected1) = rejected0.partition {
-      case o: Or => orAbsorbable(o)
-      case f => absorbableLeaf(f)
-    }
+    // index resolves it to the union of the branches' candidate sets. One
+    // inabsorbable leaf poisons the tree — its branch admits rows no index
+    // can enumerate.
+    def absorbableLeaf(f: Filter): Boolean = indexed(f).exists(l => exactEvalType(l.col))
+    val (absorbedEq, rejected1) =
+      rejected0.partition(f => Index.everyLeaf(f)(absorbableLeaf))
     // the IsNotNull(c) conjunct Catalyst pairs with an equality or
     // comparison is SUBSUMED by an absorbed predicate on the same column
     // (null never compares true; FilterEval rejects null rows), so it
     // absorbs alongside — left residual it would block aggregate pushdown
     // for no reason
-    val absorbedCols = absorbedEq.flatMap {
-      case EqualTo(c, _) => Seq(c)
-      case In(c, _) => Seq(c)
-      case GreaterThan(c, _) => Seq(c)
-      case GreaterThanOrEqual(c, _) => Seq(c)
-      case LessThan(c, _) => Seq(c)
-      case LessThanOrEqual(c, _) => Seq(c)
-      case StringStartsWith(c, _) => Seq(c)
-      // a disjunction implies non-null only for a column EVERY branch
-      // constrains (a=1 OR a>5 ⇒ a IS NOT NULL — the shape Catalyst
-      // infers IsNotNull from; within one branch an And constrains all
-      // its referenced columns conjunctively); a column in just one
-      // branch implies nothing
-      case o: Or =>
-        def branchCols(f: Filter): Seq[Set[String]] = f match {
-          case Or(l, r) => branchCols(l) ++ branchCols(r)
-          case other => Seq(other.references.toSet)
-        }
-        branchCols(o).reduce(_ intersect _).toSeq
-      case _ => Nil
-    }.toSet
+    val absorbedCols = absorbedEq.flatMap(Index.nonNullCols).toSet
     val (absorbedNn, rejected) = rejected1.partition {
-      case org.apache.spark.sql.sources.IsNotNull(c) => absorbedCols(c)
+      case IsNotNull(c) => absorbedCols(c)
       case _ => false
     }
     val absorbed = absorbedEq ++ absorbedNn
-    val speculative = rejected.filter {
-      case EqualTo(c, _) => idxCols(c)
-      case In(c, vs) => idxCols(c) && vs.nonEmpty
-      case GreaterThan(c, v) => idxCols(c) && v != null
-      case GreaterThanOrEqual(c, v) => idxCols(c) && v != null
-      case LessThan(c, v) => idxCols(c) && v != null
-      case LessThanOrEqual(c, v) => idxCols(c) && v != null
-      case StringStartsWith(c, p) => idxCols(c) && p != null &&
-        table.tableSchema(c).dataType == StringType
-      // a rejected disjunction still shrinks the scan when every leaf is
-      // an INDEXED predicate (the union of branch candidates), even if a
-      // leaf's type comparison isn't reader-exact — Spark re-filters
-      case o: Or =>
-        def leavesIndexed(f: Filter): Boolean = f match {
-          case Or(l, r) => leavesIndexed(l) && leavesIndexed(r)
-          case And(l, r) => leavesIndexed(l) && leavesIndexed(r)
-          case EqualTo(c, v) => idxCols(c) && v != null
-          case In(c, vs) => idxCols(c) && vs != null && vs.nonEmpty
-          case GreaterThan(c, v) => idxCols(c) && v != null
-          case GreaterThanOrEqual(c, v) => idxCols(c) && v != null
-          case LessThan(c, v) => idxCols(c) && v != null
-          case LessThanOrEqual(c, v) => idxCols(c) && v != null
-          case StringStartsWith(c, p) => idxCols(c) && p != null &&
-            table.tableSchema(c).dataType == StringType
-          case _ => false
-        }
-        leavesIndexed(o)
-      case _ => false
-    }
+    // a rejected indexed predicate — or a disjunction whose every leaf is
+    // one, even if a leaf's type comparison isn't reader-exact — still
+    // shrinks the scan (Spark re-filters)
+    val speculative = rejected.filter(f => Index.everyLeaf(f)(indexed(_).isDefined))
     pushed = accepted ++ absorbed ++ speculative
     rejected
   }

@@ -290,57 +290,214 @@ object Index {
     listed
   }
 
-  /** Planning-time candidate resolution: every pushed EqualTo/In on an
-    * indexed column becomes a point lookup into that column's index store,
-    * every pushed comparison (>, >=, <, <=) becomes a range lookup, a
-    * LIKE-prefix (StringStartsWith) becomes the range
-    * [p, prefixSucc(p)), and a pushed DISJUNCTION whose every leaf is an
-    * indexed predicate becomes the union of its branches' candidate sets
-    * ([[resolveTree]], round 15); conjuncts intersect. Returns one
-    * In(key, candidates) filter (possibly with an empty value list — a
-    * provably-empty scan), or nothing when no indexed predicate is pushed
-    * or every lookup blew the candidate budget (full-scan fallback). */
+  /** One pushed predicate on an indexed column, as the index answers it:
+    * equality/IN value [[Points]], or one [[Bound]] — a comparison (`>`,
+    * `>=`, `<`, `<=`) or a LIKE-prefix, the postings range
+    * [p, prefixSucc(p)) (the string encoding is the identity under both
+    * marshals, so byte-prefix containment IS value-prefix containment). */
+  sealed trait Leaf { def col: String }
+  final case class Points(col: String, values: Seq[Any]) extends Leaf
+  final case class Bound(col: String, bound: Filter) extends Leaf
+
+  /** The one indexed-leaf classifier: `f` on a column of `idxCols`, or
+    * None for anything else — a null value, an empty IN, a prefix on a
+    * non-string column, an Or/And tree, a non-indexed column. */
+  def leaf(f: Filter, idxCols: Set[String], dtOf: String => DataType): Option[Leaf] =
+    f match {
+      case EqualTo(c, v) if idxCols(c) && v != null => Some(Points(c, Seq(v)))
+      case In(c, vs) if idxCols(c) && vs != null && vs.nonEmpty =>
+        Some(Points(c, vs.toSeq))
+      case GreaterThan(c, v) if idxCols(c) && v != null => Some(Bound(c, f))
+      case GreaterThanOrEqual(c, v) if idxCols(c) && v != null => Some(Bound(c, f))
+      case LessThan(c, v) if idxCols(c) && v != null => Some(Bound(c, f))
+      case LessThanOrEqual(c, v) if idxCols(c) && v != null => Some(Bound(c, f))
+      case StringStartsWith(c, p) if idxCols(c) && p != null &&
+        dtOf(c) == StringType => Some(Bound(c, f))
+      case _ => None
+    }
+
+  /** Whether `p` holds for every leaf under `f`'s Or/And nesting. */
+  def everyLeaf(f: Filter)(p: Filter => Boolean): Boolean = f match {
+    case Or(l, r) => everyLeaf(l)(p) && everyLeaf(r)(p)
+    case And(l, r) => everyLeaf(l)(p) && everyLeaf(r)(p)
+    case other => p(other)
+  }
+
+  /** The columns `f` proves non-null on every row it admits: a leaf's
+    * column and every column an And references, but for a disjunction
+    * only the columns EVERY branch constrains (`a = 1 OR a > 5` ⇒
+    * `a IS NOT NULL`, the shape Catalyst infers IsNotNull from; a column
+    * in just one branch implies nothing). */
+  def nonNullCols(f: Filter): Set[String] = f match {
+    case Or(l, r) => nonNullCols(l) intersect nonNullCols(r)
+    case other => other.references.toSet
+  }
+
+  /** A points leaf's DISTINCT encoded values, each with its Catalyst value
+    * (absorbed types encode injectively, so distinct bytes are distinct
+    * SQL values). Nulls drop, and so do the points the encode cannot
+    * represent (sub-millisecond timestamps, [[lossyPoint]]): stored values
+    * are millisecond multiples, so such a probe matches no row. */
+  def encodedPoints(p: Points, dt: DataType, textEnc: Boolean): Seq[(Array[Byte], Any)] = {
+    val seen = collection.mutable.Set.empty[Seq[Byte]]
+    p.values.flatMap { v =>
+      val cat = CatalystTypeConverters.convertToCatalyst(v)
+      if (cat == null || lossyPoint(dt, cat)) None
+      else {
+        val ek = encodeKey(dt, cat, textEnc)
+        if (seen.add(ek.toSeq)) Some((ek, cat)) else None
+      }
+    }
+  }
+
+  /** Where a resolution looks and how far it may go: the table's index
+    * stores, their value encoding and bucket count, the candidate budget
+    * and the range-walk timeout. `pinned`, when non-null, maps each column
+    * to the index listing a proof judged (null for an unproven column,
+    * whose leaves then fail: a fresh, unproven listing or "no postings"
+    * would under-count); otherwise every lookup lists the store afresh. */
+  final case class Lookup(tableDir: String, idxCols: Set[String],
+      dtOf: String => DataType, textEnc: Boolean, buckets: Int, budget: Int,
+      timeoutMs: Long,
+      pinned: String => Map[Int, Seq[java.nio.file.Path]] = null) {
+
+    private def files(c: String): Option[Map[Int, Seq[java.nio.file.Path]]] =
+      if (pinned == null) Some(null) else Option(pinned(c))
+
+    /** Each distinct point's Catalyst value and base-key postings, from one
+      * bloom-pruned point read per value on its routed index bucket; None
+      * past the budget (counted over every point, while resolving, so an
+      * oversized IN never materializes |IN| × budget keys), on a stale
+      * index format, or on an unproven column. */
+    def pointKeys(p: Points): Option[Seq[(Any, Vector[Array[Byte]])]] = {
+      val idxDir = dir(tableDir, p.col)
+      if (!formatOk(idxDir)) return None
+      val fb = files(p.col).getOrElse(return None)
+      var total = 0
+      Some(encodedPoints(p, dtOf(p.col), textEnc).map { case (ek, cat) =>
+        val ks = lookupOne(idxDir, ek, buckets, budget, fb).getOrElse(return None)
+        total += ks.size
+        if (total > budget) return None
+        (cat, ks)
+      })
+    }
+
+    /** The keys whose `c` value satisfies every bound, from ONE postings
+      * window walk ([[rangeLookup]]). */
+    def boundKeys(c: String, bounds: Seq[Filter]): Option[Set[Seq[Byte]]] = {
+      val idxDir = dir(tableDir, c)
+      if (!formatOk(idxDir)) None
+      else files(c).flatMap(fb => rangeLookup(idxDir, dtOf(c), textEnc, c,
+        bounds, buckets, budget, fb, timeoutMs))
+    }
+
+    def keys(l: Leaf): Option[Set[Seq[Byte]]] = l match {
+      case p: Points => pointKeys(p).map(_.iterator.flatMap(_._2).map(_.toSeq).toSet)
+      case b: Bound => boundKeys(b.col, Seq(b.bound))
+    }
+  }
+
+  object Lookup {
+    /** `table`'s index settings under the read `options`. */
+    def of(table: CassandraLikeTable, options: Map[String, String]): Lookup = {
+      val opt = (k: String) => table.opt(options, k)
+      Lookup(table.dir, columns(table.mapping, opt),
+        c => table.tableSchema(c).dataType,
+        textEnc = opt(Options.Encoding).contains("text"),
+        buckets = opt(Options.Buckets).map(_.toInt).getOrElse(Options.DefaultBuckets),
+        budget = opt(Options.IndexMaxCandidates).map(_.toInt)
+          .getOrElse(Options.DefaultIndexMaxCandidates),
+        timeoutMs = opt(Options.IndexWalkTimeoutMs).map(_.toLong)
+          .getOrElse(Options.DefaultIndexWalkTimeoutMs))
+    }
+  }
+
+  /** A conjunction's candidate keys and the conjuncts they leave unchecked:
+    * every matching row's key is in `keys`, and the keys that satisfy
+    * `residual` are exactly the matching rows' keys when the postings are
+    * a bijection onto the base cells (the indexed aggregates' proof). */
+  final case class Resolved(keys: Set[Seq[Byte]], residual: Seq[Filter])
+
+  /** The one resolver of indexed predicates, over a flat list of pushed
+    * conjuncts, in this order:
+    *   1. equality/IN leaves, each one bucket-routed point read per value
+    *      — far cheaper than a range's all-bucket walk;
+    *   2. each column's bounds as ONE window walk, wherever they sit in
+    *      the list (resolving `a >= x AND a <= y` as two walks would scan
+    *      each open side whole — the lower bound's walk alone can blow the
+    *      budget a tight window fits in);
+    *   3. disjunctions: an Or unions its branches' keys and needs EVERY
+    *      branch to resolve (a branch admitting unknown rows would make the
+    *      union an under-approximation), an And inside it resolves as a
+    *      conjunction; a row matching several branches appears once.
+    * The steps intersect and stop at the first empty intersection (no row
+    * can match; nothing is left to check). A step over the budget, and
+    * every conjunct that is no indexed predicate, lands in the residual,
+    * as does an Or resolved only as a superset (some And inside it left a
+    * conjunct unresolved). None = nothing resolved. */
+  def resolve(conjuncts: Seq[Filter], l: Lookup): Option[Resolved] = {
+    val leaves = conjuncts.map(f => (f, leaf(f, l.idxCols, l.dtOf)))
+    val boundCols = leaves.collect { case (_, Some(b: Bound)) => b.col }.distinct
+    // (the conjuncts a step covers, its keys and whether they are exact)
+    val steps: Seq[(Seq[Filter], () => Option[(Set[Seq[Byte]], Boolean)])] =
+      leaves.collect { case (f, Some(p: Points)) =>
+        (Seq(f), () => l.keys(p).map(_ -> true))
+      } ++ boundCols.map { c =>
+        val fs = leaves.collect { case (f, Some(Bound(`c`, _))) => f }
+        (fs, () => l.boundKeys(c, fs).map(_ -> true))
+      } ++ leaves.collect { case (o: Or, _) => (Seq(o), () => tree(o, l)) }
+    var keys: Set[Seq[Byte]] = null
+    val residual = Seq.newBuilder[Filter]
+    residual ++= leaves.collect { case (f, None) if !f.isInstanceOf[Or] => f }
+    val it = steps.iterator
+    while (it.hasNext && (keys == null || keys.nonEmpty)) {
+      val (fs, run) = it.next()
+      run() match {
+        case Some((ks, exact)) =>
+          keys = if (keys == null) ks else keys intersect ks
+          if (!exact) residual ++= fs
+        case None => residual ++= fs
+      }
+    }
+    if (keys == null) None
+    else Some(Resolved(keys, if (keys.isEmpty) Nil else residual.result()))
+  }
+
+  /** An Or/And tree's keys and whether they are exact ([[resolve]]). */
+  private def tree(f: Filter, l: Lookup): Option[(Set[Seq[Byte]], Boolean)] = f match {
+    case Or(a, b) =>
+      for {
+        (x, ex) <- tree(a, l)
+        (y, ey) <- tree(b, l)
+        u = x union y
+        if u.size <= l.budget
+      } yield (u, ex && ey)
+    case _: And =>
+      def conjuncts(g: Filter): Seq[Filter] = g match {
+        case And(p, q) => conjuncts(p) ++ conjuncts(q)
+        case other => Seq(other)
+      }
+      resolve(conjuncts(f), l).map(r => (r.keys, r.residual.isEmpty))
+    case other => leaf(other, l.idxCols, l.dtOf).flatMap(l.keys).map(_ -> true)
+  }
+
+  /** Planning-time index shrink of a scan: the pushed filters [[resolve]]
+    * to candidate keys — the residual is dropped, since the readers
+    * (absorbed predicates) or Spark (residual ones) re-apply every pushed
+    * predicate exactly — and become one In(key, candidates) filter
+    * (possibly with an empty value list — a provably-empty scan), or
+    * nothing when no indexed predicate is pushed, every lookup blew the
+    * candidate budget, or the cost gate abandons the index. */
   def keyFilters(
       table: CassandraLikeTable,
       options: Map[String, String],
       filters: Array[Filter],
       baseCells: () => Long): Array[Filter] = {
-    val opt = (k: String) => table.opt(options, k)
-    val idxCols = columns(table.mapping, opt)
-    if (idxCols.isEmpty) return Array.empty
-    def dtOf(c: String): DataType =
-      table.mapping.fields.find(_.name == c).get.dataType
-    val eqPreds: Seq[(String, Seq[Any])] = filters.toSeq.collect {
-      case EqualTo(c, v) if idxCols(c) => c -> Seq(v)
-      case In(c, vs) if idxCols(c) && vs.nonEmpty => c -> vs.toSeq
-    }
-    val rangePreds: Seq[(String, Seq[Filter])] = filters.toSeq.collect {
-      case f @ GreaterThan(c, v) if idxCols(c) && v != null => c -> (f: Filter)
-      case f @ GreaterThanOrEqual(c, v) if idxCols(c) && v != null => c -> (f: Filter)
-      case f @ LessThan(c, v) if idxCols(c) && v != null => c -> (f: Filter)
-      case f @ LessThanOrEqual(c, v) if idxCols(c) && v != null => c -> (f: Filter)
-      // LIKE-prefix: one postings range seek [p, prefixSucc(p)) — the
-      // order-preserving string encoding is the identity, so byte-prefix
-      // containment IS the seek window (round 15)
-      case f @ StringStartsWith(c, p) if idxCols(c) && p != null &&
-        dtOf(c) == StringType => c -> (f: Filter)
-    }.groupBy(_._1).map { case (c, fs) => c -> fs.map(_._2) }.toSeq
-    // top-level DISJUNCTIONS whose every leaf is an indexed predicate
-    // resolve to the UNION of their branches' candidate sets (round 15) —
-    // any unresolvable leaf poisons the whole Or (a branch that admits
-    // unknown rows makes the union an under-approximation, the one
-    // direction candidate shrinking must never take)
-    val orPreds: Seq[Or] = filters.toSeq.collect { case o: Or => o }
-    if (eqPreds.isEmpty && rangePreds.isEmpty && orPreds.isEmpty)
+    val l = Lookup.of(table, options)
+    if (l.idxCols.isEmpty || !filters.exists(f =>
+        f.isInstanceOf[Or] || leaf(f, l.idxCols, l.dtOf).isDefined))
       return Array.empty
-    val textEnc = opt(Options.Encoding).contains("text")
-    val buckets = opt(Options.Buckets).map(_.toInt)
-      .getOrElse(Options.DefaultBuckets)
-    val budget0 = opt(Options.IndexMaxCandidates).map(_.toInt)
-      .getOrElse(Options.DefaultIndexMaxCandidates)
-    val walkTimeoutMs = opt(Options.IndexWalkTimeoutMs).map(_.toLong)
-      .getOrElse(Options.DefaultIndexWalkTimeoutMs)
-    val pointCost = opt(Options.IndexPointCostCells).map(_.toLong)
+    val pointCost = table.opt(options, Options.IndexPointCostCells).map(_.toLong)
       .getOrElse(Options.DefaultIndexPointCostCells)
     lazy val totalCells = baseCells()
     // crossover ceiling (ADVICE r14): past totalCells/pointCost candidates
@@ -354,62 +511,17 @@ object Index {
     // intersection instead — still a sound superset, and exactly the
     // asymmetric-budget shape SURVEY §7.4 already routes to the fallback.)
     val budget =
-      if (pointCost > 0) math.min(budget0.toLong, totalCells / pointCost).toInt
-      else budget0
-    // EQUALITY sets first — each is one bucket-routed point seek, far
-    // cheaper than a range's all-bucket walk — and intersect as they
-    // resolve: once the running intersection is provably empty, the range
-    // lookups are skipped outright (their only possible effect is shrinking
-    // an already-empty set).
-    val eqSets: Seq[Option[Set[Seq[Byte]]]] = eqPreds.map { case (c, vs) =>
-      val idxDir = dir(table.dir, c)
-      if (!formatOk(idxDir)) None
-      else {
-        val dt = dtOf(c)
-        val acc = collection.mutable.Set.empty[Seq[Byte]]
-        var over = false
-        val it = vs.iterator
-        while (it.hasNext && !over) {
-          val cat = CatalystTypeConverters.convertToCatalyst(it.next())
-          if (cat != null)
-            lookupOne(idxDir, encodeKey(dt, cat, textEnc), buckets, budget) match {
-              case None => over = true
-              case Some(ps) =>
-                ps.foreach(p => acc += p.toSeq)
-                if (acc.size > budget) over = true
-            }
-        }
-        if (over) None else Some(acc.toSet)
-      }
-    }
-    val eqResolved = eqSets.flatten
-    val eqIntersection =
-      if (eqResolved.isEmpty) None else Some(eqResolved.reduce(_ intersect _))
-    val provablyEmpty = eqIntersection.exists(_.isEmpty)
-    val rangeSets: Seq[Option[Set[Seq[Byte]]]] =
-      if (provablyEmpty) Nil // provably empty already
-      else rangePreds.map { case (c, fs) =>
-        val idxDir = dir(table.dir, c)
-        if (!formatOk(idxDir)) None
-        else rangeLookup(idxDir, dtOf(c), textEnc, c, fs, buckets, budget,
-          timeoutMs = walkTimeoutMs)
-      }
-    val orSets: Seq[Option[Set[Seq[Byte]]]] =
-      if (provablyEmpty) Nil
-      else orPreds.map(o => resolveTree(o, idxCols, dtOf, table.dir,
-        textEnc, buckets, budget, walkTimeoutMs))
-    val sets = eqIntersection.toSeq ++ rangeSets.flatten ++ orSets.flatten
-    if (sets.isEmpty) return Array.empty // every lookup over budget
-    val cands = sets.reduce(_ intersect _)
+      if (pointCost > 0) math.min(l.budget.toLong, totalCells / pointCost).toInt
+      else l.budget
+    val cands = resolve(filters.toSeq, l.copy(budget = budget))
+      .getOrElse(return Array.empty).keys
     // COST gate (the candidate budget above is a driver MEMORY bound; this
     // is the crossover decision): the shrunk scan reads each candidate
     // with a run-index seek + bloom probes + a span walk per overlapping
     // run, while the full scan streams every cell once — past the
     // totalCells/pointCost crossover the shrunk job LOSES to the scan it
     // avoids (sf1 sweep, SURVEY §7.4 "Cost-based index-shrink cap").
-    // Abandon the index there: same rows either way — the pushed
-    // predicates are re-applied row-level by the readers (absorbed) or by
-    // Spark (residual).
+    // Abandon the index there: same rows either way.
     if (pointCost > 0 && cands.size.toLong > totalCells / pointCost)
       return Array.empty
     val keyType = table.mapping.keyField.dataType
@@ -420,122 +532,6 @@ object Index {
     Array(In(table.mapping.keyField.name, ext.toArray))
   }
 
-  /** Candidate base keys for an arbitrary absorbable predicate TREE — the
-    * DISJUNCTION path (round 15): leaves resolve exactly like
-    * [[keyFilters]]' conjuncts (point lookups for =/IN, postings range
-    * seeks for comparisons and LIKE-prefixes), AND intersects the children
-    * that resolve (an unresolvable AND-child only loses shrink — the
-    * intersection of the rest is still a sound superset), and OR unions —
-    * but requires EVERY branch to resolve, because a branch that admits
-    * unknown rows would make the union an under-approximation (false
-    * negatives, the one failure candidate shrinking must never produce).
-    * A row matching several branches appears once: the union is a set
-    * over key bytes. None = some OR branch was unresolvable (non-indexed
-    * column, format mismatch, over budget) or the union blew the budget.
-    *
-    * `requireAll` = the EXACT mode the indexed-aggregate path needs: there
-    * the result must be precisely the matching keys (not a superset — no
-    * re-filter runs above a planning-time answer), so an unresolvable
-    * AND-child fails the whole tree instead of widening it. Equality
-    * points the encode cannot represent (sub-millisecond timestamps) skip
-    * in BOTH modes: stored values are millisecond multiples, so such a
-    * probe provably matches no row ([[lossyPoint]]). */
-  private[cassandralike] def resolveTree(f: Filter, idxCols: Set[String],
-      dtOf: String => DataType, tableDir: String, textEnc: Boolean,
-      buckets: Int, budget: Int, timeoutMs: Long,
-      idxFiles: String => Map[Int, Seq[java.nio.file.Path]] = null,
-      requireAll: Boolean = false)
-    : Option[Set[Seq[Byte]]] = {
-    // Pinned listings (idxFiles non-null): a column the pinned function has
-    // NO entry for must fail its leaf's resolution — falling back to a
-    // fresh (unproven) listing or to "no postings" would under-count
-    // (ADVICE r15). The pinned caller signals absence with null.
-    def files(c: String): Option[Map[Int, Seq[java.nio.file.Path]]] =
-      if (idxFiles == null) Some(null) else Option(idxFiles(c))
-    def points(c: String, vs: Seq[Any]): Option[Set[Seq[Byte]]] = {
-      val idxDir = dir(tableDir, c)
-      if (!formatOk(idxDir)) return None
-      val pinnedFiles = files(c).getOrElse(return None)
-      val dt = dtOf(c)
-      val acc = collection.mutable.Set.empty[Seq[Byte]]
-      vs.foreach { v =>
-        val cat = CatalystTypeConverters.convertToCatalyst(v)
-        if (cat != null && !lossyPoint(dt, cat))
-          lookupOne(idxDir, encodeKey(dt, cat, textEnc), buckets, budget,
-              pinnedFiles) match {
-            case None => return None
-            case Some(ps) =>
-              ps.foreach(p => acc += p.toSeq)
-              if (acc.size > budget) return None
-          }
-      }
-      Some(acc.toSet)
-    }
-    def ranged(c: String, bound: Filter): Option[Set[Seq[Byte]]] = {
-      val idxDir = dir(tableDir, c)
-      if (!formatOk(idxDir)) None
-      else files(c).flatMap(fb => rangeLookup(idxDir, dtOf(c), textEnc, c,
-        Seq(bound), buckets, budget, fb, timeoutMs))
-    }
-    // a BETWEEN-shaped And (every leaf a range bound on ONE column)
-    // resolves as a SINGLE seek window: resolving `a <= v <= b` as two
-    // independent walks would scan each open side whole — the lower
-    // bound's walk alone can blow the budget a tight window fits in
-    def rangeLeaves(g: Filter): Option[Seq[(String, Filter)]] = g match {
-      case And(a, b) =>
-        for { x <- rangeLeaves(a); y <- rangeLeaves(b) } yield x ++ y
-      case b @ GreaterThan(c, v) if idxCols(c) && v != null => Some(Seq(c -> b))
-      case b @ GreaterThanOrEqual(c, v) if idxCols(c) && v != null =>
-        Some(Seq(c -> b))
-      case b @ LessThan(c, v) if idxCols(c) && v != null => Some(Seq(c -> b))
-      case b @ LessThanOrEqual(c, v) if idxCols(c) && v != null =>
-        Some(Seq(c -> b))
-      case b @ StringStartsWith(c, p) if idxCols(c) && p != null &&
-        dtOf(c) == StringType => Some(Seq(c -> b))
-      case _ => None
-    }
-    f match {
-      case And(l, r) =>
-        rangeLeaves(f) match {
-          case Some(ls) if ls.map(_._1).distinct.size == 1 =>
-            val c = ls.head._1
-            val idxDir = dir(tableDir, c)
-            if (!formatOk(idxDir)) None
-            else files(c).flatMap(fb => rangeLookup(idxDir, dtOf(c), textEnc,
-              c, ls.map(_._2), buckets, budget, fb, timeoutMs))
-          case _ =>
-            val children = Seq(l, r).map(
-              resolveTree(_, idxCols, dtOf, tableDir, textEnc, buckets,
-                budget, timeoutMs, idxFiles, requireAll))
-            if (requireAll && children.exists(_.isEmpty)) None
-            else {
-              val sets = children.flatten
-              if (sets.isEmpty) None else Some(sets.reduce(_ intersect _))
-            }
-        }
-      case Or(l, r) =>
-        for {
-          a <- resolveTree(l, idxCols, dtOf, tableDir, textEnc, buckets,
-            budget, timeoutMs, idxFiles, requireAll)
-          b <- resolveTree(r, idxCols, dtOf, tableDir, textEnc, buckets,
-            budget, timeoutMs, idxFiles, requireAll)
-          u = a union b
-          if u.size <= budget
-        } yield u
-      case EqualTo(c, v) if idxCols(c) && v != null => points(c, Seq(v))
-      case In(c, vs) if idxCols(c) && vs != null && vs.nonEmpty =>
-        points(c, vs.toSeq)
-      case g @ GreaterThan(c, v) if idxCols(c) && v != null => ranged(c, g)
-      case g @ GreaterThanOrEqual(c, v) if idxCols(c) && v != null =>
-        ranged(c, g)
-      case g @ LessThan(c, v) if idxCols(c) && v != null => ranged(c, g)
-      case g @ LessThanOrEqual(c, v) if idxCols(c) && v != null => ranged(c, g)
-      case g @ StringStartsWith(c, p) if idxCols(c) && p != null &&
-        dtOf(c) == StringType => ranged(c, g)
-      case _ => None
-    }
-  }
-
   /** One value's base-key postings: bloom-and-run-index-pruned point read
     * of the index bucket the value routes to. None = the postings exceeded
     * the candidate budget — checked DURING iteration, so a pathologically
@@ -544,7 +540,7 @@ object Index {
     * to an explicit per-bucket file map (the indexed-aggregate context's
     * proof-walk listing — possibly an AS-OF covered subset) instead of a
     * fresh directory listing. */
-  private[cassandralike] def lookupOne(idxDir: String, ek: Array[Byte],
+  private def lookupOne(idxDir: String, ek: Array[Byte],
       buckets: Int, budget: Int,
       filesByBucket: Map[Int, Seq[java.nio.file.Path]] = null)
     : Option[Vector[Array[Byte]]] = {
@@ -570,7 +566,7 @@ object Index {
 
   /** Base-key candidates whose value satisfies every bound — the key-only
     * view of [[rangeWalk]] the scan path consumes. */
-  private[cassandralike] def rangeLookup(idxDir: String, dt: DataType,
+  private def rangeLookup(idxDir: String, dt: DataType,
       textEnc: Boolean,
       colName: String, bounds: Seq[Filter], buckets: Int,
       budget: Int,

@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.cassandralike._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{LocalTableScanExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -38,15 +38,22 @@ class DriverAnswerSpec extends SparkSpec {
   /** Jobs started while `body` runs, counted by a listener on the body's
     * own job group; a marker job in another group, seen last, shows the
     * listener bus has delivered every earlier job start. */
-  private def jobsIn(body: => Unit): Int = {
+  private def jobsIn(body: => Unit): Int = workIn(body)._1
+
+  /** Jobs, and the tasks of the stages they submitted, while `body` runs. */
+  private def workIn(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     val group = s"driver-answer-${System.nanoTime()}"
     val marker = s"$group-marker"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    def groupOf(p: java.util.Properties) =
+      Option(p).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
+        groupOf(e.properties).foreach(seen.add)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (groupOf(e.properties).contains(group)) tasks.addAndGet(e.stageInfo.numTasks)
     }
     sc.addSparkListener(listener)
     try {
@@ -58,7 +65,7 @@ class DriverAnswerSpec extends SparkSpec {
       while (!seen.contains(marker) && System.currentTimeMillis() < deadline)
         Thread.sleep(20)
       assert(seen.contains(marker), "listener never saw the marker job")
-      seen.toArray.count(_ == group)
+      (seen.toArray.count(_ == group), tasks.get())
     } finally sc.removeSparkListener(listener)
   }
 
@@ -293,6 +300,64 @@ class DriverAnswerSpec extends SparkSpec {
     assert(counted.collect().toSeq == Seq(Row(1L)))
     assert(!nodes(counted.queryExecution.executedPlan).exists(_.isInstanceOf[BatchScanExec]),
       counted.queryExecution.executedPlan.toString)
+  }
+
+  test("count() of a grouped conn_agg_* query starts no more jobs than collect()") {
+    def jobs(name: String)(run: DataFrame => Unit): Int = {
+      SparkEntry.queries(name)(spark, sfDir).collect() // seeds the store
+      jobsIn(run(SparkEntry.queries(name)(spark, sfDir)))
+    }
+    // counting rows the driver already holds still costs Spark's final
+    // count (a partial aggregate and one exchange over the local rows):
+    // what count() of the ungrouped, driver-answered conn_agg_metadata runs
+    val localCount = jobs("conn_agg_metadata")(_.count())
+    Seq("conn_agg_indexed_group", "conn_agg_indexed_histogram", "conn_agg_grouped").foreach { name =>
+      val collected = jobs(name)(_.collect())
+      val counted = jobs(name)(_.count())
+      assert(counted <= math.max(collected, localCount),
+        s"$name: count() started $counted jobs, collect() $collected, a local count $localCount")
+    }
+    // the grouped empty aggregate list takes the indexed group tier: one
+    // row of group keys per present group, answered at planning
+    Seq("conn_agg_indexed_group", "conn_agg_indexed_histogram").foreach { name =>
+      val q = SparkEntry.queries(name)(spark, sfDir)
+      val counted = q.groupBy().count()
+      assert(!nodes(counted.queryExecution.executedPlan).exists(_.isInstanceOf[BatchScanExec]),
+        s"$name:\n${counted.queryExecution.executedPlan}")
+      assert(counted.collect().toSeq == Seq(Row(q.collect().length.toLong)), name)
+    }
+  }
+
+  /** The per-query record checked in under `src/test/resources`: name,
+    * jobs, tasks and planned scan partitions of each judged `conn_agg_*`
+    * query under collect(). */
+  private val jobRecord = "conn_agg_jobs.tsv"
+
+  test("the judged conn_agg_* queries start no more jobs or tasks than their record") {
+    val record: Map[String, Seq[Int]] = scala.io.Source
+      .fromInputStream(getClass.getResourceAsStream(s"/$jobRecord")).getLines()
+      .filterNot(l => l.isEmpty || l.startsWith("#"))
+      .map(_.split("\t")).map(a => a.head -> a.tail.toSeq.map(_.toInt)).toMap
+    val aggs = SparkEntry.registry.map(_.name).filter(_.startsWith("conn_agg_"))
+    val observed = aggs.map { name =>
+      SparkEntry.queries(name)(spark, sfDir).collect() // seeds the store
+      spark.catalog.clearCache()
+      var q: DataFrame = null
+      // the query body's own jobs count too
+      val (jobs, tasks) = workIn { q = SparkEntry.queries(name)(spark, sfDir); q.collect() }
+      spark.catalog.clearCache()
+      name -> Seq(jobs, tasks, PlannedScan.all(q).map(_.partitions.length).sum)
+    }
+    val out = java.nio.file.Paths.get("target", s"$jobRecord.observed")
+    java.nio.file.Files.write(out, ("# name\tjobs\ttasks\tscan_partitions\n" +
+      observed.map { case (n, c) => (n +: c).mkString("\t") }.mkString("\n") + "\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    assert(observed.map(_._1).toSet == record.keySet,
+      s"record and judged queries differ; observed counts in $out")
+    val over = observed.filter { case (n, c) => c.zip(record(n)).exists { case (o, r) => o > r } }
+    assert(over.isEmpty, over.map { case (n, c) =>
+      s"$n: ${c.mkString("/")} > ${record(n).mkString("/")}" }
+      .mkString("over the record (jobs/tasks/partitions): ", "; ", s"; observed in $out"))
   }
 
   test("a streaming read of the same store still plans the change feed") {

@@ -2011,4 +2011,126 @@ class IndexSpec extends SparkSpec {
     assert(Seed.read(spark, dir).filter(col("bal") === 1007.0)
       .collect().map(_.getString(1)).toSeq == Seq("n7x"))
   }
+
+  test("the one resolver against a model: scan superset, exact after its residual, one walk per column") {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst
+    import org.apache.spark.sql.sources._
+    val sp = spark; import sp.implicits._
+    val rnd = new scala.util.Random(1409)
+    val floats = Seq(-0.0d, 0.0d, Double.NaN, 1.5d, -2.25d, 7.0d)
+    val t0 = 1700000000000L
+    // (id, a, g, f, s, t): a wide numeric column, a narrow one, floats with
+    // signed zeros and NaN (some null), short strings, millisecond times
+    val rows = (1L to 300L).map { i =>
+      (i, rnd.nextInt(200).toLong, i % 5,
+        if (i % 11 == 0) null else java.lang.Double.valueOf(floats(rnd.nextInt(floats.size))),
+        Seq("ab", "abc", "b", "ba", "c")(rnd.nextInt(5)) + rnd.nextInt(3),
+        new java.sql.Timestamp(t0 + rnd.nextInt(40) * 1000L))
+    }
+    val dir = Seed.table(spark, sfDir, "spec_idx_resolver_model",
+      rows.toDF("id", "a", "g", "f", "s", "t").repartition(2),
+      props = Map(Options.IndexColumns -> "a,g,f,s,t", Options.Buckets -> "8"))
+    val t = tableOf(dir)
+    // the model: each row's Catalyst values, and SQL's answer to a leaf
+    val model: Map[Long, Map[String, Any]] = rows.map { case (i, a, g, f, s, ts) =>
+      i -> Map[String, Any]("a" -> a, "g" -> g, "f" -> f, "s" -> s,
+        "t" -> convertToCatalyst(ts))
+    }.toMap
+    def cmp(x: Any, y: Any): Int = (x, y) match {
+      case (p: java.lang.Double, q: java.lang.Double) =>
+        java.lang.Double.compare(p + 0.0d, q + 0.0d)
+      case (p: java.lang.Long, q: java.lang.Long) => p.compareTo(q)
+      case (p: String, q: String) => p.compareTo(q)
+      case other => fail(s"uncomparable $other")
+    }
+    def holds(f: Filter, r: Map[String, Any]): Boolean = {
+      def v(c: String) = r(c)
+      def lit(x: Any) = x match {
+        case ts: java.sql.Timestamp => convertToCatalyst(ts)
+        case d: Double => java.lang.Double.valueOf(d)
+        case l: Long => java.lang.Long.valueOf(l)
+        case o => o
+      }
+      def on(c: String, x: Any)(p: Int => Boolean) = v(c) != null && p(cmp(v(c), lit(x)))
+      f match {
+        case EqualTo(c, x) => on(c, x)(_ == 0)
+        case In(c, xs) => xs.exists(x => on(c, x)(_ == 0))
+        case GreaterThan(c, x) => on(c, x)(_ > 0)
+        case GreaterThanOrEqual(c, x) => on(c, x)(_ >= 0)
+        case LessThan(c, x) => on(c, x)(_ < 0)
+        case LessThanOrEqual(c, x) => on(c, x)(_ <= 0)
+        case StringStartsWith(c, p) => v(c) != null && v(c).asInstanceOf[String].startsWith(p)
+        case Or(l, rr) => holds(l, r) || holds(rr, r)
+        case And(l, rr) => holds(l, r) && holds(rr, r)
+        case other => fail(s"no model for $other")
+      }
+    }
+    def point(): Filter = rnd.nextInt(5) match {
+      case 0 => EqualTo("a", rnd.nextInt(200).toLong)
+      case 1 => In("a", Array.fill(1 + rnd.nextInt(4))(rnd.nextInt(200).toLong: Any))
+      case 2 => EqualTo("g", rnd.nextInt(6).toLong)
+      case 3 => In("f", Array[Any](floats(rnd.nextInt(floats.size)), -0.0d, Double.NaN))
+      // a sub-millisecond point matches no stored (millisecond) time
+      case _ => EqualTo("t", if (rnd.nextBoolean())
+        new java.sql.Timestamp(t0 + rnd.nextInt(40) * 1000L)
+      else { val x = new java.sql.Timestamp(t0 + 3000L); x.setNanos(500000); x })
+    }
+    def bound(): Filter = rnd.nextInt(6) match {
+      case 0 => GreaterThan("a", rnd.nextInt(200).toLong)
+      case 1 => GreaterThanOrEqual("a", rnd.nextInt(200).toLong)
+      case 2 => LessThan("a", rnd.nextInt(200).toLong)
+      case 3 => LessThanOrEqual("a", rnd.nextInt(200).toLong)
+      case 4 => StringStartsWith("s", Seq("a", "ab", "b", "c2")(rnd.nextInt(4)))
+      case _ => GreaterThan("f", floats(rnd.nextInt(floats.size)))
+    }
+    def leaf(): Filter = if (rnd.nextBoolean()) point() else bound()
+    def or(): Filter = Or(leaf(), if (rnd.nextBoolean()) leaf() else And(leaf(), leaf()))
+    val base = Index.Lookup.of(t, Map.empty)
+    var residuals = 0
+    (1 to 120).foreach { iter =>
+      val conj = Seq.fill(1 + rnd.nextInt(3))(leaf()) ++
+        (if (rnd.nextInt(3) == 0) Seq(or()) else Nil)
+      val ordered = rnd.shuffle(conj)
+      val want = model.collect { case (k, r) if ordered.forall(holds(_, r)) => k }.toSet
+      val budget = Seq(4, 12, 40, 100000)(rnd.nextInt(4))
+      Index.resolve(ordered, base.copy(budget = budget)).foreach { res =>
+        val got = res.keys.map(k => t.keyCodec.decode(k.toArray).asInstanceOf[Long])
+        assert(want.subsetOf(got), s"iter $iter $ordered budget $budget: missed ${want -- got}")
+        if (res.residual.nonEmpty) residuals += 1
+        // the store is clean (written once), so the postings are a bijection
+        // and the candidates that pass the residual are exactly the matches
+        val exact = got.filter(k => res.residual.forall(holds(_, model(k))))
+        assert(exact == want, s"iter $iter $ordered budget $budget residual ${res.residual}")
+      }
+    }
+    assert(residuals > 5, s"budgets never forced a residual ($residuals)")
+    // one window walk per column, whatever the pushed order: through the
+    // scan shrink and through an indexed aggregate
+    val window = Array[Filter](GreaterThanOrEqual("a", 40L), EqualTo("g", 1L),
+      LessThanOrEqual("a", 90L))
+    val matching = model.collect { case (k, r) if window.forall(holds(_, r)) => k }.toSet
+    assert(matching.nonEmpty)
+    val walks0 = Index.walksAttempted.get()
+    val shrunk = Index.keyFilters(t, Map(Options.IndexPointCostCells -> "0"), window,
+      () => Long.MaxValue)
+    assert(Index.walksAttempted.get() - walks0 == 1)
+    assert((shrunk match {
+      case Array(In(_, vs)) => vs.map(_.asInstanceOf[Long]).toSet
+      case other => fail(s"expected one In, got ${other.toSeq}")
+    }) == matching)
+    val m = new java.util.HashMap[String, String]()
+    m.put(Options.Path, dir)
+    val b = t.newScanBuilder(new CaseInsensitiveStringMap(m)).asInstanceOf[CellScanBuilder]
+    assert(b.pushFilters(window).isEmpty, "the window and the equality absorb")
+    import org.apache.spark.sql.connector.expressions.Expressions
+    import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Sum}
+    val agg = new Aggregation(Array(new CountStar(), new Sum(Expressions.column("a"), false)),
+      Array.empty)
+    val walks1 = Index.walksAttempted.get()
+    assert(b.supportCompletePushDown(agg) && b.pushAggregation(agg))
+    assert(Index.walksAttempted.get() - walks1 == 1)
+    val row = b.build().asInstanceOf[DriverAnswerScan].rows().head
+    assert(row.getLong(0) == matching.size.toLong)
+    assert(row.getLong(1) == matching.toSeq.map(k => model(k)("a").asInstanceOf[Long]).sum)
+  }
 }
